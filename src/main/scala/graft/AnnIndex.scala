@@ -455,9 +455,9 @@ object AnnIndex {
   def buildServingLayout(corpus: DataFrame, path: String,
       nCells: Int = NCells, kDims: Int = MrlDims, pqM: Int = PqM,
       pqK: Int = PqK, iters: Int = Iters): Unit = {
-    val ivf = Similarity.buildIvfIndex(corpus, nCells = nCells, iters = iters)
+    val (ivf, pq) = Similarity.trainIvfPq(corpus, nCells = nCells, m = pqM,
+      k = pqK, iters = iters)
     Similarity.writeIvfIndex(ivf, s"$path/ivf")
-    val pq = Similarity.trainPq(corpus, m = pqM, k = pqK, iters = iters)
     val encoded = Similarity.pqEncode(corpus, pq)
     Similarity.writePqIndex(encoded, pq, s"$path/pq")
     Similarity.writeCellCodes(Similarity.buildCellCodes(ivf, encoded),

@@ -1,22 +1,16 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      // SPARK_GRAFT_MASTER: Verify's convention — local-cluster[w,c,mem]
-      // (via spark-submit, which ships the app jar) runs the identical
-      // bench against real executor JVMs, where exchanges and broadcasts
-      // pay serialization instead of same-heap memcpy
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_MASTER=local-cluster[w,c,mem] (via spark-submit) runs
+    // the identical bench against real executor JVMs, where exchanges and
+    // broadcasts pay serialization instead of same-heap memcpy
+    val spark = GraftSession("graft-bench")
+    val work = new AttemptWork
+    spark.sparkContext.addSparkListener(work)
     // Warm the session (codegen compiler, shuffle machinery, parquet
     // reader) so the first measured query doesn't absorb ~4s of JVM init.
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -104,40 +98,54 @@ object Bench {
     // toRdd executes the query's own optimized plan with every output
     // column materialized — the same work Verify's parquet write measures,
     // and the same work the DuckDB comparator does materializing results.
+    //
+    // Each attempt tags its jobs with a fresh attempt id (see
+    // [[AttemptWork]]); an entry's recorded jobs/stages/tasks are those of
+    // the attempt whose wall is recorded.
     var failed = Set.empty[String]
+    var nAttempts = 0
     def attempt(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Option[(Double, Int)] = {
+      nAttempts += 1
+      val id = nAttempts
+      spark.sparkContext.setLocalProperty(AttemptWork.Key, id.toString)
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).queryExecution.toRdd.count()
-        Some((System.nanoTime() - t0) / 1e9)
+        Some(((System.nanoTime() - t0) / 1e9, id))
       } catch { case scala.util.control.NonFatal(t) =>
         // a failed attempt must be VISIBLE, and its failure-fast elapsed
         // time must not masquerade as a measurement
         System.err.println(s"[bench] $name attempt failed: ${t.getMessage}")
         None
-      }
+      } finally spark.sparkContext.setLocalProperty(AttemptWork.Key, null)
     }
     // queries + declared build steps: training cost stays measured on the
     // ledger even though builds are excluded from the correctness dump
     val all = (SparkEntry.queries ++ SparkEntry.builds).toSeq
     val floorStart = floorProbe()
     val timed = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val timedAttempt = scala.collection.mutable.Map.empty[String, Int]
     var floorMid: (Double, Double, Double) = (-1.0, -1.0, -1.0)
     for (((name, fn), i) <- all.zipWithIndex) {
       if (i == all.size / 2) floorMid = floorProbe()
-      val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+      val times = scala.collection.mutable.ArrayBuffer.empty[(Double, Int)]
       var n = 0
       def unstable: Boolean = times.size < 2 || {
-        val s = times.sorted
+        val s = times.map(_._1).sorted
         s(1) > s(0) * 1.4
       }
       while (n < 2 || (n < 4 && unstable)) {
         attempt(name, fn).foreach(times += _)
         n += 1
       }
-      if (times.isEmpty) failed += name
-      timed(name) = if (times.isEmpty) -1.0 else times.min
+      if (times.isEmpty) { failed += name; timed(name) = -1.0 }
+      else {
+        val (t, id) = times.minBy(_._1)
+        timed(name) = t
+        timedAttempt(name) = id
+      }
     }
     // End-of-run re-adjudication: re-attempt anything >3× its previous
     // recorded value (twice, keep the overall min). A genuine plan
@@ -161,19 +169,26 @@ object Bench {
     for (name <- suspects) {
       val fn = all.collectFirst { case (n, f) if n == name => f }.get
       val re = Seq(attempt(name, fn), attempt(name, fn)).flatten
-      if (re.nonEmpty && re.min < timed(name)) {
+      if (re.nonEmpty && re.map(_._1).min < timed(name)) {
+        val (t, id) = re.minBy(_._1)
         // getOrElse: the same-run median rule flags queries with NO prev
         // entry — a bare prev(name) here would abort the whole bench
         System.err.println(f"[bench] $name re-adjudicated: " +
-          f"${timed(name)}%.3f -> ${re.min}%.3f s " +
+          f"${timed(name)}%.3f -> $t%.3f s " +
           f"(prev ${prev.getOrElse(name, -1.0)}%.3f)")
-        timed(name) = re.min
+        timed(name) = t
+        timedAttempt(name) = id
       }
     }
     val floorEnd = floorProbe()
+    work.drain(spark)
     val results = timed.toSeq
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val workJson = results.collect { case (k, _) if timedAttempt.contains(k) =>
+      val Array(j, st, t) = work.of(timedAttempt(k))
+      s"\"$k\":{\"jobs\":$j,\"stages\":$st,\"tasks\":$t}"
+    }.mkString("{", ",", "}")
     // total covers SUCCESSFUL queries only — failures are listed, not summed
     val total = results.map(_._2).filter(_ >= 0).sum
     val errs = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -183,8 +198,8 @@ object Bench {
       s""""end":${fl(floorEnd)}}"""
     val retried = suspects.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullJson = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""queries":$qs,"errors":$errs,"floor":$floorJson,""" +
-      s""""readjudicated":$retried,"sf":"$sfDir"}"""
+      s""""queries":$qs,"work":$workJson,"errors":$errs,""" +
+      s""""floor":$floorJson,"readjudicated":$retried,"sf":"$sfDir"}"""
     // The driver tail-captures stdout, and the one giant per-query line was
     // truncated two rounds running (BENCH_r05/r06 "parsed": null) — the hard
     // perf signal got lost. So: the full per-query map goes to stderr AND a
@@ -203,4 +218,52 @@ object Bench {
       s""""readjudicated":$retried,"sf":"$sfDir","queries_file":"$qFile"}""")
     spark.stop()
   }
+}
+
+/** Spark work per bench attempt: jobs, completed stages and their tasks,
+  * attributed by the [[AttemptWork.Key]] local property that every job an
+  * attempt submits carries (threads an entry spawns inherit it). Listener
+  * callbacks arrive on one bus thread; reads come from the bench thread. */
+private final class AttemptWork extends SparkListener {
+  private val counts = scala.collection.mutable.Map.empty[Int, Array[Long]]
+  private val attemptOfStage = scala.collection.mutable.Map.empty[Int, Int]
+
+  override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+    Option(j.properties).flatMap(p => Option(p.getProperty(AttemptWork.Key)))
+      .foreach { a =>
+        val id = a.toInt
+        counts.getOrElseUpdate(id, new Array[Long](3))(0) += 1
+        j.stageIds.foreach(attemptOfStage(_) = id)
+      }
+  }
+
+  override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+    synchronized {
+      attemptOfStage.remove(s.stageInfo.stageId).foreach { id =>
+        val c = counts(id)
+        c(1) += 1
+        c(2) += s.stageInfo.numTasks
+      }
+    }
+
+  /** (jobs, stages, tasks) of one attempt. */
+  def of(attempt: Int): Array[Long] = synchronized {
+    counts.get(attempt).map(_.clone).getOrElse(new Array[Long](3))
+  }
+
+  /** Block until the bus has delivered every event posted so far: the bus
+    * delivers in post order, so once a sentinel job's start arrives, the
+    * events of every earlier job have too. */
+  def drain(spark: SparkSession): Unit = {
+    spark.sparkContext.setLocalProperty(AttemptWork.Key, "0")
+    try spark.range(1).queryExecution.toRdd.count()
+    finally spark.sparkContext.setLocalProperty(AttemptWork.Key, null)
+    val deadline = System.nanoTime() + 10e9.toLong
+    while (synchronized(!counts.contains(0)) && System.nanoTime() < deadline)
+      Thread.sleep(10)
+  }
+}
+
+private object AttemptWork {
+  val Key = "graft.bench.attempt"
 }

@@ -1088,13 +1088,7 @@ object Fixtures {
 /** One-shot generator: writes the parquet fixtures the oracle reads. */
 object FixtureGen {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-fixturegen")
     Fixtures.wide(spark).coalesce(1)
       .write.mode("overwrite").parquet(Fixtures.WideParquet)
     WideMatrix.readCsv(spark, Fixtures.F2Csv).coalesce(1)

@@ -45,7 +45,7 @@ object Main {
       java.time.LocalDate.now.minusDays(1)
     }
 
-    val spark = buildSession("graft-ingest")
+    val spark = GraftSession("graft-ingest")
 
     val cfg = loadConfig(spark, configPath, date)
     val results = IngestJob.run(spark, cfg, storeRoot, byPosition)
@@ -62,7 +62,7 @@ object Main {
   private def trainsetMain(args: Array[String]): Unit = {
     require(args.length == 3,
       "usage: graft.Main trainset <config.json> <docsParquet> <outRoot>")
-    val spark = buildSession("graft-trainset")
+    val spark = GraftSession("graft-trainset")
     val r = TrainingSetJob.run(spark, args(1), args(2),
       graft.config.TrainingSetConfig.parse(readRaw(spark, args(0))))
     println(s"""{"clean_docs":${r.cleanDocs},"mixed_docs":${r.mixedDocs},""" +
@@ -82,21 +82,6 @@ object Main {
   def loadConfig(spark: SparkSession, pathOrUrl: String,
       date: java.time.LocalDate): JobConfig =
     JobConfig.parse(JobConfig.templateDates(readRaw(spark, pathOrUrl), date))
-
-  /** One session builder for both entry points — master/partitions/AQE/tz
-    * must not drift between them. */
-  private def buildSession(appName: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${Runtime.getRuntime.availableProcessors}]"))
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   /** Read a config body from a local path, Hadoop URI, or http(s) URL
     * (shared by both entry points). */

@@ -1,27 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER: every regular signal runs single-JVM local[n],
-    // which hides closure-serialization and broadcast-codec bugs that
-    // only surface when state crosses a REAL executor boundary (ref-held
-    // model objects, custom aggregate buffers). Overriding to
-    // local-cluster[w,c,mem] (via spark-submit, which ships the app jar)
-    // runs the identical dump against separate executor JVMs.
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     // dev-only subset filter (unset in driver runs → full dump)
     val only = sys.env.get("GRAFT_VERIFY_ONLY").map(_.split(",").toSet)

@@ -36,15 +36,6 @@ object PeriodDates {
       throw new IllegalArgumentException(s"Unknown period: $other (expected day|month)")
   }
 
-  /** Does this header name match the period's date grammar? (F4) */
-  def isHeaderDate(header: String, period: String): Boolean = {
-    validatePeriod(period)
-    period match {
-      case Day   => dayHeader.matches(header)
-      case Month => monthHeader.matches(header)
-    }
-  }
-
   /**
    * Parse a header (`X2022.03.01` / `X2021.11`) to a date (F1). Month-period
    * dates pin day-of-month to 1. Returns None when the header does not match
@@ -82,10 +73,6 @@ object PeriodDates {
       case Month => java.time.YearMonth.parse(s, isoMonth).atDay(1)
     }
   }
-
-  /** Header → ISO value string in one hop (F1∘F2). */
-  def headerToValue(header: String, period: String): Option[String] =
-    headerToDate(header, period).map(dateToValue(_, period))
 
   /**
    * Inclusive date-range predicate with optional bounds (P4;

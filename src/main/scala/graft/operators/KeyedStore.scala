@@ -16,9 +16,10 @@ import org.apache.spark.sql.functions._
  * the headline algorithmic win over the reference (SURVEY §4).
  *
  * Scale posture (100 TB store, small daily increment):
- *  - `pruneExisting` narrows the store scan to the increment's key slice
- *    (static datatype/period/fill values + date bounds) so partition pruning
- *    and predicate pushdown keep the big side small BEFORE the join;
+ *  - `mergeIntoTable` reads back only the increment's partitions (a
+ *    null-safe `partitionSlicePred` on the partition column), so partition
+ *    pruning keeps the big side small BEFORE the join (`pruneExisting`,
+ *    a finer static-key + date-bounds slice, is not on the merge path);
  *  - `merge` is ONE full-outer join + one projection: each side of the store
  *    slice is scanned exactly once, and there are no union branches to
  *    re-scan it (round-1 shape scanned each side three times);
@@ -307,21 +308,9 @@ object KeyedStore {
   def mergeIntoTable(incoming: DataFrame, storeDir: String, keyCols: Seq[String],
       partitionCol: Option[String] = Some("date"), replace: Boolean = true,
       strictKeys: Boolean = true, checkpointDir: Option[String] = None): MergeStats = {
-    // The partition-pruned slice reads ONLY the increment's partition
-    // values, which is sound iff the partition column is part of the key:
-    // otherwise a key match stored under a different partition value is
-    // invisible to the probe, classifies as `create`, and the store ends
-    // up with the duplicate key strictKeys exists to prevent — spanning
-    // partitions no future slice reads, so it is never caught.
-    partitionCol.foreach(p => require(keyCols.contains(p),
-      s"mergeIntoTable: partitionCol '$p' must be one of keyCols " +
-        s"${keyCols.mkString("[", ",", "]")} — the partition-pruned merge " +
-        "slice is only correct when key equality pins the partition"))
     val spark = incoming.sparkSession
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(storeDir), spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(storeDir))
-    val inc = dedupIncrement(incoming, keyCols)
 
     // dynamic overwrite is requested as a PER-WRITE option, which takes
     // precedence over spark.sql.sources.partitionOverwriteMode — no
@@ -337,39 +326,14 @@ object KeyedStore {
       }
     }
 
-    if (!exists) {
-      // created-row count observed DURING the streaming write (one pass,
-      // no materialization): a first bulk load may be the whole dataset,
-      // and checkpointing it just to count would pin dataset-sized blocks
-      // in executor storage + double the write amplification
-      val obs = org.apache.spark.sql.Observation()
-      val created = inc.withColumn("uuid", md5(keyConcat(keyCols)))
-        .observe(obs, count(lit(1)).as("n"))
-      write(created, dynamic = false)
-      MergeStats(obs.get("n").asInstanceOf[Long], 0L, 0L)
-    } else {
-      val existing = spark.read.parquet(storeDir)
-      val slice = partitionCol match {
-        case Some(p) =>
-          val parts = inc.select(col(p)).distinct().collect().map(_.get(0))
-          existing.filter(partitionSlicePred(p, parts)) // → partition pruning
-        case None => existing
-      }
-      // ONE scan of the slice: the merge plan materializes here (which
-      // also fires the strict-key guard), then stats and the overwrite
-      // both read the checkpointed blocks. The checkpoint also truncates
-      // lineage so the overwrite doesn't read from the path it writes.
-      // Long cluster runs pass `checkpointDir` for a reliable checkpoint
-      // (localCheckpoint blocks die with a lost executor — Materialize).
-      val j = Materialize(
-        mergedWithAction(inc, slice, keyCols, replace, strictKeys), checkpointDir)
-      val st = j.filter(col("__action").isNotNull)
-        .groupBy(col("__action")).agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      write(j.drop("__action"), dynamic = true)
-      MergeStats(st.getOrElse(ActionCreate, 0L), st.getOrElse(ActionReplace, 0L),
-        st.getOrElse(ActionUnchanged, 0L))
-    }
+    mergeInto("mergeIntoTable", incoming, keyCols, partitionCol, replace,
+      strictKeys, checkpointDir)(
+      openExisting = () =>
+        if (fs.exists(new org.apache.hadoop.fs.Path(storeDir)))
+          Some(spark.read.parquet(storeDir))
+        else None,
+      writeCreated = write(_, dynamic = false),
+      writeMerged = (merged, _) => write(merged, dynamic = true))
   }
 
   /**
@@ -390,39 +354,24 @@ object KeyedStore {
       bucketCols: Seq[String], nBuckets: Int, partitionCol: Option[String] = Some("date"),
       replace: Boolean = true, strictKeys: Boolean = true,
       checkpointDir: Option[String] = None): MergeStats = {
-    // same slice-soundness precondition as mergeIntoTable
-    partitionCol.foreach(p => require(keyCols.contains(p),
-      s"mergeIntoBucketedTable: partitionCol '$p' must be one of keyCols " +
-        s"${keyCols.mkString("[", ",", "]")} — the partition-pruned merge " +
-        "slice is only correct when key equality pins the partition"))
     val spark = incoming.sparkSession
-    val inc = dedupIncrement(incoming, keyCols)
-    if (!spark.catalog.tableExists(table)) {
-      // count observed during the streaming write — see mergeIntoTable
-      val obs = org.apache.spark.sql.Observation()
-      val created = inc.withColumn("uuid", md5(keyConcat(keyCols)))
-        .observe(obs, count(lit(1)).as("n"))
-      val w = created.write.mode("overwrite").format("parquet")
-        .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-        .sortBy(bucketCols.head, bucketCols.tail: _*)
-      partitionCol.fold(w)(p => w.partitionBy(p)).saveAsTable(table)
-      MergeStats(obs.get("n").asInstanceOf[Long], 0L, 0L)
-    } else {
-      // the catalog spec wins on the insertInto path — a caller passing a
-      // DIFFERENT spec must hear about it, not silently get the old layout
-      assertBucketSpec(spark, table, bucketCols, nBuckets, partitionCol)
-      val existing = spark.table(table)
-      val slice = partitionCol match {
-        case Some(p) =>
-          val parts = inc.select(col(p)).distinct().collect().map(_.get(0))
-          existing.filter(partitionSlicePred(p, parts)) // → partition pruning
-        case None => existing
-      }
-      val j = Materialize(
-        mergedWithAction(inc, slice, keyCols, replace, strictKeys), checkpointDir)
-      val st = j.filter(col("__action").isNotNull)
-        .groupBy(col("__action")).agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    mergeInto("mergeIntoBucketedTable", incoming, keyCols, partitionCol, replace,
+      strictKeys, checkpointDir)(
+      openExisting = () =>
+        if (!spark.catalog.tableExists(table)) None
+        else {
+          // the catalog spec wins on the insertInto path — a caller passing
+          // a DIFFERENT spec must hear about it, not silently get the old
+          // layout
+          assertBucketSpec(spark, table, bucketCols, nBuckets, partitionCol)
+          Some(spark.table(table))
+        },
+      writeCreated = { created =>
+        val w = created.write.mode("overwrite").format("parquet")
+          .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
+          .sortBy(bucketCols.head, bucketCols.tail: _*)
+        partitionCol.fold(w)(p => w.partitionBy(p)).saveAsTable(table)
+      },
       // `insertInto` does NOT honor the per-write partitionOverwriteMode
       // option (KeyedStoreSpec pins this: a bystander partition vanishes
       // under the option-only form), so the catalog path must flip the
@@ -431,18 +380,72 @@ object KeyedStore {
       // into the session (the race class the path-based write avoids by
       // using the option). insertInto is positional — project to the
       // catalog schema's order.
-      overwriteModeLock.synchronized {
+      writeMerged = (merged, existing) => overwriteModeLock.synchronized {
         val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try j.drop("__action").select(existing.columns.map(col): _*)
+        try merged.select(existing.columns.map(col): _*)
           .write.mode("overwrite").insertInto(table)
         finally prev match {
           case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
           case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
         }
-      }
-      MergeStats(st.getOrElse(ActionCreate, 0L), st.getOrElse(ActionReplace, 0L),
-        st.getOrElse(ActionUnchanged, 0L))
+      })
+  }
+
+  /**
+   * The merge body both store flavours share; only opening the store and
+   * the two writes differ between [[mergeIntoTable]] and
+   * [[mergeIntoBucketedTable]]. `openExisting` returns `None` on a first
+   * load.
+   */
+  private def mergeInto(caller: String, incoming: DataFrame, keyCols: Seq[String],
+      partitionCol: Option[String], replace: Boolean, strictKeys: Boolean,
+      checkpointDir: Option[String])(
+      openExisting: () => Option[DataFrame],
+      writeCreated: DataFrame => Unit,
+      writeMerged: (DataFrame, DataFrame) => Unit): MergeStats = {
+    // The partition-pruned slice reads ONLY the increment's partition
+    // values, which is sound iff the partition column is part of the key:
+    // otherwise a key match stored under a different partition value is
+    // invisible to the probe, classifies as `create`, and the store ends
+    // up with the duplicate key strictKeys exists to prevent — spanning
+    // partitions no future slice reads, so it is never caught.
+    partitionCol.foreach(p => require(keyCols.contains(p),
+      s"$caller: partitionCol '$p' must be one of keyCols " +
+        s"${keyCols.mkString("[", ",", "]")} — the partition-pruned merge " +
+        "slice is only correct when key equality pins the partition"))
+    val inc = dedupIncrement(incoming, keyCols)
+    openExisting() match {
+      case None =>
+        // created-row count observed DURING the streaming write (one pass,
+        // no materialization): a first bulk load may be the whole dataset,
+        // and checkpointing it just to count would pin dataset-sized blocks
+        // in executor storage + double the write amplification
+        val obs = org.apache.spark.sql.Observation()
+        writeCreated(inc.withColumn("uuid", md5(keyConcat(keyCols)))
+          .observe(obs, count(lit(1)).as("n")))
+        MergeStats(obs.get("n").asInstanceOf[Long], 0L, 0L)
+      case Some(existing) =>
+        val slice = partitionCol match {
+          case Some(p) =>
+            val parts = inc.select(col(p)).distinct().collect().map(_.get(0))
+            existing.filter(partitionSlicePred(p, parts)) // → partition pruning
+          case None => existing
+        }
+        // ONE scan of the slice: the merge plan materializes here (which
+        // also fires the strict-key guard), then stats and the overwrite
+        // both read the checkpointed blocks. The checkpoint also truncates
+        // lineage so the overwrite doesn't read from the path it writes.
+        // Long cluster runs pass `checkpointDir` for a reliable checkpoint
+        // (localCheckpoint blocks die with a lost executor — Materialize).
+        val j = Materialize(
+          mergedWithAction(inc, slice, keyCols, replace, strictKeys), checkpointDir)
+        val st = j.filter(col("__action").isNotNull)
+          .groupBy(col("__action")).agg(count(lit(1)).as("n")).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        writeMerged(j.drop("__action"), existing)
+        MergeStats(st.getOrElse(ActionCreate, 0L), st.getOrElse(ActionReplace, 0L),
+          st.getOrElse(ActionUnchanged, 0L))
     }
   }
 

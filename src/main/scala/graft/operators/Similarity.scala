@@ -335,20 +335,11 @@ object Similarity {
   /**
    * IVF (inverted-file) ANN index — the k-means alternative to hyperplane
    * LSH: vectors are assigned to their nearest centroid's cell; a query
-   * probes only its `nProbe` nearest cells. Training is deterministic
-   * GIVEN a fixed partitioning: seeds = the `nCells` training vectors with
-   * smallest xxhash64(id) (a reproducible pseudo-random sample — no RNG
-   * state), refined by `iters` Lloyd rounds over the training set —
+   * probes only its `nProbe` nearest cells. Cells are `iters` rounds of
+   * the shared Lloyd trainer ([[trainLloyd]]: hash-sampled seeds, one
+   * map-only assignment + one mean fold per round) over the training set;
    * `trainPct` < 100 trains on a deterministic hash sample and is the
-   * 100 TB path (see the body note). The mean update is a
-   * distributed avg() over doubles, so centroids are reproducible per
-   * session but NOT bit-identical across different cluster layouts
-   * (float summation order follows partitioning; a near-tie vector can
-   * flip cells between layouts — recall-neutral, but not a bit-for-bit
-   * contract). Each round is declarative: assignment = broadcast-centroid
-   * cross join + one min(struct(dist, cell)) aggregation; new means =
-   * posexplode + groupBy(cell, dim) avg (map-side combined) — the corpus
-   * is scanned once per round, no UDFs, no giant expression trees.
+   * 100 TB path ([[trainSetOf]]).
    *
    * METRIC CONSISTENCY: the index SERVES cosine, so training and cell
    * assignment run on L2-NORMALIZED vectors — nearest-euclidean on the
@@ -366,41 +357,34 @@ object Similarity {
   def buildIvfIndex(embeddings: DataFrame, nCells: Int = 16, iters: Int = 2,
       vecCol: String = "embedding", idCol: String = "vec_id",
       trainPct: Int = 100): IvfIndex = {
-    require(trainPct > 0 && trainPct <= 100, s"trainPct must be in (0,100]: $trainPct")
     val prepped = withUnit(embeddings.select(col(idCol), col(vecCol)), vecCol)
-    // SAMPLE-TRAINED at scale: each Lloyd round is a full scan of its
-    // training set (broadcast cross-join + two aggs), so `iters` rounds
-    // over a 100 TB corpus pay `iters` corpus scans for centroids that a
-    // deterministic hash sample (Corpus.sampleByHash — engine/partitioning/
-    // growth stable, a pushdown-friendly filter) estimates just as well:
-    // k-means cells only need the sample to dwarf nCells. The one
-    // FULL-corpus pass left is the final cell assignment, which every
-    // build needs anyway. trainPct=100 (default) trains on everything —
-    // identical to the pre-sampling behavior; correctness of serving never
-    // depends on WHICH centroids trained (the full-probe oracle
-    // `sim_topk_ivf_full` equals brute force for any centroids).
-    val trainSet = if (trainPct >= 100) prepped
-      else Corpus.sampleByHash(prepped, trainPct, idCol)
-    // deterministic seed sample, stable cell numbering by seed id
-    val seeds = trainSet.select(col(idCol), col("__unit"))
-      .orderBy(xxhash64(col(idCol)), col(idCol)).limit(nCells).collect()
-      .zipWithIndex.map { case (r, i) => (i, r.getSeq[Float](1).toArray) }
-    require(seeds.length == nCells,
-      s"training set has only ${seeds.length} vectors for $nCells cells — raise trainPct")
-    var centroids = seeds
-    val unitVecs = trainSet.select(col(idCol), col("__unit").as(vecCol),
-      col("__unit"), lit(1.0).as("nrm"))
-    for (_ <- 0 until iters) {
-      // Lloyd rounds train in the unit space: means of unit vectors
-      val means = ivfCentroidsOf(
-        assignCells(unitVecs, centroids, vecCol, idCol), vecCol).toMap
-      // empty cells keep their previous centroid (can't re-seed mid-train
-      // without breaking determinism)
-      centroids = centroids.map { case (c, v) => (c, means.getOrElse(c, v)) }
-    }
-    // final assignments carry the ORIGINAL vector (serving rescoring wants
-    // it) + its norm; the cell is still decided in the unit space
+    val Seq(cells) = trainLloyd(
+      Seq(LloydFamily(trainSetOf(prepped, trainPct, idCol), 1, nCells)), iters, idCol)
+    ivfOf(prepped, cells, vecCol, idCol)
+  }
+
+  /** The final IVF assignment: every vector of `prepped` (the ORIGINAL
+    * vector plus its norm — serving rescoring wants both) under the
+    * trained whole-vector codebook; the cell is decided in the unit space. */
+  private def ivfOf(prepped: DataFrame, cells: Array[Array[Array[Float]]],
+      vecCol: String, idCol: String): IvfIndex = {
+    val centroids = cells.head.zipWithIndex.map { case (v, i) => (i, v) }
     IvfIndex(assignCells(prepped, centroids, vecCol, idCol), centroids)
+  }
+
+  /** SAMPLE-TRAINED at scale: each Lloyd round is a full scan of its
+    * training set, so `iters` rounds over a 100 TB corpus pay `iters`
+    * corpus scans for centroids that a deterministic hash sample
+    * (Corpus.sampleByHash — engine/partitioning/growth stable, a
+    * pushdown-friendly filter) estimates just as well: k-means cells only
+    * need the sample to dwarf the centroid count. The one FULL-corpus pass
+    * left is IVF's final cell assignment, which every build needs anyway.
+    * trainPct=100 (default) trains on everything; correctness of serving
+    * never depends on WHICH centroids trained (the full-probe oracle
+    * `sim_topk_ivf_full` equals brute force for any centroids). */
+  private def trainSetOf(prepped: DataFrame, trainPct: Int, idCol: String): DataFrame = {
+    require(trainPct > 0 && trainPct <= 100, s"trainPct must be in (0,100]: $trainPct")
+    if (trainPct >= 100) prepped else Corpus.sampleByHash(prepped, trainPct, idCol)
   }
 
   /** (id, vec, __unit, nrm): the L2-normalized copy rides alongside the
@@ -412,14 +396,13 @@ object Similarity {
         transform(col(vecCol), x => (x.cast("double") / col("nrm")).cast("float")))
         .otherwise(col(vecCol)))
 
-  /** Nearest-centroid assignment, MAP-ONLY: one
-    * [[graft.plans.NearestCentroid]] kernel call per vector against the
-    * literal centroid table. Distance (in the unit space, against
+  /** Nearest-centroid cell assignment of a trained IVF model, MAP-ONLY:
+    * one [[graft.plans.NearestCentroid]] kernel call per vector against
+    * the literal centroid table. Distance (in the unit space, against
     * unit-space centroids) = ||c||² − 2·û·c (the ||û||² term is constant
-    * per vector), first-min tie-break — bit-identical to the previous
-    * broadcast-crossJoin + `min(struct)` shape (same [[dot]] accumulation
-    * order) with the nCells× fan-out and the groupBy(id) exchange gone:
-    * every Lloyd round and the final assignment are now pure scans.
+    * per vector), first-min tie-break — the same kernel and distance form
+    * the Lloyd rounds use ([[assignCodes]] with one whole-vector
+    * subspace), so served cells agree with training-time assignments.
     * Input must carry `__unit` and `nrm` (see [[withUnit]]); output keeps
     * the original `vecCol` and `nrm`. */
   private def assignCells(vecs: DataFrame, centroids: Array[(Int, Array[Float])],
@@ -454,110 +437,125 @@ object Similarity {
     IvfIndex(spark.read.parquet(s"$path/assignments"), centroids)
   }
 
+  /** One model the shared Lloyd loop ([[trainLloyd]]) trains: `m`
+    * subspaces × `k` centroids over the unit vectors (`__unit`) of `train`,
+    * a [[withUnit]]-prepped frame. IVF is the whole-vector `m = 1` case
+    * (`k` = nCells); PQ is `m` per-subspace codebooks. */
+  private final case class LloydFamily(train: DataFrame, m: Int, k: Int)
+
   /**
-   * Fused ANN training for the declared build (`AnnIndex.buildAll`): the
-   * two IVF models (full corpus, `e300`) and the PQ codebooks advance
-   * their Lloyd rounds inside ONE aggregation job per round — a union of
-   * the three per-family mean folds — and the full-side IVF and PQ seed
-   * from ONE TakeOrdered collect.
+   * The one Lloyd k-means trainer behind [[buildIvfIndex]], [[trainPq]],
+   * [[trainIvfPq]] and [[trainAnnModels]]: every requested family advances
+   * its rounds inside ONE aggregation job per round — a union of the
+   * per-family mean folds — so fused callers pay one driver round-trip per
+   * round however many models they train.
    *
-   * Equivalence to the standalone trainers ([[buildIvfIndex]] /
-   * [[trainPq]] at `trainPct = 100`):
-   *  - seeds: both full-side families order by `(xxhash64(id), id)` — a
-   *    total order — and take a prefix, so `limit(max(nCells, k))` gives
-   *    each family exactly the rows its own `limit` would have;
-   *  - rounds: each union branch is the same aggregation the standalone
-   *    trainer collects (same assignment kernels, same [[graft.plans.VecMeanAgg]]
-   *    folds over the same partitioning) — co-scheduling branches in one
-   *    job changes nothing about any branch's partials. Centroid doubles
-   *    remain per-session reproducible, not bit-stable across layouts
-   *    (the [[ivfCentroidsOf]] merge-order caveat; serving never depends
-   *    on WHICH centroids trained — the `*_full` bridge oracles hold for
-   *    any centroid set).
+   *  - Seeds: the training vectors with smallest `(xxhash64(id), id)` (a
+   *    reproducible pseudo-random sample, no RNG state, stable centroid
+   *    numbering); centroid c of subspace m is seed c's m-th slice.
+   *    Families over the SAME training frame (reference-equal) share one
+   *    seed prefix of the largest `k` among them: the order is total, so
+   *    each family's first `k` rows are exactly what its own `limit` would
+   *    give. Distinct frames' prefixes come back in ONE collect when ids
+   *    are integral (each branch keeps its own TakeOrdered; rows carry
+   *    their sort keys and are re-sorted on the driver, since collect
+   *    order across union branches is not contractual); otherwise, or for
+   *    a single frame, each prefix is its own ordered collect.
+   *  - Rounds: assignment is [[assignCodes]]' map-only nearest-centroid
+   *    kernel, the update one mergeable [[graft.plans.VecMeanAgg]] fold
+   *    per (subspace, centroid) — no UDFs, no giant expression trees, the
+   *    training set scanned once per round. An all-null group folds to a
+   *    null mean and keeps its previous centroid (no re-seeding mid-train,
+   *    which would break determinism).
    *
-   * Driver round-trips drop from 3 seed collects + 3 collects per round
-   * to 2 + 1 per round — the r21 answer to the build's job-ladder floor.
+   * The means are distributed double sums, so centroids are reproducible
+   * per session but NOT bit-identical across cluster layouts (summation
+   * order follows partitioning; a near-tie vector can flip cells between
+   * layouts — recall-neutral; serving never depends on WHICH centroids
+   * trained, and the `*_full` bridge oracles hold for any centroid set).
+   * Returns each family's `m × k × (dim/m)` codebook, in request order.
    */
+  private def trainLloyd(fams: Seq[LloydFamily], iters: Int, idCol: String)
+      : Seq[Array[Array[Array[Float]]]] = {
+    fams.foreach(f => require(f.m >= 1 && f.k >= 1,
+      s"m and k must be >= 1: m=${f.m} k=${f.k}"))
+    val trains = fams.map(_.train).foldLeft(Vector.empty[DataFrame]) {
+      (acc, t) => if (acc.exists(_ eq t)) acc else acc :+ t
+    }
+    def trainIdx(f: LloydFamily): Int = trains.indexWhere(_ eq f.train)
+    def seedPrefix(i: Int): DataFrame = trains(i).select(col(idCol), col("__unit"))
+      .orderBy(xxhash64(col(idCol)), col(idCol))
+      .limit(fams.filter(trainIdx(_) == i).map(_.k).max)
+    val integral = trains.forall(_.schema(idCol).dataType match {
+      case org.apache.spark.sql.types.LongType |
+           org.apache.spark.sql.types.IntegerType => true
+      case _ => false
+    })
+    val seeds: Seq[Array[Array[Float]]] =
+      if (trains.size == 1 || !integral)
+        trains.indices.map(i => seedPrefix(i).collect().map(_.getSeq[Float](1).toArray))
+      else {
+        val rows = trains.indices.map(i => seedPrefix(i).select(lit(i).as("fam"),
+            xxhash64(col(idCol)).as("h"), col(idCol).cast("long").as("id"),
+            col("__unit")))
+          .reduce(_ unionAll _).collect()
+        trains.indices.map(i => rows.filter(_.getInt(0) == i)
+          .sortBy(r => (r.getLong(1), r.getLong(2))).map(_.getSeq[Float](3).toArray))
+      }
+    var books: Seq[Array[Array[Array[Float]]]] = fams.map { f =>
+      val seed = seeds(trainIdx(f))
+      require(seed.length >= f.k, s"training set has only ${seed.length} " +
+        s"vectors for ${f.k} centroids — raise trainPct")
+      val dim = seed.head.length
+      require(dim % f.m == 0, s"dim $dim not divisible by ${f.m} subspaces")
+      val sub = dim / f.m
+      Array.tabulate(f.m, f.k)((mi, ci) => seed(ci).slice(mi * sub, (mi + 1) * sub))
+    }
+    for (_ <- 0 until iters) {
+      val rows = fams.zip(books).zipWithIndex.map { case ((f, b), i) =>
+        assignCodes(f.train, b, b.head.head.length, idCol)
+          .groupBy(col("__m"), col("__code"))
+          .agg(graft.plans.VectorExpressions.vecMean(col("__sv")).as("cvec"))
+          .select(lit(i).as("fam"), col("__m"), col("__code"), col("cvec"))
+      }.reduce(_ unionAll _).filter(col("cvec").isNotNull).collect()
+      books = books.zipWithIndex.map { case (b, i) =>
+        val means = rows.filter(_.getInt(0) == i).map(r => (r.getInt(1), r.getInt(2)) ->
+          r.getSeq[Double](3).map(_.toFloat).toArray).toMap
+        Array.tabulate(b.length, b.head.length)((mi, ci) =>
+          means.getOrElse((mi, ci), b(mi)(ci)))
+      }
+    }
+    books
+  }
+
+  /** IVF cells and PQ codebooks over one corpus in one [[trainLloyd]]
+    * pass (one seed collect, one aggregation per round) — the models
+    * [[buildIvfIndex]] and [[trainPq]] train separately. */
+  private[graft] def trainIvfPq(corpus: DataFrame, nCells: Int, m: Int, k: Int,
+      iters: Int, vecCol: String = "embedding", idCol: String = "vec_id")
+      : (IvfIndex, PqModel) = {
+    val prepped = withUnit(corpus.select(col(idCol), col(vecCol)), vecCol)
+    val Seq(cells, books) = trainLloyd(
+      Seq(LloydFamily(prepped, 1, nCells), LloydFamily(prepped, m, k)), iters, idCol)
+    (ivfOf(prepped, cells, vecCol, idCol), PqModel(m, k, cells.head.head.length, books))
+  }
+
+  /** The declared build's models (`AnnIndex.buildAll`) in one
+    * [[trainLloyd]] pass: IVF over the full corpus and over `e300`, and
+    * PQ over the full corpus — equal to the standalone trainers at
+    * `trainPct = 100` (spec-pinned). */
   private[graft] def trainAnnModels(eFull: DataFrame, e300: DataFrame,
       nCells: Int, m: Int, k: Int, iters: Int,
       vecCol: String = "embedding", idCol: String = "vec_id")
       : (IvfIndex, IvfIndex, PqModel) = {
-    require(nCells >= 1 && m >= 1 && k >= 1,
-      s"nCells, m and k must be >= 1: nCells=$nCells m=$m k=$k")
-    // the driver-side seed re-sort below casts idCol to long for its
-    // (hash, id) tie-break — integral ids only (the declared builds'
-    // vec_id); a string-id caller must use the standalone trainers
-    require(Seq(eFull, e300).forall(df => df.schema(idCol).dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType => true
-      case _ => false
-    }), s"trainAnnModels: $idCol must be integral for the seed tie-break")
     val preppedFull = withUnit(eFull.select(col(idCol), col(vecCol)), vecCol)
     val prepped300 = withUnit(e300.select(col(idCol), col(vecCol)), vecCol)
-    val nSeed = math.max(nCells, k)
-    // ONE collect for both seed prefixes: each branch keeps its own
-    // TakeOrdered over the same (xxhash64(id), id) total order the
-    // standalone trainers use — the union only co-schedules the two scans
-    // in one job. Rows carry their sort keys and are re-sorted on the
-    // driver; collect order across union branches is not contractual.
-    def seedBranch(prepped: DataFrame, fam: Int, n: Int) = prepped
-      .select(col(idCol), col("__unit"))
-      .orderBy(xxhash64(col(idCol)), col(idCol)).limit(n)
-      .select(lit(fam).as("fam"), xxhash64(col(idCol)).as("h"),
-        col(idCol).cast("long").as("id"), col("__unit"))
-    val seedAll = seedBranch(preppedFull, 0, nSeed)
-      .unionAll(seedBranch(prepped300, 1, nCells)).collect()
-    def seedsOf(fam: Int): Array[Array[Float]] = seedAll
-      .filter(_.getInt(0) == fam).sortBy(r => (r.getLong(1), r.getLong(2)))
-      .map(_.getSeq[Float](3).toArray)
-    val seedRows = seedsOf(0)
-    require(seedRows.length == nSeed,
-      s"full corpus has only ${seedRows.length} vectors for $nSeed seeds")
-    val dim = seedRows.head.length
-    require(dim % m == 0, s"dim $dim not divisible by $m subspaces")
-    val sub = dim / m
-    var centsFull: Array[(Int, Array[Float])] =
-      Array.tabulate(nCells)(i => (i, seedRows(i)))
-    var books: Array[Array[Array[Float]]] = Array.tabulate(m, k) {
-      (mi, ci) => seedRows(ci).slice(mi * sub, (mi + 1) * sub)
-    }
-    var cents300: Array[(Int, Array[Float])] =
-      seedsOf(1).zipWithIndex.map { case (v, i) => (i, v) }
-    require(cents300.length == nCells,
-      s"e300 has only ${cents300.length} vectors for $nCells cells")
-    def unitVecs(prepped: DataFrame) = prepped.select(col(idCol),
-      col("__unit").as(vecCol), col("__unit"), lit(1.0).as("nrm"))
-    val vm = graft.plans.VectorExpressions.vecMean _
-    for (_ <- 0 until iters) {
-      val bFull = assignCells(unitVecs(preppedFull), centsFull, vecCol, idCol)
-        .groupBy(col("cell")).agg(vm(col(vecCol)).as("cvec"))
-        .select(lit(0).as("fam"), col("cell").as("k1"), lit(0).as("k2"),
-          col("cvec"))
-      val b300 = assignCells(unitVecs(prepped300), cents300, vecCol, idCol)
-        .groupBy(col("cell")).agg(vm(col(vecCol)).as("cvec"))
-        .select(lit(1).as("fam"), col("cell").as("k1"), lit(0).as("k2"),
-          col("cvec"))
-      val bPq = assignCodes(preppedFull, books, sub, idCol)
-        .groupBy(col("__m"), col("__code")).agg(vm(col("__sv")).as("cvec"))
-        .select(lit(2).as("fam"), col("__m").as("k1"), col("__code").as("k2"),
-          col("cvec"))
-      // all-null groups fold to a null mean — omit, keep previous centroid
-      // (each standalone trainer's documented rule)
-      val rows = bFull.unionAll(b300).unionAll(bPq)
-        .filter(col("cvec").isNotNull).collect()
-      def meansOf(fam: Int): Map[(Int, Int), Array[Float]] =
-        rows.filter(_.getInt(0) == fam).map(r => (r.getInt(1), r.getInt(2)) ->
-          r.getSeq[Double](3).map(_.toFloat).toArray).toMap
-      val (mFull, m300, mPq) = (meansOf(0), meansOf(1), meansOf(2))
-      centsFull = centsFull.map { case (c, v) => (c, mFull.getOrElse((c, 0), v)) }
-      cents300 = cents300.map { case (c, v) => (c, m300.getOrElse((c, 0), v)) }
-      books = Array.tabulate(m, k) { (mi, ci) =>
-        mPq.getOrElse((mi, ci), books(mi)(ci))
-      }
-    }
-    (IvfIndex(assignCells(preppedFull, centsFull, vecCol, idCol), centsFull),
-      IvfIndex(assignCells(prepped300, cents300, vecCol, idCol), cents300),
-      PqModel(m, k, dim, books))
+    val Seq(cellsFull, cells300, books) = trainLloyd(Seq(
+      LloydFamily(preppedFull, 1, nCells), LloydFamily(prepped300, 1, nCells),
+      LloydFamily(preppedFull, m, k)), iters, idCol)
+    (ivfOf(preppedFull, cellsFull, vecCol, idCol),
+      ivfOf(prepped300, cells300, vecCol, idCol),
+      PqModel(m, k, cellsFull.head.head.length, books))
   }
 
   /**
@@ -576,30 +574,6 @@ object Similarity {
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
     assignCells(withUnit(embeddings.select(col(idCol), col(vecCol)), vecCol),
       index.centroids, vecCol, idCol)
-
-  /** Cell means of an assignment table — the Lloyd-round update step (also
-    * a fallback model if only an assignments table survives; note it is
-    * half a Lloyd step past the trained centroids `readIvfIndex` restores). */
-  def ivfCentroidsOf(assignments: DataFrame,
-      vecCol: String = "embedding"): Array[(Int, Array[Float])] =
-    // ONE mergeable vector aggregation (r20): the previous shape exploded
-    // every vector into d (cell, dim, x) rows — a ×d row blow-up INTO the
-    // exchange — then paid a second exchange to reassemble arrays with
-    // collect_list. [[graft.plans.VecMeanAgg]] folds [n, Σx…] per cell
-    // per partition (one (1+d)-double buffer into a single exchange) and
-    // emits the per-dim means directly; the float cast happens on the
-    // ≤nCells collected rows. Same sum/count algebra — centroids can move
-    // at ulp order vs the exploded avg, which the ANN family tolerates by
-    // construction (serving never depends on WHICH centroids trained; the
-    // `*_full` bridge oracles hold for any centroid set).
-    assignments.groupBy(col("cell"))
-      .agg(graft.plans.VectorExpressions.vecMean(col(vecCol)).as("cvec"))
-      // an all-null cell folds to a null mean — omit it, exactly like the
-      // old explode form (null vectors exploded to zero rows), so the
-      // caller's means.getOrElse keeps the previous centroid
-      .filter(col("cvec").isNotNull)
-      .collect().map(r =>
-        r.getInt(0) -> r.getSeq[Double](1).map(_.toFloat).toArray)
 
   /**
    * ANN top-k through an IVF index: rank cells by centroid distance
@@ -1363,50 +1337,24 @@ object Similarity {
    * splits into `m` subvectors, each quantized to its subspace's nearest
    * of `k` codebook centroids, so a d-float embedding becomes `m` small
    * codes (d·4 bytes → m bytes at k ≤ 256 — 32× at d=64, m=8). Training
-   * is per-subspace k-means, all `m` subspaces in the SAME Lloyd pass:
-   * one explode to (id, m, subvec), one broadcast-codebook join keyed by
-   * subspace, one min(struct) argmin, one mean aggregation per round —
-   * `iters + 1` scans of the training set total, sample-trainable via
-   * `trainPct` exactly like [[buildIvfIndex]]. Seeds: the k
-   * smallest-xxhash64(id) training vectors' m-th slices (deterministic,
-   * no RNG; same caveat as IVF — distributed avg() means centroids are
-   * per-session reproducible, not bit-identical across cluster layouts).
+   * is per-subspace k-means, all `m` subspaces in the SAME round of the
+   * shared Lloyd trainer ([[trainLloyd]]; seeds are the k
+   * smallest-xxhash64(id) training vectors' m-th slices), sample-trainable
+   * via `trainPct` exactly like [[buildIvfIndex]].
    */
   def trainPq(embeddings: DataFrame, m: Int = 8, k: Int = 16, iters: Int = 2,
       vecCol: String = "embedding", idCol: String = "vec_id",
       trainPct: Int = 100): PqModel = {
-    require(trainPct > 0 && trainPct <= 100, s"trainPct must be in (0,100]: $trainPct")
-    require(m >= 1 && k >= 1, s"m and k must be >= 1: m=$m k=$k")
     val prepped = withUnit(embeddings.select(col(idCol), col(vecCol)), vecCol)
-    val trainSet = if (trainPct >= 100) prepped
-      else Corpus.sampleByHash(prepped, trainPct, idCol)
-    val seedVecs = trainSet.select(col(idCol), col("__unit"))
-      .orderBy(xxhash64(col(idCol)), col(idCol)).limit(k).collect()
-      .map(_.getSeq[Float](1).toArray)
-    require(seedVecs.length == k,
-      s"training set has only ${seedVecs.length} vectors for $k codes — raise trainPct")
-    // dim from the seed rows already on the driver — the dedicated
-    // `head` scan job this used to pay priced at a full dispatch floor
-    // for one integer (r20)
-    val dim = seedVecs.head.length
-    require(dim % m == 0, s"dim $dim not divisible by $m subspaces")
-    val sub = dim / m
-    var books: Array[Array[Array[Float]]] = Array.tabulate(m, k) {
-      (mi, ci) => seedVecs(ci).slice(mi * sub, (mi + 1) * sub)
-    }
-    for (_ <- 0 until iters) {
-      val means = subMeans(assignCodes(trainSet, books, sub, idCol))
-      books = Array.tabulate(m, k) { (mi, ci) =>
-        means.getOrElse((mi, ci), books(mi)(ci)) // empty code keeps its centroid
-      }
-    }
-    PqModel(m, k, dim, books)
+    val Seq(books) = trainLloyd(
+      Seq(LloydFamily(trainSetOf(prepped, trainPct, idCol), m, k)), iters, idCol)
+    PqModel(m, k, m * books.head.head.length, books)
   }
 
   /** Argmin code per (id, subspace), MAP-ONLY: each subspace slice gets
     * its own [[graft.plans.NearestCentroid]] kernel against that
     * subspace's literal codebook (the per-subspace [[assignCells]]), the
-    * m (slice, code) structs explode into the training rows [[subMeans]]
+    * m (slice, code) structs explode into the training rows [[trainLloyd]]
     * folds. Bit-identical to the previous broadcast-codebook join +
     * `min(struct)` (same distance form, same first-min tie-break) with
     * the m·k fan-out and the groupBy(id, m) exchange gone. Takes the
@@ -1429,18 +1377,6 @@ object Similarity {
       .select(col(idCol), col("__e.__m").as("__m"),
         col("__e.__sv").as("__sv"), col("__e.__code").as("__code"))
   }
-
-  /** Per-(subspace, code) means — the Lloyd update, all subspaces in one
-    * aggregation pass (mirrors [[ivfCentroidsOf]] per subspace: one
-    * mergeable [[graft.plans.VecMeanAgg]] fold per (m, code) group, no
-    * ×sub explode into the exchange, no collect_list reassembly). */
-  private def subMeans(assigned: DataFrame): Map[(Int, Int), Array[Float]] =
-    assigned.groupBy(col("__m"), col("__code"))
-      .agg(graft.plans.VectorExpressions.vecMean(col("__sv")).as("cvec"))
-      .filter(col("cvec").isNotNull) // all-null code: omit, keep previous
-      .collect().map(r =>
-        (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).map(_.toFloat).toArray)
-      .toMap
 
   /** Encode the corpus: (id, codes array<int> ordered by subspace) — the
     * compressed relation to persist; `m` bytes of information per vector.

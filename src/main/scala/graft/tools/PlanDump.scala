@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for declared queries to files — the
   * optimization-round evidence trail (`plans/r<N>/<query>_before.txt` /
   * `_after.txt`). Usage:
@@ -20,16 +18,7 @@ object PlanDump {
     val only: Set[String] =
       if (args.length > 3) args(3).split(",").map(_.trim).filter(_.nonEmpty).toSet
       else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("graft-plandump")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val unknown = only.diff(graft.SparkEntry.queries.keySet)
     require(unknown.isEmpty,
