@@ -101,9 +101,6 @@ object EmbeddingCurationJob {
       case x => String.valueOf(x)
     }.mkString("|"))
 
-  private def exists(spark: SparkSession, path: String): Boolean =
-    IncProtocol.exists(spark, path)
-
   /** The job's centroid model: trained on the FIRST batch (deterministic
     * [[Similarity.kmeansSeeds]] — the k lowest-id vectors) and persisted,
     * so every later increment assigns under the identical model — the
@@ -113,7 +110,7 @@ object EmbeddingCurationJob {
       idCol: String): Array[Array[Float]] = {
     import spark.implicits._
     val dir = centroidsDir(outRoot)
-    if (!exists(spark, dir)) {
+    if (!IncProtocol.exists(spark, dir)) {
       val seeds = Similarity.kmeansSeeds(batch, nCells, vecCol, idCol)
       require(seeds.length == nCells,
         s"first batch has only ${seeds.length} vectors for $nCells cells")
@@ -160,7 +157,7 @@ object EmbeddingCurationJob {
         // construction; compaction is idempotent, so a redelivered batch
         // re-triggering on the same count is harmless.
         cfg.compactEvery.foreach { n =>
-          val applied = appliedIncrements(spark, outRoot)
+          val applied = IncProtocol.appliedCount(spark, incrementsDir(outRoot))
           if (applied > 0 && applied % n == 0) {
             val c = compact(spark, outRoot)
             println(s"""{"batch":$batchId,"compacted":${c.size},""" +
@@ -179,13 +176,12 @@ object EmbeddingCurationJob {
     * relation → (filesBefore, filesAfter). Run from a maintenance
     * window: never concurrently with an increment. */
   def compact(spark: SparkSession, outRoot: String): Map[String, (Long, Long)] = {
-    def exists0(path: String) = exists(spark, path)
     val partitioned = Seq(dedupRegistryDir(outRoot) -> Seq("cell"))
     val plain = Seq(selectionRegistryDir(outRoot), curatedDir(outRoot),
       incrementsDir(outRoot))
-    (partitioned.collect { case (p, cols) if exists0(p) =>
+    (partitioned.collect { case (p, cols) if IncProtocol.exists(spark, p) =>
       p -> operators.Compaction.compactPartitioned(spark, p, cols)
-    } ++ plain.collect { case p if exists0(p) =>
+    } ++ plain.collect { case p if IncProtocol.exists(spark, p) =>
       p -> operators.Compaction.compactPlain(spark, p)
     }).toMap + ("inc_state" -> gcIncState(spark, outRoot))
   }
@@ -209,17 +205,6 @@ object EmbeddingCurationJob {
     * increment forever. Returns (dirsBefore, dirsAfter). */
   private[graft] def gcIncState(spark: SparkSession, outRoot: String): (Long, Long) =
     IncProtocol.gcIncState(spark, incStateRoot(outRoot), incrementsDir(outRoot))
-
-  /** Number of increments applied so far — counted from the manifest's
-    * idempotent-append markers (the existing ledger), so the trigger
-    * below costs one directory listing, not a scan. */
-  private def appliedIncrements(spark: SparkSession, outRoot: String): Long = {
-    val dir = new Path(incrementsDir(outRoot))
-    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) 0L
-    else fs.listStatus(dir)
-      .count(_.getPath.getName.startsWith("_graft_inc_applied_")).toLong
-  }
 
   /** Run ONE increment through the configured stages; append its
     * curations and grow the registries/layout. See the class doc for the
@@ -276,7 +261,7 @@ object EmbeddingCurationJob {
     // the batch). It also keeps completed-replay counts exact after
     // gcIncState removed the write-ahead verdicts. Pre-upgrade ledgers
     // without the inc_key column fall through to the marker-gated path.
-    if (exists(spark, s"${incrementsDir(outRoot)}/_graft_inc_applied_$incKey")) {
+    if (IncProtocol.appliedTo(spark, incrementsDir(outRoot), incKey)) {
       // mergeSchema: a ledger spanning the inc_key upgrade has mixed
       // footers, and an unmerged read can infer the OLD schema and
       // silently disable this path
@@ -459,7 +444,7 @@ object EmbeddingCurationJob {
       val vecs = deduped.join(curated.select(col(idCol)), Seq(idCol),
         "left_semi").select(col(idCol), col(vecCol))
       val lp = layoutDir(outRoot)
-      if (!exists(spark, s"$lp/ivf")) {
+      if (!IncProtocol.exists(spark, s"$lp/ivf")) {
         val fs = FileSystem.get(new Path(lp).toUri,
           spark.sparkContext.hadoopConfiguration)
         val tmp = new Path(lp + "__build_tmp")

@@ -16,6 +16,9 @@ import org.apache.spark.sql.SparkSession
  */
 private[graft] object IncProtocol {
 
+  /** Name prefix of the per-increment applied markers in a relation dir. */
+  private val MarkerPrefix = "_graft_inc_applied_"
+
   def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration).exists(p)
@@ -31,14 +34,24 @@ private[graft] object IncProtocol {
     * increment has mutated a relation, its verdicts can no longer be
     * re-evaluated under different parameters. */
   def appliedTo(spark: SparkSession, relDir: String, incKey: String): Boolean =
-    exists(spark, s"$relDir/_graft_inc_applied_$incKey")
+    exists(spark, s"$relDir/$MarkerPrefix$incKey")
+
+  /** Number of increments whose append to `relDir` landed — its
+    * markers, counted by one directory listing, no scan. */
+  def appliedCount(spark: SparkSession, relDir: String): Long = {
+    val dir = new Path(relDir)
+    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) 0L
+    else fs.listStatus(dir)
+      .count(_.getPath.getName.startsWith(MarkerPrefix)).toLong
+  }
 
   /** Run `write` into `relDir` exactly once per increment content: the
     * marker file gates the append, so a retried increment skips writes
     * that already landed instead of double-appending. */
   def appendOnce(spark: SparkSession, relDir: String, incKey: String)(
       write: => Unit): Unit = {
-    val marker = new Path(s"$relDir/_graft_inc_applied_$incKey")
+    val marker = new Path(s"$relDir/$MarkerPrefix$incKey")
     val fs = FileSystem.get(marker.toUri,
       spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(marker)) { write; fs.create(marker, false).close() }

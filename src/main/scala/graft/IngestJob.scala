@@ -99,14 +99,23 @@ object IngestJob {
         // loop over paths is the reference's own per-file granularity and
         // keeps per-file header classification + stats)
         batch.collect().map(_.getString(0)).sorted.foreach { path =>
-          val r = runFile(spark, ds, path, root, location, byPosition)
-          println(s"""{"batch":$batchId,"file":"${jsonEscape(r.file)}",""" +
-            s""""created":${r.created},"replaced":${r.replaced},"unchanged":${r.unchanged}}""")
+          println(statsJson(runFile(spark, ds, path, root, location, byPosition),
+            Some(batchId)))
         }
         ()
       }
       .start()
   }
+
+  /** One per-file stats line as JSON — the CLI's and the stream's shared
+    * rendering (only the stream's carries `batch`). The file path is
+    * escaped: a quote, backslash or control character in it must not
+    * break the line. */
+  private[graft] def statsJson(r: FileResult, batch: Option[Long] = None): String =
+    batch.fold("{")(b => s"""{"batch":$b,""") +
+      s""""file":"${jsonEscape(r.file)}","created":${r.created},""" +
+      s""""replaced":${r.replaced},"unchanged":${r.unchanged},""" +
+      s""""metadata_rows":${r.metadataRows}}"""
 
   private def jsonEscape(s: String): String =
     s.flatMap {

@@ -49,10 +49,7 @@ object Main {
 
     val cfg = loadConfig(spark, configPath, date)
     val results = IngestJob.run(spark, cfg, storeRoot, byPosition)
-    results.foreach { r =>
-      println(s"""{"file":"${r.file}","created":${r.created},"replaced":${r.replaced},""" +
-        s""""unchanged":${r.unchanged},"metadata_rows":${r.metadataRows}}""")
-    }
+    results.foreach(r => println(IngestJob.statsJson(r)))
     println(s"""{"all_complete":${IngestJob.allComplete(spark, storeRoot)}}""")
     spark.stop()
   }

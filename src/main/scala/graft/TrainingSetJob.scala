@@ -614,16 +614,6 @@ object TrainingSetJob {
         incrementsDir(outRoot)))
   }
 
-  /** Applied-increment count from the ledger's idempotent-append
-    * markers — one directory listing, no scan. */
-  private def appliedIncrements(spark: SparkSession, outRoot: String): Long = {
-    val dir = new Path(incrementsDir(outRoot))
-    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) 0L
-    else fs.listStatus(dir)
-      .count(_.getPath.getName.startsWith("_graft_inc_applied_")).toLong
-  }
-
   /** The micro-batch loop as a Structured Streaming SINK — each
     * delivered batch of document rows runs one [[runIncrement]].
     * foreachBatch delivers AT-LEAST-ONCE; the content-keyed write-ahead
@@ -653,7 +643,7 @@ object TrainingSetJob {
         // idempotent, so a redelivery re-triggering on the same count
         // is harmless)
         cfg.compactEvery.foreach { n =>
-          val applied = appliedIncrements(spark, outRoot)
+          val applied = IncProtocol.appliedCount(spark, incrementsDir(outRoot))
           if (applied > 0 && applied % n == 0) {
             val c = compact(spark, outRoot)
             println(s"""{"batch":$batchId,"compacted":${c.size}}""")

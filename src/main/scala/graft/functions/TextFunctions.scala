@@ -140,10 +140,9 @@ object TextFunctions {
       textCol: String = "text", maxWords: Int = 1 << 20): Seq[(String, String)] = {
     require(numMerges >= 0, s"numMerges must be non-negative: $numMerges")
     require(maxWords > 0, s"maxWords must be positive: $maxWords")
-    val hist = docs
+    val hist = graft.operators.Selection.topKBy(docs
       .select(explode(tokens(col(textCol))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("w")).limit(maxWords)
+      .groupBy(col("w")).agg(count(lit(1)).as("c")), "c", "w", maxWords)
       .collect().map(r => (r.getString(0), r.getLong(1)))
     var words: Array[(Array[String], Long)] =
       hist.map { case (w, c) => (w.map(_.toString).toArray, c) }

@@ -1131,34 +1131,6 @@ object Dedup {
       .agg(sort_array(collect_list(col("pos"))).as("__starts"))
   }
 
-  /** The round-12 rank-based election, kept for the A/B ladder (and as
-    * the fallback shape if a profile ever shows the reused-exchange
-    * double read losing to one windowed pass on unskewed data). Hot-key
-    * hazard: one window partition per duplicated hash — see
-    * [[electCutStarts]]. */
-  private[graft] def electCutStartsRank(wins: DataFrame, dupKeys: DataFrame,
-      idCol: String): DataFrame = {
-    val byKey = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("w")).orderBy(col(idCol), col("pos"))
-    wins.join(dupKeys, Seq("w"))
-      .withColumn("__rk", row_number().over(byKey))
-      .filter(col("__rk") > 1)
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(col("pos"))).as("__starts"))
-  }
-
-  /** [[dedupSubstrings]] with the rank election — sweep/A-B only. */
-  private[graft] def dedupSubstringsRankElection(docs: DataFrame, n: Int = 50,
-      textCol: String = "text", idCol: String = "doc_id",
-      md5Bridge: Boolean = false, preserveCase: Boolean = false): DataFrame = {
-    require(n >= 2, s"window must be >= 2 tokens: $n")
-    val wins = substrWindows(docs, n, textCol, idCol, md5Bridge)
-    val dupKeys = wins.groupBy(col("w"))
-      .agg(count(lit(1)).as("__c")).filter(col("__c") > 1).select(col("w"))
-    rebuildCut(docs, electCutStartsRank(wins, dupKeys, idCol), n,
-      textCol, idCol, preserveCase)
-  }
-
   /** Shared rebuild tail of the fused and incremental cuts: left-join
     * the per-doc ascending start lists, run ONE CutSpans byte scan per
     * row (lowered emission for the oracle family, original-case when

@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
  * Scale posture (100 TB store, small daily increment):
  *  - `mergeIntoTable` reads back only the increment's partitions (a
  *    null-safe `partitionSlicePred` on the partition column), so partition
- *    pruning keeps the big side small BEFORE the join (`pruneExisting`,
- *    a finer static-key + date-bounds slice, is not on the merge path);
+ *    pruning keeps the big side small BEFORE the join;
  *  - `merge` is ONE full-outer join + one projection: each side of the store
  *    slice is scanned exactly once, and there are no union branches to
  *    re-scan it (round-1 shape scanned each side three times);
@@ -89,37 +88,6 @@ object KeyedStore {
   def uniquenessViolations(table: DataFrame, keyCols: Seq[String]): DataFrame =
     table.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
       .filter(col("n") > 1)
-
-  /**
-   * Scale-path store pruning: restrict the existing side to the increment's
-   * key envelope before joining. `staticKeys` are columns known constant (or
-   * low-cardinality) in the increment — datatype/period/fill — collected
-   * driver-side (tiny); the date envelope becomes a min/max range predicate
-   * that pushes into the store scan (partition pruning at 100 TB).
-   */
-  def pruneExisting(existing: DataFrame, incoming: DataFrame, staticKeys: Seq[String],
-      dateCol: String = "date"): DataFrame = {
-    val bounds = incoming.agg(min(col(dateCol)).as("lo"), max(col(dateCol)).as("hi"),
-      max(col(dateCol).isNull.cast("int")).as("has_null")).head()
-    val statics = incoming.select(staticKeys.map(col): _*).distinct().collect()
-    // NULL key fields must prune like the rest of the merge machinery
-    // matches them (<=> joins): a null static value admits the existing
-    // rows with that null, and incoming null dates admit null-date store
-    // rows — otherwise a null-keyed existing row is invisibly excluded
-    // from the slice, classifies its increment twin as `create`, and the
-    // store ends up with the duplicate key strictKeys exists to prevent.
-    val staticPred = statics.map { row =>
-      staticKeys.zipWithIndex.map { case (k, i) =>
-        val v = row.get(i)
-        if (v == null) col(k).isNull else col(k) === lit(v)
-      }.reduceOption(_ && _).getOrElse(lit(true))
-    }.reduceOption(_ || _).getOrElse(lit(true))
-    val rangePred = if (bounds.isNullAt(0)) lit(false)
-      else col(dateCol) >= lit(bounds.get(0)) && col(dateCol) <= lit(bounds.get(1))
-    val datePred = if (bounds.getAs[Any]("has_null") == 1)
-      rangePred || col(dateCol).isNull else rangePred
-    existing.filter(staticPred && datePred)
-  }
 
   /**
    * Dedup-probe classification (A1/A3/A4): one left join of incoming against

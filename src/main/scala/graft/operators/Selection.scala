@@ -37,7 +37,7 @@ import graft.functions.{Quantize, TextFunctions}
  *  - DSIR: one (bucket-keyed, map-side-combined) exchange of ≤ B rows per
  *    partition to fold the two histograms, ONE broadcast row out, then
  *    map-only scoring (`aggregate` over the per-row feature array against
- *    the broadcast log-ratio array). The top-k select is
+ *    the broadcast log-ratio array). The top-k select is [[topKBy]]:
  *    TakeOrderedAndProject (per-partition heaps) up to [[TopKMergeCap]];
  *    above it (production "select 5% of the corpus" k) the
  *    [[topKThresholdCut]] valve selects the identical set with no
@@ -48,13 +48,11 @@ import graft.functions.{Quantize, TextFunctions}
  *    open-vocabulary corpora beyond the broadcast ceiling, cap the
  *    modelled vocab (`vocabCap`) — untracked terms fall to the Laplace
  *    floor, exactly how production fastText-style routers bound their
- *    tables. The vocabCap head itself is a TakeOrdered over the term
- *    relation — inherently cap-bounded: its k IS the broadcast-model
- *    size, which the broadcast ceiling binds long before the merge
- *    funnel would (no valve needed there by construction).
- *  - A-Res: a pure map (hash, ln, divide) + TakeOrderedAndProject, with
- *    the same [[TopKMergeCap]] → [[topKThresholdCut]] valve for
- *    corpus-fraction k.
+ *    tables. The vocabCap head is a [[topKBy]] over the term relation;
+ *    its k IS the broadcast-model size, which the broadcast ceiling
+ *    binds long before the merge funnel would.
+ *  - A-Res: a pure map (hash, ln, divide) + [[topKBy]], with the same
+ *    [[TopKMergeCap]] → [[topKThresholdCut]] valve for corpus-fraction k.
  */
 object Selection {
 
@@ -256,28 +254,50 @@ object Selection {
   }
 
   /** The selection half of DSIR: keep the k raw docs whose profiles look
-    * most like the target domain. Plans as TakeOrderedAndProject over the
-    * quantized weight (per-partition heaps, driver merge of k) — ordering
-    * on the QUANTIZED value so the kept set is engine-exact. */
+    * most like the target domain, by [[topKBy]] over the QUANTIZED weight
+    * so the kept set is engine-exact. */
   def dsirTopK(docs: DataFrame, target: Column, k: Int,
       textCol: String = "text", idCol: String = "doc_id",
-      buckets: Int = DsirBuckets, mergeCap: Int = TopKMergeCap,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val scored = dsirWeights(docs, target, textCol, idCol, buckets)
-    if (k <= mergeCap)
-      scored.orderBy(col("weight").desc, col(idCol)).limit(k)
-    else topKThresholdCut(scored, "weight", idCol, k, checkpointDir)
-  }
+      buckets: Int = DsirBuckets,
+      checkpointDir: Option[String] = None): DataFrame =
+    topKBy(dsirWeights(docs, target, textCol, idCol, buckets), "weight",
+      idCol, k, checkpointDir)
 
-  /** Above this k, the top-k selectors route through
-    * [[topKThresholdCut]] instead of `orderBy.limit`:
-    * TakeOrderedAndProject's final merge concentrates the full k-row
-    * result in ONE task (per-partition heaps, single-point merge) —
-    * fine for "top 10k docs", a funnel for "select 5% of the corpus"
-    * where k is hundreds of millions. 4M rows ≈ a few hundred MB at the
-    * merge point, comfortably inside one task; beyond that the valve's
-    * extra light jobs cost less than the merge. */
+  /** Above this k, [[topKBy]] routes through [[topKThresholdCut]]
+    * instead of `orderBy.limit`: TakeOrderedAndProject's final merge
+    * concentrates the full k-row result in ONE task (per-partition
+    * heaps, single-point merge) — fine for "top 10k docs", a funnel for
+    * "select 5% of the corpus" where k is hundreds of millions. 4M rows ≈
+    * a few hundred MB at the merge point, comfortably inside one task;
+    * beyond that the valve's extra light jobs cost less than the merge. */
   val TopKMergeCap: Int = 4 * 1000 * 1000
+
+  /**
+   * THE single-relation top-k: the `k` rows of `df` by (`keyCol` DESC
+   * NULLS LAST, `idCol` ASC). `idCol` must be unique, so the selection is
+   * total and deterministic. Every single-relation top-k in the engine
+   * goes through here (`TopKLintSpec` fails on a hand-written
+   * `orderBy(… .desc …).limit` anywhere else).
+   *
+   * At or below [[TopKMergeCap]] this is `orderBy.limit`:
+   * TakeOrderedAndProject, per-partition heaps and one k-row merge, with
+   * the output in rank order. Above it TakeOrdered would PRE-ALLOCATE a
+   * 2k-slot buffer in every task regardless of input size (measured
+   * r21: ~168 MB per task at k = 10.5M, which OOM'd 2–4 GiB executors),
+   * so big k routes through [[topKThresholdCut]]: the identical row set
+   * (spec-pinned) in bounded memory, distributed and NOT globally
+   * ordered. `checkpointDir` is used only on that path (see
+   * [[Materialize]]).
+   *
+   * Per-GROUP top-k (one list per query row of a batch join) is a
+   * different operator: it stays on the `struct_topk` heap aggregate
+   * (`Similarity.topKPerQuery`).
+   */
+  def topKBy(df: DataFrame, keyCol: String, idCol: String, k: Long,
+      checkpointDir: Option[String] = None): DataFrame =
+    if (k <= TopKMergeCap)
+      df.orderBy(col(keyCol).desc, col(idCol)).limit(k.toInt)
+    else topKThresholdCut(df, keyCol, idCol, k, checkpointDir)
 
   /**
    * EXACT top-k by (`keyCol` DESC, `idCol` ASC) with NO single-point
@@ -303,7 +323,7 @@ object Selection {
    * sorted), never funneled through one task.
    */
   private[graft] def topKThresholdCut(scored0: DataFrame, keyCol: String,
-      idCol: String, k: Int,
+      idCol: String, k: Long,
       checkpointDir: Option[String] = None): DataFrame = {
     val spark = scored0.sparkSession
     if (k <= 0) return scored0.limit(0)
@@ -334,7 +354,7 @@ object Selection {
     // (= k + 2 error widths) below the top and round the fraction DOWN
     // a grid step — both roundings widen the candidate set, never
     // narrow it. idx < 0 = no cut (keep everything).
-    val depth = k.toLong + 2L * math.max(1L, n / acc)
+    val depth = k + 2L * math.max(1L, n / acc)
     var idx: Int =
       if (depth >= n || grid.isEmpty) -1
       else math.min(gridN - 2,
@@ -452,13 +472,12 @@ object Selection {
     val perTerm0 = tok.groupBy(col("__t"))
       .agg(array(classes.map(c =>
         sum(when(col("__c") === lit(c), 1L).otherwise(0L))): _*).as("cnts"))
-    val perTerm = if (vocabCap > 0) {
-      // keep the cap's head by total count: TakeOrdered, not a window —
-      // the model is the only thing truncated, V counts the KEPT terms
-      perTerm0
-        .orderBy(aggregate(col("cnts"), lit(0L), _ + _).desc, col("__t"))
-        .limit(vocabCap)
-    } else perTerm0
+    // keep the cap's head by total count, not a window — the model is
+    // the only thing truncated, V counts the KEPT terms
+    val perTerm = if (vocabCap > 0)
+      topKBy(perTerm0.withColumn("__tot", aggregate(col("cnts"), lit(0L), _ + _)),
+        "__tot", "__t", vocabCap).drop("__tot")
+    else perTerm0
     (classes, priors, perTerm)
   }
 
@@ -568,10 +587,10 @@ object Selection {
    * md5 stream: no RNG, same sample on any partitioning, any engine.
    * Rows with non-positive weight are excluded (they can never be drawn).
    * Returns (idCol, w, ares_key), key quantized for engine-exact
-   * selection; plans as a map + TakeOrderedAndProject.
+   * selection; plans as a map + [[topKBy]].
    */
   def sampleWeighted(docs: DataFrame, weight: Column, k: Int,
-      idCol: String = "doc_id", mergeCap: Int = TopKMergeCap,
+      idCol: String = "doc_id",
       checkpointDir: Option[String] = None): DataFrame = {
     val u = (Corpus.hashValue(col(idCol), WeightSalt) + lit(0.5)) / lit(4294967296.0)
     // w is reported as DOUBLE: the draw uses the true fractional weight,
@@ -580,9 +599,7 @@ object Selection {
     val scored = docs.filter(weight > 0)
       .select(col(idCol), weight.cast("double").as("w"),
         Quantize.quantize(log(u) / weight.cast("double"), 6).as("ares_key"))
-    if (k <= mergeCap)
-      scored.orderBy(col("ares_key").desc, col(idCol)).limit(k)
-    else topKThresholdCut(scored, "ares_key", idCol, k, checkpointDir)
+    topKBy(scored, "ares_key", idCol, k, checkpointDir)
   }
 
   /**

@@ -8,9 +8,9 @@ import graft.functions.Quantize
 /**
  * Similarity search over an embedding column (`array<float>`).
  *
- * Baseline: brute-force cosine top-k — one scan, one TopK (orderBy+limit
- * plans as TakeOrderedAndProject: per-partition heaps + driver merge of k
- * rows, no global sort shuffle).
+ * Baseline: brute-force cosine top-k — one scan, one
+ * [[Selection.topKBy]] (TakeOrderedAndProject: per-partition heaps +
+ * driver merge of k rows, no global sort shuffle).
  *
  * Scale paths — the ANN triad, each attacking a different axis:
  *  - LSH (no training): bucketing by random-hyperplane signs
@@ -44,26 +44,38 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /**
-   * Brute-force cosine top-k against one query vector (as a literal array —
-   * shipped in the plan, evaluated per row, no join). Deterministic
-   * tiebreak on id. Rounded to 6dp so cross-engine float summation agrees.
-   */
   /** Driver-side norm with the same fold order as the `norm` column fn —
     * substituting it as a literal keeps results bit-identical while saving
     * one 64-op aggregate per row. */
   private def normOf(query: Seq[Float]): Double =
     math.sqrt(query.foldLeft(0.0)((acc, v) => acc + v.toDouble * v.toDouble))
 
+  /** Exact cosine of `vec` (whose norm is `nrm` — computed, or a
+    * persisted index column) to a literal query vector, rounded to 6dp so
+    * cross-engine float summation agrees: the single-query serves' one
+    * score. */
+  private def cosToQuery(vec: Column, nrm: Column, query: Seq[Float]): Column =
+    Quantize.quantize(
+      dot(vec, array(query.map(v => lit(v)): _*)) / (nrm * lit(normOf(query))), 6)
+
+  /** [[cosToQuery]] with a zero-norm vector scoring an EXPLICIT null
+    * (the unguarded division would yield null silently or abort under
+    * ANSI) — the MRL serves' route and rerank legs. */
+  private def cosToQueryGuarded(vec: Column, nrm: Column,
+      query: Seq[Float]): Column =
+    when(nrm === 0d, lit(null).cast("double"))
+      .otherwise(cosToQuery(vec, nrm, query))
+
+  /**
+   * Brute-force cosine top-k against one query vector (as a literal array —
+   * shipped in the plan, evaluated per row, no join). Deterministic
+   * tiebreak on id. Rounded to 6dp so cross-engine float summation agrees.
+   */
   def topK(embeddings: DataFrame, query: Seq[Float], k: Int,
-      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val q = array(query.map(v => lit(v)): _*)
-    embeddings
-      .select(col(idCol),
-        Quantize.quantize(dot(col(vecCol), q) / (norm(col(vecCol)) * lit(normOf(query))), 6).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
+      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
+    Selection.topKBy(embeddings.select(col(idCol),
+      cosToQuery(col(vecCol), norm(col(vecCol)), query).as("cos")),
+      "cos", idCol, k)
 
   /**
    * MRL-routed top-k (Kusupati et al., "Matryoshka Representation
@@ -76,9 +88,9 @@ object Similarity {
    * element (parquet has no sub-array pruning), so the byte win needs
    * the persisted prefix relation ([[topKMrlPre]] /
    * [[writeMrlPrefixes]], the paper's truncated serving table). The
-   * shortlist rides the same per-partition-heap + driver-merge shape
-   * as [[topK]] (TakeOrdered — never a global sort); overscan buys
-   * recall back. `overscan`
+   * shortlist is a [[Selection.topKBy]] like [[topK]]'s (TakeOrdered up
+   * to the merge cap, the threshold-cut valve above it — never a global
+   * sort); overscan buys recall back. `overscan`
    * covering the corpus makes the shortlist everything, so the rerank
    * IS [[topK]] — the hash-verified `sim_topk_mrl_full` bridge (oracle
    * substrate, not a scale point, like every other *_full). Zero-norm
@@ -86,53 +98,20 @@ object Similarity {
    * abort) and sort last under the descending route order — a vector
    * invisible at kDims dims is routed out, the MRL contract.
    */
-  /** Exact top-K rows by (`keyCol` DESC NULLS LAST, `idCol` ASC) — the
-    * shortlist selector the single-query serves share. Below the
-    * single-point-merge cap this is `orderBy.limit`
-    * (TakeOrderedAndProject: per-partition heaps, driver merge of K).
-    * Above it — the *_full bridges' corpus-covering overscan, or a
-    * fractional overscan at corpus scale — TakeOrdered PRE-ALLOCATES a
-    * 2K-slot buffer in every task regardless of input size (measured
-    * r21: the 10.5M-K `sim_topk_mrl*_full` shortlists allocated ~168 MB
-    * contiguous per task and OOM'd 2–4 GiB `local-cluster` executors),
-    * so big K routes through [[Selection.topKThresholdCut]] — the
-    * spec-pinned row-identical, bounded-memory valve (guide §5; the
-    * `value_quantiles` r20 precedent). Same (key, id) total order, same
-    * NULLS-LAST behavior (the cut's widening fallback keeps null-key
-    * rows when K outruns the non-null count). */
-  private def shortlistTopK(df: DataFrame, keyCol: String, idCol: String,
-      k: Long): DataFrame =
-    if (k <= Selection.TopKMergeCap)
-      df.orderBy(col(keyCol).desc, col(idCol)).limit(k.toInt)
-    else Selection.topKThresholdCut(df, keyCol, idCol,
-      math.min(k, Int.MaxValue.toLong).toInt)
-
   def topKMrl(embeddings: DataFrame, query: Seq[Float], k: Int,
       kDims: Int = 16, overscan: Int = 4,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     require(kDims > 0 && query.length >= kDims && overscan >= 1)
-    val qPre = query.take(kDims)
-    val qp = array(qPre.map(v => lit(v)): _*)
-    val qf = array(query.map(v => lit(v)): _*)
     val pre = slice(col(vecCol), 1, kDims)
-    val pn = norm(pre)
-    shortlistTopK(embeddings
-      .select(col(idCol), col(vecCol),
-        when(pn === 0d, lit(null).cast("double"))
-          .otherwise(Quantize.quantize(dot(pre, qp) / (pn * lit(normOf(qPre))), 6))
-          .as("__pc")),
+    val shortlist = Selection.topKBy(embeddings.select(col(idCol), col(vecCol),
+        cosToQueryGuarded(pre, norm(pre), query.take(kDims)).as("__pc")),
       "__pc", idCol, k.toLong * overscan)
-      .select(col(idCol),
-        // same zero-norm guard as the prefix leg: a zero-norm vector can
-        // reach the shortlist (tiny corpus, or the *_full bridge where the
-        // shortlist is everything), and the unguarded rerank division
-        // would yield null silently or abort under ANSI
-        when(norm(col(vecCol)) === 0d, lit(null).cast("double"))
-          .otherwise(Quantize.quantize(dot(col(vecCol), qf) /
-            (norm(col(vecCol)) * lit(normOf(query))), 6))
-          .as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+    // same zero-norm guard as the prefix leg: a zero-norm vector can
+    // reach the shortlist (tiny corpus, or the *_full bridge where the
+    // shortlist is everything)
+    Selection.topKBy(shortlist.select(col(idCol),
+        cosToQueryGuarded(col(vecCol), norm(col(vecCol)), query).as("cos")),
+      "cos", idCol, k)
   }
 
   /**
@@ -260,14 +239,11 @@ object Similarity {
         else base +: (0 until bits).map(b => base ^ (1L << b))
       col("table") === tt && col("bucket").isin(buckets.map(_.asInstanceOf[Any]): _*)
     }.reduce(_ || _)
-    val q = array(query.map(v => lit(v)): _*)
     val n = if (index.columns.contains("nrm")) col("nrm") else norm(col(vecCol))
-    index.filter(pred)
+    Selection.topKBy(index.filter(pred)
       .select(col(idCol), col(vecCol), n.as("__n")).dropDuplicates(idCol)
-      .select(col(idCol),
-        Quantize.quantize(dot(col(vecCol), q) / (col("__n") * lit(normOf(query))), 6).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+      .select(col(idCol), cosToQuery(col(vecCol), col("__n"), query).as("cos")),
+      "cos", idCol, k)
   }
 
   /** Probe-ALL top-k through an LSH index: dedup ids across table replicas,
@@ -277,12 +253,10 @@ object Similarity {
   def topKLshAll(index: DataFrame, query: Seq[Float], k: Int,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     val n = if (index.columns.contains("nrm")) col("nrm") else norm(col(vecCol))
-    val q = array(query.map(v => lit(v)): _*)
-    index.select(col(idCol), col(vecCol), n.as("__n")).dropDuplicates(idCol)
-      .select(col(idCol),
-        Quantize.quantize(dot(col(vecCol), q) / (col("__n") * lit(normOf(query))), 6).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+    Selection.topKBy(index
+      .select(col(idCol), col(vecCol), n.as("__n")).dropDuplicates(idCol)
+      .select(col(idCol), cosToQuery(col(vecCol), col("__n"), query).as("cos")),
+      "cos", idCol, k)
   }
 
   /**
@@ -584,14 +558,12 @@ object Similarity {
   def topKIvf(index: IvfIndex, query: Seq[Float], k: Int, nProbe: Int = 4,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     val probed = probeCells(index, query, nProbe)
-    val q = array(query.map(v => lit(v)): _*)
     val n = if (index.assignments.columns.contains("nrm")) col("nrm")
       else norm(col(vecCol)) // pre-norm-column assignments tables
-    index.assignments.filter(col("cell").isin(probed.map(_.asInstanceOf[Any]): _*))
-      .select(col(idCol),
-        Quantize.quantize(dot(col(vecCol), q) / (n * lit(normOf(query))), 6).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+    Selection.topKBy(index.assignments
+      .filter(col("cell").isin(probed.map(_.asInstanceOf[Any]): _*))
+      .select(col(idCol), cosToQuery(col(vecCol), n, query).as("cos")),
+      "cos", idCol, k)
   }
 
   /**
@@ -813,32 +785,20 @@ object Similarity {
       checkpointDir: Option[String] = None): DataFrame = {
     require(kDims > 0 && query.length >= kDims && overscan >= 1)
     requirePrefixWidth(prefixes, kDims)
-    val qPre = query.take(kDims)
-    val qp = array(qPre.map(v => lit(v)): _*)
-    val qf = array(query.map(v => lit(v)): _*)
-    val shortlist = prefixes
-      .select(col(idCol),
-        when(col("pnrm") === 0d, lit(null).cast("double"))
-          .otherwise(Quantize.quantize(
-            dot(col("prefix"), qp) / (col("pnrm") * lit(normOf(qPre))), 6))
-          .as("__pc"))
-      .orderBy(col("__pc").desc, col(idCol))
-      .limit(k * overscan)
+    val shortlist = Selection.topKBy(prefixes.select(col(idCol),
+        cosToQueryGuarded(col("prefix"), col("pnrm"), query.take(kDims)).as("__pc")),
+      "__pc", idCol, k.toLong * overscan)
       .select(col(idCol))
     // rerank reads ONLY the shortlist's row groups, and the route
     // executes exactly once (materializeShortlist)
     val (localSl, idFilter) = materializeShortlist(shortlist, idCol,
       checkpointDir = checkpointDir)
     val base = corpus.select(col(idCol), col(vecCol))
-    localSl
+    Selection.topKBy(localSl
       .join(idFilter.map(base.filter).getOrElse(base), idCol)
       .select(col(idCol),
-        when(norm(col(vecCol)) === 0d, lit(null).cast("double"))
-          .otherwise(Quantize.quantize(dot(col(vecCol), qf) /
-            (norm(col(vecCol)) * lit(normOf(query))), 6))
-          .as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+        cosToQueryGuarded(col(vecCol), norm(col(vecCol)), query).as("cos")),
+      "cos", idCol, k)
   }
 
   /**
@@ -871,7 +831,7 @@ object Similarity {
           .otherwise(Quantize.quantize(
             dot(col("prefix"), col("__qp")) / (col("pnrm") * col("__qpn")), 6))
           .as("cos"))
-    val shortlist = topKPerQuery(routed, k * overscan, idCol, qIdCol)
+    val shortlist = topKPerQuery(routed, heapShortlistK(k, overscan), idCol, qIdCol)
       .select(col(qIdCol), col(idCol))
     // route executes once + rerank scan prunes to the shortlist's row
     // groups (see materializeShortlist)
@@ -917,8 +877,8 @@ object Similarity {
    * first-`kDims` prefix cosine (d/kDims× fewer floats in the dot
    * kernel — flops, not IO; see [[topKMrl]]'s slice caveat), and
    * the k·overscan shortlist reranks exactly full-dim via the index's
-   * persisted `nrm`. Both shortlist passes ride the TakeOrdered
-   * per-partition-heap + driver-merge shape — never a global sort.
+   * persisted `nrm`. Both shortlist passes are [[Selection.topKBy]] —
+   * never a global sort.
    * `nProbe = nCells` AND overscan covering the corpus degrade EXACTLY
    * to brute force — the hash-verified `sim_topk_mrl_ivf_full` bridge.
    * Zero-norm prefixes route to an explicit null (sorting last under
@@ -930,27 +890,17 @@ object Similarity {
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     require(kDims > 0 && query.length >= kDims && overscan >= 1)
     val probed = probeCells(index, query, nProbe)
-    val qPre = query.take(kDims)
-    val qp = array(qPre.map(v => lit(v)): _*)
-    val qf = array(query.map(v => lit(v)): _*)
     val pre = slice(col(vecCol), 1, kDims)
-    val pn = norm(pre)
     val n = if (index.assignments.columns.contains("nrm")) col("nrm")
       else norm(col(vecCol))
-    shortlistTopK(index.assignments
+    val shortlist = Selection.topKBy(index.assignments
       .filter(col("cell").isin(probed.map(_.asInstanceOf[Any]): _*))
       .select(col(idCol), col(vecCol), n.as("__n"),
-        when(pn === 0d, lit(null).cast("double"))
-          .otherwise(Quantize.quantize(dot(pre, qp) / (pn * lit(normOf(qPre))), 6))
-          .as("__pc")),
+        cosToQueryGuarded(pre, norm(pre), query.take(kDims)).as("__pc")),
       "__pc", idCol, k.toLong * overscan)
-      .select(col(idCol),
-        when(col("__n") === 0d, lit(null).cast("double"))
-          .otherwise(Quantize.quantize(dot(col(vecCol), qf) /
-            (col("__n") * lit(normOf(query))), 6))
-          .as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+    Selection.topKBy(shortlist.select(col(idCol),
+        cosToQueryGuarded(col(vecCol), col("__n"), query).as("cos")),
+      "cos", idCol, k)
   }
 
   /**
@@ -1140,7 +1090,7 @@ object Similarity {
           .otherwise(Quantize.quantize(
             dot(col("__cp"), col("__qp")) / (col("__cpn") * col("__qpn")), 6))
           .as("cos"))
-    val shortlist = topKPerQuery(routed, k * overscan, idCol, qIdCol)
+    val shortlist = topKPerQuery(routed, heapShortlistK(k, overscan), idCol, qIdCol)
       .select(col(qIdCol), col(idCol))
     val cn = if (index.assignments.columns.contains("nrm")) col("nrm")
       else norm(col(vecCol))
@@ -1210,7 +1160,7 @@ object Similarity {
           .otherwise(Quantize.quantize(
             dot(col("__cp"), col("__qp")) / (col("__cpn") * col("__qpn")), 6))
           .as("cos"))
-    val shortlist = topKPerQuery(routed, k * overscan, idCol, qIdCol)
+    val shortlist = topKPerQuery(routed, heapShortlistK(k, overscan), idCol, qIdCol)
       .select(col(qIdCol), col(idCol))
     val (localSl, idFilter) = materializeShortlist(shortlist, idCol,
       checkpointDir = checkpointDir)
@@ -1226,6 +1176,15 @@ object Similarity {
             dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")), 6))
           .as("cos"))
     topKPerQuery(reranked, k, idCol, qIdCol)
+  }
+
+  /** A batch join's per-query shortlist size `k · overscan`, which the
+    * `struct_topk` heap takes as an Int: an overflowing product must fail
+    * here, not wrap to a silently empty (or negative) shortlist. */
+  private def heapShortlistK(k: Int, overscan: Int): Int = {
+    require(k.toLong * overscan <= Int.MaxValue,
+      s"k * overscan = ${k.toLong * overscan} exceeds the per-query heap's Int range")
+    k * overscan
   }
 
   /** Deterministic per-query top-k: `struct_topk` heap aggregation keyed
@@ -1421,7 +1380,16 @@ object Similarity {
    * brute force).
    */
   def topKPq(encoded: DataFrame, model: PqModel, query: Seq[Float], k: Int,
-      idCol: String = "vec_id"): DataFrame = {
+      idCol: String = "vec_id"): DataFrame =
+    Selection.topKBy(adcScores(encoded, model, query, idCol),
+      "approx_cos", idCol, k)
+
+  /** (id, approx_cos) ADC scores of every encoded row against `query` —
+    * [[topKPq]]'s scan, which the rescored serves cut at `k · overscan`
+    * (a corpus-fraction shortlist size: [[Selection.topKBy]] keeps it
+    * off the single-point merge above the cap). */
+  private def adcScores(encoded: DataFrame, model: PqModel,
+      query: Seq[Float], idCol: String): DataFrame = {
     val qn = normOf(query)
     val qUnit = (if (qn > 0) query.map(v => (v / qn).toFloat) else query).toArray
     val sub = model.dim / model.m
@@ -1438,11 +1406,8 @@ object Similarity {
     // probe, and the HOF formulation it replaces evaluated interpreted
     // per row. Same double accumulation in subspace order → bit-identical.
     val d2 = graft.plans.VectorExpressions.pqAdc(col("codes"), tableLit)
-    // k can be a corpus-fraction shortlist size (the rescored serves pass
-    // k·overscan) — route through the cap-guarded selector
-    shortlistTopK(encoded.select(col(idCol),
-        Quantize.quantize(lit(1) - d2 / 2, 6).as("approx_cos")),
-      "approx_cos", idCol, k.toLong)
+    encoded.select(col(idCol),
+      Quantize.quantize(lit(1) - d2 / 2, 6).as("approx_cos"))
   }
 
   /**
@@ -1458,8 +1423,8 @@ object Similarity {
   def topKPqRescored(encoded: DataFrame, embeddings: DataFrame, model: PqModel,
       query: Seq[Float], k: Int, overscan: Int = 10,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val shortlist = topKPq(encoded, model, query, k * overscan, idCol)
-      .select(col(idCol))
+    val shortlist = Selection.topKBy(adcScores(encoded, model, query, idCol),
+      "approx_cos", idCol, k.toLong * overscan).select(col(idCol))
     topK(embeddings.join(broadcast(shortlist), idCol), query, k, vecCol, idCol)
   }
 
@@ -1522,8 +1487,9 @@ object Similarity {
       }
       (c, d2)
     }.sortBy { case (c, d) => (d, c) }.take(nProbe).map(_._1)
-    val shortlist = topKPq(cellCodes.filter(col("cell").isin(probed: _*)),
-      pq, query, k * overscan, idCol).select(col(idCol))
+    val shortlist = Selection.topKBy(
+      adcScores(cellCodes.filter(col("cell").isin(probed: _*)), pq, query, idCol),
+      "approx_cos", idCol, k.toLong * overscan).select(col(idCol))
     topK(embeddings.join(broadcast(shortlist), idCol), query, k, vecCol, idCol)
   }
 
@@ -1614,7 +1580,7 @@ object Similarity {
       queries: DataFrame, model: PqModel, k: Int, overscan: Int = 10,
       vecCol: String = "embedding", idCol: String = "vec_id",
       qIdCol: String = "q_id"): DataFrame = {
-    val shortlist = topKJoinPq(encoded, queries, model, k * overscan,
+    val shortlist = topKJoinPq(encoded, queries, model, heapShortlistK(k, overscan),
       idCol = idCol, qIdCol = qIdCol).select(col(qIdCol), col(idCol))
     // exact rescoring of exactly the shortlisted (query, candidate) pairs
     val c = embeddings.select(col(idCol), col(vecCol).as("__cv"),
@@ -1685,7 +1651,7 @@ object Similarity {
     val d2 = graft.plans.VectorExpressions.pqAdc(col("codes"), col("__tbl"))
     val scored = cellCodes.join(broadcast(probes), "cell")
       .select(col(qIdCol), col(idCol), Quantize.quantize(lit(1) - d2 / 2, 6).as("cos"))
-    val shortlist = topKPerQuery(scored, k * overscan, idCol, qIdCol)
+    val shortlist = topKPerQuery(scored, heapShortlistK(k, overscan), idCol, qIdCol)
       .select(col(qIdCol), col(idCol))
     // exact rescoring of exactly the shortlisted (query, candidate) pairs
     // — the valve hints the shortlist side explicitly (|Q|·k·overscan
@@ -2146,10 +2112,9 @@ object Similarity {
    */
   def topKInt8(embeddings: DataFrame, query: Seq[Float], k: Int,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
-    embeddings
+    Selection.topKBy(embeddings
       .select(col(idCol), Quantize.q6(graft.plans.VectorExpressions.int8DequantCos(
-        col(vecCol), query.map(_.toDouble))).as("cos"))
-      .orderBy(col("cos").desc, col(idCol)).limit(k)
+        col(vecCol), query.map(_.toDouble))).as("cos")), "cos", idCol, k)
 
   /** The original higher-order-function formulation of [[topKInt8]]'s
     * scoring — interpreted per element (~11 s at the 128× sweep vs ~1 s
@@ -2165,7 +2130,7 @@ object Similarity {
     def code(v: Column, s: Column): Column =
       when(s === 0d, lit(0d)).otherwise(greatest(least(
         floor(v.cast("double") / s + lit(0.5)), lit(127d)), lit(-127d)))
-    embeddings
+    Selection.topKBy(embeddings
       .select(col(idCol), col(vecCol), Quantize.q6(amax / lit(127d)).as("__s"))
       .select(col(idCol),
         zip_with(col(vecCol), qArr, (v, qd) => code(v, col("__s")) * col("__s") * qd)
@@ -2175,8 +2140,8 @@ object Similarity {
         aggregate(col("__c"), lit(0d), _ + _).as("__dot"),
         aggregate(transform(col("__d"), d => d * d), lit(0d), _ + _).as("__n2"))
       .select(col(idCol), Quantize.q6(
-        col("__dot") / (sqrt(col("__n2")) * lit(normOf(query)))).as("cos"))
-      .orderBy(col("cos").desc, col(idCol)).limit(k)
+        col("__dot") / (sqrt(col("__n2")) * lit(normOf(query)))).as("cos")),
+      "cos", idCol, k)
   }
 
   def quantizeInt8(embeddings: DataFrame,

@@ -100,6 +100,19 @@ class IngestJobSinkSpec extends AnyFunSuite {
     assert(vals3.filter(col("date") === "2022-02").head.getAs[Double]("value") == 7.5)
   }
 
+  test("per-file stats line is valid JSON for any file path") {
+    val file = "in/we\"ird\\name\u0001.csv"
+    val r = IngestJob.FileResult(file, 1L, 2L, 3L, 4L)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    for (batch <- Seq(None, Some(7L))) {
+      val m = mapper.readTree(IngestJob.statsJson(r, batch))
+      assert(m.get("file").asText == file)
+      assert(Seq("created", "replaced", "unchanged", "metadata_rows")
+        .map(m.get(_).asLong) == Seq(1L, 2L, 3L, 4L))
+      assert(Option(m.get("batch")).map(_.asLong) == batch)
+    }
+  }
+
   test("document sink: envelope shape, 500-chunking, retry on flaky transport") {
     RecordingTransport.reset()
     RecordingTransport.failuresToInject = 2

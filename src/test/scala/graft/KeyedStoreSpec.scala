@@ -99,37 +99,6 @@ class KeyedStoreSpec extends AnyFunSuite {
     assert(v.head.getAs[String]("station_id") == "39.2" && v.head.getAs[Long]("n") == 2L)
   }
 
-  test("pruneExisting narrows the store to the increment envelope") {
-    val pruned = KeyedStore.pruneExisting(existing, incoming, Seq("datatype", "period", "fill"))
-    assert(pruned.count() == existing.count()) // same slice here
-    import spark.implicits._
-    val otherInc = incoming.withColumn("datatype", lit("rainfall"))
-    assert(KeyedStore.pruneExisting(existing, otherInc, Seq("datatype")).count() == 0)
-  }
-
-  test("pruneExisting: null statics and null dates stay in the slice (null-safe pruning)") {
-    import spark.implicits._
-    val ex = Seq(("a", "2022-01-01", 1), (null, "2022-01-02", 2),
-      ("a", null, 3), (null, null, 4), ("b", "2022-01-01", 5))
-      .toDF("fill", "date", "v")
-    // increment carries fill=null and a null date: the matching existing
-    // rows must survive pruning or the merge re-creates their keys
-    val incNull = Seq((null.asInstanceOf[String], "2022-01-02", 20),
-      ("a", null.asInstanceOf[String], 30)).toDF("fill", "date", "v")
-    val kept = KeyedStore.pruneExisting(ex, incNull, Seq("fill")).collect()
-      .map(_.getAs[Int]("v")).toSet
-    // the envelope is CONJUNCTIVE (static-set ∧ date-range, each
-    // independently null-admitting), so (null,null) also stays — an
-    // over-approximation is sound; dropping a null-keyed match is not
-    assert(kept == Set(2, 3, 4), s"got $kept")
-    // empty staticKeys = date-bounds-only pruning (used to throw on
-    // the inner empty reduce)
-    val dateOnly = KeyedStore.pruneExisting(ex,
-      Seq(("x", "2022-01-01", 0)).toDF("fill", "date", "v"), Seq.empty).collect()
-      .map(_.getAs[Int]("v")).toSet
-    assert(dateOnly == Set(1, 5))
-  }
-
   test("dedupIncrement: key-only increment dedups via distinct, no unordered window") {
     import spark.implicits._
     val keyOnly = Seq(("s1", "d1"), ("s1", "d1"), ("s2", "d1"))

@@ -208,8 +208,9 @@ class PlanLintSpec extends AnyFunSuite {
       SparkTestBase.planSeq(df.queryExecution.executedPlan)
         .filter(_.isInstanceOf[TakeOrderedAndProjectExec])
     }
-    val valve = graft.operators.Selection.sampleWeighted(
-      d, col("n_chars"), k = 64, mergeCap = -1)
+    val valve = graft.operators.Selection.topKThresholdCut(
+      graft.operators.Selection.sampleWeighted(d, col("n_chars"), d.count().toInt),
+      "ares_key", "doc_id", 64)
     assert(takeOrdered(valve).isEmpty,
       "above-cap selection still plans a TakeOrdered single-point merge")
     // positive control: the below-cap path genuinely plans the node this
@@ -273,7 +274,7 @@ class PlanLintSpec extends AnyFunSuite {
     "events_asof_sliced" -> "sliced as-of: same traversal, hot-key valve",
     "events_sessions" -> "session ids are a lag-over-time-per-device contract",
     "events_gaps" -> "gaps-and-islands spans are lag-per-device by definition",
-    "dedup_substr" -> "suffix-window kernel: per-doc positional scan, rank form retained as the declared A/B ladder rung",
+    "dedup_substr" -> "suffix-window kernel: per-doc positional scan",
     "dedup_substr_bridge" -> "row-local window kernels over per-doc positions (cut spans), not a per-key rank of the corpus",
     "dedup_substr_inc" -> "same row-local positional kernels on the increment",
     "events_asof_fwd" -> "forward as-of: per-device event-time traversal",
@@ -366,14 +367,39 @@ class PlanLintSpec extends AnyFunSuite {
     assert(windowNodes(SparkEntry.queries("paginate_after")(spark, sfDir)).isEmpty)
   }
 
+  /** Limits of the TakeOrderedAndProject nodes above
+    * [[graft.operators.Selection.TopKMergeCap]] — the 2k-slot per-task
+    * buffer and single-point merge that `Selection.topKBy` keeps off
+    * every plan. */
+  private def overCapTakeOrdered(plan: org.apache.spark.sql.execution.SparkPlan): Seq[Int] =
+    SparkTestBase.planSeq(plan).collect {
+      case t: org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+          if t.limit > graft.operators.Selection.TopKMergeCap => t.limit
+    }
+
+  test("positive control: the over-cap TakeOrdered probe finds one in an unexecuted plan") {
+    import org.apache.spark.sql.functions.col
+    val cap = graft.operators.Selection.TopKMergeCap
+    // the range must outsize the limit: the optimizer drops a limit that
+    // bounds nothing (a 10-row range plans a bare Sort)
+    val df = spark.range(2L * cap).orderBy(col("id").desc).limit(cap + 1)
+    assert(overCapTakeOrdered(df.queryExecution.executedPlan) == Seq(cap + 1))
+  }
+
+  /** One walk over the whole inventory checks both plan-shape bans, so
+    * the suite plans it once: no CartesianProductExec, and no
+    * TakeOrderedAndProject above the merge cap. */
   test("no declared query plans a CartesianProductExec") {
     val sfDir = "/root/testdata/sf0.001"
     val violations = scala.collection.mutable.ArrayBuffer[String]()
+    val overCap = scala.collection.mutable.ArrayBuffer[String]()
     val errors = scala.collection.mutable.ArrayBuffer[String]()
     for ((name, fn) <- SparkEntry.queries if !bruteForceBaselines(name)) {
       try {
-        val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
-        if (plan.contains("CartesianProduct")) violations += name
+        val plan = fn(spark, sfDir).queryExecution.executedPlan
+        if (plan.toString.contains("CartesianProduct")) violations += name
+        val limits = overCapTakeOrdered(plan)
+        if (limits.nonEmpty) overCap += s"$name (${limits.mkString(",")})"
       } catch {
         case scala.util.control.NonFatal(e) =>
           errors += s"$name: ${e.getMessage}"
@@ -382,5 +408,8 @@ class PlanLintSpec extends AnyFunSuite {
     assert(errors.isEmpty, s"queries failed to plan at sf0.001:\n${errors.mkString("\n")}")
     assert(violations.isEmpty,
       s"CartesianProductExec planned by: ${violations.mkString(", ")}")
+    assert(overCap.isEmpty,
+      "TakeOrderedAndProject above Selection.TopKMergeCap (route the top-k " +
+        s"through Selection.topKBy) planned by: ${overCap.mkString(", ")}")
   }
 }

@@ -243,25 +243,27 @@ class SelectionSpec extends AnyFunSuite {
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), length(col("text")).as("n_chars"))
     val n = d.count()
+    // the scored frame sampleWeighted selects from: at k = n its output
+    // is every (doc_id, w, ares_key) row
+    val scored = Selection.sampleWeighted(d, col("n_chars"), n.toInt)
     for (k <- Seq(1, 7, 64, 500, n.toInt + 100)) {
       def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSet
       val base = rows(Selection.sampleWeighted(d, col("n_chars"), k))
-      val valve = rows(Selection.sampleWeighted(d, col("n_chars"), k,
-        mergeCap = -1))
+      val valve = rows(Selection.topKThresholdCut(scored, "ares_key", "doc_id", k))
       assert(valve == base, s"valve diverged from TakeOrdered at k=$k")
       assert(base.size == math.min(k.toLong, n))
     }
     // k <= 0: empty through the valve too
-    assert(Selection.sampleWeighted(d, col("n_chars"), 0, mergeCap = -1)
+    assert(Selection.topKThresholdCut(scored, "ares_key", "doc_id", 0)
       .count() == 0)
-    // dsirTopK rides the same valve over its quantized weight key
+    // dsirTopK's selection over its quantized weight key, through the valve
     val docs2 = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"), col("lang"))
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.getLong(0)).toSet
-    assert(ids(Selection.dsirTopK(docs2, col("lang") === "en", 25,
-        mergeCap = -1)) ==
+    assert(ids(Selection.topKThresholdCut(
+        Selection.dsirWeights(docs2, col("lang") === "en"), "weight", "doc_id", 25)) ==
       ids(Selection.dsirTopK(docs2, col("lang") === "en", 25)))
   }
 

@@ -1,23 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source lint: every main builds its session through [[GraftSession]], so
   * the session settings cannot drift apart again. Comments are ignored. */
 class SessionLintSpec extends AnyFunSuite {
 
-  private val mainRoot = Paths.get("src/main/scala")
-
-  /** (file, source with comments blanked) for every main Scala file. */
-  private lazy val sources: Seq[(Path, String)] = {
-    val s = Files.walk(mainRoot)
-    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
-      .map(p => p -> new String(Files.readAllBytes(p), "UTF-8")
-        .replaceAll("(?s)/\\*.*?\\*/", " ").replaceAll("(?<!:)//[^\n]*", " "))
-    finally s.close()
-  }
+  private def sources = MainSources.all
 
   test("main sources are present") {
     assert(sources.exists(_._1.getFileName.toString == "GraftSession.scala"))

@@ -261,6 +261,35 @@ class TrainingDataOpsSpec extends AnyFunSuite {
       s"query $q lost its self-match through the MRL-IVF join route"))
   }
 
+  test("k · overscan past the Int range: shortlists size in Long, heaps fail loudly") {
+    // 4096 · 2^20 = 2^32, which an Int product wraps to 0 — a limit(0)
+    // shortlist and a silently empty result. Sized in Long it covers the
+    // corpus, so each rescored serve IS brute force.
+    val e = (0L until 200L).map(i =>
+        (i, Array.tabulate(64)(d => math.sin(i * 31.0 + d * 7.0).toFloat).toSeq))
+      .toDF("vec_id", "embedding")
+    val q = e.filter(col("vec_id") === 0).head.getSeq[Float](1)
+    val preDir = java.nio.file.Files.createTempDirectory("mrlpre_ovf").toString
+    Similarity.writeMrlPrefixes(e, 16, preDir)
+    val prefixes = spark.read.parquet(preDir)
+    val model = Similarity.trainPq(e, m = 8, k = 16, iters = 1)
+    val encoded = Similarity.pqEncode(e, model)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getAs[Double]("cos"))).toSeq
+    val exact = rows(Similarity.topK(e, q, k = 4096))
+    assert(exact.length == 200)
+    assert(rows(Similarity.topKMrlPre(prefixes, e, q, k = 4096, kDims = 16,
+      overscan = 1 << 20)) == exact)
+    assert(rows(Similarity.topKPqRescored(encoded, e, model, q, k = 4096,
+      overscan = 1 << 20)) == exact)
+    // the per-query heap takes an Int k: the overflowing product is an error
+    val queries = e.filter(col("vec_id") < 2)
+      .select(col("vec_id").as("q_id"), col("embedding"))
+    assertThrows[IllegalArgumentException] {
+      Similarity.topKJoinMrl(e, queries, k = 4096, kDims = 16, overscan = 1 << 20)
+    }
+  }
+
   test("MRL persisted-prefix serving: pre forms equal their column twins and the exact bridges") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val corpus = e.filter(col("vec_id") < 300)
