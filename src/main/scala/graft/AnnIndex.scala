@@ -12,10 +12,10 @@ import graft.operators.Similarity.{IvfIndex, PqModel}
  * `quality_logreg_inc` (trained quality model) serve from.
  *
  * WHY: an ANN deployment trains its models and lays out its index ONCE
- * (then grows it incrementally — [[Similarity.growCellCodes]] /
- * [[Similarity.assignToCells]]); queries only PROBE. A benchmark whose
- * every `sim_topk_*` invocation re-runs two k-means trainings before a
- * 5-query probe measures training, not serving — and the triad of
+ * (then grows it incrementally — [[growServingLayout]]); queries only
+ * PROBE. A benchmark whose every `sim_topk_*` invocation re-runs two
+ * k-means trainings before a 5-query probe measures training, not
+ * serving — and the triad of
  * ivfpq queries would train the same models three times over. This
  * object is the Fixtures-style bridge: the first query against a data
  * directory builds every artifact through the library's own persist
@@ -469,8 +469,9 @@ object AnnIndex {
    * Retrain-free growth of EVERY artifact in a [[buildServingLayout]]
    * layout with one increment: assignments via
    * [[Similarity.assignToCells]], codes via [[Similarity.pqEncode]],
-   * the IVF-PQ relation via [[Similarity.growCellCodes]], prefixes via
-   * [[Similarity.growMrlPrefixes]] (which also guards the width) — each
+   * the IVF-PQ relation by [[Similarity.buildCellCodes]] over those two,
+   * prefixes via [[Similarity.growMrlPrefixes]] (which also guards the
+   * width) — each
    * appended under the EXISTING models, so (spec-pinned, per artifact
    * and composed) growing equals rebuilding the relation over the grown
    * corpus under those models, and every serve sees the grown corpus.
@@ -546,26 +547,19 @@ object AnnIndex {
     // it needs a transactional table format); recovery for that case is
     // [[buildServingLayout]] from the source corpus.
     val incId = incrementKey(inc, idCol = "vec_id")
-    val conf = spark.sparkContext.hadoopConfiguration
-    def appendOnce(rel: String)(write: => Unit): Unit = {
-      val marker = new org.apache.hadoop.fs.Path(
-        s"$path/$rel/_graft_inc_applied_$incId")
-      val fs = marker.getFileSystem(conf)
-      if (!fs.exists(marker)) { write; fs.create(marker, false).close() }
-    }
-    appendOnce("ivf/assignments") {
+    IncProtocol.appendOnce(spark, s"$path/ivf/assignments", incId) {
       assigned.write.mode("append").partitionBy("cell")
         .parquet(s"$path/ivf/assignments")
     }
-    appendOnce("pq/codes") {
+    IncProtocol.appendOnce(spark, s"$path/pq/codes", incId) {
       encoded.write.mode("append").parquet(s"$path/pq/codes")
     }
-    appendOnce("cellcodes") {
+    IncProtocol.appendOnce(spark, s"$path/cellcodes", incId) {
       Similarity.buildCellCodes(
           Similarity.IvfIndex(assigned, ivf.centroids), encoded)
         .write.mode("append").partitionBy("cell").parquet(s"$path/cellcodes")
     }
-    appendOnce("prefixes") {
+    IncProtocol.appendOnce(spark, s"$path/prefixes", incId) {
       Similarity.growMrlPrefixes(inc, kDims, s"$path/prefixes")
     }
   }
@@ -608,18 +602,13 @@ object AnnIndex {
     * build so a retry of that increment (which sees the layout existing
     * and routes to [[growServingLayout]]) skips the rows the build
     * already contains instead of double-appending them. Same key, same
-    * marker convention as [[growServingLayout]]'s appendOnce. */
+    * [[IncProtocol.appendOnce]] markers as [[growServingLayout]]. */
   private[graft] def markLayoutApplied(spark: SparkSession, path: String,
       increment: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
     val incId = incrementKey(increment, idCol, vecCol)
-    val conf = spark.sparkContext.hadoopConfiguration
-    for (rel <- Seq("ivf/assignments", "pq/codes", "cellcodes", "prefixes")) {
-      val marker = new org.apache.hadoop.fs.Path(
-        s"$path/$rel/_graft_inc_applied_$incId")
-      val fs = marker.getFileSystem(conf)
-      if (!fs.exists(marker)) fs.create(marker, false).close()
-    }
+    for (rel <- Seq("ivf/assignments", "pq/codes", "cellcodes", "prefixes"))
+      IncProtocol.appendOnce(spark, s"$path/$rel", incId)(())
   }
 
   def mrl300(spark: SparkSession, sfDir: String): DataFrame = {

@@ -380,7 +380,7 @@ object EmbeddingCurationJob {
     // immutable external set — deterministic on retry)
     val decontaminated = cfg.evalDir match {
       case Some(dir) => Similarity.decontaminateSemantic(deduped,
-        spark.read.parquet(dir), cfg.decontCos, vecCol, idCol)
+        spark.read.parquet(dir), cfg.decontCos, vecCol)
       case None => deduped
     }
     val nDecont = decontaminated.count()

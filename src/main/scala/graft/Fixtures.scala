@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.config.DatasetSpec
 import graft.sources.WideMatrix
@@ -280,25 +279,6 @@ object Fixtures {
       y += 1
     }
     b
-  }
-
-  /** A solid-color 24-bit BMP — the color-duplicate fixture: two solids
-    * with EQUAL integer BT.601 luma but different chroma must match on
-    * the luminance grid and differ on the chroma grids. */
-  def bmpSolid(w: Int, h: Int, r: Int, g: Int, b: Int): Array[Byte] = {
-    val base = bmpBytes(w, h, seed = 0)
-    val rowSize = ((w * 3 + 3) / 4) * 4
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val o = 54 + y * rowSize + x * 3
-        base(o) = b.toByte; base(o + 1) = g.toByte; base(o + 2) = r.toByte
-        x += 1
-      }
-      y += 1
-    }
-    base
   }
 
   /**
@@ -800,7 +780,6 @@ object Fixtures {
     // --- AC refinement of one component's band (Ah = Al+1) ---
     def acRefine(comp: Int, uw: Int, uh: Int, ss: Int, se: Int, al: Int): Unit = {
       sos(Seq(comp + 1), ss, se, al + 1, 0 + al)
-      val p1 = 1 << al
       var unit = 0
       var rsts = 0
       for (by <- 0 until uh; bx <- 0 until uw) {

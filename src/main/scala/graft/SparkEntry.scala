@@ -7,7 +7,6 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import graft.functions.{Quantize, TextFunctions}
 import graft.operators.{Corpus, Dedup, KeyedStore, Multimodal, Reshape, Selection, Similarity, Sketches}
 import graft.sources.WideMatrix
-import graft.streaming.StreamingOps
 
 /**
  * Driver contract — see /root/repo/SURVEY.md §2.11/§7.
@@ -1388,9 +1387,9 @@ object SparkEntry {
         .rangeJoin(clicks, windows, Seq("user_id"), "ts", "wstart", "wend")
         .select(col("event_id"), col("purchase_id"), col("user_id"), col("ts"))
     }),
-    // --- sessionization (gap-based; batch form of the streaming op) ---
+    // --- sessionization (gap-based, session_window semantics) ---
     "events_sessionize" -> ((s, dir) =>
-      StreamingOps.sessionizeBatch(events(s, dir), gapMin = 30)),
+      graft.operators.TimeSeries.sessionizeBatch(events(s, dir), gapMin = 30)),
     // --- data selection: DSIR, NB domain router, A-Res sampling ---
     "dsir_weights" -> ((s, dir) =>
       // target domain = English; weights say how en-like every doc's
@@ -1795,7 +1794,7 @@ object SparkEntry {
 
   /** The full 32-bit hash value (no modulo) — the SQL twin of the rank
     * key behind `Corpus.capPerStratum`. */
-  private def hashValueSql(idCol: String, salt: String = ""): String = {
+  private def hashValueSql(idCol: String, salt: String): String = {
     val id = if (salt.isEmpty) s"CAST($idCol AS VARCHAR)"
       else s"CAST($idCol AS VARCHAR) || '$salt'"
     s"('0x' || substr(md5($id), 1, 8))::BIGINT"

@@ -97,16 +97,6 @@ object TextFunctions {
       }.toSeq
   }
 
-  /** Write a merges table in the same GPT-2 format [[loadBpeMerges]]
-    * reads (version header, rank = line order) — the save half of the
-    * train → save → load → count → budget tokenizer loop. */
-  def saveBpeMerges(merges: Seq[(String, String)], path: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      ("#version: 0.2" +: merges.map { case (a, b) => s"$a $b" }).asJava,
-      java.nio.charset.StandardCharsets.UTF_8)
-  }
-
   /**
    * Distributed BPE merge TRAINING (Sennrich et al. 2016's learning
    * loop) — the piece that closes the tokenizer loop: a pipeline that
@@ -209,18 +199,11 @@ object TextFunctions {
   def fingerprint(text: Column): Column =
     md5(trim(regexp_replace(lower(text), "\\s+", " ")).cast("binary"))
 
-  /** Engine-reproducible 32-bit string hash (md5-prefix long) — for
-    * operators whose SELECTION depends on hash ORDER (winnowing): any
-    * engine that can md5 reproduces not just the match set but the
-    * chosen positions, so the oracle can hash-verify them. */
-  def strHash32(s: Column): Column =
-    conv(substring(md5(s.cast("binary")), 1, 8), 16, 10).cast("long")
-
   /** Ratio helpers — each a single divide over regexp counts.
     * `regexp_count` counts matches WITHOUT materializing them as an array
     * (`size(regexp_extract_all(...))` allocates every match string first —
     * same value, measurably slower on long documents). */
-  private def countMatches(text: Column, pattern: String): Column =
+  private[functions] def countMatches(text: Column, pattern: String): Column =
     regexp_count(text, lit(pattern))
 
   /**
@@ -231,7 +214,8 @@ object TextFunctions {
   def qualityColumns(text: Column): Seq[(String, Column)] = {
     // ONE codegen'd byte-scan kernel for all five counters; referencing
     // the same Column per field lets subexpression elimination evaluate
-    // it once per row. Spec-pinned bit-identical to [[qualityColumnsRegex]].
+    // it once per row. Spec-pinned bit-identical to the
+    // regex form (`TextOracles.qualityColumnsRegex`).
     val sig = graft.plans.TextExpressions.qualitySignals(text)
     val nChars = sig.getField("n_chars")
     val nTok = sig.getField("n_tokens")
@@ -244,27 +228,6 @@ object TextFunctions {
         greatest(nChars, lit(1L)), 6),
       "mean_token_len" -> Quantize.quantize(sig.getField("n_alnum").cast("double") /
         greatest(nTok, lit(1L)), 6))
-  }
-
-  /** The five-regex-engine formulation [[qualityColumns]] replaced —
-    * kept as the spec oracle pinning the [[graft.plans.QualitySignals]]
-    * kernel (and the shape the DuckDB oracle SQL mirrors). */
-  private[graft] def qualityColumnsRegex(text: Column): Seq[(String, Column)] = {
-    val nChars = length(text).cast("long")
-    // size(tokens(..)), NOT tokenCount: tokenCount routes through the
-    // QualitySignals kernel this formulation exists to pin — the oracle
-    // must share no code with the kernel under test. (size → -1 on null
-    // input; the when() keeps null text → null like the kernel.)
-    val nTok = when(text.isNull, lit(null).cast("long"))
-      .otherwise(size(tokens(text)).cast("long"))
-    Seq(
-      "n_chars" -> nChars,
-      "n_tokens" -> nTok,
-      "punct_ratio" -> Quantize.quantize(countMatches(text, "[.,;:!?]").cast("double") /
-        greatest(nChars, lit(1L)), 6),
-      "digit_ratio" -> Quantize.quantize(countMatches(text, "[0-9]").cast("double") /
-        greatest(nChars, lit(1L)), 6),
-      "mean_token_len" -> Quantize.quantize(countMatches(lower(text), "[a-z0-9]").cast("double") / greatest(nTok, lit(1L)), 6))
   }
 
   /** Gopher rule-filter stop set (Rae et al. 2021, §A1.1): a document
@@ -298,8 +261,8 @@ object TextFunctions {
    */
   def gopherColumns(text: Column): Seq[(String, Column)] = {
     // ONE codegen'd byte-scan kernel for all eight counters (the regex
-    // formulation below is 15 passes, each decoding UTF-8→UTF-16);
-    // spec-pinned bit-identical to [[gopherColumnsRegex]]
+    // formulation is 15 passes, each decoding UTF-8→UTF-16); spec-pinned
+    // bit-identical to `TextOracles.gopherColumnsRegex`
     val sig = graft.plans.TextExpressions.gopherSignals(text, GopherStopwords)
     gopherColumnsFromSignals(sig)
   }
@@ -329,31 +292,6 @@ object TextFunctions {
       sig.getField("n_bullet_lines"), sig.getField("n_ellipsis_lines"),
       sig.getField("n_alpha_words"), sig.getField("stop_hits"))
 
-  /** The 15-regex-engine formulation [[gopherColumns]] replaced — kept
-    * as the spec oracle pinning the [[graft.plans.GopherSignals]] kernel
-    * (and the shape the DuckDB oracle SQL mirrors). Stop-word boundaries
-    * are spelled as ASCII lookarounds, NOT `\b`: Java's `\b` is
-    * Unicode-word-based where RE2's (= the kernel's, = the DuckDB
-    * oracle's) is ASCII-word-based, so `\bthe\b` would diverge from both
-    * on text like "the中文" — the lookaround spells the RE2 reading in
-    * Java (same engine nuance documented on [[PiiPatterns]]). */
-  private[graft] def gopherColumnsRegex(text: Column): Seq[(String, Column)] = {
-    val nw = "[^ \\t\\n\\r\\f]" // one non-whitespace char, engine-identical
-    val stopHits = GopherStopwords
-      .map(w => when(lower(text).rlike(s"(?<![A-Za-z0-9_])$w(?![A-Za-z0-9_])"), 1L)
-        .otherwise(0L))
-      .reduce(_ + _)
-    assemble(
-      countMatches(text, s"$nw+").cast("long"),
-      countMatches(text, nw).cast("long"),
-      countMatches(text, "(#|\\.\\.\\.|…)").cast("long"),
-      (countMatches(text, "\\n") + lit(1)).cast("long"),
-      countMatches(text, "(^|\\n)[ \\t]*[-*•]").cast("long"),
-      countMatches(text, "(\\.\\.\\.|…)[ \\t]*(\\n|\\z)").cast("long"),
-      countMatches(text, s"$nw*[A-Za-z]$nw*").cast("long"),
-      when(text.isNull, lit(null).cast("long")).otherwise(stopHits))
-  }
-
   /**
    * C4-style line-level cleaning (Raffel et al. 2020 §2.2, public): keep
    * lines ending in terminal punctuation (`[.!?"”]`, trailing blanks
@@ -364,8 +302,8 @@ object TextFunctions {
    * kept-LINE count — deterministic and engine-portable where sentence
    * segmentation is neither). ONE byte-scan kernel
    * ([[graft.plans.C4LineClean]]); the higher-order formulation
-   * [[c4ColumnsHof]] is the spec oracle pinning it (and the shape the
-   * DuckDB SQL mirrors with `list_filter`).
+   * `TextOracles.c4ColumnsHof` is the spec oracle pinning it (and the
+   * shape the DuckDB SQL mirrors with `list_filter`).
    */
   def c4Columns(text: Column): Seq[(String, Column)] = {
     val sig = graft.plans.TextExpressions.c4LineClean(text)
@@ -375,25 +313,10 @@ object TextFunctions {
       "keep" -> sig.getField("keep"))
   }
 
-  /** The higher-order (interpreted-lambda) formulation pinning
-    * [[c4Columns]] — `filter(split(text, '\n'))` with the IDENTICAL
-    * line predicates, reassembled with `array_join`. */
-  private[graft] def c4ColumnsHof(text: Column): Seq[(String, Column)] = {
-    val kept = filter(split(text, "\n"), l =>
-      l.rlike("[.!?\"”][ \\t\\r\\f]*\\z") &&
-        regexp_count(l, lit("[^ \\t\\r\\f]+")) >= 5 &&
-        !lower(l).contains("javascript"))
-    Seq(
-      "clean_text" -> array_join(kept, "\n"),
-      "n_lines_kept" -> size(kept).cast("long"),
-      "keep" -> (size(kept) >= 3 &&
-        !lower(text).contains("lorem ipsum") && !text.contains("{")))
-  }
-
   /** Raw Gopher counters → emitted (signal, verdict) columns — shared by
     * the kernel and regex formulations so the rule arithmetic exists
     * exactly once. */
-  private def assemble(nWords: Column, nNonWs: Column, nSymbol: Column,
+  private[functions] def assemble(nWords: Column, nNonWs: Column, nSymbol: Column,
       nLines: Column, nBullet: Column, nEllipsis: Column,
       nAlphaWords: Column, stopHits: Column): Seq[(String, Column)] = {
     val meanWordLen = Quantize.quantize(
@@ -444,7 +367,7 @@ object TextFunctions {
    * shuffle); precision-critical redaction (names, addresses) needs a
    * model pass and is out of scope here.
    *
-   * Known cross-engine nuance (see [[langIdRegex]]): `\b` is
+   * Known cross-engine nuance (see `TextOracles.langIdRegex`): `\b` is
    * ASCII-word-based in RE2/DuckDB but Unicode-word-based in Java, so a
    * digit run glued to a Unicode letter ("é123456789") redacts under
    * the oracle's engine and not under Spark's. The shared-pattern
@@ -494,12 +417,6 @@ object TextFunctions {
     graft.plans.TextExpressions.chainedRegexReplace(
       translate(text, FoldFrom, FoldTo), NormalizePatterns)
 
-  /** Folded form of [[normalizeText]] — spec oracle for the chain. */
-  private[graft] def normalizeTextFolded(text: Column): Column =
-    NormalizePatterns.foldLeft(translate(text, FoldFrom, FoldTo)) {
-      case (c, (pat, repl)) => regexp_replace(c, lit(pat), lit(repl))
-    }
-
   /**
    * Markup-strip chain, applied in order: (pattern, replacement) —
    * RE2-compatible like [[PiiPatterns]]/[[NormalizePatterns]] so the
@@ -544,17 +461,6 @@ object TextFunctions {
     graft.plans.TextExpressions.chainedRegexReplace(text,
       PiiPatterns.map { case (_, pat, repl) => (pat, repl) })
 
-  /** Folded-regexp_replace forms of [[stripMarkup]] / [[redactPii]] —
-    * kept as the spec oracles pinning [[graft.plans.ChainedRegexReplace]]. */
-  private[graft] def stripMarkupFolded(text: Column): Column =
-    MarkupPatterns.foldLeft(text) { case (c, (pat, repl)) =>
-      regexp_replace(c, lit(pat), lit(repl))
-    }
-  private[graft] def redactPiiFolded(text: Column): Column =
-    PiiPatterns.foldLeft(text) { case (c, (_, pat, repl)) =>
-      regexp_replace(c, lit(pat), lit(repl))
-    }
-
   /** Per-pattern audit counts (`n_<name>` columns): how many matches each
     * redaction stage ACTUALLY replaced. Pattern i is counted on the text
     * with patterns 0..i-1 already applied — the same prefix its
@@ -590,45 +496,9 @@ object TextFunctions {
    */
   def langId(text: Column): Column =
     // One codegen'd byte-scan decision ([[graft.plans.LangIdDecide]]) —
-    // spec-pinned bit-identical to [[langIdRegex]] below (the regex +
+    // spec-pinned bit-identical to `TextOracles.langIdRegex` (the regex +
     // interpreted-fold formulation this replaced; the DuckDB oracle
     // keeps the per-language regex form — hash parity proves all three
     // agree).
     graft.plans.TextExpressions.langIdDecide(text, StopwordSets)
-
-  /** The regex formulation [[langId]] replaced — kept as the spec oracle
-    * pinning the [[graft.plans.LangIdDecide]] kernel.
-    *
-    * Boundary semantics, learned the hard way (randomized kernel pin in
-    * PropertySpec): Java's `\b` is NOT the ASCII boundary RE2 uses —
-    * its word set is `Character.isLetterOrDigit || '_'`, so Unicode
-    * letters AND combining marks extend words ("éthe" has no boundary
-    * before "the" in Java; it does in RE2/DuckDB, where `\b` is
-    * `[0-9A-Za-z_]`-based). The declared oracle is DuckDB, so the
-    * engine's contract is the ASCII boundary — the kernel implements
-    * it, and this pin spells it explicitly as ASCII lookarounds
-    * `(?<![a-z0-9_])(w)(?![a-z0-9_])` (legal in Java; RE2 has no
-    * lookbehind, which is why the SQL side writes `\b` and means the
-    * same thing). Winner selection uses SINGLE-LEVEL higher-order
-    * functions only (one `filter` per language over the shared extract,
-    * `array_max` over (hits, −index, lang) structs — max hits,
-    * first-listed on ties, "und" at zero). */
-  private[graft] def langIdRegex(text: Column): Column = {
-    val cjk = countMatches(text, "[\\x{4e00}-\\x{9fff}]")
-    val allWords = StopwordSets.flatMap(_._2).distinct
-    val hitWords = regexp_extract_all(lower(text),
-      lit(s"(?<![a-z0-9_])(${allWords.mkString("|")})(?![a-z0-9_])"), lit(0))
-    val best = array_max(array(StopwordSets.zipWithIndex.map {
-      case ((lang, words), i) =>
-        val hits = size(filter(hitWords,
-          w => array_contains(array(words.map(lit): _*), w)))
-        struct(hits.as("hits"), lit(-i).as("negidx"), lit(lang).as("lang"))
-    }: _*))
-    val decided = when(best.getField("hits") === 0, lit("und"))
-      .otherwise(best.getField("lang"))
-    // null text → null (the kernel's null-intolerant behavior; without
-    // this guard size(filter(null)) feeds the argmax a null hit count)
-    when(text.isNull, lit(null).cast("string"))
-      .when(cjk > 0, lit("zh")).otherwise(decided)
-  }
 }

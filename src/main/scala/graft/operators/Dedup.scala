@@ -121,10 +121,7 @@ object Dedup {
 
   /**
    * The banded signature relation (doc, band, bucket) in long format — the
-   * candidate-generation input. Build ONCE per corpus; at scale persist it
-   * with `writeBandedTable` so every candidate pass (the self-join, incre-
-   * mental probes of new docs against the corpus) starts from co-located
-   * buckets instead of re-hashing 100 TB of text.
+   * candidate-generation input of [[minhashLshPairsFromBanded]].
    */
   def minhashBandedTable(docs: DataFrame, n: Int = 3, numHashes: Int = 16, bands: Int = 4,
       textCol: String = "text", idCol: String = "doc_id",
@@ -150,13 +147,6 @@ object Dedup {
     banded.select(col(idCol), explode(map(
       (0 until bands).flatMap(b => Seq(lit(b), col(s"band_$b"))): _*)).as(Seq("band", "bucket")))
   }
-
-  /** Persist the banded table BUCKETED (+sorted) by (band, bucket): the
-    * candidate self-join over the persisted table then plans with ZERO
-    * shuffle exchange (plan-asserted in TrainingDataOpsSpec) — at corpus
-    * scale the join is the dominant cost and its shuffle disappears. */
-  def writeBandedTable(banded: DataFrame, table: String, nBuckets: Int = 256): Unit =
-    Layout.writeBucketed(banded, table, Seq("band", "bucket"), nBuckets)
 
   /**
    * Hot-bucket occupancy valve — the `maxDf` analog for bucket-keyed
@@ -217,31 +207,6 @@ object Dedup {
         col(s"a.$idCol") < col(s"b.$idCol"))
       .groupBy(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
       .agg(count(lit(1)).as("n_bands"))
-  }
-
-  /**
-   * Incremental candidate probe — new documents against an existing
-   * (typically persisted, (band,bucket)-bucketed) corpus banded table,
-   * WITHOUT re-pairing the corpus against itself. Returns the same
-   * (id_a, id_b, n_bands) shape as the self-join, restricted to pairs
-   * touching the increment: increment-vs-corpus matches from a bucket
-   * equi-join (the corpus side reads its bucketed layout exchange-free —
-   * plan-asserted in TrainingDataOpsSpec) plus increment-vs-increment
-   * matches from the (tiny) increment self-join. Increment ids must be
-   * disjoint from corpus ids. `maxBucket` caps occupancy on each side
-   * before the join, exactly as in [[minhashLshPairsFromBanded]].
-   */
-  def probeBanded(incrementBanded: DataFrame, corpusBanded: DataFrame,
-      idCol: String = "doc_id", maxBucket: Option[Long] = None): DataFrame = {
-    val inc = capBuckets(incrementBanded, Seq("band", "bucket"), maxBucket)
-    val corp = capBuckets(corpusBanded, Seq("band", "bucket"), maxBucket)
-    val cross = inc.as("a").join(corp.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .select(least(col(s"a.$idCol"), col(s"b.$idCol")).as("id_a"),
-        greatest(col(s"a.$idCol"), col(s"b.$idCol")).as("id_b"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("n_bands"))
-    // disjoint pair sets (ids disjoint across sides) → plain union, no dedup
-    cross.unionByName(minhashLshPairsFromBanded(inc, idCol))
   }
 
   /**
@@ -593,7 +558,7 @@ object Dedup {
     * corpus size, and the oracle compare would catch one at test scale). */
   private def shingleOverlapPairs(docs: DataFrame, n: Int, textCol: String,
       idCol: String, maxDf: Option[Long],
-      checkpointDir: Option[String] = None,
+      checkpointDir: Option[String],
       minSizeRatio: Option[Double] = None): DataFrame = {
     // The (id, shingle-hash, n_sh) candidate relation. Per-doc shingle-SET
     // dedup is ROW-LOCAL work, done INSIDE the native
@@ -687,9 +652,7 @@ object Dedup {
     * hashes computed in-row ([[graft.plans.TextExpressions.shingleHashes]]
     * — the same projection [[ngramJaccardPairs]]'s candidate machinery
     * uses, so registry counts and fused counts are bit-identical), n_sh
-    * riding as a column. Map-only. At corpus scale persist it BUCKETED by
-    * `shingle` (the [[writeBandedTable]] convention) so the increment
-    * probe's join reads the corpus side exchange-free. */
+    * riding as a column. Map-only. */
   def shingleRelation(docs: DataFrame, n: Int = 3, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame =
     docs.select(col(idCol),
@@ -880,7 +843,7 @@ object Dedup {
    * collapses windows that elected the same position — all over the same
    * per-doc ordering the k-gram leads already need, so the operator is
    * one exchange per document plus the final dedup. Hashes are
-   * md5-prefix longs ([[graft.functions.TextFunctions.strHash32]]) —
+   * md5-prefix longs (the first 8 md5 hex chars as a long) —
    * engine-reproducible, so selected POSITIONS are identical in any
    * engine and the operator is hash-verified end-to-end
    * (`fingerprint_winnow`), which a selection rule over engine-private

@@ -165,10 +165,8 @@ object Embeddings {
   }
 
   /** (μ, W) of ZCA whitening — W = U·diag(1/√(λ+ε))·Uᵀ from ONE moments
-    * aggregation + driver-side Jacobi. Shared by the array-column
-    * transform ([[whiten]]), the oracle-checkable scalar emission
-    * ([[whitenRows]]), and the data-dependent DuckDB oracle literals
-    * (`SparkEntry.prepareOracles`). */
+    * aggregation + driver-side Jacobi. Shared by [[whitenRows]] and the
+    * data-dependent DuckDB oracle literals (`SparkEntry.prepareOracles`). */
   private[graft] def whitenModel(df: DataFrame, eps: Double = 1e-6,
       vecCol: String = "embedding", dim: Int = 64):
       (Array[Double], Array[Array[Double]]) = {
@@ -194,31 +192,21 @@ object Embeddings {
   }
 
   /**
-   * ZCA-whitened embeddings: y = U·diag(1/√(λ+ε))·Uᵀ·(x − μ), emitted
-   * as (idCol, vecCol array<float>) so ANN / SemDeDup consumers read it
-   * like the raw column. ZCA (rather than plain PCA) keeps y in the
-   * ORIGINAL basis — nearest-neighbor structure stays interpretable —
-   * while the output covariance is the identity (spec-pinned to ~1e-10
-   * diagonal / off-diagonal at sf0.001). ε regularizes near-null
-   * directions; eigenvalues are clamped at 0 before the shift (a tiny
-   * negative λ is Jacobi noise, and √ of it would poison a whole row of
-   * the transform).
+   * ZCA-whitened embeddings: y = U·diag(1/√(λ+ε))·Uᵀ·(x − μ). ZCA
+   * (rather than plain PCA) keeps y in the ORIGINAL basis — nearest-
+   * neighbor structure stays interpretable — while the output covariance
+   * is the identity (spec-pinned). ε regularizes near-null directions;
+   * eigenvalues are clamped at 0 before the shift (a tiny negative λ is
+   * Jacobi noise, and √ of it would poison a whole row of the transform).
+   *
+   * Emitted as scalars — (idCol, dim, whitened 6dp), the dump-safe,
+   * hash-verifiable form (an array<float> output column has no canonical
+   * row order for the oracle compare's rows-only sorter, and no SQL twin; the
+   * exploded double form has both — the projection in the oracle
+   * statement recomputes y from the SAME collected (μ, W) shipped as
+   * literals). Kernel stays double end-to-end, matching the oracle's
+   * all-double algebra.
    */
-  def whiten(df: DataFrame, eps: Double = 1e-6, vecCol: String = "embedding",
-      idCol: String = "vec_id", dim: Int = 64): DataFrame = {
-    val (mean, w) = whitenModel(df, eps, vecCol, dim)
-    df.select(col(idCol),
-      VectorExpressions.centerProject(col(vecCol), mean.toSeq,
-        w.map(_.toSeq).toSeq, asFloat = true).as(vecCol))
-  }
-
-  /** [[whiten]] exploded to scalars — (idCol, dim, whitened 6dp), the
-    * dump-safe, hash-verifiable emission (an array<float> output column
-    * has no canonical row order for the driver's rows-only sorter, and
-    * no SQL twin; the exploded double form has both — the projection in
-    * the oracle statement recomputes y from the SAME collected (μ, W)
-    * shipped as literals). Kernel stays double end-to-end (no float
-    * round-trip), matching the oracle's all-double algebra. */
   def whitenRows(df: DataFrame, eps: Double = 1e-6,
       vecCol: String = "embedding", idCol: String = "vec_id",
       dim: Int = 64): DataFrame = {
@@ -226,27 +214,12 @@ object Embeddings {
     projectRows(df, mean, w, vecCol, idCol, "whitened")
   }
 
-  /**
-   * All-but-the-top (Mu & Viswanath, ICLR 2018): remove the mean and
-   * the projections onto the top `k` principal directions —
-   * y = (I − Σ_{j<k} uⱼuⱼᵀ)·(x − μ) — emitted as (idCol, vecCol
-   * array<float>). The removed directions carry corpus-wide common
-   * signal; post-hoc variance along them is ~0 (spec-pinned).
-   */
-  def allButTop(df: DataFrame, k: Int = 2, vecCol: String = "embedding",
-      idCol: String = "vec_id", dim: Int = 64): DataFrame = {
-    val (mean, m) = abttModel(df, k, vecCol, dim)
-    df.select(col(idCol),
-      VectorExpressions.centerProject(col(vecCol), mean.toSeq,
-        m.map(_.toSeq).toSeq, asFloat = true).as(vecCol))
-  }
-
   /** (μ, I − Σ_{t<k} uₜuₜᵀ) of all-but-the-top — see [[whitenModel]] for
     * why the model extraction is its own step. */
   private[graft] def abttModel(df: DataFrame, k: Int = 2,
       vecCol: String = "embedding", dim: Int = 64):
       (Array[Double], Array[Array[Double]]) = {
-    require(k >= 1 && k < dim, s"allButTop: need 1 <= k < $dim, got $k")
+    require(k >= 1 && k < dim, s"allButTopRows: need 1 <= k < $dim, got $k")
     val (_, mean, tri) = momentsOf(df, vecCol, dim)
     val (_, u) = jacobiEigh(fullCov(tri, dim))
     val m = Array.tabulate(dim, dim) { (i, j) =>
@@ -259,8 +232,14 @@ object Embeddings {
     (mean, m)
   }
 
-  /** [[allButTop]] exploded to scalars — (idCol, dim, residual 6dp);
-    * see [[whitenRows]] for the dump/oracle rationale. */
+  /**
+   * All-but-the-top (Mu & Viswanath, ICLR 2018): remove the mean and
+   * the projections onto the top `k` principal directions —
+   * y = (I − Σ_{j<k} uⱼuⱼᵀ)·(x − μ). The removed directions carry
+   * corpus-wide common signal; post-hoc variance along them is ~0
+   * (spec-pinned). Emitted as (idCol, dim, residual 6dp); see
+   * [[whitenRows]] for the dump/oracle rationale.
+   */
   def allButTopRows(df: DataFrame, k: Int = 2, vecCol: String = "embedding",
       idCol: String = "vec_id", dim: Int = 64): DataFrame = {
     val (mean, m) = abttModel(df, k, vecCol, dim)
@@ -275,7 +254,7 @@ object Embeddings {
       valCol: String): DataFrame =
     df.select(col(idCol),
         posexplode(VectorExpressions.centerProject(col(vecCol), mean.toSeq,
-          m.map(_.toSeq).toSeq, asFloat = false)))
+          m.map(_.toSeq).toSeq)))
       .select(col(idCol), col("pos").cast("long").as("dim"),
         Quantize.quantize(col("col"), 6).as(valCol))
 

@@ -294,84 +294,6 @@ object KeyedStore {
       }
     }
 
-    mergeInto("mergeIntoTable", incoming, keyCols, partitionCol, replace,
-      strictKeys, checkpointDir)(
-      openExisting = () =>
-        if (fs.exists(new org.apache.hadoop.fs.Path(storeDir)))
-          Some(spark.read.parquet(storeDir))
-        else None,
-      writeCreated = write(_, dynamic = false),
-      writeMerged = (merged, _) => write(merged, dynamic = true))
-  }
-
-  /**
-   * `mergeIntoTable`, but the store is a catalog-registered parquet table
-   * maintained BUCKETED (+ sorted) by `bucketCols` — the co-located layout
-   * SCALING.md promises for the 100 TB values table (bucket by station_id,
-   * partition by date). Every merge preserves the bucket spec, so any
-   * downstream self-join / join-to-another-table-bucketed-the-same-way or
-   * groupBy on the bucket key plans with ZERO shuffle exchange
-   * (plan-asserted in KeyedStoreSpec, like LayoutSpec).
-   *
-   * Scale shape is `mergeIntoTable`'s: partition-pruned slice read, ONE
-   * materialized full-outer merge, dynamic overwrite of touched partitions
-   * only (`insertInto` keeps the catalog bucket spec — Spark rejects writes
-   * that would break bucketing, so the layout can't silently rot).
-   */
-  def mergeIntoBucketedTable(incoming: DataFrame, table: String, keyCols: Seq[String],
-      bucketCols: Seq[String], nBuckets: Int, partitionCol: Option[String] = Some("date"),
-      replace: Boolean = true, strictKeys: Boolean = true,
-      checkpointDir: Option[String] = None): MergeStats = {
-    val spark = incoming.sparkSession
-    mergeInto("mergeIntoBucketedTable", incoming, keyCols, partitionCol, replace,
-      strictKeys, checkpointDir)(
-      openExisting = () =>
-        if (!spark.catalog.tableExists(table)) None
-        else {
-          // the catalog spec wins on the insertInto path — a caller passing
-          // a DIFFERENT spec must hear about it, not silently get the old
-          // layout
-          assertBucketSpec(spark, table, bucketCols, nBuckets, partitionCol)
-          Some(spark.table(table))
-        },
-      writeCreated = { created =>
-        val w = created.write.mode("overwrite").format("parquet")
-          .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-          .sortBy(bucketCols.head, bucketCols.tail: _*)
-        partitionCol.fold(w)(p => w.partitionBy(p)).saveAsTable(table)
-      },
-      // `insertInto` does NOT honor the per-write partitionOverwriteMode
-      // option (KeyedStoreSpec pins this: a bystander partition vanishes
-      // under the option-only form), so the catalog path must flip the
-      // session conf — under a process-wide lock, so concurrent merges
-      // can't capture each other's temporary value and leak `dynamic`
-      // into the session (the race class the path-based write avoids by
-      // using the option). insertInto is positional — project to the
-      // catalog schema's order.
-      writeMerged = (merged, existing) => overwriteModeLock.synchronized {
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try merged.select(existing.columns.map(col): _*)
-          .write.mode("overwrite").insertInto(table)
-        finally prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-      })
-  }
-
-  /**
-   * The merge body both store flavours share; only opening the store and
-   * the two writes differ between [[mergeIntoTable]] and
-   * [[mergeIntoBucketedTable]]. `openExisting` returns `None` on a first
-   * load.
-   */
-  private def mergeInto(caller: String, incoming: DataFrame, keyCols: Seq[String],
-      partitionCol: Option[String], replace: Boolean, strictKeys: Boolean,
-      checkpointDir: Option[String])(
-      openExisting: () => Option[DataFrame],
-      writeCreated: DataFrame => Unit,
-      writeMerged: (DataFrame, DataFrame) => Unit): MergeStats = {
     // The partition-pruned slice reads ONLY the increment's partition
     // values, which is sound iff the partition column is part of the key:
     // otherwise a key match stored under a different partition value is
@@ -379,73 +301,42 @@ object KeyedStore {
     // up with the duplicate key strictKeys exists to prevent — spanning
     // partitions no future slice reads, so it is never caught.
     partitionCol.foreach(p => require(keyCols.contains(p),
-      s"$caller: partitionCol '$p' must be one of keyCols " +
+      s"mergeIntoTable: partitionCol '$p' must be one of keyCols " +
         s"${keyCols.mkString("[", ",", "]")} — the partition-pruned merge " +
         "slice is only correct when key equality pins the partition"))
     val inc = dedupIncrement(incoming, keyCols)
-    openExisting() match {
-      case None =>
-        // created-row count observed DURING the streaming write (one pass,
-        // no materialization): a first bulk load may be the whole dataset,
-        // and checkpointing it just to count would pin dataset-sized blocks
-        // in executor storage + double the write amplification
-        val obs = org.apache.spark.sql.Observation()
-        writeCreated(inc.withColumn("uuid", md5(keyConcat(keyCols)))
-          .observe(obs, count(lit(1)).as("n")))
-        MergeStats(obs.get("n").asInstanceOf[Long], 0L, 0L)
-      case Some(existing) =>
-        val slice = partitionCol match {
-          case Some(p) =>
-            val parts = inc.select(col(p)).distinct().collect().map(_.get(0))
-            existing.filter(partitionSlicePred(p, parts)) // → partition pruning
-          case None => existing
-        }
-        // ONE scan of the slice: the merge plan materializes here (which
-        // also fires the strict-key guard), then stats and the overwrite
-        // both read the checkpointed blocks. The checkpoint also truncates
-        // lineage so the overwrite doesn't read from the path it writes.
-        // Long cluster runs pass `checkpointDir` for a reliable checkpoint
-        // (localCheckpoint blocks die with a lost executor — Materialize).
-        val j = Materialize(
-          mergedWithAction(inc, slice, keyCols, replace, strictKeys), checkpointDir)
-        val st = j.filter(col("__action").isNotNull)
-          .groupBy(col("__action")).agg(count(lit(1)).as("n")).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        writeMerged(j.drop("__action"), existing)
-        MergeStats(st.getOrElse(ActionCreate, 0L), st.getOrElse(ActionReplace, 0L),
-          st.getOrElse(ActionUnchanged, 0L))
+    if (!fs.exists(new org.apache.hadoop.fs.Path(storeDir))) {
+      // created-row count observed DURING the streaming write (one pass,
+      // no materialization): a first bulk load may be the whole dataset,
+      // and checkpointing it just to count would pin dataset-sized blocks
+      // in executor storage + double the write amplification
+      val obs = org.apache.spark.sql.Observation()
+      write(inc.withColumn("uuid", md5(keyConcat(keyCols)))
+        .observe(obs, count(lit(1)).as("n")), dynamic = false)
+      MergeStats(obs.get("n").asInstanceOf[Long], 0L, 0L)
+    } else {
+      val existing = spark.read.parquet(storeDir)
+      val slice = partitionCol match {
+        case Some(p) =>
+          val parts = inc.select(col(p)).distinct().collect().map(_.get(0))
+          existing.filter(partitionSlicePred(p, parts)) // → partition pruning
+        case None => existing
+      }
+      // ONE scan of the slice: the merge plan materializes here (which
+      // also fires the strict-key guard), then stats and the overwrite
+      // both read the checkpointed blocks. The checkpoint also truncates
+      // lineage so the overwrite doesn't read from the path it writes.
+      // Long cluster runs pass `checkpointDir` for a reliable checkpoint
+      // (localCheckpoint blocks die with a lost executor — Materialize).
+      val j = Materialize(
+        mergedWithAction(inc, slice, keyCols, replace, strictKeys), checkpointDir)
+      val st = j.filter(col("__action").isNotNull)
+        .groupBy(col("__action")).agg(count(lit(1)).as("n")).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      write(j.drop("__action"), dynamic = true)
+      MergeStats(st.getOrElse(ActionCreate, 0L), st.getOrElse(ActionReplace, 0L),
+        st.getOrElse(ActionUnchanged, 0L))
     }
-  }
-
-  /** Serializes the conf-flip window of [[mergeIntoBucketedTable]]'s
-    * insertInto (which ignores per-write options — see the comment there). */
-  private val overwriteModeLock = new Object
-
-  /**
-   * Existing-table layout guard for `mergeIntoBucketedTable`: `insertInto`
-   * keeps the CATALOG's bucket spec regardless of the arguments, so a caller
-   * passing a different spec would silently get the old layout. The spec is
-   * read STRUCTURALLY from catalog metadata (`CatalogTable.bucketSpec` /
-   * `partitionColumnNames` via the Bridge shim — `sessionState` is
-   * `private[sql]`), not by string-parsing DESCRIBE output, which would
-   * mis-parse column names containing commas or backticks. Bucket columns
-   * compare ORDERED: bucket hashing and sortBy both depend on column order,
-   * so a set compare would wave through a reordered spec.
-   */
-  private def assertBucketSpec(spark: org.apache.spark.sql.SparkSession, table: String,
-      bucketCols: Seq[String], nBuckets: Int, partitionCol: Option[String]): Unit = {
-    val meta = org.apache.spark.sql.graftbridge.Bridge.tableMetadata(spark, table)
-    val actualPart = meta.partitionColumnNames.toSet
-    val actualBucket = meta.bucketSpec.map(_.bucketColumnNames).getOrElse(Nil)
-    val actualN = meta.bucketSpec.map(_.numBuckets)
-    def fail(what: String, expected: Any, actual: Any): Nothing =
-      throw new IllegalArgumentException(
-        s"mergeIntoBucketedTable: table '$table' exists with a different $what " +
-          s"(catalog: $actual, requested: $expected); the catalog layout wins on " +
-          "insertInto — drop/migrate the table or pass the matching spec")
-    if (actualBucket != bucketCols) fail("bucket columns", bucketCols, actualBucket)
-    if (!actualN.contains(nBuckets)) fail("bucket count", nBuckets, actualN.getOrElse("none"))
-    if (actualPart != partitionCol.toSet) fail("partition columns", partitionCol.toSet, actualPart)
   }
 
   // ---- query surface (`V3Handler` read path, SURVEY §2.1 S8/S9, §2.6 W1) ----

@@ -1,34 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
- * Physical-layout operators for shuffle avoidance at scale (SURVEY §4
- * "planned physical choices"; the techniques the builder prompt names:
- * bucketing for co-located joins, salting for skew).
- *
- *  - Bucketing: write both join sides bucketed (+ sorted) by the join key →
- *    repeated joins plan as SortMergeJoin with ZERO Exchange (verified by
- *    plan assertion in LayoutSpec). This is the store layout for the 100 TB
- *    keyed table: bucket by station_id, partition by date.
- *  - Salting: a skewed aggregation/join key is sharded into `salts`
- *    sub-keys; partials combine per (key, salt), then a cheap final pass
- *    combines per key. Salt derivation is DETERMINISTIC (hash of a caller-
- *    chosen discriminator column, never rand()) so re-runs and retries are
- *    stable. AQE's skew-join split handles most cases at runtime; explicit
- *    salting remains for aggregations and deterministic plans.
+ * Skew operators (SURVEY §4 "planned physical choices"): a skewed
+ * aggregation/join key is sharded into `salts` sub-keys; partials combine
+ * per (key, salt), then a cheap final pass combines per key. Salt
+ * derivation is DETERMINISTIC (hash of a caller-chosen discriminator
+ * column, never rand()) so re-runs and retries are stable. AQE's
+ * skew-join split handles most cases at runtime; explicit salting remains
+ * for aggregations and deterministic plans.
  */
 object Layout {
-
-  /** Write a table bucketed+sorted by `bucketCols` (co-location layout).
-    * Requires a session catalog (any warehouse dir, no Hive needed). */
-  def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
-      nBuckets: Int): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(table)
 
   /** Deterministic salt in [0, salts) from a discriminator column. */
   def saltOf(discriminator: Column, salts: Int): Column =
@@ -58,52 +42,5 @@ object Layout {
     val repl = dim.crossJoin(
       skewed.sparkSession.range(salts).select(col("id").as("__salt")))
     saltedFact.join(repl, Seq(key, "__salt")).drop("__salt")
-  }
-
-  /** True iff the executed plan of `df` contains no shuffle exchange —
-    * the assertion that bucketing actually removed the shuffle. Descends
-    * into AQE's materialized query stages (a plain `exists` over the tree
-    * misses exchanges wrapped in `QueryStageExec`). */
-  def isShuffleFree(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    def hasShuffle(p: SparkPlan): Boolean = p match {
-      case _: ShuffleExchangeLike => true
-      case a: AdaptiveSparkPlanExec => hasShuffle(a.executedPlan)
-      case s: QueryStageExec => hasShuffle(s.plan)
-      case other => other.children.exists(hasShuffle)
-    }
-    !hasShuffle(df.queryExecution.executedPlan)
-  }
-
-  /** True iff the scan of `table` reaches its NEAREST ancestor join with
-    * no shuffle exchange in between — the table entered ITS join through
-    * its bucketed layout. Everything above that join (the other side, later
-    * joins over the join's derived output, post-join aggregation) may
-    * shuffle freely: that's the point — only the corpus-sized side must
-    * stay in place; its join's OUTPUT is a different, derived relation.
-    * Used to assert incremental probes never re-shuffle the corpus. */
-  def joinSideShuffleFree(df: DataFrame, table: String): Boolean = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
-    // walk down to EVERY scan of `table` carrying "no shuffle seen since
-    // the last join boundary"; at each scan, that flag is its verdict.
-    // Joins reset it (a shuffle above a closer-to-root join constrains a
-    // different, derived relation); a self-join contributes two scans and
-    // BOTH must hold.
-    def free(p: SparkPlan, clean: Boolean): Seq[Boolean] = p match {
-      case f: FileSourceScanExec if f.tableIdentifier.exists(_.table == table) =>
-        Seq(clean)
-      case a: AdaptiveSparkPlanExec => free(a.executedPlan, clean)
-      case s: QueryStageExec => free(s.plan, clean)
-      case j: BaseJoinExec => j.children.flatMap(free(_, clean = true))
-      case e: ShuffleExchangeLike => e.children.flatMap(free(_, clean = false))
-      case other => other.children.flatMap(free(_, clean))
-    }
-    val verdicts = free(df.queryExecution.executedPlan, clean = true)
-    verdicts.nonEmpty && verdicts.forall(identity)
   }
 }

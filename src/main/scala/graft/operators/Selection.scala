@@ -71,31 +71,6 @@ object Selection {
   val WeightSalt = "#wsamp"
 
   /**
-   * Row-local feature extraction: unigram ++ bigram STRINGS over the
-   * shared alnum tokenization. Pure column expression — no exchange, no
-   * UDF. Hashing happens downstream, post-explode, at top level: the
-   * string build is the only higher-order function (interpreted per
-   * element, but cheap concats), while the md5 bucket runs codegen'd.
-   */
-  def featureStrings(text: Column): Column =
-    featureStringsFromTokens(TextFunctions.tokens(text))
-
-  /** Same, over an already-BOUND token array column. Callers should
-    * tokenize into a column first: the token expression appears four
-    * times below, and `Generate` (explode) evaluates its input
-    * interpreted with no common-subexpression elimination — inlining the
-    * regexp tokenizer would re-run it 4× per row. */
-  def featureStringsFromTokens(t: Column): Column = {
-    // bigrams: zip tokens with their own tail; zip_with pads the short
-    // side with null, so the trailing (last, null) pair concat-nulls out
-    val bi = filter(
-      zip_with(t, slice(t, lit(2), greatest(size(t) - 1, lit(0))),
-        (a, b) => concat(a, lit(" "), b)),
-      x => x.isNotNull)
-    concat(t, bi)
-  }
-
-  /**
    * DSIR log importance weight per document:
    *   w(d) = Σ_{feature occurrences f in d} [ ln p̂_tgt(b(f)) − ln p̂_raw(b(f)) ]
    * with Laplace-smoothed bucket multinomials
@@ -128,9 +103,9 @@ object Selection {
     // (measured 2.7× the single-scan cost at sf0.1).
     // feature hashing via the byte-scan kernel ([[graft.plans
     // .Md5FeatureBuckets]]): one pass, no feature strings, no hex
-    // round-trip — spec-pinned bit-identical to hashing
-    // [[featureStrings]] through [[Corpus.hashBucket]], which remains
-    // the readable contract definition
+    // round-trip — spec-pinned bit-identical to hashing the unigram ++
+    // bigram feature strings (`SelectionOracles.featureStrings`) through
+    // [[Corpus.hashBucket]], which remains the readable contract definition
     val hist = docs.select(col(idCol), target.as("__tgt"),
         explode_outer(graft.plans.TextExpressions.md5FeatureBuckets(
           col(textCol), buckets, DsirSalt)).as("__b"))
@@ -191,7 +166,7 @@ object Selection {
     * without re-estimating the histograms. The production split of
     * [[dsirWeights]] (which fuses train+score over one frame). */
   def dsirModel(docs: DataFrame, target: Column, textCol: String = "text",
-      idCol: String = "doc_id", buckets: Int = DsirBuckets): DataFrame = {
+      buckets: Int = DsirBuckets): DataFrame = {
     // materialized: the tiny (≤ B+1 row) histogram feeds two consumers
     // (per-bucket ratios + the sentinel's totals) — without it each
     // consumer re-runs the corpus scan
@@ -1042,7 +1017,7 @@ object Selection {
     val deduped = Similarity.semanticDedupClusteredKeepVec(
       floored, centroids, dedupCos, vecCol, idCol, maxCell, checkpointDir)
     val decontaminated = Similarity.decontaminateSemantic(
-      deduped, evalSet, decontCos, vecCol, idCol)
+      deduped, evalSet, decontCos, vecCol)
     diverseElect(decontaminated.select(col(idCol), col("cell")),
         perCell, idCol, salt)
       .select(col(idCol), col("cell"),

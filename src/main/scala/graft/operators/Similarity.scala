@@ -42,12 +42,10 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Driver-side norm with the same fold order as the `norm` column fn —
     * substituting it as a literal keeps results bit-identical while saving
     * one 64-op aggregate per row. */
-  private def normOf(query: Seq[Float]): Double =
+  private[operators] def normOf(query: Seq[Float]): Double =
     math.sqrt(query.foldLeft(0.0)((acc, v) => acc + v.toDouble * v.toDouble))
 
   /** Exact cosine of `vec` (whose norm is `nrm` — computed, or a
@@ -182,8 +180,8 @@ object Similarity {
    *
    * Directory-count note: hyperplane regimes up to ~2^12 buckets × tables
    * partition cleanly; for 16+ bit signatures (near-dup regimes) partition
-   * explosion sets in — switch to `Layout.writeBucketed` on (table, bucket)
-   * there and let bucket pruning do the same job with a fixed file count.
+   * explosion sets in — a bucketed table on (table, bucket) would let
+   * bucket pruning do the same job with a fixed file count.
    */
   def writeLshIndex(index: DataFrame, path: String): Unit =
     // the helper hash-repartitions on the partition columns: otherwise
@@ -306,65 +304,19 @@ object Similarity {
   final case class IvfIndex(assignments: DataFrame,
       centroids: Array[(Int, Array[Float])])
 
-  /**
-   * IVF (inverted-file) ANN index — the k-means alternative to hyperplane
-   * LSH: vectors are assigned to their nearest centroid's cell; a query
-   * probes only its `nProbe` nearest cells. Cells are `iters` rounds of
-   * the shared Lloyd trainer ([[trainLloyd]]: hash-sampled seeds, one
-   * map-only assignment + one mean fold per round) over the training set;
-   * `trainPct` < 100 trains on a deterministic hash sample and is the
-   * 100 TB path ([[trainSetOf]]).
-   *
-   * METRIC CONSISTENCY: the index SERVES cosine, so training and cell
-   * assignment run on L2-NORMALIZED vectors — nearest-euclidean on the
-   * unit sphere ranks cells exactly like cosine. Training on raw vectors
-   * would let cell membership follow vector NORMS (a high-cosine neighbor
-   * with a large norm lands in a far-euclidean cell and low-nProbe probes
-   * miss it). Zero vectors stay as-is (their cosine is undefined anyway).
-   * The assignments keep the ORIGINAL vector plus its `nrm`, so serving
-   * needs no per-candidate norm recompute.
-   *
-   * Unlike LSH this adapts to the data distribution (cells follow corpus
-   * density), at the cost of the training scans; LSH needs no training but
-   * fixes its buckets a priori. Both persist the same way.
-   */
-  def buildIvfIndex(embeddings: DataFrame, nCells: Int = 16, iters: Int = 2,
-      vecCol: String = "embedding", idCol: String = "vec_id",
-      trainPct: Int = 100): IvfIndex = {
-    val prepped = withUnit(embeddings.select(col(idCol), col(vecCol)), vecCol)
-    val Seq(cells) = trainLloyd(
-      Seq(LloydFamily(trainSetOf(prepped, trainPct, idCol), 1, nCells)), iters, idCol)
-    ivfOf(prepped, cells, vecCol, idCol)
-  }
-
   /** The final IVF assignment: every vector of `prepped` (the ORIGINAL
     * vector plus its norm — serving rescoring wants both) under the
     * trained whole-vector codebook; the cell is decided in the unit space. */
-  private def ivfOf(prepped: DataFrame, cells: Array[Array[Array[Float]]],
+  private[operators] def ivfOf(prepped: DataFrame, cells: Array[Array[Array[Float]]],
       vecCol: String, idCol: String): IvfIndex = {
     val centroids = cells.head.zipWithIndex.map { case (v, i) => (i, v) }
     IvfIndex(assignCells(prepped, centroids, vecCol, idCol), centroids)
   }
 
-  /** SAMPLE-TRAINED at scale: each Lloyd round is a full scan of its
-    * training set, so `iters` rounds over a 100 TB corpus pay `iters`
-    * corpus scans for centroids that a deterministic hash sample
-    * (Corpus.sampleByHash — engine/partitioning/growth stable, a
-    * pushdown-friendly filter) estimates just as well: k-means cells only
-    * need the sample to dwarf the centroid count. The one FULL-corpus pass
-    * left is IVF's final cell assignment, which every build needs anyway.
-    * trainPct=100 (default) trains on everything; correctness of serving
-    * never depends on WHICH centroids trained (the full-probe oracle
-    * `sim_topk_ivf_full` equals brute force for any centroids). */
-  private def trainSetOf(prepped: DataFrame, trainPct: Int, idCol: String): DataFrame = {
-    require(trainPct > 0 && trainPct <= 100, s"trainPct must be in (0,100]: $trainPct")
-    if (trainPct >= 100) prepped else Corpus.sampleByHash(prepped, trainPct, idCol)
-  }
-
   /** (id, vec, __unit, nrm): the L2-normalized copy rides alongside the
     * original — `__unit` decides cell membership, `nrm` is persisted so
     * serving never recomputes it. Zero vectors pass through unchanged. */
-  private def withUnit(df: DataFrame, vecCol: String): DataFrame =
+  private[operators] def withUnit(df: DataFrame, vecCol: String): DataFrame =
     df.withColumn("nrm", norm(col(vecCol)))
       .withColumn("__unit", when(col("nrm") > 0,
         transform(col(vecCol), x => (x.cast("double") / col("nrm")).cast("float")))
@@ -415,11 +367,12 @@ object Similarity {
     * subspaces × `k` centroids over the unit vectors (`__unit`) of `train`,
     * a [[withUnit]]-prepped frame. IVF is the whole-vector `m = 1` case
     * (`k` = nCells); PQ is `m` per-subspace codebooks. */
-  private final case class LloydFamily(train: DataFrame, m: Int, k: Int)
+  private[operators] final case class LloydFamily(train: DataFrame, m: Int, k: Int)
 
   /**
-   * The one Lloyd k-means trainer behind [[buildIvfIndex]], [[trainPq]],
-   * [[trainIvfPq]] and [[trainAnnModels]]: every requested family advances
+   * The one Lloyd k-means trainer behind [[trainIvfPq]] and
+   * [[trainAnnModels]] (and the specs' standalone IVF and PQ trainers in
+   * `SimilarityOracles`): every requested family advances
    * its rounds inside ONE aggregation job per round — a union of the
    * per-family mean folds — so fused callers pay one driver round-trip per
    * round however many models they train.
@@ -449,7 +402,7 @@ object Similarity {
    * trained, and the `*_full` bridge oracles hold for any centroid set).
    * Returns each family's `m × k × (dim/m)` codebook, in request order.
    */
-  private def trainLloyd(fams: Seq[LloydFamily], iters: Int, idCol: String)
+  private[operators] def trainLloyd(fams: Seq[LloydFamily], iters: Int, idCol: String)
       : Seq[Array[Array[Array[Float]]]] = {
     fams.foreach(f => require(f.m >= 1 && f.k >= 1,
       s"m and k must be >= 1: m=${f.m} k=${f.k}"))
@@ -503,8 +456,7 @@ object Similarity {
   }
 
   /** IVF cells and PQ codebooks over one corpus in one [[trainLloyd]]
-    * pass (one seed collect, one aggregation per round) — the models
-    * [[buildIvfIndex]] and [[trainPq]] train separately. */
+    * pass (one seed collect, one aggregation per round). */
   private[graft] def trainIvfPq(corpus: DataFrame, nCells: Int, m: Int, k: Int,
       iters: Int, vecCol: String = "embedding", idCol: String = "vec_id")
       : (IvfIndex, PqModel) = {
@@ -516,8 +468,8 @@ object Similarity {
 
   /** The declared build's models (`AnnIndex.buildAll`) in one
     * [[trainLloyd]] pass: IVF over the full corpus and over `e300`, and
-    * PQ over the full corpus — equal to the standalone trainers at
-    * `trainPct = 100` (spec-pinned). */
+    * PQ over the full corpus — equal to standalone single-model training
+    * (spec-pinned). */
   private[graft] def trainAnnModels(eFull: DataFrame, e300: DataFrame,
       nCells: Int, m: Int, k: Int, iters: Int,
       vecCol: String = "embedding", idCol: String = "vec_id")
@@ -534,15 +486,13 @@ object Similarity {
 
   /**
    * Incremental index growth: assign NEW vectors to an EXISTING index's
-   * cells without retraining — the IVF analog of `Dedup.probeBanded`.
-   * One broadcast-centroid pass over the increment only; append the
-   * result to the persisted assignments (same partitioned layout) and
-   * every probe sees the grown corpus. Centroids drift from the true
-   * cell means as the corpus grows — retrain on a sample
-   * (`buildIvfIndex(trainPct = …)`) when recall at fixed `nProbe` decays,
-   * not on every increment. Assignment is deterministic given the model,
-   * so an increment assigned now equals the same rows assigned at build
-   * time (unit-asserted).
+   * cells without retraining. One broadcast-centroid pass over the
+   * increment only; append the result to the persisted assignments (same
+   * partitioned layout) and every probe sees the grown corpus. Centroids
+   * drift from the true cell means as the corpus grows — retrain when
+   * recall at fixed `nProbe` decays, not on every increment. Assignment
+   * is deterministic given the model, so an increment assigned now
+   * equals the same rows assigned at build time (unit-asserted).
    */
   def assignToCells(index: IvfIndex, embeddings: DataFrame,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
@@ -852,7 +802,7 @@ object Similarity {
   }
 
   /** Driver-side probe list: the `nProbe` cells nearest the NORMALIZED
-    * query (centroids live in the unit space — buildIvfIndex trains on
+    * query (centroids live in the unit space — IVF trains on
     * normalized vectors, so the probe order agrees with the cosine
     * serving metric), (distance, cell) tiebreak. The model is local;
     * ranking it costs nothing. */
@@ -1266,8 +1216,7 @@ object Similarity {
    * "no measurable similarity", the family's null contract.
    */
   def decontaminateSemantic(embeddings: DataFrame, evalSet: DataFrame,
-      minCosine: Double, vecCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
+      minCosine: Double, vecCol: String = "embedding"): DataFrame = {
     val thr = thrOf(minCosine)
     val ev = evalSet.select(col(vecCol).as("__ev"))
       .withColumn("__evn", norm(col("__ev")))
@@ -1287,28 +1236,6 @@ object Similarity {
     * like IVF). Size m·k·(dim/m) floats — kilobytes, a driver value. */
   final case class PqModel(m: Int, k: Int, dim: Int,
       centroids: Array[Array[Array[Float]]])
-
-  /**
-   * Product quantization (Jégou/Douze/Schmid, "Product Quantization for
-   * Nearest Neighbor Search", TPAMI 2011 — public literature, not a
-   * reference-repo behavior) — the memory side of the ANN triad (LSH
-   * prunes by bucket, IVF by cell, PQ shrinks the VECTORS): each unit vector
-   * splits into `m` subvectors, each quantized to its subspace's nearest
-   * of `k` codebook centroids, so a d-float embedding becomes `m` small
-   * codes (d·4 bytes → m bytes at k ≤ 256 — 32× at d=64, m=8). Training
-   * is per-subspace k-means, all `m` subspaces in the SAME round of the
-   * shared Lloyd trainer ([[trainLloyd]]; seeds are the k
-   * smallest-xxhash64(id) training vectors' m-th slices), sample-trainable
-   * via `trainPct` exactly like [[buildIvfIndex]].
-   */
-  def trainPq(embeddings: DataFrame, m: Int = 8, k: Int = 16, iters: Int = 2,
-      vecCol: String = "embedding", idCol: String = "vec_id",
-      trainPct: Int = 100): PqModel = {
-    val prepped = withUnit(embeddings.select(col(idCol), col(vecCol)), vecCol)
-    val Seq(books) = trainLloyd(
-      Seq(LloydFamily(trainSetOf(prepped, trainPct, idCol), m, k)), iters, idCol)
-    PqModel(m, k, m * books.head.head.length, books)
-  }
 
   /** Argmin code per (id, subspace), MAP-ONLY: each subspace slice gets
     * its own [[graft.plans.NearestCentroid]] kernel against that
@@ -1461,38 +1388,6 @@ object Similarity {
     (spark.read.parquet(s"$path/codes"), PqModel(m, k, dim, cents))
   }
 
-  /**
-   * IVF-PQ — the composed layout real billion-scale ANN serves from: IVF
-   * prunes WHICH vectors to look at (cell-partitioned codes, probes read
-   * `nProbe` directories), PQ shrinks WHAT each look costs (`m` codes vs
-   * `4d` bytes), and the exact rerank touches full vectors only for the
-   * shortlist. Build = one join of the two per-id relations, persisted
-   * `partitionBy("cell")`; probe = driver-side cell ranking (the IVF
-   * model is local) → partition-pruned ADC over the probed cells' codes →
-   * [[topK]] rerank of `k · overscan` ids against the full-vector
-   * relation. Both models ride along — serving reads kilobytes of model
-   * and only the probed slivers of data.
-   */
-  def topKIvfPq(cellCodes: DataFrame, embeddings: DataFrame, ivf: IvfIndex,
-      pq: PqModel, query: Seq[Float], k: Int,
-      nProbe: Int = graft.AnnIndex.ServeNProbe,
-      overscan: Int = graft.AnnIndex.ServeOverscan,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
-    val qn = normOf(query)
-    val qUnit = if (qn > 0) query.map(v => (v / qn).toFloat) else query
-    val probed = ivf.centroids.map { case (c, v) =>
-      val d2 = v.indices.foldLeft(0.0) { (a, i) =>
-        val d = v(i).toDouble - qUnit(i).toDouble; a + d * d
-      }
-      (c, d2)
-    }.sortBy { case (c, d) => (d, c) }.take(nProbe).map(_._1)
-    val shortlist = Selection.topKBy(
-      adcScores(cellCodes.filter(col("cell").isin(probed: _*)), pq, query, idCol),
-      "approx_cos", idCol, k.toLong * overscan).select(col(idCol))
-    topK(embeddings.join(broadcast(shortlist), idCol), query, k, vecCol, idCol)
-  }
-
   /** The persisted IVF-PQ data relation: (id, cell, codes), written
     * cell-partitioned so probes prune directories like [[writeIvfIndex]]. */
   def buildCellCodes(ivf: IvfIndex, encoded: DataFrame,
@@ -1501,9 +1396,9 @@ object Similarity {
       .join(encoded, Seq(idCol))
 
   /** Persist the IVF-PQ serving relation: one directory per cell, `m`
-    * small ints per vector — the layout [[topKIvfPq]]/[[topKJoinIvfPq]]
-    * serve from at corpus scale (probes read `nProbe` directories of
-    * codes; full vectors are touched only by the rerank sliver). Build
+    * small ints per vector — the layout [[topKJoinIvfPq]] serves from at
+    * corpus scale (probes read `nProbe` directories of codes; full
+    * vectors are touched only by the rerank sliver). Build
     * it once with [[buildCellCodes]] — the join never runs at serve
     * time. The MODELS persist via their own writers ([[writeIvfIndex]]
     * for the trained centroids, [[writePqIndex]] for the codebooks):
@@ -1516,19 +1411,6 @@ object Similarity {
 
   def readCellCodes(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = spark.read.parquet(path)
-
-  /** Incremental IVF-PQ growth: cell-assign AND encode NEW vectors under
-    * the EXISTING models — no retraining, one broadcast-model pass over
-    * the increment (the [[assignToCells]] / `Dedup.probeBanded` posture).
-    * Append to the persisted [[writeCellCodes]] relation and every probe
-    * sees the grown corpus. Both steps are deterministic given the
-    * models, so an increment encoded now equals the same rows encoded at
-    * build time (unit-asserted); like IVF growth, retrain on a sample
-    * when recall at fixed `nProbe` decays — not on every increment. */
-  def growCellCodes(ivf: IvfIndex, pq: PqModel, embeddings: DataFrame,
-      idCol: String = "vec_id"): DataFrame =
-    assignToCells(ivf, embeddings, idCol = idCol).select(col(idCol), col("cell"))
-      .join(pqEncode(embeddings, pq, idCol = idCol), Seq(idCol))
 
   /**
    * Batch ADC k-NN join — the PQ member of the join family
@@ -1594,10 +1476,9 @@ object Similarity {
   }
 
   /**
-   * IVF-PQ batch k-NN join — the composed member of the join family, and
-   * the batch form of [[topKIvfPq]]: each query row ranks its `nProbe`
-   * nearest cells against the broadcast centroid table (as
-   * [[topKJoinIvf]]), carries its own ADC distance table (as
+   * IVF-PQ batch k-NN join — the composed member of the join family:
+   * each query row ranks its `nProbe` nearest cells against the
+   * broadcast centroid table (as [[topKJoinIvf]]), carries its own ADC distance table (as
    * [[topKJoinPq]]), and the cell equi-join streams only the probed
    * cells' CODES — the corpus side reads `m` small ints per vector from
    * the partition-pruned `cellCodes` relation, each pair costs `m`
@@ -1691,24 +1572,9 @@ object Similarity {
       .select(col(vecCol)).collect()
       .map(_.getSeq[Float](0).toArray)
 
-  /**
-   * One Lloyd ASSIGNMENT step under cosine: each vector goes to the
-   * centroid it has the highest cosine with (ties → lowest cell, via
-   * array_position's first-match). Map-only: the centroids ride the plan
-   * as literal arrays, their norms as literal doubles (driver-folded in
-   * the same sequential order as the column-side norm — bit-identical to
-   * computing them in-plan, one fewer dot per row per cell).
-   * Returns (idCol, cell, cos) with cos quantized to 6dp.
-   */
-  private[graft] def centroidScores(centroids: Array[Array[Float]], vecCol: String): Column =
-    array(centroids.map { c =>
-      val cl = array(c.map(v => lit(v)): _*)
-      dot(col(vecCol), cl) / (norm(col(vecCol)) * lit(normOf(c.toSeq)))
-    }: _*)
-
   /** The fused struct<cell, cos> argmax-cosine column — one
     * [[graft.plans.NearestCentroidCos]] kernel call (centroid table via
-    * addReferenceObj) replacing the k-literal-array `centroidScores` +
+    * addReferenceObj) replacing the k-literal-array centroid-score +
     * `array_max` + `array_position` chain, which stalls whole-stage
     * codegen past k ≈ 256 (the r12 sweep's named ladder stop).
     * Bit-identical arithmetic and ordering (kernel scaladoc); optionally
@@ -1803,7 +1669,7 @@ object Similarity {
    * state between steps.
    */
   def kmeansStep(embeddings: DataFrame, centroids: Array[Array[Float]],
-      vecCol: String = "embedding", idCol: String = "vec_id",
+      vecCol: String = "embedding",
       pruned: Option[(Int, Int)] = None): DataFrame = {
     require(centroids.nonEmpty, "kmeansStep: no centroids")
     embeddings
@@ -2107,42 +1973,14 @@ object Similarity {
    * shape as brute-force `topK`. Scoring is the native
    * [[graft.plans.Int8DequantCosine]] kernel (the serving lift the r11
    * version promised — one codegen'd pass, ~11× the interpreted HOF
-   * form's throughput at the 128× sweep); the HOF formulation survives
-   * as [[topKInt8Hof]], the spec oracle pinning the kernel bit-identical.
+   * form's throughput at the 128× sweep); the specs keep the HOF
+   * formulation as the oracle pinning the kernel bit-identical.
    */
   def topKInt8(embeddings: DataFrame, query: Seq[Float], k: Int,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
     Selection.topKBy(embeddings
       .select(col(idCol), Quantize.q6(graft.plans.VectorExpressions.int8DequantCos(
         col(vecCol), query.map(_.toDouble))).as("cos")), "cos", idCol, k)
-
-  /** The original higher-order-function formulation of [[topKInt8]]'s
-    * scoring — interpreted per element (~11 s at the 128× sweep vs ~1 s
-    * for the native kernel), retained as the SPEC ORACLE pinning
-    * [[graft.plans.Int8DequantCosine]] bit-identical (same role
-    * `gopherColumnsRegex` plays for the Gopher kernel; this is also the
-    * shape the DuckDB oracle SQL mirrors). */
-  private[graft] def topKInt8Hof(embeddings: DataFrame, query: Seq[Float], k: Int,
-      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val qArr = array(query.map(v => lit(v.toDouble)): _*)
-    val amax = greatest(array_max(col(vecCol)).cast("double"),
-      -array_min(col(vecCol)).cast("double"))
-    def code(v: Column, s: Column): Column =
-      when(s === 0d, lit(0d)).otherwise(greatest(least(
-        floor(v.cast("double") / s + lit(0.5)), lit(127d)), lit(-127d)))
-    Selection.topKBy(embeddings
-      .select(col(idCol), col(vecCol), Quantize.q6(amax / lit(127d)).as("__s"))
-      .select(col(idCol),
-        zip_with(col(vecCol), qArr, (v, qd) => code(v, col("__s")) * col("__s") * qd)
-          .as("__c"),
-        transform(col(vecCol), v => code(v, col("__s")) * col("__s")).as("__d"))
-      .select(col(idCol),
-        aggregate(col("__c"), lit(0d), _ + _).as("__dot"),
-        aggregate(transform(col("__d"), d => d * d), lit(0d), _ + _).as("__n2"))
-      .select(col(idCol), Quantize.q6(
-        col("__dot") / (sqrt(col("__n2")) * lit(normOf(query)))).as("cos")),
-      "cos", idCol, k)
-  }
 
   def quantizeInt8(embeddings: DataFrame,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {

@@ -331,4 +331,35 @@ object TimeSeries {
       lit(1).as("__side"), lit(null).cast("long").as("__id")): _*)
     obs.unionByName(gr)
   }
+
+  /**
+   * Gap-based sessionization: a session breaks after `gapMin` minutes of
+   * inactivity per user, with `session_window`'s gap semantics. lag →
+   * boundary flag → running sum = session index; then one agg per session.
+   * Two shuffles total (both on user_id — the window and the groupBy share
+   * partitioning).
+   */
+  def sessionizeBatch(events: DataFrame, gapMin: Int = 30): DataFrame = {
+    // event_id tiebreak keeps lag() deterministic under same-ts events
+    val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    // FULL-precision gap: unix_timestamp truncates to whole seconds, which
+    // merges a 1800.5s gap under gapMin=30 where session_window splits it;
+    // cast-to-double keeps the microseconds. Strict `>` matches
+    // session_window exactly — a gap of precisely gapMin merges there
+    // (probe-verified: its interval join is end-inclusive).
+    def secs(c: Column) = c.cast("timestamp").cast("double")
+    val newSession = when(
+      secs(col("ts")) - secs(lag(col("ts"), 1).over(byUser)) > gapMin * 60.0,
+      lit(1L)).otherwise(lit(0L))
+    events
+      .withColumn("__new", newSession)
+      .withColumn("session_idx",
+        sum(col("__new")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
+      .groupBy(col("user_id"), col("session_idx"))
+      .agg(
+        min(col("ts")).as("session_start"),
+        max(col("ts")).as("session_end"),
+        count(lit(1)).as("n_events"),
+        round(sum(col("value")), 4).as("total_value"))
+  }
 }

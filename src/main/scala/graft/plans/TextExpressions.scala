@@ -716,8 +716,8 @@ case class MinHashFold(child: Expression, a: Seq[Long], b: Seq[Long])
  * Parity contract (the `fingerprint_winnow` oracle): tokens are the
  * single-space split of `lower(text)` INCLUDING empty tokens, so every
  * k-gram `concat_ws(" ", t_i..t_{i+k-1})` is a contiguous byte range of
- * the lowered text; fp = the first 8 md5 hex chars as a long (the
- * engine-reproducible `strHash32`); docs under k tokens emit nothing,
+ * the lowered text; fp = the first 8 md5 hex chars as a long
+ * (engine-reproducible); docs under k tokens emit nothing,
  * and with fewer than g complete windows (g > 1) nothing is selected.
  */
 case class WinnowFingerprints(child: Expression, k: Int, g: Int)
@@ -1424,7 +1424,7 @@ object ShingleHash {
     }
     tokEnd(t) = n
     // gram i = bytes [tokStart(i), tokEnd(i+k-1)); fp = first 4 md5
-    // bytes as an unsigned 32-bit value (strHash32: first 8 hex chars)
+    // bytes as an unsigned 32-bit value (the first 8 md5 hex chars)
     val md = Md5Digest.get()
     val hs = new Array[Long](nGrams)
     var gi = 0
@@ -1914,7 +1914,7 @@ object TextExpressions {
 
   /** array<int> of DSIR hashed uni+bigram feature buckets
     * ([[Md5FeatureBuckets]]) — bit-identical to hashing
-    * `Selection.featureStrings` through `Corpus.hashBucket`; null
+    * the uni+bigram feature strings through `Corpus.hashBucket`; null
     * text → null, zero tokens → empty. */
   def md5FeatureBuckets(text: Column, buckets: Int, salt: String): Column =
     Bridge.column(Md5FeatureBuckets(Bridge.expression(lower(text)), buckets, salt))

@@ -388,8 +388,8 @@ object VectorKernels {
   /** [[VecCenterProject]] kernel: y = M·(x − μ), or x − μ when `m` is
     * null. Throws on a wrong-length vector (fixed-dim-column corruption
     * contract). */
-  def centerProject(vec: ArrayData, mu: Array[Double], m: Array[Array[Double]],
-      asFloat: Boolean): ArrayData = {
+  def centerProject(vec: ArrayData, mu: Array[Double],
+      m: Array[Array[Double]]): ArrayData = {
     val d = mu.length
     require(vec.numElements() == d,
       s"vec_center_project: expected dim $d, got ${vec.numElements()}")
@@ -416,12 +416,7 @@ object VectorKernels {
         }
         out
       }
-    if (asFloat) {
-      val f = new Array[Float](d)
-      i = 0
-      while (i < d) { f(i) = y(i).toFloat; i += 1 }
-      new GenericArrayData(f)
-    } else new GenericArrayData(y)
+    new GenericArrayData(y)
   }
 
   /** [[Int8DequantCosine]] kernel — the exact HOF algebra, one pass:
@@ -562,8 +557,8 @@ object VectorKernels {
   }
 
   /** [[NearestCentroidCos]] kernel: argmax-cosine over the full centroid
-    * table with the EXACT arithmetic of the literal `centroidScores`
-    * formulation it replaces — dot and ‖v‖² accumulate in sequential
+    * table with the EXACT arithmetic of the literal centroid-score
+    * formulation it replaces (`SimilarityOracles.centroidScores`) — dot and ‖v‖² accumulate in sequential
     * double order, cos = dot / (‖v‖ · ‖c‖), winner = first maximum under
     * Spark's double ordering (-0.0 < 0.0 — `Double.compare` is exactly
     * that order). Null for a null element or a length mismatch against
@@ -851,7 +846,7 @@ case class VecMoments(
  * at ulp order vs the old shape (summation grouping differs), which the
  * ANN family tolerates by construction: serving correctness never
  * depends on WHICH centroids trained (the `*_full` bridge oracles hold
- * for any centroid set, see [[graft.operators.Similarity.buildIvfIndex]]).
+ * for any centroid set).
  * Null vectors are skipped; a wrong-length vector throws (the
  * [[VecMoments]] corruption contract). Empty input → null.
  */
@@ -939,13 +934,12 @@ case class VecMeanAgg(
  * codegen at large d·d). O(d²) multiply-adds per row (O(d) when
  * center-only), map-only, no shuffle.
  *
- * `asFloat` emits array<float> (the embedding column's own type, for
- * feeding ANN/SemDeDup consumers); otherwise array<double> (full
- * precision for oracle-checked emission). Null vector → null; wrong
- * length throws (same corruption contract as [[VecMoments]]).
+ * Emits array<double> (full precision for oracle-checked emission). Null
+ * vector → null; wrong length throws (same corruption contract as
+ * [[VecMoments]]).
  */
 case class VecCenterProject(child: Expression, mean: Seq[Double],
-    matrix: Seq[Seq[Double]], asFloat: Boolean)
+    matrix: Seq[Seq[Double]])
     extends UnaryExpression {
   private val d = mean.length
   require(d >= 1, "vec_center_project: empty mean")
@@ -962,18 +956,17 @@ case class VecCenterProject(child: Expression, mean: Seq[Double],
     case t => TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires array<float>, got ${t.sql}")
   }
-  override def dataType: DataType =
-    ArrayType(if (asFloat) FloatType else DoubleType, containsNull = false)
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "vec_center_project"
 
   override def nullSafeEval(v: Any): Any =
-    VectorKernels.centerProject(v.asInstanceOf[ArrayData], mu, m, asFloat)
+    VectorKernels.centerProject(v.asInstanceOf[ArrayData], mu, m)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val muRef = ctx.addReferenceObj("cpMean", mu, "double[]")
     val mRef = ctx.addReferenceObj("cpMatrix", m, "double[][]")
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.VectorKernels.centerProject($c, $muRef, $mRef, $asFloat);")
+      s"${ev.value} = graft.plans.VectorKernels.centerProject($c, $muRef, $mRef);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -983,7 +976,7 @@ case class VecCenterProject(child: Expression, mean: Seq[Double],
 /**
  * Argmax-cosine assignment over a centroid table shipped via
  * `addReferenceObj` — struct<cell:int, cos:double>, the fused form of
- * the literal `centroidScores` + `array_max` + `array_position` chain
+ * the literal centroid-score + `array_max` + `array_position` chain
  * used by the k-means / SemDeDup family. Two things the literal chain
  * cannot do at scale: (1) the generated code is ONE kernel call however
  * many centroids there are, where k literal array expressions stall
@@ -1119,8 +1112,8 @@ object VectorExpressions {
   /** y = M·(x − μ) per row ([[VecCenterProject]]); empty matrix →
     * center-only. */
   def centerProject(vec: Column, mean: Seq[Double],
-      matrix: Seq[Seq[Double]] = Nil, asFloat: Boolean = false): Column =
-    Bridge.column(VecCenterProject(Bridge.expression(vec), mean, matrix, asFloat))
+      matrix: Seq[Seq[Double]] = Nil): Column =
+    Bridge.column(VecCenterProject(Bridge.expression(vec), mean, matrix))
 
   /** Σ aᵢ·bᵢ in double, sequential order — codegen'd. */
   def dotF(a: Column, b: Column): Column =

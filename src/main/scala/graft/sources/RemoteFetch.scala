@@ -4,10 +4,10 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
-
-import graft.sinks.DocumentSink
 
 /**
  * Remote-file ingestion (S2/S3): the engine half of the reference's
@@ -29,8 +29,9 @@ import graft.sinks.DocumentSink
  * datatype); bulk 100 TB inputs arrive as parquet/csv already on
  * distributed storage and never pass through here.
  *
- * Fetch failures retry with the sink's exponential backoff (I1); a non-2xx
- * terminal status raises, like the reference's `res.raise_for_status()`.
+ * Fetch failures retry with exponential backoff (I1, [[withRetry]]); a
+ * non-2xx terminal status raises, like the reference's
+ * `res.raise_for_status()`.
  */
 object RemoteFetch {
 
@@ -61,6 +62,28 @@ object RemoteFetch {
     else ""
   }
 
+  /** Retry with exponential backoff + jitter (I1;
+    * `ingestion_handler.py:70-78,104-120`): first wait 0.25–0.5 s, then
+    * ×2–3 per attempt. Exceptions in `passThrough` abort immediately (the
+    * reference's `ignore_exceptions` exact-type match), and so do fatal
+    * ones — interrupts, VM errors and control throwables are never retried. */
+  private[graft] def withRetry[T](retries: Int, passThrough: Set[Class[_]] = Set.empty,
+      sleep: Long => Unit = Thread.sleep)(op: () => T): T = {
+    val rnd = new scala.util.Random()
+    var delayMs: Long = 250L + rnd.nextInt(251) // 0.25–0.5 s
+    var attempt = 0
+    while (true) {
+      try return op()
+      catch {
+        case NonFatal(e) if !passThrough.contains(e.getClass) && attempt < retries =>
+          sleep(delayMs)
+          delayMs = (delayMs * (2.0 + rnd.nextDouble())).toLong // ×2–3
+          attempt += 1
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
   /**
    * Download `url` to `<stagingDir>/graft_fetch_<urlhash><ext>` and return
    * that path. The name is a deterministic function of the URL, so re-runs
@@ -73,7 +96,7 @@ object RemoteFetch {
     val name = java.util.UUID.nameUUIDFromBytes(url.getBytes("UTF-8")).toString
     val dest = new Path(s"$dir/graft_fetch_$name$ext")
     val fs = FileSystem.get(new URI(dir), spark.sparkContext.hadoopConfiguration)
-    DocumentSink.withRetry(retries,
+    withRetry(retries,
         passThrough = Set(classOf[ClientErrorException])) { () =>
       val req = HttpRequest.newBuilder(URI.create(url)).GET().build()
       val res = client.send(req, HttpResponse.BodyHandlers.ofInputStream())

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.time.LocalDate
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}

@@ -14,15 +14,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Catalog metadata for a table name, structurally (bucket spec, partition
-    * columns) — `sessionState` is `private[sql]`, and the alternative of
-    * string-parsing `DESCRIBE TABLE EXTENDED` output mis-parses column names
-    * containing commas/backticks and couples to the describe rendering. */
-  def tableMetadata(spark: org.apache.spark.sql.SparkSession,
-      table: String): org.apache.spark.sql.catalyst.catalog.CatalogTable = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.catalog.getTableMetadata(
-      classic.sessionState.sqlParser.parseTableIdentifier(table))
-  }
 }

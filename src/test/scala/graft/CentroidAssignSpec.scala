@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.functions.Quantize
-import graft.operators.Similarity
+import graft.operators.{Similarity, SimilarityOracles}
 
 /**
  * The NearestCentroidCos / NearestCentroidPruned kernels vs the literal
@@ -25,7 +25,7 @@ class CentroidAssignSpec extends AnyFunSuite {
   /** The pre-kernel literal formulation, verbatim. */
   private def literalAssign(df: org.apache.spark.sql.DataFrame,
       cents: Array[Array[Float]]): org.apache.spark.sql.DataFrame =
-    df.select(col("vec_id"), Similarity.centroidScores(cents, "embedding").as("__sc"))
+    df.select(col("vec_id"), SimilarityOracles.centroidScores(cents, "embedding").as("__sc"))
       .select(col("vec_id"),
         (array_position(col("__sc"), array_max(col("__sc"))) - 1).cast("int").as("cell"),
         Quantize.quantize(array_max(col("__sc")), 6).as("cos"))

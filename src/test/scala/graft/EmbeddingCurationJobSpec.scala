@@ -100,8 +100,9 @@ class EmbeddingCurationJobSpec extends AnyFunSuite {
       s"${EmbeddingCurationJob.layoutDir(root)}/pq")
     val cellCodes = Similarity.readCellCodes(spark,
       s"${EmbeddingCurationJob.layoutDir(root)}/cellcodes")
-    assert(Similarity.topKIvfPq(cellCodes, curVecs, ivf, pq, q, k = 10,
-        nProbe = 4, overscan = 100).collect().map(_.getLong(0)).toSet ==
+    assert(Similarity.topKJoinIvfPq(cellCodes, curVecs, ivf, pq,
+        Seq((0L, q)).toDF("q_id", "embedding"), k = 10, nProbe = 4, overscan = 100)
+        .collect().map(_.getAs[Long]("vec_id")).toSet ==
       ids(Similarity.topK(curVecs, q, k = 10)).toSet)
 
     // increments ledger: one row per increment, matching the Results

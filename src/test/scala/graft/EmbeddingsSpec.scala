@@ -13,6 +13,22 @@ class EmbeddingsSpec extends AnyFunSuite {
   private val SfDir = "/root/testdata/sf0.001"
   private lazy val emb = spark.read.parquet(s"$SfDir/embeddings.parquet")
 
+  /** Mean and full covariance of a long-form (vec_id, dim, value) emission,
+    * folded on the driver: vectors as rows of a `d`-column matrix. */
+  private def momentsOfRows(rows: org.apache.spark.sql.DataFrame, valCol: String,
+      d: Int): (Array[Double], Array[Array[Double]]) = {
+    val vecs = rows.collect().groupBy(_.getAs[Long]("vec_id")).values.map { rs =>
+      val v = new Array[Double](d)
+      rs.foreach(r => v(r.getAs[Long]("dim").toInt) = r.getAs[Double](valCol))
+      v
+    }.toSeq
+    val n = vecs.size.toDouble
+    val mean = Array.tabulate(d)(i => vecs.map(_(i)).sum / n)
+    val cov = Array.tabulate(d, d)((i, j) =>
+      vecs.map(v => (v(i) - mean(i)) * (v(j) - mean(j))).sum / n)
+    (mean, cov)
+  }
+
   test("VecMoments: matches naive mean/cov; nulls skipped; wrong length throws") {
     val vecs = Seq(
       (0L, Some(Array(1.0f, 2.0f, 3.0f))),
@@ -54,28 +70,26 @@ class EmbeddingsSpec extends AnyFunSuite {
   }
 
   test("whiten: output covariance is the identity; deterministic across runs") {
-    val w = Embeddings.whiten(emb)
-    val (_, meanW, covW) = Embeddings.momentsOf(w, "embedding", 64)
+    val w = Embeddings.whitenRows(emb)
+    assert(w.columns.toSeq == Seq("vec_id", "dim", "whitened"))
+    val (meanW, covW) = momentsOfRows(w, "whitened", 64)
     assert(meanW.forall(m => math.abs(m) < 1e-3))
-    var t = 0
     for (i <- 0 until 64; j <- i until 64) {
       val expect = if (i == j) 1.0 else 0.0
-      // float32 output rounding dominates the error, not Jacobi
-      assert(math.abs(covW(t) - expect) < 1e-3, s"cov($i,$j) = ${covW(t)}")
-      t += 1
+      assert(math.abs(covW(i)(j) - expect) < 1e-3, s"cov($i,$j) = ${covW(i)(j)}")
     }
-    val a = w.orderBy("vec_id").collect().map(r => r.getSeq[Float](1))
-    val b = Embeddings.whiten(emb).orderBy("vec_id").collect().map(r => r.getSeq[Float](1))
-    assert(a.zip(b).forall { case (x, y) => x == y })
+    val a = w.orderBy("vec_id", "dim").collect().map(_.getDouble(2))
+    val b = Embeddings.whitenRows(emb).orderBy("vec_id", "dim").collect().map(_.getDouble(2))
+    assert(a.sameElements(b))
   }
 
   test("allButTop: removed directions carry ~zero variance, the rest survive") {
     val (_, _, tri) = Embeddings.momentsOf(emb, "embedding", 64)
     val (lam, u) = Embeddings.jacobiEigh(Embeddings.fullCov(tri, 64))
-    val out = Embeddings.allButTop(emb, k = 2)
-    val (_, meanO, triO) = Embeddings.momentsOf(out, "embedding", 64)
+    val out = Embeddings.allButTopRows(emb, k = 2)
+    assert(out.columns.toSeq == Seq("vec_id", "dim", "residual"))
+    val (meanO, covO) = momentsOfRows(out, "residual", 64)
     assert(meanO.forall(m => math.abs(m) < 1e-3))
-    val covO = Embeddings.fullCov(triO, 64)
     // variance along each ORIGINAL direction: uᵀ·covO·u
     def varAlong(vec: Array[Double]): Double =
       (0 until 64).map(i => (0 until 64).map(j => vec(i) * covO(i)(j) * vec(j)).sum).sum
@@ -83,19 +97,6 @@ class EmbeddingsSpec extends AnyFunSuite {
       "top-2 directions must be annihilated")
     // an untouched direction keeps its eigenvalue
     assert(math.abs(varAlong(u(5)) - lam(5)) < 1e-3 * math.max(1.0, lam(5)))
-  }
-
-  test("whitened output feeds the similarity stack unchanged") {
-    import graft.operators.Similarity
-    val w = Embeddings.whiten(emb)
-    // ANN brute-force top-k consumes the whitened column like the raw one
-    val q = emb.filter(col("vec_id") === 0L).head().getSeq[Float](1)
-    val topk = Similarity.topK(w, q, k = 5)
-    assert(topk.count() == 5)
-    // SemDeDup over whitened vectors: same operator, same plumbing
-    val seeds = Similarity.kmeansSeeds(w, 4)
-    val sd = Similarity.semanticDedupClustered(w, seeds, minCosine = 0.45)
-    assert(sd.count() > 0)
   }
 
   test("centerProject kernel: center-only vs matrix path on a known case") {
@@ -109,32 +110,6 @@ class EmbeddingsSpec extends AnyFunSuite {
     val swapped = df.select(VectorExpressions.centerProject(col("embedding"), mean,
         Seq(Seq(0.0, 1.0), Seq(1.0, 0.0)))).collect().map(_.getSeq[Double](0))
     assert(swapped(0) == Seq(2.0, -1.0) && swapped(1) == Seq(-2.0, 1.0))
-    // asFloat emits the embedding column's own type
-    val f = df.select(VectorExpressions.centerProject(col("embedding"), mean,
-      asFloat = true)).schema.head.dataType
-    assert(f == org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.FloatType, containsNull = false))
-  }
-
-  test("whitenRows/allButTopRows: exploded scalars agree with the array forms") {
-    // the declared-query emission (double domain, 6dp) must be the same
-    // transform the array consumers see, up to the array form's float
-    // cast — pin |exploded − float_array_element| <= float ulp + quantum
-    for ((rows, arr, valCol) <- Seq(
-        (Embeddings.whitenRows(emb), Embeddings.whiten(emb), "whitened"),
-        (Embeddings.allButTopRows(emb, k = 2), Embeddings.allButTop(emb, k = 2), "residual"))) {
-      assert(rows.columns.toSeq == Seq("vec_id", "dim", valCol))
-      val exploded = arr.select(col("vec_id"), posexplode(col("embedding")))
-        .select(col("vec_id"), col("pos").cast("long").as("dim"),
-          col("col").cast("double").as("af"))
-      val joined = rows.join(exploded, Seq("vec_id", "dim"))
-      val n = joined.count()
-      assert(n == rows.count() && n > 0)
-      val bad = joined
-        .filter(abs(col(valCol) - col("af")) > lit(1e-6) + abs(col("af")) * lit(1.2e-7))
-        .count()
-      assert(bad == 0L, s"$valCol diverges from the array form")
-    }
   }
 
   test("truncateRenorm: unit prefixes, exact dim count, zero-norm pins to 0") {

@@ -19,11 +19,11 @@ class ExactPercentileSpec extends AnyFunSuite {
     // group key, an all-NULL-price group (emitted with NULL quantiles),
     // and NULL prices mixed into a real group (ignored, group emitted)
     val rows: Seq[(String, Option[Double])] =
-      Seq.tabulate(1)(i => ("A", Option(rnd.nextDouble() * 1000))) ++
-      Seq.tabulate(2)(i => ("B", Option(rnd.nextDouble() * 1000))) ++
-      Seq.tabulate(21)(i => ("C", Option(rnd.nextDouble() * 1000))) ++
-      Seq.tabulate(997)(i => ("D", Option(rnd.nextDouble() * 1000))) ++
-      Seq.tabulate(13)(i => (null: String, Option(rnd.nextDouble() * 1000))) ++
+      Seq.fill(1)(("A", Option(rnd.nextDouble() * 1000))) ++
+      Seq.fill(2)(("B", Option(rnd.nextDouble() * 1000))) ++
+      Seq.fill(21)(("C", Option(rnd.nextDouble() * 1000))) ++
+      Seq.fill(997)(("D", Option(rnd.nextDouble() * 1000))) ++
+      Seq.fill(13)((null: String, Option(rnd.nextDouble() * 1000))) ++
       Seq(("E", Option.empty[Double]), ("E", Option.empty[Double])) ++
       Seq(("D", Option.empty[Double]))
     val dir = java.nio.file.Files.createTempDirectory("graft_pctl").toString

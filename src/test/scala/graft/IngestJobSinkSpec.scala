@@ -1,22 +1,11 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.config.JobConfig
 import graft.operators.KeyedStore
-import graft.sinks.DocumentSink
-
-/** Recording transport shared via a static (fine under local[*]: executors
-  * live in this JVM). */
-object RecordingTransport {
-  val bulks = new ConcurrentLinkedQueue[Int]()
-  val replaces = new ConcurrentLinkedQueue[String]()
-  @volatile var failuresToInject = 0
-  def reset(): Unit = { bulks.clear(); replaces.clear(); failuresToInject = 0 }
-}
 
 class IngestJobSinkSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -111,58 +100,5 @@ class IngestJobSinkSpec extends AnyFunSuite {
         .map(m.get(_).asLong) == Seq(1L, 2L, 3L, 4L))
       assert(Option(m.get("batch")).map(_.asLong) == batch)
     }
-  }
-
-  test("document sink: envelope shape, 500-chunking, retry on flaky transport") {
-    RecordingTransport.reset()
-    RecordingTransport.failuresToInject = 2
-    val transport = new DocumentSink.DocTransport {
-      def createBulk(docs: Seq[String]): Unit = {
-        if (RecordingTransport.failuresToInject > 0) {
-          RecordingTransport.failuresToInject -= 1
-          throw new RuntimeException("transient")
-        }
-        RecordingTransport.bulks.add(docs.size)
-        docs.foreach { d =>
-          assert(d.contains("\"name\":\"hcdp_station_value\"") && d.contains("\"value\":"))
-        }
-      }
-      def replace(id: String, doc: String): Unit = RecordingTransport.replaces.add(id)
-    }
-    import spark.implicits._
-    val creates = (1 to 1201).map(i => (s"s$i", "2022-03-01", i.toDouble, null: String))
-      .toDF("station_id", "date", "value", "uuid")
-    DocumentSink.writeCreates(creates, "hcdp_station_value", transport,
-      chunkSize = 500, retries = 3, concurrency = 1)
-    val sizes = RecordingTransport.bulks.toArray(Array.empty[Integer]).map(_.toInt).sorted
-    assert(sizes.sum == 1201 && sizes.max <= 500)
-    val replaces = Seq(("u-1", "s1", 5.0)).toDF("uuid", "station_id", "value")
-    DocumentSink.writeReplaces(replaces, "hcdp_station_value", transport)
-    assert(RecordingTransport.replaces.size == 1 && RecordingTransport.replaces.peek == "u-1")
-  }
-
-  test("retry: gives up after N attempts; pass-through types abort at once") {
-    var calls = 0
-    intercept[RuntimeException] {
-      DocumentSink.withRetry(2, sleep = _ => ())(() => { calls += 1; throw new RuntimeException("x") })
-    }
-    assert(calls == 3) // initial + 2 retries
-    var calls2 = 0
-    intercept[IllegalArgumentException] {
-      DocumentSink.withRetry(5, passThrough = Set(classOf[IllegalArgumentException]),
-        sleep = _ => ())(() => { calls2 += 1; throw new IllegalArgumentException("no-retry") })
-    }
-    assert(calls2 == 1)
-  }
-
-  test("token provider refreshes only inside expiry margin") {
-    var fetches = 0
-    val tp = new DocumentSink.TokenProvider(
-      () => { fetches += 1; (s"tok$fetches", System.currentTimeMillis() + 60 * 60 * 1000) })
-    assert(tp.token() == "tok1" && tp.token() == "tok1" && fetches == 1)
-    val tp2 = new DocumentSink.TokenProvider(
-      () => { fetches += 1; (s"tok$fetches", System.currentTimeMillis() + 1000) }) // < 5 min
-    tp2.token(); tp2.token()
-    assert(fetches == 3) // expiring token refetched every call
   }
 }

@@ -190,42 +190,6 @@ class KeyedStoreSpec extends AnyFunSuite {
     assert(countStoreScans(merged.queryExecution.executedPlan) == 1)
   }
 
-  test("mergeIntoBucketedTable: layout survives merges; bucket-key join is shuffle-free") {
-    import graft.operators.Layout
-    spark.sql("DROP TABLE IF EXISTS store_bucketed")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val st1 = KeyedStore.mergeIntoBucketedTable(existing.drop("uuid"), "store_bucketed",
-        keys, bucketCols = Seq("station_id"), nBuckets = 4, partitionCol = Some("date"))
-      assert(st1 == KeyedStore.MergeStats(3, 0, 0))
-      val st2 = KeyedStore.mergeIntoBucketedTable(incoming, "store_bucketed",
-        keys, Seq("station_id"), 4, Some("date"))
-      assert(st2 == KeyedStore.MergeStats(1, 1, 1))
-      // post-merge content matches the logical merge (uuids are store-side)
-      val want = KeyedStore.merge(incoming, existing, keys).drop("uuid")
-        .collect().map(_.toSeq).toSet
-      val got = spark.table("store_bucketed")
-        .select(existing.columns.filterNot(_ == "uuid").map(col): _*)
-        .collect().map(_.toSeq).toSet
-      assert(got == want)
-      // re-running the same increment is a no-op (resume contract)
-      val st3 = KeyedStore.mergeIntoBucketedTable(incoming, "store_bucketed",
-        keys, Seq("station_id"), 4, Some("date"))
-      assert(st3 == KeyedStore.MergeStats(0, 0, 3))
-      // the promised layout: a join on the bucket key plans with no exchange
-      // EVEN AFTER the insertInto merges (bucket spec preserved end-to-end)
-      val t = spark.table("store_bucketed")
-      val self = t.as("a").join(t.as("b"), "station_id")
-      assert(self.count() > 0)
-      assert(Layout.isShuffleFree(self),
-        "bucketed store self-join should not shuffle:\n" +
-          self.queryExecution.executedPlan)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.sql("DROP TABLE IF EXISTS store_bucketed")
-    }
-  }
-
   test("mergeIntoTable with a reliable checkpoint dir: stats and content unchanged") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("store_ckpt").toString + "/t"
@@ -265,78 +229,6 @@ class KeyedStoreSpec extends AnyFunSuite {
     // excludes it from the merge while dynamic overwrite rewrites its
     // partition → silent loss. It must survive.
     assert(rows == Map("s1" -> 10.0, "s2" -> 2.0, "s3" -> 3.0, "s4" -> 4.0))
-  }
-
-  test("mergeIntoBucketedTable: dynamic overwrite — untouched partition survives, conf untouched") {
-    // The per-write `partitionOverwriteMode` option must genuinely reach
-    // the insertInto command: under STATIC overwrite the whole table is
-    // truncated before the merged slice lands, so a partition the
-    // increment never touches silently vanishes. This test holds such a
-    // bystander partition. It also pins that no session conf is mutated
-    // (the old save/set/restore pattern raced across concurrent merges).
-    import spark.implicits._
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val before = spark.conf.getOption(key)
-    spark.sql("DROP TABLE IF EXISTS store_dyn")
-    try {
-      val seed = Seq(("s1", "2022-03-01", 1.0), ("s9", "2022-04-01", 9.0))
-        .toDF("station_id", "date", "value")
-      KeyedStore.mergeIntoBucketedTable(seed, "store_dyn",
-        Seq("station_id", "date"), Seq("station_id"), 4, Some("date"))
-      // increment touches ONLY the 03-01 partition
-      val inc = Seq(("s1", "2022-03-01", 10.0)).toDF("station_id", "date", "value")
-      val st = KeyedStore.mergeIntoBucketedTable(inc, "store_dyn",
-        Seq("station_id", "date"), Seq("station_id"), 4, Some("date"))
-      assert(st == KeyedStore.MergeStats(0, 1, 0))
-      val rows = spark.table("store_dyn").collect()
-        .map(r => r.getAs[String]("station_id") -> r.getAs[Double]("value")).toMap
-      assert(rows == Map("s1" -> 10.0, "s9" -> 9.0),
-        "bystander partition must survive a dynamic-overwrite merge")
-      assert(spark.conf.getOption(key) == before,
-        "merge must not mutate session partitionOverwriteMode")
-    } finally spark.sql("DROP TABLE IF EXISTS store_dyn")
-  }
-
-  test("mergeIntoBucketedTable: mismatched spec against existing table throws") {
-    import spark.implicits._
-    spark.sql("DROP TABLE IF EXISTS store_speccheck")
-    try {
-      val df = Seq(("s1", "2022-03-01", 1.0)).toDF("station_id", "date", "value")
-      KeyedStore.mergeIntoBucketedTable(df, "store_speccheck", Seq("station_id", "date"),
-        bucketCols = Seq("station_id"), nBuckets = 4, partitionCol = Some("date"))
-      val inc = Seq(("s2", "2022-03-01", 2.0)).toDF("station_id", "date", "value")
-      def expectMismatch(what: String)(f: => Any): Unit = {
-        val e = intercept[IllegalArgumentException](f)
-        assert(e.getMessage.contains(what), e.getMessage)
-      }
-      expectMismatch("bucket count") {
-        KeyedStore.mergeIntoBucketedTable(inc, "store_speccheck", Seq("station_id", "date"),
-          Seq("station_id"), nBuckets = 8, partitionCol = Some("date"))
-      }
-      expectMismatch("bucket columns") {
-        KeyedStore.mergeIntoBucketedTable(inc, "store_speccheck", Seq("station_id", "date"),
-          Seq("value"), nBuckets = 4, partitionCol = Some("date"))
-      }
-      expectMismatch("partition columns") {
-        KeyedStore.mergeIntoBucketedTable(inc, "store_speccheck", Seq("station_id", "date"),
-          Seq("station_id"), nBuckets = 4, partitionCol = None)
-      }
-      // the matching spec still merges fine after the failed attempts
-      val st = KeyedStore.mergeIntoBucketedTable(inc, "store_speccheck", Seq("station_id", "date"),
-        Seq("station_id"), 4, Some("date"))
-      assert(st == KeyedStore.MergeStats(1, 0, 0))
-      // bucket-column ORDER matters (hashing + sortBy): reorder must throw
-      spark.sql("DROP TABLE IF EXISTS store_speccheck2")
-      KeyedStore.mergeIntoBucketedTable(df, "store_speccheck2", Seq("station_id", "date"),
-        Seq("station_id", "value"), 4, Some("date"))
-      expectMismatch("bucket columns") {
-        KeyedStore.mergeIntoBucketedTable(inc, "store_speccheck2", Seq("station_id", "date"),
-          Seq("value", "station_id"), 4, Some("date"))
-      }
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS store_speccheck")
-      spark.sql("DROP TABLE IF EXISTS store_speccheck2")
-    }
   }
 
   test("paginate: early pages plan as TakeOrderedAndProject, never a global window") {

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Layout
+import graft.operators.{Layout, LayoutTestKit}
 
 class LayoutSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -18,17 +18,17 @@ class LayoutSpec extends AnyFunSuite {
         .select("l_orderkey", "l_quantity")
       val o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
         .select("o_orderkey", "o_totalprice")
-      Layout.writeBucketed(li, "li_b", Seq("l_orderkey"), 4)
-      Layout.writeBucketed(o.withColumnRenamed("o_orderkey", "l_orderkey"),
+      LayoutTestKit.writeBucketed(li, "li_b", Seq("l_orderkey"), 4)
+      LayoutTestKit.writeBucketed(o.withColumnRenamed("o_orderkey", "l_orderkey"),
         "o_b", Seq("l_orderkey"), 4)
       val joined = spark.table("li_b").join(spark.table("o_b"), "l_orderkey")
       assert(joined.count() > 0)
-      assert(Layout.isShuffleFree(joined), "bucketed join should not shuffle:\n" +
+      assert(LayoutTestKit.isShuffleFree(joined), "bucketed join should not shuffle:\n" +
         joined.queryExecution.executedPlan)
       // same join on the raw (unbucketed) frames DOES shuffle
       val plain = li.join(o, col("l_orderkey") === col("o_orderkey"))
       plain.count()
-      assert(!Layout.isShuffleFree(plain))
+      assert(!LayoutTestKit.isShuffleFree(plain))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
   }
 

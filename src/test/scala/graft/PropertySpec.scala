@@ -49,7 +49,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("property: gopherSignals kernel == regex formulation on random gopher-trigger text") {
-    import graft.functions.TextFunctions
+    import graft.functions.{TextFunctions, TextOracles}
     // the gopher-specific triggers on top of the usual unicode traps:
     // '#'/ellipsis symbol runs, dot runs that overlap the ellipsis
     // automaton, bullets with indentation, line shapes, stop words with
@@ -69,7 +69,7 @@ class PropertySpec extends AnyFunSuite {
     val gK = canon(docs.select(col("doc_id") +:
       TextFunctions.gopherColumns(col("text")).map { case (n, c) => c.as(n) }: _*))
     val gR = canon(docs.select(col("doc_id") +:
-      TextFunctions.gopherColumnsRegex(col("text")).map { case (n, c) => c.as(n) }: _*))
+      TextOracles.gopherColumnsRegex(col("text")).map { case (n, c) => c.as(n) }: _*))
     assert(gK == gR, "gopherSignals diverges on random text")
     // C4 line cleaner vs its higher-order pin on the same line-shaped fuzz
     // plus its own triggers (terminal marks, word-count edges, javascript
@@ -84,12 +84,12 @@ class PropertySpec extends AnyFunSuite {
     val cK = canon(cdocs.select(col("doc_id") +:
       TextFunctions.c4Columns(col("text")).map { case (n, c) => c.as(n) }: _*))
     val cH = canon(cdocs.select(col("doc_id") +:
-      TextFunctions.c4ColumnsHof(col("text")).map { case (n, c) => c.as(n) }: _*))
+      TextOracles.c4ColumnsHof(col("text")).map { case (n, c) => c.as(n) }: _*))
     assert(cK == cH, "c4LineClean diverges on random text")
   }
 
   test("property: round-10 kernels == regex formulations on random unicode text") {
-    import graft.functions.TextFunctions
+    import graft.functions.{TextFunctions, TextOracles}
     val docs = (1 to 400).map(i => (i.toLong, randomText(40)))
       .toDF("doc_id", "text")
     def canon(df: org.apache.spark.sql.DataFrame) =
@@ -97,15 +97,15 @@ class PropertySpec extends AnyFunSuite {
     val qK = canon(docs.select(col("doc_id") +:
       TextFunctions.qualityColumns(col("text")).map { case (n, c) => c.as(n) }: _*))
     val qR = canon(docs.select(col("doc_id") +:
-      TextFunctions.qualityColumnsRegex(col("text")).map { case (n, c) => c.as(n) }: _*))
+      TextOracles.qualityColumnsRegex(col("text")).map { case (n, c) => c.as(n) }: _*))
     assert(qK == qR, "qualitySignals diverges on random text")
     val lK = canon(docs.select(col("doc_id"), TextFunctions.langId(col("text"))))
-    val lR = canon(docs.select(col("doc_id"), TextFunctions.langIdRegex(col("text"))))
+    val lR = canon(docs.select(col("doc_id"), TextOracles.langIdRegex(col("text"))))
     assert(lK == lR, "langIdDecide diverges on random text")
     val cK = canon(docs.select(col("doc_id"),
       TextFunctions.stripMarkup(col("text")), TextFunctions.redactPii(col("text"))))
     val cR = canon(docs.select(col("doc_id"),
-      TextFunctions.stripMarkupFolded(col("text")), TextFunctions.redactPiiFolded(col("text"))))
+      TextOracles.stripMarkupFolded(col("text")), TextOracles.redactPiiFolded(col("text"))))
     assert(cK == cR, "chainedRegexReplace diverges on random text")
   }
 
@@ -153,7 +153,7 @@ class PropertySpec extends AnyFunSuite {
   test("property: merge stats conserve and merge is idempotent on random increments") {
     val keys = Seq("datatype", "period", "date", "fill", "station_id")
     for (_ <- 1 to 3) {
-      val inc = (1 to 60).map { i =>
+      val inc = (1 to 60).map { _ =>
         ("t", "day", f"2022-01-${rnd.nextInt(5) + 1}%02d", "raw",
           s"st${rnd.nextInt(20)}", rnd.nextInt(50).toDouble)
       }.toDF("datatype", "period", "date", "fill", "station_id", "value")
@@ -232,15 +232,15 @@ class PropertySpec extends AnyFunSuite {
         var pa = math.max(0, diag)
         val end = math.min(ta.length, tb.length + diag)
         var runStart = pa
-        def flush(endPos: Int): Unit = if (run >= w) {
+        def flush(): Unit = if (run >= w) {
           out += ((ia, ib, runStart + 1L, runStart + 1L - diag, run.toLong))
         }
         while (pa < end) {
           if (ta(pa) == tb(pa - diag)) { if (run == 0) runStart = pa; run += 1 }
-          else { flush(pa); run = 0 }
+          else { flush(); run = 0 }
           pa += 1
         }
-        flush(end)
+        flush()
       }
       out.toSet
     }

@@ -135,4 +135,28 @@ class RemoteFetchSpec extends AnyFunSuite {
       assert(r2.created == 0L && r2.replaced == 0L && r2.unchanged == 3L)
     }
   }
+
+  test("retry: gives up after N attempts; pass-through types abort at once") {
+    var calls = 0
+    intercept[RuntimeException] {
+      RemoteFetch.withRetry(2, sleep = _ => ())(() => { calls += 1; throw new RuntimeException("x") })
+    }
+    assert(calls == 3) // initial + 2 retries
+    var calls2 = 0
+    intercept[IllegalArgumentException] {
+      RemoteFetch.withRetry(5, passThrough = Set(classOf[IllegalArgumentException]),
+        sleep = _ => ())(() => { calls2 += 1; throw new IllegalArgumentException("no-retry") })
+    }
+    assert(calls2 == 1)
+  }
+
+  test("retry: a fatal error is never retried and propagates") {
+    var calls = 0
+    var sleeps = 0
+    intercept[InterruptedException] {
+      RemoteFetch.withRetry(3, sleep = _ => sleeps += 1)(
+        () => { calls += 1; throw new InterruptedException("cancelled") })
+    }
+    assert(calls == 1 && sleeps == 0)
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Corpus, Dedup, Selection, Similarity}
+import graft.operators.{Corpus, Dedup, Selection, SelectionOracles, Similarity}
 
 /** Encoder-visible row type for the streaming diversity-selection test's
   * MemoryStream (the ProbeDoc convention). */
@@ -328,7 +328,6 @@ class SelectionSpec extends AnyFunSuite {
   }
 
   test("rocAuc: hand-computed cases — perfect, inverted, ties, one-class null") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     def auc(rows: Seq[(Double, Long)]): (Option[Double], Long, Long) = {
       val r = Selection.rocAuc(rows.toDF("score", "is_target")).head()
@@ -432,7 +431,7 @@ class SelectionSpec extends AnyFunSuite {
     val out = df.select(col("doc_id"),
         graft.plans.TextExpressions.md5FeatureBuckets(
           col("text"), Selection.DsirBuckets, Selection.DsirSalt).as("k"),
-        transform(Selection.featureStrings(col("text")),
+        transform(SelectionOracles.featureStrings(col("text")),
           f => graft.operators.Corpus.hashBucket(f, Selection.DsirBuckets,
             Selection.DsirSalt).cast("int")).as("c"))
       .collect()
@@ -621,7 +620,7 @@ class SelectionSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[ProbeVec]
     val q = in.toDS().toDF().writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+      (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         val sel = Selection.selectDiverseInc(batch, seeds,
           spark.read.parquet(regDir), 12)
         // Materialize BEFORE the registry append: sel's lineage reads

@@ -1,12 +1,12 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.StreamingOps
+import graft.operators.TimeSeries
 
+/** Event-time sessionization ([[TimeSeries.sessionizeBatch]]) against the
+  * gap semantics of Spark's `session_window`. */
 class StreamingOpsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -25,7 +25,7 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("batch sessionization: gap>30min splits; aggregates per session") {
-    val out = StreamingOps.sessionizeBatch(events, gapMin = 30).collect()
+    val out = TimeSeries.sessionizeBatch(events, gapMin = 30).collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("session_idx")) ->
         (r.getAs[Long]("n_events"), r.getAs[Double]("total_value"))).toMap
     assert(out.size == 4)
@@ -47,84 +47,14 @@ class StreamingOpsSpec extends AnyFunSuite {
       (4L, "2024-01-01 00:30:00.600", 20L, "view", 1.0)) // diff 1800.5s: split
       .toDF("event_id", "ts_s", "user_id", "event_type", "value")
       .withColumn("ts", col("ts_s").cast("timestamp_ntz")).drop("ts_s")
-    val batch = StreamingOps.sessionizeBatch(subSec, gapMin = 30).collect()
+    val batch = TimeSeries.sessionizeBatch(subSec, gapMin = 30).collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events"))).toSeq.sorted
     assert(batch == Seq((10L, 2L), (20L, 1L), (20L, 1L)))
-    // and the streaming twin agrees on the same input
-    val dir = Files.createTempDirectory("graft_stream_subsec").toString
-    subSec.write.mode("overwrite").parquet(dir)
-    val stream = StreamingOps.readEventStream(spark, dir, subSec.schema)
-    val q = StreamingOps.sessionizeStream(stream, gapMin = 30)
-      .writeStream.format("memory").queryName("sess_subsec")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val streamed = spark.table("sess_subsec").collect()
+    // and session_window agrees on the same input
+    val windowed = subSec
+      .groupBy(col("user_id"), session_window(col("ts").cast("timestamp"), "30 minutes"))
+      .agg(count(lit(1)).as("n_events")).collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events"))).toSeq.sorted
-    assert(streamed == batch)
-  }
-
-  test("streaming windowed counts equal the batch aggregation (AvailableNow)") {
-    val dir = Files.createTempDirectory("graft_stream").toString
-    events.write.mode("overwrite").parquet(dir)
-    val stream = StreamingOps.readEventStream(spark, dir, events.schema)
-    val q = StreamingOps.windowedCounts(stream)
-      .writeStream.format("memory").queryName("win_out")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val streamed = spark.table("win_out").collect()
-      .map(r => (r.getAs[java.time.LocalDateTime]("ws"), r.getAs[String]("event_type")) ->
-        (r.getAs[Long]("n"), r.getAs[Double]("total"))).toMap
-    val batch = StreamingOps.windowedCounts(events).collect()
-      .map(r => (r.getAs[java.time.LocalDateTime]("ws"), r.getAs[String]("event_type")) ->
-        (r.getAs[Long]("n"), r.getAs[Double]("total"))).toMap
-    assert(streamed == batch && batch.nonEmpty)
-  }
-
-  test("streaming session_window agrees with batch sessionization boundaries") {
-    val dir = Files.createTempDirectory("graft_stream2").toString
-    events.write.mode("overwrite").parquet(dir)
-    val stream = StreamingOps.readEventStream(spark, dir, events.schema)
-    val q = StreamingOps.sessionizeStream(stream, gapMin = 30)
-      .writeStream.format("memory").queryName("sess_out")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val sessions = spark.table("sess_out").collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events"),
-        r.getAs[Double]("total_value"))).toSet
-    assert(sessions == Set((10L, 2L, 3.0), (10L, 1L, 3.0), (20L, 1L, 4.0), (20L, 2L, 11.0)))
-  }
-
-  test("stateful streaming upsert-classify: create/unchanged/replace across batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.StreamingOps.{ClassifiedValue, KeyedValue}
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[KeyedValue]
-    val q = StreamingOps.classifyStream(in.toDS())
-      .writeStream.format("memory").queryName("cls_out")
-      .outputMode(OutputMode.Update).start()
-    try {
-      in.addData(KeyedValue("k1", 1.0), KeyedValue("k2", 2.0))
-      q.processAllAvailable()
-      in.addData(KeyedValue("k1", 1.0), KeyedValue("k2", 9.0), KeyedValue("k3", 3.0))
-      q.processAllAvailable()
-      val out = spark.table("cls_out").as[ClassifiedValue].collect()
-        .groupBy(c => (c.k, c.value)).view.mapValues(_.map(_.action).toSeq).toMap
-      assert(out(("k1", 1.0)) == Seq("create", "unchanged"))
-      assert(out(("k2", 2.0)) == Seq("create"))
-      assert(out(("k2", 9.0)) == Seq("replace"))
-      assert(out(("k3", 3.0)) == Seq("create"))
-    } finally q.stop()
-  }
-
-  test("streaming dedup within watermark drops key dupes") {
-    val dir = Files.createTempDirectory("graft_stream3").toString
-    events.unionByName(events).write.mode("overwrite").parquet(dir) // every event twice
-    val stream = StreamingOps.readEventStream(spark, dir, events.schema)
-    val q = StreamingOps.dedupWithinWatermark(stream, Seq("event_id"))
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    assert(spark.table("dedup_out").count() == 6)
+    assert(windowed == batch)
   }
 }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
+import graft.functions.{TextFunctions, TextOracles}
 import graft.operators.Corpus
 import graft.plans.TextExpressions
 
@@ -51,7 +51,7 @@ class TextExpressionsSpec extends AnyFunSuite {
     val kernel = docs.select(col("doc_id") +:
       TextFunctions.qualityColumns(col("text")).map { case (n, c) => c.as(n) }: _*)
     val regex = docs.select(col("doc_id") +:
-      TextFunctions.qualityColumnsRegex(col("text")).map { case (n, c) => c.as(n) }: _*)
+      TextOracles.qualityColumnsRegex(col("text")).map { case (n, c) => c.as(n) }: _*)
     assert(kernel.exceptAll(regex).isEmpty && regex.exceptAll(kernel).isEmpty,
       "quality signals mismatch vs regex formulation")
     // standalone tokenCount rides the same kernel field
@@ -78,7 +78,7 @@ class TextExpressionsSpec extends AnyFunSuite {
     val kernel = docs.select(col("doc_id") +:
       TextFunctions.gopherColumns(col("text")).map { case (n, c) => c.as(n) }: _*)
     val regex = docs.select(col("doc_id") +:
-      TextFunctions.gopherColumnsRegex(col("text")).map { case (n, c) => c.as(n) }: _*)
+      TextOracles.gopherColumnsRegex(col("text")).map { case (n, c) => c.as(n) }: _*)
     assert(kernel.exceptAll(regex).isEmpty && regex.exceptAll(kernel).isEmpty,
       "gopher signals mismatch vs regex formulation")
     // spot-check the designed cases against hand counts
@@ -134,7 +134,7 @@ class TextExpressionsSpec extends AnyFunSuite {
     val kernel = docs.select(col("doc_id") +:
       TextFunctions.c4Columns(col("text")).map { case (n, c) => c.as(n) }: _*)
     val hof = docs.select(col("doc_id") +:
-      TextFunctions.c4ColumnsHof(col("text")).map { case (n, c) => c.as(n) }: _*)
+      TextOracles.c4ColumnsHof(col("text")).map { case (n, c) => c.as(n) }: _*)
     assert(kernel.exceptAll(hof).isEmpty && hof.exceptAll(kernel).isEmpty,
       "c4 clean mismatch vs higher-order formulation")
     val m = kernel.collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
@@ -168,7 +168,7 @@ class TextExpressionsSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val docs = both.unionByName(adv)
     val kernel = docs.select(col("doc_id"), TextFunctions.langId(col("text")).as("l"))
-    val regex = docs.select(col("doc_id"), TextFunctions.langIdRegex(col("text")).as("l"))
+    val regex = docs.select(col("doc_id"), TextOracles.langIdRegex(col("text")).as("l"))
     assert(kernel.exceptAll(regex).isEmpty && regex.exceptAll(kernel).isEmpty,
       "langid mismatch vs regex formulation")
   }
@@ -191,11 +191,11 @@ class TextExpressionsSpec extends AnyFunSuite {
       assert(k.exceptAll(f).isEmpty && f.exceptAll(k).isEmpty, s"$label mismatch")
     }
     pin("stripMarkup", TextFunctions.stripMarkup(col("text")),
-      TextFunctions.stripMarkupFolded(col("text")))
+      TextOracles.stripMarkupFolded(col("text")))
     pin("redactPii", TextFunctions.redactPii(col("text")),
-      TextFunctions.redactPiiFolded(col("text")))
+      TextOracles.redactPiiFolded(col("text")))
     pin("normalizeText", TextFunctions.normalizeText(col("text")),
-      TextFunctions.normalizeTextFolded(col("text")))
+      TextOracles.normalizeTextFolded(col("text")))
   }
 
   test("round-10 kernels agree with whole-stage codegen disabled") {
@@ -319,7 +319,7 @@ class TextExpressionsSpec extends AnyFunSuite {
       val hashed = both
         .select(col("doc_id"), posexplode(TextFunctions.wsTokens(col("text"))))
         .select(col("doc_id"), col("pos"), col("col").as("__t"))
-        .withColumn("__h", TextFunctions.strHash32(concat_ws(" ", leads: _*)))
+        .withColumn("__h", TextOracles.strHash32(concat_ws(" ", leads: _*)))
         .withColumn("__tail", leads.last)
         .filter(col("__tail").isNotNull)
         .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), col("__h"))

@@ -3,8 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
-import graft.operators.{Corpus, Dedup, Multimodal, Similarity}
+import graft.functions.{TextFunctions, TextOracles}
+import graft.operators.{Corpus, Dedup, LayoutTestKit, Multimodal, Similarity, SimilarityOracles}
 
 class TrainingDataOpsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -102,7 +102,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
       Array(1f, 0f), Array(0f, 1f), Array(-1f, 0f), Array(0f, -1f))
     val basis = vals.zipWithIndex.map { case (v, i) => (i.toLong, v ++ v) }
       .toDF("vec_id", "embedding")
-    val model = Similarity.trainPq(basis, m = 2, k = 4, iters = 2)
+    val model = SimilarityOracles.trainPq(basis, m = 2, k = 4, iters = 2)
     assert(model.dim == 4 && model.centroids.length == 2 &&
       model.centroids.forall(_.length == 4))
     // corpus: all 16 subvector combinations — same norm √2, every slice ON
@@ -124,7 +124,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
   test("PQ on the embeddings fixture: compresses 64 floats to 8 codes, useful recall") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val q = e.filter(col("vec_id") === 0).head.getSeq[Float](1)
-    val model = Similarity.trainPq(e, m = 8, k = 16, iters = 2)
+    val model = SimilarityOracles.trainPq(e, m = 8, k = 16, iters = 2)
     val encoded = Similarity.pqEncode(e, model)
     assert(encoded.head.getSeq[Int](1).length == 8)
     // the compressed paths are MAP-ONLY: encode fuses into the scan, and
@@ -191,7 +191,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
   test("MRL through the IVF index: full probe+overscan equals brute force; routed serving keeps self") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val q = e.filter(col("vec_id") === 0).head.getSeq[Float](1)
-    val index = Similarity.buildIvfIndex(e, nCells = 8, iters = 1)
+    val index = SimilarityOracles.buildIvfIndex(e, nCells = 8, iters = 1)
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getAs[Double]("cos")))
     // probe ALL cells + corpus-covering overscan: the composed path IS
@@ -248,7 +248,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
       s"query $q lost its self-match through the MRL join route"))
     // composed through the IVF index: all cells + corpus-spanning
     // overscan is again exact, row for row
-    val index = Similarity.buildIvfIndex(corpus, nCells = 8, iters = 1)
+    val index = SimilarityOracles.buildIvfIndex(corpus, nCells = 8, iters = 1)
     assert(triples(Similarity.topKJoinMrlIvf(index, queries, k = 5,
       kDims = 16, overscan = 61, nProbe = 8)) ==
       triples(Similarity.topKJoin(corpus, queries, k = 5)))
@@ -272,7 +272,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     val preDir = java.nio.file.Files.createTempDirectory("mrlpre_ovf").toString
     Similarity.writeMrlPrefixes(e, 16, preDir)
     val prefixes = spark.read.parquet(preDir)
-    val model = Similarity.trainPq(e, m = 8, k = 16, iters = 1)
+    val model = SimilarityOracles.trainPq(e, m = 8, k = 16, iters = 1)
     val encoded = Similarity.pqEncode(e, model)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getAs[Double]("cos"))).toSeq
@@ -366,7 +366,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
         kDims = 16, overscan = 4)
     }
     assertThrows[IllegalArgumentException] {
-      val index = Similarity.buildIvfIndex(corpus, nCells = 4, iters = 1)
+      val index = SimilarityOracles.buildIvfIndex(corpus, nCells = 4, iters = 1)
       Similarity.topKJoinMrlIvf(index, narrowQ, k = 5, kDims = 16,
         overscan = 4, nProbe = 2)
     }
@@ -443,7 +443,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
 
   test("serving layout: two retrain-free increments equal a same-model rebuild, artifact by artifact and at serve") {
     // the job-level composition of the spec-pinned grow functions
-    // (assignToCells / pqEncode / growCellCodes / growMrlPrefixes): build
+    // (assignToCells / pqEncode / buildCellCodes / growMrlPrefixes): build
     // on A, grow with B then C, and the layout must equal a ONE-PASS
     // rebuild of every relation over A∪B∪C under the SAME models — the
     // registry-increment invariance the dedup/packing families already
@@ -490,12 +490,13 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     assert(ids(S.topKMrlPre(prefixes, e, q, k = 10,
       kDims = AnnIndex.MrlDims, overscan = 1000)) == ids(S.topK(e, q, k = 10)))
     val cellCodes = S.readCellCodes(spark, s"$grownDir/cellcodes")
-    val served = S.topKIvfPq(cellCodes, e, ivf, pq, q, k = 10,
-      nProbe = 16, overscan = 100).collect().map(_.getLong(0)).toSet
+    val qDf = Seq((0L, q)).toDF("q_id", "embedding")
+    val served = S.topKJoinIvfPq(cellCodes, e, ivf, pq, qDf, k = 10,
+      nProbe = 16, overscan = 100).collect().map(_.getAs[Long]("vec_id")).toSet
     assert(served == S.topK(e, q, k = 10).collect().map(_.getLong(0)).toSet)
     // production-shaped probe still finds the increment's own vector
-    val probed = S.topKIvfPq(cellCodes, e, ivf, pq, q, k = 10,
-      nProbe = 4, overscan = 10).collect().map(_.getLong(0)).toSet
+    val probed = S.topKJoinIvfPq(cellCodes, e, ivf, pq, qDf, k = 10,
+      nProbe = 4, overscan = 10).collect().map(_.getAs[Long]("vec_id")).toSet
     assert(probed.contains(450L),
       "a grown vector is invisible to the pruned IVF-PQ probe")
     // a mismatched-width increment is rejected LOUDLY at the layout's
@@ -625,7 +626,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     val corpus = e.filter(col("vec_id") < 300)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding"))
-    val model = Similarity.trainPq(e, m = 8, k = 16, iters = 1)
+    val model = SimilarityOracles.trainPq(e, m = 8, k = 16, iters = 1)
     val encoded = Similarity.pqEncode(corpus, model)
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
@@ -644,8 +645,8 @@ class TrainingDataOpsSpec extends AnyFunSuite {
   test("IVF-PQ: model round-trips exactly; full-probe full-overscan equals brute force") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val q = e.filter(col("vec_id") === 0).head.getSeq[Float](1)
-    val ivf = Similarity.buildIvfIndex(e, nCells = 8, iters = 1)
-    val pq = Similarity.trainPq(e, m = 8, k = 16, iters = 1)
+    val ivf = SimilarityOracles.buildIvfIndex(e, nCells = 8, iters = 1)
+    val pq = SimilarityOracles.trainPq(e, m = 8, k = 16, iters = 1)
     val dir = java.nio.file.Files.createTempDirectory("pq_idx").toString
     Similarity.writePqIndex(Similarity.pqEncode(e, pq), pq, dir)
     val (enc2, pq2) = Similarity.readPqIndex(spark, dir)
@@ -655,38 +656,11 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     val cellCodes = Similarity.buildCellCodes(ivf, enc2)
     // probing every cell with a corpus-spanning overscan degrades to brute
     // force — the same bridge argument as the LSH/IVF/PQ full paths
-    val full = Similarity.topKIvfPq(cellCodes, e, ivf, pq2, q, k = 10,
-      nProbe = 8, overscan = 51).collect().map(_.getLong(0)).toSeq
-    val exact = Similarity.topK(e, q, k = 10).collect().map(_.getLong(0)).toSeq
-    assert(full == exact)
-    // the real serving point: few cells, small overscan, still finds the
-    // query vector and returns a full k
-    val approx = Similarity.topKIvfPq(cellCodes, e, ivf, pq2, q, k = 10,
-      nProbe = 3, overscan = 5).collect().map(_.getLong(0))
-    assert(approx.length == 10 && approx.contains(0L))
-    // persisted serving layout: cell directories of m-int codes; a pruned
-    // probe over the PERSISTED relation reads only its nProbe partitions
-    // and returns the same rows as the in-memory relation
-    val ccDir = java.nio.file.Files.createTempDirectory("cellcodes").toString + "/cc"
-    Similarity.writeCellCodes(cellCodes, ccDir)
-    val persisted = Similarity.readCellCodes(spark, ccDir)
-    val probe = Similarity.topKIvfPq(persisted, e, ivf, pq2, q, k = 10,
-      nProbe = 3, overscan = 5)
-    assert(probe.collect().map(_.getLong(0)).toSeq == approx.toSeq)
-    val sc = SparkTestBase.fileScans(probe)
-      .filter(_.relation.location.rootPaths.exists(_.toString.contains("/cc")))
-    assert(sc.nonEmpty && sc.forall(_.partitionFilters.nonEmpty),
-      "IVF-PQ probe must prune cell partitions of the code relation")
-    // incremental growth: new vectors assigned + encoded under the
-    // existing models equal their build-time rows exactly (both steps
-    // deterministic given the models — no retrain, no re-encode of corpus)
-    def ccRows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("cell"),
-        r.getAs[Seq[Int]]("codes"))).toSet
-    val grown = ccRows(Similarity.growCellCodes(ivf, pq2,
-      e.filter(col("vec_id") >= 450)))
-    assert(grown == ccRows(cellCodes.filter(col("vec_id") >= 450)) &&
-      grown.nonEmpty)
+    val full = Similarity.topKJoinIvfPq(cellCodes, e, ivf, pq2,
+      Seq((0L, q)).toDF("q_id", "embedding"), k = 10, nProbe = 8, overscan = 51)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))).toSet
+    assert(rows(full) == rows(Similarity.topK(e, q, k = 10)))
   }
 
   test("fused ANN trainer equals the standalone trainers (build-step bridge)") {
@@ -699,9 +673,9 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     val e300 = e.filter(col("vec_id") < 300)
     val (ivfFull, ivf300, pq) = Similarity.trainAnnModels(
       e, e300, nCells = 16, m = 8, k = 16, iters = 2)
-    val refFull = Similarity.buildIvfIndex(e, nCells = 16, iters = 2)
-    val ref300 = Similarity.buildIvfIndex(e300, nCells = 16, iters = 2)
-    val refPq = Similarity.trainPq(e, m = 8, k = 16, iters = 2)
+    val refFull = SimilarityOracles.buildIvfIndex(e, nCells = 16, iters = 2)
+    val ref300 = SimilarityOracles.buildIvfIndex(e300, nCells = 16, iters = 2)
+    val refPq = SimilarityOracles.trainPq(e, m = 8, k = 16, iters = 2)
     def close(a: Array[Float], b: Array[Float]): Boolean =
       a.length == b.length &&
         a.zip(b).forall { case (x, y) => math.abs(x - y) <= 1e-5f }
@@ -724,8 +698,8 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     val corpus = e.filter(col("vec_id") < 300)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding"))
-    val ivf = Similarity.buildIvfIndex(corpus, nCells = 8, iters = 1)
-    val pq = Similarity.trainPq(e, m = 8, k = 16, iters = 1)
+    val ivf = SimilarityOracles.buildIvfIndex(corpus, nCells = 8, iters = 1)
+    val pq = SimilarityOracles.trainPq(e, m = 8, k = 16, iters = 1)
     val cellCodes = Similarity.buildCellCodes(ivf, Similarity.pqEncode(corpus, pq))
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
@@ -960,7 +934,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     assert(got == want, s"extra=${got.diff(want).take(3)} missing=${want.diff(got).take(3)}")
     // the guarantee: every g-window elected someone => gaps between
     // consecutive selected positions within a doc are < g
-    for ((id, t) <- wdocs) {
+    for ((id, _) <- wdocs) {
       val sel = got.collect { case (i, p) if i == id => p }.toSeq.sorted
       assert(sel.nonEmpty)
       sel.sliding(2).foreach {
@@ -1015,7 +989,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val banded = Dedup.minhashBandedTable(docs, n = 3, numHashes = 16, bands = 4)
-      Dedup.writeBandedTable(banded, "mh_banded", nBuckets = 8)
+      LayoutTestKit.writeBucketed(banded, "mh_banded", Seq("band", "bucket"), 8)
       val persisted = spark.table("mh_banded")
       // identical candidate pairs through the persisted table
       val want = Dedup.minhashLshPairs(docs, n = 3, numHashes = 16, bands = 4)
@@ -1028,7 +1002,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
       val join = a.join(b, col("a.band") === col("b.band") &&
         col("a.bucket") === col("b.bucket") && col("a.doc_id") < col("b.doc_id"))
       assert(join.count() > 0)
-      assert(graft.operators.Layout.isShuffleFree(join),
+      assert(LayoutTestKit.isShuffleFree(join),
         "banded self-join should not shuffle:\n" + join.queryExecution.executedPlan)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
@@ -1387,7 +1361,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     // save → load round-trips; counting under the trained table plugs
     // into bpeCount and genuinely compresses the corpus it was trained on
     val f = java.nio.file.Files.createTempDirectory("trained").resolve("merges.txt")
-    TextFunctions.saveBpeMerges(got, f.toString)
+    TextOracles.saveBpeMerges(got, f.toString)
     assert(TextFunctions.loadBpeMerges(f.toString) == got)
     val agg = docs.agg(
       sum(TextFunctions.bpeCount(col("text"), got)),
@@ -1482,7 +1456,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
 
   test("IVF index: full probe equals exact topK; persisted probes prune cells") {
     val q = vecs.filter(col("vec_id") === 0).head.getSeq[Float](1)
-    val idx = Similarity.buildIvfIndex(vecs, nCells = 4, iters = 2)
+    val idx = SimilarityOracles.buildIvfIndex(vecs, nCells = 4, iters = 2)
     // probing EVERY cell must degrade exactly to brute force
     val full = Similarity.topKIvf(idx, q, k = 5, nProbe = 4).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))).toSeq
@@ -1517,8 +1491,8 @@ class TrainingDataOpsSpec extends AnyFunSuite {
       val a = anchors(i % 8)
       (i.toLong, a.map(v => v + (rnd.nextFloat() - 0.5f) * 0.2f).toSeq)
     }.toDF("vec_id", "embedding")
-    val full = Similarity.buildIvfIndex(many, nCells = 8, iters = 2)
-    val sampled = Similarity.buildIvfIndex(many, nCells = 8, iters = 2, trainPct = 40)
+    val full = SimilarityOracles.buildIvfIndex(many, nCells = 8, iters = 2)
+    val sampled = SimilarityOracles.buildIvfIndex(many, nCells = 8, iters = 2, trainPct = 40)
     // full probe degrades exactly to brute force REGARDLESS of which
     // vectors trained the centroids — the invariant the oracle leans on
     val q0 = many.filter(col("vec_id") === 0).head.getSeq[Float](1)
@@ -1600,7 +1574,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
   test("IVF k-NN join: full probe equals exact topKJoin; one probe finds planted pair") {
     val queries = vecs.filter(col("vec_id") < 2)
       .select(col("vec_id").as("q_id"), col("embedding"))
-    val idx = Similarity.buildIvfIndex(vecs, nCells = 4, iters = 2)
+    val idx = SimilarityOracles.buildIvfIndex(vecs, nCells = 4, iters = 2)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"),
         r.getAs[Double]("cos"))).toSet
@@ -1615,7 +1589,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
   }
 
   test("IVF incremental assignment: increment rows land in their build-time cells") {
-    val idx = Similarity.buildIvfIndex(vecs, nCells = 4, iters = 2)
+    val idx = SimilarityOracles.buildIvfIndex(vecs, nCells = 4, iters = 2)
     // "increment" = a slice of the corpus assigned AFTER the fact: its
     // cells must equal what the full build assigned those same rows
     val inc = vecs.filter(col("vec_id") >= 30)
@@ -1753,37 +1727,19 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     assert(capped == Set((100L, 101L)))
   }
 
-  test("probeBanded: increment pairs equal full-corpus pairs restricted to the increment") {
-    // minhash signatures are per-document, so banding the corpus and the
-    // increment separately must reproduce exactly the full self-join pairs
-    // that touch an increment id (incl. increment-vs-increment)
-    val corpus = docs.filter(col("doc_id") < 4)
-    val increment = docs.filter(col("doc_id") >= 4) // 4 = exact dup of 0
-    val incIds = Set(4L, 5L)
-    val want = Dedup.minhashLshPairs(docs, n = 3, numHashes = 16, bands = 4).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      .filter(p => incIds.contains(p._1) || incIds.contains(p._2))
-    val probe = Dedup.probeBanded(
-        Dedup.minhashBandedTable(increment, n = 3, numHashes = 16, bands = 4),
-        Dedup.minhashBandedTable(corpus, n = 3, numHashes = 16, bands = 4))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(probe == want && probe.nonEmpty)
-  }
-
   test("paragraph registry persisted bucketed: the incremental anti-join reads it in place") {
-    import graft.operators.Layout
     spark.sql("DROP TABLE IF EXISTS para_registry")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val all = Fixtures.paraDocs(spark)
-      Layout.writeBucketed(Dedup.paragraphRegistry(all.filter(col("doc_id") < 5)),
+      LayoutTestKit.writeBucketed(Dedup.paragraphRegistry(all.filter(col("doc_id") < 5)),
         "para_registry", Seq("ph"), 8)
       val inc = Dedup.dedupParagraphsIncremental(
         all.filter(col("doc_id") >= 5), spark.table("para_registry"))
       assert(inc.count() > 0)
       // the registry (corpus-sized at scale) enters the anti-join from its
       // bucketed layout; only the increment shuffles
-      assert(Layout.joinSideShuffleFree(inc, "para_registry"),
+      assert(LayoutTestKit.joinSideShuffleFree(inc, "para_registry"),
         "registry side must not re-shuffle:\n" + inc.queryExecution.executedPlan)
       // checker sanity: an UNBUCKETED registry must fail the assertion
       // (its scan reaches the anti-join through an inserted exchange)
@@ -1793,34 +1749,12 @@ class TrainingDataOpsSpec extends AnyFunSuite {
       val flat = Dedup.dedupParagraphsIncremental(
         all.filter(col("doc_id") >= 5), spark.table("para_registry_flat"))
       flat.count()
-      assert(!Layout.joinSideShuffleFree(flat, "para_registry_flat"),
+      assert(!LayoutTestKit.joinSideShuffleFree(flat, "para_registry_flat"),
         "checker failed to flag a shuffled registry side")
       spark.sql("DROP TABLE IF EXISTS para_registry_flat")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
       spark.sql("DROP TABLE IF EXISTS para_registry")
-    }
-  }
-
-  test("probeBanded against the persisted corpus: corpus side joins exchange-free") {
-    import graft.operators.Layout
-    spark.sql("DROP TABLE IF EXISTS mh_corpus")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      Dedup.writeBandedTable(
-        Dedup.minhashBandedTable(docs.filter(col("doc_id") < 4), n = 3,
-          numHashes = 16, bands = 4), "mh_corpus", nBuckets = 8)
-      val probe = Dedup.probeBanded(
-        Dedup.minhashBandedTable(docs.filter(col("doc_id") >= 4), n = 3,
-          numHashes = 16, bands = 4), spark.table("mh_corpus"))
-      assert(probe.count() > 0)
-      // the 100 TB contract: only the (small) increment shuffles into the
-      // corpus's bucketing — the corpus enters the join from its layout
-      assert(Layout.joinSideShuffleFree(probe, "mh_corpus"),
-        "corpus side must not re-shuffle:\n" + probe.queryExecution.executedPlan)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.sql("DROP TABLE IF EXISTS mh_corpus")
     }
   }
 
@@ -1834,7 +1768,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     val a = (0 until 20).map(i => (i.toLong, Seq(100.0f, 0.2f * i)))
     val b = (20 until 40).map(i => (i.toLong, Seq(0.01f * (i - 20), 1.0f)))
     val emb = (a ++ b :+ (99L, Seq(3.0f, 1.0f))).toDF("vec_id", "embedding")
-    val idx = Similarity.buildIvfIndex(emb, nCells = 4, iters = 2)
+    val idx = SimilarityOracles.buildIvfIndex(emb, nCells = 4, iters = 2)
     val q = Seq(300.0f, 100.0f) // parallel to v, 100× the norm
     val top = Similarity.topKIvf(idx, q, k = 1, nProbe = 1).collect()
     assert(top.head.getLong(0) == 99L, s"nProbe=1 must find the parallel vector, got ${top.toSeq}")
@@ -2059,7 +1993,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     // (the HOF form is the retained spec oracle, mirroring the SQL oracle)
     val nat = Similarity.topKInt8(e, q, 500).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))).toSeq
-    val hof = Similarity.topKInt8Hof(e, q, 500).collect()
+    val hof = SimilarityOracles.topKInt8Hof(e, q, 500).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))).toSeq
     assert(nat == hof, "native int8 cosine diverges from the HOF oracle")
   }
@@ -2234,9 +2168,9 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     def lumaOf(r: Int, g: Int, b: Int) = (r * 299 + g * 587 + b * 114) / 1000
     assert(lumaOf(123, 123, 123) == lumaOf(200, 80, 150))
     val rows = Seq(
-      (1L, "image", Fixtures.bmpSolid(32, 32, 123, 123, 123), 32, 32, 0, "a"),
-      (2L, "image", Fixtures.bmpSolid(32, 32, 200, 80, 150), 32, 32, 0, "b"),
-      (3L, "image", { val x = Fixtures.bmpSolid(32, 32, 200, 80, 150)
+      (1L, "image", TestFixtures.bmpSolid(32, 32, 123, 123, 123), 32, 32, 0, "a"),
+      (2L, "image", TestFixtures.bmpSolid(32, 32, 200, 80, 150), 32, 32, 0, "b"),
+      (3L, "image", { val x = TestFixtures.bmpSolid(32, 32, 200, 80, 150)
         x(2) = 99.toByte; x }, 32, 32, 0, "c")) // header-byte noise, same pixels
       .toDF("media_id", "kind", "payload", "width", "height", "sample_rate", "doc_ref")
     val feats = Multimodal.extractFeatures(rows)

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.TrainingSetConfig
-import graft.operators.Corpus
 
 /** One streamed document row (the foreachBatch wiring test's encoder). */
 case class IncDoc(doc_id: Long, text: String)
