@@ -163,7 +163,7 @@ object AnnIndex {
         // the cellcodes build joins the codes300 LINEAGE, not the written
         // parquet — both writes are independent jobs, submit them as such
         val wCodes300 = Future(tagged(
-          codes300.write.mode("overwrite").parquet(s"$path/codes_300")))
+          Writes(codes300).mode("overwrite").parquet(s"$path/codes_300")))
         tagged(Similarity.writeCellCodes(
           Similarity.buildCellCodes(ivf300, codes300), s"$path/cellcodes_300"))
         Await.result(wCodes300, Duration.Inf)
@@ -422,9 +422,9 @@ object AnnIndex {
     import spark.implicits._
     val d = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    graft.operators.Dedup.substrRegistry(d.filter(col("doc_id") < 250),
-        n = 20, md5Bridge = true)
-      .write.mode("overwrite").parquet(s"$path/registry")
+    Writes(graft.operators.Dedup.substrRegistry(d.filter(col("doc_id") < 250),
+        n = 20, md5Bridge = true))
+      .mode("overwrite").parquet(s"$path/registry")
     Seq(("substr_registry", spark.read.parquet(s"$path/registry").count()))
       .toDF("artifact", "n")
   }
@@ -548,16 +548,16 @@ object AnnIndex {
     // [[buildServingLayout]] from the source corpus.
     val incId = incrementKey(inc, idCol = "vec_id")
     IncProtocol.appendOnce(spark, s"$path/ivf/assignments", incId) {
-      assigned.write.mode("append").partitionBy("cell")
+      Writes(assigned).mode("append").partitionBy("cell")
         .parquet(s"$path/ivf/assignments")
     }
     IncProtocol.appendOnce(spark, s"$path/pq/codes", incId) {
-      encoded.write.mode("append").parquet(s"$path/pq/codes")
+      Writes(encoded).mode("append").parquet(s"$path/pq/codes")
     }
     IncProtocol.appendOnce(spark, s"$path/cellcodes", incId) {
-      Similarity.buildCellCodes(
-          Similarity.IvfIndex(assigned, ivf.centroids), encoded)
-        .write.mode("append").partitionBy("cell").parquet(s"$path/cellcodes")
+      Writes(Similarity.buildCellCodes(
+          Similarity.IvfIndex(assigned, ivf.centroids), encoded))
+        .mode("append").partitionBy("cell").parquet(s"$path/cellcodes")
     }
     IncProtocol.appendOnce(spark, s"$path/prefixes", incId) {
       Similarity.growMrlPrefixes(inc, kDims, s"$path/prefixes")
@@ -626,9 +626,9 @@ object AnnIndex {
     * read BACK from parquet so the build verifiably round-trips. */
   def buildLogregModel(spark: SparkSession, sfDir: String, path: String): DataFrame = {
     import spark.implicits._
-    graft.operators.Selection.logregModel(
-        spark.read.parquet(s"$sfDir/documents.parquet"), col("lang") === "en")
-      .write.mode("overwrite").parquet(s"$path/model")
+    Writes(graft.operators.Selection.logregModel(
+        spark.read.parquet(s"$sfDir/documents.parquet"), col("lang") === "en"))
+      .mode("overwrite").parquet(s"$path/model")
     Seq(("logreg_model", spark.read.parquet(s"$path/model").count()))
       .toDF("artifact", "n")
   }
@@ -688,13 +688,13 @@ object AnnIndex {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val cbgChain = Future(tagged {
-        cbg.write.mode("overwrite").parquet(s"$path/cbg")
-        spark.read.parquet(s"$path/cbg").groupBy(col("w1"))
-          .agg(org.apache.spark.sql.functions.sum(col("c2")).as("c1"))
-          .write.mode("overwrite").parquet(s"$path/cw")
+        Writes(cbg).mode("overwrite").parquet(s"$path/cbg")
+        Writes(spark.read.parquet(s"$path/cbg").groupBy(col("w1"))
+          .agg(org.apache.spark.sql.functions.sum(col("c2")).as("c1")))
+          .mode("overwrite").parquet(s"$path/cw")
       })
       val uniF = Future(tagged(
-        uni.write.mode("overwrite").parquet(s"$path/uni")))
+        Writes(uni).mode("overwrite").parquet(s"$path/uni")))
       Await.result(cbgChain, Duration.Inf); Await.result(uniF, Duration.Inf)
       val counts = Seq("cbg", "cw", "uni").map(a =>
         a -> Future(tagged(spark.read.parquet(s"$path/$a").count())))
@@ -734,9 +734,9 @@ object AnnIndex {
     * only). */
   def buildDsirModel(spark: SparkSession, sfDir: String, path: String): DataFrame = {
     import spark.implicits._
-    graft.operators.Selection.dsirModel(
-        spark.read.parquet(s"$sfDir/documents.parquet"), col("lang") === "en")
-      .write.mode("overwrite").parquet(s"$path/model")
+    Writes(graft.operators.Selection.dsirModel(
+        spark.read.parquet(s"$sfDir/documents.parquet"), col("lang") === "en"))
+      .mode("overwrite").parquet(s"$path/model")
     Seq(("dsir_model", spark.read.parquet(s"$path/model").count()))
       .toDF("artifact", "n")
   }

@@ -114,9 +114,9 @@ object EmbeddingCurationJob {
       val seeds = Similarity.kmeansSeeds(batch, nCells, vecCol, idCol)
       require(seeds.length == nCells,
         s"first batch has only ${seeds.length} vectors for $nCells cells")
-      seeds.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "c").coalesce(1)
-        .write.mode("overwrite").parquet(dir)
+      Writes(seeds.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cell", "c").coalesce(1))
+        .mode("overwrite").parquet(dir)
     }
     spark.read.parquet(dir).orderBy(col("cell")).collect()
       .map(_.getSeq[Float](1).toArray)
@@ -299,7 +299,7 @@ object EmbeddingCurationJob {
       val existing =
         if (fs.exists(sd)) fs.listStatus(sd).map(_.getPath.getName)
           .filter(_.startsWith(prefix)).toSeq
-        else { fs.mkdirs(sd); Seq.empty[String] }
+        else { Writes.mkdirs(spark, stateDir); Seq.empty[String] }
       val cur = prefix + fp
       if (!existing.contains(cur)) {
         require(existing.isEmpty || !verdictDone,
@@ -311,7 +311,8 @@ object EmbeddingCurationJob {
             s"config, or clear $stateDir AND roll back this increment's " +
             "registry appends before re-parameterizing")
         existing.foreach(n => fs.delete(new Path(sd, n), false))
-        fs.create(new Path(sd, cur), false).close()
+        Writes.writeFile(spark, new Path(sd, cur).toString, Array.emptyByteArray,
+          overwrite = false)
       }
     }
     def appendOnce(relDir: String)(write: => Unit): Unit =
@@ -361,7 +362,7 @@ object EmbeddingCurationJob {
               idCol = idCol, checkpointDir = cfg.checkpointDir)
             else Similarity.semanticDedupClustered(floored, centroids, tau,
               vecCol = vecCol, idCol = idCol)
-          s.select(col(idCol)).write.mode("overwrite").parquet(survPath)
+          Writes(s.select(col(idCol))).mode("overwrite").parquet(survPath)
         }
         val pinned = Materialize(
           floored.join(spark.read.parquet(survPath).select(col(idCol)),
@@ -377,13 +378,15 @@ object EmbeddingCurationJob {
     val nDeduped = deduped.count()
 
     // 3. decontamination vs the configured eval set (per-row against an
-    // immutable external set — deterministic on retry)
-    val decontaminated = cfg.evalDir match {
-      case Some(dir) => Similarity.decontaminateSemantic(deduped,
-        spark.read.parquet(dir), cfg.decontCos, vecCol)
-      case None => deduped
+    // immutable external set — deterministic on retry); without one the
+    // stage is the identity and its count is the dedup count
+    val (decontaminated, nDecont) = cfg.evalDir match {
+      case Some(dir) =>
+        val d = Similarity.decontaminateSemantic(deduped,
+          spark.read.parquet(dir), cfg.decontCos, vecCol)
+        (d, d.count())
+      case None => (deduped, nDeduped)
     }
-    val nDecont = decontaminated.count()
 
     // 4. ship-once diversity cap vs the selection registry (which then
     // grows with this increment's selections) — write-ahead like stage 2:
@@ -409,11 +412,11 @@ object EmbeddingCurationJob {
               centroids, spark.read.parquet(selPath), k, vecCol, idCol)
             else Selection.selectDiverse(decontaminated, centroids, k,
               vecCol, idCol)
-          sel.write.mode("overwrite").parquet(shipPath)
+          Writes(sel).mode("overwrite").parquet(shipPath)
         }
         val pinned = spark.read.parquet(shipPath)
         appendOnce(selPath) {
-          pinned.write.mode(if (completed(selPath)) "append" else "overwrite")
+          Writes(pinned).mode(if (completed(selPath)) "append" else "overwrite")
             .parquet(selPath)
         }
         pinned
@@ -427,7 +430,7 @@ object EmbeddingCurationJob {
       Corpus.splitExpr(col("cell"), cfg.trainPct, cfg.valPct).as("split")),
       cfg.checkpointDir)
     appendOnce(curatedDir(outRoot)) {
-      curated.write.mode("append").parquet(curatedDir(outRoot))
+      Writes(curated).mode("append").parquet(curatedDir(outRoot))
     }
     val nCurated = curated.count()
 
@@ -453,7 +456,7 @@ object EmbeddingCurationJob {
           nCells = cfg.layoutCells)
         AnnIndex.markLayoutApplied(spark, tmp.toString, vecs, idCol, vecCol)
         val dst = new Path(lp)
-        Option(dst.getParent).foreach(fs.mkdirs)
+        Option(dst.getParent).foreach(d => Writes.mkdirs(spark, d.toString))
         require(fs.rename(tmp, dst),
           s"publishing the built layout failed: rename $tmp -> $dst")
       } else AnnIndex.growServingLayout(spark, lp, vecs,
@@ -464,10 +467,10 @@ object EmbeddingCurationJob {
       // inc_key rides the ledger row so a fully-applied increment's
       // redelivery can return these exact counts (the short-circuit at
       // entry) without recomputing any verdict
-      Seq((nBatch, nFloored, nDeduped, nDecont, nCurated, incKey))
+      Writes(Seq((nBatch, nFloored, nDeduped, nDecont, nCurated, incKey))
         .toDF("batch_vecs", "floored", "deduped", "decontaminated",
-          "curated", "inc_key")
-        .write.mode("append").parquet(incrementsDir(outRoot))
+          "curated", "inc_key"))
+        .mode("append").parquet(incrementsDir(outRoot))
     }
     Result(nBatch, nFloored, nDeduped, nDecont, nCurated)
   }

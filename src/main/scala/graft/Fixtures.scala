@@ -1068,26 +1068,18 @@ object Fixtures {
 object FixtureGen {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession("graft-fixturegen")
-    Fixtures.wide(spark).coalesce(1)
-      .write.mode("overwrite").parquet(Fixtures.WideParquet)
-    WideMatrix.readCsv(spark, Fixtures.F2Csv).coalesce(1)
-      .write.mode("overwrite").parquet(Fixtures.Wide2Parquet)
-    Fixtures.store(spark).coalesce(1)
-      .write.mode("overwrite").parquet(Fixtures.StoreParquet)
-    Fixtures.storeDup(spark).coalesce(1)
-      .write.mode("overwrite").parquet(Fixtures.StoreDupParquet)
-    graft.operators.Multimodal.withByteStats(Fixtures.media(spark)).coalesce(1)
-      .write.mode("overwrite").parquet(Fixtures.MediaParquet)
-    Fixtures.piiDocs(spark).coalesce(1)
-      .write.mode("overwrite").parquet(Fixtures.PiiParquet)
-    Fixtures.paraDocs(spark).coalesce(1)
-      .write.mode("overwrite").parquet(Fixtures.ParaParquet)
-    Fixtures.messyDocs(spark).coalesce(1)
-      .write.mode("overwrite").parquet(Fixtures.MessyParquet)
-    Fixtures.markupDocs(spark).coalesce(1)
-      .write.mode("overwrite").parquet(Fixtures.MarkupParquet)
-    Fixtures.sentenceDocs(spark).coalesce(1)
-      .write.mode("overwrite").parquet(Fixtures.SentenceParquet)
+    def save(df: org.apache.spark.sql.DataFrame, path: String): Unit =
+      Writes(df.coalesce(1)).mode("overwrite").parquet(path)
+    save(Fixtures.wide(spark), Fixtures.WideParquet)
+    save(WideMatrix.readCsv(spark, Fixtures.F2Csv), Fixtures.Wide2Parquet)
+    save(Fixtures.store(spark), Fixtures.StoreParquet)
+    save(Fixtures.storeDup(spark), Fixtures.StoreDupParquet)
+    save(graft.operators.Multimodal.withByteStats(Fixtures.media(spark)), Fixtures.MediaParquet)
+    save(Fixtures.piiDocs(spark), Fixtures.PiiParquet)
+    save(Fixtures.paraDocs(spark), Fixtures.ParaParquet)
+    save(Fixtures.messyDocs(spark), Fixtures.MessyParquet)
+    save(Fixtures.markupDocs(spark), Fixtures.MarkupParquet)
+    save(Fixtures.sentenceDocs(spark), Fixtures.SentenceParquet)
     spark.stop()
   }
 }

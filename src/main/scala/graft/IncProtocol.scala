@@ -51,10 +51,11 @@ private[graft] object IncProtocol {
     * that already landed instead of double-appending. */
   def appendOnce(spark: SparkSession, relDir: String, incKey: String)(
       write: => Unit): Unit = {
-    val marker = new Path(s"$relDir/$MarkerPrefix$incKey")
-    val fs = FileSystem.get(marker.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) { write; fs.create(marker, false).close() }
+    val marker = s"$relDir/$MarkerPrefix$incKey"
+    if (!exists(spark, marker)) {
+      write
+      Writes.writeFile(spark, marker, Array.emptyByteArray, overwrite = false)
+    }
   }
 
   /** GC the write-ahead state of FULLY-COMPLETED increments under

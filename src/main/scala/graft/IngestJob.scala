@@ -29,25 +29,56 @@ object IngestJob {
   def metadataDir(root: String) = s"$root/metadata"
   def stateDir(root: String) = s"$root/state"
 
-  /** Run one dataset file through scan → classify → reshape → MERGE. */
+  /** Run one dataset file through scan → classify → reshape → MERGE. The
+    * metadata and values merges write separate tables and are both bound
+    * by fixed per-job costs, so they run side by side ([[alongside]]); the
+    * state marker is written only once both have landed. */
   def runFile(spark: SparkSession, ds: DatasetSpec, file: String, root: String,
       location: String, byPosition: Boolean): FileResult = {
     val wide = WideMatrix.readCsv(spark, file)
 
-    val metaRows = if (ds.writeMetadata && !byPosition) {
-      val meta = WideMatrix.metadata(wide, ds, location)
-      // every increment row is classified exactly once, so the stats sum IS
-      // the row count — no second execution of the metadata pipeline
-      KeyedStore.mergeIntoTable(meta, metadataDir(root), Seq("skn"), partitionCol = None)
-        .incrementRows
-    } else 0L
-
-    val values = Reshape.pipeline(WideMatrix.valuesWide(wide, ds, byPosition), ds)
-    val st = KeyedStore.mergeIntoTable(values, valuesDir(root), ds.keyFields,
-      partitionCol = Some("date"), replace = ds.replaceDuplicates)
+    def mergeValues() = KeyedStore.mergeIntoTable(
+      Reshape.pipeline(WideMatrix.valuesWide(wide, ds, byPosition), ds),
+      valuesDir(root), ds.keyFields, partitionCol = Some("date"),
+      replace = ds.replaceDuplicates)
+    val (metaRows, st) =
+      if (ds.writeMetadata && !byPosition) alongside {
+        // every increment row is classified exactly once, so the stats sum
+        // IS the row count — no second execution of the metadata pipeline
+        KeyedStore.mergeIntoTable(WideMatrix.metadata(wide, ds, location),
+          metadataDir(root), Seq("skn"), partitionCol = None).incrementRows
+      }(mergeValues())
+      else (0L, mergeValues())
 
     writeState(spark, root, file, complete = true)
     FileResult(file, st.created, st.replaced, st.unchanged, metaRows)
+  }
+
+  /** Runs `a` on a new driver thread while `b` runs on this one, and
+    * returns once both are done. The thread inherits this thread's Spark
+    * local properties (job group, scheduler pool: they are inheritable
+    * thread-locals) and active session. If either side throws, the first
+    * failure is rethrown, with the other attached as suppressed — after
+    * both have finished, so no job of either is still running. */
+  private def alongside[A, B](a: => A)(b: => B): (A, B) = {
+    val firstError = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    def attempt[T](body: => T): Either[Throwable, T] =
+      try Right(body) catch { case e: Throwable => firstError.compareAndSet(null, e); Left(e) }
+    @volatile var ra: Either[Throwable, A] = null
+    val t = new Thread(() => ra = attempt(a), "graft-ingest-metadata")
+    t.setDaemon(true)
+    t.start()
+    val rb = attempt(b)
+    var interrupted = false
+    while (t.isAlive) try t.join() catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread.interrupt()
+    (ra, rb) match {
+      case (Right(x), Right(y)) => (x, y)
+      case _ =>
+        val first = firstError.get
+        Seq(ra, rb).collect { case Left(e) if e ne first => e }.foreach(first.addSuppressed)
+        throw first
+    }
   }
 
   /** Run the whole job config (outer loop over datasets × files —
@@ -128,14 +159,9 @@ object IngestJob {
   /** Per-file state marker (resume contract, `README.md:41-43`). */
   private def writeState(spark: SparkSession, root: String, file: String,
       complete: Boolean): Unit = {
-    val fs = FileSystem.get(new java.net.URI(root),
-      spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(stateDir(root)))
     val name = java.util.UUID.nameUUIDFromBytes(file.getBytes("UTF-8")).toString
-    val out = fs.create(new Path(s"${stateDir(root)}/$name.json"), true)
-    out.write(s"""{"file": "${jsonEscape(file)}", "complete": $complete}"""
-      .getBytes("UTF-8"))
-    out.close()
+    Writes.writeFile(spark, s"${stateDir(root)}/$name.json",
+      s"""{"file": "${jsonEscape(file)}", "complete": $complete}""".getBytes("UTF-8"))
   }
 
   /** all-complete fold (A7; `utils/all_complete.py:4-12`): AND over the

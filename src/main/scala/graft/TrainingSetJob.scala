@@ -104,13 +104,8 @@ object TrainingSetJob {
 
   /** Small text artifact through the Hadoop FS (outRoot may be hdfs/s3). */
   private def writeTextFile(spark: SparkSession, path: String,
-      body: String): Unit = {
-    val fs = FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new Path(path), true)
-    out.write(body.getBytes("UTF-8"))
-    out.close()
-  }
+      body: String): Unit =
+    Writes.writeFile(spark, path, body.getBytes("UTF-8"))
 
   private def readTextFile(spark: SparkSession, path: String): String = {
     val fs = FileSystem.get(new java.net.URI(path),
@@ -495,10 +490,10 @@ object TrainingSetJob {
         graft.plans.BpeExpressions.bpeEncode(col("chunk_text"), m))
       case None => joined
     }
-    emitted
+    Writes(emitted
       .repartition(cfg.packGroups, col("grp"))
-      .sortWithinPartitions(col("grp"), col("bin"), col("chunk_id"))
-      .write.mode("overwrite").partitionBy("grp").parquet(packedDir(outRoot))
+      .sortWithinPartitions(col("grp"), col("bin"), col("chunk_id")))
+      .mode("overwrite").partitionBy("grp").parquet(packedDir(outRoot))
     markStage("packed")
     }
     val packedBack = spark.read.parquet(packedDir(outRoot))
@@ -512,9 +507,9 @@ object TrainingSetJob {
     // loader mask attention at document boundaries without re-deriving
     // the layout from the packed rows.
     if (cfg.emitBoundaries && !stageDone("boundaries")) {
-      Corpus.packBoundaries(packedBack, cfg.chunkBudget.toLong,
-          "n_tokens", "chunk_id")
-        .write.mode("overwrite").parquet(boundariesDir(outRoot))
+      Writes(Corpus.packBoundaries(packedBack, cfg.chunkBudget.toLong,
+          "n_tokens", "chunk_id"))
+        .mode("overwrite").parquet(boundariesDir(outRoot))
       markStage("boundaries")
     }
     // shipped count from the written shards (the cleaning yield came from
@@ -837,15 +832,15 @@ object TrainingSetJob {
             case Some(sc) =>
               val (cbg, cw, uni) = Corpus.lmRefStratifiedModelRelations(
                 normalized(refRaw.select(col(sc), col("text"))), sc)
-              cbg.write.mode("overwrite").parquet(s"$md/cbg")
-              cw.write.mode("overwrite").parquet(s"$md/cw")
-              uni.write.mode("overwrite").parquet(s"$md/uni")
+              Writes(cbg).mode("overwrite").parquet(s"$md/cbg")
+              Writes(cw).mode("overwrite").parquet(s"$md/cw")
+              Writes(uni).mode("overwrite").parquet(s"$md/uni")
             case None =>
               val (cbg, cw, uni) = Corpus.lmRefModelRelations(
                 normalized(refRaw.select(col("text"))))
-              cbg.write.mode("overwrite").parquet(s"$md/cbg")
-              cw.write.mode("overwrite").parquet(s"$md/cw")
-              uni.write.mode("overwrite").parquet(s"$md/uni")
+              Writes(cbg).mode("overwrite").parquet(s"$md/cbg")
+              Writes(cw).mode("overwrite").parquet(s"$md/cw")
+              Writes(uni).mode("overwrite").parquet(s"$md/uni")
           }
         }
         // cw stays a persisted artifact (one model serves every floor) but
@@ -884,7 +879,7 @@ object TrainingSetJob {
                 fresh0.join(spark.read.parquet(td).select(col(sc)),
                   Seq(sc), "left_anti")
               else fresh0
-              fresh.write.mode(if (completed(td)) "append" else "overwrite")
+              Writes(fresh).mode(if (completed(td)) "append" else "overwrite")
                 .parquet(td)
             }
             scored.join(broadcast(spark.read.parquet(td)), Seq(sc))
@@ -897,7 +892,7 @@ object TrainingSetJob {
             if (!completed(td)) {
               val t = scored.agg(percentile(col("lm_ref"), lit(q)).as("__thr"))
               if (t.head().get(0) != null)
-                t.write.mode("overwrite").parquet(td)
+                Writes(t).mode("overwrite").parquet(td)
             }
             if (completed(td))
               scored.crossJoin(broadcast(spark.read.parquet(td)))
@@ -922,7 +917,7 @@ object TrainingSetJob {
             if (completed(reg)) Dedup.dedupSubstringsIncremental(preSubstr,
               spark.read.parquet(reg), n = w, preserveCase = true)
             else Dedup.dedupSubstrings(preSubstr, n = w, preserveCase = true)
-          cut.write.mode("overwrite").parquet(cutPath)
+          Writes(cut).mode("overwrite").parquet(cutPath)
         }
         appendOnce(reg) {
           // the batch's original windows, anti-joined against the
@@ -932,7 +927,7 @@ object TrainingSetJob {
           val toAdd = if (completed(reg))
             fresh.join(spark.read.parquet(reg), Seq("w"), "left_anti")
           else fresh
-          toAdd.write.mode(if (completed(reg)) "append" else "overwrite")
+          Writes(toAdd).mode(if (completed(reg)) "append" else "overwrite")
             .parquet(reg)
         }
         spark.read.parquet(cutPath)
@@ -956,8 +951,8 @@ object TrainingSetJob {
       val keep = if (completed(exactReg))
         inBatch.join(spark.read.parquet(exactReg), Seq("text_hash"), "left_anti")
       else inBatch
-      keep.select(col("doc_id"), col("text_hash"))
-        .write.mode("overwrite").parquet(exactIdsPath)
+      Writes(keep.select(col("doc_id"), col("text_hash")))
+        .mode("overwrite").parquet(exactIdsPath)
     }
     val exactKept = Materialize(
       gated.join(spark.read.parquet(exactIdsPath).select(idc),
@@ -966,8 +961,8 @@ object TrainingSetJob {
     appendOnce(exactReg) {
       // the kept docs' hashes ARE the batch's registry-fresh hashes
       // (dropped batch docs share a keeper's hash or a registered one)
-      spark.read.parquet(exactIdsPath).select(col("text_hash"))
-        .write.mode(if (completed(exactReg)) "append" else "overwrite")
+      Writes(spark.read.parquet(exactIdsPath).select(col("text_hash")))
+        .mode(if (completed(exactReg)) "append" else "overwrite")
         .parquet(exactReg)
     }
 
@@ -982,16 +977,16 @@ object TrainingSetJob {
           spark.read.parquet(shReg), n = cfg.ngram,
           minJaccard = cfg.minJaccard))
       else internal
-      Dedup.dedupByClusters(exactKept.select(idc), pairs,
-          checkpointDir = cfg.checkpointDir)
-        .write.mode("overwrite").parquet(survIdsPath)
+      Writes(Dedup.dedupByClusters(exactKept.select(idc), pairs,
+          checkpointDir = cfg.checkpointDir))
+        .mode("overwrite").parquet(survIdsPath)
     }
     val survivors = exactKept.join(spark.read.parquet(survIdsPath),
       Seq("doc_id"), "left_semi")
     appendOnce(shReg) {
       // every exact-kept member registers (the every-member contract)
-      Dedup.shingleRelation(exactKept, n = cfg.ngram)
-        .write.mode(if (completed(shReg)) "append" else "overwrite")
+      Writes(Dedup.shingleRelation(exactKept, n = cfg.ngram))
+        .mode(if (completed(shReg)) "append" else "overwrite")
         .parquet(shReg)
     }
 
@@ -1078,20 +1073,20 @@ object TrainingSetJob {
             graft.plans.BpeExpressions.bpeEncode(col("chunk_text"), m))
           case None => joined
         }
-        emitted.write.mode("overwrite").parquet(packedRowsPath)
+        Writes(emitted).mode("overwrite").parquet(packedRowsPath)
         true
       }
     }
     val (nChunks, nBins) = if (!hasTrainChunks) (0L, 0L) else {
       val packedRows = spark.read.parquet(packedRowsPath)
       appendOnce(packedDir(outRoot)) {
-        packedRows
+        // _SUCCESS decides the mode (the shards append's convention):
+        // a crashed first write retries as overwrite, clearing any
+        // orphaned part files instead of appending onto them
+        Writes(packedRows
           .repartition(cfg.packGroups, col("grp"))
-          .sortWithinPartitions(col("grp"), col("bin"), col("chunk_id"))
-          // _SUCCESS decides the mode (the shards append's convention):
-          // a crashed first write retries as overwrite, clearing any
-          // orphaned part files instead of appending onto them
-          .write.mode(if (completed(packedDir(outRoot))) "append"
+          .sortWithinPartitions(col("grp"), col("bin"), col("chunk_id")))
+          .mode(if (completed(packedDir(outRoot))) "append"
             else "overwrite")
           .partitionBy("grp").parquet(packedDir(outRoot))
       }
@@ -1106,19 +1101,19 @@ object TrainingSetJob {
     // boundary rows cannot compose; guarded on the relation actually
     // having committed data) ----
     if (cfg.emitBoundaries && completed(packedDir(outRoot))) {
-      Corpus.packBoundaries(spark.read.parquet(packedDir(outRoot)),
-          cfg.chunkBudget.toLong, "n_tokens", "chunk_id")
-        .write.mode("overwrite").parquet(boundariesDir(outRoot))
+      Writes(Corpus.packBoundaries(spark.read.parquet(packedDir(outRoot)),
+          cfg.chunkBudget.toLong, "n_tokens", "chunk_id"))
+        .mode("overwrite").parquet(boundariesDir(outRoot))
     }
 
     // ---- watermark, then the ledger (its marker is the LAST write) ----
-    b.agg(max(idc).as("max_id"), max(idc.cast("string")).as("max_id_str"))
-      .coalesce(1).write.mode("overwrite").parquet(watermarkDir(outRoot))
+    Writes(b.agg(max(idc).as("max_id"), max(idc.cast("string")).as("max_id_str"))
+      .coalesce(1)).mode("overwrite").parquet(watermarkDir(outRoot))
     appendOnce(incrementsDir(outRoot)) {
-      Seq((nBatch, nGated, nClean, nChunks, nBins, incKey))
+      Writes(Seq((nBatch, nGated, nClean, nChunks, nBins, incKey))
         .toDF("batch_docs", "gated", "clean", "train_chunks", "train_bins",
-          "inc_key")
-        .write.mode("append").parquet(incrementsDir(outRoot))
+          "inc_key"))
+        .mode("append").parquet(incrementsDir(outRoot))
     }
     IncResult(nBatch, nGated, nClean, nChunks, nBins)
     } finally pins.foreach(Materialize.release)
@@ -1126,9 +1121,6 @@ object TrainingSetJob {
 
   private def writeManifest(spark: SparkSession, root: String,
       cfg: TrainingSetConfig, r: Result, idsEmitted: Boolean): Unit = {
-    val fs = FileSystem.get(new java.net.URI(root),
-      spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new Path(manifestPath(root)), true)
     // Jackson, not string concatenation: config strings (lang, strata
     // column) are user input and must be escaped to stay parseable
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -1190,7 +1182,6 @@ object TrainingSetJob {
       val mw = node.putObject("mix_weights")
       cfg.mixWeights.foreach { case (s, w) => mw.put(s, w) }
     }
-    out.write(mapper.writeValueAsBytes(node))
-    out.close()
+    Writes.writeFile(spark, manifestPath(root), mapper.writeValueAsBytes(node))
   }
 }

@@ -6,7 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = GraftSession("graft-verify")
-    new java.io.File(outDir).mkdirs()
+    Writes.mkdirs(spark, outDir)
     // dev-only subset filter (unset in driver runs → full dump)
     val only = sys.env.get("GRAFT_VERIFY_ONLY").map(_.split(",").toSet)
     SparkEntry.queries
@@ -15,7 +15,7 @@ object Verify {
       // NonFatal ONLY (Bench's documented choice): an OOM/StackOverflow
       // must abort the dump loudly, not degrade ~125 later queries into
       // mass failures against a broken JVM with the root cause buried
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      try Writes(fn(spark, sfDir).coalesce(1)).mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
+import graft.Writes
+
 /**
  * Maintenance compaction for the engine's persisted partitioned
  * relations — the incremental registries (semdedup, selection, substr
@@ -44,8 +46,8 @@ object Compaction {
       partitionCols: Seq[String]): (Long, Long) = {
     require(partitionCols.nonEmpty, "compactPartitioned: no partition columns")
     // one task per partition value -> one file per partition directory
-    rewrite(spark, path, df => df.repartition(partitionCols.map(col): _*)
-      .write.partitionBy(partitionCols: _*))
+    rewrite(spark, path, df => Writes(df.repartition(partitionCols.map(col): _*))
+      .partitionBy(partitionCols: _*))
   }
 
   /** [[compactPartitioned]] preserving a WITHIN-PARTITION sort order —
@@ -57,9 +59,9 @@ object Compaction {
   def compactPartitionedSorted(spark: SparkSession, path: String,
       partitionCols: Seq[String], sortCols: Seq[String]): (Long, Long) = {
     require(partitionCols.nonEmpty, "compactPartitionedSorted: no partition columns")
-    rewrite(spark, path, df => df.repartition(partitionCols.map(col): _*)
-      .sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
-      .write.partitionBy(partitionCols: _*))
+    rewrite(spark, path, df => Writes(df.repartition(partitionCols.map(col): _*)
+      .sortWithinPartitions((partitionCols ++ sortCols).map(col): _*))
+      .partitionBy(partitionCols: _*))
   }
 
   /** [[compactPartitioned]] for UNPARTITIONED append-grown relations
@@ -68,7 +70,7 @@ object Compaction {
   def compactPlain(spark: SparkSession, path: String,
       targetFiles: Int = 1): (Long, Long) = {
     require(targetFiles > 0, s"compactPlain: targetFiles must be > 0")
-    rewrite(spark, path, df => df.repartition(targetFiles).write)
+    rewrite(spark, path, df => Writes(df.repartition(targetFiles)))
   }
 
   private def rewrite(spark: SparkSession, path: String,
@@ -127,9 +129,10 @@ object Compaction {
     fs.listStatus(p).filter(s => s.isFile &&
         s.getPath.getName.startsWith("_") && s.getPath.getName != "_SUCCESS")
       .foreach { s =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, s.getPath, fs,
-          new Path(tmp, s.getPath.getName), false, false,
-          spark.sparkContext.hadoopConfiguration)
+        val in = fs.open(s.getPath)
+        val body = try in.readAllBytes() finally in.close()
+        Writes.writeFile(spark, new Path(tmp, s.getPath.getName).toString, body,
+          overwrite = false)
       }
 
     val old = new Path(path + "__compact_old")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Writes
 import graft.functions.{Quantize, TextFunctions}
 import graft.plans.TextExpressions
 
@@ -502,10 +503,10 @@ object Corpus {
     // internally sort_key-ordered — the shard's global hash order holds
     // per file, not across files; readers that need one sorted stream
     // per shard re-sort in-shard, readers that need the SET don't care)
-    shardAssign(docs, nShards, idCol)
+    Writes(shardAssign(docs, nShards, idCol)
       .repartition(nShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("sort_key"))
-      .write.mode(mode).partitionBy("shard").parquet(path)
+      .sortWithinPartitions(col("shard"), col("sort_key")))
+      .mode(mode).partitionBy("shard").parquet(path)
 
   /**
    * Bloom-filter decontamination — the shape for a LARGE reference set.

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Writes
+
 /**
  * Keyed document store + join-based MERGE — the engine's replacement for the
  * reference's `V3Handler` (`src/modules/ingestion_handler.py`), SURVEY §2.4.
@@ -267,6 +269,15 @@ object KeyedStore {
    *  3. dynamic partition overwrite rewrites exactly those partitions —
    *     untouched partitions of a 100 TB store are never read or written.
    *
+   * Write layout: every partition directory gets exactly one file, written
+   * by one of the session's `spark.sql.shuffle.partitions` tasks. A first
+   * load hashes the increment on the partition column before the dedup
+   * (whose window reuses that exchange, since the partition column is a
+   * key), and a merge spanning more than one partition value hashes the
+   * merged frame the same way before it is materialized. Without that, AQE
+   * coalesces a small load's shuffle into ONE task that writes every
+   * partition file alone. A one-partition merge needs no such exchange.
+   *
    * Re-running the same increment is a no-op (stats all-unchanged), which
    * is the reference's documented-but-unimplemented resume contract
    * (`README.md:41-43`) for free. With `strictKeys` (default), a store
@@ -286,13 +297,18 @@ object KeyedStore {
     // Similarity write path had: concurrent merges could capture each
     // other's temporary value and leave the session in dynamic mode).
     def write(df: DataFrame, dynamic: Boolean): Unit = {
-      val w = df.write.mode("overwrite")
+      val w = Writes(df).mode("overwrite")
       val wm = if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w
       partitionCol match {
         case Some(p) => wm.partitionBy(p).parquet(storeDir)
         case None => wm.parquet(storeDir)
       }
     }
+    // each partition value lands in exactly one of n tasks: one file per
+    // partition directory, written from every core (a user-numbered
+    // repartition, which AQE does not coalesce)
+    def byPartition(df: DataFrame): DataFrame = partitionCol.fold(df)(p =>
+      df.repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col(p)))
 
     // The partition-pruned slice reads ONLY the increment's partition
     // values, which is sound iff the partition column is part of the key:
@@ -304,23 +320,25 @@ object KeyedStore {
       s"mergeIntoTable: partitionCol '$p' must be one of keyCols " +
         s"${keyCols.mkString("[", ",", "]")} — the partition-pruned merge " +
         "slice is only correct when key equality pins the partition"))
-    val inc = dedupIncrement(incoming, keyCols)
     if (!fs.exists(new org.apache.hadoop.fs.Path(storeDir))) {
       // created-row count observed DURING the streaming write (one pass,
       // no materialization): a first bulk load may be the whole dataset,
       // and checkpointing it just to count would pin dataset-sized blocks
       // in executor storage + double the write amplification
       val obs = org.apache.spark.sql.Observation()
-      write(inc.withColumn("uuid", md5(keyConcat(keyCols)))
+      write(dedupIncrement(byPartition(incoming), keyCols)
+        .withColumn("uuid", md5(keyConcat(keyCols)))
         .observe(obs, count(lit(1)).as("n")), dynamic = false)
       MergeStats(obs.get("n").asInstanceOf[Long], 0L, 0L)
     } else {
+      val inc = dedupIncrement(incoming, keyCols)
       val existing = spark.read.parquet(storeDir)
-      val slice = partitionCol match {
+      val (slice, multiPartition) = partitionCol match {
         case Some(p) =>
           val parts = inc.select(col(p)).distinct().collect().map(_.get(0))
-          existing.filter(partitionSlicePred(p, parts)) // → partition pruning
-        case None => existing
+          // → partition pruning
+          (existing.filter(partitionSlicePred(p, parts)), parts.length > 1)
+        case None => (existing, false)
       }
       // ONE scan of the slice: the merge plan materializes here (which
       // also fires the strict-key guard), then stats and the overwrite
@@ -328,8 +346,8 @@ object KeyedStore {
       // lineage so the overwrite doesn't read from the path it writes.
       // Long cluster runs pass `checkpointDir` for a reliable checkpoint
       // (localCheckpoint blocks die with a lost executor — Materialize).
-      val j = Materialize(
-        mergedWithAction(inc, slice, keyCols, replace, strictKeys), checkpointDir)
+      val merged = mergedWithAction(inc, slice, keyCols, replace, strictKeys)
+      val j = Materialize(if (multiPartition) byPartition(merged) else merged, checkpointDir)
       val st = j.filter(col("__action").isNotNull)
         .groupBy(col("__action")).agg(count(lit(1)).as("n")).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Writes
 import graft.functions.{Quantize, TextFunctions}
 
 /**
@@ -521,14 +522,14 @@ object Selection {
     val (classes, priors, perTerm) =
       trainNbTerms(train, classCol, textCol, vocabCap, "writeNbModel")
     val k = classes.length
-    perTerm.select(col("__t").as("term"), col("cnts"))
-      .write.mode("overwrite").parquet(s"$path/terms")
-    spark.read.parquet(s"$path/terms")
+    Writes(perTerm.select(col("__t").as("term"), col("cnts")))
+      .mode("overwrite").parquet(s"$path/terms")
+    Writes(spark.read.parquet(s"$path/terms")
       .agg(array((0 until k).map(i => sum(element_at(col("cnts"), i + 1))): _*).as("nc"),
         count(lit(1)).cast("double").as("v"))
       .select(array(classes.map(lit): _*).as("classes"), col("nc"), col("v"),
-        array(priors.map(lit): _*).as("priors"))
-      .write.mode("overwrite").parquet(s"$path/meta")
+        array(priors.map(lit): _*).as("priors")))
+      .mode("overwrite").parquet(s"$path/meta")
   }
 
   /** Route documents against a persisted [[writeNbModel]] artifact:

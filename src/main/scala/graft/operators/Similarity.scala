@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Writes
 import graft.functions.Quantize
 
 /**
@@ -210,8 +211,8 @@ object Similarity {
   private def writePartitionedParallel(df: DataFrame, parts: Seq[String],
       path: String): Unit = {
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    df.repartition(n, parts.map(col): _*)
-      .write.mode("overwrite").partitionBy(parts: _*).parquet(path)
+    Writes(df.repartition(n, parts.map(col): _*))
+      .mode("overwrite").partitionBy(parts: _*).parquet(path)
   }
 
   /** Read a persisted index back; feed to `topKLsh` / `nearDupPairsFromIndex`.
@@ -353,8 +354,8 @@ object Similarity {
     // one writing task per cell directory, parallel commit — see
     // [[writeLshIndex]] / [[writePartitionedParallel]]
     writePartitionedParallel(index.assignments, Seq("cell"), s"$path/assignments")
-    index.centroids.toSeq.toDF("cell", "cvec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    Writes(index.centroids.toSeq.toDF("cell", "cvec").coalesce(1))
+      .mode("overwrite").parquet(s"$path/centroids")
   }
 
   def readIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
@@ -550,8 +551,8 @@ object Similarity {
 
   def writeMrlPrefixes(embeddings: DataFrame, kDims: Int, path: String,
       vecCol: String = "embedding", idCol: String = "vec_id"): Unit =
-    mrlProjection(embeddings, kDims, vecCol, idCol)
-      .write.mode("overwrite").parquet(path)
+    Writes(mrlProjection(embeddings, kDims, vecCol, idCol))
+      .mode("overwrite").parquet(path)
 
   def readMrlPrefixes(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = spark.read.parquet(path)
@@ -596,8 +597,8 @@ object Similarity {
             "route dot silently nulls out; re-embed the increment or " +
             "rebuild the relation at the narrower width")
       }
-    mrlProjection(increment, kDims, vecCol, idCol)
-      .write.mode("append").parquet(path)
+    Writes(mrlProjection(increment, kDims, vecCol, idCol))
+      .mode("append").parquet(path)
   }
 
   /** Guard against a width drift between the persisted prefix relation
@@ -1352,7 +1353,11 @@ object Similarity {
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     val shortlist = Selection.topKBy(adcScores(encoded, model, query, idCol),
       "approx_cos", idCol, k.toLong * overscan).select(col(idCol))
-    topK(embeddings.join(broadcast(shortlist), idCol), query, k, vecCol, idCol)
+    // the route runs once, and the join strategy follows the shortlist's
+    // size (broadcast at or below the collect cap, shuffle-hash above it)
+    val (pinned, idFilter) = materializeShortlist(shortlist, idCol)
+    topK(pinned.join(idFilter.map(embeddings.filter).getOrElse(embeddings), idCol),
+      query, k, vecCol, idCol)
   }
 
   /** Persist codes + codebooks; exact model round-trip like
@@ -1365,11 +1370,11 @@ object Similarity {
   def writePqIndex(encoded: DataFrame, model: PqModel, path: String): Unit = {
     val spark = encoded.sparkSession
     import spark.implicits._
-    encoded.write.mode("overwrite").parquet(s"$path/codes")
+    Writes(encoded).mode("overwrite").parquet(s"$path/codes")
     val rows = for (mi <- 0 until model.m; ci <- 0 until model.k)
       yield (mi, ci, model.centroids(mi)(ci).toSeq)
-    rows.toDF("m", "code", "cvec").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/model")
+    Writes(rows.toDF("m", "code", "cvec").coalesce(1))
+      .mode("overwrite").parquet(s"$path/model")
   }
 
   def readPqIndex(spark: org.apache.spark.sql.SparkSession,
@@ -1854,13 +1859,13 @@ object Similarity {
       append: Boolean = false,
       prunedAssign: Option[(Int, Int)] = None): Unit = {
     require(centroids.nonEmpty, "writeSemanticRegistry: no centroids")
-    assignWithNorm(embeddings, centroids, vecCol, idCol, prunedAssign)
+    // append = the production micro-batch loop: after probing, a batch's
+    // members (ALL of them — see the every-member contract above) join
+    // the registry so later batches dedup against them too
+    Writes(assignWithNorm(embeddings, centroids, vecCol, idCol, prunedAssign)
       .withColumnRenamed("__n", "nrm")
-      .repartition(col("cell"))
-      // append = the production micro-batch loop: after probing, a batch's
-      // members (ALL of them — see the every-member contract above) join
-      // the registry so later batches dedup against them too
-      .write.mode(if (append) "append" else "overwrite")
+      .repartition(col("cell")))
+      .mode(if (append) "append" else "overwrite")
       .partitionBy("cell").parquet(path)
   }
 

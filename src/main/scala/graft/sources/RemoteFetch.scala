@@ -6,7 +6,7 @@ import java.time.Duration
 
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /**
@@ -94,8 +94,7 @@ object RemoteFetch {
     val dir = stagingDir.getOrElse("file:" + System.getProperty("java.io.tmpdir"))
     val ext = urlExtension(url)
     val name = java.util.UUID.nameUUIDFromBytes(url.getBytes("UTF-8")).toString
-    val dest = new Path(s"$dir/graft_fetch_$name$ext")
-    val fs = FileSystem.get(new URI(dir), spark.sparkContext.hadoopConfiguration)
+    val dest = new Path(s"$dir/graft_fetch_$name$ext").toString
     withRetry(retries,
         passThrough = Set(classOf[ClientErrorException])) { () =>
       val req = HttpRequest.newBuilder(URI.create(url)).GET().build()
@@ -112,11 +111,11 @@ object RemoteFetch {
           throw new ClientErrorException(msg)
         throw new java.io.IOException(msg)
       }
-      val out = fs.create(dest, true)
+      val out = graft.Writes.create(spark, dest, overwrite = true)
       try res.body().transferTo(out)
       finally { out.close(); res.body().close() }
     }
-    dest.toString
+    dest
   }
 
   /** Local/remote dispatch: http(s) URLs spool through staging; anything

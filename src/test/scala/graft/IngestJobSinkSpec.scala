@@ -40,6 +40,25 @@ class IngestJobSinkSpec extends AnyFunSuite {
     assert(IngestJob.allComplete(spark, root))
   }
 
+  test("a metadata merge that raises RecordKeyException fails runFile and writes no state marker") {
+    val root = Files.createTempDirectory("graft_store_dupmeta").toString
+    val cfg = JobConfig.parse(configJson)
+    IngestJob.run(spark, cfg, root)
+    // every station key twice in the metadata table; the run's marker gone
+    val meta = spark.read.parquet(IngestJob.metadataDir(root))
+    val rows = meta.collect()
+    spark.createDataFrame(java.util.Arrays.asList(rows ++ rows: _*), meta.schema)
+      .write.mode("overwrite").parquet(IngestJob.metadataDir(root))
+    val state = new java.io.File(IngestJob.stateDir(root))
+    state.listFiles.foreach(_.delete())
+    val e = intercept[Exception](IngestJob.run(spark, cfg, root))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("RecordKeyException")), e)
+    assert(state.listFiles.isEmpty && !IngestJob.allComplete(spark, root))
+    // both merges were joined before the failure surfaced
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+  }
+
   test("partitioned store: only increment partitions rewritten") {
     val root = Files.createTempDirectory("graft_store2").toString
     import spark.implicits._

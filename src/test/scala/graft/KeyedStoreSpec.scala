@@ -231,6 +231,32 @@ class KeyedStoreSpec extends AnyFunSuite {
     assert(rows == Map("s1" -> 10.0, "s2" -> 2.0, "s3" -> 3.0, "s4" -> 4.0))
   }
 
+  test("mergeIntoTable layout: a 90-day first load and a multi-day re-ingest write one file per date, from several tasks") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("store_layout").toString + "/t"
+    val days = (0 until 90).map(d => java.time.LocalDate.of(2022, 1, 1).plusDays(d).toString)
+    val df = (for (d <- days; s <- 0 until 20) yield ("t", "day", "raw", s"s$s", d, s.toDouble))
+      .toDF("datatype", "period", "fill", "station_id", "date", "value")
+    val keys = Seq("datatype", "period", "date", "fill", "station_id")
+    // (every date dir holds exactly one parquet file, distinct writer tasks)
+    def layout(dates: Seq[String]): (Boolean, Int) = {
+      val files = dates.map(d => new java.io.File(s"$dir/date=$d").listFiles
+        .map(_.getName).filter(_.endsWith(".parquet")).toSeq)
+      (files.forall(_.size == 1),
+        files.flatten.map(_.split("-")(1)).distinct.size) // part-<task>-…
+    }
+    assert(KeyedStore.mergeIntoTable(df, dir, keys) == KeyedStore.MergeStats(1800, 0, 0))
+    val (oneFile, tasks) = layout(days)
+    assert(oneFile && tasks > 1, s"first load: one file per date $oneFile, tasks $tasks")
+    // re-ingest 30 days with two stations revised on each
+    val re = df.filter(col("date") < days(30)).withColumn("value",
+      when(col("station_id").endsWith("4"), col("value") + 1).otherwise(col("value")))
+    assert(KeyedStore.mergeIntoTable(re, dir, keys) == KeyedStore.MergeStats(0, 60, 540))
+    val (oneFile2, tasks2) = layout(days.take(30))
+    assert(oneFile2 && tasks2 > 1, s"re-ingest: one file per date $oneFile2, tasks $tasks2")
+    assert(layout(days)._1 && spark.read.parquet(dir).count() == 1800)
+  }
+
   test("paginate: early pages plan as TakeOrderedAndProject, never a global window") {
     import spark.implicits._
     val df = (1 to 500).map(i => (f"k$i%04d", i)).toDF("k", "v")

@@ -22,23 +22,25 @@ object MainSources {
     finally s.close()
   }
 
-  def stripComments(src: String): String =
-    "(?s)/\\*.*?\\*/|(?<!:)//[^\n]*".r
-      .replaceAllIn(src, m => m.matched.filter(_ == '\n') match {
-        case "" => " "
-        case newlines => newlines
-      })
+  /** `src` with comments blanked and everything else, string-literal
+    * text included, kept as it is. The same one-pass scan as
+    * [[codeView]], so a `//` inside a string literal is not a comment. */
+  def stripComments(src: String): String = scan(src, keepStrings = true)
 
   /** `src` with comments, string-literal text and character literals
     * blanked, but the code inside interpolations (`$x`, `${…}`) kept. One
-    * left-to-right scan: unlike [[stripComments]], a `//` inside a string
-    * literal (say, SQL's `// 64`) is not read as a comment. Block comments
-    * nest, as in Scala. */
-  def codeView(src: String): String = {
+    * left-to-right scan: a `//` inside a string literal (say, SQL's
+    * `// 64`) is not read as a comment. Block comments nest, as in Scala. */
+  def codeView(src: String): String = scan(src, keepStrings = false)
+
+  private def scan(src: String, keepStrings: Boolean): String = {
     val out = new StringBuilder(src.length)
     val n = src.length
     def blank(from: Int, until: Int): Unit =
       (from until until).foreach(k => out += (if (src(k) == '\n') '\n' else ' '))
+    // literal text: kept or blanked
+    def lit(from: Int, until: Int): Unit =
+      if (keepStrings) out ++= src.substring(from, until) else blank(from, until)
     def isIdent(c: Char) = c.isLetterOrDigit || c == '_'
 
     // code from `i`; with `inBraces`, stops at the `}` closing an
@@ -64,7 +66,7 @@ object MainSources {
           i = string(i)
         } else if (c == '\'' && charLiteralEnd(i) > 0) {
           val e = charLiteralEnd(i)
-          blank(i, e); i = e
+          lit(i, e); i = e
         } else if (inBraces && c == '}' && depth == 0) {
           return i
         } else {
@@ -89,30 +91,30 @@ object MainSources {
       val interpolated = i > 0 && isIdent(src(i - 1))
       val triple = src.startsWith("\"\"\"", i)
       val q = if (triple) 3 else 1
-      blank(i, i + q)
+      lit(i, i + q)
       var j = i + q
       while (j < n) {
         if (triple && src.startsWith("\"\"\"", j)) {
           var e = j + 3
           while (e < n && src(e) == '"') e += 1 // `""""` closes on the last three
-          blank(j, e); return e
+          lit(j, e); return e
         } else if (!triple && src(j) == '"') {
-          blank(j, j + 1); return j + 1
+          lit(j, j + 1); return j + 1
         } else if (!triple && src(j) == '\\') {
-          blank(j, math.min(j + 2, n)); j += 2
+          lit(j, math.min(j + 2, n)); j += 2
         } else if (interpolated && src(j) == '$' && j + 1 < n) {
           if (src(j + 1) == '{') {
-            blank(j, j + 1); out += '{'
+            lit(j, j + 1); out += '{'
             val close = code(j + 2, inBraces = true)
             if (close < n) out += '}'
             j = close + 1
           } else if (src(j + 1).isLetter || src(j + 1) == '_') {
-            blank(j, j + 1)
+            lit(j, j + 1)
             var e = j + 1
             while (e < n && isIdent(src(e))) e += 1
             out ++= src.substring(j + 1, e); j = e
-          } else { blank(j, j + 2); j += 2 } // `$$`, `$"`
-        } else { blank(j, j + 1); j += 1 }
+          } else { lit(j, j + 2); j += 2 } // `$$`, `$"`
+        } else { lit(j, j + 1); j += 1 }
       }
       j
     }

@@ -192,6 +192,32 @@ class PlanLintSpec extends AnyFunSuite {
       "red-proof drifted: a broadcast-hinted pin should be flagged")
   }
 
+  /** The single-query PQ serve routes its `k·overscan` shortlist through
+    * the same valve: above the collect cap, no BroadcastExchange carries
+    * the pinned shortlist into the rerank. */
+  test("topKPqRescored above the collect cap: no BroadcastExchange over the shortlist") {
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.functions.{array, col, cos, lit, sin}
+    import graft.operators.Similarity
+    val n = Similarity.ShortlistCollectCap + 50
+    val e = spark.range(n).select(col("id").as("vec_id"), array(
+      Seq(sin(col("id")), cos(col("id")), sin(col("id") * 3), lit(0.5))
+        .map(_.cast("float")): _*).as("embedding"))
+    val books = Array.tabulate(2, 2, 2)((m, c, i) => (m + c + i % 2).toFloat - 1f)
+    val model = Similarity.PqModel(2, 2, 4, books)
+    val q = Seq(1f, 0f, 0f, 0.5f)
+    // k · overscan = cap + 50 shortlist rows → the above-cap branch
+    val df = Similarity.topKPqRescored(Similarity.pqEncode(e, model), e, model, q,
+      k = 10, overscan = n / 10)
+    assert(df.count() == 10)
+    val overPin = SparkTestBase.planSeq(df.queryExecution.executedPlan).collect {
+      case b: BroadcastExchangeExec
+          if SparkTestBase.planSeq(b).exists(_.isInstanceOf[RDDScanExec]) => b
+    }
+    assert(overPin.isEmpty, "a BroadcastExchange carries the pinned PQ shortlist")
+  }
+
   /** Above [[Selection.TopKMergeCap]], the weighted selectors must not
     * plan TakeOrderedAndProject: its final merge concentrates the full
     * k-row result in one task — fine at "top 10k", a driver-side funnel

@@ -12,9 +12,21 @@ class SessionLintSpec extends AnyFunSuite {
     assert(sources.exists(_._1.getFileName.toString == "GraftSession.scala"))
   }
 
+  private def buildsSession(src: String): Boolean =
+    "SparkSession\\s*\\.\\s*builder\\b".r.findFirstIn(src).nonEmpty
+
+  test("positive control: a builder after a `//` inside a string is still seen") {
+    assert(buildsSession(MainSources.stripComments(
+      "val q = \"a // b\"; SparkSession.builder()")))
+    assert(!buildsSession(MainSources.stripComments("// SparkSession.builder()")))
+    // string text is kept: the SPARK_MASTER check reads it
+    assert(MainSources.stripComments("sys.env(\"SPARK_MASTER\") // x")
+      .contains("\"SPARK_MASTER\""))
+  }
+
   test("SparkSession.builder appears only in GraftSession.scala") {
     val offenders = sources.collect {
-      case (p, src) if "SparkSession\\s*\\.\\s*builder\\b".r.findFirstIn(src).nonEmpty &&
+      case (p, src) if buildsSession(src) &&
         p.getFileName.toString != "GraftSession.scala" => p.toString
     }
     assert(offenders.isEmpty, s"build the session with GraftSession(appName): $offenders")
