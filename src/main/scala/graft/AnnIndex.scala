@@ -101,46 +101,25 @@ object AnnIndex {
    */
   def buildAll(spark: SparkSession, sfDir: String, path: String): DataFrame = {
     import spark.implicits._
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     val e = embeddingsOf(spark, sfDir)
     val corpus300 = e.filter(col("vec_id") < 300)
     // The seven artifacts form a shallow dependency graph — the two LSH
     // and two IVF builds are independent of each other and of the PQ
     // chain (train → encode → cellcodes, which also needs ivf_300) — so
-    // submit them as concurrent Spark jobs: the scheduler interleaves
-    // their stages across the executor cores and wall-clock drops to the
-    // PQ critical path. Each build depends only on its inputs and every
-    // step is deterministic, so concurrency cannot change any artifact
-    // byte (the *_full bridge oracles would catch it if it could). At
-    // cluster scale each training pass saturates the executors and the
-    // overlap matters less, but concurrent submission never hurts: FIFO
-    // scheduling drains the independent DAGs back-to-back.
-    // 8 threads: 2 LSH futures + the training future's continuation
-    // (which blocks holding a slot) + its 4 nested write futures
-    // (wIvfFull, wIvf300, encodeFull, wCodes300) = 7 concurrent tasks
-    // worst case — sized so a child can never wait on a queue slot held
-    // by its own blocked parent. Re-count this arithmetic before adding
-    // another nested future.
-    // Every future tags its jobs with one cancellable job group: on a
-    // failed Await the catch cancels the GROUP, which stops siblings'
-    // in-flight Spark jobs — interrupting the submitting threads alone
-    // (the previous posture) only abandoned their JobWaiters and left
-    // the jobs writing under `path` (r20 review).
-    val sc = spark.sparkContext
-    val group = s"ann_build_${ProcessHandle.current().pid()}_" +
-      java.util.UUID.randomUUID().toString.take(8)
-    def tagged[T](f: => T): T = {
-      sc.setJobGroup(group, "sim_index_build", interruptOnCancel = true)
-      try f finally sc.clearJobGroup()
-    }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val lshF = Future(tagged(Similarity.writeLshIndex(
-        Similarity.buildLshIndex(e, dim = Dim), s"$path/lsh_full")))
-      val lsh3 = Future(tagged(Similarity.writeLshIndex(
-        Similarity.buildLshIndex(corpus300, dim = Dim), s"$path/lsh_300")))
+    // submit them as concurrent Spark jobs ([[Overlap]]): the scheduler
+    // interleaves their stages across the executor cores and wall-clock
+    // drops to the PQ critical path. Each build depends only on its inputs
+    // and every step is deterministic, so concurrency cannot change any
+    // artifact byte (the *_full bridge oracles would catch it if it
+    // could). At cluster scale each training pass saturates the executors
+    // and the overlap matters less, but concurrent submission never hurts:
+    // FIFO scheduling drains the independent DAGs back-to-back.
+    val (_, (ivfFull, ivf300, pq, codes300)) = Overlap.both(spark)(
+      Overlap.all(spark)(Seq(
+        () => Similarity.writeLshIndex(
+          Similarity.buildLshIndex(e, dim = Dim), s"$path/lsh_full"),
+        () => Similarity.writeLshIndex(
+          Similarity.buildLshIndex(corpus300, dim = Dim), s"$path/lsh_300"))), {
       // ONE fused training pass drives both IVF models and the PQ
       // codebooks (Similarity.trainAnnModels): one seed collect for the
       // full side, one aggregation job per Lloyd round instead of three —
@@ -148,49 +127,30 @@ object AnnIndex {
       // model (trained on the full set — what every declared pq query
       // uses), TWO code relations: full-corpus codes for the single-query
       // probes, corpus<300 codes for the batch joins.
-      val modelsF = Future(tagged(Similarity.trainAnnModels(
-        e, corpus300, nCells = NCells, m = PqM, k = PqK, iters = Iters)))
-      val artifactsF = modelsF.map { case (ivfFull, ivf300, pq) =>
-        // every artifact below depends only on the trained models — fan
-        // the five writes out as concurrent jobs (guide-§2.6 back-fill)
-        val wIvfFull = Future(tagged(
-          Similarity.writeIvfIndex(ivfFull, s"$path/ivf_full")))
-        val wIvf300 = Future(tagged(
-          Similarity.writeIvfIndex(ivf300, s"$path/ivf_300")))
-        val encodeFull = Future(tagged(Similarity.writePqIndex(
-          Similarity.pqEncode(e, pq), pq, s"$path/pq_full")))
-        val codes300 = Similarity.pqEncode(corpus300, pq)
-        // the cellcodes build joins the codes300 LINEAGE, not the written
-        // parquet — both writes are independent jobs, submit them as such
-        val wCodes300 = Future(tagged(
-          Writes(codes300).mode("overwrite").parquet(s"$path/codes_300")))
-        tagged(Similarity.writeCellCodes(
-          Similarity.buildCellCodes(ivf300, codes300), s"$path/cellcodes_300"))
-        Await.result(wCodes300, Duration.Inf)
-        Await.result(wIvfFull, Duration.Inf)
-        Await.result(wIvf300, Duration.Inf)
-        Await.result(encodeFull, Duration.Inf)
-        (ivfFull, ivf300, pq, codes300)
-      }
-      val (ivfFull, ivf300, pq, codes300) = Await.result(artifactsF, Duration.Inf)
-      Await.result(lshF, Duration.Inf); Await.result(lsh3, Duration.Inf)
-      Seq(
-        ("lsh_full", Dim.toLong), ("lsh_300", Dim.toLong),
-        ("ivf_full", ivfFull.centroids.length.toLong),
-        ("ivf_300", ivf300.centroids.length.toLong),
-        ("pq_full", (pq.m * pq.k).toLong),
-        ("codes_300", codes300.count()),
-        ("cellcodes_300", NCells.toLong))
-        .toDF("artifact", "n")
-    } catch { case t: Throwable =>
-      // stop sibling jobs still writing under `path` before the caller's
-      // cleanup/retry can race them
-      sc.cancelJobGroup(group)
-      throw t
-    } finally {
-      pool.shutdownNow()
-      pool.awaitTermination(5, java.util.concurrent.TimeUnit.MINUTES)
-    }
+      val (ivfFull, ivf300, pq) = Similarity.trainAnnModels(
+        e, corpus300, nCells = NCells, m = PqM, k = PqK, iters = Iters)
+      val codes300 = Similarity.pqEncode(corpus300, pq)
+      // every artifact below depends only on the trained models — fan
+      // the five writes out as concurrent jobs (guide-§2.6 back-fill);
+      // the cellcodes build joins the codes300 LINEAGE, not the written
+      // parquet, so both writes are independent jobs
+      Overlap.all(spark)(Seq(
+        () => Similarity.writeIvfIndex(ivfFull, s"$path/ivf_full"),
+        () => Similarity.writeIvfIndex(ivf300, s"$path/ivf_300"),
+        () => Similarity.writePqIndex(Similarity.pqEncode(e, pq), pq, s"$path/pq_full"),
+        () => Writes(codes300).mode("overwrite").parquet(s"$path/codes_300"),
+        () => Similarity.writeCellCodes(
+          Similarity.buildCellCodes(ivf300, codes300), s"$path/cellcodes_300")))
+      (ivfFull, ivf300, pq, codes300)
+    })
+    Seq(
+      ("lsh_full", Dim.toLong), ("lsh_300", Dim.toLong),
+      ("ivf_full", ivfFull.centroids.length.toLong),
+      ("ivf_300", ivf300.centroids.length.toLong),
+      ("pq_full", (pq.m * pq.k).toLong),
+      ("codes_300", codes300.count()),
+      ("cellcodes_300", NCells.toLong))
+      .toDF("artifact", "n")
   }
 
   /**
@@ -317,43 +277,16 @@ object AnnIndex {
     * [[logregModel]] precedent. */
   def buildMrlPrefixes(spark: SparkSession, sfDir: String, path: String): DataFrame = {
     import spark.implicits._
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     val e = embeddingsOf(spark, sfDir)
     // the two prefix relations are independent map-only writes — submit
     // concurrently (guide-§2.6 overlap, the buildAll/buildLmRefModel
-    // posture) so the small write's jobs back-fill the big write's tail;
-    // jobs ride one cancellable group so a failure stops the sibling's
-    // in-flight write, not just its submitting thread (r20 review)
-    val sc = spark.sparkContext
-    val group = s"mrl_build_${ProcessHandle.current().pid()}_" +
-      java.util.UUID.randomUUID().toString.take(8)
-    def tagged[T](f: => T): T = {
-      sc.setJobGroup(group, "mrl_index_build", interruptOnCancel = true)
-      try f finally sc.clearJobGroup()
-    }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val fullF = Future(tagged {
-        Similarity.writeMrlPrefixes(e, MrlDims, s"$path/mrl_full")
-        spark.read.parquet(s"$path/mrl_full").count()
-      })
-      val f300 = Future(tagged {
-        Similarity.writeMrlPrefixes(e.filter(col("vec_id") < 300), MrlDims,
-          s"$path/mrl_300")
-        spark.read.parquet(s"$path/mrl_300").count()
-      })
-      Seq(("mrl_full", Await.result(fullF, Duration.Inf)),
-        ("mrl_300", Await.result(f300, Duration.Inf)))
-        .toDF("artifact", "n")
-    } catch { case t: Throwable =>
-      sc.cancelJobGroup(group)
-      throw t
-    } finally {
-      pool.shutdownNow()
-      pool.awaitTermination(5, java.util.concurrent.TimeUnit.MINUTES)
-    }
+    // posture) so the small write's jobs back-fill the big write's tail
+    Overlap.all(spark)(Seq("mrl_full" -> e, "mrl_300" -> e.filter(col("vec_id") < 300))
+      .map { case (name, vecs) => () => {
+        Similarity.writeMrlPrefixes(vecs, MrlDims, s"$path/$name")
+        name -> spark.read.parquet(s"$path/$name").count()
+      }})
+      .toDF("artifact", "n")
   }
 
   private def ensureMrl(spark: SparkSession, sfDir: String): String = {
@@ -547,19 +480,19 @@ object AnnIndex {
     // it needs a transactional table format); recovery for that case is
     // [[buildServingLayout]] from the source corpus.
     val incId = incrementKey(inc, idCol = "vec_id")
-    IncProtocol.appendOnce(spark, s"$path/ivf/assignments", incId) {
+    IncProtocol.appendOnce(spark, s"$path/ivf/assignments", incId) { _ =>
       Writes(assigned).mode("append").partitionBy("cell")
         .parquet(s"$path/ivf/assignments")
     }
-    IncProtocol.appendOnce(spark, s"$path/pq/codes", incId) {
+    IncProtocol.appendOnce(spark, s"$path/pq/codes", incId) { _ =>
       Writes(encoded).mode("append").parquet(s"$path/pq/codes")
     }
-    IncProtocol.appendOnce(spark, s"$path/cellcodes", incId) {
+    IncProtocol.appendOnce(spark, s"$path/cellcodes", incId) { _ =>
       Writes(Similarity.buildCellCodes(
           Similarity.IvfIndex(assigned, ivf.centroids), encoded))
         .mode("append").partitionBy("cell").parquet(s"$path/cellcodes")
     }
-    IncProtocol.appendOnce(spark, s"$path/prefixes", incId) {
+    IncProtocol.appendOnce(spark, s"$path/prefixes", incId) { _ =>
       Similarity.growMrlPrefixes(inc, kDims, s"$path/prefixes")
     }
   }
@@ -608,7 +541,7 @@ object AnnIndex {
       vecCol: String = "embedding"): Unit = {
     val incId = incrementKey(increment, idCol, vecCol)
     for (rel <- Seq("ivf/assignments", "pq/codes", "cellcodes", "prefixes"))
-      IncProtocol.appendOnce(spark, s"$path/$rel", incId)(())
+      IncProtocol.appendOnce(spark, s"$path/$rel", incId)(_ => ())
   }
 
   def mrl300(spark: SparkSession, sfDir: String): DataFrame = {
@@ -655,8 +588,6 @@ object AnnIndex {
     * every `min_bigram_count`. */
   def buildLmRefModel(spark: SparkSession, sfDir: String, path: String): DataFrame = {
     import spark.implicits._
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     // pin the reference sample: cbg and uni are independent folds over
     // the same tokenization, and cw derives from the WRITTEN cbg — left
     // as lineage, the three writes would re-execute the reference scan
@@ -667,47 +598,26 @@ object AnnIndex {
         .select(col("doc_id"), col("text")), None)
     val (cbg, _, uni) = graft.operators.Corpus.lmRefModelRelations(ref)
     // Two independent job chains over the pinned reference — {cbg write →
-    // cw fold+write} and {uni write} — submitted concurrently (guide-§2.6
-    // overlap, the buildAll posture): the scheduler back-fills each
-    // chain's single-task tail stages with the other's work, and the
-    // read-back counts overlap the same way. Determinism is untouched —
-    // each artifact's bytes depend only on its own deterministic lineage.
-    // Every chain tags its jobs with one cancellable job group: on
-    // failure the catch cancels the GROUP (interrupting running tasks),
-    // which is what actually stops a sibling's in-flight Spark job —
-    // interrupting the submitting thread alone would only abandon its
-    // JobWaiter and leave the job writing under `path` (r20 review).
-    val sc = spark.sparkContext
-    val group = s"lmref_build_${ProcessHandle.current().pid()}_" +
-      java.util.UUID.randomUUID().toString.take(8)
-    def tagged[T](f: => T): T = {
-      sc.setJobGroup(group, "lm_ref_model_build", interruptOnCancel = true)
-      try f finally sc.clearJobGroup()
-    }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    // cw fold+write} and {uni write} — submitted concurrently ([[Overlap]],
+    // the buildAll posture): the scheduler back-fills each chain's
+    // single-task tail stages with the other's work, and the read-back
+    // counts overlap the same way. Determinism is untouched — each
+    // artifact's bytes depend only on its own deterministic lineage.
     try {
-      val cbgChain = Future(tagged {
-        Writes(cbg).mode("overwrite").parquet(s"$path/cbg")
-        Writes(spark.read.parquet(s"$path/cbg").groupBy(col("w1"))
-          .agg(org.apache.spark.sql.functions.sum(col("c2")).as("c1")))
-          .mode("overwrite").parquet(s"$path/cw")
-      })
-      val uniF = Future(tagged(
-        Writes(uni).mode("overwrite").parquet(s"$path/uni")))
-      Await.result(cbgChain, Duration.Inf); Await.result(uniF, Duration.Inf)
-      val counts = Seq("cbg", "cw", "uni").map(a =>
-        a -> Future(tagged(spark.read.parquet(s"$path/$a").count())))
-      counts.map { case (a, f) => (a, Await.result(f, Duration.Inf)) }
+      Overlap.all(spark)(Seq(
+        () => {
+          Writes(cbg).mode("overwrite").parquet(s"$path/cbg")
+          Writes(spark.read.parquet(s"$path/cbg").groupBy(col("w1"))
+            .agg(org.apache.spark.sql.functions.sum(col("c2")).as("c1")))
+            .mode("overwrite").parquet(s"$path/cw")
+        },
+        () => Writes(uni).mode("overwrite").parquet(s"$path/uni")))
+      Overlap.all(spark)(Seq("cbg", "cw", "uni").map(a =>
+        () => a -> spark.read.parquet(s"$path/$a").count()))
         .toDF("artifact", "n")
-    } catch { case t: Throwable =>
-      sc.cancelJobGroup(group) // stop sibling jobs still writing
-      throw t
     } finally {
-      pool.shutdownNow()
-      pool.awaitTermination(5, java.util.concurrent.TimeUnit.MINUTES)
-      // release only after the pool is drained: a sibling still reading
-      // the pinned blocks must not see them unpersisted mid-job
+      // Overlap returns or throws only once every body has finished, so
+      // no job still reads the pinned blocks
       graft.operators.Materialize.release(ref)
     }
   }

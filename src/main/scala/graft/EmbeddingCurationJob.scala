@@ -77,13 +77,16 @@ object EmbeddingCurationJob {
   def dedupRegistryDir(root: String) = s"$root/registries/semdedup"
   def selectionRegistryDir(root: String) = s"$root/registries/selection"
   def layoutDir(root: String) = s"$root/layout"
-  def incrementsDir(root: String) = s"$root/increments"
-  /** Per-increment write-ahead state, keyed on the batch's CONTENT
-    * fingerprint: stage verdicts that depend on mutable registry state
-    * are persisted here before the registries grow, so a retried
-    * increment replays its recorded verdicts (see [[runIncrement]]). */
-  def incStateDir(root: String, key: String) = s"$root/inc_state/inc_$key"
-  private def incStateRoot(root: String) = s"$root/inc_state"
+  def incrementsDir(root: String) = IncProtocol.incrementsDir(root)
+
+  /** The job's increment protocol: its ledger columns (the [[Result]]
+    * fields, in order) and its append-grown relations. */
+  private val Inc = new IncProtocol[Result](
+    Seq("batch_vecs", "floored", "deduped", "decontaminated", "curated"),
+    { case Seq(a, b, c, d, e) => Result(a, b, c, d, e) },
+    root => Seq(IncProtocol.Relation(dedupRegistryDir(root), Seq("cell")),
+      IncProtocol.Relation(selectionRegistryDir(root)),
+      IncProtocol.Relation(curatedDir(root))))
 
   /** Fingerprint of the config fields that shaped one write-ahead
     * VERDICT (see [[runIncrement]]'s per-stage claims): a retry must
@@ -122,15 +125,13 @@ object EmbeddingCurationJob {
       .map(_.getSeq[Float](1).toArray)
   }
 
-  /** The micro-batch loop as a Structured Streaming SINK: each delivered
-    * batch of (idCol, vecCol) rows runs one [[runIncrement]]. foreachBatch
-    * delivers AT-LEAST-ONCE — after a crash between the batch's side
-    * effects and the checkpoint commit, the same batch is REDELIVERED —
-    * which is exactly the hazard the increment's content-keyed write-ahead
-    * protocol absorbs: a redelivered batch replays its recorded verdicts
-    * and marker-guarded appends touch nothing twice, so the curation
-    * EFFECT is exactly-once (spec: the stream loop equals the sequential
-    * batch loop; the retry spec pins redelivery == never-crashed).
+  /** The micro-batch loop as a Structured Streaming SINK
+    * ([[IncProtocol.runStream]]): each delivered batch of (idCol, vecCol)
+    * rows runs one [[runIncrement]], whose content-keyed write-ahead
+    * protocol makes the curation EFFECT of at-least-once delivery
+    * exactly-once (spec: the stream loop equals the sequential batch loop;
+    * the retry spec pins redelivery == never-crashed). `compact_every`
+    * compacts the append-grown relations every N applied increments.
     * The FIRST delivered batch trains the job's pinned centroid model
     * ([[ensureCentroids]]) and must carry ≥ nCells vectors.
     * `Trigger.AvailableNow` drains-and-stops; a processing-time trigger
@@ -142,69 +143,17 @@ object EmbeddingCurationJob {
         org.apache.spark.sql.streaming.Trigger.AvailableNow(),
       vecCol: String = "embedding", idCol: String = "vec_id")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val r = runIncrement(spark, batch, outRoot, cfg, vecCol, idCol)
-        println(s"""{"batch":$batchId,"batch_vecs":${r.batchVecs},""" +
-          s""""floored":${r.floored},"deduped":${r.deduped},""" +
-          s""""decontaminated":${r.decontaminated},"curated":${r.curated}}""")
-        // config-driven maintenance: compact the append-grown relations
-        // every N applied increments (counted from the manifest's marker
-        // ledger — one listing). foreachBatch serializes batches, so the
-        // "never concurrently with an increment" contract holds by
-        // construction; compaction is idempotent, so a redelivered batch
-        // re-triggering on the same count is harmless.
-        cfg.compactEvery.foreach { n =>
-          val applied = IncProtocol.appliedCount(spark, incrementsDir(outRoot))
-          if (applied > 0 && applied % n == 0) {
-            val c = compact(spark, outRoot)
-            println(s"""{"batch":$batchId,"compacted":${c.size},""" +
-              s""""files":"${c.map { case (k, v) =>
-                s"${k.split('/').last}:${v._1}->${v._2}" }.mkString(",")}"}""")
-          }
-        }
-        ()
-      }
-      .start()
+    Inc.runStream(spark, stream, outRoot, checkpoint, trigger, cfg.compactEvery)(
+      runIncrement(spark, _, outRoot, cfg, vecCol, idCol))
 
-  /** Maintenance compaction of the job's append-grown relations — one
-    * file per touched partition (or per increment, for the plain
-    * relations) otherwise accumulates per batch, and probe/read listing
-    * cost grows with files, not rows (SCALING.md r18 §5). Returns
-    * relation → (filesBefore, filesAfter). Run from a maintenance
+  /** Maintenance compaction of the job's append-grown relations (the
+    * semdedup registry one file per cell; the selection registry, the
+    * curated output and the ledger one file each) plus the GC of
+    * completed increments' write-ahead state ([[IncProtocol.compact]]).
+    * Returns relation → (filesBefore, filesAfter). Run from a maintenance
     * window: never concurrently with an increment. */
-  def compact(spark: SparkSession, outRoot: String): Map[String, (Long, Long)] = {
-    val partitioned = Seq(dedupRegistryDir(outRoot) -> Seq("cell"))
-    val plain = Seq(selectionRegistryDir(outRoot), curatedDir(outRoot),
-      incrementsDir(outRoot))
-    (partitioned.collect { case (p, cols) if IncProtocol.exists(spark, p) =>
-      p -> operators.Compaction.compactPartitioned(spark, p, cols)
-    } ++ plain.collect { case p if IncProtocol.exists(spark, p) =>
-      p -> operators.Compaction.compactPlain(spark, p)
-    }).toMap + ("inc_state" -> gcIncState(spark, outRoot))
-  }
-
-  /** GC the write-ahead state of FULLY-COMPLETED increments: the
-    * increments-manifest marker is [[runIncrement]]'s LAST write, so its
-    * existence proves every earlier append landed — no retry of that
-    * increment can need the verdicts again (a post-GC redelivery takes
-    * [[runIncrement]]'s fully-applied short-circuit and returns the
-    * ledger row's exact recorded counts without touching any verdict or
-    * registry). That short-circuit requires the LEDGER ROW to carry
-    * `inc_key`: pre-upgrade rows don't, so their increments — though
-    * fully applied — would fall through to the verdict-replay path on
-    * redelivery, and GC'ing their verdicts would leave that path
-    * recomputing stage verdicts against registries that already hold
-    * the batch (wrong counts; appends stay marker-gated, so no data
-    * corruption). A state dir is therefore deleted only when the
-    * manifest marker exists AND the ledger contains a row with its
-    * inc_key — i.e. the short-circuit is actually available. Without
-    * this GC, inc_state grows one roughly batch-sized parquet dir per
-    * increment forever. Returns (dirsBefore, dirsAfter). */
-  private[graft] def gcIncState(spark: SparkSession, outRoot: String): (Long, Long) =
-    IncProtocol.gcIncState(spark, incStateRoot(outRoot), incrementsDir(outRoot))
+  def compact(spark: SparkSession, outRoot: String): Map[String, (Long, Long)] =
+    Inc.compact(spark, outRoot)
 
   /** Run ONE increment through the configured stages; append its
     * curations and grow the registries/layout. See the class doc for the
@@ -234,55 +183,16 @@ object EmbeddingCurationJob {
   def runIncrement(spark: SparkSession, batch: DataFrame, outRoot: String,
       cfg: EmbeddingCurationConfig = EmbeddingCurationConfig(),
       vecCol: String = "embedding", idCol: String = "vec_id"): Result = {
-    import spark.implicits._
-    // a compaction swap that crashed between its renames leaves a
-    // relation MISSING with its data parked in __compact_old — to this
-    // job that looks exactly like a first increment (the registry probe
-    // would silently restart from empty and re-ship every prior
-    // near-duplicate). Fail loudly with the recovery instruction.
-    for (d <- Seq(dedupRegistryDir(outRoot), selectionRegistryDir(outRoot),
-        curatedDir(outRoot), incrementsDir(outRoot)))
-      require(!operators.Compaction.crashedSwapBackup(spark, d),
-        s"crashed compaction swap: $d is missing but ${d}__compact_old " +
-          "exists — rename the backup back before running increments")
+    Inc.requireNoCrashedSwap(spark, outRoot)
     // pin the increment once — every stage, registry write and count
     // below reads these blocks, not a re-executed source lineage
     val b = Materialize(batch.select(col(idCol).cast("long").as(idCol),
       col(vecCol)), cfg.checkpointDir)
+    Inc.once(spark, outRoot, b, idCol, vecCol) { inc =>
     val nBatch = b.count()
-    val incKey = AnnIndex.incrementKey(b, idCol, vecCol)
-    val stateDir = incStateDir(outRoot, incKey)
-    // A FULLY-APPLIED increment short-circuits to its recorded ledger
-    // row: every append is marker-gated so a redelivery's effects are
-    // nil, and this path is deliberately CONFIG-AGNOSTIC — a legitimate
-    // config change across a stream restart must not crash on the
-    // checkpoint's redelivered last batch (the claims guard below
-    // protects PARTIALLY-applied increments, whose registries may hold
-    // the batch). It also keeps completed-replay counts exact after
-    // gcIncState removed the write-ahead verdicts. Pre-upgrade ledgers
-    // without the inc_key column fall through to the marker-gated path.
-    if (IncProtocol.appliedTo(spark, incrementsDir(outRoot), incKey)) {
-      // mergeSchema: a ledger spanning the inc_key upgrade has mixed
-      // footers, and an unmerged read can infer the OLD schema and
-      // silently disable this path
-      val ledger = spark.read.option("mergeSchema", "true")
-        .parquet(incrementsDir(outRoot))
-      if (ledger.columns.contains("inc_key")) {
-        val hit = ledger.filter(col("inc_key") === incKey).limit(1)
-          .collect().headOption
-        hit.foreach { r =>
-          Materialize.release(b)
-          return Result(r.getAs[Long]("batch_vecs"), r.getAs[Long]("floored"),
-            r.getAs[Long]("deduped"), r.getAs[Long]("decontaminated"),
-            r.getAs[Long]("curated"))
-        }
-      }
-    }
+    val stateDir = inc.stateDir
     val centroids = ensureCentroids(spark, b, outRoot, cfg.nCells,
       vecCol, idCol)
-    // a parquet dir counts as written only once its _SUCCESS commits —
-    // `exists` alone would treat a crashed partial write as state
-    def completed(path: String): Boolean = IncProtocol.completed(spark, path)
     // Per-VERDICT config guard: a persisted write-ahead verdict replays
     // only under the config fields that produced it. Mismatch with the
     // verdict COMPLETE fails loudly (re-evaluating is impossible — the
@@ -303,7 +213,7 @@ object EmbeddingCurationJob {
       val cur = prefix + fp
       if (!existing.contains(cur)) {
         require(existing.isEmpty || !verdictDone,
-          s"retry of increment $incKey under a CHANGED config: the " +
+          s"retry of increment ${inc.key} under a CHANGED config: the " +
             s"persisted '$tag' verdict was produced under " +
             s"${existing.mkString(",")} but this run is $cur — its " +
             "write-ahead state cannot be re-evaluated (the registries may " +
@@ -315,13 +225,11 @@ object EmbeddingCurationJob {
           overwrite = false)
       }
     }
-    def appendOnce(relDir: String)(write: => Unit): Unit =
-      IncProtocol.appendOnce(spark, relDir, incKey)(write)
 
     // 1. coherence floor (per-row and model-pinned — deterministic on
     // retry, no write-ahead needed)
     val floored = cfg.minCos match {
-      case Some(c) => Materialize(
+      case Some(c) => inc.pin(
         Similarity.assignKeepVec(b, centroids, vecCol, idCol)
           .filter(col("cos") >= c).select(col(idCol), col(vecCol)),
         cfg.checkpointDir)
@@ -334,13 +242,10 @@ object EmbeddingCurationJob {
     // under the increment's content key) before the registry append: the
     // verdict depends on registry state, so once the append lands, a
     // re-probe would find the batch as its own witness.
-    // whether this increment already mutated a relation — the claim
-    // guard's real lock condition: a persisted verdict OR a landed
-    // marker-gated append means re-evaluating under new parameters is
-    // no longer safe (catches the enable-a-stage-on-retry direction,
+    // the claim guard's real lock condition: a persisted verdict OR a
+    // landed marker-gated append means re-evaluating under new parameters
+    // is no longer safe (catches the enable-a-stage-on-retry direction,
     // where no verdict was ever persisted but the curated rows landed)
-    def appliedTo(relDir: String): Boolean =
-      IncProtocol.appliedTo(spark, relDir, incKey)
     // the survivor verdict is shaped by the centroid model (nCells),
     // the floor and the dedup threshold — not by the later stages'
     // fields, so a retry fixing only those replays it. The claim sits
@@ -349,28 +254,28 @@ object EmbeddingCurationJob {
     // option itself folds into the fingerprint
     claimCfg("survivors",
       cfgFingerprint(cfg.nCells, cfg.minCos, cfg.dedupCos),
-      completed(s"$stateDir/survivor_ids") ||
-        appliedTo(dedupRegistryDir(outRoot)))
+      inc.completed(s"$stateDir/survivor_ids") ||
+        inc.appliedTo(dedupRegistryDir(outRoot)))
     val deduped = cfg.dedupCos match {
       case Some(tau) =>
         val regPath = dedupRegistryDir(outRoot)
         val survPath = s"$stateDir/survivor_ids"
-        if (!completed(survPath)) {
+        if (!inc.completed(survPath)) {
           val s =
-            if (completed(regPath)) Similarity.semanticDedupIncrement(
+            if (inc.completed(regPath)) Similarity.semanticDedupIncrement(
               floored, centroids, regPath, tau, vecCol = vecCol,
               idCol = idCol, checkpointDir = cfg.checkpointDir)
             else Similarity.semanticDedupClustered(floored, centroids, tau,
               vecCol = vecCol, idCol = idCol)
           Writes(s.select(col(idCol))).mode("overwrite").parquet(survPath)
         }
-        val pinned = Materialize(
+        val pinned = inc.pin(
           floored.join(spark.read.parquet(survPath).select(col(idCol)),
             Seq(idCol), "left_semi"),
           cfg.checkpointDir)
-        appendOnce(regPath) {
+        inc.appendOnce(regPath) { mode =>
           Similarity.writeSemanticRegistry(floored, centroids, regPath,
-            vecCol = vecCol, idCol = idCol, append = completed(regPath))
+            vecCol = vecCol, idCol = idCol, append = mode == "append")
         }
         pinned
       case None => floored
@@ -399,26 +304,23 @@ object EmbeddingCurationJob {
     claimCfg("selected", cfgFingerprint(cfg.nCells, cfg.minCos,
         cfg.dedupCos, cfg.evalDir, cfg.decontCos, cfg.perCell,
         cfg.trainPct, cfg.valPct),
-      completed(s"$stateDir/selected") ||
-        appliedTo(selectionRegistryDir(outRoot)) ||
-        appliedTo(curatedDir(outRoot)))
+      inc.completed(s"$stateDir/selected") ||
+        inc.appliedTo(selectionRegistryDir(outRoot)) ||
+        inc.appliedTo(curatedDir(outRoot)))
     val selected = cfg.perCell match {
       case Some(k) =>
         val selPath = selectionRegistryDir(outRoot)
         val shipPath = s"$stateDir/selected"
-        if (!completed(shipPath)) {
+        if (!inc.completed(shipPath)) {
           val sel =
-            if (completed(selPath)) Selection.selectDiverseInc(decontaminated,
+            if (inc.completed(selPath)) Selection.selectDiverseInc(decontaminated,
               centroids, spark.read.parquet(selPath), k, vecCol, idCol)
             else Selection.selectDiverse(decontaminated, centroids, k,
               vecCol, idCol)
           Writes(sel).mode("overwrite").parquet(shipPath)
         }
         val pinned = spark.read.parquet(shipPath)
-        appendOnce(selPath) {
-          Writes(pinned).mode(if (completed(selPath)) "append" else "overwrite")
-            .parquet(selPath)
-        }
+        inc.appendOnce(selPath)(Writes(pinned).mode(_).parquet(selPath))
         pinned
       case None => Similarity.kmeansAssign(decontaminated, centroids,
         vecCol, idCol).select(col(idCol), col("cell"))
@@ -426,12 +328,11 @@ object EmbeddingCurationJob {
 
     // 5. cluster-disjoint split (per-row over the pinned selections);
     // append the curations once per increment content
-    val curated = Materialize(selected.select(col(idCol), col("cell"),
+    val curated = inc.pin(selected.select(col(idCol), col("cell"),
       Corpus.splitExpr(col("cell"), cfg.trainPct, cfg.valPct).as("split")),
       cfg.checkpointDir)
-    appendOnce(curatedDir(outRoot)) {
-      Writes(curated).mode("append").parquet(curatedDir(outRoot))
-    }
+    inc.appendOnce(curatedDir(outRoot))(
+      Writes(curated).mode(_).parquet(curatedDir(outRoot)))
     val nCurated = curated.count()
 
     // serving layout over the curated corpus (idempotent growth —
@@ -463,15 +364,7 @@ object EmbeddingCurationJob {
         checkpointDir = cfg.checkpointDir)
     }
 
-    appendOnce(incrementsDir(outRoot)) {
-      // inc_key rides the ledger row so a fully-applied increment's
-      // redelivery can return these exact counts (the short-circuit at
-      // entry) without recomputing any verdict
-      Writes(Seq((nBatch, nFloored, nDeduped, nDecont, nCurated, incKey))
-        .toDF("batch_vecs", "floored", "deduped", "decontaminated",
-          "curated", "inc_key"))
-        .mode("append").parquet(incrementsDir(outRoot))
-    }
     Result(nBatch, nFloored, nDeduped, nDecont, nCurated)
+    }
   }
 }

@@ -31,8 +31,9 @@ object IngestJob {
 
   /** Run one dataset file through scan → classify → reshape → MERGE. The
     * metadata and values merges write separate tables and are both bound
-    * by fixed per-job costs, so they run side by side ([[alongside]]); the
-    * state marker is written only once both have landed. */
+    * by fixed per-job costs, so they run side by side ([[Overlap.both]]);
+    * the state marker is written only once both have landed, and a failure
+    * of either fails the file with no marker. */
   def runFile(spark: SparkSession, ds: DatasetSpec, file: String, root: String,
       location: String, byPosition: Boolean): FileResult = {
     val wide = WideMatrix.readCsv(spark, file)
@@ -42,43 +43,16 @@ object IngestJob {
       valuesDir(root), ds.keyFields, partitionCol = Some("date"),
       replace = ds.replaceDuplicates)
     val (metaRows, st) =
-      if (ds.writeMetadata && !byPosition) alongside {
+      if (ds.writeMetadata && !byPosition) Overlap.both(spark)(
         // every increment row is classified exactly once, so the stats sum
         // IS the row count — no second execution of the metadata pipeline
         KeyedStore.mergeIntoTable(WideMatrix.metadata(wide, ds, location),
-          metadataDir(root), Seq("skn"), partitionCol = None).incrementRows
-      }(mergeValues())
+          metadataDir(root), Seq("skn"), partitionCol = None).incrementRows,
+        mergeValues())
       else (0L, mergeValues())
 
     writeState(spark, root, file, complete = true)
     FileResult(file, st.created, st.replaced, st.unchanged, metaRows)
-  }
-
-  /** Runs `a` on a new driver thread while `b` runs on this one, and
-    * returns once both are done. The thread inherits this thread's Spark
-    * local properties (job group, scheduler pool: they are inheritable
-    * thread-locals) and active session. If either side throws, the first
-    * failure is rethrown, with the other attached as suppressed — after
-    * both have finished, so no job of either is still running. */
-  private def alongside[A, B](a: => A)(b: => B): (A, B) = {
-    val firstError = new java.util.concurrent.atomic.AtomicReference[Throwable]
-    def attempt[T](body: => T): Either[Throwable, T] =
-      try Right(body) catch { case e: Throwable => firstError.compareAndSet(null, e); Left(e) }
-    @volatile var ra: Either[Throwable, A] = null
-    val t = new Thread(() => ra = attempt(a), "graft-ingest-metadata")
-    t.setDaemon(true)
-    t.start()
-    val rb = attempt(b)
-    var interrupted = false
-    while (t.isAlive) try t.join() catch { case _: InterruptedException => interrupted = true }
-    if (interrupted) Thread.currentThread.interrupt()
-    (ra, rb) match {
-      case (Right(x), Right(y)) => (x, y)
-      case _ =>
-        val first = firstError.get
-        Seq(ra, rb).collect { case Left(e) if e ne first => e }.foreach(first.addSuppressed)
-        throw first
-    }
   }
 
   /** Run the whole job config (outer loop over datasets × files —
@@ -173,13 +147,8 @@ object IngestJob {
     if (!fs.exists(dir)) false
     else {
       val files = fs.listStatus(dir).filter(_.getPath.getName.endsWith(".json"))
-      files.nonEmpty && files.forall { f =>
-        val in = fs.open(f.getPath)
-        val body = new String(
-          in.readAllBytes(), "UTF-8")
-        in.close()
-        body.contains("\"complete\": true")
-      }
+      files.nonEmpty && files.forall(f =>
+        Writes.readText(spark, f.getPath.toString).contains("\"complete\": true"))
     }
   }
 }

@@ -82,10 +82,6 @@ object Main {
 
   /** Read a config body from a local path, Hadoop URI, or http(s) URL
     * (shared by both entry points). */
-  private def readRaw(spark: SparkSession, pathOrUrl: String): String = {
-    val resolved = new org.apache.hadoop.fs.Path(RemoteFetch.resolve(spark, pathOrUrl))
-    val fs = resolved.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(resolved)
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
-  }
+  private def readRaw(spark: SparkSession, pathOrUrl: String): String =
+    Writes.readText(spark, RemoteFetch.resolve(spark, pathOrUrl))
 }

@@ -107,12 +107,92 @@ object TrainingSetJob {
       body: String): Unit =
     Writes.writeFile(spark, path, body.getBytes("UTF-8"))
 
-  private def readTextFile(spark: SparkSession, path: String): String = {
-    val fs = FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new Path(path))
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
+  /** Markup stripping, then normalization — each a config switch — over
+    * `df`'s `text`. Runs FIRST (raw crawl text is tag soup before it is
+    * anything else) and on the source frame itself, so every later text
+    * consumer (gates, shingles, the join-back when redaction is off) sees
+    * the cleaned form: ragged whitespace would otherwise plant empty
+    * whitespace-tokens in the near-dup shingles. Reference and eval docs
+    * get the SAME treatment, so their shingles and bigrams compare like
+    * with like. */
+  private def normalized(df: DataFrame, cfg: TrainingSetConfig): DataFrame = {
+    val stripped = if (!cfg.stripMarkup) df
+      else df.withColumn("text",
+        graft.functions.TextFunctions.stripMarkup(col("text")))
+    if (!cfg.normalize) stripped
+    else stripped.withColumn("text",
+      graft.functions.TextFunctions.normalizeText(col("text")))
+  }
+
+  /** The per-row front both forms run on the source frame: [[normalized]],
+    * then C4 line cleaning, then the Gopher gate. */
+  private def perRowFront(df: DataFrame, cfg: TrainingSetConfig): DataFrame = {
+    val docs1 = normalized(df, cfg)
+    // optional C4 line-level cleaning BEFORE the document-level gates:
+    // failing lines leave the text, failing pages leave the corpus, and
+    // every later stage (gopher stats, dedup shingles, chunking) sees the
+    // line-cleaned form. One kernel evaluation per row (the struct
+    // projects once; filter and substitution read its fields).
+    val docs0 = if (!cfg.c4Clean) docs1
+      else docs1
+        .withColumn("__c4", graft.plans.TextExpressions.c4LineClean(col("text")))
+        .filter(col("__c4.keep"))
+        .withColumn("text", col("__c4.clean_text"))
+        .drop("__c4")
+    // optional Gopher rule gate (quality_gopher's keep verdict) applied
+    // to the source frame itself — the standard web-scale pre-filter,
+    // map-only, so everything downstream (dedup shingles, eval
+    // decontamination, mixtures) runs on the already-gated corpus.
+    // gopherKeep is the single-expression GopherKeep verdict kernel, so
+    // the byte scan runs ONE time per row (plan-asserted in
+    // TrainingSetJobSpec). It must stay ONE expression: the naive keep
+    // predicate referenced the signals struct ~8 times and FilterExec
+    // does no subexpression elimination, and every With/projected-alias
+    // shape was re-substituted by predicate pushdown back into that
+    // multi-copy form (measured 63 kernel copies — see the GopherKeep
+    // scaladoc before "simplifying" this).
+    if (!cfg.gopherGate) docs0
+    else docs0.filter(graft.functions.TextFunctions.gopherKeep(col("text")))
+  }
+
+  /** Saves a merges table that did NOT come from the user's own file next
+    * to the outputs, in the GPT-2 merges.txt format, so the trainer's
+    * tokenizer can load exactly what the budgets were counted and the ids
+    * emitted with. */
+  private def saveMerges(spark: SparkSession, outRoot: String,
+      m: Seq[(String, String)]): Seq[(String, String)] = {
+    writeTextFile(spark, mergesPath(outRoot),
+      ("#version: 0.2" +: m.map { case (a, b) => s"$a $b" }).mkString("\n") + "\n")
+    m
+  }
+
+  /** The chunker for the configured budget shape, keyed on `idCol`. */
+  private def chunker(cfg: TrainingSetConfig, mergesOpt: Option[Seq[(String, String)]],
+      idCol: String): DataFrame => DataFrame = (mergesOpt, cfg.chunkStride) match {
+    case (Some(merges), _) =>
+      df => Corpus.chunkDocsByCost(df, cfg.chunkBudget.toLong,
+        tok => graft.functions.TextFunctions.bpeCount(tok, merges), "text", idCol)
+    case (None, Some(stride)) =>
+      // overlapping windows: consecutive chunks share budget−stride
+      // context tokens (config guards this off the BPE cost path)
+      df => Corpus.chunkDocsOverlap(df, cfg.chunkBudget, stride, "text", idCol)
+    case (None, None) if cfg.chunkSentences =>
+      // sentence-preserving boundaries (config guards exclusivity)
+      df => Corpus.chunkDocsSentences(df, cfg.chunkBudget.toLong, "text", idCol)
+    case (None, None) => df => Corpus.chunkDocs(df, cfg.chunkBudget, "text", idCol)
+  }
+
+  /** Packed rows joined to their chunk text and, with a merges table in
+    * play, the actual merged-BPE token ids (BpeEncode shares the chunker's
+    * tokenizer, so size(token_ids) == n_tokens structurally on the
+    * BPE-budgeted path) — the packed/ output becomes directly
+    * loader-consumable. */
+  private def packedRows(packed: DataFrame, chunks: DataFrame,
+      mergesOpt: Option[Seq[(String, String)]]): DataFrame = {
+    val joined = packed
+      .join(chunks.select(col("chunk_id"), col("chunk_text")), Seq("chunk_id"))
+    mergesOpt.fold(joined)(m => joined.withColumn("token_ids",
+      graft.plans.BpeExpressions.bpeEncode(col("chunk_text"), m)))
   }
 
   /** Identity of one logical run, for the stage-resume markers: the
@@ -161,7 +241,7 @@ object TrainingSetJob {
     // marker means the stage re-runs).
     def markStage(s: String, payload: String = "done"): Unit = {
       val cur = s"$outRoot/_resume/CURRENT"
-      val now = readTextFile(spark, cur).trim
+      val now = Writes.readText(spark, cur).trim
       require(now == rk,
         s"concurrent writer detected on $outRoot: CURRENT is '$now' but " +
           s"this run is '$rk' — TrainingSetJob requires a single writer " +
@@ -179,7 +259,7 @@ object TrainingSetJob {
       val dir = new Path(s"$outRoot/_resume")
       val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
       val cur = new Path(dir, "CURRENT")
-      val prev = if (fs.exists(cur)) readTextFile(spark, cur.toString).trim
+      val prev = if (fs.exists(cur)) Writes.readText(spark, cur.toString).trim
         else ""
       if (prev != rk) {
         // ALL markers go — including this run's own from an even earlier
@@ -193,51 +273,9 @@ object TrainingSetJob {
     }
 
     val cleanDocs: Long = if (stageDone("shards"))
-      readTextFile(spark, stageMarker("shards")).trim.toLong
+      Writes.readText(spark, stageMarker("shards")).trim.toLong
     else {
-    // optional normalization BEFORE any gate: applied to the source frame
-    // itself so every later text consumer (gates, shingles, the
-    // join-back when redaction is off) sees normalized text — ragged
-    // whitespace would otherwise plant empty whitespace-tokens in the
-    // near-dup shingles
-    val raw = spark.read.parquet(docsDir)
-    // markup stripping runs FIRST (raw crawl text is tag soup before it
-    // is anything else), then normalization — both applied to the source
-    // frame so every later text consumer sees the cleaned form
-    def normalized(df: DataFrame): DataFrame = {
-      val stripped = if (!cfg.stripMarkup) df
-        else df.withColumn("text",
-          graft.functions.TextFunctions.stripMarkup(col("text")))
-      if (!cfg.normalize) stripped
-      else stripped.withColumn("text",
-        graft.functions.TextFunctions.normalizeText(col("text")))
-    }
-    val docs1 = normalized(raw)
-    // optional C4 line-level cleaning BEFORE the document-level gates:
-    // failing lines leave the text, failing pages leave the corpus, and
-    // every later stage (gopher stats, dedup shingles, chunking) sees the
-    // line-cleaned form. One kernel evaluation per row (the struct
-    // projects once; filter and substitution read its fields).
-    val docs0 = if (!cfg.c4Clean) docs1
-      else docs1
-        .withColumn("__c4", graft.plans.TextExpressions.c4LineClean(col("text")))
-        .filter(col("__c4.keep"))
-        .withColumn("text", col("__c4.clean_text"))
-        .drop("__c4")
-    // optional Gopher rule gate (quality_gopher's keep verdict) applied
-    // to the source frame itself — the standard web-scale pre-filter,
-    // map-only, so everything downstream (dedup shingles, eval
-    // decontamination, mixtures) runs on the already-gated corpus.
-    // gopherKeep is the single-expression GopherKeep verdict kernel, so
-    // the byte scan runs ONE time per row (plan-asserted in
-    // TrainingSetJobSpec). It must stay ONE expression: the naive keep
-    // predicate referenced the signals struct ~8 times and FilterExec
-    // does no subexpression elimination, and every With/projected-alias
-    // shape was re-substituted by predicate pushdown back into that
-    // multi-copy form (measured 63 kernel copies — see the GopherKeep
-    // scaladoc before "simplifying" this).
-    val docsG0 = if (!cfg.gopherGate) docs0
-      else docs0.filter(graft.functions.TextFunctions.gopherKeep(col("text")))
+    val docsG0 = perRowFront(spark.read.parquet(docsDir), cfg)
     // optional CCNet-style reference-perplexity gate: score every doc
     // under a Jelinek-Mercer bigram LM trained on the clean reference
     // (`lm_ref_dir`, normalized like the corpus; absent → the corpus's
@@ -264,7 +302,7 @@ object TrainingSetJob {
         // this loading/normalization rule so it cannot drift)
         def ref(keyCol: String): DataFrame = cfg.lmRefDir
           .map(d => normalized(spark.read.parquet(d)
-            .select(col(keyCol), col("text"))))
+            .select(col(keyCol), col("text")), cfg))
           .getOrElse(pinned.filter(Corpus.hashBucket(col("doc_id")) < 20)
             .select(col(keyCol), col("text")))
         val keepIds = cfg.lmRefStrataCol match {
@@ -311,7 +349,7 @@ object TrainingSetJob {
     // compare like with like, or a copy differing only typographically
     // (curly quotes, CRLF) slips under eval_min_overlap
     val evalDocs = cfg.evalDir.map(d =>
-      normalized(spark.read.parquet(d).select(col("doc_id"), col("text"))))
+      normalized(spark.read.parquet(d).select(col("doc_id"), col("text")), cfg))
     val cleaned0 = Corpus.cleanCorpus(docs, cfg.lang, cfg.minTokens,
       cfg.maxDigitRatio, cfg.ngram, cfg.minJaccard, cfg.maxDf, "text",
       "doc_id", cfg.checkpointDir, evalDocs, cfg.evalMinOverlap, cfg.redact,
@@ -434,15 +472,6 @@ object TrainingSetJob {
     // Sennrich merge learning over the word histogram) and saved next to
     // the outputs so the trainer's tokenizer can load what the budgets
     // were counted with.
-    // any merges table that did NOT come from the user's own file is
-    // saved next to the outputs in the GPT-2 merges.txt format, so the
-    // trainer's tokenizer can load exactly what the budgets were counted
-    // and the ids emitted with
-    def saveMerges(m: Seq[(String, String)]): Seq[(String, String)] = {
-      writeTextFile(spark, mergesPath(outRoot),
-        ("#version: 0.2" +: m.map { case (a, b) => s"$a $b" }).mkString("\n") + "\n")
-      m
-    }
     // on resume, a previously-saved table reloads from merges.txt (the
     // GPT-2 format round-trips exactly) instead of re-training — the
     // budgets and ids must be counted with the table the crashed run
@@ -450,7 +479,7 @@ object TrainingSetJob {
     def savedOrElse(make: => Seq[(String, String)]): Seq[(String, String)] =
       if (stageDone("merges"))
         graft.functions.TextFunctions.loadBpeMerges(mergesPath(outRoot))
-      else { val m = saveMerges(make); markStage("merges"); m }
+      else { val m = saveMerges(spark, outRoot, make); markStage("merges"); m }
     val mergesOpt: Option[Seq[(String, String)]] = cfg.bpeMergesPath
       .map(graft.functions.TextFunctions.loadBpeMerges)
       .orElse(cfg.bpeTrainMerges.map(n => savedOrElse(
@@ -461,36 +490,12 @@ object TrainingSetJob {
       .orElse(if (cfg.emitIds)
         Some(savedOrElse(graft.functions.TextFunctions.BpeMerges)) else None)
     if (!stageDone("packed")) {
-    val chunker: DataFrame => DataFrame = (mergesOpt, cfg.chunkStride) match {
-      case (Some(merges), _) =>
-        df => Corpus.chunkDocsByCost(df, cfg.chunkBudget.toLong,
-          tok => graft.functions.TextFunctions.bpeCount(tok, merges), "text", shipId)
-      case (None, Some(stride)) =>
-        // overlapping windows: consecutive chunks share budget−stride
-        // context tokens (config guards this off the BPE cost path)
-        df => Corpus.chunkDocsOverlap(df, cfg.chunkBudget, stride, "text", shipId)
-      case (None, None) if cfg.chunkSentences =>
-        // sentence-preserving boundaries (config guards exclusivity)
-        df => Corpus.chunkDocsSentences(df, cfg.chunkBudget.toLong, "text", shipId)
-      case (None, None) => df => Corpus.chunkDocs(df, cfg.chunkBudget, "text", shipId)
-    }
     // chunks feed TWO consumers (the packer and the chunk_text join) —
     // materialized so the regex-heavy chunking pass runs once, not twice
-    val chunks = Materialize(chunker(train), cfg.checkpointDir)
+    val chunks = Materialize(chunker(cfg, mergesOpt, shipId)(train), cfg.checkpointDir)
     val packed = Corpus.packSequences(chunks, cfg.chunkBudget.toLong,
       cfg.packGroups, "n_tokens", "chunk_id")
-    val joined = packed
-      .join(chunks.select(col("chunk_id"), col("chunk_text")), Seq("chunk_id"))
-    // with a merges table in play, the packed rows also carry the actual
-    // merged-BPE token ids (BpeEncode shares the chunker's tokenizer, so
-    // size(token_ids) == n_tokens structurally on the BPE-budgeted path)
-    // — the packed/ output becomes directly loader-consumable
-    val emitted = mergesOpt match {
-      case Some(m) => joined.withColumn("token_ids",
-        graft.plans.BpeExpressions.bpeEncode(col("chunk_text"), m))
-      case None => joined
-    }
-    Writes(emitted
+    Writes(packedRows(packed, chunks, mergesOpt)
       .repartition(cfg.packGroups, col("grp"))
       .sortWithinPartitions(col("grp"), col("bin"), col("chunk_id")))
       .mode("overwrite").partitionBy("grp").parquet(packedDir(outRoot))
@@ -544,8 +549,20 @@ object TrainingSetJob {
   def lmRefModelDir(root: String) = s"$root/lm_ref/model"
   def lmRefThresholdDir(root: String) = s"$root/lm_ref/threshold"
   def watermarkDir(root: String) = s"$root/watermark"
-  def incrementsDir(root: String) = s"$root/increments"
-  def incStateDir(root: String, key: String) = s"$root/inc_state/inc_$key"
+
+  /** The incremental form's increment protocol: its ledger columns (the
+    * [[IncResult]] fields, in order) and its append-grown relations. */
+  private val Inc = new IncProtocol[IncResult](
+    Seq("batch_docs", "gated", "clean", "train_chunks", "train_bins"),
+    { case Seq(a, b, c, d, e) => IncResult(a, b, c, d, e) },
+    root => Seq(
+      // the shards and packed/ read contracts include within-partition order
+      IncProtocol.Relation(shardsDir(root), Seq("shard"), Seq("sort_key")),
+      IncProtocol.Relation(packedDir(root), Seq("grp"), Seq("bin", "chunk_id")),
+      IncProtocol.Relation(exactRegistryDir(root)),
+      IncProtocol.Relation(shingleRegistryDir(root)),
+      IncProtocol.Relation(substrRegistryDir(root)),
+      IncProtocol.Relation(lmRefThresholdDir(root))))
 
   /** The config subset the incremental form supports. Everything here is
     * either per-row (gates, redaction, hash splits/rebalance) or has an
@@ -582,38 +599,21 @@ object TrainingSetJob {
   }
 
   /** Maintenance compaction of the incremental job's append-grown
-    * relations (the [[EmbeddingCurationJob.compact]] convention): one
-    * file per increment otherwise accumulates in every registry, the
-    * shards, the packed layout and the ledger — and probe/read listing
-    * cost grows with FILES, not rows. Shards and packed compact through
-    * the SORTED variant (their read contracts include within-partition
-    * order); registries and the ledger are plain. Also GCs the
-    * write-ahead state of fully-completed increments
-    * ([[IncProtocol.gcIncState]]). Returns relation → (before, after).
-    * Run from a maintenance window — never concurrently with an
-    * increment (the single-writer contract). */
-  def compact(spark: SparkSession, outRoot: String): Map[String, (Long, Long)] = {
-    val sorted = Seq(
-      shardsDir(outRoot) -> (Seq("shard"), Seq("sort_key")),
-      packedDir(outRoot) -> (Seq("grp"), Seq("bin", "chunk_id")))
-    val plain = Seq(exactRegistryDir(outRoot), shingleRegistryDir(outRoot),
-      substrRegistryDir(outRoot), lmRefThresholdDir(outRoot),
-      incrementsDir(outRoot))
-    (sorted.collect { case (p, (pc, sc))
-        if IncProtocol.completed(spark, p) =>
-      p -> operators.Compaction.compactPartitionedSorted(spark, p, pc, sc)
-    } ++ plain.collect { case p if IncProtocol.completed(spark, p) =>
-      p -> operators.Compaction.compactPlain(spark, p)
-    }).toMap + ("inc_state" ->
-      IncProtocol.gcIncState(spark, s"$outRoot/inc_state",
-        incrementsDir(outRoot)))
-  }
+    * relations ([[IncProtocol.compact]]): one file per increment otherwise
+    * accumulates in every registry, the shards, the packed layout and the
+    * ledger. Shards and packed compact through the SORTED variant (their
+    * read contracts include within-partition order); registries and the
+    * ledger are plain. Also GCs the write-ahead state of fully-completed
+    * increments. Returns relation → (before, after). Run from a
+    * maintenance window — never concurrently with an increment (the
+    * single-writer contract). */
+  def compact(spark: SparkSession, outRoot: String): Map[String, (Long, Long)] =
+    Inc.compact(spark, outRoot)
 
-  /** The micro-batch loop as a Structured Streaming SINK — each
-    * delivered batch of document rows runs one [[runIncrement]].
-    * foreachBatch delivers AT-LEAST-ONCE; the content-keyed write-ahead
-    * protocol absorbs redelivery exactly as in
-    * [[EmbeddingCurationJob.runStream]] (replayed verdicts, marker-gated
+  /** The micro-batch loop as a Structured Streaming SINK
+    * ([[IncProtocol.runStream]]) — each delivered batch of document rows
+    * runs one [[runIncrement]]; the content-keyed write-ahead protocol
+    * absorbs at-least-once redelivery (replayed verdicts, marker-gated
     * appends — exactly-once curation EFFECT). Batches must respect the
     * append-only id discipline (see [[runIncrement]]); a source that
     * replays OLD ids fails the watermark check loudly rather than
@@ -623,30 +623,8 @@ object TrainingSetJob {
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val r = runIncrement(spark, batch, outRoot, cfg)
-        println(s"""{"batch":$batchId,"batch_docs":${r.batchDocs},""" +
-          s""""gated":${r.gatedDocs},"clean":${r.cleanDocs},""" +
-          s""""train_chunks":${r.trainChunks},"train_bins":${r.trainBins}}""")
-        // config-driven maintenance: compact the append-grown relations
-        // every N applied increments (the ECJ runStream convention —
-        // foreachBatch serializes batches, so "never concurrently with
-        // an increment" holds by construction; compaction is
-        // idempotent, so a redelivery re-triggering on the same count
-        // is harmless)
-        cfg.compactEvery.foreach { n =>
-          val applied = IncProtocol.appliedCount(spark, incrementsDir(outRoot))
-          if (applied > 0 && applied % n == 0) {
-            val c = compact(spark, outRoot)
-            println(s"""{"batch":$batchId,"compacted":${c.size}}""")
-          }
-        }
-        ()
-      }
-      .start()
+    Inc.runStream(spark, stream, outRoot, checkpoint, trigger, cfg.compactEvery)(
+      runIncrement(spark, _, outRoot, cfg))
 
   /**
    * Run ONE increment of documents through the full text pipeline
@@ -719,7 +697,6 @@ object TrainingSetJob {
    */
   def runIncrement(spark: SparkSession, batch: DataFrame, outRoot: String,
       cfg: TrainingSetConfig = TrainingSetConfig()): IncResult = {
-    import spark.implicits._
     requireIncrementable(cfg)
     // job-level config pin (see scaladoc): first increment stamps the
     // semantic config identity; every later one must match it
@@ -728,67 +705,36 @@ object TrainingSetJob {
       val rk = runKey("__incremental__", cfg)
       if (!IncProtocol.exists(spark, pin)) writeTextFile(spark, pin, rk)
       else {
-        val prev = readTextFile(spark, pin).trim
+        val prev = Writes.readText(spark, pin).trim
         require(prev == rk,
           s"incremental config changed under $outRoot (pinned $prev, got " +
             s"$rk): the job's registries were built under the pinned " +
             "config — finish this job under it, or start a new outRoot")
       }
     }
-    // a compaction swap that crashed between its renames leaves a
-    // relation MISSING with its data parked at __compact_old — to this
-    // job a missing registry looks exactly like a first increment (the
-    // probes would silently restart from empty and re-ship every prior
-    // duplicate). Fail loudly with the recovery instruction (the ECJ
-    // entry guard).
-    for (d <- Seq(exactRegistryDir(outRoot), shingleRegistryDir(outRoot),
-        substrRegistryDir(outRoot), lmRefThresholdDir(outRoot),
-        shardsDir(outRoot), packedDir(outRoot), incrementsDir(outRoot)))
-      require(!operators.Compaction.crashedSwapBackup(spark, d),
-        s"crashed compaction swap: $d is missing but ${d}__compact_old " +
-          "exists — rename the backup back before running increments")
+    Inc.requireNoCrashedSwap(spark, outRoot)
     val idc = col("doc_id")
-    // every Materialize pin this increment takes is registered here and
-    // released in the finally below — the runStream loop would otherwise
-    // leak ~6 batch-sized cached RDDs per delivered micro-batch
-    val pins = scala.collection.mutable.ArrayBuffer[DataFrame]()
     // pin the increment once — every stage, registry append and count
-    // below reads these blocks, not a re-executed source lineage
+    // below reads these blocks, not a re-executed source lineage; every
+    // pin is released when the increment ends (IncProtocol.once)
     val b = Materialize(batch, cfg.checkpointDir)
-    pins += b
-    try {
+    Inc.once(spark, outRoot, b, "doc_id", "text") { inc =>
     val nBatch = b.count()
-    val incKey = AnnIndex.incrementKey(b, "doc_id", "text")
-    val stateDir = incStateDir(outRoot, incKey)
-    def completed(p: String) = IncProtocol.completed(spark, p)
-    def appendOnce(relDir: String)(write: => Unit): Unit =
-      IncProtocol.appendOnce(spark, relDir, incKey)(write)
-    // fully-applied short-circuit: the ledger marker is the LAST write,
-    // so its existence proves every append landed — return the recorded
-    // counts without touching any verdict or registry
-    if (IncProtocol.appliedTo(spark, incrementsDir(outRoot), incKey)) {
-      val hit = spark.read.parquet(incrementsDir(outRoot))
-        .filter(col("inc_key") === incKey).limit(1).collect().headOption
-      hit.foreach { r =>
-        return IncResult(r.getAs[Long]("batch_docs"), r.getAs[Long]("gated"),
-          r.getAs[Long]("clean"), r.getAs[Long]("train_chunks"),
-          r.getAs[Long]("train_bins"))
-      }
-    }
+    val stateDir = inc.stateDir
     // watermark check — skipped when this increment already left a trace
     // (its first run passed the check, and the watermark may since
     // include the batch itself)
     val isRetry = IncProtocol.exists(spark, stateDir) ||
       Seq(substrRegistryDir(outRoot), exactRegistryDir(outRoot),
         shingleRegistryDir(outRoot), shardsDir(outRoot), packedDir(outRoot))
-        .exists(d => IncProtocol.appliedTo(spark, d, incKey))
+        .exists(inc.appliedTo)
     if (!isRetry) require(
       !IncProtocol.exists(spark, watermarkDir(outRoot)) ||
-        completed(watermarkDir(outRoot)),
+        inc.completed(watermarkDir(outRoot)),
       s"watermark at ${watermarkDir(outRoot)} is incomplete — a prior " +
         "increment crashed mid-write; redeliver/retry that increment " +
         "(which rewrites the watermark) before ingesting new batches")
-    if (!isRetry && completed(watermarkDir(outRoot))) {
+    if (!isRetry && inc.completed(watermarkDir(outRoot))) {
       val wm = broadcast(spark.read.parquet(watermarkDir(outRoot)))
       val bad = b.crossJoin(wm)
         .filter(idc <= col("max_id") ||
@@ -800,48 +746,26 @@ object TrainingSetJob {
           "interleave pack windows; re-key the batch")
     }
 
-    // ---- per-row gates (identical expressions to the batch job) ----
-    def normalized(df: DataFrame): DataFrame = {
-      val stripped = if (!cfg.stripMarkup) df
-        else df.withColumn("text",
-          graft.functions.TextFunctions.stripMarkup(col("text")))
-      if (!cfg.normalize) stripped
-      else stripped.withColumn("text",
-        graft.functions.TextFunctions.normalizeText(col("text")))
-    }
-    val docs1 = normalized(b)
-    val docs0 = if (!cfg.c4Clean) docs1
-      else docs1
-        .withColumn("__c4", graft.plans.TextExpressions.c4LineClean(col("text")))
-        .filter(col("__c4.keep"))
-        .withColumn("text", col("__c4.clean_text"))
-        .drop("__c4")
-    val docsG0 = if (!cfg.gopherGate) docs0
-      else docs0.filter(graft.functions.TextFunctions.gopherKeep(col("text")))
+    // ---- per-row gates (the batch job's own front) ----
+    val docsG0 = perRowFront(b, cfg)
 
     // ---- lm_ref gate: persisted model + pinned threshold(s) ----
     val docsG = cfg.lmRefDropQ match {
       case Some(q) =>
-        val pinned = Materialize(docsG0, cfg.checkpointDir)
-        pins += pinned
+        val pinned = inc.pin(docsG0, cfg.checkpointDir)
         val md = lmRefModelDir(outRoot)
         val scCol = cfg.lmRefStrataCol
-        if (!completed(s"$md/uni")) {
+        if (!inc.completed(s"$md/uni")) {
           val refRaw = spark.read.parquet(cfg.lmRefDir.get)
-          scCol match {
-            case Some(sc) =>
-              val (cbg, cw, uni) = Corpus.lmRefStratifiedModelRelations(
-                normalized(refRaw.select(col(sc), col("text"))), sc)
-              Writes(cbg).mode("overwrite").parquet(s"$md/cbg")
-              Writes(cw).mode("overwrite").parquet(s"$md/cw")
-              Writes(uni).mode("overwrite").parquet(s"$md/uni")
-            case None =>
-              val (cbg, cw, uni) = Corpus.lmRefModelRelations(
-                normalized(refRaw.select(col("text"))))
-              Writes(cbg).mode("overwrite").parquet(s"$md/cbg")
-              Writes(cw).mode("overwrite").parquet(s"$md/cw")
-              Writes(uni).mode("overwrite").parquet(s"$md/uni")
+          val (cbg, cw, uni) = scCol match {
+            case Some(sc) => Corpus.lmRefStratifiedModelRelations(
+              normalized(refRaw.select(col(sc), col("text")), cfg), sc)
+            case None => Corpus.lmRefModelRelations(
+              normalized(refRaw.select(col("text")), cfg))
           }
+          Writes(cbg).mode("overwrite").parquet(s"$md/cbg")
+          Writes(cw).mode("overwrite").parquet(s"$md/cw")
+          Writes(uni).mode("overwrite").parquet(s"$md/uni")
         }
         // cw stays a persisted artifact (one model serves every floor) but
         // the serve no longer reads it: c(w1,·) folds into the cbg
@@ -851,7 +775,7 @@ object TrainingSetJob {
         // ONE scoring pass per increment: the threshold calibration and
         // the keep filter both read the materialized scores
         // (dropBottomQuantile's documented one-pass contract)
-        val scored = Materialize(scCol match {
+        val scored = inc.pin(scCol match {
           case Some(sc) => Corpus.lmRefScoreStratifiedFromModel(
             pinned.select(col("doc_id"), col(sc), col("text")), cbg, uni,
             sc, cfg.lmRefLambda, minBigramCount = cfg.lmRefMinBigram)
@@ -859,7 +783,6 @@ object TrainingSetJob {
             pinned.select(col("doc_id"), col("text")), cbg, uni,
             cfg.lmRefLambda, minBigramCount = cfg.lmRefMinBigram)
         }, cfg.checkpointDir)
-        pins += scored
         val td = lmRefThresholdDir(outRoot)
         val keep = scCol match {
           case Some(sc) =>
@@ -872,15 +795,14 @@ object TrainingSetJob {
             // thresholds are the ones its first attempt pinned), and
             // each stratum's row is written exactly once (left_anti
             // against the existing table).
-            appendOnce(td) {
+            inc.appendOnce(td) { mode =>
               val fresh0 = scored.groupBy(col(sc))
                 .agg(percentile(col("lm_ref"), lit(q)).as("__thr"))
-              val fresh = if (completed(td))
+              val fresh = if (mode == "append")
                 fresh0.join(spark.read.parquet(td).select(col(sc)),
                   Seq(sc), "left_anti")
               else fresh0
-              Writes(fresh).mode(if (completed(td)) "append" else "overwrite")
-                .parquet(td)
+              Writes(fresh).mode(mode).parquet(td)
             }
             scored.join(broadcast(spark.read.parquet(td)), Seq(sc))
               .filter(col("lm_ref") >= col("__thr")).select(col("doc_id"))
@@ -889,12 +811,12 @@ object TrainingSetJob {
             // actually scored docs — a degenerate first batch (nothing
             // scorable) must not pin a null threshold that would then
             // silently drop every later document
-            if (!completed(td)) {
+            if (!inc.completed(td)) {
               val t = scored.agg(percentile(col("lm_ref"), lit(q)).as("__thr"))
               if (t.head().get(0) != null)
                 Writes(t).mode("overwrite").parquet(td)
             }
-            if (completed(td))
+            if (inc.completed(td))
               scored.crossJoin(broadcast(spark.read.parquet(td)))
                 .filter(col("lm_ref") >= col("__thr")).select(col("doc_id"))
             // no threshold yet == nothing scorable yet: unscorable docs
@@ -906,29 +828,27 @@ object TrainingSetJob {
     }
 
     // ---- ExactSubstr cut vs the window registry (write-ahead) ----
-    val preSubstr = Materialize(docsG, cfg.checkpointDir)
-    pins += preSubstr
+    val preSubstr = inc.pin(docsG, cfg.checkpointDir)
     val docs = cfg.substrWindow match {
       case Some(w) =>
         val reg = substrRegistryDir(outRoot)
         val cutPath = s"$stateDir/substr_cut"
-        if (!completed(cutPath)) {
+        if (!inc.completed(cutPath)) {
           val cut =
-            if (completed(reg)) Dedup.dedupSubstringsIncremental(preSubstr,
+            if (inc.completed(reg)) Dedup.dedupSubstringsIncremental(preSubstr,
               spark.read.parquet(reg), n = w, preserveCase = true)
             else Dedup.dedupSubstrings(preSubstr, n = w, preserveCase = true)
           Writes(cut).mode("overwrite").parquet(cutPath)
         }
-        appendOnce(reg) {
+        inc.appendOnce(reg) { mode =>
           // the batch's original windows, anti-joined against the
           // registry first (the substrRegistry contract: one row per
           // hash EVER, or recurring boilerplate fans the probe k-fold)
           val fresh = Dedup.substrRegistry(preSubstr, n = w)
-          val toAdd = if (completed(reg))
+          val toAdd = if (mode == "append")
             fresh.join(spark.read.parquet(reg), Seq("w"), "left_anti")
           else fresh
-          Writes(toAdd).mode(if (completed(reg)) "append" else "overwrite")
-            .parquet(reg)
+          Writes(toAdd).mode(mode).parquet(reg)
         }
         spark.read.parquet(cutPath)
       case None => preSubstr
@@ -936,43 +856,40 @@ object TrainingSetJob {
 
     // ---- quality + langid gates (cleanCorpus's per-row head) ----
     val qc = graft.functions.TextFunctions.qualityColumns(col("text")).toMap
-    val gated = Materialize(docs.filter(qc("n_tokens") >= cfg.minTokens &&
+    val gated = inc.pin(docs.filter(qc("n_tokens") >= cfg.minTokens &&
       qc("digit_ratio") <= cfg.maxDigitRatio &&
       graft.functions.TextFunctions.langId(col("text")) === cfg.lang),
       cfg.checkpointDir)
-    pins += gated
     val nGated = gated.count()
 
     // ---- exact dedup vs the hash registry (write-ahead) ----
     val exactReg = exactRegistryDir(outRoot)
     val exactIdsPath = s"$stateDir/exact_ids"
-    if (!completed(exactIdsPath)) {
+    if (!inc.completed(exactIdsPath)) {
       val inBatch = Dedup.exact(gated)  // (text_hash, doc_id=min, n_dups)
-      val keep = if (completed(exactReg))
+      val keep = if (inc.completed(exactReg))
         inBatch.join(spark.read.parquet(exactReg), Seq("text_hash"), "left_anti")
       else inBatch
       Writes(keep.select(col("doc_id"), col("text_hash")))
         .mode("overwrite").parquet(exactIdsPath)
     }
-    val exactKept = Materialize(
+    val exactKept = inc.pin(
       gated.join(spark.read.parquet(exactIdsPath).select(idc),
         Seq("doc_id"), "left_semi"), cfg.checkpointDir)
-    pins += exactKept
-    appendOnce(exactReg) {
+    inc.appendOnce(exactReg) { mode =>
       // the kept docs' hashes ARE the batch's registry-fresh hashes
       // (dropped batch docs share a keeper's hash or a registered one)
       Writes(spark.read.parquet(exactIdsPath).select(col("text_hash")))
-        .mode(if (completed(exactReg)) "append" else "overwrite")
-        .parquet(exactReg)
+        .mode(mode).parquet(exactReg)
     }
 
     // ---- near-dup vs the shingle registry (write-ahead) ----
     val shReg = shingleRegistryDir(outRoot)
     val survIdsPath = s"$stateDir/jaccard_ids"
-    if (!completed(survIdsPath)) {
+    if (!inc.completed(survIdsPath)) {
       val internal = Dedup.ngramJaccardPairs(exactKept, n = cfg.ngram,
         minJaccard = cfg.minJaccard, checkpointDir = cfg.checkpointDir)
-      val pairs = if (completed(shReg))
+      val pairs = if (inc.completed(shReg))
         internal.unionByName(Dedup.ngramJaccardPairsAgainst(exactKept,
           spark.read.parquet(shReg), n = cfg.ngram,
           minJaccard = cfg.minJaccard))
@@ -983,18 +900,17 @@ object TrainingSetJob {
     }
     val survivors = exactKept.join(spark.read.parquet(survIdsPath),
       Seq("doc_id"), "left_semi")
-    appendOnce(shReg) {
+    inc.appendOnce(shReg) { mode =>
       // every exact-kept member registers (the every-member contract)
       Writes(Dedup.shingleRelation(exactKept, n = cfg.ngram))
-        .mode(if (completed(shReg)) "append" else "overwrite")
-        .parquet(shReg)
+        .mode(mode).parquet(shReg)
     }
 
     // ---- per-row tail: decontaminate → redact → rebalance → split ----
     val decontaminated = cfg.evalDir match {
       case Some(d) =>
         val ev = normalized(spark.read.parquet(d)
-          .select(col("doc_id"), col("text")))
+          .select(col("doc_id"), col("text")), cfg)
         Corpus.decontaminate(survivors, ev, cfg.ngram, cfg.evalMinOverlap)
       case None => survivors
     }
@@ -1004,49 +920,29 @@ object TrainingSetJob {
     val balanced = cfg.strata.fold(redacted) { case (sc, rates, dflt) =>
       Corpus.sampleStratified(redacted, sc, rates, dflt)
     }
-    val clean = Materialize(Corpus.splitAssign(balanced)
+    val clean = inc.pin(Corpus.splitAssign(balanced)
       .select(col("doc_id"), col("bucket"), col("split"), col("text")),
       cfg.checkpointDir)
-    pins += clean
     val nClean = clean.count()
 
     // ---- shards append (skipped when the increment shipped nothing —
     // an empty partitionBy write leaves a schema-less directory) ----
-    appendOnce(shardsDir(outRoot)) {
+    inc.appendOnce(shardsDir(outRoot)) { mode =>
       if (nClean > 0)
-        Corpus.writeShards(clean, shardsDir(outRoot), cfg.nShards,
-          mode = if (completed(shardsDir(outRoot))) "append" else "overwrite")
+        Corpus.writeShards(clean, shardsDir(outRoot), cfg.nShards, mode = mode)
     }
 
     // ---- merges (fixed tokenizer or the canonical table — saved once) ----
     val mergesOpt: Option[Seq[(String, String)]] = cfg.bpeMergesPath
       .map(graft.functions.TextFunctions.loadBpeMerges)
       .orElse(if (cfg.emitIds) Some {
-        if (!IncProtocol.exists(spark, mergesPath(outRoot))) {
-          val m = graft.functions.TextFunctions.BpeMerges
-          writeTextFile(spark, mergesPath(outRoot),
-            ("#version: 0.2" +: m.map { case (a, b) => s"$a $b" })
-              .mkString("\n") + "\n")
-          m
-        } else graft.functions.TextFunctions.loadBpeMerges(mergesPath(outRoot))
+        if (!IncProtocol.exists(spark, mergesPath(outRoot)))
+          saveMerges(spark, outRoot, graft.functions.TextFunctions.BpeMerges)
+        else graft.functions.TextFunctions.loadBpeMerges(mergesPath(outRoot))
       } else None)
 
     // ---- chunk + incremental pack of the increment's train split ----
     val train = clean.filter(col("split") === "train")
-    val chunker: DataFrame => DataFrame = (mergesOpt, cfg.chunkStride) match {
-      case (Some(merges), _) =>
-        df => Corpus.chunkDocsByCost(df, cfg.chunkBudget.toLong,
-          tok => graft.functions.TextFunctions.bpeCount(tok, merges),
-          "text", "doc_id")
-      case (None, Some(stride)) =>
-        df => Corpus.chunkDocsOverlap(df, cfg.chunkBudget, stride,
-          "text", "doc_id")
-      case (None, None) if cfg.chunkSentences =>
-        df => Corpus.chunkDocsSentences(df, cfg.chunkBudget.toLong,
-          "text", "doc_id")
-      case (None, None) =>
-        df => Corpus.chunkDocs(df, cfg.chunkBudget, "text", "doc_id")
-    }
     // An increment with ZERO train chunks writes nothing: an empty
     // partitionBy write leaves a schema-less directory that every later
     // packState/boundaries read would fail to infer — so emptiness is
@@ -1054,43 +950,32 @@ object TrainingSetJob {
     // skips. Deterministic on retry (chunks derive from the pinned
     // clean set), so skipping needs no write-ahead record.
     val packedRowsPath = s"$stateDir/packed_rows"
-    val hasTrainChunks = completed(packedRowsPath) || {
-      val chunks = Materialize(chunker(train), cfg.checkpointDir)
-      pins += chunks
+    val hasTrainChunks = inc.completed(packedRowsPath) || {
+      val chunks = inc.pin(chunker(cfg, mergesOpt, "doc_id")(train),
+        cfg.checkpointDir)
       if (chunks.limit(1).count() == 0) false
       else {
         val packed =
-          if (completed(packedDir(outRoot)))
+          if (inc.completed(packedDir(outRoot)))
             Corpus.packSequencesInc(chunks,
               Corpus.packState(spark.read.parquet(packedDir(outRoot))),
               cfg.chunkBudget.toLong, cfg.packGroups, "n_tokens", "chunk_id")
           else Corpus.packSequences(chunks, cfg.chunkBudget.toLong,
             cfg.packGroups, "n_tokens", "chunk_id")
-        val joined = packed.join(
-          chunks.select(col("chunk_id"), col("chunk_text")), Seq("chunk_id"))
-        val emitted = mergesOpt match {
-          case Some(m) => joined.withColumn("token_ids",
-            graft.plans.BpeExpressions.bpeEncode(col("chunk_text"), m))
-          case None => joined
-        }
-        Writes(emitted).mode("overwrite").parquet(packedRowsPath)
+        Writes(packedRows(packed, chunks, mergesOpt))
+          .mode("overwrite").parquet(packedRowsPath)
         true
       }
     }
     val (nChunks, nBins) = if (!hasTrainChunks) (0L, 0L) else {
-      val packedRows = spark.read.parquet(packedRowsPath)
-      appendOnce(packedDir(outRoot)) {
-        // _SUCCESS decides the mode (the shards append's convention):
-        // a crashed first write retries as overwrite, clearing any
-        // orphaned part files instead of appending onto them
-        Writes(packedRows
+      val rows = spark.read.parquet(packedRowsPath)
+      inc.appendOnce(packedDir(outRoot)) { mode =>
+        Writes(rows
           .repartition(cfg.packGroups, col("grp"))
           .sortWithinPartitions(col("grp"), col("bin"), col("chunk_id")))
-          .mode(if (completed(packedDir(outRoot))) "append"
-            else "overwrite")
-          .partitionBy("grp").parquet(packedDir(outRoot))
+          .mode(mode).partitionBy("grp").parquet(packedDir(outRoot))
       }
-      val Array(c, bn) = packedRows
+      val Array(c, bn) = rows
         .agg(count(lit(1)), count_distinct(struct(col("grp"), col("bin"))))
         .head().toSeq.map(_.asInstanceOf[Long]).toArray
       (c, bn)
@@ -1100,23 +985,18 @@ object TrainingSetJob {
     // aggregation scan — bins straddle increments, so per-increment
     // boundary rows cannot compose; guarded on the relation actually
     // having committed data) ----
-    if (cfg.emitBoundaries && completed(packedDir(outRoot))) {
+    if (cfg.emitBoundaries && inc.completed(packedDir(outRoot))) {
       Writes(Corpus.packBoundaries(spark.read.parquet(packedDir(outRoot)),
           cfg.chunkBudget.toLong, "n_tokens", "chunk_id"))
         .mode("overwrite").parquet(boundariesDir(outRoot))
     }
 
-    // ---- watermark, then the ledger (its marker is the LAST write) ----
+    // ---- watermark, then the ledger (IncProtocol.once: its marker is
+    // the LAST write) ----
     Writes(b.agg(max(idc).as("max_id"), max(idc.cast("string")).as("max_id_str"))
       .coalesce(1)).mode("overwrite").parquet(watermarkDir(outRoot))
-    appendOnce(incrementsDir(outRoot)) {
-      Writes(Seq((nBatch, nGated, nClean, nChunks, nBins, incKey))
-        .toDF("batch_docs", "gated", "clean", "train_chunks", "train_bins",
-          "inc_key"))
-        .mode("append").parquet(incrementsDir(outRoot))
-    }
     IncResult(nBatch, nGated, nClean, nChunks, nBins)
-    } finally pins.foreach(Materialize.release)
+    }
   }
 
   private def writeManifest(spark: SparkSession, root: String,

@@ -68,6 +68,15 @@ object Writes {
     val out = create(spark, path, overwrite)
     try out.write(bytes) finally out.close()
   }
+
+  /** A small driver-side file (state marker, config body, text artifact)
+    * read whole as UTF-8 text; the stream is closed whether or not the
+    * read succeeds. */
+  def readText(spark: SparkSession, path: String): String = {
+    val p = new Path(path)
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
 }
 
 /** `RawLocalFileSystem` whose `setPermission` is an in-process

@@ -82,7 +82,8 @@ object Compaction {
     // a crashed swap (between the two renames) leaves the data under
     // __compact_old and nothing at `path` — fail LOUDLY with the
     // recovery instruction instead of letting a caller re-initialize
-    // the relation from scratch (see crashedSwapBackup)
+    // the relation from scratch (the jobs' entry guard,
+    // IncProtocol.requireNoCrashedSwap)
     val oldLeftover = new Path(path + "__compact_old")
     require(fs.exists(p) || !fs.exists(oldLeftover),
       s"compaction: $path is missing but a complete pre-compaction copy " +
@@ -142,17 +143,5 @@ object Compaction {
       s"failed — complete copies at $old and $tmp; rename one back to $path")
     fs.delete(old, true)
     (before, dataFiles(p))
-  }
-
-  /** True when `path` is missing but its `__compact_old` backup exists —
-    * the signature of a swap that crashed between its two renames. Jobs
-    * that append to compactable relations call this at entry so the
-    * condition surfaces as an actionable error instead of a silent
-    * re-initialization of the relation (the registry-probe hazard: a
-    * missing registry looks exactly like a first increment). */
-  def crashedSwapBackup(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    !fs.exists(p) && fs.exists(new Path(path + "__compact_old"))
   }
 }

@@ -278,9 +278,10 @@ object KeyedStore {
    * coalesces a small load's shuffle into ONE task that writes every
    * partition file alone. A one-partition merge needs no such exchange.
    *
-   * Re-running the same increment is a no-op (stats all-unchanged), which
-   * is the reference's documented-but-unimplemented resume contract
-   * (`README.md:41-43`) for free. With `strictKeys` (default), a store
+   * Re-running the same increment is a no-op (stats all-unchanged, and
+   * nothing is rewritten: a merge with no create or replace skips the
+   * write), which is the reference's documented-but-unimplemented resume
+   * contract (`README.md:41-43`) for free. With `strictKeys` (default), a store
    * slice holding duplicate keys aborts the run (`RecordKeyException`,
    * `ingestion_handler.py:193-195`) before anything is written.
    */
@@ -351,9 +352,14 @@ object KeyedStore {
       val st = j.filter(col("__action").isNotNull)
         .groupBy(col("__action")).agg(count(lit(1)).as("n")).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      write(j.drop("__action"), dynamic = true)
-      MergeStats(st.getOrElse(ActionCreate, 0L), st.getOrElse(ActionReplace, 0L),
-        st.getOrElse(ActionUnchanged, 0L))
+      val stats = MergeStats(st.getOrElse(ActionCreate, 0L),
+        st.getOrElse(ActionReplace, 0L), st.getOrElse(ActionUnchanged, 0L))
+      // a merge that creates and replaces nothing IS the stored slice, row
+      // for row (matched rows keep their stored values, unmatched slice
+      // rows pass through), and the strict-key guard already fired when
+      // the plan materialized: rewriting it would only churn file names
+      if (stats.created + stats.replaced > 0) write(j.drop("__action"), dynamic = true)
+      stats
     }
   }
 

@@ -94,4 +94,20 @@ class CompactionSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
     assert(curated(rootB) == curated(rootA))
   }
+
+  test("EmbeddingCurationJob.compact leaves a relation whose first write crashed mid-commit (part files, no _SUCCESS) untouched") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("cmp_crashed").toString
+    val sel = new java.io.File(EmbeddingCurationJob.selectionRegistryDir(root))
+    // a first write that died before its commit: a part file, no _SUCCESS
+    val staged = java.nio.file.Files.createTempDirectory("cmp_crashed_src").toString
+    Seq((1L, 0), (2L, 1)).toDF("vec_id", "cell").coalesce(1).write.mode("overwrite").parquet(staged)
+    sel.mkdirs()
+    new java.io.File(staged).listFiles.filter(_.getName.endsWith(".parquet")).foreach(f =>
+      java.nio.file.Files.copy(f.toPath, new java.io.File(sel, f.getName).toPath))
+    val before = sel.list.toSet
+    val stats = EmbeddingCurationJob.compact(spark, root)
+    assert(!stats.contains(sel.toString), s"crashed relation compacted: $stats")
+    assert(sel.list.toSet == before && !before.contains("_SUCCESS"))
+  }
 }

@@ -406,7 +406,7 @@ class EmbeddingCurationJobSpec extends AnyFunSuite {
         new java.io.File(inc, f.getName).toPath)
     // GC must KEEP the state dir: without inc_key the redelivery cannot
     // short-circuit and must replay the persisted verdicts
-    val (before, kept) = EmbeddingCurationJob.gcIncState(spark, root)
+    val (before, kept) = IncProtocol.gcIncState(spark, root)
     assert(before == 1L && kept == 1L,
       s"pre-upgrade increment's write-ahead state was GC'd: ($before, $kept)")
     // and the redelivery indeed replays to the exact original counts
@@ -415,7 +415,7 @@ class EmbeddingCurationJobSpec extends AnyFunSuite {
     // control: with the inc_key ledger intact the same sweep deletes it
     val root2 = java.nio.file.Files.createTempDirectory("ecj_gcpost").toString
     EmbeddingCurationJob.runIncrement(spark, batch, root2, cfg)
-    val (b2, k2) = EmbeddingCurationJob.gcIncState(spark, root2)
+    val (b2, k2) = IncProtocol.gcIncState(spark, root2)
     assert(b2 == 1L && k2 == 0L, s"upgraded increment not GC'd: ($b2, $k2)")
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -255,6 +257,46 @@ class KeyedStoreSpec extends AnyFunSuite {
     val (oneFile2, tasks2) = layout(days.take(30))
     assert(oneFile2 && tasks2 > 1, s"re-ingest: one file per date $oneFile2, tasks $tasks2")
     assert(layout(days)._1 && spark.read.parquet(dir).count() == 1800)
+  }
+
+  /** Every file under `dir`, relative to it (part files, markers, crcs). */
+  private def filesUnder(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val w = java.nio.file.Files.walk(root)
+    try w.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(root.relativize(_).toString).toSet
+    finally w.close()
+  }
+
+  test("mergeIntoTable: re-merging an increment leaves every part-file name in the slice and in the metadata table unchanged") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("store_noop").toString
+    val (values, meta) = (s"$root/values", s"$root/metadata")
+    val inc = Seq(("s1", "2022-03-01", 1.0), ("s2", "2022-03-02", 2.0))
+      .toDF("station_id", "date", "value")
+    val md = Seq(("s1", "a"), ("s2", "b")).toDF("skn", "name")
+    KeyedStore.mergeIntoTable(inc, values, Seq("station_id", "date"))
+    KeyedStore.mergeIntoTable(md, meta, Seq("skn"), partitionCol = None)
+    val before = (filesUnder(values), filesUnder(meta))
+    assert(KeyedStore.mergeIntoTable(inc, values, Seq("station_id", "date")) ==
+      KeyedStore.MergeStats(0, 0, 2))
+    assert(KeyedStore.mergeIntoTable(md, meta, Seq("skn"), partitionCol = None) ==
+      KeyedStore.MergeStats(0, 0, 2))
+    assert((filesUnder(values), filesUnder(meta)) == before)
+  }
+
+  test("mergeIntoTable: an all-unchanged merge into a store with duplicate keys still raises RecordKeyException") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("store_noop_dup").toString + "/t"
+    val inc = Seq(("s1", "2022-03-01", 1.0)).toDF("station_id", "date", "value")
+    KeyedStore.mergeIntoTable(inc, dir, Seq("station_id", "date"))
+    val stored = spark.read.parquet(dir)
+    spark.createDataFrame(java.util.Arrays.asList(stored.collect(): _*), stored.schema)
+      .write.mode("append").partitionBy("date").parquet(dir)
+    val e = intercept[Exception](
+      KeyedStore.mergeIntoTable(inc, dir, Seq("station_id", "date")))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("RecordKeyException")), e)
   }
 
   test("paginate: early pages plan as TakeOrderedAndProject, never a global window") {
