@@ -67,10 +67,12 @@ object Bench {
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
       }
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
+    // relative to the working directory: `run / fork` starts in the
+    // checkout root, so a run reads and writes its own checkout's files
     val qFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_QUERIES_FILE",
-      "/root/repo/BENCH_QUERIES.json")
+      "BENCH_QUERIES.json")
     val baseFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE_FILE",
-      "/root/repo/BENCH_BASELINE.json")
+      "BENCH_BASELINE.json")
     val sidecar = readQueriesMap(qFile)
     val prev: Map[String, Double] =
       if (sidecar.nonEmpty) sidecar else readQueriesMap(baseFile)

@@ -2185,7 +2185,7 @@ object SparkEntry {
     * within a window hash IS the min-(doc_id, pos) keeper the Spark side
     * elects; coverage expands each cut start into its 20 token
     * positions, survivors re-join. The empty-doc coalesce matches
-    * CutSpans' all-cut output ''. `restrict` narrows the OUTPUT only
+    * ShingleHash.cutSpans' all-cut output ''. `restrict` narrows the OUTPUT only
     * (the cut verdict always ranks over the whole corpus) — the fused ≡
     * incremental equivalence the operator proves. */
   private def substrCutSql(restrict: String) =
@@ -3422,7 +3422,7 @@ object SparkEntry {
     * full-precision literals (Double.toString round-trips exactly, so
     * both engines read the same 64-bit values). `list_dot_product`
     * folds element-ascending in double — the identical add sequence to
-    * the VecCenterProject kernel's j-ascending loop. */
+    * the VectorKernels.centerProject kernel's j-ascending loop. */
   private def projectOracleSql(mu: Array[Double], m: Array[Array[Double]],
       valCol: String): String = {
     val d = mu.length

@@ -143,13 +143,13 @@ object TrainingSetJob {
     // to the source frame itself — the standard web-scale pre-filter,
     // map-only, so everything downstream (dedup shingles, eval
     // decontamination, mixtures) runs on the already-gated corpus.
-    // gopherKeep is the single-expression GopherKeep verdict kernel, so
+    // gopherKeep is the single-expression ShingleHash.gopherKeep verdict kernel, so
     // the byte scan runs ONE time per row (plan-asserted in
     // TrainingSetJobSpec). It must stay ONE expression: the naive keep
     // predicate referenced the signals struct ~8 times and FilterExec
     // does no subexpression elimination, and every With/projected-alias
     // shape was re-substituted by predicate pushdown back into that
-    // multi-copy form (measured 63 kernel copies — see the GopherKeep
+    // multi-copy form (measured 63 kernel copies — see the ShingleHash.gopherKeep
     // scaladoc before "simplifying" this).
     if (!cfg.gopherGate) docs0
     else docs0.filter(graft.functions.TextFunctions.gopherKeep(col("text")))
@@ -183,7 +183,7 @@ object TrainingSetJob {
   }
 
   /** Packed rows joined to their chunk text and, with a merges table in
-    * play, the actual merged-BPE token ids (BpeEncode shares the chunker's
+    * play, the actual merged-BPE token ids (BpeMatcher.encode shares the chunker's
     * tokenizer, so size(token_ids) == n_tokens structurally on the
     * BPE-budgeted path) — the packed/ output becomes directly
     * loader-consumable. */

@@ -44,26 +44,12 @@ final case class DatasetSpec(
     Seq("datatype", "period", "date", "fill", "station_id") ++ additionalKeyProperties
 }
 
-/**
- * Store-connection settings with per-field config←env fallback (I4): each
- * field resolves from the JSON config if present, else from an environment
- * variable, else a default — exactly the reference's
- * `config.get(k) or os.getenv("…", default)` chain
- * (`ingestion_handler.py:21-28`). Env keys are `GRAFT_STORE_<FIELD>`.
- */
-final case class StoreConfig(
-    url: Option[String] = None,
-    db: Option[String] = None,
-    collection: Option[String] = None,
-    username: Option[String] = None,
-    retries: Int = 3, // reference default (`ingestion_handler.py:21`)
-    concurrency: Int = 1) // reference default (`ingestion_handler.py:28`)
-
+/** The ingest job's configuration. The store it writes is the parquet
+  * root given on the command line, so there is no store-connection block
+  * to configure. */
 final case class JobConfig(
     data: Seq[DatasetSpec],
-    docName: String = "hcdp_station_value",
-    location: String = "hawaii",
-    store: StoreConfig = StoreConfig())
+    location: String = "hawaii")
 
 object JobConfig {
   private val mapper = new ObjectMapper()
@@ -71,27 +57,8 @@ object JobConfig {
   private def optText(n: JsonNode, f: String): Option[String] =
     Option(n.get(f)).filterNot(_.isNull).map(_.asText)
 
-  /** One field of the config←env fallback chain (I4). */
-  def resolveField(cfg: Option[String], envKey: String,
-      env: Map[String, String] = sys.env): Option[String] =
-    cfg.filter(_.nonEmpty).orElse(env.get(envKey).filter(_.nonEmpty))
-
-  /** Store-connection block with env fallback; `env` injectable for tests. */
-  private def parseStore(root: JsonNode, env: Map[String, String]): StoreConfig = {
-    val node = Option(root.get("store_config"))
-    def f(field: String, envKey: String): Option[String] =
-      resolveField(node.flatMap(n => optText(n, field)), envKey, env)
-    StoreConfig(
-      url = f("url", "GRAFT_STORE_URL"),
-      db = f("db", "GRAFT_STORE_DB"),
-      collection = f("collection", "GRAFT_STORE_COLLECTION"),
-      username = f("username", "GRAFT_STORE_USERNAME"),
-      retries = f("retries", "GRAFT_STORE_RETRIES").map(_.toInt).getOrElse(3),
-      concurrency = f("concurrency", "GRAFT_STORE_CONCURRENCY").map(_.toInt).getOrElse(1))
-  }
-
   /** Parse the reference's JSON config shape. */
-  def parse(json: String, env: Map[String, String] = sys.env): JobConfig = {
+  def parse(json: String): JobConfig = {
     val root = mapper.readTree(json)
     val data = Option(root.get("data")).map(_.elements.asScala.toSeq).getOrElse(Nil).map { d =>
       val period = optText(d, "period").getOrElse("day")
@@ -123,7 +90,7 @@ object JobConfig {
     }
     val location = Option(root.get("additional_properties"))
       .flatMap(ap => optText(ap, "location")).getOrElse("hawaii")
-    JobConfig(data = data, location = location, store = parseStore(root, env))
+    JobConfig(data = data, location = location)
   }
 
   /**

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 
 /**
  * Text-analysis column functions for large-scale training-data pipelines
@@ -24,7 +23,7 @@ object TextFunctions {
   /** Token count (BPE-ish proxy: alnum runs; CJK counted per char below).
     * For packing budgets that must match a real tokenizer, use
     * [[bpeCount]] — merged-BPE counts under a merge-ranks table.
-    * Counts via the [[graft.plans.QualitySignals]] byte-scan kernel —
+    * Counts via the [[graft.plans.ShingleHash.qualitySignals]] byte-scan kernel —
     * `size(tokens(text))` materializes every token string just to count
     * them (spec-pinned equal, null text → null either way). */
   def tokenCount(text: Column): Column =
@@ -49,7 +48,7 @@ object TextFunctions {
 
   /** Tokenizer-faithful token count: merged-BPE segments under `merges`
     * (reference merge loop, native codegen'd expression —
-    * [[graft.plans.BpeTokenCount]] documents why this one can't be
+    * [[graft.plans.BpeMatcher.count]] documents why this one can't be
     * declarative). Drop-in for [[tokenCount]] wherever budgets must match
     * what a real tokenizer would produce, e.g. `Corpus.packSequences`
     * fed with this as its `tokenCol`. */
@@ -269,7 +268,7 @@ object TextFunctions {
 
   /**
    * The Gopher-gate verdict alone, safe to use directly as a Filter
-   * predicate: ONE boolean kernel ([[graft.plans.GopherKeep]]) that runs
+   * predicate: ONE boolean kernel ([[graft.plans.ShingleHash.gopherKeep]]) that runs
    * the byte scan exactly once per row. Filtering on
    * `gopherColumns(...)("keep")` instead would re-run the kernel per
    * struct reference (FilterExec has no subexpression elimination, and
@@ -279,10 +278,9 @@ object TextFunctions {
    * Spec-pinned verdict-identical to the assembled keep.
    */
   def gopherKeep(text: Column): Column =
-    Bridge.column(graft.plans.GopherKeep(
-      Bridge.expression(text), Bridge.expression(lower(text)), GopherStopwords))
+    graft.plans.TextExpressions.gopherKeep(text, GopherStopwords)
 
-  /** [[gopherColumns]] over an ALREADY-PROJECTED [[graft.plans.GopherSignals]]
+  /** [[gopherColumns]] over an ALREADY-PROJECTED [[graft.plans.ShingleHash.gopherSignals]]
     * struct column (or the evaluate-once ref [[gopherKeep]] supplies) —
     * the raw-counter → (signal, verdict) arithmetic shared by every
     * formulation. */
@@ -301,7 +299,7 @@ object TextFunctions {
    * gate (C4 §2.2's sentence-count page rule is realized as the
    * kept-LINE count — deterministic and engine-portable where sentence
    * segmentation is neither). ONE byte-scan kernel
-   * ([[graft.plans.C4LineClean]]); the higher-order formulation
+   * ([[graft.plans.ShingleHash.c4LineClean]]); the higher-order formulation
    * `TextOracles.c4ColumnsHof` is the spec oracle pinning it (and the
    * shape the DuckDB SQL mirrors with `list_filter`).
    */
@@ -451,7 +449,7 @@ object TextFunctions {
    */
   def stripMarkup(text: Column): Column =
     // one decode/encode for the whole 13-pass chain (same engine, same
-    // sequence — [[graft.plans.ChainedRegexReplace]]); spec-pinned equal
+    // sequence — [[graft.plans.ShingleHash.chainedReplace]]); spec-pinned equal
     // to the folded regexp_replace form
     graft.plans.TextExpressions.chainedRegexReplace(text, MarkupPatterns)
 
@@ -495,7 +493,7 @@ object TextFunctions {
    * keeps the per-language form — hash parity proves equivalence.
    */
   def langId(text: Column): Column =
-    // One codegen'd byte-scan decision ([[graft.plans.LangIdDecide]]) —
+    // One codegen'd byte-scan decision ([[graft.plans.ShingleHash.langIdDecide]]) —
     // spec-pinned bit-identical to `TextOracles.langIdRegex` (the regex +
     // interpreted-fold formulation this replaced; the DuckDB oracle
     // keeps the per-language regex form — hash parity proves all three

@@ -600,7 +600,7 @@ object Corpus {
   /** Per-(doc, term) counts — the reusable base relation of every
     * term-statistics operator (tf-idf, df tables, vocabulary). MAP-ONLY:
     * a document's term frequencies are row-local facts, so the counting
-    * happens inside [[graft.plans.TokenCountPairs]] and this is one scan
+    * happens inside [[graft.plans.ShingleHash.tokenCounts]] and this is one scan
     * + explode — the corpus-wide (doc, term) exchange the
     * explode-then-groupBy form pays is gone (it was the dominant cost of
     * tf-idf at sf0.1, and at 100 TB it shuffles the full token multiset). */
@@ -637,7 +637,7 @@ object Corpus {
       idCol: String = "doc_id",
       checkpointDir: Option[String] = None): DataFrame = {
     // ZERO corpus-wide exchanges. tf is row-local ([[graft.plans
-    // .TokenCountPairs]]); df aggregates the per-doc distinct terms
+    // .ShingleHash.tokenCounts]]); df aggregates the per-doc distinct terms
     // map-side (its exchange carries ≤ vocabulary rows per partition)
     // and folds into ONE broadcast row holding the term→df map next to
     // n_docs; scoring and the per-doc top-k then happen INSIDE each row
@@ -650,13 +650,13 @@ object Corpus {
     // The per-doc term arrays feed two consumers (df + probe), so they
     // materialize ONCE — unconditionally, as the API scaladoc promises
     // (the counted arrays are a fraction of the text they derive from;
-    // re-running the TokenCountPairs scan per consumer doubled the
+    // re-running the ShingleHash.tokenCounts scan per consumer doubled the
     // dominant cost). Default localCheckpoint; pass `checkpointDir` for
     // the executor-loss-safe reliable variant on long cluster runs.
     val tc = Materialize(docs.select(col(idCol),
       TextExpressions.tokenCounts(col(textCol)).as("__tc")), checkpointDir)
     // sort_array: the kernel binary-searches the map's key array —
-    // [[graft.plans.TfidfTopTerms]] contract
+    // [[graft.plans.ShingleHash.tfidfTopK]] contract
     val dfMap = tc.select(explode(col("__tc.term")).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
       .agg(map_from_entries(sort_array(
@@ -798,7 +798,7 @@ object Corpus {
    * count (map-side combined; output = vocabulary size) folded into ONE
    * broadcast row (sorted hash→count map + instance total), then the
    * per-doc average is computed INSIDE each row
-   * ([[graft.plans.HashLogProbAvg]]) — the corpus-wide term-keyed join
+   * ([[graft.plans.ShingleHash.logProbAvg]]) — the corpus-wide term-keyed join
    * exchange and the groupBy(doc) exchange of the join form are both
    * gone; the documents relation is scanned twice (model, score), both
    * map-only. The map row is the vocab relation reshaped, so the same
@@ -817,7 +817,7 @@ object Corpus {
   def unigramLogProb(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", broadcastModel: Boolean = true,
       carry: Seq[String] = Nil): DataFrame = {
-    // Token HASHES, not strings ([[graft.plans.WordShingleHashes]] alnum
+    // Token HASHES, not strings ([[graft.plans.ShingleHash.hashes]] alnum
     // mode — same tokenizer as [[TextFunctions.tokens]]): the output is
     // (doc, score) only, so grouping/joining by the 8-byte hash computes
     // identical counts (collision-modulo, the family's documented risk)
@@ -892,7 +892,7 @@ object Corpus {
     val cw = cbg.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
     if (broadcastModel) {
       // Both models fold into one broadcast row (sorted hash→count maps,
-      // [[graft.plans.HashBigramLogProbAvg]] binary-searches them) and
+      // [[graft.plans.ShingleHash.bigramLogProbAvg]] binary-searches them) and
       // the per-doc average happens inside each row — no corpus-wide
       // join or groupBy(doc) exchange at all. The bigram vocab is the
       // ceiling here (it grows faster than the unigram vocab); at
@@ -1309,8 +1309,8 @@ object Corpus {
   def tokenEntropy(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     // SHUFFLE-FREE: a document's token-frequency entropy is a row-local
-    // fact, so the counts come from [[graft.plans.TokenCountPairs]] and
-    // both folds happen inside [[graft.plans.CountEntropy]] — one scan,
+    // fact, so the counts come from [[graft.plans.ShingleHash.tokenCounts]] and
+    // both folds happen inside [[graft.plans.ShingleHash.countEntropy]] — one scan,
     // one codegen'd projection, no aggregation stage at all (the old
     // shape paid two corpus-wide exchanges; the interim HOF-fold shape
     // ran the lambdas interpreted, which dominated the scan). Zero-token
@@ -1407,7 +1407,7 @@ object Corpus {
    * oracle engine) with the equality property pinned in spec.
    *
    * Shape: MAP-ONLY — the running sum and chunk reassembly are row-local
-   * in the [[graft.plans.CostChunks]] kernel (a document's chunking
+   * in the [[graft.plans.ChunkKernel.costChunks]] kernel (a document's chunking
    * depends only on its own token stream), then one explode of the
    * already-built chunk rows. The first formulation was posexplode →
    * per-doc window running sum → (doc, chunk) re-aggregation: same
@@ -1464,7 +1464,7 @@ object Corpus {
    *
    * Shape: map-only, exactly [[chunkDocsByCost]] — sentence extraction,
    * per-atom costs and the next-fit running sum are all row-local
-   * ([[graft.plans.CostChunks]]); the only output fan-out is the
+   * ([[graft.plans.ChunkKernel.costChunks]]); the only output fan-out is the
    * explode of already-built chunk rows. Output schema = [[chunkDocs]]'s.
    */
   def chunkDocsSentences(docs: DataFrame, budget: Long,
@@ -1565,7 +1565,7 @@ object Corpus {
    * next-fit as [[packSequences]], and emit each (grp, bin)'s
    * concatenated token-id sequence in document-id order — the actual
    * fixed-length training input, closing the corpus → model-input loop
-   * ([[graft.plans.BpeEncode]] supplies the ids; budgets and sequences
+   * ([[graft.plans.BpeMatcher.encode]] supplies the ids; budgets and sequences
    * come from ONE tokenizer, so `size(seq_ids) == bin_tokens` is
    * structural).
    *

@@ -73,8 +73,8 @@ object Dedup {
   /**
    * Map-only MinHash signatures — the same values as [[minhash]] (exact
    * per-seed minima, property-asserted equal) computed as a PURE
-   * PROJECTION: one [[graft.plans.MinHashFold]] expression carries all
-   * `numHashes` running minima over the [[graft.plans.WordShingleHashes]]
+   * PROJECTION: one [[graft.plans.ShingleHash.minhashFold]] expression carries all
+   * `numHashes` running minima over the [[graft.plans.ShingleHash.hashes]]
    * array (bit-identical to `xxhash64(shingle_string)`), so signatures
    * cost zero shuffles, zero row fan-out, and stay inside whole-stage
    * codegen (the earlier `aggregate`/`zip_with` spelling ran its lambdas
@@ -91,7 +91,7 @@ object Dedup {
     // becomes the single shingle "" (shingles()' whole-text fallback is
     // `concat_ws` over the null token array, which yields the empty
     // string) — so null docs carry the signature of hash(""). Coalescing
-    // the TEXT reproduces that exactly: WordShingleHashes("") is the
+    // the TEXT reproduces that exactly: ShingleHash.hashes("") is the
     // whole-text fallback shingle of "", bit-identical to xxhash64('').
     // dedup=true: min over the in-row SET equals min over the multiset,
     // and the deduped array is smaller — values unchanged, spec-asserted
@@ -219,7 +219,7 @@ object Dedup {
    * is interpreted per-element and ~30× slower at sf0.1.
    */
   def simhash(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    // ROW-LOCAL ([[graft.plans.SimHash64]]): the ±1 bit votes commute, so
+    // ROW-LOCAL ([[graft.plans.ShingleHash.simhash64]]): the ±1 bit votes commute, so
     // the kernel equals the explode → groupBy 64-conditional-sum shape
     // exactly (spec-pinned) with the token fan-out and aggregation
     // exchange gone. The isNotNull filter keeps the explode form's drop
@@ -562,7 +562,7 @@ object Dedup {
       minSizeRatio: Option[Double] = None): DataFrame = {
     // The (id, shingle-hash, n_sh) candidate relation. Per-doc shingle-SET
     // dedup is ROW-LOCAL work, done INSIDE the native
-    // [[graft.plans.WordShingleHashes]] expression — so in the uncapped
+    // [[graft.plans.ShingleHash.hashes]] expression — so in the uncapped
     // path the relation is MAP-ONLY: no (id,shingle) distinct exchange,
     // no per-doc sizes aggregation, no sizes join (n_sh = in-row array
     // size, rides along as a column). Shingle keys are xxhash64 longs
@@ -858,7 +858,7 @@ object Dedup {
     // verbatimSpans, which only needs equality and takes the cheaper
     // all-arithmetic xxhash64 path), the rightmost-min window selection
     // AND the selection dedup all happen inside one
-    // [[graft.plans.WinnowFingerprints]] kernel call per document — the
+    // [[graft.plans.ShingleHash.winnowFps]] kernel call per document — the
     // per-doc sort for `lead`, the frame aggregate and the global
     // `distinct` exchange of the windowed shape are gone; the operator
     // is scan → kernel → explode, fusing into whatever feeds it.
@@ -1003,7 +1003,7 @@ object Dedup {
    * hash-window relational shape, with NO pairwise join anywhere:
    *  1. window relation — ~one row per corpus token (1-based pos,
    *     window hash), emitted row-locally ([[graft.plans
-   *     .WordShingleHashes]], O(bytes) per doc); docs under `n` tokens
+   *     .ShingleHash.hashes]], O(bytes) per doc); docs under `n` tokens
    *     emit nothing and pass through untouched.
    *  2. duplicated keys — ONE `count > 1` aggregation on the 8-byte
    *     hash. A count is a mutable-primitive buffer, so this stays
@@ -1020,7 +1020,7 @@ object Dedup {
    *     previous rank-window idiom straggled on hot boilerplate keys),
    *     drop the keeper, collect each doc's ascending start list
    *     (≤ its token count).
-   *  4. rebuild — left join on the id + one [[graft.plans.CutSpans]]
+   *  4. rebuild — left join on the id + one [[graft.plans.ShingleHash.cutSpans]]
    *     byte scan per document.
    * Cost is linear in corpus tokens (two map-only window-kernel passes —
    * the aggregation and the join-back each stream the corpus, the
@@ -1095,7 +1095,7 @@ object Dedup {
   }
 
   /** Shared rebuild tail of the fused and incremental cuts: left-join
-    * the per-doc ascending start lists, run ONE CutSpans byte scan per
+    * the per-doc ascending start lists, run ONE ShingleHash.cutSpans byte scan per
     * row (lowered emission for the oracle family, original-case when
     * `preserveCase`). */
   private def rebuildCut(docs: DataFrame, cutStarts: DataFrame, n: Int,
@@ -1114,7 +1114,7 @@ object Dedup {
   private def substrWindows(docs: DataFrame, n: Int, textCol: String,
       idCol: String, md5Bridge: Boolean): DataFrame =
     if (md5Bridge)
-      // WindowMd5s hashes each window's contiguous byte range in-row and
+      // ShingleHash.windowMd5s hashes each window's contiguous byte range in-row and
       // emits empty for under-n docs — no eligibility filter, no shingle
       // strings (the chained-zip_with column form was the bridge's
       // measured dominant cost: 6.2 s → sub-second at sf0.1)
@@ -1123,7 +1123,7 @@ object Dedup {
         .select(col(idCol), (col("pos") + 1).cast("long").as("pos"),
           col("col").as("w"))
     else
-      // the xx kernel keeps WordShingleHashes' short-doc whole-text
+      // the xx kernel keeps ShingleHash.hashes' short-doc whole-text
       // fallback, so under-n docs are filtered out up front
       docs.filter(size(TextFunctions.wsTokens(col(textCol))) >= n)
         .select(col(idCol),

@@ -20,7 +20,7 @@ import graft.plans.VectorExpressions
  * the corpus size); the 64×64 eigendecomposition is driver-side Jacobi
  * on the collected 1-row statistics (a bounded model pull, the k-means
  * centroid convention); the projection is a map-only
- * [[graft.plans.VecCenterProject]] kernel, O(d²) per row, no shuffle.
+ * [[graft.plans.VectorKernels.centerProject]] kernel, O(d²) per row, no shuffle.
  * Nothing here scales with the corpus except the one scan.
  */
 object Embeddings {

@@ -103,7 +103,7 @@ object Selection {
     // naive two-consumer formulation re-scans the corpus per consumer
     // (measured 2.7× the single-scan cost at sf0.1).
     // feature hashing via the byte-scan kernel ([[graft.plans
-    // .Md5FeatureBuckets]]): one pass, no feature strings, no hex
+    // .ShingleHash.md5FeatureBuckets]]): one pass, no feature strings, no hex
     // round-trip — spec-pinned bit-identical to hashing the unigram ++
     // bigram feature strings (`SelectionOracles.featureStrings`) through
     // [[Corpus.hashBucket]], which remains the readable contract definition

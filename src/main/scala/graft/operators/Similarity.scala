@@ -144,7 +144,7 @@ object Similarity {
   def buildLshIndex(embeddings: DataFrame, dim: Int, bits: Int = 4, tables: Int = 8,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     // MAP-ONLY: all tables' buckets come from one
-    // [[graft.plans.LshBucketSignature]] kernel call per vector (the
+    // [[graft.plans.VectorKernels.lshBuckets]] kernel call per vector (the
     // tables·bits·dim weight table rides the plan as a literal —
     // kilobytes; the LSH "model" is pure code), posexplode fans out the
     // `tables` index replicas. Bit-identical to the previous posexplode →
@@ -324,7 +324,7 @@ object Similarity {
         .otherwise(col(vecCol)))
 
   /** Nearest-centroid cell assignment of a trained IVF model, MAP-ONLY:
-    * one [[graft.plans.NearestCentroid]] kernel call per vector against
+    * one [[graft.plans.VectorKernels.nearestCentroid]] kernel call per vector against
     * the literal centroid table. Distance (in the unit space, against
     * unit-space centroids) = ||c||² − 2·û·c (the ||û||² term is constant
     * per vector), first-min tie-break — the same kernel and distance form
@@ -1239,7 +1239,7 @@ object Similarity {
       centroids: Array[Array[Array[Float]]])
 
   /** Argmin code per (id, subspace), MAP-ONLY: each subspace slice gets
-    * its own [[graft.plans.NearestCentroid]] kernel against that
+    * its own [[graft.plans.VectorKernels.nearestCentroid]] kernel against that
     * subspace's literal codebook (the per-subspace [[assignCells]]), the
     * m (slice, code) structs explode into the training rows [[trainLloyd]]
     * folds. Bit-identical to the previous broadcast-codebook join +
@@ -1578,7 +1578,7 @@ object Similarity {
       .map(_.getSeq[Float](0).toArray)
 
   /** The fused struct<cell, cos> argmax-cosine column — one
-    * [[graft.plans.NearestCentroidCos]] kernel call (centroid table via
+    * [[graft.plans.VectorKernels.nearestCentroidCos]] kernel call (centroid table via
     * addReferenceObj) replacing the k-literal-array centroid-score +
     * `array_max` + `array_position` chain, which stalls whole-stage
     * codegen past k ≈ 256 (the r12 sweep's named ladder stop).
@@ -1696,7 +1696,7 @@ object Similarity {
    * Scale shape: assignment is map-only (centroids ride the plan as
    * literals), and the whole dedup is ONE cell-keyed aggregation — each
    * cluster's members collect into a single row whose survivors a
-   * row-local kernel ([[graft.plans.SemDedupSurvivors]]) computes with an
+   * row-local kernel ([[graft.plans.VectorKernels.semDedupSurvivors]]) computes with an
    * O(k²/2) early-exit scan, then explode. One shuffle total, no
    * self-join, no broadcast of a corpus-sized side, no distinct, no
    * anti-join. (The first formulation was the cell-keyed pair self-join +
@@ -1839,7 +1839,7 @@ object Similarity {
   }
 
   /** The least integer whose 10⁻⁶ quotient reaches τ — the quantized
-    * threshold the [[graft.plans.SemDedupSurvivors]] kernel compares
+    * threshold the [[graft.plans.VectorKernels.semDedupSurvivors]] kernel compares
     * `cos·10⁶ + 0.5` against (see [[semanticDedupClustered]]'s scaladoc
     * for the IEEE-monotonicity argument). Shared by the fused and
     * incremental forms so the derivation cannot diverge. */
@@ -1976,7 +1976,7 @@ object Similarity {
    * double bit-for-bit (an exploded sum would be partition-order-
    * dependent and hash-unstable). Map-only + TakeOrdered, same plan
    * shape as brute-force `topK`. Scoring is the native
-   * [[graft.plans.Int8DequantCosine]] kernel (the serving lift the r11
+   * [[graft.plans.VectorKernels.int8DequantCos]] kernel (the serving lift the r11
    * version promised — one codegen'd pass, ~11× the interpreted HOF
    * form's throughput at the 128× sweep); the specs keep the HOF
    * formulation as the oracle pinning the kernel bit-identical.

@@ -1,112 +1,14 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Tokenizer-faithful BPE token counting.
- *
- * `TextFunctions.tokenCount` (alnum runs) and the GPT-2-style
- * PRE-tokenization proxy both over/under-count vs a real subword
- * tokenizer, so packing budgets computed from them drift from the token
- * counts training actually sees. This expression counts MERGED-BPE
- * tokens: each word's characters are repeatedly merged by a (pair →
- * rank) table — always the lowest-rank adjacent pair, all its
- * occurrences, until no merge applies — exactly the reference BPE
- * algorithm (Sennrich et al. 2016; the GPT-2 encoder's `bpe()` loop),
- * and the count is the number of surviving segments.
- *
- * Why a native expression and not `functions._`: BPE is a data-dependent
- * fixed-point loop (merge until quiescent) over each word. Declarative
- * higher-order functions express only bounded-depth folds — encoding "a
- * merge pass that repeats until no pair matches" needs either a
- * worst-case-depth expression tree (word length × vocab, interpreted
- * per element, unusably slow — the same reason FloatVectorDot exists) or
- * a UDF (opaque to codegen, serialization overhead per row). Like
- * FloatVectorDot, this stays INSIDE whole-stage codegen via
- * `doGenCode`; the merge table rides along as a codegen reference
- * object, the Catalyst-native equivalent of a broadcast: shipped once
- * per plan, shared across rows (with a bounded per-executor word-count
- * cache — Zipf reuse makes most words cache hits).
- *
- * Pre-tokenization matches [[graft.functions.TextFunctions.tokens]]
- * (lowercased maximal `[a-z0-9]+` runs) so counts stay comparable with
- * the engine's other token statistics; characters outside the vocab
- * count one token each (byte-fallback analog).
- */
-case class BpeTokenCount(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.sql}")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "bpe_token_count"
-
-  @transient private lazy val matcher = new BpeMatcher(merges)
-
-  override def nullSafeEval(input: Any): Any =
-    matcher.countText(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeMatcher", matcher, classOf[BpeMatcher].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.countText($c.toString());")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
- * Merged-BPE token-ID emission — the id-sequence twin of
- * [[BpeTokenCount]]: the same reference merge loop, but emitting one
- * vocab id per surviving segment (`array<int>`), where the vocabulary
- * derives canonically from the merges (base symbols a–z/0–9 = 0–35,
- * merge of rank r = 36 + r — the id space a merges-only BPE model
- * defines). This is the step that turns a cleaned corpus into model
- * input, so the packing/chunking budgets ([[BpeTokenCount]]) and the
- * actual sequences come from ONE tokenizer with a structural invariant:
- * `size(bpe_encode(t)) == bpe_token_count(t)` for every row. Same
- * native-expression rationale and codegen shape as the counter.
- */
-case class BpeEncode(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.sql}")
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.IntegerType, containsNull = false)
-  override def prettyName: String = "bpe_encode"
-
-  @transient private lazy val matcher = new BpeMatcher(merges)
-
-  override def nullSafeEval(input: Any): Any =
-    matcher.encodeText(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeMatcher", matcher, classOf[BpeMatcher].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.encodeText($c.toString());")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
  * The merge-ranks model: (pair → rank) lookup plus the reference merge
- * loop. One instance per plan (codegen reference object), shared by every
- * task thread — the word cache is a bounded ConcurrentHashMap.
+ * loop. One instance per plan (a [[KernelConst]]), shared by every task
+ * thread — the word cache is a bounded ConcurrentHashMap.
  */
 final class BpeMatcher(merges: Seq[(String, String)]) extends Serializable {
   private val rank: java.util.HashMap[String, Integer] = {
@@ -254,12 +156,65 @@ final class BpeMatcher(merges: Seq[(String, String)]) extends Serializable {
   }
 }
 
+/**
+ * Tokenizer-faithful BPE token counting and id emission, the static
+ * kernels the `bpe_token_count` / `bpe_encode` expressions call.
+ *
+ * `TextFunctions.tokenCount` (alnum runs) and the GPT-2-style
+ * PRE-tokenization proxy both over/under-count vs a real subword
+ * tokenizer, so packing budgets computed from them drift from the token
+ * counts training actually sees. [[count]] counts MERGED-BPE tokens:
+ * each word's characters are repeatedly merged by a (pair → rank) table
+ * — always the lowest-rank adjacent pair, all its occurrences, until no
+ * merge applies — exactly the reference BPE algorithm (Sennrich et al.
+ * 2016; the GPT-2 encoder's `bpe()` loop), and the count is the number
+ * of surviving segments.
+ *
+ * Why a native kernel and not `functions._`: BPE is a data-dependent
+ * fixed-point loop (merge until quiescent) over each word. Declarative
+ * higher-order functions express only bounded-depth folds — encoding "a
+ * merge pass that repeats until no pair matches" needs either a
+ * worst-case-depth expression tree (word length × vocab, interpreted
+ * per element, unusably slow — the same reason FloatVectorDot exists) or
+ * a UDF (opaque to codegen, serialization overhead per row). Bound
+ * through [[NativeKernel]], this stays INSIDE whole-stage codegen; the
+ * merge table rides along as a plan constant, the Catalyst-native
+ * equivalent of a broadcast: shipped once per plan, shared across rows
+ * (with a bounded per-executor word-count cache — Zipf reuse makes most
+ * words cache hits).
+ *
+ * Pre-tokenization matches [[graft.functions.TextFunctions.tokens]]
+ * (lowercased maximal `[a-z0-9]+` runs) so counts stay comparable with
+ * the engine's other token statistics; characters outside the vocab
+ * count one token each (byte-fallback analog).
+ */
+object BpeMatcher {
+  /** Merged-BPE token count of `text`. */
+  def count(text: UTF8String, m: BpeMatcher): Long = m.countText(text.toString)
+
+  /** Merged-BPE token-id emission — the id-sequence twin of [[count]]:
+    * the same reference merge loop, but emitting one vocab id per
+    * surviving segment (`array<int>`), where the vocabulary derives
+    * canonically from the merges (base symbols a–z/0–9 = 0–35, merge of
+    * rank r = 36 + r — the id space a merges-only BPE model defines).
+    * This is the step that turns a cleaned corpus into model input, so
+    * the packing/chunking budgets ([[count]]) and the actual sequences
+    * come from ONE tokenizer with a structural invariant:
+    * `size(bpe_encode(t)) == bpe_token_count(t)` for every row. */
+  def encode(text: UTF8String, m: BpeMatcher): ArrayData = m.encodeText(text.toString)
+}
+
 object BpeExpressions {
+  private val Bpe = NativeKernel.of(BpeMatcher)
+  private def matcher(merges: Seq[(String, String)]) =
+    KernelConst("bpe_merges", merges)(new BpeMatcher(merges))
+
   /** Merged-BPE token count of `text` under a merge-ranks table. */
   def bpeCount(text: Column, merges: Seq[(String, String)]): Column =
-    Bridge.column(BpeTokenCount(Bridge.expression(text), merges))
+    Bpe.count(text -> StringType, matcher(merges)).as("bpe_token_count", LongType)
 
   /** Merged-BPE token ids of `text` (canonical merges-derived vocab). */
   def bpeEncode(text: Column, merges: Seq[(String, String)]): Column =
-    Bridge.column(BpeEncode(Bridge.expression(text), merges))
+    Bpe.encode(text -> StringType, matcher(merges))
+      .as("bpe_encode", ArrayType(IntegerType, containsNull = false))
 }

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /**
  * Session extensions registering the engine's native expressions for SQL
@@ -33,10 +34,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (TextFunctions.bpeCount(col, merges))
     ext.injectFunction((
       FunctionIdentifier("bpe_token_count"),
-      new ExpressionInfo(classOf[BpeTokenCount].getName, "bpe_token_count"),
+      new ExpressionInfo(classOf[NativeKernel].getName, "bpe_token_count"),
       (children: Seq[Expression]) => {
         require(children.size == 1, "bpe_token_count takes exactly 1 argument")
-        BpeTokenCount(children.head, graft.functions.TextFunctions.BpeMerges)
+        Bridge.expression(BpeExpressions.bpeCount(Bridge.column(children.head),
+          graft.functions.TextFunctions.BpeMerges))
       }))
     // mergeable quantile sketches at the default k; the analyzer wraps the
     // returned AggregateFunction in its AggregateExpression

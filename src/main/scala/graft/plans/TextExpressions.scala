@@ -1,915 +1,15 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, TernaryExpression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.functions.lower
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, MapType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, IntegerType, LongType, MapType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/**
- * Hashed word n-gram shingles as ONE native expression — the hot path of
- * the whole set-overlap dedup family (Jaccard/containment pairs, the df
- * cap, decontamination, repetition ratios, MinHash input).
- *
- * The column-function formulation ([[graft.functions.TextFunctions
- * .shingles]]: n `slice`s + (n−1) `zip_with` concats, then `xxhash64`
- * per exploded row) materializes every n-gram STRING and pays an
- * interpreted lambda per array element — higher-order functions don't
- * participate in whole-stage codegen. Measured at sf0.1 it is the
- * dominant cost of every consumer (~0.6 s of each pass over 5k docs).
- *
- * This expression never builds the n-gram strings at all. Because
- * shingles are the tokens of `split(lower(text), " ", -1)` re-joined
- * with single spaces, every n-gram is a CONTIGUOUS BYTE RANGE of the
- * lowered text (the separators between adjacent tokens are exactly the
- * single spaces split removed) — so the whole computation is one byte
- * scan for space positions plus one XXH64 call per window, zero
- * allocation beyond the output array. The hash is Spark's own
- * `xxhash64` (XXH64 over the UTF-8 bytes, seed 42), so emitted values
- * are BIT-IDENTICAL to `xxhash64(shingle_string)` of the column
- * formulation — MinHash signatures, banded tables and any persisted
- * hash registry built either way interoperate.
- *
- * `dedup = true` first-occurrence-dedups IN-ROW (what the Jaccard
- * family's per-doc `distinct()` exchange used to do globally — set
- * dedup within a document is row-local work, no shuffle needed).
- *
- * Documents with fewer than `n` tokens fall back to one whole-text
- * shingle, matching the column function ([[graft.functions
- * .TextFunctions.shingles]] `when(size < n)` branch: `concat_ws` over
- * the split re-joins to the input itself). Hashes are internal-only
- * (consumers emit counts and ratios, never the hash), so oracle
- * statements stay expressible over string shingles; collisions are the
- * family's documented ~n²·2⁻⁶⁴ risk, unchanged.
- */
-case class WordShingleHashes(child: Expression, n: Int, dedup: Boolean,
-    alnum: Boolean = false)
-    extends UnaryExpression {
-  require(n >= 1, s"shingle width must be >= 1: $n")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "word_shingle_hashes"
-
-  override def nullSafeEval(s: Any): Any =
-    if (alnum) ShingleHash.alnumHashes(s.asInstanceOf[UTF8String], n, dedup)
-    else ShingleHash.hashes(s.asInstanceOf[UTF8String], n, dedup)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      if (alnum) s"${ev.value} = graft.plans.ShingleHash.alnumHashes($c, $n, $dedup);"
-      else s"${ev.value} = graft.plans.ShingleHash.hashes($c, $n, $dedup);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
- * Per-document term frequencies as ONE row-local expression:
- * `array<struct<term string, tf bigint>>` over the alnum-run tokens of
- * the (pre-lowered) text, first-occurrence order.
- *
- * The point is the SHUFFLE this deletes, not the per-row constant: a
- * document's term frequencies depend on nothing but its own text, so the
- * (doc, term, tf) relation every term-statistics operator starts from
- * ([[graft.operators.Corpus.termFrequencies]]) is embarrassingly
- * parallel — the explode + corpus-wide (doc, term) exchange + aggregate
- * the column formulation pays is pure overhead. This emits the counted
- * pairs straight from the row; `explode` of the result IS the tf
- * relation, map-only.
- *
- * Tokens are maximal `[a-z0-9]` runs — the byte-scan twin of
- * `regexp_extract_all(lower(text), '[a-z0-9]+')`
- * ([[graft.functions.TextFunctions.tokens]]) — so counts are identical
- * to `explode(tokens) → groupBy(doc, term) → count`. Zero tokens → empty
- * array (explode then drops the doc, matching the groupBy form's absent
- * group).
- */
-case class TokenCountPairs(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("term", StringType, nullable = false),
-    StructField("tf", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "token_count_pairs"
-
-  override def nullSafeEval(s: Any): Any =
-    ShingleHash.tokenCounts(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.ShingleHash.tokenCounts($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
- * Per-document tf-idf top-k, row-local: given the doc's
- * [[TokenCountPairs]] array, the corpus term→df map and `n_docs` (both
- * from one broadcast row), emit `array<struct<term,tf,tfidf,rnk>>` of
- * the `k` highest-scoring terms — row_number tie-break (tfidf desc, term
- * binary asc) baked in.
- *
- * Exists because the same computation spelled with higher-order
- * functions (`transform` + `array_sort` + `element_at`) runs INTERPRETED
- * — lambda expressions don't participate in whole-stage codegen, and the
- * per-row object churn measured ~5× the cost of the scan itself at
- * sf0.1. This kernel is one static call inside codegen: an O(m·k)
- * selection, no sort, no per-element closures.
- *
- * tfidf = quantize₆(tf · ln(n_docs / df)) with plain IEEE double ops in
- * source order — bit-identical to the Column/SQL twins
- * ([[graft.functions.Quantize]]).
- */
-case class TfidfTopTerms(tc: Expression, dfMap: Expression,
-    nDocs: Expression, k: Int) extends TernaryExpression {
-  require(k >= 1, s"top-k width must be >= 1: $k")
-
-  override def first: Expression = tc
-  override def second: Expression = dfMap
-  override def third: Expression = nDocs
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val tcOk = tc.dataType match {
-      case ArrayType(StructType(Array(f0, f1)), _) =>
-        f0.dataType == StringType && f1.dataType == LongType
-      case _ => false
-    }
-    val dfOk = dfMap.dataType match {
-      case MapType(StringType, LongType, _) => true
-      case _ => false
-    }
-    if (tcOk && dfOk && nDocs.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (array<struct<string,bigint>>, " +
-        s"map<string,bigint>, bigint), got ${tc.dataType.sql}, " +
-        s"${dfMap.dataType.sql}, ${nDocs.dataType.sql}")
-  }
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("term", StringType, nullable = false),
-    StructField("tf", LongType, nullable = false),
-    StructField("tfidf", DoubleType, nullable = false),
-    StructField("rnk", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "tfidf_top_terms"
-
-  override def nullSafeEval(tcV: Any, dfmV: Any, ndV: Any): Any =
-    ShingleHash.tfidfTopK(tcV.asInstanceOf[ArrayData],
-      dfmV.asInstanceOf[MapData], ndV.asInstanceOf[Long], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) =>
-      s"${ev.value} = graft.plans.ShingleHash.tfidfTopK($a, $b, $c, $k);")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(tc = newFirst, dfMap = newSecond, nDocs = newThird)
-}
-
-/**
- * Row-local unigram-LM score: quantize₆ of the mean ln(cnt/total) over a
- * document's token-hash instances against a broadcast hash→count model —
- * the scoring half of [[graft.operators.Corpus.unigramLogProb]] with the
- * corpus-wide term-join exchange deleted (the model is vocabulary-sized,
- * so it broadcasts; the per-instance average is then a fact of the row).
- * Callers filter empty arrays first (token-less docs emit nothing, the
- * explode form's behavior).
- */
-case class HashLogProbAvg(hashes: Expression, model: Expression,
-    total: Expression) extends TernaryExpression {
-  override def first: Expression = hashes
-  override def second: Expression = model
-  override def third: Expression = total
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = (hashes.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }) && (model.dataType match {
-      case MapType(LongType, LongType, _) => true
-      case _ => false
-    }) && total.dataType == LongType
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (array<bigint>, map<bigint,bigint>, bigint), " +
-        s"got ${hashes.dataType.sql}, ${model.dataType.sql}, " +
-        s"${total.dataType.sql}")
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "hash_log_prob_avg"
-
-  override def nullSafeEval(h: Any, m: Any, t: Any): Any =
-    ShingleHash.logProbAvg(h.asInstanceOf[ArrayData],
-      m.asInstanceOf[MapData], t.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) =>
-      s"${ev.value} = graft.plans.ShingleHash.logProbAvg($a, $b, $c);")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(hashes = newFirst, model = newSecond, total = newThird)
-}
-
-/**
- * Row-local bigram-LM score: quantize₆ of the mean ln(c(w1,w2)/c(w1,·))
- * over a document's adjacent token pairs, both counts from broadcast
- * hash→count models ([[graft.operators.Corpus.bigramLogProb]]). Takes the
- * FULL unigram-hash array plus the bigram-window array and zips
- * positionally (token i ↔ window starting at i), so no sliced w1 array is
- * ever allocated. Callers filter docs with no bigram (< 2 tokens).
- */
-case class HashBigramLogProbAvg(w1s: Expression, bgs: Expression,
-    cbg: Expression, cw: Expression) extends QuaternaryExpression {
-  override def first: Expression = w1s
-  override def second: Expression = bgs
-  override def third: Expression = cbg
-  override def fourth: Expression = cw
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def longArr(e: Expression) = e.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    def longMap(e: Expression) = e.dataType match {
-      case MapType(LongType, LongType, _) => true
-      case _ => false
-    }
-    if (longArr(w1s) && longArr(bgs) && longMap(cbg) && longMap(cw))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (array<bigint>, array<bigint>, " +
-        s"map<bigint,bigint>, map<bigint,bigint>), got ${w1s.dataType.sql}, " +
-        s"${bgs.dataType.sql}, ${cbg.dataType.sql}, ${cw.dataType.sql}")
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "hash_bigram_log_prob_avg"
-
-  override def nullSafeEval(w: Any, b: Any, m2: Any, m1: Any): Any =
-    ShingleHash.bigramLogProbAvg(w.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData], m2.asInstanceOf[MapData],
-      m1.asInstanceOf[MapData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c, d) =>
-      s"${ev.value} = graft.plans.ShingleHash.bigramLogProbAvg($a, $b, $c, $d);")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression,
-      newFourth: Expression): Expression =
-    copy(w1s = newFirst, bgs = newSecond, cbg = newThird, cw = newFourth)
-}
-
-/**
- * Row-local token-frequency entropy over a [[TokenCountPairs]] tf array:
- * quantize₆(ln(Σtf) − Σ tf·ln(tf) / Σtf). Exists because the same two
- * folds spelled with `aggregate` higher-order functions run INTERPRETED
- * (lambdas don't join whole-stage codegen) — measured as the dominant
- * cost of `text_entropy` at sf0.1. Callers filter empty arrays (tf
- * entries are ≥ 1 by construction, so non-empty ⇒ total > 0).
- */
-case class CountEntropy(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint>, got ${t.sql}")
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "count_entropy"
-
-  override def nullSafeEval(a: Any): Any =
-    ShingleHash.countEntropy(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.ShingleHash.countEntropy($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
- * The five per-document quality counters in ONE pass over the bytes —
- * `struct<n_chars, n_tokens, n_punct, n_digit, n_alnum>` (all bigint).
- *
- * The Column formulation ([[graft.functions.TextFunctions
- * .qualityColumns]]'s former body) paid five separate engines per row:
- * `length`, a token-ARRAY materialization just to `size` it
- * (`regexp_extract_all` allocates every match string), and three
- * `regexp_count` scans — the most per-byte-expensive projection in the
- * whole scoring family (measured: the 128× scale sweep put `quality` at
- * ~4× the cost of the winnowing fingerprint pass over the same bytes).
- *
- * Two children, matching the oracle's shapes exactly: `n_chars`,
- * `n_punct`, `n_digit` count the ORIGINAL text (`length(text)`,
- * `regexp_count(text, '[.,;:!?]')`, `regexp_count(text, '[0-9]')`);
- * `n_tokens`, `n_alnum` count the LOWERED text (maximal / individual
- * `[a-z0-9]` byte runs — `regexp_extract_all(lower(text), '[a-z0-9]+')`
- * / `regexp_count(lower(text), '[a-z0-9]')`). Lowering stays Spark's own
- * `Lower` (Unicode-exact, e.g. U+212A → 'k'); the byte scans are exact
- * on any UTF-8 input because every class member is a single ASCII byte
- * that never occurs inside a multi-byte sequence, and `n_chars` uses
- * `UTF8String.numChars` — the same call `length()` compiles to.
- * Spec-pinned bit-identical to the regex formulation, Unicode included.
- */
-/**
- * DSIR hashed feature buckets as ONE native expression: for every alnum
- * token and every adjacent token pair of the (pre-lowered) text, the
- * md5-prefix bucket `conv(substr(md5(feature ++ salt), 1, 8), 16, 10) %
- * buckets` — BIT-IDENTICAL to hashing the built feature strings through
- * [[graft.operators.Corpus.hashBucket]], so the engine-portable oracle
- * contract is unchanged. The column formulation builds every uni+bigram
- * STRING through interpreted zip_with/concat lambdas and then runs the
- * five-expression md5→substring→conv→cast→pmod chain per exploded row;
- * this kernel runs one byte scan for token bounds and streams token
- * bytes straight into a thread-local MessageDigest — no feature strings,
- * no hex round-trip (the first 8 hex digits of md5 ARE its first 4
- * bytes). Zero tokens → empty array; null text → null (explode_outer
- * then keeps the doc either way).
- */
-case class Md5FeatureBuckets(child: Expression, buckets: Int, salt: String)
-    extends UnaryExpression {
-  require(buckets > 0, s"buckets must be positive: $buckets")
-  private lazy val saltBytes = salt.getBytes("UTF-8")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "md5_feature_buckets"
-
-  override def nullSafeEval(s: Any): Any =
-    ShingleHash.md5FeatureBuckets(s.asInstanceOf[UTF8String], buckets, saltBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val saltRef = ctx.addReferenceObj("saltBytes", saltBytes, "byte[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.ShingleHash.md5FeatureBuckets($c, $buckets, $saltRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class QualitySignals(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, string), got (${l.sql}, ${r.sql})")
-    }
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_chars", LongType, nullable = false),
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_punct", LongType, nullable = false),
-    StructField("n_digit", LongType, nullable = false),
-    StructField("n_alnum", LongType, nullable = false)))
-  override def prettyName: String = "quality_signals"
-
-  override def nullSafeEval(orig: Any, low: Any): Any =
-    ShingleHash.qualitySignals(
-      orig.asInstanceOf[UTF8String], low.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (o, l) =>
-      s"${ev.value} = graft.plans.ShingleHash.qualitySignals($o, $l);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/**
- * The Gopher rule-gate counters as ONE byte scan — the fused form of
- * seven `regexp_count`s plus eight stop-word `rlike`s (15 regex passes,
- * each a UTF-8↔UTF-16 round trip, measured as the dominant
- * `quality_gopher` cost). `left` = original text (words, symbols, line
- * shapes, alpha), `right` = lowered text (stop-word runs). Semantics are
- * pinned to the RE2/ORACLE reading of the shared patterns:
- *  - "word" = maximal run of bytes outside the explicit class
- *    [ \t\n\r\f]; `n_nonws` counts non-ws CODE POINTS (non-continuation
- *    bytes — exact on any Unicode text, same trick as [[QualitySignals]]);
- *  - symbol/ellipsis automata emulate leftmost NON-OVERLAPPING regex
- *    matching (a successful match consumes its span; a failed one
- *    advances one position) — all trigger bytes are ASCII or UTF-8 lead
- *    bytes, so mid-character false starts are impossible;
- *  - stop-word hit = some maximal [A-Za-z0-9_]-run of the LOWERED text
- *    equals the stop word — RE2's ASCII `\b` semantics (the DuckDB
- *    oracle's), NOT Java's Unicode `\b`; the pin formulation spells the
- *    same ASCII boundary with Java lookarounds (same resolution as the
- *    langId kernel's boundary note in
- *    [[graft.functions.TextFunctions.PiiPatterns]]).
- */
-case class GopherSignals(left: Expression, right: Expression,
-    stopwords: Seq[String]) extends BinaryExpression {
-  require(stopwords.nonEmpty && stopwords.size <= 32,
-    s"stop list must fit the hit bitmask: ${stopwords.size}")
-
-  @transient private lazy val stopBytes: Array[Array[Byte]] =
-    stopwords.map(_.getBytes("UTF-8")).toArray
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, string), got (${l.sql}, ${r.sql})")
-    }
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_words", LongType, nullable = false),
-    StructField("n_nonws", LongType, nullable = false),
-    StructField("n_symbol", LongType, nullable = false),
-    StructField("n_lines", LongType, nullable = false),
-    StructField("n_bullet_lines", LongType, nullable = false),
-    StructField("n_ellipsis_lines", LongType, nullable = false),
-    StructField("n_alpha_words", LongType, nullable = false),
-    StructField("stop_hits", LongType, nullable = false)))
-  override def prettyName: String = "gopher_signals"
-
-  override def nullSafeEval(orig: Any, low: Any): Any =
-    ShingleHash.gopherSignals(orig.asInstanceOf[UTF8String],
-      low.asInstanceOf[UTF8String], stopBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sRef = ctx.addReferenceObj("gopherStops", stopBytes, "byte[][]")
-    nullSafeCodeGen(ctx, ev, (o, l) =>
-      s"${ev.value} = graft.plans.ShingleHash.gopherSignals($o, $l, $sRef);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/**
- * The Gopher-gate VERDICT alone as one boolean kernel — [[GopherSignals]]
- * plus the rule arithmetic ([[ShingleHash.gopherKeep]]), for use as a
- * Filter predicate. A single expression instance is the only shape that
- * survives the optimizer with one byte-scan per row: filtering on the
- * keep column assembled from the signals struct re-evaluates the kernel
- * per struct reference (FilterExec does no subexpression elimination; a
- * hand-projected alias — or even Catalyst's own `With` wrapper, whose
- * `RewriteWithExpression` batch runs BEFORE predicate pushdown in this
- * Spark — gets re-substituted per reference by
- * `PushPredicateThroughNonJoin`, measured at 63 kernel copies in the
- * optimized predicate). The rule arithmetic here is spec-pinned equal to
- * the Column formulation
- * ([[graft.functions.TextFunctions.gopherColumns]]'s keep) over real
- * corpus text, so the duplication is verified, not trusted.
- */
-case class GopherKeep(left: Expression, right: Expression,
-    stopwords: Seq[String]) extends BinaryExpression {
-  require(stopwords.nonEmpty && stopwords.size <= 32,
-    s"stop list must fit the hit bitmask: ${stopwords.size}")
-
-  @transient private lazy val stopBytes: Array[Array[Byte]] =
-    stopwords.map(_.getBytes("UTF-8")).toArray
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, string), got (${l.sql}, ${r.sql})")
-    }
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override def prettyName: String = "gopher_keep"
-
-  override def nullSafeEval(orig: Any, low: Any): Any =
-    ShingleHash.gopherKeep(orig.asInstanceOf[UTF8String],
-      low.asInstanceOf[UTF8String], stopBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sRef = ctx.addReferenceObj("gopherStops", stopBytes, "byte[][]")
-    nullSafeCodeGen(ctx, ev, (o, l) =>
-      s"${ev.value} = graft.plans.ShingleHash.gopherKeep($o, $l, $sRef);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/**
- * C4-style line-level cleaning (Raffel et al. 2020, §2.2 — public) as ONE
- * pass: keep only lines that end in a terminal punctuation mark
- * (`[.!?"”]`, trailing blanks allowed), contain ≥ 5 words, and do not
- * contain "javascript" (case-insensitive); page flags for "lorem ipsum" /
- * '{' and a ≥3-kept-lines verdict. `left` = original text (line content,
- * word counts, punctuation, brace), `right` = lowered text (the
- * javascript / lorem-ipsum searches — full Unicode lowering, same as the
- * oracle's `lower()`). Lowering never maps anything to '\n', so both
- * children split into the SAME line count and line i of one is line i of
- * the other — the kernel walks them in lockstep, so the emitted clean
- * text is original bytes while the containment checks see the oracle's
- * lowered view. Returns struct<clean_text, n_lines_kept, keep>; null
- * text → null.
- */
-case class C4LineClean(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, string), got (${l.sql}, ${r.sql})")
-    }
-  override def dataType: DataType = StructType(Seq(
-    StructField("clean_text", StringType, nullable = false),
-    StructField("n_lines_kept", LongType, nullable = false),
-    StructField("keep", org.apache.spark.sql.types.BooleanType, nullable = false)))
-  override def prettyName: String = "c4_line_clean"
-
-  override def nullSafeEval(orig: Any, low: Any): Any =
-    ShingleHash.c4LineClean(orig.asInstanceOf[UTF8String], low.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (o, l) =>
-      s"${ev.value} = graft.plans.ShingleHash.c4LineClean($o, $l);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/**
- * A chain of `regexp_replace` passes as ONE expression — same
- * `java.util.regex` engine, same patterns, same sequential-pass
- * semantics (pass i sees pass i−1's output), so output is IDENTICAL to
- * the folded `regexp_replace` column chain by construction. What it
- * deletes is the per-pass plumbing: Spark's `RegExpReplace` decodes
- * UTF8String → java String and re-encodes on EVERY pass (the markup
- * chain is 13 passes = 13 UTF-8↔UTF-16 round trips per document, which
- * dominated the measured cost); this decodes once, runs every
- * precompiled matcher over the UTF-16 string, and encodes once.
- * Replacements here are plain literals without `$`/`\` references —
- * `Matcher.replaceAll` then agrees byte-for-byte with `RegExpReplace`'s
- * appendReplacement loop (asserted at construction, so the equivalence
- * can't silently erode if a pattern gains a group reference).
- */
-case class ChainedRegexReplace(child: Expression,
-    patterns: Seq[String], repls: Seq[String]) extends UnaryExpression {
-  require(patterns.nonEmpty && patterns.length == repls.length,
-    "one replacement per pattern")
-  require(repls.forall(r => !r.contains("$") && !r.contains("\\")),
-    "replacements must be literals (no group references/escapes)")
-
-  @transient private lazy val compiled: Array[java.util.regex.Pattern] =
-    patterns.map(java.util.regex.Pattern.compile).toArray
-  @transient private lazy val replArr: Array[String] = repls.toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${t.sql}")
-  }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "chained_regex_replace"
-
-  override def nullSafeEval(s: Any): Any =
-    ShingleHash.chainedReplace(s.asInstanceOf[UTF8String], compiled, replArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pRef = ctx.addReferenceObj("crrPats", compiled,
-      "java.util.regex.Pattern[]")
-    val rRef = ctx.addReferenceObj("crrRepls", replArr, "java.lang.String[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.ShingleHash.chainedReplace($c, $pRef, $rRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
- * Stopword language-ID decision as ONE pass over the bytes — the
- * byte-scan twin of [[graft.functions.TextFunctions.langId]]'s regex +
- * higher-order-function formulation, which paid a CJK `regexp_count`, a
- * 32-alternative `\b(...)\b` extract-all (allocating every match), and
- * an INTERPRETED fold over the matches (lambda expressions don't
- * participate in whole-stage codegen) — measured ~4× the per-byte cost
- * of the winnowing fingerprint pass.
- *
- * Exact-match contract — ASCII boundaries, the ORACLE's semantics: a
- * stopword matches iff a MAXIMAL `[a-z0-9_]` run of the lowered text
- * equals it. This is RE2/DuckDB `\b` (word set `[0-9A-Za-z_]`) — the
- * authority the engine's correctness gate runs — and equivalently Java
- * `(?<![a-z0-9_])w(?![a-z0-9_])`. It is NOT Java's `\b`, whose word
- * set is `Character.isLetterOrDigit || '_'`: there Unicode letters and
- * combining marks extend words ("éthe" hides "the"), a cross-engine
- * divergence the randomized kernel pin surfaced (PropertySpec). The
- * scan counts word-runs of the lowered bytes against a word→languages
- * map.
- * A word listed by several languages increments each (e.g. "la" is in
- * both fr and es — the membership-array semantics of the fold). Winner
- * is strictly-greater max in declaration order (first-listed wins
- * ties), zero hits → "und", and any original-text code point in
- * U+4E00–U+9FFF short-circuits to "zh" (the `when(cjk > 0)` guard) —
- * decoded from the UTF-8 lead/continuation bytes directly.
- */
-case class LangIdDecide(left: Expression, right: Expression,
-    langs: Seq[String], wordSets: Seq[Seq[String]])
-    extends BinaryExpression {
-  require(langs.nonEmpty && langs.length == wordSets.length,
-    "one word set per language")
-
-  @transient private lazy val langArr: Array[UTF8String] =
-    langs.map(UTF8String.fromString).toArray
-  @transient private lazy val wordMap: java.util.HashMap[UTF8String, Array[Int]] = {
-    val m = new java.util.HashMap[UTF8String, Array[Int]]()
-    for ((ws, li) <- wordSets.zipWithIndex; w <- ws) {
-      val k = UTF8String.fromString(w)
-      val prev = m.get(k)
-      m.put(k, if (prev == null) Array(li) else prev :+ li)
-    }
-    m
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, string), got (${l.sql}, ${r.sql})")
-    }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "langid_decide"
-
-  override def nullSafeEval(orig: Any, low: Any): Any =
-    ShingleHash.langIdDecide(orig.asInstanceOf[UTF8String],
-      low.asInstanceOf[UTF8String], wordMap, langArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mapRef = ctx.addReferenceObj("liWords", wordMap, "java.util.HashMap")
-    val langsRef = ctx.addReferenceObj("liLangs", langArr,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    nullSafeCodeGen(ctx, ev, (o, l) =>
-      s"${ev.value} = graft.plans.ShingleHash.langIdDecide($o, $l, $mapRef, $langsRef);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/**
- * Row-local MinHash signature over a [[WordShingleHashes]] array: for
- * each seed j, min over shingle hashes h of `(h & 0xFFFFFFFF)·a_j + b_j`
- * — the universal-hash fold of [[graft.operators.Dedup.minhashSignatures]]
- * as ONE codegen'd expression (the `aggregate`/`zip_with` spelling ran
- * every per-element lambda interpreted, which dominated the signature
- * projection). Constants ride the expression as literals (31-bit a odd,
- * 31-bit b — the 32-bit h keeps the multiply under 2⁶³, no wrap).
- * Min over the in-row SET equals min over the multiset, so deduped
- * shingle input produces bit-identical signatures faster.
- */
-case class MinHashFold(child: Expression, a: Seq[Long], b: Seq[Long])
-    extends UnaryExpression {
-  require(a.nonEmpty && a.length == b.length,
-    "MinHashFold needs one (a,b) per seed")
-  private lazy val aArr = a.toArray
-  private lazy val bArr = b.toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint>, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_fold"
-
-  override def nullSafeEval(h: Any): Any =
-    ShingleHash.minhashFold(h.asInstanceOf[ArrayData], aArr, bArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("mhA", aArr, "long[]")
-    val bRef = ctx.addReferenceObj("mhB", bArr, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.ShingleHash.minhashFold($c, $aRef, $bRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
- * Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken, SIGMOD
- * 2003) as ONE row-local expression: word k-gram md5-prefix hashes →
- * rightmost-minimum of every g-window → deduplicated (pos, fp) pairs.
- * The whole computation is a per-DOCUMENT fact, but the previous shape
- * paid corpus-wide machinery for it: posexplode + a per-doc sort for the
- * `lead` window, a second windowed frame aggregate for the rightmost
- * min, and a global `distinct` exchange. This kernel does the same
- * selection inside the scan — selection dedup exploits winnowing's
- * non-decreasing selected-position property, so a last-selected check
- * IS the distinct.
- *
- * Parity contract (the `fingerprint_winnow` oracle): tokens are the
- * single-space split of `lower(text)` INCLUDING empty tokens, so every
- * k-gram `concat_ws(" ", t_i..t_{i+k-1})` is a contiguous byte range of
- * the lowered text; fp = the first 8 md5 hex chars as a long
- * (engine-reproducible); docs under k tokens emit nothing,
- * and with fewer than g complete windows (g > 1) nothing is selected.
- */
-case class WinnowFingerprints(child: Expression, k: Int, g: Int)
-    extends UnaryExpression {
-  require(k >= 1 && g >= 1, s"k and g must be positive: k=$k g=$g")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("pos", LongType, nullable = false),
-    StructField("fp", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "winnow_fingerprints"
-
-  override def nullSafeEval(s: Any): Any =
-    ShingleHash.winnowFps(s.asInstanceOf[UTF8String], k, g)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.ShingleHash.winnowFps($c, $k, $g);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
- * 64-bit SimHash signature as ONE row-local expression: each single-space
- * token of `lower(text)` votes ±1 per bit of its xxhash64 (seed 42 —
- * bit-identical to the Column `xxhash64(tok)`), positive vote sums set
- * signature bits. Integer votes commute, so the kernel is EXACTLY the
- * explode → groupBy(doc) 64-conditional-sum aggregation it replaces —
- * minus the token fan-out and the aggregation exchange (a signature is a
- * per-document fact). Callers drop null texts (the explode form dropped
- * them by emitting no rows).
- */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${t.sql}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-
-  override def nullSafeEval(s: Any): Any =
-    ShingleHash.simhash64(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.ShingleHash.simhash64($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
- * md5-hex of every n-token window of the (pre-lowered) text — the
- * ExactSubstr oracle bridge's window keys as ONE row-local kernel
- * ([[ShingleHash.windowMd5s]]): each window is a contiguous byte range
- * (the [[WordShingleHashes]] observation), so no shingle strings are
- * ever built — the `shingles` column formulation chained (n−1)
- * interpreted `zip_with` concats and was the measured dominant cost of
- * the bridge (6.2 s → sub-second at sf0.1). Values are bit-identical
- * to `md5(shingle_string)` / DuckDB `md5(array_to_string(...))`.
- * Fewer than n tokens → empty array; null text → null.
- */
-case class WindowMd5s(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"window width must be >= 1: $n")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "window_md5s"
-
-  override def nullSafeEval(s: Any): Any =
-    ShingleHash.windowMd5s(s.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.ShingleHash.windowMd5s($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
- * Token-span removal for substring-level exact dedup (the rebuild step
- * of [[graft.operators.Dedup.dedupSubstrings]]): given text and the
- * ASCENDING 1-based token indices where duplicated `n`-token
- * windows start, emit the text with every covered token removed and the
- * survivors re-joined by single spaces.
- *
- * Tokens are the single-space split of the child — the kernel itself is
- * CASE-AGNOSTIC (the [[graft.plans.TextExpressions.cutSpans]] wrapper
- * pre-lowers for the oracle family; the preserve-case wrapper passes
- * the original text — valid because token indices are identical in
- * `text` and `lower(text)`: Unicode lowering never produces or consumes
- * U+0020) — so each token is a contiguous byte range and the whole cut is one byte scan with a
- * pointer walk over the starts array: O(bytes + |starts|), zero
- * allocation beyond the output buffer. An empty starts array makes the
- * expression the identity on its input (single-space split + re-join
- * round-trips exactly), which is what lets callers
- * `coalesce(starts, empty)` instead of branching per row.
- *
- * Contract (caller-enforced, see the operator): starts ascending;
- * coverage of start s is tokens [s, s+n). Null text or null starts →
- * null (null-intolerant BinaryExpression default).
- */
-case class CutSpans(left: Expression, right: Expression, n: Int)
-    extends BinaryExpression {
-  require(n >= 1, s"window width must be >= 1: $n")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, array<bigint>), got (${l.sql}, ${r.sql})")
-    }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "cut_spans"
-
-  override def nullSafeEval(s: Any, starts: Any): Any =
-    ShingleHash.cutSpans(s.asInstanceOf[UTF8String],
-      starts.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c1, c2) =>
-      s"${ev.value} = graft.plans.ShingleHash.cutSpans($c1, $c2, $n);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-/**
- * Row-local cost-budgeted chunking — the kernel behind
- * [[graft.operators.Corpus.chunkDocsByCost]]: given a doc's tokens and
- * their per-token costs, emit the (chunk, chunk_text, n_tokens) rows the
- * former explode → per-doc-window running sum → (doc, chunk) aggregation
- * computed — but in ONE pass over the row, no exchange at all. A
- * document's chunk assignment depends only on its own token stream, so
- * shipping every token through a corpus-sized shuffle just to run a
- * per-doc prefix sum was pure overhead: at sf0.1 the window form
- * exchanged ~1M exploded token rows (0.43 s vs DuckDB's 0.057 — the r16
- * verdict's 7.6× tail); at 100 TB that exchange is corpus-sized. The
- * map-only form scans, chunks in-row, and explodes only the ≤
- * tokens/chunk-budget output rows.
- *
- * Semantics are the window form's, exactly: running = inclusive prefix
- * sum of costs (null costs contribute nothing — SUM-over-window's null
- * rule), chunk = (max(running,1) − 1) div budget, chunk_text = the
- * chunk's tokens joined by single spaces in token order, n_tokens = the
- * chunk's cost sum (null when every member cost is null — SUM's rule
- * again). Chunk indices need not be contiguous or monotone (negative
- * costs can revisit a chunk); grouping is by chunk VALUE in first-
- * appearance order, matching the aggregation. Interpreted eval plus a
- * static-call codegen stub, the [[CutSpans]] pattern.
- */
-case class CostChunks(left: Expression, right: Expression, budget: Long)
-    extends BinaryExpression {
-  require(budget > 0, s"budget must be positive: $budget")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<string>, array<bigint>), got (${l.sql}, ${r.sql})")
-    }
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("chunk", LongType, nullable = false),
-    StructField("chunk_text", StringType, nullable = false),
-    StructField("n_tokens", LongType, nullable = true))))
-  override def prettyName: String = "cost_chunks"
-
-  override def nullSafeEval(toks: Any, costs: Any): Any =
-    ChunkKernel.costChunks(toks.asInstanceOf[ArrayData],
-      costs.asInstanceOf[ArrayData], budget)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c1, c2) =>
-      s"${ev.value} = graft.plans.ChunkKernel.costChunks($c1, $c2, ${budget}L);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-/** [[CostChunks]]' per-row kernel — static so generated code calls it
-  * directly (the [[ShingleHash]] convention). */
+/** The per-row kernel of cost-budgeted chunking, bound into plans by
+  * [[TextExpressions.costChunks]] (the [[ShingleHash]] convention). */
 object ChunkKernel {
   private final class Acc {
     val text = new java.lang.StringBuilder
@@ -917,6 +17,29 @@ object ChunkKernel {
     var hasCost = false
   }
 
+  /**
+   * Row-local cost-budgeted chunking — the kernel behind
+   * [[graft.operators.Corpus.chunkDocsByCost]]: given a doc's tokens and
+   * their per-token costs, emit the (chunk, chunk_text, n_tokens) rows the
+   * former explode → per-doc-window running sum → (doc, chunk) aggregation
+   * computed — but in ONE pass over the row, no exchange at all. A
+   * document's chunk assignment depends only on its own token stream, so
+   * shipping every token through a corpus-sized shuffle just to run a
+   * per-doc prefix sum was pure overhead: at sf0.1 the window form
+   * exchanged ~1M exploded token rows (0.43 s vs DuckDB's 0.057 — the r16
+   * verdict's 7.6× tail); at 100 TB that exchange is corpus-sized. The
+   * map-only form scans, chunks in-row, and explodes only the ≤
+   * tokens/chunk-budget output rows.
+   *
+   * Semantics are the window form's, exactly: running = inclusive prefix
+   * sum of costs (null costs contribute nothing — SUM-over-window's null
+   * rule), chunk = (max(running,1) − 1) div budget, chunk_text = the
+   * chunk's tokens joined by single spaces in token order, n_tokens = the
+   * chunk's cost sum (null when every member cost is null — SUM's rule
+   * again). Chunk indices need not be contiguous or monotone (negative
+   * costs can revisit a chunk); grouping is by chunk VALUE in first-
+   * appearance order, matching the aggregation.
+   */
   def costChunks(toks: ArrayData, costs: ArrayData, budget: Long): ArrayData = {
     val n = toks.numElements()
     // by-construction equal lengths (costs = transform over the same
@@ -954,8 +77,10 @@ object ChunkKernel {
   }
 }
 
-/** The per-row kernel of [[WordShingleHashes]] — static so generated code
-  * calls it directly (the scalac static forwarder). */
+/** The row-local text kernels. Each is a static method (the scalac
+  * static forwarder) that one [[NativeKernel]] binding in
+  * [[TextExpressions]] calls, from generated code and from the
+  * interpreted path alike. */
 object ShingleHash {
   /** Reused per-thread digest: getInstance per row would dominate the
     * kernel (allocation + provider lookup); digest() resets in place. */
@@ -995,13 +120,25 @@ object ShingleHash {
     (starts, ends)
   }
 
-  /** [[WindowMd5s]] kernel: the md5-hex twin of [[hashes]] for the
-    * ExactSubstr ORACLE BRIDGE — each n-token window of the
-    * (pre-lowered) text is a contiguous byte range, hashed in place
-    * with the thread-local digest; emitted as lowercase hex, identical
-    * to `md5(window_string)` in any engine. No short-doc fallback:
-    * fewer than `n` tokens → empty array (the caller's eligibility
-    * filter semantics, kept here so the bridge cannot silently widen). */
+  /**
+   * md5-hex of every n-token window of the (pre-lowered) text — the
+   * ExactSubstr oracle bridge's window keys as ONE row-local kernel
+   * ([[ShingleHash.windowMd5s]]): each window is a contiguous byte range
+   * (the [[ShingleHash.hashes]] observation), so no shingle strings are
+   * ever built — the `shingles` column formulation chained (n−1)
+   * interpreted `zip_with` concats and was the measured dominant cost of
+   * the bridge (6.2 s → sub-second at sf0.1). Values are bit-identical
+   * to `md5(shingle_string)` / DuckDB `md5(array_to_string(...))`.
+   * Fewer than n tokens → empty array; null text → null.
+   *
+   * The md5-hex twin of [[hashes]] for the
+   * ExactSubstr ORACLE BRIDGE — each n-token window of the
+   * (pre-lowered) text is a contiguous byte range, hashed in place
+   * with the thread-local digest; emitted as lowercase hex, identical
+   * to `md5(window_string)` in any engine. No short-doc fallback:
+   * fewer than `n` tokens → empty array (the caller's eligibility
+   * filter semantics, kept here so the bridge cannot silently widen).
+   */
   def windowMd5s(s: UTF8String, n: Int): ArrayData = {
     val bytes = s.getBytes
     val len = bytes.length
@@ -1044,12 +181,36 @@ object ShingleHash {
     new GenericArrayData(out)
   }
 
-  /** [[CutSpans]] kernel: one byte scan over the (pre-lowered) text with
-    * a pointer walk over the ascending starts array. Token j (1-based,
-    * single-space split semantics — empty tokens count) is dropped iff
-    * some start s ≤ j has j < s + n; survivors re-join with single
-    * spaces. Output length ≤ input length, so one exact-size scratch
-    * buffer suffices. */
+  /**
+   * Token-span removal for substring-level exact dedup (the rebuild step
+   * of [[graft.operators.Dedup.dedupSubstrings]]): given text and the
+   * ASCENDING 1-based token indices where duplicated `n`-token
+   * windows start, emit the text with every covered token removed and the
+   * survivors re-joined by single spaces.
+   *
+   * Tokens are the single-space split of the child — the kernel itself is
+   * CASE-AGNOSTIC (the [[graft.plans.TextExpressions.cutSpans]] wrapper
+   * pre-lowers for the oracle family; the preserve-case wrapper passes
+   * the original text — valid because token indices are identical in
+   * `text` and `lower(text)`: Unicode lowering never produces or consumes
+   * U+0020) — so each token is a contiguous byte range and the whole cut is one byte scan with a
+   * pointer walk over the starts array: O(bytes + |starts|), zero
+   * allocation beyond the output buffer. An empty starts array makes the
+   * expression the identity on its input (single-space split + re-join
+   * round-trips exactly), which is what lets callers
+   * `coalesce(starts, empty)` instead of branching per row.
+   *
+   * Contract (caller-enforced, see the operator): starts ascending;
+   * coverage of start s is tokens [s, s+n). Null text or null starts →
+   * null (null-intolerant BinaryExpression default).
+   *
+   * One byte scan over the (pre-lowered) text with
+   * a pointer walk over the ascending starts array. Token j (1-based,
+   * single-space split semantics — empty tokens count) is dropped iff
+   * some start s ≤ j has j < s + n; survivors re-join with single
+   * spaces. Output length ≤ input length, so one exact-size scratch
+   * buffer suffices.
+   */
   def cutSpans(s: UTF8String, starts: ArrayData, n: Int): UTF8String = {
     val b = s.getBytes
     val len = b.length
@@ -1100,9 +261,24 @@ object ShingleHash {
     new GenericArrayData(if (w == m) out else java.util.Arrays.copyOf(ded, w))
   }
 
-  /** [[Md5FeatureBuckets]] implementation — see its scaladoc for the
-    * contract. Bucket value = first 4 md5 bytes as an unsigned 32-bit
-    * int (≡ parsing the first 8 hex digits), mod `buckets`. */
+  /**
+   * DSIR hashed feature buckets as ONE native expression: for every alnum
+   * token and every adjacent token pair of the (pre-lowered) text, the
+   * md5-prefix bucket `conv(substr(md5(feature ++ salt), 1, 8), 16, 10) %
+   * buckets` — BIT-IDENTICAL to hashing the built feature strings through
+   * [[graft.operators.Corpus.hashBucket]], so the engine-portable oracle
+   * contract is unchanged. The column formulation builds every uni+bigram
+   * STRING through interpreted zip_with/concat lambdas and then runs the
+   * five-expression md5→substring→conv→cast→pmod chain per exploded row;
+   * this kernel runs one byte scan for token bounds and streams token
+   * bytes straight into a thread-local MessageDigest — no feature strings,
+   * no hex round-trip (the first 8 hex digits of md5 ARE its first 4
+   * bytes). Zero tokens → empty array; null text → null (explode_outer
+   * then keeps the doc either way).
+   *
+   * Bucket value = first 4 md5 bytes as an unsigned 32-bit int
+   * (≡ parsing the first 8 hex digits), mod `buckets`.
+   */
   def md5FeatureBuckets(s: UTF8String, buckets: Int,
       saltBytes: Array[Byte]): ArrayData = {
     val bytes = s.getBytes
@@ -1136,6 +312,42 @@ object ShingleHash {
     new GenericArrayData(out)
   }
 
+  /**
+   * Hashed word n-gram shingles as ONE native expression — the hot path of
+   * the whole set-overlap dedup family (Jaccard/containment pairs, the df
+   * cap, decontamination, repetition ratios, MinHash input).
+   *
+   * The column-function formulation ([[graft.functions.TextFunctions
+   * .shingles]]: n `slice`s + (n−1) `zip_with` concats, then `xxhash64`
+   * per exploded row) materializes every n-gram STRING and pays an
+   * interpreted lambda per array element — higher-order functions don't
+   * participate in whole-stage codegen. Measured at sf0.1 it is the
+   * dominant cost of every consumer (~0.6 s of each pass over 5k docs).
+   *
+   * This kernel never builds the n-gram strings at all. Because
+   * shingles are the tokens of `split(lower(text), " ", -1)` re-joined
+   * with single spaces, every n-gram is a CONTIGUOUS BYTE RANGE of the
+   * lowered text (the separators between adjacent tokens are exactly the
+   * single spaces split removed) — so the whole computation is one byte
+   * scan for space positions plus one XXH64 call per window, zero
+   * allocation beyond the output array. The hash is Spark's own
+   * `xxhash64` (XXH64 over the UTF-8 bytes, seed 42), so emitted values
+   * are BIT-IDENTICAL to `xxhash64(shingle_string)` of the column
+   * formulation — MinHash signatures, banded tables and any persisted
+   * hash registry built either way interoperate.
+   *
+   * `dedup = true` first-occurrence-dedups IN-ROW (what the Jaccard
+   * family's per-doc `distinct()` exchange used to do globally — set
+   * dedup within a document is row-local work, no shuffle needed).
+   *
+   * Documents with fewer than `n` tokens fall back to one whole-text
+   * shingle, matching the column function ([[graft.functions
+   * .TextFunctions.shingles]] `when(size < n)` branch: `concat_ws` over
+   * the split re-joins to the input itself). Hashes are internal-only
+   * (consumers emit counts and ratios, never the hash), so oracle
+   * statements stay expressible over string shingles; collisions are the
+   * family's documented ~n²·2⁻⁶⁴ risk, unchanged.
+   */
   def hashes(s: UTF8String, n: Int, dedup: Boolean): ArrayData = {
     val bytes = s.getBytes
     val len = bytes.length
@@ -1235,12 +447,31 @@ object ShingleHash {
     dedupFirst(out)
   }
 
-  /** [[TfidfTopTerms]] kernel. CONTRACT: `dfm`'s keys must be in
-    * ascending binary order (build the map with
-    * `map_from_entries(sort_array(collect_list(...)))`) — lookups binary-
-    * search the key array, so no per-row hash structure is built and the
-    * per-term cost is O(log vocab). A miss means the map wasn't built
-    * from the same corpus/tokenizer and raises rather than mis-scoring. */
+  /**
+   * Per-document tf-idf top-k, row-local: given the doc's
+   * [[ShingleHash.tokenCounts]] array, the corpus term→df map and `n_docs` (both
+   * from one broadcast row), emit `array<struct<term,tf,tfidf,rnk>>` of
+   * the `k` highest-scoring terms — row_number tie-break (tfidf desc, term
+   * binary asc) baked in.
+   *
+   * Exists because the same computation spelled with higher-order
+   * functions (`transform` + `array_sort` + `element_at`) runs INTERPRETED
+   * — lambda expressions don't participate in whole-stage codegen, and the
+   * per-row object churn measured ~5× the cost of the scan itself at
+   * sf0.1. This kernel is one static call inside codegen: an O(m·k)
+   * selection, no sort, no per-element closures.
+   *
+   * tfidf = quantize₆(tf · ln(n_docs / df)) with plain IEEE double ops in
+   * source order — bit-identical to the Column/SQL twins
+   * ([[graft.functions.Quantize]]).
+   *
+   * CONTRACT: `dfm`'s keys must be in
+   * ascending binary order (build the map with
+   * `map_from_entries(sort_array(collect_list(...)))`) — lookups binary-
+   * search the key array, so no per-row hash structure is built and the
+   * per-term cost is O(log vocab). A miss means the map wasn't built
+   * from the same corpus/tokenizer and raises rather than mis-scoring.
+   */
   def tfidfTopK(tc: ArrayData, dfm: MapData, nDocs: Long, k: Int): ArrayData = {
     val m = tc.numElements()
     if (m == 0) return new GenericArrayData(Array.empty[Any])
@@ -1326,10 +557,20 @@ object ShingleHash {
     if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
     else Math.floor(x * 1e6 + 0.5) / 1e6
 
-  /** [[HashLogProbAvg]] kernel. Summation is in token order; the
-    * pre-kernel join form summed in shuffle order — both land on the same
-    * quantized value (quantize₆ absorbs sub-ulp order noise, the same
-    * argument the oracle compare already relies on). */
+  /**
+   * Row-local unigram-LM score: quantize₆ of the mean ln(cnt/total) over a
+   * document's token-hash instances against a broadcast hash→count model —
+   * the scoring half of [[graft.operators.Corpus.unigramLogProb]] with the
+   * corpus-wide term-join exchange deleted (the model is vocabulary-sized,
+   * so it broadcasts; the per-instance average is then a fact of the row).
+   * Callers filter empty arrays first (token-less docs emit nothing, the
+   * explode form's behavior).
+   *
+   * Summation is in token order; the
+   * pre-kernel join form summed in shuffle order — both land on the same
+   * quantized value (quantize₆ absorbs sub-ulp order noise, the same
+   * argument the oracle compare already relies on).
+   */
   def logProbAvg(hashes: ArrayData, model: MapData, total: Long): Double = {
     val m = hashes.numElements()
     val keys = model.keyArray()
@@ -1346,8 +587,17 @@ object ShingleHash {
     q6(sum / m)
   }
 
-  /** [[HashBigramLogProbAvg]] kernel: pairs w1s(i) with bgs(i) (the
-    * window starting at token i), ignoring w1s' trailing element. */
+  /**
+   * Row-local bigram-LM score: quantize₆ of the mean ln(c(w1,w2)/c(w1,·))
+   * over a document's adjacent token pairs, both counts from broadcast
+   * hash→count models ([[graft.operators.Corpus.bigramLogProb]]). Takes the
+   * FULL unigram-hash array plus the bigram-window array and zips
+   * positionally (token i ↔ window starting at i), so no sliced w1 array is
+   * ever allocated. Callers filter docs with no bigram (< 2 tokens).
+   *
+   * Pairs w1s(i) with bgs(i) (the
+   * window starting at token i), ignoring w1s' trailing element.
+   */
   def bigramLogProbAvg(w1s: ArrayData, bgs: ArrayData, cbg: MapData,
       cw: MapData): Double = {
     val m = bgs.numElements()
@@ -1364,8 +614,19 @@ object ShingleHash {
     q6(sum / m)
   }
 
-  /** [[SimHash64]] kernel: ±1 bit votes per single-space token's
-    * xxhash64, positive sums set bits. */
+  /**
+   * 64-bit SimHash signature as ONE row-local expression: each single-space
+   * token of `lower(text)` votes ±1 per bit of its xxhash64 (seed 42 —
+   * bit-identical to the Column `xxhash64(tok)`), positive vote sums set
+   * signature bits. Integer votes commute, so the kernel is EXACTLY the
+   * explode → groupBy(doc) 64-conditional-sum aggregation it replaces —
+   * minus the token fan-out and the aggregation exchange (a signature is a
+   * per-document fact). Callers drop null texts (the explode form dropped
+   * them by emitting no rows).
+   *
+   * ±1 bit votes per single-space token's
+   * xxhash64, positive sums set bits.
+   */
   def simhash64(s: UTF8String): Long = {
     val bytes = s.getBytes
     val n = bytes.length
@@ -1394,7 +655,25 @@ object ShingleHash {
     sig
   }
 
-  /** [[WinnowFingerprints]] kernel. */
+  /**
+   * Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken, SIGMOD
+   * 2003) as ONE row-local expression: word k-gram md5-prefix hashes →
+   * rightmost-minimum of every g-window → deduplicated (pos, fp) pairs.
+   * The whole computation is a per-DOCUMENT fact, but the previous shape
+   * paid corpus-wide machinery for it: posexplode + a per-doc sort for the
+   * `lead` window, a second windowed frame aggregate for the rightmost
+   * min, and a global `distinct` exchange. This kernel does the same
+   * selection inside the scan — selection dedup exploits winnowing's
+   * non-decreasing selected-position property, so a last-selected check
+   * IS the distinct.
+   *
+   * Parity contract (the `fingerprint_winnow` oracle): tokens are the
+   * single-space split of `lower(text)` INCLUDING empty tokens, so every
+   * k-gram `concat_ws(" ", t_i..t_{i+k-1})` is a contiguous byte range of
+   * the lowered text; fp = the first 8 md5 hex chars as a long
+   * (engine-reproducible); docs under k tokens emit nothing,
+   * and with fewer than g complete windows (g > 1) nothing is selected.
+   */
   def winnowFps(s: UTF8String, k: Int, g: Int): ArrayData = {
     val bytes = s.getBytes
     val n = bytes.length
@@ -1470,7 +749,19 @@ object ShingleHash {
     new GenericArrayData(buf.toArray)
   }
 
-  /** [[MinHashFold]] kernel: all-seeds running minima in one pass. */
+  /**
+   * Row-local MinHash signature over a [[ShingleHash.hashes]] array: for
+   * each seed j, min over shingle hashes h of `(h & 0xFFFFFFFF)·a_j + b_j`
+   * — the universal-hash fold of [[graft.operators.Dedup.minhashSignatures]]
+   * as ONE codegen'd kernel call (the `aggregate`/`zip_with` spelling ran
+   * every per-element lambda interpreted, which dominated the signature
+   * projection). Constants ride the plan as kernel constants (31-bit a odd,
+   * 31-bit b — the 32-bit h keeps the multiply under 2⁶³, no wrap).
+   * Min over the in-row SET equals min over the multiset, so deduped
+   * shingle input produces bit-identical signatures faster.
+   *
+   * All-seeds running minima in one pass.
+   */
   def minhashFold(hashes: ArrayData, a: Array[Long], b: Array[Long]): ArrayData = {
     val k = a.length
     val mins = new Array[Long](k)
@@ -1490,8 +781,17 @@ object ShingleHash {
     new GenericArrayData(mins)
   }
 
-  /** [[CountEntropy]] kernel — folds in array order, matching the HOF
-    * twin's sequential accumulation (quantize₆ absorbs order noise). */
+  /**
+   * Row-local token-frequency entropy over a [[ShingleHash.tokenCounts]] tf array:
+   * quantize₆(ln(Σtf) − Σ tf·ln(tf) / Σtf). Exists because the same two
+   * folds spelled with `aggregate` higher-order functions run INTERPRETED
+   * (lambdas don't join whole-stage codegen) — measured as the dominant
+   * cost of `text_entropy` at sf0.1. Callers filter empty arrays (tf
+   * entries are ≥ 1 by construction, so non-empty ⇒ total > 0).
+   *
+   * Folds in array order, matching the HOF
+   * twin's sequential accumulation (quantize₆ absorbs order noise).
+   */
   def countEntropy(tfs: ArrayData): Double = {
     val m = tfs.numElements()
     var total = 0L
@@ -1507,8 +807,24 @@ object ShingleHash {
     q6(Math.log(t) - plogp / t)
   }
 
-  /** [[ChainedRegexReplace]] kernel: one UTF-16 decode, N in-place
-    * matcher passes, one UTF-8 encode. */
+  /**
+   * A chain of `regexp_replace` passes as ONE expression — same
+   * `java.util.regex` engine, same patterns, same sequential-pass
+   * semantics (pass i sees pass i−1's output), so output is IDENTICAL to
+   * the folded `regexp_replace` column chain by construction. What it
+   * deletes is the per-pass plumbing: Spark's `RegExpReplace` decodes
+   * UTF8String → java String and re-encodes on EVERY pass (the markup
+   * chain is 13 passes = 13 UTF-8↔UTF-16 round trips per document, which
+   * dominated the measured cost); this decodes once, runs every
+   * precompiled matcher over the UTF-16 string, and encodes once.
+   * Replacements here are plain literals without `$`/`\` references —
+   * `Matcher.replaceAll` then agrees byte-for-byte with `RegExpReplace`'s
+   * appendReplacement loop (asserted by the builder, so the equivalence
+   * can't silently erode if a pattern gains a group reference).
+   *
+   * One UTF-16 decode, N in-place
+   * matcher passes, one UTF-8 encode.
+   */
   def chainedReplace(s: UTF8String,
       pats: Array[java.util.regex.Pattern],
       repls: Array[String]): UTF8String = {
@@ -1524,9 +840,36 @@ object ShingleHash {
   private val LangUnd = UTF8String.fromString("und")
   private val LangZh = UTF8String.fromString("zh")
 
-  /** [[LangIdDecide]] kernel: CJK scan over the original bytes (aligned
-    * UTF-8 decode of 3-byte sequences), then word-run lookups over the
-    * lowered bytes. Token UTF8Strings wrap sub-ranges — no copies. */
+  /**
+   * Stopword language-ID decision as ONE pass over the bytes — the
+   * byte-scan twin of [[graft.functions.TextFunctions.langId]]'s regex +
+   * higher-order-function formulation, which paid a CJK `regexp_count`, a
+   * 32-alternative `\b(...)\b` extract-all (allocating every match), and
+   * an INTERPRETED fold over the matches (lambda expressions don't
+   * participate in whole-stage codegen) — measured ~4× the per-byte cost
+   * of the winnowing fingerprint pass.
+   *
+   * Exact-match contract — ASCII boundaries, the ORACLE's semantics: a
+   * stopword matches iff a MAXIMAL `[a-z0-9_]` run of the lowered text
+   * equals it. This is RE2/DuckDB `\b` (word set `[0-9A-Za-z_]`) — the
+   * authority the engine's correctness gate runs — and equivalently Java
+   * `(?<![a-z0-9_])w(?![a-z0-9_])`. It is NOT Java's `\b`, whose word
+   * set is `Character.isLetterOrDigit || '_'`: there Unicode letters and
+   * combining marks extend words ("éthe" hides "the"), a cross-engine
+   * divergence the randomized kernel pin surfaced (PropertySpec). The
+   * scan counts word-runs of the lowered bytes against a word→languages
+   * map.
+   * A word listed by several languages increments each (e.g. "la" is in
+   * both fr and es — the membership-array semantics of the fold). Winner
+   * is strictly-greater max in declaration order (first-listed wins
+   * ties), zero hits → "und", and any original-text code point in
+   * U+4E00–U+9FFF short-circuits to "zh" (the `when(cjk > 0)` guard) —
+   * decoded from the UTF-8 lead/continuation bytes directly.
+   *
+   * CJK scan over the original bytes (aligned
+   * UTF-8 decode of 3-byte sequences), then word-run lookups over the
+   * lowered bytes. Token UTF8Strings wrap sub-ranges — no copies.
+   */
   def langIdDecide(orig: UTF8String, low: UTF8String,
       wordMap: java.util.HashMap[UTF8String, Array[Int]],
       langs: Array[UTF8String]): UTF8String = {
@@ -1571,9 +914,34 @@ object ShingleHash {
     if (best < 0) LangUnd else langs(best)
   }
 
-  /** [[QualitySignals]] kernel: one byte scan per child. ASCII class
-    * tests never match UTF-8 continuation/lead bytes (all >= 0x80), so
-    * the counts are exact on any Unicode text. */
+  /**
+   * The five per-document quality counters in ONE pass over the bytes —
+   * `struct<n_chars, n_tokens, n_punct, n_digit, n_alnum>` (all bigint).
+   *
+   * The Column formulation ([[graft.functions.TextFunctions
+   * .qualityColumns]]'s former body) paid five separate engines per row:
+   * `length`, a token-ARRAY materialization just to `size` it
+   * (`regexp_extract_all` allocates every match string), and three
+   * `regexp_count` scans — the most per-byte-expensive projection in the
+   * whole scoring family (measured: the 128× scale sweep put `quality` at
+   * ~4× the cost of the winnowing fingerprint pass over the same bytes).
+   *
+   * Two children, matching the oracle's shapes exactly: `n_chars`,
+   * `n_punct`, `n_digit` count the ORIGINAL text (`length(text)`,
+   * `regexp_count(text, '[.,;:!?]')`, `regexp_count(text, '[0-9]')`);
+   * `n_tokens`, `n_alnum` count the LOWERED text (maximal / individual
+   * `[a-z0-9]` byte runs — `regexp_extract_all(lower(text), '[a-z0-9]+')`
+   * / `regexp_count(lower(text), '[a-z0-9]')`). Lowering stays Spark's own
+   * `Lower` (Unicode-exact, e.g. U+212A → 'k'); the byte scans are exact
+   * on any UTF-8 input because every class member is a single ASCII byte
+   * that never occurs inside a multi-byte sequence, and `n_chars` uses
+   * `UTF8String.numChars` — the same call `length()` compiles to.
+   * Spec-pinned bit-identical to the regex formulation, Unicode included.
+   *
+   * One byte scan per child. ASCII class
+   * tests never match UTF-8 continuation/lead bytes (all >= 0x80), so
+   * the counts are exact on any Unicode text.
+   */
   def qualitySignals(orig: UTF8String, low: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
     val ob = orig.getBytes
     var punct = 0L
@@ -1607,11 +975,27 @@ object ShingleHash {
   private val C4LoremIpsum = "lorem ipsum".getBytes
   private val C4OpenBrace = Array[Byte]('{')
 
-  /** [[C4LineClean]] kernel: lockstep line walk over original + lowered
-    * bytes. Line rules match the oracle lambda exactly: terminal
-    * `[.!?"”]` after trailing `[ \t\r\f]*`, ≥ 5 `[^ \t\r\f]+` word runs,
-    * no "javascript" in the lowered line. Kept original lines re-join
-    * with '\n'. */
+  /**
+   * C4-style line-level cleaning (Raffel et al. 2020, §2.2 — public) as ONE
+   * pass: keep only lines that end in a terminal punctuation mark
+   * (`[.!?"”]`, trailing blanks allowed), contain ≥ 5 words, and do not
+   * contain "javascript" (case-insensitive); page flags for "lorem ipsum" /
+   * '{' and a ≥3-kept-lines verdict. `left` = original text (line content,
+   * word counts, punctuation, brace), `right` = lowered text (the
+   * javascript / lorem-ipsum searches — full Unicode lowering, same as the
+   * oracle's `lower()`). Lowering never maps anything to '\n', so both
+   * children split into the SAME line count and line i of one is line i of
+   * the other — the kernel walks them in lockstep, so the emitted clean
+   * text is original bytes while the containment checks see the oracle's
+   * lowered view. Returns struct<clean_text, n_lines_kept, keep>; null
+   * text → null.
+   *
+   * Lockstep line walk over original + lowered
+   * bytes. Line rules match the oracle lambda exactly: terminal
+   * `[.!?"”]` after trailing `[ \t\r\f]*`, ≥ 5 `[^ \t\r\f]+` word runs,
+   * no "javascript" in the lowered line. Kept original lines re-join
+   * with '\n'.
+   */
   def c4LineClean(orig: UTF8String, low: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
     val ob = orig.getBytes
     val lb = low.getBytes
@@ -1680,10 +1064,32 @@ object ShingleHash {
       UTF8String.fromBytes(out.toByteArray), kept, keep)
   }
 
-  /** [[GopherSignals]] kernel: every Gopher-gate counter in one byte
-    * scan of the original text + one of the lowered text. Automata
-    * emulate leftmost non-overlapping regex matching — see the
-    * expression's scaladoc for the exact semantics contract. */
+  /**
+   * The Gopher rule-gate counters as ONE byte scan — the fused form of
+   * seven `regexp_count`s plus eight stop-word `rlike`s (15 regex passes,
+   * each a UTF-8↔UTF-16 round trip, measured as the dominant
+   * `quality_gopher` cost). `left` = original text (words, symbols, line
+   * shapes, alpha), `right` = lowered text (stop-word runs). Semantics are
+   * pinned to the RE2/ORACLE reading of the shared patterns:
+   *  - "word" = maximal run of bytes outside the explicit class
+   *    [ \t\n\r\f]; `n_nonws` counts non-ws CODE POINTS (non-continuation
+   *    bytes — exact on any Unicode text, same trick as [[ShingleHash.qualitySignals]]);
+   *  - symbol/ellipsis automata emulate leftmost NON-OVERLAPPING regex
+   *    matching (a successful match consumes its span; a failed one
+   *    advances one position) — all trigger bytes are ASCII or UTF-8 lead
+   *    bytes, so mid-character false starts are impossible;
+   *  - stop-word hit = some maximal [A-Za-z0-9_]-run of the LOWERED text
+   *    equals the stop word — RE2's ASCII `\b` semantics (the DuckDB
+   *    oracle's), NOT Java's Unicode `\b`; the pin formulation spells the
+   *    same ASCII boundary with Java lookarounds (same resolution as the
+   *    langId kernel's boundary note in
+   *    [[graft.functions.TextFunctions.PiiPatterns]]).
+   *
+   * Every Gopher-gate counter in one byte
+   * scan of the original text + one of the lowered text. Automata
+   * emulate leftmost non-overlapping regex matching, with the exact
+   * semantics contract above.
+   */
   def gopherSignals(orig: UTF8String, low: UTF8String,
       stops: Array[Array[Byte]]): org.apache.spark.sql.catalyst.InternalRow = {
     val ob = orig.getBytes
@@ -1785,11 +1191,28 @@ object ShingleHash {
   val GopherMaxEllipsisRatio = 0.3
   val GopherMinAlphaRatio = 0.8
 
-  /** [[GopherKeep]] kernel: [[gopherSignals]] + the gate verdict in one
-    * call. The ratio quantization is the EXACT arithmetic of
-    * [[graft.functions.Quantize.quantize]](·, 6) — floor(x·10⁶ + 0.5)/10⁶
-    * on doubles with non-finite passthrough — so this verdict is
-    * bit-identical to comparing the assembled columns. */
+  /**
+   * The Gopher-gate VERDICT alone as one boolean kernel —
+   * [[gopherSignals]] plus the rule arithmetic, for use as a Filter
+   * predicate. A single expression instance is the only shape that
+   * survives the optimizer with one byte-scan per row: filtering on the
+   * keep column assembled from the signals struct re-evaluates the kernel
+   * per struct reference (FilterExec does no subexpression elimination; a
+   * hand-projected alias — or even Catalyst's own `With` wrapper, whose
+   * `RewriteWithExpression` batch runs BEFORE predicate pushdown in this
+   * Spark — gets re-substituted per reference by
+   * `PushPredicateThroughNonJoin`, measured at 63 kernel copies in the
+   * optimized predicate). The rule arithmetic here is spec-pinned equal to
+   * the Column formulation
+   * ([[graft.functions.TextFunctions.gopherColumns]]'s keep) over real
+   * corpus text, so the duplication is verified, not trusted.
+   *
+   * [[gopherSignals]] + the gate verdict in one
+   * call. The ratio quantization is the EXACT arithmetic of
+   * [[graft.functions.Quantize.quantize]](·, 6) — floor(x·10⁶ + 0.5)/10⁶
+   * on doubles with non-finite passthrough — so this verdict is
+   * bit-identical to comparing the assembled columns.
+   */
   def gopherKeep(orig: UTF8String, low: UTF8String,
       stops: Array[Array[Byte]]): Boolean = {
     val r = gopherSignals(orig, low, stops)
@@ -1814,10 +1237,32 @@ object ShingleHash {
       stopHits >= graft.functions.TextFunctions.GopherMinStopHits
   }
 
-  /** [[TokenCountPairs]] kernel: count the alnum-run tokens of `s` into
-    * (term, tf) struct rows, first-occurrence order. Token UTF8Strings
-    * wrap sub-ranges of the input's byte array — zero copies until the
-    * row is written out. */
+  /**
+   * Per-document term frequencies as ONE row-local expression:
+   * `array<struct<term string, tf bigint>>` over the alnum-run tokens of
+   * the (pre-lowered) text, first-occurrence order.
+   *
+   * The point is the SHUFFLE this deletes, not the per-row constant: a
+   * document's term frequencies depend on nothing but its own text, so the
+   * (doc, term, tf) relation every term-statistics operator starts from
+   * ([[graft.operators.Corpus.termFrequencies]]) is embarrassingly
+   * parallel — the explode + corpus-wide (doc, term) exchange + aggregate
+   * the column formulation pays is pure overhead. This emits the counted
+   * pairs straight from the row; `explode` of the result IS the tf
+   * relation, map-only.
+   *
+   * Tokens are maximal `[a-z0-9]` runs — the byte-scan twin of
+   * `regexp_extract_all(lower(text), '[a-z0-9]+')`
+   * ([[graft.functions.TextFunctions.tokens]]) — so counts are identical
+   * to `explode(tokens) → groupBy(doc, term) → count`. Zero tokens → empty
+   * array (explode then drops the doc, matching the groupBy form's absent
+   * group).
+   *
+   * Count the alnum-run tokens of `s` into
+   * (term, tf) struct rows, first-occurrence order. Token UTF8Strings
+   * wrap sub-ranges of the input's byte array — zero copies until the
+   * row is written out.
+   */
   def tokenCounts(s: UTF8String): ArrayData = {
     val bytes = s.getBytes
     val len = bytes.length
@@ -1850,112 +1295,195 @@ object ShingleHash {
 }
 
 object TextExpressions {
+  private val Shingle = NativeKernel.of(ShingleHash)
+  private val Str = StringType
+  private val Longs = ArrayType(LongType, containsNull = false)
+  private val LongMap = MapType(LongType, LongType)
+  private val TermCounts = ArrayType(StructType(Seq(
+    StructField("term", StringType, nullable = false),
+    StructField("tf", LongType, nullable = false))), containsNull = false)
+  private def longStruct(names: String*) =
+    StructType(names.map(StructField(_, LongType, nullable = false)))
+
   /** array<long> of xxhash64'd word n-gram shingles of `lower(text)`
     * (single-space tokens, whole-text fallback under `n` tokens — the
     * [[graft.functions.TextFunctions.shingles]] semantics) — codegen'd,
     * zero-string-allocation; `dedup` gives the in-row SET. Null text →
     * null (explode drops the doc — what the SQL twins' `unnest` of a
     * null list does too). */
-  def shingleHashes(text: Column, n: Int, dedup: Boolean = true): Column =
-    Bridge.column(WordShingleHashes(Bridge.expression(lower(text)), n, dedup))
+  def shingleHashes(text: Column, n: Int, dedup: Boolean = true): Column = {
+    require(n >= 1, s"shingle width must be >= 1: $n")
+    Shingle.hashes(lower(text) -> Str, n, dedup).as("word_shingle_hashes", Longs)
+  }
 
   /** array<long> of xxhash64'd n-grams over ALNUM-run tokens (the
     * [[graft.functions.TextFunctions.tokens]] tokenizer); fewer than `n`
     * tokens → empty array. Internal-hash twin for consumers that emit
     * only counts/scores, never the token strings. */
-  def tokenGramHashes(text: Column, n: Int, dedup: Boolean = false): Column =
-    Bridge.column(WordShingleHashes(Bridge.expression(lower(text)), n, dedup,
-      alnum = true))
+  def tokenGramHashes(text: Column, n: Int, dedup: Boolean = false): Column = {
+    require(n >= 1, s"shingle width must be >= 1: $n")
+    Shingle.alnumHashes(lower(text) -> Str, n, dedup).as("word_shingle_hashes", Longs)
+  }
 
   /** array<struct<term,tf>> of per-document term frequencies (alnum-run
     * tokens, first-occurrence order) — the row-local form of the tf
     * relation; `explode` of it replaces a corpus-wide (doc, term)
     * aggregation exchange. Null text → null. */
   def tokenCounts(text: Column): Column =
-    Bridge.column(TokenCountPairs(Bridge.expression(lower(text))))
+    Shingle.tokenCounts(lower(text) -> Str).as("token_count_pairs", TermCounts)
 
   /** array<struct<chunk,chunk_text,n_tokens>> of cost-budgeted chunks
-    * over a token array + per-token cost array ([[CostChunks]]) — the
-    * map-only replacement for explode → per-doc window → re-aggregate.
-    * Null tokens/costs → null (the upstream coalesce decides). */
-  def costChunks(toks: Column, costs: Column, budget: Long): Column =
-    Bridge.column(CostChunks(Bridge.expression(toks),
-      Bridge.expression(costs), budget))
+    * over a token array + per-token cost array
+    * ([[ChunkKernel.costChunks]]) — the map-only replacement for explode
+    * → per-doc window → re-aggregate. Null tokens/costs → null (the
+    * upstream coalesce decides). */
+  def costChunks(toks: Column, costs: Column, budget: Long): Column = {
+    require(budget > 0, s"budget must be positive: $budget")
+    NativeKernel.of(ChunkKernel).costChunks(
+        toks -> ArrayType(StringType), costs -> ArrayType(LongType), budget)
+      .as("cost_chunks", ArrayType(StructType(Seq(
+        StructField("chunk", LongType, nullable = false),
+        StructField("chunk_text", StringType, nullable = false),
+        StructField("n_tokens", LongType, nullable = true)))))
+  }
 
   /** Row-local tf-idf top-k over a [[tokenCounts]] array; `dfMap` must
-    * have binary-sorted keys (see [[TfidfTopTerms]]). Returns
+    * have binary-sorted keys (see [[ShingleHash.tfidfTopK]]). Returns
     * array<struct<term,tf,tfidf,rnk>>. */
-  def tfidfTopTerms(tc: Column, dfMap: Column, nDocs: Column, k: Int): Column =
-    Bridge.column(TfidfTopTerms(Bridge.expression(tc),
-      Bridge.expression(dfMap), Bridge.expression(nDocs), k))
+  def tfidfTopTerms(tc: Column, dfMap: Column, nDocs: Column, k: Int): Column = {
+    require(k >= 1, s"top-k width must be >= 1: $k")
+    Shingle.tfidfTopK(tc -> TermCounts, dfMap -> MapType(StringType, LongType),
+        nDocs -> LongType, k)
+      .as("tfidf_top_terms", ArrayType(StructType(Seq(
+        StructField("term", StringType, nullable = false),
+        StructField("tf", LongType, nullable = false),
+        StructField("tfidf", DoubleType, nullable = false),
+        StructField("rnk", LongType, nullable = false))), containsNull = false))
+  }
 
   /** struct<n_chars,n_tokens,n_punct,n_digit,n_alnum> quality counters
-    * of `text` in one byte pass per child ([[QualitySignals]]); null
-    * text → null struct (each derived column then nulls, matching the
-    * regex formulation). Reference the SAME Column for several derived
-    * fields — subexpression elimination evaluates the kernel once per
-    * row inside whole-stage codegen. */
+    * of `text` in one byte pass per child
+    * ([[ShingleHash.qualitySignals]]); null text → null struct (each
+    * derived column then nulls, matching the regex formulation).
+    * Reference the SAME Column for several derived fields —
+    * subexpression elimination evaluates the kernel once per row inside
+    * whole-stage codegen. */
   def qualitySignals(text: Column): Column =
-    Bridge.column(QualitySignals(
-      Bridge.expression(text), Bridge.expression(lower(text))))
+    Shingle.qualitySignals(text -> Str, lower(text) -> Str).as("quality_signals",
+      longStruct("n_chars", "n_tokens", "n_punct", "n_digit", "n_alnum"))
+
+  /** The stop list as one kernel constant; at most 32 words, the width
+    * of the kernel's hit bitmask. */
+  private def stops(stopwords: Seq[String]) = {
+    require(stopwords.nonEmpty && stopwords.size <= 32,
+      s"stop list must fit the hit bitmask: ${stopwords.size}")
+    KernelConst("stopwords", stopwords)(stopwords.map(_.getBytes("UTF-8")).toArray)
+  }
 
   /** struct of the eight Gopher-gate counters in one byte pass per child
-    * ([[GopherSignals]]); null text → null. */
+    * ([[ShingleHash.gopherSignals]]); null text → null. */
   def gopherSignals(text: Column, stopwords: Seq[String]): Column =
-    Bridge.column(GopherSignals(
-      Bridge.expression(text), Bridge.expression(lower(text)), stopwords))
+    Shingle.gopherSignals(text -> Str, lower(text) -> Str, stops(stopwords))
+      .as("gopher_signals", longStruct("n_words", "n_nonws", "n_symbol",
+        "n_lines", "n_bullet_lines", "n_ellipsis_lines", "n_alpha_words",
+        "stop_hits"))
+
+  /** The Gopher-gate verdict alone, one boolean kernel call
+    * ([[ShingleHash.gopherKeep]]) for use as a Filter predicate; null
+    * text → null. */
+  def gopherKeep(text: Column, stopwords: Seq[String]): Column =
+    Shingle.gopherKeep(text -> Str, lower(text) -> Str, stops(stopwords))
+      .as("gopher_keep", BooleanType)
 
   /** struct<clean_text, n_lines_kept, keep> C4 line cleaning in one
-    * lockstep pass over original + lowered bytes ([[C4LineClean]]);
-    * null text → null. */
+    * lockstep pass over original + lowered bytes
+    * ([[ShingleHash.c4LineClean]]); null text → null. */
   def c4LineClean(text: Column): Column =
-    Bridge.column(C4LineClean(
-      Bridge.expression(text), Bridge.expression(lower(text))))
+    Shingle.c4LineClean(text -> Str, lower(text) -> Str).as("c4_line_clean",
+      StructType(Seq(
+        StructField("clean_text", StringType, nullable = false),
+        StructField("n_lines_kept", LongType, nullable = false),
+        StructField("keep", BooleanType, nullable = false))))
 
   /** array<int> of DSIR hashed uni+bigram feature buckets
-    * ([[Md5FeatureBuckets]]) — bit-identical to hashing
+    * ([[ShingleHash.md5FeatureBuckets]]) — bit-identical to hashing
     * the uni+bigram feature strings through `Corpus.hashBucket`; null
     * text → null, zero tokens → empty. */
-  def md5FeatureBuckets(text: Column, buckets: Int, salt: String): Column =
-    Bridge.column(Md5FeatureBuckets(Bridge.expression(lower(text)), buckets, salt))
+  def md5FeatureBuckets(text: Column, buckets: Int, salt: String): Column = {
+    require(buckets > 0, s"buckets must be positive: $buckets")
+    Shingle.md5FeatureBuckets(lower(text) -> Str, buckets,
+        KernelConst("salt", salt)(salt.getBytes("UTF-8")))
+      .as("md5_feature_buckets", ArrayType(IntegerType, containsNull = false))
+  }
 
   /** N sequential regexp_replace passes as one expression
-    * ([[ChainedRegexReplace]]); null text → null. */
-  def chainedRegexReplace(text: Column, passes: Seq[(String, String)]): Column =
-    Bridge.column(ChainedRegexReplace(Bridge.expression(text),
-      passes.map(_._1), passes.map(_._2)))
+    * ([[ShingleHash.chainedReplace]]); null text → null. Replacements
+    * must be plain literals (no `$` group references, no `\` escapes):
+    * only then does `Matcher.replaceAll` agree byte-for-byte with
+    * `RegExpReplace`, so this is checked here. */
+  def chainedRegexReplace(text: Column, passes: Seq[(String, String)]): Column = {
+    val (patterns, repls) = passes.unzip
+    require(patterns.nonEmpty, "one replacement per pattern")
+    require(repls.forall(r => !r.contains("$") && !r.contains("\\")),
+      "replacements must be literals (no group references/escapes)")
+    Shingle.chainedReplace(text -> Str,
+        KernelConst("patterns", patterns)(
+          patterns.map(java.util.regex.Pattern.compile).toArray),
+        KernelConst("replacements", repls)(repls.toArray))
+      .as("chained_regex_replace", StringType)
+  }
 
-  /** Stopword language-ID decision over `text` ([[LangIdDecide]]) —
-    * `sets` in declaration order (first-listed wins ties); null text →
-    * null (the regex formulation's behavior). */
-  def langIdDecide(text: Column, sets: Seq[(String, Seq[String])]): Column =
-    Bridge.column(LangIdDecide(Bridge.expression(text),
-      Bridge.expression(lower(text)), sets.map(_._1), sets.map(_._2)))
+  /** Stopword language-ID decision over `text`
+    * ([[ShingleHash.langIdDecide]]) — `sets` in declaration order
+    * (first-listed wins ties); null text → null (the regex
+    * formulation's behavior). */
+  def langIdDecide(text: Column, sets: Seq[(String, Seq[String])]): Column = {
+    require(sets.nonEmpty, "one word set per language")
+    // word → indices of every language listing it
+    val words = KernelConst("langid_words", sets) {
+      val m = new java.util.HashMap[UTF8String, Array[Int]]()
+      for (((_, ws), li) <- sets.zipWithIndex; w <- ws) {
+        val k = UTF8String.fromString(w)
+        val prev = m.get(k)
+        m.put(k, if (prev == null) Array(li) else prev :+ li)
+      }
+      m
+    }
+    Shingle.langIdDecide(text -> Str, lower(text) -> Str, words,
+        KernelConst("langid_langs", sets.map(_._1))(
+          sets.map(s => UTF8String.fromString(s._1)).toArray))
+      .as("langid_decide", StringType)
+  }
 
-  /** 64-bit SimHash signature of `lower(text)` ([[SimHash64]]); null
-    * text → null (callers drop, the explode form's behavior). */
+  /** 64-bit SimHash signature of `lower(text)` ([[ShingleHash.simhash64]]);
+    * null text → null (callers drop, the explode form's behavior). */
   def simhash64(text: Column): Column =
-    Bridge.column(SimHash64(Bridge.expression(lower(text))))
+    Shingle.simhash64(lower(text) -> Str).as("simhash64", LongType)
 
   /** Winnowing-selected (pos, fp) fingerprint pairs of `lower(text)`
-    * ([[WinnowFingerprints]]); null text → null (explode drops the
+    * ([[ShingleHash.winnowFps]]); null text → null (explode drops the
     * doc, the posexplode form's behavior). */
-  def winnowFingerprints(text: Column, k: Int, g: Int): Column =
-    Bridge.column(WinnowFingerprints(Bridge.expression(lower(text)), k, g))
+  def winnowFingerprints(text: Column, k: Int, g: Int): Column = {
+    require(k >= 1 && g >= 1, s"k and g must be positive: k=$k g=$g")
+    Shingle.winnowFps(lower(text) -> Str, k, g).as("winnow_fingerprints",
+      ArrayType(longStruct("pos", "fp"), containsNull = false))
+  }
 
   /** array<string> md5-hex of every n-token window of `lower(text)`
-    * ([[WindowMd5s]]) — under-n-token docs yield an empty array; null
-    * text → null. */
-  def windowMd5s(text: Column, n: Int): Column =
-    Bridge.column(WindowMd5s(Bridge.expression(lower(text)), n))
+    * ([[ShingleHash.windowMd5s]]) — under-n-token docs yield an empty
+    * array; null text → null. */
+  def windowMd5s(text: Column, n: Int): Column = {
+    require(n >= 1, s"window width must be >= 1: $n")
+    Shingle.windowMd5s(lower(text) -> Str, n)
+      .as("window_md5s", ArrayType(StringType, containsNull = false))
+  }
 
   /** `lower(text)` with the `n`-token windows starting at the ASCENDING
     * 1-based token indices in `starts` removed and survivors re-joined
-    * by single spaces ([[CutSpans]]); empty starts → identity on the
-    * lowered text; null text or starts → null. */
+    * by single spaces ([[ShingleHash.cutSpans]]); empty starts →
+    * identity on the lowered text; null text or starts → null. */
   def cutSpans(text: Column, starts: Column, n: Int): Column =
-    Bridge.column(CutSpans(Bridge.expression(lower(text)),
-      Bridge.expression(starts), n))
+    cutSpansOf(lower(text), starts, n)
 
   /** The CASE-PRESERVING cut: same span removal over the ORIGINAL text.
     * Token indices are identical in `text` and `lower(text)` (Unicode
@@ -1963,29 +1491,41 @@ object TextExpressions {
     * over lowered windows apply verbatim — matching stays
     * case-insensitive, the surviving text keeps its casing. */
   def cutSpansPreserveCase(text: Column, starts: Column, n: Int): Column =
-    Bridge.column(CutSpans(Bridge.expression(text),
-      Bridge.expression(starts), n))
+    cutSpansOf(text, starts, n)
+
+  private def cutSpansOf(text: Column, starts: Column, n: Int): Column = {
+    require(n >= 1, s"window width must be >= 1: $n")
+    Shingle.cutSpans(text -> Str, starts -> ArrayType(LongType), n)
+      .as("cut_spans", StringType)
+  }
 
   /** Row-local MinHash signature (all seeds' minima) over a
-    * [[shingleHashes]] array ([[MinHashFold]]). */
-  def minhashFold(hashes: Column, a: Seq[Long], b: Seq[Long]): Column =
-    Bridge.column(MinHashFold(Bridge.expression(hashes), a, b))
+    * [[shingleHashes]] array ([[ShingleHash.minhashFold]]). */
+  def minhashFold(hashes: Column, a: Seq[Long], b: Seq[Long]): Column = {
+    require(a.nonEmpty && a.length == b.length,
+      "minhash_fold needs one (a,b) per seed")
+    Shingle.minhashFold(hashes -> ArrayType(LongType),
+        KernelConst("minhash_a", a)(a.toArray), KernelConst("minhash_b", b)(b.toArray))
+      .as("minhash_fold", Longs)
+  }
 
   /** Row-local token-frequency entropy over a non-empty tf array
-    * ([[CountEntropy]]). */
+    * ([[ShingleHash.countEntropy]]). */
   def countEntropy(tfs: Column): Column =
-    Bridge.column(CountEntropy(Bridge.expression(tfs)))
+    Shingle.countEntropy(tfs -> ArrayType(LongType)).as("count_entropy", DoubleType)
 
   /** Row-local unigram-LM score against a broadcast hash→count model
-    * (binary-sorted long keys); `hashes` must be non-empty. */
+    * (binary-sorted long keys); `hashes` must be non-empty
+    * ([[ShingleHash.logProbAvg]]). */
   def hashLogProbAvg(hashes: Column, model: Column, total: Column): Column =
-    Bridge.column(HashLogProbAvg(Bridge.expression(hashes),
-      Bridge.expression(model), Bridge.expression(total)))
+    Shingle.logProbAvg(hashes -> ArrayType(LongType), model -> LongMap,
+      total -> LongType).as("hash_log_prob_avg", DoubleType)
 
   /** Row-local bigram-LM score against broadcast (w1,w2)→count and
-    * w1→count models; `bgs` must be non-empty. */
+    * w1→count models; `bgs` must be non-empty
+    * ([[ShingleHash.bigramLogProbAvg]]). */
   def hashBigramLogProbAvg(w1s: Column, bgs: Column, cbg: Column,
       cw: Column): Column =
-    Bridge.column(HashBigramLogProbAvg(Bridge.expression(w1s),
-      Bridge.expression(bgs), Bridge.expression(cbg), Bridge.expression(cw)))
+    Shingle.bigramLogProbAvg(w1s -> ArrayType(LongType), bgs -> ArrayType(LongType),
+      cbg -> LongMap, cw -> LongMap).as("hash_bigram_log_prob_avg", DoubleType)
 }

@@ -3,12 +3,13 @@ package graft.plans
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
 
 /**
@@ -193,201 +194,26 @@ case class PqAdcDistance(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/**
- * All-tables LSH bucket signature in ONE map-only expression: for table t,
- * bit b, the hyperplane projection Σ_d vec[d]·w[t][b][d] decides bit b of
- * bucket t (set when ≥ 0). Replaces the posexplode → broadcast-weight
- * join → two-aggregation "matrix multiply" of the index build — that
- * shape fans each vector into dim·tables·bits rows to keep the multiply
- * codegen'd, where this kernel is the same double accumulation in d
- * order (bit-identical buckets: the join-agg path accumulates each
- * (vec,table,bit) group in d order too, all of one vector's rows staying
- * inside its scan task) with zero fan-out and zero exchange. Weights
- * ride the plan as a literal table (tables·bits·dim doubles — kilobytes,
- * the LSH "model" is pure code).
- */
-case class LshBucketSignature(child: Expression, weights: Seq[Double],
-    tables: Int, bits: Int, dim: Int) extends UnaryExpression {
-  require(tables >= 1 && bits >= 1 && bits <= 62 && dim >= 1 &&
-    weights.length == tables * bits * dim,
-    s"LshBucketSignature: need tables*bits*dim weights")
-  private lazy val wArr = weights.toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "lsh_bucket_signature"
-
-  override def nullSafeEval(v: Any): Any =
-    VectorKernels.lshBuckets(v.asInstanceOf[ArrayData], wArr, tables, bits, dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wRef = ctx.addReferenceObj("lshW", wArr, "double[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.VectorKernels.lshBuckets($c, $wRef, $tables, $bits, $dim);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
- * Nearest-centroid assignment as ONE map-only expression: argmin over a
- * literal centroid table of `‖c‖² − 2·v̂·c` (the ‖v̂‖² term is constant
- * per vector), first-min tie-break — exactly the `min(struct(d, c))` of
- * the broadcast-crossJoin + groupBy formulation it replaces, with the
- * same [[FloatVectorDot]] accumulation order, so assignments are
- * bit-identical while the nCells× row fan-out and the groupBy(id)
- * exchange disappear (each Lloyd round and the final assignment become
- * pure scans).
- */
-case class NearestCentroid(child: Expression, cents: Seq[Seq[Float]],
-    cn2: Seq[Double]) extends UnaryExpression {
-  require(cents.nonEmpty && cents.length == cn2.length,
-    "NearestCentroid: need one ‖c‖² per centroid")
-  private lazy val cArr: Array[Array[Float]] = cents.map(_.toArray).toArray
-  private lazy val n2Arr: Array[Double] = cn2.toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${t.sql}")
-  }
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "nearest_centroid"
-
-  override def nullSafeEval(v: Any): Any =
-    VectorKernels.nearestCentroid(v.asInstanceOf[ArrayData], cArr, n2Arr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("ncCents", cArr, "float[][]")
-    val nRef = ctx.addReferenceObj("ncN2", n2Arr, "double[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.VectorKernels.nearestCentroid($c, $cRef, $nRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
- * Row-local SemDeDup survivor selection over ONE cluster's collected
- * members — the aggregation form of the cluster-scoped pair join: a
- * member is a duplicate iff ANY smaller-id member of the same cluster has
- * quantized cosine ≥ τ with it (`cos·10⁶ + 0.5 ≥ thr`, the integer-
- * threshold spelling of `quantize(cos, 6) ≥ τ` — see
- * `Similarity.semanticDedupClustered`). Input: the cluster's members as
- * array<struct<id:long, vec:array<float>, nrm:double>> (collect_list
- * order immaterial — the rule quantifies over ALL smaller-id mates, so
- * the survivor SET is order-independent); output: array<long> of
- * survivor ids. Dot products accumulate in [[FloatVectorDot]]'s exact
- * sequential double order, so the verdicts match the join formulation
- * and the DuckDB oracle bit-for-bit.
- */
-case class SemDedupSurvivors(child: Expression, thr: Double)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(s: org.apache.spark.sql.types.StructType, _)
-        if s.length == 3 && s(0).dataType == LongType &&
-          s(1).dataType.isInstanceOf[ArrayType] &&
-          s(1).dataType.asInstanceOf[ArrayType].elementType == FloatType &&
-          s(2).dataType == DoubleType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<struct<long, array<float>, double>>, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "semdedup_survivors"
-
-  override def nullSafeEval(m: Any): Any =
-    VectorKernels.semDedupSurvivors(m.asInstanceOf[ArrayData], thr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, m =>
-      s"${ev.value} = graft.plans.VectorKernels.semDedupSurvivors($m, $thr);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
- * Cosine of (int8-dequantized vector, query) in ONE native pass — the
- * serving lift the `topKInt8` scaladoc promised: the higher-order
- * zip_with/aggregate formulation evaluates interpreted per element and
- * costs ~11 s for 640 k × 64-dim at the 128× sweep; this expression is
- * the same arithmetic in a codegen'd kernel. BIT-IDENTICAL contract with
- * the HOF form (and so the DuckDB oracle): same scale quantization
- * (floor(x·10⁶+0.5)/10⁶ on amax/127), same half-up code rounding and
- * ±127 clamp, same SEQUENTIAL fold order (dot and norm accumulate in
- * dimension order — never a reduction-tree), same multiply order
- * ((code·s)·q_d). Returns the UNQUANTIZED cosine — callers apply
- * `Quantize.q6` at the column level so the emission quantization stays
- * defined in exactly one place.
- *
- * Degenerate inputs return NULL, which `desc` ordering places LAST so
- * they can never displace a real neighbor from a served top-k:
- * dimension-mismatched vectors and vectors containing null elements
- * get NULL exactly as the HOF form does (zip_with pads the shorter
- * array with nulls and `aggregate`'s fold null-propagates — verified
- * against Spark 4.1.2; it does NOT null-skip), and zero-norm vectors
- * get NULL as a DELIBERATE softening of the HOF form's ANSI
- * DIVIDE_BY_ZERO abort (a serving path must not kill the job on one
- * zero-padded embedding; NaN would be worse — Spark sorts NaN FIRST
- * under desc, promoting the degenerate row to rank 1).
- */
-case class Int8DequantCosine(child: Expression, query: Seq[Double])
-    extends UnaryExpression {
-  require(query.nonEmpty, "int8_dequant_cos: empty query vector")
-
-  // NULL is an output value (degenerate inputs), not only a propagation
-  // of a NULL child, so this must stay nullable even over a non-null
-  // child column.
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${t.sql}")
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "int8_dequant_cos"
-
-  @transient private lazy val qArr: Array[Double] = query.toArray
-  @transient private lazy val qNorm: Double = {
-    // ‖q‖ matches Similarity.normOf: sequential sum of squares, sqrt
-    var acc = 0.0
-    var i = 0
-    while (i < qArr.length) { acc += qArr(i) * qArr(i); i += 1 }
-    math.sqrt(acc)
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    VectorKernels.int8DequantCos(v.asInstanceOf[ArrayData], qArr, qNorm)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val qRef = ctx.addReferenceObj("int8q", qArr, "double[]")
-    val nRef = ctx.addReferenceObj("int8qn", java.lang.Double.valueOf(qNorm), "java.lang.Double")
-    val r = ctx.freshName("int8r")
-    nullSafeCodeGen(ctx, ev, v => s"""
-      java.lang.Double $r = graft.plans.VectorKernels.int8DequantCos($v, $qRef, $nRef);
-      if ($r == null) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = $r.doubleValue();
-      }""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernels — generated code calls these directly. */
+/** The row-local vector kernels. Each is a static method that one
+  * [[NativeKernel]] binding in [[VectorExpressions]] calls, from
+  * generated code and from the interpreted path alike. */
 object VectorKernels {
-  /** [[VecCenterProject]] kernel: y = M·(x − μ), or x − μ when `m` is
-    * null. Throws on a wrong-length vector (fixed-dim-column corruption
-    * contract). */
+  /**
+   * Affine embedding transform y = M·(x − μ) as one native kernel — the
+   * projection step of mean centering (M = I, elided), ZCA whitening
+   * (M = U·diag(1/√(λ+ε))·Uᵀ) and all-but-the-top (M = I − Σ uₖuₖᵀ). The
+   * matrix and mean ride the plan as plain kernel constants (the
+   * [[nearestCentroid]] convention — NOT a literal array tree, which
+   * stalls codegen at large d·d). O(d²) multiply-adds per row (O(d) when
+   * center-only), map-only, no shuffle.
+   *
+   * Emits array<double> (full precision for oracle-checked emission). Null
+   * vector → null; wrong length throws (same corruption contract as
+   * [[VecMoments]]).
+   *
+   * Computes y = M·(x − μ), or x − μ when `m` is empty. Throws on a
+   * wrong-length vector (fixed-dim-column corruption contract).
+   */
   def centerProject(vec: ArrayData, mu: Array[Double],
       m: Array[Array[Double]]): ArrayData = {
     val d = mu.length
@@ -419,16 +245,42 @@ object VectorKernels {
     new GenericArrayData(y)
   }
 
-  /** [[Int8DequantCosine]] kernel — the exact HOF algebra, one pass:
-    * amax = max(max(v), −min(v)) in double; s = q6(amax/127); code_d =
-    * clamp(floor(v_d/s + 0.5), ±127) (0 when s = 0); dot and dequantized
-    * norm² fold SEQUENTIALLY in dimension order; cosine =
-    * dot / (√norm² · ‖q‖).
-    *
-    * Returns null (→ SQL NULL, ranked last under desc) for the
-    * degenerate inputs the expression scaladoc documents: dimension
-    * mismatch or a null element (the HOF form's own NULL), and
-    * zero/NaN norm (softened from the HOF form's ANSI abort). */
+  /**
+   * Cosine of (int8-dequantized vector, query) in ONE native pass — the
+   * serving lift the `topKInt8` scaladoc promised: the higher-order
+   * zip_with/aggregate formulation evaluates interpreted per element and
+   * costs ~11 s for 640 k × 64-dim at the 128× sweep; this kernel is
+   * the same arithmetic in one codegen'd call. BIT-IDENTICAL contract with
+   * the HOF form (and so the DuckDB oracle): same scale quantization
+   * (floor(x·10⁶+0.5)/10⁶ on amax/127), same half-up code rounding and
+   * ±127 clamp, same SEQUENTIAL fold order (dot and norm accumulate in
+   * dimension order — never a reduction-tree), same multiply order
+   * ((code·s)·q_d). Returns the UNQUANTIZED cosine — callers apply
+   * `Quantize.q6` at the column level so the emission quantization stays
+   * defined in exactly one place.
+   *
+   * Degenerate inputs return NULL, which `desc` ordering places LAST so
+   * they can never displace a real neighbor from a served top-k:
+   * dimension-mismatched vectors and vectors containing null elements
+   * get NULL exactly as the HOF form does (zip_with pads the shorter
+   * array with nulls and `aggregate`'s fold null-propagates — verified
+   * against Spark 4.1.2; it does NOT null-skip), and zero-norm vectors
+   * get NULL as a DELIBERATE softening of the HOF form's ANSI
+   * DIVIDE_BY_ZERO abort (a serving path must not kill the job on one
+   * zero-padded embedding; NaN would be worse — Spark sorts NaN FIRST
+   * under desc, promoting the degenerate row to rank 1).
+   *
+   * The exact HOF algebra, one pass:
+   * amax = max(max(v), −min(v)) in double; s = q6(amax/127); code_d =
+   * clamp(floor(v_d/s + 0.5), ±127) (0 when s = 0); dot and dequantized
+   * norm² fold SEQUENTIALLY in dimension order; cosine =
+   * dot / (√norm² · ‖q‖).
+   *
+   * Returns null (→ SQL NULL, ranked last under desc) for the
+   * degenerate inputs documented above: dimension
+   * mismatch or a null element (the HOF form's own NULL), and
+   * zero/NaN norm (softened from the HOF form's ANSI abort).
+   */
   def int8DequantCos(vec: ArrayData, q: Array[Double], qNorm: Double): java.lang.Double = {
     val nv = vec.numElements()
     if (nv != q.length) return null // HOF zip_with null-pad → NULL
@@ -462,9 +314,24 @@ object VectorKernels {
     if (java.lang.Double.isNaN(cos)) null else cos
   }
 
-  /** [[SemDedupSurvivors]] kernel: O(k²/2) dots with early exit on the
-    * first ≥τ smaller-id mate; k is bounded by the operator's cell-size
-    * premise (and its `maxCell` valve). */
+  /**
+   * Row-local SemDeDup survivor selection over ONE cluster's collected
+   * members — the aggregation form of the cluster-scoped pair join: a
+   * member is a duplicate iff ANY smaller-id member of the same cluster has
+   * quantized cosine ≥ τ with it (`cos·10⁶ + 0.5 ≥ thr`, the integer-
+   * threshold spelling of `quantize(cos, 6) ≥ τ` — see
+   * `Similarity.semanticDedupClustered`). Input: the cluster's members as
+   * array<struct<id:long, vec:array<float>, nrm:double>> (collect_list
+   * order immaterial — the rule quantifies over ALL smaller-id mates, so
+   * the survivor SET is order-independent); output: array<long> of
+   * survivor ids. Dot products accumulate in [[FloatVectorDot]]'s exact
+   * sequential double order, so the verdicts match the join formulation
+   * and the DuckDB oracle bit-for-bit.
+   *
+   * O(k²/2) dots with early exit on the
+   * first ≥τ smaller-id mate; k is bounded by the operator's cell-size
+   * premise (and its `maxCell` valve).
+   */
   def semDedupSurvivors(members: ArrayData, thr: Double): ArrayData = {
     val k = members.numElements()
     val ids = new Array[Long](k)
@@ -505,9 +372,23 @@ object VectorKernels {
     new GenericArrayData(java.util.Arrays.copyOf(kept, nKept))
   }
 
-  /** [[LshBucketSignature]] kernel. Sums in d order ([[FloatVectorDot]]
-    * convention); dims beyond `dim` are ignored (the join path's weight
-    * table had no rows for them), missing dims contribute 0. */
+  /**
+   * All-tables LSH bucket signature in ONE map-only expression: for table t,
+   * bit b, the hyperplane projection Σ_d vec[d]·w[t][b][d] decides bit b of
+   * bucket t (set when ≥ 0). Replaces the posexplode → broadcast-weight
+   * join → two-aggregation "matrix multiply" of the index build — that
+   * shape fans each vector into dim·tables·bits rows to keep the multiply
+   * codegen'd, where this kernel is the same double accumulation in d
+   * order (bit-identical buckets: the join-agg path accumulates each
+   * (vec,table,bit) group in d order too, all of one vector's rows staying
+   * inside its scan task) with zero fan-out and zero exchange. Weights
+   * ride the plan as one kernel constant (tables·bits·dim doubles — kilobytes,
+   * the LSH "model" is pure code).
+   *
+   * Sums in d order ([[FloatVectorDot]]
+   * convention); dims beyond `dim` are ignored (the join path's weight
+   * table had no rows for them), missing dims contribute 0.
+   */
   def lshBuckets(vec: ArrayData, w: Array[Double], tables: Int, bits: Int,
       dim: Int): ArrayData = {
     val n = math.min(vec.numElements(), dim)
@@ -533,8 +414,19 @@ object VectorKernels {
     new GenericArrayData(out)
   }
 
-  /** [[NearestCentroid]] kernel: strict `<` keeps the FIRST minimal cell
-    * (ties → lowest id, the `min(struct(d, c))` semantics). */
+  /**
+   * Nearest-centroid assignment as ONE map-only expression: argmin over a
+   * literal centroid table of `‖c‖² − 2·v̂·c` (the ‖v̂‖² term is constant
+   * per vector), first-min tie-break — exactly the `min(struct(d, c))` of
+   * the broadcast-crossJoin + groupBy formulation it replaces, with the
+   * same [[FloatVectorDot]] accumulation order, so assignments are
+   * bit-identical while the nCells× row fan-out and the groupBy(id)
+   * exchange disappear (each Lloyd round and the final assignment become
+   * pure scans).
+   *
+   * Strict `<` keeps the FIRST minimal cell
+   * (ties → lowest id, the `min(struct(d, c))` semantics).
+   */
   def nearestCentroid(vec: ArrayData, cents: Array[Array[Float]],
       cn2: Array[Double]): Int = {
     var best = Double.PositiveInfinity
@@ -556,16 +448,30 @@ object VectorKernels {
     bc
   }
 
-  /** [[NearestCentroidCos]] kernel: argmax-cosine over the full centroid
-    * table with the EXACT arithmetic of the literal centroid-score
-    * formulation it replaces (`SimilarityOracles.centroidScores`) — dot and ‖v‖² accumulate in sequential
-    * double order, cos = dot / (‖v‖ · ‖c‖), winner = first maximum under
-    * Spark's double ordering (-0.0 < 0.0 — `Double.compare` is exactly
-    * that order). Null for a null element or a length mismatch against
-    * the (uniform-dim) table, matching `FloatVectorDot`'s
-    * null-propagation through `array_max`/`array_position`; a zero
-    * denominator mirrors `Divide` (ANSI abort / non-ANSI null score,
-    * which `array_max` ignores — all-null scores yield a null struct). */
+  /**
+   * Argmax-cosine assignment over a centroid table shipped as a kernel
+   * constant — struct<cell:int, cos:double>, the fused form of
+   * the literal centroid-score + `array_max` + `array_position` chain
+   * used by the k-means / SemDeDup family. Two things the literal chain
+   * cannot do at scale: (1) the generated code is ONE kernel call however
+   * many centroids there are, where k literal array expressions stall
+   * whole-stage codegen past k ≈ 256 (the r12 sweep's named ladder stop);
+   * (2) the table lives once per executor as a plain float[][], not k
+   * copies of a Literal tree per task. Arithmetic, ordering, and null
+   * semantics are bit-identical to the literal chain (see below), so
+   * hash-verified consumers can switch freely.
+   *
+   * Argmax-cosine over the full centroid
+   * table with the EXACT arithmetic of the literal centroid-score
+   * formulation it replaces (`SimilarityOracles.centroidScores`) — dot and ‖v‖² accumulate in sequential
+   * double order, cos = dot / (‖v‖ · ‖c‖), winner = first maximum under
+   * Spark's double ordering (-0.0 < 0.0 — `Double.compare` is exactly
+   * that order). Null for a null element or a length mismatch against
+   * the (uniform-dim) table, matching `FloatVectorDot`'s
+   * null-propagation through `array_max`/`array_position`; a zero
+   * denominator mirrors `Divide` (ANSI abort / non-ANSI null score,
+   * which `array_max` ignores — all-null scores yield a null struct).
+   */
   def nearestCentroidCos(vec: ArrayData, cents: Array[Array[Float]],
       cnorm: Array[Double], failOnError: Boolean): InternalRow = {
     val d = cents(0).length
@@ -626,15 +532,29 @@ object VectorKernels {
     else new GenericInternalRow(Array[Any](bestIdx, bestCos))
   }
 
-  /** [[NearestCentroidPruned]] kernel: two-level assignment. Route the
-    * vector to its `nProbe` nearest COARSE cells (cosine, same metric as
-    * the member scan; zero-norm coarse rows rank last), then first-max
-    * scan only those cells' member centroids — O(C + Σ probed members)
-    * instead of O(k). nProbe = C is bit-identical to
-    * [[nearestCentroidCos]]: the member lists partition 0..k-1, the fold
-    * is order-independent (min-index tiebreak on exact ties, null-score
-    * candidates skipped identically), and an empty probed member set
-    * falls back to the full scan. */
+  /**
+   * IVF-pruned argmax-cosine assignment — [[VectorKernels.nearestCentroidCos]] behind a
+   * coarse quantizer over the CENTROID table itself: route to the
+   * `nProbe` nearest of C coarse cells, scan only their member centroids.
+   * O(C + k·nProbe/C) per row instead of O(k) — sub-linear in k once
+   * C ≈ √k, which is what lets assignment keep up when the cell count
+   * scales with the corpus (SemDeDup's premise: k grows with N).
+   * `nProbe = C` provably degrades to the exact flat scan (the
+   * `embed_kmeans_assign_pruned_full` bridge): the member lists partition
+   * 0..k-1, the fold is order-independent (min-index tiebreak on exact
+   * ties), and the two degenerate cases that could order differently
+   * fall back to the flat scan inside the kernel.
+   *
+   * Two-level assignment. Route the
+   * vector to its `nProbe` nearest COARSE cells (cosine, same metric as
+   * the member scan; zero-norm coarse rows rank last), then first-max
+   * scan only those cells' member centroids — O(C + Σ probed members)
+   * instead of O(k). nProbe = C is bit-identical to
+   * [[nearestCentroidCos]]: the member lists partition 0..k-1, the fold
+   * is order-independent (min-index tiebreak on exact ties, null-score
+   * candidates skipped identically), and an empty probed member set
+   * falls back to the full scan.
+   */
   def nearestCentroidPruned(vec: ArrayData,
       coarse: Array[Array[Float]], coarseNorm: Array[Double],
       members: Array[Array[Int]],
@@ -925,180 +845,19 @@ case class VecMeanAgg(
     copy(child = newChild)
 }
 
-/**
- * Affine embedding transform y = M·(x − μ) as one native kernel — the
- * projection step of mean centering (M = I, elided), ZCA whitening
- * (M = U·diag(1/√(λ+ε))·Uᵀ) and all-but-the-top (M = I − Σ uₖuₖᵀ). The
- * matrix and mean ride the expression as plain Scala constants (the
- * NearestCentroid convention — NOT a literal array tree, which stalls
- * codegen at large d·d). O(d²) multiply-adds per row (O(d) when
- * center-only), map-only, no shuffle.
- *
- * Emits array<double> (full precision for oracle-checked emission). Null
- * vector → null; wrong length throws (same corruption contract as
- * [[VecMoments]]).
- */
-case class VecCenterProject(child: Expression, mean: Seq[Double],
-    matrix: Seq[Seq[Double]])
-    extends UnaryExpression {
-  private val d = mean.length
-  require(d >= 1, "vec_center_project: empty mean")
-  require(matrix.isEmpty ||
-    (matrix.length == d && matrix.forall(_.length == d)),
-    s"vec_center_project: matrix must be ${d}x$d or empty")
-
-  @transient private lazy val mu = mean.toArray
-  @transient private lazy val m: Array[Array[Double]] =
-    matrix.map(_.toArray).toArray // empty => center-only (no null refs in codegen)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "vec_center_project"
-
-  override def nullSafeEval(v: Any): Any =
-    VectorKernels.centerProject(v.asInstanceOf[ArrayData], mu, m)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val muRef = ctx.addReferenceObj("cpMean", mu, "double[]")
-    val mRef = ctx.addReferenceObj("cpMatrix", m, "double[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.VectorKernels.centerProject($c, $muRef, $mRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
- * Argmax-cosine assignment over a centroid table shipped via
- * `addReferenceObj` — struct<cell:int, cos:double>, the fused form of
- * the literal centroid-score + `array_max` + `array_position` chain
- * used by the k-means / SemDeDup family. Two things the literal chain
- * cannot do at scale: (1) the generated code is ONE kernel call however
- * many centroids there are, where k literal array expressions stall
- * whole-stage codegen past k ≈ 256 (the r12 sweep's named ladder stop);
- * (2) the table lives once per executor as a plain float[][], not k
- * copies of a Literal tree per task. Arithmetic, ordering, and null
- * semantics are bit-identical to the literal chain (see the kernel's
- * scaladoc), so hash-verified consumers can switch freely.
- */
-case class NearestCentroidCos(child: Expression, cents: Seq[Seq[Float]],
-    cnorm: Seq[Double],
-    failOnError: Boolean = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
-  extends UnaryExpression {
-  require(cents.nonEmpty && cents.length == cnorm.length,
-    "NearestCentroidCos: need one ‖c‖ per centroid")
-  require(cents.forall(_.length == cents.head.length),
-    "NearestCentroidCos: centroid dims must be uniform")
-  @transient private lazy val cArr: Array[Array[Float]] = cents.map(_.toArray).toArray
-  @transient private lazy val nArr: Array[Double] = cnorm.toArray
-
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${t.sql}")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("cell", IntegerType, nullable = false),
-    StructField("cos", DoubleType, nullable = false)))
-  override def prettyName: String = "nearest_centroid_cos"
-
-  override def nullSafeEval(v: Any): Any =
-    VectorKernels.nearestCentroidCos(v.asInstanceOf[ArrayData], cArr, nArr,
-      failOnError)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("nccCents", cArr, "float[][]")
-    val nRef = ctx.addReferenceObj("nccNorm", nArr, "double[]")
-    nullSafeCodeGen(ctx, ev, v => s"""
-       |${ev.value} = graft.plans.VectorKernels.nearestCentroidCos($v, $cRef, $nRef,
-       |  $failOnError);
-       |${ev.isNull} = (${ev.value} == null);
-       |""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
- * IVF-pruned argmax-cosine assignment — [[NearestCentroidCos]] behind a
- * coarse quantizer over the CENTROID table itself: route to the
- * `nProbe` nearest of C coarse cells, scan only their member centroids.
- * O(C + k·nProbe/C) per row instead of O(k) — sub-linear in k once
- * C ≈ √k, which is what lets assignment keep up when the cell count
- * scales with the corpus (SemDeDup's premise: k grows with N).
- * `nProbe = C` provably degrades to the exact flat scan (the
- * `embed_kmeans_assign_pruned_full` bridge): the member lists partition
- * 0..k-1, the fold is order-independent (min-index tiebreak on exact
- * ties), and the two degenerate cases that could order differently
- * fall back to the flat scan inside the kernel.
- */
-case class NearestCentroidPruned(child: Expression,
-    coarse: Seq[Seq[Float]], coarseNorm: Seq[Double],
-    members: Seq[Seq[Int]],
-    cents: Seq[Seq[Float]], cnorm: Seq[Double],
-    nProbe: Int,
-    failOnError: Boolean = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
-  extends UnaryExpression {
-  require(coarse.nonEmpty && coarse.length == coarseNorm.length &&
-    coarse.length == members.length,
-    "NearestCentroidPruned: need one ‖c‖ and one member list per coarse cell")
-  require(cents.nonEmpty && cents.length == cnorm.length,
-    "NearestCentroidPruned: need one ‖c‖ per centroid")
-  require(cents.forall(_.length == cents.head.length) &&
-    coarse.forall(_.length == cents.head.length),
-    "NearestCentroidPruned: centroid dims must be uniform")
-  require({
-    val all = members.flatten.sorted
-    all == cents.indices.toList
-  }, "NearestCentroidPruned: member lists must partition the centroid ids")
-  require(nProbe > 0, s"NearestCentroidPruned: nProbe must be positive: $nProbe")
-
-  @transient private lazy val coArr: Array[Array[Float]] = coarse.map(_.toArray).toArray
-  @transient private lazy val conArr: Array[Double] = coarseNorm.toArray
-  @transient private lazy val mArr: Array[Array[Int]] = members.map(_.toArray).toArray
-  @transient private lazy val cArr: Array[Array[Float]] = cents.map(_.toArray).toArray
-  @transient private lazy val nArr: Array[Double] = cnorm.toArray
-
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${t.sql}")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("cell", IntegerType, nullable = false),
-    StructField("cos", DoubleType, nullable = false)))
-  override def prettyName: String = "nearest_centroid_pruned"
-
-  override def nullSafeEval(v: Any): Any =
-    VectorKernels.nearestCentroidPruned(v.asInstanceOf[ArrayData],
-      coArr, conArr, mArr, cArr, nArr, nProbe, failOnError)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val coRef = ctx.addReferenceObj("ncpCoarse", coArr, "float[][]")
-    val conRef = ctx.addReferenceObj("ncpCoarseNorm", conArr, "double[]")
-    val mRef = ctx.addReferenceObj("ncpMembers", mArr, "int[][]")
-    val cRef = ctx.addReferenceObj("ncpCents", cArr, "float[][]")
-    val nRef = ctx.addReferenceObj("ncpNorm", nArr, "double[]")
-    nullSafeCodeGen(ctx, ev, v => s"""
-       |${ev.value} = graft.plans.VectorKernels.nearestCentroidPruned($v,
-       |  $coRef, $conRef, $mRef, $cRef, $nRef, $nProbe, $failOnError);
-       |${ev.isNull} = (${ev.value} == null);
-       |""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object VectorExpressions {
+  private val Vector = NativeKernel.of(VectorKernels)
+  private val Floats = ArrayType(FloatType)
+  private val CellCos = StructType(Seq(
+    StructField("cell", IntegerType, nullable = false),
+    StructField("cos", DoubleType, nullable = false)))
+
+  /** A float table (centroids, coarse cells) as one kernel constant. */
+  private def table(name: String, rows: Seq[Seq[Float]]) =
+    KernelConst(name, rows)(rows.map(_.toArray).toArray)
+  private def doubles(name: String, xs: Seq[Double]) =
+    KernelConst(name, xs)(xs.toArray)
+
   /** struct<n, mean, cov-upper-triangle> of a d-dim float-vector column
     * in one mergeable aggregation ([[VecMoments]]). */
   def vecMoments(vec: Column, d: Int): Column =
@@ -1109,11 +868,20 @@ object VectorExpressions {
   def vecMean(vec: Column): Column =
     Bridge.column(VecMeanAgg(Bridge.expression(vec)).toAggregateExpression())
 
-  /** y = M·(x − μ) per row ([[VecCenterProject]]); empty matrix →
-    * center-only. */
+  /** y = M·(x − μ) per row ([[VectorKernels.centerProject]]); empty
+    * matrix → center-only. */
   def centerProject(vec: Column, mean: Seq[Double],
-      matrix: Seq[Seq[Double]] = Nil): Column =
-    Bridge.column(VecCenterProject(Bridge.expression(vec), mean, matrix))
+      matrix: Seq[Seq[Double]] = Nil): Column = {
+    val d = mean.length
+    require(d >= 1, "vec_center_project: empty mean")
+    require(matrix.isEmpty ||
+      (matrix.length == d && matrix.forall(_.length == d)),
+      s"vec_center_project: matrix must be ${d}x$d or empty")
+    Vector.centerProject(vec -> Floats, doubles("mean", mean),
+        // empty => center-only (no null reference reaches the kernel)
+        KernelConst("matrix", matrix)(matrix.map(_.toArray).toArray))
+      .as("vec_center_project", ArrayType(DoubleType, containsNull = false))
+  }
 
   /** Σ aᵢ·bᵢ in double, sequential order — codegen'd. */
   def dotF(a: Column, b: Column): Column =
@@ -1123,38 +891,84 @@ object VectorExpressions {
   def pqAdc(codes: Column, table: Column): Column =
     Bridge.column(PqAdcDistance(Bridge.expression(codes), Bridge.expression(table)))
 
-  /** array<long> survivor ids of one cluster's members ([[SemDedupSurvivors]]). */
+  /** array<long> survivor ids of one cluster's members
+    * ([[VectorKernels.semDedupSurvivors]]): members are
+    * array<struct<id long, vec array<float>, nrm double>>, any field
+    * names. */
   def semDedupSurvivors(members: Column, thr: Double): Column =
-    Bridge.column(SemDedupSurvivors(Bridge.expression(members), thr))
+    Vector.semDedupSurvivors(members -> ArrayType(StructType(Seq(
+        StructField("id", LongType), StructField("vec", Floats),
+        StructField("nrm", DoubleType)))), thr)
+      .as("semdedup_survivors", ArrayType(LongType, containsNull = false))
 
-  /** array<long> of per-table LSH buckets ([[LshBucketSignature]]). */
+  /** array<long> of per-table LSH buckets ([[VectorKernels.lshBuckets]]). */
   def lshBuckets(vec: Column, weights: Seq[Double], tables: Int, bits: Int,
-      dim: Int): Column =
-    Bridge.column(LshBucketSignature(Bridge.expression(vec), weights,
-      tables, bits, dim))
+      dim: Int): Column = {
+    require(tables >= 1 && bits >= 1 && bits <= 62 && dim >= 1 &&
+      weights.length == tables * bits * dim,
+      "lsh_bucket_signature: need tables*bits*dim weights")
+    Vector.lshBuckets(vec -> Floats, doubles("lsh_weights", weights), tables, bits, dim)
+      .as("lsh_bucket_signature", ArrayType(LongType, containsNull = false))
+  }
 
   /** Nearest-centroid id over a literal centroid table
-    * ([[NearestCentroid]]); `cn2` = per-centroid ‖c‖². */
+    * ([[VectorKernels.nearestCentroid]]); `cn2` = per-centroid ‖c‖². */
   def nearestCentroid(vec: Column, cents: Seq[Seq[Float]],
-      cn2: Seq[Double]): Column =
-    Bridge.column(NearestCentroid(Bridge.expression(vec), cents, cn2))
+      cn2: Seq[Double]): Column = {
+    require(cents.nonEmpty && cents.length == cn2.length,
+      "nearest_centroid: need one ‖c‖² per centroid")
+    Vector.nearestCentroid(vec -> Floats, table("centroids", cents),
+      doubles("centroid_sq_norms", cn2)).as("nearest_centroid", IntegerType)
+  }
 
   /** struct<cell, cos> argmax-cosine over the full centroid table
-    * ([[NearestCentroidCos]]); `cnorm` = per-centroid ‖c‖. */
+    * ([[VectorKernels.nearestCentroidCos]]); `cnorm` = per-centroid ‖c‖.
+    * A zero norm follows the session's ANSI mode at the time of the
+    * call, as `Divide` does. */
   def nearestCentroidCos(vec: Column, cents: Seq[Seq[Float]],
-      cnorm: Seq[Double]): Column =
-    Bridge.column(NearestCentroidCos(Bridge.expression(vec), cents, cnorm))
+      cnorm: Seq[Double]): Column = {
+    require(cents.nonEmpty && cents.length == cnorm.length,
+      "nearest_centroid_cos: need one ‖c‖ per centroid")
+    require(cents.forall(_.length == cents.head.length),
+      "nearest_centroid_cos: centroid dims must be uniform")
+    Vector.nearestCentroidCos(vec -> Floats, table("centroids", cents),
+        doubles("centroid_norms", cnorm), SQLConf.get.ansiEnabled)
+      .as("nearest_centroid_cos", CellCos, returnsNull = true)
+  }
 
   /** struct<cell, cos> argmax-cosine through a coarse quantizer
-    * ([[NearestCentroidPruned]]); `nProbe = coarse.length` is exact. */
+    * ([[VectorKernels.nearestCentroidPruned]]); `nProbe = coarse.length`
+    * is exact. */
   def nearestCentroidPruned(vec: Column,
       coarse: Seq[Seq[Float]], coarseNorm: Seq[Double], members: Seq[Seq[Int]],
-      cents: Seq[Seq[Float]], cnorm: Seq[Double], nProbe: Int): Column =
-    Bridge.column(NearestCentroidPruned(Bridge.expression(vec),
-      coarse, coarseNorm, members, cents, cnorm, nProbe))
+      cents: Seq[Seq[Float]], cnorm: Seq[Double], nProbe: Int): Column = {
+    require(coarse.nonEmpty && coarse.length == coarseNorm.length &&
+      coarse.length == members.length,
+      "nearest_centroid_pruned: need one ‖c‖ and one member list per coarse cell")
+    require(cents.nonEmpty && cents.length == cnorm.length,
+      "nearest_centroid_pruned: need one ‖c‖ per centroid")
+    require(cents.forall(_.length == cents.head.length) &&
+      coarse.forall(_.length == cents.head.length),
+      "nearest_centroid_pruned: centroid dims must be uniform")
+    require(members.flatten.sorted == cents.indices.toList,
+      "nearest_centroid_pruned: member lists must partition the centroid ids")
+    require(nProbe > 0, s"nearest_centroid_pruned: nProbe must be positive: $nProbe")
+    Vector.nearestCentroidPruned(vec -> Floats,
+        table("coarse", coarse), doubles("coarse_norms", coarseNorm),
+        KernelConst("coarse_members", members)(members.map(_.toArray).toArray),
+        table("centroids", cents), doubles("centroid_norms", cnorm),
+        nProbe, SQLConf.get.ansiEnabled)
+      .as("nearest_centroid_pruned", CellCos, returnsNull = true)
+  }
 
   /** UNQUANTIZED cosine of (int8-dequantized vec, literal query)
-    * ([[Int8DequantCosine]]) — callers quantize the emission. */
-  def int8DequantCos(vec: Column, query: Seq[Double]): Column =
-    Bridge.column(Int8DequantCosine(Bridge.expression(vec), query))
+    * ([[VectorKernels.int8DequantCos]]) — callers quantize the emission.
+    * Null for the degenerate rows that kernel documents. */
+  def int8DequantCos(vec: Column, query: Seq[Double]): Column = {
+    require(query.nonEmpty, "int8_dequant_cos: empty query vector")
+    // ‖q‖ matches Similarity.normOf: sequential sum of squares, sqrt
+    val qNorm = math.sqrt(query.foldLeft(0.0)((acc, x) => acc + x * x))
+    Vector.int8DequantCos(vec -> Floats, doubles("query", query), qNorm)
+      .as("int8_dequant_cos", DoubleType, returnsNull = true)
+  }
 }

@@ -66,22 +66,6 @@ class JobConfigSpec extends AnyFunSuite {
         |"start_date":"2022-03-02","end_date":"2022-03-01"}]}""".stripMargin))
   }
 
-  test("store config: per-field config<-env fallback chain (I4)") {
-    val env = Map("GRAFT_STORE_URL" -> "https://env.example/store",
-      "GRAFT_STORE_DB" -> "envdb", "GRAFT_STORE_RETRIES" -> "7")
-    // config wins over env; env fills missing fields; defaults fill the rest
-    val cfg = JobConfig.parse(
-      """{"data":[],"store_config":{"db":"cfgdb","collection":"col1"}}""", env)
-    assert(cfg.store.db.contains("cfgdb")) // config beats env
-    assert(cfg.store.url.contains("https://env.example/store")) // env fills gap
-    assert(cfg.store.collection.contains("col1"))
-    assert(cfg.store.retries == 7) // env fills numeric gap
-    assert(cfg.store.concurrency == 1) // reference default
-    // no store_config node at all -> env + defaults only
-    val bare = JobConfig.parse("""{"data":[]}""", env)
-    assert(bare.store.db.contains("envdb") && bare.store.username.isEmpty)
-  }
-
   test("CLI: a trailing --date with no value is a usage error, not yesterday") {
     // a backfill typo must fail loudly instead of silently ingesting the
     // default (yesterday's) date-templated files

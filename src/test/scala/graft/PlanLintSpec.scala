@@ -346,7 +346,7 @@ class PlanLintSpec extends AnyFunSuite {
     "pack_emit_ids" -> "same next-fit prefix sum, carrying the id arrays it emits",
     "pack_sequences_inc" -> "state-offset prefix sum over the increment (registry packing)",
     // (chunk_docs_cost / chunk_docs_bpe left this list in r17: the
-    // CostChunks kernel made cost-budgeted chunking map-only — the
+    // ChunkKernel.costChunks kernel made cost-budgeted chunking map-only — the
     // per-doc prefix sum is row-local, no Window in the plan)
     // verbatim-span machinery: per-doc positional kernels (lead over
     // token positions) + per-(pair,diagonal) gaps-and-islands — windows

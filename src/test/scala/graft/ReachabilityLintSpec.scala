@@ -25,7 +25,8 @@ class ReachabilityLintSpec extends AnyFunSuite {
     "Verify" -> "oracle-dump main",
     "FixtureGen" -> "fixture-parquet generator main",
     "PlanDump" -> "plan-dump main (graft.tools)",
-    "GraftExtensions" -> "loaded by class name through spark.sql.extensions")
+    "GraftExtensions" -> "loaded by class name through spark.sql.extensions",
+    "applyDynamic" -> "scalac's rewrite of each NativeKernel.of(kernel).method(…) call")
 
   private val Decl = "\\b(?:def|class|object|trait)\\s+([A-Za-z_][A-Za-z0-9_]*)".r
   private val Override = "\\boverride\\s+(?:(?:final|protected|private|implicit|lazy|case)(?:\\[\\w+\\])?\\s+)*$".r

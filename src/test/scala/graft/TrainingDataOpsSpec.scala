@@ -1988,7 +1988,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     val int8 = Similarity.topKInt8(e, q, 10).collect().map(_.getAs[Long]("vec_id")).toSet
     val recall = (full & int8).size
     assert(recall >= 8, s"int8 recall@10 = $recall (full $full, int8 $int8)")
-    // the native Int8DequantCosine kernel is BIT-identical to the
+    // the native VectorKernels.int8DequantCos kernel is BIT-identical to the
     // interpreted HOF formulation it replaced — ids AND quantized scores
     // (the HOF form is the retained spec oracle, mirroring the SQL oracle)
     val nat = Similarity.topKInt8(e, q, 500).collect()

@@ -301,12 +301,13 @@ class VectorExpressionsSpec extends AnyFunSuite {
   test("bpe_token_count SQL registration matches the Column surface") {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+    import org.apache.spark.sql.graftbridge.Bridge
     spark.sessionState.functionRegistry.registerFunction(
       FunctionIdentifier("bpe_token_count"),
-      new ExpressionInfo(classOf[graft.plans.BpeTokenCount].getName, "bpe_token_count"),
+      new ExpressionInfo(classOf[graft.plans.NativeKernel].getName, "bpe_token_count"),
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.plans.BpeTokenCount(children.head,
-          graft.functions.TextFunctions.BpeMerges))
+        Bridge.expression(graft.plans.BpeExpressions.bpeCount(
+          Bridge.column(children.head), graft.functions.TextFunctions.BpeMerges)))
     val docs = Seq((1L, "the quick brown fox")).toDF("id", "text")
     docs.createOrReplaceTempView("bpe_docs")
     val viaSql = spark.sql(

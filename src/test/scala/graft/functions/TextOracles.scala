@@ -29,12 +29,12 @@ object TextOracles {
     conv(substring(md5(s.cast("binary")), 1, 8), 16, 10).cast("long")
 
   /** The five-regex-engine formulation [[qualityColumns]] replaced —
-    * kept as the spec oracle pinning the [[graft.plans.QualitySignals]]
+    * kept as the spec oracle pinning the [[graft.plans.ShingleHash.qualitySignals]]
     * kernel (and the shape the DuckDB oracle SQL mirrors). */
   def qualityColumnsRegex(text: Column): Seq[(String, Column)] = {
     val nChars = length(text).cast("long")
     // size(tokens(..)), NOT tokenCount: tokenCount routes through the
-    // QualitySignals kernel this formulation exists to pin — the oracle
+    // ShingleHash.qualitySignals kernel this formulation exists to pin — the oracle
     // must share no code with the kernel under test. (size → -1 on null
     // input; the when() keeps null text → null like the kernel.)
     val nTok = when(text.isNull, lit(null).cast("long"))
@@ -50,7 +50,7 @@ object TextOracles {
   }
 
   /** The 15-regex-engine formulation [[gopherColumns]] replaced — kept
-    * as the spec oracle pinning the [[graft.plans.GopherSignals]] kernel
+    * as the spec oracle pinning the [[graft.plans.ShingleHash.gopherSignals]] kernel
     * (and the shape the DuckDB oracle SQL mirrors). Stop-word boundaries
     * are spelled as ASCII lookarounds, NOT `\b`: Java's `\b` is
     * Unicode-word-based where RE2's (= the kernel's, = the DuckDB
@@ -96,7 +96,7 @@ object TextOracles {
     }
 
   /** Folded-regexp_replace forms of [[stripMarkup]] / [[redactPii]] —
-    * kept as the spec oracles pinning [[graft.plans.ChainedRegexReplace]]. */
+    * kept as the spec oracles pinning [[graft.plans.ShingleHash.chainedReplace]]. */
   def stripMarkupFolded(text: Column): Column =
     MarkupPatterns.foldLeft(text) { case (c, (pat, repl)) =>
       regexp_replace(c, lit(pat), lit(repl))
@@ -107,7 +107,7 @@ object TextOracles {
     }
 
   /** The regex formulation [[langId]] replaced — kept as the spec oracle
-    * pinning the [[graft.plans.LangIdDecide]] kernel.
+    * pinning the [[graft.plans.ShingleHash.langIdDecide]] kernel.
     *
     * Boundary semantics, learned the hard way (randomized kernel pin in
     * PropertySpec): Java's `\b` is NOT the ASCII boundary RE2 uses —

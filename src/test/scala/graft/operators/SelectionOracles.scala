@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 
 /** The feature-string formulation of DSIR's feature hashing — the
-  * readable contract [[graft.plans.Md5FeatureBuckets]] is pinned
+  * readable contract [[graft.plans.ShingleHash.md5FeatureBuckets]] is pinned
   * bit-identical against. */
 object SelectionOracles {
 

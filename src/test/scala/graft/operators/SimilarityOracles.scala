@@ -46,7 +46,7 @@ object SimilarityOracles {
   }
 
   /** Cosine of `vecCol` against each centroid as one literal array column
-    * — the chain [[graft.plans.NearestCentroidCos]] replaces, with the
+    * — the chain [[graft.plans.VectorKernels.nearestCentroidCos]] replaces, with the
     * centroid norms driver-folded in the column-side order. */
   def centroidScores(centroids: Array[Array[Float]], vecCol: String): Column =
     array(centroids.map { c =>
@@ -55,7 +55,7 @@ object SimilarityOracles {
     }: _*)
 
   /** The higher-order-function formulation of [[Similarity.topKInt8]]'s
-    * scoring, pinning [[graft.plans.Int8DequantCosine]] bit-identical
+    * scoring, pinning [[graft.plans.VectorKernels.int8DequantCos]] bit-identical
     * (also the shape the DuckDB oracle SQL mirrors). */
   def topKInt8Hof(embeddings: DataFrame, query: Seq[Float], k: Int,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
