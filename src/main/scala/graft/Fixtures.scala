@@ -201,8 +201,9 @@ object Fixtures {
    * plus progressive SOF2 with a planted color cast);
    * audio payloads alternate VALID 16-bit PCM WAVs and VALID MP3 frame
    * streams (deterministic gradient / sine / gain-ramp content — all
-   * parseable without a codec library, so `Multimodal.extractFeatures`
-   * genuinely derives content features); video payloads
+   * decodable by the JDK or a container walk, so
+   * `Multimodal.extractFeatures` genuinely derives content features);
+   * video payloads
    * alternate VALID MJPEG AVIs (flat and rec-grouped — decoded for real
    * by `Multimodal.decodeAvi`) and synthetic bytes (codec-bound video —
    * the stub path's remit).
@@ -287,13 +288,13 @@ object Fixtures {
    * G, like the decoded BMP) — rows cycle through all five PNG filter
    * types (None/Sub/Up/Average/Paeth) so the decoder's full filter
    * algebra is exercised, and the stream is a real zlib deflate
-   * (`java.util.zip.Deflater`, the JDK twin of the decoder's Inflater).
+   * (`java.util.zip.Deflater`).
    */
   def pngBytes(w: Int, h: Int, seed: Int, alpha: Boolean = false): Array[Byte] = {
     val ch = if (alpha) 4 else 3
     val stride = w * ch
     // raw top-down RGB(A) rows: G brightest at the top (y = 0), matching
-    // what decodeBmp yields for bmpBytes' bottom-up storage
+    // what a decoder yields for bmpBytes' bottom-up storage
     val img = Array.tabulate(h) { y =>
       val row = new Array[Byte](stride)
       var x = 0
@@ -362,24 +363,22 @@ object Fixtures {
       chunk("IEND", Array.emptyByteArray)
   }
 
-  /**
-   * A valid BASELINE JPEG (SOF0, 8-bit, Huffman) carrying the SAME
-   * luminance gradient as [[bmpBytes]]/[[pngBytes]], encoded from
-   * scratch: forward DCT, uniform quantization (q=4 — mild, so the
-   * planted gradient survives within a couple of gray levels), zigzag
-   * run-length symbols, and ONE canonical Huffman table: symbols 0..254
-   * get 8-bit codes, symbol 255 a 9-bit code (counts[8] = 255,
-   * counts[9] = 1 — DHT's Li fields are bytes, so a single length cannot
-   * hold all 256; a valid prefix code that needs none of the Annex K
-   * constants, and decoders read it from DHT like any other). Three
-   * layouts:
-   *  - grayscale (1 component),
-   *  - color 4:4:4 (Y,Cb,Cr one block each per MCU; chroma flat),
-   *  - color 4:2:0 (`subsample = true`: 4 Y blocks + Cb + Cr per MCU —
-   *    the multi-block-MCU geometry real photos use).
-   * `restartEvery > 0` inserts DRI/RSTn markers, exercising the
-   * decoder's restart path.
-   */
+  /** DHT segments shared by [[jpegBytes]] and [[jpegProgressiveBytes]]:
+    * DC table 0 holds the baseline categories 0..11 as 4-bit codes (a DC
+    * symbol above 15 is a table error to libjpeg-derived decoders); AC
+    * table 0 holds all 256 byte symbols, 0..254 as 8-bit codes and 255 as
+    * the 9-bit code 510 (the all-ones code 511 stays unused, per the
+    * padding convention). */
+  private def huffmanTables(u8: Int => Unit, u16: Int => Unit,
+      marker: Int => Unit): Unit = {
+    marker(0xC4); u16(2 + 17 + 12); u8(0x00)
+    (1 to 16).foreach(l => u8(if (l == 4) 12 else 0))
+    (0 until 12).foreach(u8)
+    marker(0xC4); u16(2 + 17 + 256); u8(0x10)
+    (1 to 16).foreach(l => u8(if (l == 8) 255 else if (l == 9) 1 else 0))
+    (0 until 256).foreach(u8)
+  }
+
   /** Deterministic hash-pseudo-random luma for the `noise` JPEG content
     * mode — ONE definition shared by both encoders so baseline and
     * progressive streams carry pixel-identical content. */
@@ -393,6 +392,27 @@ object Fixtures {
     ((z ^ (z >>> 31)) & 0xFFL).toDouble
   }
 
+  /**
+   * A valid BASELINE JPEG (SOF0, 8-bit, Huffman) carrying the SAME
+   * luminance gradient as [[bmpBytes]]/[[pngBytes]], encoded from
+   * scratch: forward DCT, uniform quantization (q=4 — mild, so the
+   * planted gradient survives within a couple of gray levels), zigzag
+   * run-length symbols, and two canonical Huffman tables that need none
+   * of the Annex K constants:
+   *  - DC: the twelve baseline magnitude categories 0..11 (T.81 F.1.2.1),
+   *    each a 4-bit code (counts[4] = 12);
+   *  - AC: every byte symbol — 0..254 get 8-bit codes, 255 a 9-bit code
+   *    (counts[8] = 255, counts[9] = 1; DHT's Li fields are bytes, so one
+   *    length cannot hold all 256).
+   * Decoders read both from DHT like any other tables. Three
+   * layouts:
+   *  - grayscale (1 component),
+   *  - color 4:4:4 (Y,Cb,Cr one block each per MCU; chroma flat),
+   *  - color 4:2:0 (`subsample = true`: 4 Y blocks + Cb + Cr per MCU —
+   *    the multi-block-MCU geometry real photos use).
+   * `restartEvery > 0` inserts DRI/RSTn markers, exercising the
+   * decoder's restart path.
+   */
   def jpegBytes(w: Int, h: Int, seed: Int, gray: Boolean = false,
       subsample: Boolean = false, restartEvery: Int = 0,
       cbOff: Int = 0, crOff: Int = 0, noise: Boolean = false): Array[Byte] = {
@@ -425,23 +445,13 @@ object Fixtures {
     val (hy, vy) = if (subsample && !gray) (2, 2) else (1, 1)
     u8(1); u8((hy << 4) | vy); u8(0) // Y
     if (!gray) { u8(2); u8(0x11); u8(0); u8(3); u8(0x11); u8(0) }
-    // DHT: the universal table — symbols 0..254 get 8-bit codes 0..254,
-    // symbol 255 the 9-bit code 510 (DHT's Li fields are bytes, so one
-    // length can't hold all 256; the 9-bit all-ones code 511 stays
-    // unused, per the padding convention). Written once as DC(0) and
-    // once as AC(0).
-    for (tc <- 0 to 1) {
-      marker(0xC4); u16(2 + 17 + 256); u8((tc << 4) | 0)
-      (1 to 16).foreach(l => u8(if (l == 8) 255 else if (l == 9) 1 else 0))
-      (0 until 256).foreach(u8)
-    }
+    huffmanTables(u8, u16, marker)
     // SOS
     marker(0xDA); u16(6 + 2 * nComp); u8(nComp)
     u8(1); u8(0x00)
     if (!gray) { u8(2); u8(0x00); u8(3); u8(0x00) }
     u8(0); u8(63); u8(0)
     // --- entropy-coded data ---
-    // canonical codes for counts[9]=256: symbol s ↔ 9-bit code s
     var bitBuf = 0L
     var bitCnt = 0
     def putBits(v: Int, n: Int): Unit = {
@@ -463,6 +473,7 @@ object Fixtures {
     }
     def putSym(s: Int): Unit =
       if (s < 255) putBits(s, 8) else putBits(510, 9)
+    def putDcSym(s: Int): Unit = putBits(s, 4)
     def magnitude(v: Int): (Int, Int) = { // (ssss, appended bits)
       val a = math.abs(v)
       var s = 0
@@ -498,7 +509,7 @@ object Fixtures {
     }
     def encodeBlock(zq: Array[Int], dcPred: Int): Int = {
       val (ds, dbits) = magnitude(zq(0) - dcPred)
-      putSym(ds); if (ds > 0) putBits(dbits, ds)
+      putDcSym(ds); if (ds > 0) putBits(dbits, ds)
       var k = 1
       var run = 0
       while (k < 64) {
@@ -549,7 +560,7 @@ object Fixtures {
   /**
    * A valid PROGRESSIVE JPEG (SOF2, Huffman) carrying the SAME content —
    * pixel-for-pixel the same luma gradient, chroma casts, quantizer and
-   * Huffman table — as [[jpegBytes]], so a progressive decode must
+   * Huffman tables — as [[jpegBytes]], so a progressive decode must
    * reproduce the baseline feature EXACTLY (successive approximation
    * reconstructs every coefficient to full precision by the last scan).
    * The scan script exercises all four progressive scan kinds plus EOB
@@ -599,12 +610,8 @@ object Fixtures {
     val (hy, vy) = if (subsample && !gray) (2, 2) else (1, 1)
     u8(1); u8((hy << 4) | vy); u8(0) // Y
     if (!gray) { u8(2); u8(0x11); u8(0); u8(3); u8(0x11); u8(0) }
-    // the universal 8/9-bit table (see jpegBytes), as DC(0) and AC(0)
-    for (tc <- 0 to 1) {
-      marker(0xC4); u16(2 + 17 + 256); u8((tc << 4) | 0)
-      (1 to 16).foreach(l => u8(if (l == 8) 255 else if (l == 9) 1 else 0))
-      (0 until 256).foreach(u8)
-    }
+    // the same DC and AC tables as jpegBytes
+    huffmanTables(u8, u16, marker)
     // --- bit writer (0xFF00 stuffing; 1-padded flush before markers) ---
     var bitBuf = 0L
     var bitCnt = 0
@@ -627,6 +634,7 @@ object Fixtures {
     }
     def putSym(s: Int): Unit =
       if (s < 255) putBits(s, 8) else putBits(510, 9)
+    def putDcSym(s: Int): Unit = putBits(s, 4)
     def magnitude(v: Int): (Int, Int) = {
       val a = math.abs(v)
       var s = 0
@@ -711,7 +719,7 @@ object Fixtures {
           for (by <- 0 until cv; bx <- 0 until ch) {
             val v = dcOf(c, my * cv + by, mx * ch + bx) >> 1 // arithmetic
             val (s, bits) = magnitude(v - pred(c))
-            putSym(s); putBits(bits, s)
+            putDcSym(s); putBits(bits, s)
             pred(c) = v
           }
         }

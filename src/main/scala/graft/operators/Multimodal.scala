@@ -1,5 +1,15 @@
 package graft.operators
 
+import java.awt.image.{DataBuffer, Raster}
+import java.io.ByteArrayInputStream
+import javax.imageio.{ImageIO, ImageReader}
+import javax.imageio.event.IIOReadWarningListener
+import javax.imageio.stream.MemoryCacheImageInputStream
+import javax.sound.sampled.{AudioFormat, AudioSystem}
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,29 +20,32 @@ import graft.functions.Quantize
  * `binary` columns traveling WITH typed metadata; decode / feature-extract /
  * resize / frame-sample run as partition-batched typed transformations.
  *
- * Decode is REAL for the codec-library-free formats: 24-bit uncompressed
- * BMP ([[decodeBmp]]) and 16-bit PCM WAV ([[decodeWav]]) are pure byte
- * layouts, and non-interlaced 8-bit PNG ([[decodePng]]) is zlib
- * (JDK-standard `Inflater`) plus four integer row filters — so images
- * yield genuine 4×4-grid luminance features and audio genuine per-segment
- * RMS envelopes, content-derived embeddings the similarity/dedup operators
- * consume directly — and JPEG ([[decodeJpeg]]), both baseline SOF0 and
- * progressive SOF2 (Huffman only), is Huffman tables + an 8-point IDCT,
- * pure math over bytes, with Y and (for canonical YCbCr layouts) Cb/Cr
- * planes feeding the 24-dim grid feature. Payloads
- * that genuinely need a codec library (video containers, MP3/…, plus
- * arithmetic-coded/lossless/hierarchical JPEG modes) fall back to a
- * clearly-marked deterministic STUB (`fakeDecode`, `decoder = "stub"`):
- * those libraries don't exist in this container, and in production only
- * that branch changes — everything around it, including the contract that
- * decode happens once per partition-batch with bounded memory, stays.
+ * Pixel and sample decode is the JDK's: BMP, PNG and JPEG (baseline,
+ * extended-sequential and progressive) go through `javax.imageio`
+ * ([[decodeImage]]), PCM WAV through `javax.sound.sampled`
+ * ([[decodeWav]]), and MJPEG AVI frames through the same image path
+ * ([[decodeAvi]]). Images yield a 24-dim grid feature
+ * ([[imageFeature]]: 4×4 luma + 2×2 Cb + 2×2 Cr, read from raster
+ * samples, never colour-converted pixels) and audio a per-segment RMS
+ * envelope — content-derived embeddings the similarity/dedup operators
+ * consume directly. The container walks the JDK does not ship — MP3
+ * side info, MP4 boxes, Matroska EBML, the AVI RIFF tree — stay hand
+ * parsed. Payloads that need a codec library this container lacks
+ * (non-MJPEG video content, MP3 PCM, arithmetic-coded or lossless JPEG)
+ * fall back to a clearly-marked deterministic STUB (`fakeDecode`,
+ * `decoder = "stub"`).
+ *
+ * Every payload is untrusted: magic bytes pick the reader, sizes are
+ * checked before any allocation (a raster-bytes valve that subsamples
+ * oversized images, a coefficient-plane valve for progressive JPEG, a
+ * declared-length check for WAV), a decoder warning is a failure, and any
+ * non-fatal error degrades to the stub row instead of killing the task.
  *
  * Scale notes: payload bytes dominate IO, so (1) metadata-only queries must
  * never touch the binary column — parquet column pruning guarantees that
  * when decode stays out of the projection; (2) decode is mapPartitions, not
- * per-row UDF, so per-batch init cost (real codecs are expensive to open)
- * amortizes; (3) partition sizing by `maxPartitionBytes` keeps a batch's
- * decoded frames in executor memory.
+ * per-row UDF, so per-batch init cost amortizes; (3) partition sizing by
+ * `maxPartitionBytes` keeps a batch's decoded frames in executor memory.
  */
 object Multimodal {
 
@@ -45,9 +58,9 @@ object Multimodal {
     * [[imageFeature]]'s luma+chroma grids; audio: 16-dim envelope,
     * zero-padded). `decoder` records which
     * path produced the feature — "bmp" / "png" / "jpeg" /
-    * "jpeg-progressive" / "wav" / "avi-mjpeg" (real
-    * content decode) or "stub" (codec-bound payload, deterministic
-    * fake). */
+    * "jpeg-progressive" / "wav" / "avi-mjpeg" (real content decode),
+    * "mp3-sideinfo" / "mp4-meta" / "mkv-meta" (container walks) or
+    * "stub" (codec-bound payload, deterministic fake). */
   final case class MediaFeatures(
       media_id: Long, kind: String, n_bytes: Long, checksum: Long,
       thumb_w: Int, thumb_h: Int, frames_sampled: Int, decoder: String,
@@ -60,19 +73,21 @@ object Multimodal {
     (b(off) & 0xFF) | ((b(off + 1) & 0xFF) << 8)
 
   /**
-   * The one shared 4×4 grid-luminance accumulator behind every image
-   * decoder's 16-dim feature (BMP/PNG/JPEG), so the feature algebra —
-   * cell geometry, mean, /255 normalization — has exactly one
-   * implementation and cross-decoder feature compatibility is structural.
-   * Double sums are exact for the integer lumas BMP/PNG feed (sums stay
-   * far below 2^53) and native for JPEG's fractional reconstructed Y.
+   * The one shared grid-mean accumulator behind every image feature
+   * (BMP/PNG/JPEG), so the feature algebra — cell geometry, mean, /255
+   * normalization — has exactly one implementation and cross-format
+   * feature compatibility is structural. Double sums are exact for the
+   * integer lumas every decoder feeds (sums stay far below 2^53). Cell indices
+   * use Long products: a subsampled decode of a very tall or wide image
+   * feeds source coordinates near 2^31.
    */
-  private[operators] final class GridLuma(w: Int, h: Int, g: Int = 4,
+  private final class GridLuma(w: Int, h: Int, g: Int = 4,
       neutral: Double = 0.0) {
     private val sums = new Array[Double](g * g)
     private val counts = new Array[Long](g * g)
     def add(x: Int, y: Int, luma: Double): Unit = {
-      val cell = math.min(g - 1, y * g / h) * g + math.min(g - 1, x * g / w)
+      val cell = math.min(g - 1, (y.toLong * g / h).toInt) * g +
+        math.min(g - 1, (x.toLong * g / w).toInt)
       sums(cell) += luma
       counts(cell) += 1
     }
@@ -86,448 +101,270 @@ object Multimodal {
     * Chroma grids default to NEUTRAL gray (128/255) when a source has no
     * chroma (grayscale JPEG/PNG) so an achromatic image looks the same
     * whether its container stored color planes or not. */
-  private[operators] def chromaGrid(w: Int, h: Int): GridLuma =
+  private def chromaGrid(w: Int, h: Int): GridLuma =
     new GridLuma(w, h, g = 2, neutral = 128.0)
 
-  private[operators] def imageFeature(luma: GridLuma, cb: GridLuma,
+  private def imageFeature(luma: GridLuma, cb: GridLuma,
       cr: GridLuma): Array[Float] = luma.feature() ++ cb.feature() ++ cr.feature()
 
   /** JFIF floating-point Cb/Cr of an RGB pixel (128-centered). */
-  private[operators] def jfifCb(r: Int, g: Int, b: Int): Double =
+  private def jfifCb(r: Int, g: Int, b: Int): Double =
     128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-  private[operators] def jfifCr(r: Int, g: Int, b: Int): Double =
+  private def jfifCr(r: Int, g: Int, b: Int): Double =
     128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
 
-  /** Integer BT.601 luma used by the RGB-source decoders (BMP/PNG). */
-  private[operators] def bt601(r: Int, g: Int, b: Int): Int =
+  /** Integer BT.601 luma used for RGB sources (BMP/PNG). */
+  private def bt601(r: Int, g: Int, b: Int): Int =
     (r * 299 + g * 587 + b * 114) / 1000
 
+  /** Raster-bytes valve: an image whose decoded raster would exceed
+    * 64 MiB decodes at the smallest source-subsampling step that fits; one
+    * whose single source row exceeds it is refused (readers buffer whole
+    * source rows whatever the step). */
+  private val RasterCap = 64L << 20
+
+  /** Multi-scan JPEG valve: when a frame's scans do not each carry every
+    * component — progressive (SOF2), or a sequential frame whose first
+    * scan codes fewer components than the frame — libjpeg keeps every
+    * coefficient of the frame in native memory until the last scan, out
+    * of the JVM heap's reach. Such a frame whose MCU-padded planes exceed
+    * 48 MB (counted at 4 bytes per coefficient; the JDK's libjpeg stores
+    * 2) is refused — 8 MP at 4:2:0, 4 MP at 4:4:4. */
+  private val PlaneCap = 48L << 20
+
+  /** ImageIO format name of a payload, by its magic bytes. */
+  private def imageFormat(p: Array[Byte]): Option[String] =
+    if (p.length >= 2 && p(0) == 'B' && p(1) == 'M') Some("bmp")
+    else if (p.length >= 8 && (p(0) & 0xFF) == 0x89 && p(1) == 'P' && p(2) == 'N' &&
+      p(3) == 'G' && p(4) == 0x0D && p(5) == 0x0A && p(6) == 0x1A && p(7) == 0x0A)
+      Some("png")
+    else if (p.length >= 2 && (p(0) & 0xFF) == 0xFF && (p(1) & 0xFF) == 0xD8) Some("jpeg")
+    else None
+
   /**
-   * REAL decode of a 24-bit uncompressed BMP (pure byte layout — 14-byte
-   * file header, 40-byte info header, bottom-up BGR rows padded to 4
-   * bytes; top-down negative-height variant handled). Returns (width,
-   * height, 16-dim feature) — the feature is the mean LUMINANCE of a 4×4
-   * spatial grid (integer BT.601 weights, /255), i.e. an actual coarse
-   * thumbnail of the image content. None when the payload isn't a
-   * plain 24-bit BMP (wrong magic, compressed, other depth).
+   * The decoder tag of a JPEG from a short walk through its frame header
+   * to its first scan header: "jpeg" for SOF0 (baseline) and SOF1
+   * (extended sequential), "jpeg-progressive" for SOF2. None when a scan
+   * comes before the frame, when SOI/EOI or another frame type (lossless,
+   * hierarchical, arithmetic-coded — which the JDK does not decode)
+   * comes first, when a header is malformed, or when a multi-scan frame
+   * (SOF2, or a first scan with fewer components than the frame)
+   * exceeds [[PlaneCap]]: Σ over components of the MCU-padded block grid
+   * × 64 coefficients × 4 bytes.
    */
-  def decodeBmp(p: Array[Byte]): Option[(Int, Int, Array[Float])] = {
-    if (p.length < 54 || p(0) != 'B' || p(1) != 'M') return None
-    val pixOff = leInt(p, 10)
-    val w = leInt(p, 18)
-    val hRaw = leInt(p, 22)
-    val h = math.abs(hRaw)
-    val bpp = leShort(p, 28)
-    val comp = leInt(p, 30)
-    // h <= 0 also rejects hRaw = Int.MinValue, whose math.abs is itself
-    // negative and would otherwise skip the pixel loop yet report success.
-    if (bpp != 24 || comp != 0 || w <= 0 || h <= 0) return None
-    // Header ints are UNTRUSTED: a negative pixOff or a w near 2^31/3 must
-    // not slip past the size check via Int overflow (sum/rowSize wrapping
-    // negative would pass the `>` and then blow up in the pixel loop), so
-    // bound both and keep the row-size arithmetic in Long. w ≤ len/3 also
-    // guarantees rowSize fits an Int for the loop below.
-    if (pixOff < 54 || w > p.length / 3) return None
-    val rowSize = (((w.toLong * 3) + 3) / 4 * 4).toInt
-    if (pixOff.toLong + rowSize.toLong * h > p.length) return None
-    val grid = new GridLuma(w, h)
-    val cbG = chromaGrid(w, h)
-    val crG = chromaGrid(w, h)
-    var y = 0
-    while (y < h) {
-      // bottom-up storage unless height was negative (top-down)
-      val srcRow = if (hRaw > 0) h - 1 - y else y
-      val base = pixOff + srcRow * rowSize
-      var x = 0
-      while (x < w) {
-        val o = base + x * 3
-        val b = p(o) & 0xFF; val g = p(o + 1) & 0xFF; val r = p(o + 2) & 0xFF
-        grid.add(x, y, bt601(r, g, b))
-        cbG.add(x, y, jfifCb(r, g, b))
-        crG.add(x, y, jfifCr(r, g, b))
-        x += 1
+  private def jpegTag(p: Array[Byte]): Option[String] = {
+    def be16(o: Int): Int = ((p(o) & 0xFF) << 8) | (p(o + 1) & 0xFF)
+    // (progressive, coefficient-plane bytes, components) of the frame
+    var frame: Option[(Boolean, Long, Int)] = None
+    var off = 2
+    while (off + 4 <= p.length) {
+      if ((p(off) & 0xFF) != 0xFF) return None
+      val m = p(off + 1) & 0xFF
+      if (m == 0xFF) off += 1 // fill byte
+      else if (m == 0x01 || (m >= 0xD0 && m <= 0xD7)) off += 2 // standalone
+      else {
+        val segEnd = off + 2 + be16(off + 2)
+        val seg = off + 4
+        if (segEnd < seg || segEnd > p.length) return None
+        if ((m == 0xC0 || m == 0xC1 || m == 0xC2) && frame.isEmpty) {
+          if (seg + 6 > segEnd) return None
+          val h = be16(seg + 1)
+          val w = be16(seg + 3)
+          val n = p(seg + 5) & 0xFF
+          if (w == 0 || h == 0 || n < 1 || n > 4 || seg + 6 + 3 * n > segEnd) return None
+          val hs = Array.tabulate(n)(c => (p(seg + 7 + 3 * c) & 0xFF) >> 4)
+          val vs = Array.tabulate(n)(c => p(seg + 7 + 3 * c) & 0xF)
+          if ((hs ++ vs).exists(f => f < 1 || f > 4)) return None
+          val mcusX = (w + 8L * hs.max - 1) / (8L * hs.max)
+          val mcusY = (h + 8L * vs.max - 1) / (8L * vs.max)
+          val planeBytes = hs.indices.map(c => mcusX * hs(c) * mcusY * vs(c) * 64L * 4L).sum
+          frame = Some((m == 0xC2, planeBytes, n))
+        } else if (m == 0xDA) {
+          if (seg >= segEnd) return None
+          return frame.flatMap { case (progressive, planeBytes, n) =>
+            val multiScan = progressive || (p(seg) & 0xFF) < n
+            if (multiScan && planeBytes > PlaneCap) None
+            else Some(if (progressive) "jpeg-progressive" else "jpeg")
+          }
+        } else if ((m >= 0xC0 && m <= 0xCF && m != 0xC4 && m != 0xC8 && m != 0xCC) ||
+          m == 0xD8 || m == 0xD9) return None // a second or unsupported frame, SOI/EOI
+        off = segEnd
       }
-      y += 1
     }
-    Some((w, h, imageFeature(grid, cbG, crG)))
+    None
   }
 
   /**
-   * REAL decode of a 16-bit PCM WAV (RIFF/WAVE chunk walk to `fmt ` and
-   * `data`; mono or interleaved multi-channel). Returns (sampleRate,
-   * nSamples, 16-dim feature) — the feature is the RMS amplitude of 16
-   * equal temporal segments (/32768), i.e. the actual loudness envelope
-   * of the audio. None for anything but uncompressed 16-bit PCM.
+   * REAL decode of a BMP, PNG or JPEG payload through `javax.imageio`.
+   * Returns (decoder tag, width, height, 24-dim [[imageFeature]]): "bmp",
+   * "png", "jpeg" (SOF0/SOF1) or "jpeg-progressive" (SOF2). Images must
+   * hold 8-bit samples in a direct (non-palette) colour model with 1
+   * (gray), 3 (RGB / YCbCr) or 4 (RGBA) bands — 24/32-bit BMP (and
+   * 8-bit BMP with a gray-ramp palette, which the JDK reads as gray),
+   * 8-bit gray/RGB/RGBA PNG (interlaced too), JPEG; colour-palette,
+   * 16-bit, sub-byte and gray+alpha layouts are None.
+   *
+   * The untrusted-payload contract:
+   *  - the magic bytes pick the reader, and the payload is read through a
+   *    `MemoryCacheImageInputStream` (never a temp-file cache);
+   *  - the header size is read first; a source row wider than 64 MiB is
+   *    refused, and a raster over [[RasterCap]] decodes at the smallest
+   *    `setSourceSubsampling` step that fits, its samples landing on the
+   *    grid at their source coordinates;
+   *  - a multi-scan JPEG over [[PlaneCap]] is refused ([[jpegTag]]);
+   *  - the first reader warning aborts the read and makes the decode None
+   *    (a truncated JPEG would otherwise decode the rest of its declared
+   *    frame from zeros, with only a warning), as does any non-fatal error.
+   *
+   * Features come from raster samples, never from colour-converted
+   * pixels: JPEG's `readRaster` hands over Y/Cb/Cr (Y only when gray,
+   * first component otherwise) straight into the luma and chroma grids,
+   * and BMP/PNG samples go through [[bt601]]/[[jfifCb]]/[[jfifCr]]; gray
+   * sources leave chroma neutral.
+   */
+  def decodeImage(p: Array[Byte]): Option[(String, Int, Int, Array[Float])] =
+    imageFormat(p).flatMap { format =>
+      val tag = if (format == "jpeg") jpegTag(p) else Some(format)
+      tag.flatMap { t =>
+        val reader = ImageIO.getImageReadersByFormatName(format).next()
+        val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(p))
+        try {
+          reader.setInput(in, true, true)
+          readFeature(reader, format == "jpeg").map { case (w, h, f) => (t, w, h, f) }
+        } catch { case NonFatal(_) => None }
+        finally { reader.dispose(); in.close() }
+      }
+    }
+
+  /** (width, height, feature) of the image `reader` holds, under the
+    * raster-bytes valve; None once the reader warns. */
+  private def readFeature(reader: ImageReader,
+      jpeg: Boolean): Option[(Int, Int, Array[Float])] = {
+    var warned = false
+    reader.addIIOReadWarningListener(new IIOReadWarningListener {
+      override def warningOccurred(source: ImageReader, warning: String): Unit = {
+        warned = true
+        source.abort()
+      }
+    })
+    val w = reader.getWidth(0)
+    val h = reader.getHeight(0)
+    // bytes per decoded pixel, from the reader's raster layout (4, the
+    // widest JPEG pixel, when the reader names none)
+    val bpp = Option(reader.getRawImageType(0))
+      .orElse(reader.getImageTypes(0).asScala.nextOption())
+      .map { spec =>
+        val sm = spec.getSampleModel(1, 1)
+        math.max(1L, sm.getNumDataElements.toLong *
+          DataBuffer.getDataTypeSize(sm.getDataType) / 8)
+      }.getOrElse(4L)
+    if (w <= 0 || h <= 0 || w * bpp > RasterCap) return None
+    val maxPixels = RasterCap / bpp
+    var step = math.max(1, math.sqrt(w.toDouble * h / maxPixels).toInt)
+    while ((w + step - 1L) / step * ((h + step - 1L) / step) > maxPixels) step += 1
+    val param = reader.getDefaultReadParam
+    if (step > 1) param.setSourceSubsampling(step, step, 0, 0)
+    val luma = new GridLuma(w, h)
+    val cb = chromaGrid(w, h)
+    val cr = chromaGrid(w, h)
+    if (jpeg) {
+      val r = reader.readRaster(0, param)
+      if (warned) return None
+      val ycc = r.getNumBands == 3
+      eachRow(r) { (y, px, nb) =>
+        var x = 0
+        while (x * nb < px.length) {
+          val o = x * nb
+          luma.add(x * step, y * step, px(o))
+          if (ycc) {
+            cb.add(x * step, y * step, px(o + 1))
+            cr.add(x * step, y * step, px(o + 2))
+          }
+          x += 1
+        }
+      }
+    } else {
+      val img = reader.read(0, param)
+      if (warned) return None
+      val r = img.getRaster
+      val bands = r.getNumBands
+      // a palette model has one band but three colour components
+      if ((bands != 1 && bands != 3 && bands != 4) ||
+        img.getColorModel.getNumComponents != bands ||
+        (0 until bands).exists(r.getSampleModel.getSampleSize(_) != 8)) return None
+      eachRow(r) { (y, px, nb) =>
+        var x = 0
+        while (x * nb < px.length) {
+          val o = x * nb
+          if (nb == 1) luma.add(x * step, y * step, px(o))
+          else {
+            val (red, green, blue) = (px(o), px(o + 1), px(o + 2))
+            luma.add(x * step, y * step, bt601(red, green, blue))
+            cb.add(x * step, y * step, jfifCb(red, green, blue))
+            cr.add(x * step, y * step, jfifCr(red, green, blue))
+          }
+          x += 1
+        }
+      }
+    }
+    Some((w, h, imageFeature(luma, cb, cr)))
+  }
+
+  /** Row-major walk of a raster: `f(y, samples, bands)` per row, the
+    * row's samples band-interleaved in one reused buffer. */
+  private def eachRow(r: Raster)(f: (Int, Array[Int], Int) => Unit): Unit = {
+    val nb = r.getNumBands
+    val px = new Array[Int](r.getWidth * nb)
+    var y = 0
+    while (y < r.getHeight) {
+      r.getPixels(r.getMinX, r.getMinY + y, r.getWidth, 1, px)
+      f(y, px, nb)
+      y += 1
+    }
+  }
+
+  /**
+   * REAL decode of a 16-bit PCM WAV through `javax.sound.sampled`
+   * (RIFF/WAVE magic checked first, so no other audio file reader sees
+   * the payload). Returns (sampleRate, nSamples, 16-dim feature) — the
+   * feature is the RMS amplitude of 16 equal temporal segments (/32768)
+   * over every 16-bit sample, channels interleaved, i.e. the actual
+   * loudness envelope of the audio. None for anything but signed
+   * little-endian 16-bit PCM (the JDK also accepts it inside
+   * WAVE_FORMAT_EXTENSIBLE), and None unless the `data` chunk's declared
+   * length is actually present: the JDK reads whatever bytes follow a
+   * declared size past the payload, so the declared length is checked
+   * against the payload before any read, and against the bytes read.
    */
   def decodeWav(p: Array[Byte]): Option[(Int, Long, Array[Float])] = {
-    if (p.length < 44 || p(0) != 'R' || p(1) != 'I' || p(2) != 'F' || p(3) != 'F' ||
+    if (p.length < 12 || p(0) != 'R' || p(1) != 'I' || p(2) != 'F' || p(3) != 'F' ||
       p(8) != 'W' || p(9) != 'A' || p(10) != 'V' || p(11) != 'E') return None
-    // Chunk sizes are UNTRUSTED: walk with a Long cursor so a large
-    // positive sz (e.g. 0x7FFFFFF0) can't overflow the bounds check or
-    // wrap `off` negative — any overshoot just fails the loop guard.
-    var off = 12L
-    var rate = -1
-    var bits = -1
-    var fmt = -1
-    var dataOff = -1
-    var dataLen = -1
-    while (off + 8 <= p.length && (rate < 0 || dataOff < 0)) {
-      val o = off.toInt
-      val id = new String(p, o, 4, "US-ASCII")
-      val sz = leInt(p, o + 4)
-      if (sz < 0 || off + 8 + sz > p.length) return None
-      if (id == "fmt " && sz >= 16) {
-        fmt = leShort(p, o + 8)
-        rate = leInt(p, o + 12)
-        bits = leShort(p, o + 22)
-      } else if (id == "data") { dataOff = o + 8; dataLen = sz }
-      off += 8L + sz + (sz & 1) // chunks are word-aligned
-    }
-    if (fmt != 1 || bits != 16 || rate <= 0 || dataOff < 0 || dataLen < 2) return None
-    val n = dataLen / 2
-    val sumSq = new Array[Double](16)
-    val cnt = new Array[Long](16)
-    var i = 0
-    while (i < n) {
-      val s = (leShort(p, dataOff + i * 2) << 16) >> 16 // sign-extend
-      val seg = math.min(15, (i.toLong * 16 / n).toInt)
-      sumSq(seg) += s.toDouble * s
-      cnt(seg) += 1
-      i += 1
-    }
-    val feat = Array.tabulate(16)(c =>
-      if (cnt(c) == 0) 0f else (math.sqrt(sumSq(c) / cnt(c)) / 32768.0).toFloat)
-    Some((rate, n.toLong, feat))
-  }
-
-  /**
-   * REAL decode of a non-interlaced 8-bit PNG (gray / RGB / RGBA). PNG is
-   * the one common image format reachable WITHOUT a codec library: the
-   * container is length-typed chunks, the pixel stream is zlib
-   * (`java.util.zip.Inflater`, JDK-standard) and four per-row byte filters
-   * (Sub/Up/Average/Paeth — pure integer arithmetic). Returns (width,
-   * height, 16-dim feature) — the same 4×4 grid mean-luminance thumbnail
-   * [[decodeBmp]] produces, so BMP and PNG payloads of the same pixels
-   * yield the same feature. None for anything this layout can't express
-   * (interlaced, palette, 16-bit, truncated/corrupt stream).
-   *
-   * All header ints are UNTRUSTED (same contract as the BMP/WAV decoders):
-   * the chunk walk uses a Long cursor, dimensions are bounded by a decode-
-   * size valve before allocation, and a malformed deflate stream returns
-   * None rather than throwing.
-   */
-  def decodePng(p: Array[Byte]): Option[(Int, Int, Array[Float])] = {
-    if (p.length < 45 || (p(0) & 0xFF) != 0x89 || p(1) != 'P' || p(2) != 'N' ||
-      p(3) != 'G' || p(4) != 0x0D || p(5) != 0x0A || p(6) != 0x1A || p(7) != 0x0A)
-      return None
-    def beInt(off: Int): Int =
-      ((p(off) & 0xFF) << 24) | ((p(off + 1) & 0xFF) << 16) |
-        ((p(off + 2) & 0xFF) << 8) | (p(off + 3) & 0xFF)
-    var off = 8L
-    var w = -1; var h = -1; var channels = -1
-    val idat = new java.io.ByteArrayOutputStream()
-    var ended = false
-    while (!ended && off + 12 <= p.length) {
-      val o = off.toInt
-      val len = beInt(o)
-      if (len < 0 || off + 12 + len > p.length) return None
-      val typ = new String(p, o + 4, 4, "US-ASCII")
-      typ match {
-        case "IHDR" =>
-          if (len < 13) return None
-          w = beInt(o + 8); h = beInt(o + 12)
-          val depth = p(o + 16) & 0xFF
-          val color = p(o + 17) & 0xFF
-          val interlace = p(o + 20) & 0xFF
-          channels = color match { case 0 => 1; case 2 => 3; case 6 => 4; case _ => -1 }
-          if (depth != 8 || channels < 0 || interlace != 0 || w <= 0 || h <= 0) return None
-          // decode-size valve: never allocate more than 64 MiB of raw
-          // scanlines off untrusted dimensions
-          if (w.toLong * h * channels + h > (64L << 20)) return None
-        case "IDAT" => idat.write(p, o + 8, len)
-        case "IEND" => ended = true
-        case _ => ()
-      }
-      off += 12L + len
-    }
-    if (w <= 0 || channels < 0 || idat.size() == 0) return None
-    val stride = w * channels
-    val raw = new Array[Byte](h * (1 + stride))
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(idat.toByteArray)
     try {
-      var got = 0
-      while (got < raw.length && !inf.finished()) {
-        val n = inf.inflate(raw, got, raw.length - got)
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary())) return None // truncated
-        got += n
-      }
-      if (got < raw.length) return None
-    } catch {
-      case _: java.util.zip.DataFormatException => return None
-    } finally inf.end()
-    // per-row de-filter + grid-luma accumulate in one pass (prev = the
-    // RECONSTRUCTED previous row, per the PNG filter spec)
-    val grid = new GridLuma(w, h)
-    val cbG = chromaGrid(w, h)
-    val crG = chromaGrid(w, h)
-    val prev = new Array[Byte](stride)
-    val cur = new Array[Byte](stride)
-    var y = 0
-    while (y < h) {
-      val base = y * (1 + stride)
-      val ft = raw(base) & 0xFF
-      if (ft > 4) return None
-      var i = 0
-      while (i < stride) {
-        val x = raw(base + 1 + i) & 0xFF
-        val a = if (i >= channels) cur(i - channels) & 0xFF else 0
-        val b = prev(i) & 0xFF
-        val r = ft match {
-          case 0 => x
-          case 1 => x + a
-          case 2 => x + b
-          case 3 => x + ((a + b) >> 1)
-          case _ =>
-            val c = if (i >= channels) prev(i - channels) & 0xFF else 0
-            val pp = a + b - c
-            val pa = math.abs(pp - a); val pb = math.abs(pp - b); val pc = math.abs(pp - c)
-            x + (if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c)
+      val in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(p))
+      try {
+        val fmt = in.getFormat
+        val declared = in.getFrameLength * fmt.getFrameSize
+        if (fmt.getEncoding != AudioFormat.Encoding.PCM_SIGNED ||
+          fmt.getSampleSizeInBits != 16 || fmt.isBigEndian || fmt.getSampleRate < 1 ||
+          in.getFrameLength < 0 || declared < 2 || declared > p.length) return None
+        val data = in.readNBytes(declared.toInt)
+        if (data.length != declared) return None
+        val n = data.length / 2
+        val sumSq = new Array[Double](16)
+        val cnt = new Array[Long](16)
+        var i = 0
+        while (i < n) {
+          val s = (leShort(data, i * 2) << 16) >> 16 // sign-extend
+          val seg = math.min(15, (i.toLong * 16 / n).toInt)
+          sumSq(seg) += s.toDouble * s
+          cnt(seg) += 1
+          i += 1
         }
-        cur(i) = (r & 0xFF).toByte
-        i += 1
-      }
-      var px = 0
-      while (px < w) {
-        val o = px * channels
-        if (channels == 1) grid.add(px, y, cur(o) & 0xFF)
-        else {
-          val r = cur(o) & 0xFF; val g = cur(o + 1) & 0xFF; val b = cur(o + 2) & 0xFF
-          grid.add(px, y, bt601(r, g, b))
-          cbG.add(px, y, jfifCb(r, g, b))
-          crG.add(px, y, jfifCr(r, g, b))
-        }
-        px += 1
-      }
-      System.arraycopy(cur, 0, prev, 0, stride)
-      y += 1
-    }
-    Some((w, h, imageFeature(grid, cbG, crG)))
-  }
-
-  /**
-   * REAL decode of a baseline JPEG (JFIF/EXIF container, SOF0
-   * sequential DCT, 8-bit, Huffman — the overwhelming majority of
-   * real-world JPEGs). Y is inverse-transformed into the 4×4 luminance
-   * grid, and for canonical 3-component YCbCr frames with integer
-   * subsampling (4:4:4/4:2:2/4:2:0) Cb and Cr are inverse-transformed
-   * into the 2×2 chroma grids at their upsampled positions — so two
-   * images with identical luminance but different color no longer
-   * feature identically. Other component layouts (CMYK, fractional
-   * sampling) keep entropy-advance-only chroma treatment, and grayscale
-   * frames leave the chroma grids neutral. Everything is pure math on
-   * bytes — canonical
-   * Huffman tables from DHT, dequantization from DQT, a separable 8-point
-   * float IDCT, 0xFF00 byte-unstuffing, DRI/RSTn restart handling — so no
-   * codec library is involved, meeting the same standard as the
-   * BMP/PNG/WAV decoders. Returns (width, height, 24-dim feature):
-   * 16 luma grid cells + 4 Cb + 4 Cr ([[imageFeature]]), /255 like the
-   * other decoders.
-   *
-   * PROGRESSIVE (SOF2, Huffman) frames decode too: the marker walk keeps
-   * consuming table/scan segments after each SOS, [[JpegDecode
-   * .progressiveScan]] accumulates every scan's band into per-component
-   * coefficient planes (spectral selection + successive approximation,
-   * DC and AC first/refinement passes, EOB runs, restart markers), and
-   * EOI triggers the single dequant+IDCT finalization ([[JpegDecode
-   * .finish]]). None for anything outside both layouts (arithmetic
-   * coding, lossless/hierarchical SOFs, 12-bit, truncated/corrupt
-   * streams) — and, per the untrusted-header contract, sizes are valved
-   * before allocation (tighter for progressive, whose coefficient
-   * planes must live until the last scan).
-   */
-  def decodeJpeg(p: Array[Byte]): Option[(Int, Int, Array[Float])] =
-    decodeJpegImpl(p).map { case (_, w, h, f) => (w, h, f) }
-
-  /** [[decodeJpeg]] plus the decode-path tag ("jpeg" for baseline SOF0,
-    * "jpeg-progressive" for SOF2) — the `decoder` column's source. */
-  def decodeJpegTagged(p: Array[Byte]): Option[(String, Int, Int, Array[Float])] =
-    decodeJpegImpl(p).map { case (prog, w, h, f) =>
-      (if (prog) "jpeg-progressive" else "jpeg", w, h, f) }
-
-  private def decodeJpegImpl(p: Array[Byte]): Option[(Boolean, Int, Int, Array[Float])] = {
-    if (p.length < 4 || (p(0) & 0xFF) != 0xFF || (p(1) & 0xFF) != 0xD8) return None
-    // --- marker walk: collect DQT/DHT/SOF0|SOF2/DRI until SOS ---
-    val qt = new Array[Array[Int]](4)
-    // huffman tables: (class 0=DC/1=AC)(id) -> (maxcode/valptr decode arrays)
-    val hufCounts = Array.ofDim[Array[Int]](2, 4)
-    val hufSymbols = Array.ofDim[Array[Int]](2, 4)
-    var w = -1; var h = -1
-    var nComp = 0
-    var compId: Array[Int] = null
-    var compH: Array[Int] = null
-    var compV: Array[Int] = null
-    var compQ: Array[Int] = null
-    var restartInterval = 0
-    var off = 2
-    var sosAt = -1
-    var scanComps: Array[Int] = null // component index per scan order
-    var scanDc: Array[Int] = null
-    var scanAc: Array[Int] = null
-    var progressive = false
-    var prog: JpegDecode.ProgState = null
-    while (sosAt < 0) {
-      if (off + 2 > p.length) return None
-      if ((p(off) & 0xFF) != 0xFF) return None
-      val marker = p(off + 1) & 0xFF
-      if (marker == 0xD8 || (marker >= 0xD0 && marker <= 0xD7)) { off += 2 }
-      else if (marker == 0xD9) {
-        // EOI: a progressive frame finalizes here (baseline returns at
-        // its single SOS; EOI-before-SOS on baseline falls to the case
-        // below and returns None via the 0xD9 arm)
-        return if (progressive && prog != null)
-          JpegDecode.finish(prog, compQ, qt).map { case (w2, h2, f) =>
-            (true, w2, h2, f) }
-        else None
-      }
-      else {
-        if (off + 4 > p.length) return None
-        val len = ((p(off + 2) & 0xFF) << 8) | (p(off + 3) & 0xFF)
-        if (len < 2 || off + 2 + len > p.length) return None
-        val seg = off + 4
-        val segEnd = off + 2 + len
-        marker match {
-          case 0xC0 | 0xC2 => // SOF0 baseline / SOF2 progressive (Huffman)
-            if (w >= 0) return None // second frame header
-            progressive = marker == 0xC2
-            if (len < 8) return None
-            if ((p(seg) & 0xFF) != 8) return None // bit depth
-            h = ((p(seg + 1) & 0xFF) << 8) | (p(seg + 2) & 0xFF)
-            w = ((p(seg + 3) & 0xFF) << 8) | (p(seg + 4) & 0xFF)
-            nComp = p(seg + 5) & 0xFF
-            if (w <= 0 || h <= 0 || nComp < 1 || nComp > 4) return None
-            // raw decode-size valve (baseline streams block-by-block, so
-            // pixel count bounds its memory; progressive gets an exact
-            // plane-byte valve below once sampling factors are known)
-            if (w.toLong * h > (64L << 20)) return None
-            if (seg + 6 + nComp * 3 > segEnd) return None
-            compId = new Array[Int](nComp); compH = new Array[Int](nComp)
-            compV = new Array[Int](nComp); compQ = new Array[Int](nComp)
-            var c = 0
-            while (c < nComp) {
-              compId(c) = p(seg + 6 + c * 3) & 0xFF
-              val hv = p(seg + 7 + c * 3) & 0xFF
-              compH(c) = hv >> 4; compV(c) = hv & 0xF
-              if (compH(c) < 1 || compH(c) > 4 || compV(c) < 1 || compV(c) > 4) return None
-              compQ(c) = p(seg + 8 + c * 3) & 0xFF
-              c += 1
-            }
-            if (progressive) {
-              // EXACT coefficient-plane valve: progressive planes live
-              // until the last scan, and their size depends on the
-              // sampling layout, not just pixel count (4:2:0 → ~6 B/px,
-              // 4:4:4 → ~12 B/px). Mirror ProgState's MCU-padded grid
-              // (Σ bW·bH·64·4 over components) and cap the sum at 48 MB
-              // — 8 MP for 4:2:0 (the prior cap's intent), 4 MP for a
-              // non-subsampled frame.
-              val hmax = compH.max; val vmax = compV.max
-              val mcusX = (w + 8 * hmax - 1) / (8 * hmax)
-              val mcusY = (h + 8 * vmax - 1) / (8 * vmax)
-              var planeBytes = 0L
-              var pc = 0
-              while (pc < nComp) {
-                planeBytes +=
-                  mcusX.toLong * compH(pc) * mcusY * compV(pc) * 64L * 4L
-                pc += 1
-              }
-              if (planeBytes > (48L << 20)) return None
-            }
-          case 0xC1 => return None // extended sequential: not baseline
-          case 0xC3 | 0xC5 | 0xC6 | 0xC7 | 0xC9 | 0xCA | 0xCB |
-               0xCD | 0xCE | 0xCF => return None // lossless/arithmetic/…
-          case 0xDB => // DQT
-            var q = seg
-            while (q < segEnd) {
-              val pq = (p(q) & 0xFF) >> 4
-              val tq = p(q) & 0xF
-              if (tq > 3) return None
-              if (pq == 0) {
-                if (q + 65 > segEnd) return None
-                qt(tq) = Array.tabulate(64)(i => p(q + 1 + i) & 0xFF)
-                q += 65
-              } else { // 16-bit table
-                if (q + 129 > segEnd) return None
-                qt(tq) = Array.tabulate(64)(i =>
-                  ((p(q + 1 + i * 2) & 0xFF) << 8) | (p(q + 2 + i * 2) & 0xFF))
-                q += 129
-              }
-            }
-          case 0xC4 => // DHT
-            var q = seg
-            while (q < segEnd) {
-              val tc = (p(q) & 0xFF) >> 4
-              val th = p(q) & 0xF
-              if (tc > 1 || th > 3) return None
-              if (q + 17 > segEnd) return None
-              val counts = Array.tabulate(16)(i => p(q + 1 + i) & 0xFF)
-              val total = counts.sum
-              if (total > 256 || q + 17 + total > segEnd) return None
-              hufCounts(tc)(th) = counts
-              hufSymbols(tc)(th) = Array.tabulate(total)(i => p(q + 17 + i) & 0xFF)
-              q += 17 + total
-            }
-          case 0xDD => // DRI
-            if (len < 4) return None
-            restartInterval = ((p(seg) & 0xFF) << 8) | (p(seg + 1) & 0xFF)
-          case 0xDA => // SOS
-            if (w < 0) return None
-            // len == 2 makes seg == segEnd (possibly == p.length): the ns
-            // read below would be out of bounds, so bound it first.
-            if (seg >= segEnd) return None
-            val ns = p(seg) & 0xFF
-            // baseline: one interleaved scan of every component;
-            // progressive: any non-empty subset (AC scans: exactly one)
-            if (ns < 1 || ns > nComp || (!progressive && ns != nComp) ||
-              seg + 1 + ns * 2 + 3 > segEnd) return None
-            scanComps = new Array[Int](ns)
-            scanDc = new Array[Int](ns)
-            scanAc = new Array[Int](ns)
-            var c = 0
-            while (c < ns) {
-              val cs = p(seg + 1 + c * 2) & 0xFF
-              val idx = compId.indexOf(cs)
-              if (idx < 0) return None
-              scanComps(c) = idx
-              val tt = p(seg + 2 + c * 2) & 0xFF
-              scanDc(c) = tt >> 4; scanAc(c) = tt & 0xF
-              c += 1
-            }
-            if (progressive) {
-              // spectral selection + successive approximation, then the
-              // scan's entropy data; the walk resumes at the marker the
-              // scan decoder stops on (more tables/scans until EOI)
-              val ss = p(seg + 1 + ns * 2) & 0xFF
-              val se = p(seg + 2 + ns * 2) & 0xFF
-              val aa = p(seg + 3 + ns * 2) & 0xFF
-              if (prog == null)
-                prog = new JpegDecode.ProgState(w, h, nComp, compH, compV)
-              JpegDecode.progressiveScan(p, segEnd, prog, hufCounts,
-                hufSymbols, scanComps, scanDc, scanAc, ss, se,
-                aa >> 4, aa & 0xF, restartInterval) match {
-                case Some(next) => off = next
-                case None => return None
-              }
-            } else sosAt = segEnd
-          case _ => () // APPn/COM/…: skip
-        }
-        // a progressive SOS arm already advanced `off` past its entropy
-        // data; every other still-walking marker steps to its segment end
-        if (sosAt < 0 && marker != 0xDA) off = segEnd
-      }
-    }
-    JpegDecode.scan(p, sosAt, w, h, nComp, compH, compV, compQ,
-      qt, hufCounts, hufSymbols, scanComps, scanDc, scanAc, restartInterval)
-      .map { case (w2, h2, f) => (false, w2, h2, f) }
+        val feat = Array.tabulate(16)(c =>
+          if (cnt(c) == 0) 0f else (math.sqrt(sumSq(c) / cnt(c)) / 32768.0).toFloat)
+        Some((fmt.getSampleRate.toInt, n.toLong, feat))
+      } finally in.close()
+    } catch { case NonFatal(_) => None }
   }
 
   /**
@@ -646,25 +483,24 @@ object Multimodal {
   /**
    * REAL decode of an MJPEG AVI — the one common VIDEO container
    * reachable without a codec library: the container is RIFF (the same
-   * chunk grammar [[decodeWav]] walks), and each `##dc`/`##db` chunk in
-   * the `movi` LIST is a complete baseline JPEG frame [[decodeJpeg]]
-   * already handles. Returns (width, height, framesTotal, framesSampled,
-   * 16-dim feature).
+   * chunk grammar WAV uses), and each `##dc`/`##db` chunk in the `movi`
+   * LIST is a complete JPEG frame [[decodeImage]] already handles.
+   * Returns (width, height, framesTotal, framesSampled, 24-dim feature).
    *
    * Frame SAMPLING is the scale posture: the chunk walk counts every
    * frame (cheap — size arithmetic only), but at most `maxSample`
    * frames, evenly spaced across the stream, are actually
-   * entropy-decoded; the feature is the elementwise MEAN of the sampled
-   * frames' 4×4 grid-luminance features — a temporal average of actual
+   * decoded; the feature is the elementwise MEAN of the sampled
+   * frames' 24-dim [[imageFeature]]s — a temporal average of actual
    * pixel content, so two MJPEG files of the same footage pair in
    * near-dup regardless of byte-level differences. MJPEG frames are
    * independently-coded stills, so sampling needs no inter-frame state.
    *
    * None when the payload isn't a RIFF AVI or no sampled frame decodes
-   * as baseline JPEG (frames a corrupt stream loses are skipped as long
-   * as at least one sampled frame decodes). Untrusted-size contract as
-   * the other decoders: Long cursors, bounds before every read, and the
-   * decode-size valve lives in [[decodeJpeg]] per frame.
+   * as JPEG (frames a corrupt stream loses are skipped as long as at
+   * least one sampled frame decodes). Untrusted-size contract as the
+   * other decoders: Long cursors, bounds before every read, and the
+   * decode-size valves live in [[decodeImage]] per frame.
    */
   def decodeAvi(p: Array[Byte], maxSample: Int = 8): Option[(Int, Int, Int, Int, Array[Float])] = {
     if (maxSample <= 0) return None
@@ -733,12 +569,13 @@ object Multimodal {
     var h = avihH
     idxs.foreach { i =>
       val (fo, fl) = frames(i)
-      decodeJpeg(java.util.Arrays.copyOfRange(p, fo, fo + fl)).foreach {
-        case (fw, fh, feat) =>
+      decodeImage(java.util.Arrays.copyOfRange(p, fo, fo + fl)).foreach {
+        case (tag, fw, fh, feat) if tag.startsWith("jpeg") =>
           if (sampled == 0 && (w <= 0 || h <= 0)) { w = fw; h = fh }
           var c = 0
           while (c < feat.length && c < 24) { acc(c) += feat(c); c += 1 }
           sampled += 1
+        case _ => ()
       }
     }
     if (sampled == 0 || w <= 0 || h <= 0) return None
@@ -890,7 +727,7 @@ object Multimodal {
       if (mx > 0) for (c <- 0 until 16) feat(c) = (means(c) / mx).toFloat
     } else if (uniform > 0 && nFrames > 0) java.util.Arrays.fill(feat, 1.0f)
     Some((w, h, math.min(nFrames, Int.MaxValue).toInt, feat))
-  } catch { case scala.util.control.NonFatal(_) => None }
+  } catch { case NonFatal(_) => None }
 
   /**
    * REAL parse of a Matroska/WebM (EBML) container — the [[parseMp4]]
@@ -1017,7 +854,7 @@ object Multimodal {
       if (mx > 0) for (c <- 0 until 16) feat(c) = (means(c) / mx).toFloat
     }
     Some((w, h, blockSizes.length, feat))
-  } catch { case scala.util.control.NonFatal(_) => None }
+  } catch { case NonFatal(_) => None }
 
   /**
    * STUB decode — deterministic fake standing in for a real codec on
@@ -1041,66 +878,73 @@ object Multimodal {
 
   /**
    * Decode + feature-extract + resize + frame-sample in one partition-
-   * batched pass. Images parse as BMP, PNG or JPEG (baseline +
-   * progressive), audio as
-   * WAV, and video as MJPEG AVI when the bytes really are those layouts
-   * ([[decodeBmp]]/[[decodePng]]/[[decodeJpeg]]/[[decodeWav]]/
-   * [[decodeAvi]] — real, library-free decoders whose features derive
-   * from pixel/sample content); decoded dimensions override the metadata
+   * batched pass. Images decode as BMP, PNG or JPEG ([[decodeImage]]),
+   * audio as WAV ([[decodeWav]]) or MP3 side info, and video as MJPEG AVI
+   * ([[decodeAvi]]) or MP4/Matroska metadata when the bytes really are
+   * those layouts — real decoders whose features derive from
+   * pixel/sample content; decoded dimensions override the metadata
    * columns (the payload is the truth). Everything else — codec-bound
-   * audio (MP3/AAC) and non-MJPEG video — takes the deterministic stub
-   * path, flagged `decoder = "stub"`. `frames_sampled` applies to video
-   * only: the REAL count of frames [[decodeAvi]] entropy-decoded on the
-   * avi-mjpeg path, or the stub's synthetic 1-per-~4 KiB shape.
+   * audio (AAC, …) and non-MJPEG video content — takes the
+   * deterministic stub path, flagged `decoder = "stub"`.
+   * `frames_sampled` applies to video only: the REAL count of frames
+   * [[decodeAvi]] decoded on the avi-mjpeg path, or the stub's synthetic
+   * 1-per-~4 KiB shape.
    */
   def extractFeatures(media: DataFrame, featureDim: Int = 24, thumbMax: Int = 64)(
       implicit spark: SparkSession): Dataset[MediaFeatures] = {
     import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      // per-partition init happens HERE (real codec handle / model load)
-      rows.map { r =>
-        // the binary column is nullable: a NULL payload degrades like a
-        // zero-byte one (checksum of nothing, stub features) instead of
-        // NPE-ing the task before the decode try/catch is even reached
-        val payload = if (r.payload == null) Array.emptyByteArray else r.payload
-        val checksum = fnv(payload)
-        // A corrupt payload must degrade to the stub row, never kill the
-        // task: the decoders defend their own bounds, and this catch is
-        // the last-resort valve for anything they miss.
-        val decoded: Option[(String, Int, Int, Int, Array[Float])] =
-          try r.kind match {
-            case "image" =>
-              decodeBmp(payload).map { case (w, h, f) => ("bmp", w, h, 0, f) }
-                .orElse(decodePng(payload).map { case (w, h, f) => ("png", w, h, 0, f) })
-                .orElse(decodeJpegTagged(payload).map { case (tag, w, h, f) => (tag, w, h, 0, f) })
-            case "audio" =>
-              decodeWav(payload).map { case (_, _, f) =>
-                ("wav", r.width, r.height, 0, f) }
-                .orElse(parseMp3(payload).map { case (_, _, f) =>
-                  ("mp3-sideinfo", r.width, r.height, 0, f) })
-            case "video" => decodeAvi(payload).map { case (w, h, _, sampled, f) =>
-              ("avi-mjpeg", w, h, sampled, f) }
-              .orElse(parseMp4(payload).map { case (w, h, _, f) =>
-                ("mp4-meta", w, h, 0, f) })
-              .orElse(parseMkv(payload).map { case (w, h, _, f) =>
-                ("mkv-meta", w, h, 0, f) })
-            case _ => None
-          } catch { case scala.util.control.NonFatal(_) => None }
-        decoded match {
-          case Some((dec, w, h, frames, feat)) =>
-            val (tw, th) = thumbDims(w, h, thumbMax)
-            val f = if (feat.length == featureDim) feat
-              else java.util.Arrays.copyOf(feat, featureDim)
-            MediaFeatures(r.media_id, r.kind, payload.length.toLong, checksum,
-              tw, th, frames, dec, f)
-          case None =>
-            val feat = fakeDecode(checksum, featureDim)
-            val (tw, th) = thumbDims(r.width, r.height, thumbMax)
-            val frames = if (r.kind == "video")
-              math.min(32, math.max(1, payload.length / 4096)) else 0
-            MediaFeatures(r.media_id, r.kind, payload.length.toLong, checksum,
-              tw, th, frames, "stub", feat)
-        }
+    media.as[MediaRow].mapPartitions(new FeatureExtractor(featureDim, thumbMax))
+  }
+
+  /** The partition body of [[extractFeatures]], as a named function: its
+    * `toString` (`FeatureExtractor(24,64)`) is what the plan's
+    * `MapPartitions` node prints, so plan text is the same on every run. */
+  private final class FeatureExtractor(featureDim: Int, thumbMax: Int)
+      extends (Iterator[MediaRow] => Iterator[MediaFeatures]) with Serializable {
+    override def toString: String = s"FeatureExtractor($featureDim,$thumbMax)"
+
+    def apply(rows: Iterator[MediaRow]): Iterator[MediaFeatures] = rows.map(features)
+
+    private def features(r: MediaRow): MediaFeatures = {
+      // the binary column is nullable: a NULL payload degrades like a
+      // zero-byte one (checksum of nothing, stub features) instead of
+      // NPE-ing the task before the decode try/catch is even reached
+      val payload = if (r.payload == null) Array.emptyByteArray else r.payload
+      val checksum = fnv(payload)
+      // A corrupt payload must degrade to the stub row, never kill the
+      // task: the decoders defend their own bounds, and this catch is
+      // the last-resort valve for anything they miss.
+      val decoded: Option[(String, Int, Int, Int, Array[Float])] =
+        try r.kind match {
+          case "image" =>
+            decodeImage(payload).map { case (tag, w, h, f) => (tag, w, h, 0, f) }
+          case "audio" =>
+            decodeWav(payload).map { case (_, _, f) =>
+              ("wav", r.width, r.height, 0, f) }
+              .orElse(parseMp3(payload).map { case (_, _, f) =>
+                ("mp3-sideinfo", r.width, r.height, 0, f) })
+          case "video" => decodeAvi(payload).map { case (w, h, _, sampled, f) =>
+            ("avi-mjpeg", w, h, sampled, f) }
+            .orElse(parseMp4(payload).map { case (w, h, _, f) =>
+              ("mp4-meta", w, h, 0, f) })
+            .orElse(parseMkv(payload).map { case (w, h, _, f) =>
+              ("mkv-meta", w, h, 0, f) })
+          case _ => None
+        } catch { case NonFatal(_) => None }
+      decoded match {
+        case Some((dec, w, h, frames, feat)) =>
+          val (tw, th) = thumbDims(w, h, thumbMax)
+          val f = if (feat.length == featureDim) feat
+            else java.util.Arrays.copyOf(feat, featureDim)
+          MediaFeatures(r.media_id, r.kind, payload.length.toLong, checksum,
+            tw, th, frames, dec, f)
+        case None =>
+          val feat = fakeDecode(checksum, featureDim)
+          val (tw, th) = thumbDims(r.width, r.height, thumbMax)
+          val frames = if (r.kind == "video")
+            math.min(32, math.max(1, payload.length / 4096)) else 0
+          MediaFeatures(r.media_id, r.kind, payload.length.toLong, checksum,
+            tw, th, frames, "stub", feat)
       }
     }
   }

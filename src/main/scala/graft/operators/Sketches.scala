@@ -22,11 +22,11 @@ import org.apache.spark.sql.functions._
  * the concatenated corpus in one pass — asserted in CorpusSpec, along
  * with a parquet round-trip of the binary sketch column.
  *
- * Quantiles have no mergeable form in Spark's own function surface
- * (`percentile_approx` exposes only the final value, not its KLL state) —
- * so the engine supplies one: [[kllIncrement]]/[[kllMerge]] persist and
- * union binary DataSketches-KLL rows through the native
- * [[graft.plans.KllExpressions]] aggregates, giving percentiles the same
+ * Quantiles merge the same way through Spark's own KLL surface
+ * (DataSketches `KllDoublesSketch`): [[kllIncrement]] persists one binary
+ * sketch row per group (`kll_sketch_agg_double`), and [[kllMerge]] unions
+ * them (`kll_merge_agg_double`) and reads each rank
+ * (`kll_sketch_get_quantile_double`), giving percentiles the same
  * never-rescan incremental shape the HLL pair gives distinct counts.
  * Unlike HLL union (register-wise max, byte-deterministic), KLL
  * compaction is randomized — merge ≡ one-pass holds in the error-bound
@@ -60,25 +60,33 @@ object Sketches {
           .as(s"${valueCol}_distinct"),
         sum(col("n_rows")).as("n_rows"))
 
+  /** Default KLL sketch size: ≤ ~1.65% normalized rank error at 99%
+    * confidence, a few KB serialized — the DataSketches default. */
+  val KllK = 200
+
   /**
    * Per-increment QUANTILE sketch rows — the percentile analog of
-   * [[hllIncrement]]: one row per group carrying binary KLL state of
-   * `valueCol`'s distribution plus the exact row count. Map-side combined
-   * (TypedImperativeAggregate partials merge per exchange); the sketch
+   * [[hllIncrement]]: one row per group carrying the binary KLL state
+   * (`KllDoublesSketch.toByteArray`) of `valueCol`'s distribution plus
+   * the exact row count. Map-side combined (Spark's KLL aggregate is a
+   * TypedImperativeAggregate: partials merge per exchange); the sketch
    * column is plain `binary`, parquet-safe, kilobytes per group at the
    * default k.
    */
   def kllIncrement(df: DataFrame, groupCols: Seq[String], valueCol: String,
-      k: Int = graft.plans.KllExpressions.DefaultK): DataFrame =
+      k: Int = KllK): DataFrame =
     df.groupBy(groupCols.map(col): _*)
-      .agg(graft.plans.KllExpressions.kllAgg(col(valueCol), k).as(s"${valueCol}_kll"),
+      .agg(kll_sketch_agg_double(col(valueCol).cast("double"), k).as(s"${valueCol}_kll"),
         count(lit(1)).as("n_rows"))
 
   /**
    * Corpus-wide quantile estimates from persisted increment sketches:
-   * group-wise KLL union + one [[graft.plans.KllExpressions.kllQuantile]]
-   * per requested rank. Cost is O(groups × increments) sketch rows —
-   * percentiles over a growing corpus without rescanning any increment.
+   * group-wise KLL union + one quantile read per requested rank. Cost is
+   * O(groups × increments) sketch rows — percentiles over a growing
+   * corpus without rescanning any increment. A group whose values were
+   * all null has an empty sketch and reads a null quantile: the read is
+   * guarded by the sketch's count, because Spark's quantile read throws
+   * (KLL_INVALID_INPUT_SKETCH_BUFFER) on an empty sketch.
    *
    * `k` MUST match the k the increments were built with: the DataSketches
    * union adopts the SMALLEST k involved, so a k=200 union buffer over
@@ -87,12 +95,13 @@ object Sketches {
    */
   def kllMerge(sketches: DataFrame, groupCols: Seq[String], valueCol: String,
       ranks: Seq[Double] = Seq(0.5, 0.95),
-      k: Int = graft.plans.KllExpressions.DefaultK): DataFrame = {
+      k: Int = KllK): DataFrame = {
     val merged = sketches.groupBy(groupCols.map(col): _*)
-      .agg(graft.plans.KllExpressions.kllUnion(col(s"${valueCol}_kll"), k).as("__sk"),
+      .agg(kll_merge_agg_double(col(s"${valueCol}_kll"), k).as("__sk"),
         sum(col("n_rows")).as("n_rows"))
     val qCols = ranks.map(r =>
-      graft.plans.KllExpressions.kllQuantile(col("__sk"), r).as(rankColName(r)))
+      when(kll_sketch_get_n_double(col("__sk")) > 0,
+        kll_sketch_get_quantile_double(col("__sk"), lit(r))).as(rankColName(r)))
     merged.select(groupCols.map(col) ++ qCols :+ col("n_rows"): _*)
   }
 

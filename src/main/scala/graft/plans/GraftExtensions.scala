@@ -40,28 +40,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         Bridge.expression(BpeExpressions.bpeCount(Bridge.column(children.head),
           graft.functions.TextFunctions.BpeMerges))
       }))
-    // mergeable quantile sketches at the default k; the analyzer wraps the
-    // returned AggregateFunction in its AggregateExpression
-    ext.injectFunction((
-      FunctionIdentifier("kll_sketch_agg"),
-      new ExpressionInfo(classOf[KllSketchAgg].getName, "kll_sketch_agg"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "kll_sketch_agg takes exactly 1 argument")
-        KllSketchAgg(children.head, KllExpressions.DefaultK)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("kll_union_agg"),
-      new ExpressionInfo(classOf[KllMergeAgg].getName, "kll_union_agg"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "kll_union_agg takes exactly 1 argument")
-        KllMergeAgg(children.head, KllExpressions.DefaultK)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("kll_quantile"),
-      new ExpressionInfo(classOf[KllQuantileOf].getName, "kll_quantile"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "kll_quantile takes exactly 2 arguments")
-        KllQuantileOf(children.head, children(1))
-      }))
   }
 }

@@ -812,6 +812,34 @@ class CorpusSpec extends AnyFunSuite {
       twoClose.columns.mkString(","))
   }
 
+  test("kllMerge: sketch rows persisted as KllDoublesSketch bytes merge and read through the built-ins") {
+    import org.apache.datasketches.kll.KllDoublesSketch
+    // increments persisted in the KllDoublesSketch.toByteArray layout
+    // (the binary state the earlier hand-written aggregate wrote) union
+    // with built-in sketch rows and read through kllMerge unchanged
+    def legacy(vs: Range): Array[Byte] = {
+      val sk = KllDoublesSketch.newHeapInstance(Sketches.KllK)
+      vs.foreach(v => sk.update(v.toDouble))
+      sk.toByteArray
+    }
+    val old = Seq(("a", legacy(1 to 500), 500L), ("b", legacy(1 to 100), 100L))
+      .toDF("grp", "v_kll", "n_rows")
+    val fresh = Sketches.kllIncrement(
+      (501 to 1000).map(i => ("a", i.toDouble)).toDF("grp", "v"), Seq("grp"), "v")
+    val merged = Sketches.kllMerge(old.unionByName(fresh), Seq("grp"), "v")
+      .collect().map(r => r.getAs[String]("grp") ->
+        (r.getAs[Double]("p50"), r.getAs[Long]("n_rows"))).toMap
+    assert(merged("a")._2 == 1000L && merged("b")._2 == 100L)
+    assert(math.abs(merged("a")._1 - 500.0) <= 40.0, s"merged p50 ${merged("a")}")
+    assert(math.abs(merged("b")._1 - 50.0) <= 4.0, s"legacy-only p50 ${merged("b")}")
+    // an all-null group sketches nothing and reads a null quantile
+    val nulls = Sketches.kllMerge(Sketches.kllIncrement(
+        Seq(("z", Option.empty[Double]), ("z", None)).toDF("grp", "v"), Seq("grp"), "v"),
+      Seq("grp"), "v").collect()
+    assert(nulls.length == 1 && nulls(0).isNullAt(1) && nulls(0).isNullAt(2) &&
+      nulls(0).getAs[Long]("n_rows") == 2L, nulls.mkString(","))
+  }
+
   test("cleanCorpus: every gate and both dedup passes fire; survivors get splits") {
     val docs = Seq(
       (0L, "the quick brown fox jumps over the lazy dog and that is for the win"),

@@ -2044,16 +2044,16 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     // (and cycles all five row filters), so the two real decoders must
     // produce byte-for-byte identical features from the same content
     for ((w, h, seed) <- Seq((32, 48, 3), (48, 32, 7), (33, 17, 11))) {
-      val Some((pw, ph, pf)) = Multimodal.decodePng(Fixtures.pngBytes(w, h, seed))
-      val Some((bw, bh, bf)) = Multimodal.decodeBmp(Fixtures.bmpBytes(w, h, seed))
+      val Some(("png", pw, ph, pf)) = Multimodal.decodeImage(Fixtures.pngBytes(w, h, seed))
+      val Some(("bmp", bw, bh, bf)) = Multimodal.decodeImage(Fixtures.bmpBytes(w, h, seed))
       assert((pw, ph) == (w, h) && (bw, bh) == (w, h))
       assert(pf.toSeq == bf.toSeq, s"png/bmp features diverge at ${(w, h, seed)}")
       // planted gradient: G grows toward the top row (luma rows 0 vs 3)
       assert(pf.take(4).sum > pf.slice(12, 16).sum)
     }
     // RGBA (color type 6) decodes too, alpha ignored by the luma grid
-    val Some((_, _, fa)) = Multimodal.decodePng(Fixtures.pngBytes(16, 16, 2, alpha = true))
-    val Some((_, _, f3)) = Multimodal.decodePng(Fixtures.pngBytes(16, 16, 2))
+    val Some((_, _, _, fa)) = Multimodal.decodeImage(Fixtures.pngBytes(16, 16, 2, alpha = true))
+    val Some((_, _, _, f3)) = Multimodal.decodeImage(Fixtures.pngBytes(16, 16, 2))
     assert(fa.toSeq == f3.toSeq)
     // ADVICE r11 regressions — untrusted header ints must return None, not throw:
     val bmp = Fixtures.bmpBytes(8, 8, 0)
@@ -2063,16 +2063,19 @@ class TrainingDataOpsSpec extends AnyFunSuite {
       b(off + 2) = ((v >> 16) & 0xFF).toByte; b(off + 3) = ((v >> 24) & 0xFF).toByte
       b
     }
-    assert(Multimodal.decodeBmp(withLe32(bmp, 10, -2000)).isEmpty)        // negative pixOff
-    assert(Multimodal.decodeBmp(withLe32(bmp, 18, 0x2AAAAAAA)).isEmpty)   // w*3 overflows Int
+    assert(Multimodal.decodeImage(withLe32(bmp, 10, -2000)).isEmpty)        // negative pixOff
+    assert(Multimodal.decodeImage(withLe32(bmp, 18, 0x2AAAAAAA)).isEmpty)   // w*3 overflows Int
     val wav = Fixtures.wavBytes(16000, 64, 0)
     assert(Multimodal.decodeWav(withLe32(wav, 40, 0x7FFFFFF0)).isEmpty)   // data sz overflows walk
     assert(Multimodal.decodeWav(withLe32(wav, 16, 0x7FFFFFF0)).isEmpty)   // fmt sz overflows walk
-    // corrupt PNGs: truncated IDAT, bad chunk length, bad filter type
+    assert(Multimodal.decodeWav(wav.take(wav.length - 2)).isEmpty)         // data cut short
+    assert(Multimodal.decodeWav(wav).exists(_._2 == 64L))
+    // corrupt PNGs: IDAT cut inside the pixel data, bad chunk length,
+    // short signature
     val png = Fixtures.pngBytes(16, 16, 1)
-    assert(Multimodal.decodePng(png.take(png.length - 20)).isEmpty)
-    assert(Multimodal.decodePng({ val b = png.clone(); b(8) = 0x7F; b }).isEmpty)
-    assert(Multimodal.decodePng(Array[Byte](0x89.toByte, 'P', 'N', 'G')).isEmpty)
+    assert(Multimodal.decodeImage(png.take(png.length / 2)).isEmpty)
+    assert(Multimodal.decodeImage({ val b = png.clone(); b(8) = 0x7F; b }).isEmpty)
+    assert(Multimodal.decodeImage(Array[Byte](0x89.toByte, 'P', 'N', 'G')).isEmpty)
   }
 
   test("multimodal: baseline JPEG decode recovers the planted gradient in all layouts") {
@@ -2100,41 +2103,51 @@ class TrainingDataOpsSpec extends AnyFunSuite {
       ("4:2:0+RST", Fixtures.jpegBytes(48, 32, 5, subsample = true,
         restartEvery = 2), 48, 32, 5))
     for ((label, bytes, w, h, seed) <- cases) {
-      val got = Multimodal.decodeJpeg(bytes)
+      val got = Multimodal.decodeImage(bytes)
       assert(got.isDefined, s"$label failed to decode")
-      val Some((gw, gh, feat)) = got
-      assert((gw, gh) == (w, h), label)
+      val Some((tag, gw, gh, feat)) = got
+      assert((tag, gw, gh) == (("jpeg", w, h)), label)
       val want = expectGrid(w, h, seed)
       for (c <- 0 until 16)
         assert(math.abs(feat(c) - want(c)) <= 2.5 / 255.0,
           f"$label cell $c: got ${feat(c)}%.4f want ${want(c)}%.4f")
     }
     // 4:2:0 and restart variants reconstruct the same content
-    val a = Multimodal.decodeJpeg(cases(2)._2).get._3
-    val b = Multimodal.decodeJpeg(cases(3)._2).get._3
+    val a = Multimodal.decodeImage(cases(2)._2).get._4
+    val b = Multimodal.decodeImage(cases(3)._2).get._4
     for (c <- 0 until 16) assert(math.abs(a(c) - b(c)) <= 0.5 / 255.0)
     // corrupt / unsupported payloads return None, never throw
     val jb = cases(1)._2
-    assert(Multimodal.decodeJpeg(jb.take(jb.length / 2)).isEmpty)       // truncated
-    assert(Multimodal.decodeJpeg({ val x = jb.clone()
+    assert(Multimodal.decodeImage(jb.take(jb.length / 2)).isEmpty)       // truncated
+    // cut anywhere in the scan data, the JDK returns a partial image
+    // with only a warning ("Premature end of JPEG file"): still a None
+    for (bytes <- Seq(jb, Fixtures.jpegProgressiveBytes(33, 47, 7))) {
+      val scan = (0 until bytes.length - 1).find(i =>
+        (bytes(i) & 0xFF) == 0xFF && (bytes(i + 1) & 0xFF) == 0xDA).get
+      for (n <- scan until bytes.length)
+        assert(Multimodal.decodeImage(bytes.take(n)).isEmpty, s"cut at $n of ${bytes.length}")
+    }
+    assert(Multimodal.decodeImage({ val x = jb.clone()
       // flip SOF0 (0xC0) to progressive SOF2 (0xC2)
       val i = (0 until x.length - 1).find(i =>
         (x(i) & 0xFF) == 0xFF && (x(i + 1) & 0xFF) == 0xC0).get
       x(i + 1) = 0xC2.toByte; x }).isEmpty)
-    assert(Multimodal.decodeJpeg(Fixtures.pngBytes(16, 16, 1)).isEmpty) // wrong magic
-    assert(Multimodal.decodeJpeg(Array[Byte](0xFF.toByte, 0xD8.toByte)).isEmpty)
+    // the magic bytes pick the reader: PNG bytes never reach the JPEG one
+    assert(Multimodal.decodeImage(Fixtures.pngBytes(16, 16, 1)).map(_._1).contains("png"))
+    assert(Multimodal.decodeImage(Array[Byte](0x12, 0x34, 0x56, 0x78)).isEmpty)
+    assert(Multimodal.decodeImage(Array[Byte](0xFF.toByte, 0xD8.toByte)).isEmpty)
     // payload ending exactly at an empty SOS header (… FF DA 00 02 EOF,
     // after a valid SOF0): the ns read sits at p.length — must be None,
     // not AIOOBE
     val sosAt = (0 until jb.length - 1).find(i =>
       (jb(i) & 0xFF) == 0xFF && (jb(i + 1) & 0xFF) == 0xDA).get
-    assert(Multimodal.decodeJpeg(
+    assert(Multimodal.decodeImage(
       jb.take(sosAt) ++ Array(0xFF, 0xDA, 0x00, 0x02).map(_.toByte)).isEmpty)
     // BMP height Int.MinValue: math.abs is still negative — must be None,
     // not a bogus zero-feature "success" with a negative height
     val bmpMinH = Fixtures.bmpBytes(8, 8, 1).clone()
     bmpMinH(22) = 0; bmpMinH(23) = 0; bmpMinH(24) = 0; bmpMinH(25) = 0x80.toByte
-    assert(Multimodal.decodeBmp(bmpMinH).isEmpty)
+    assert(Multimodal.decodeImage(bmpMinH).isEmpty)
   }
 
   test("multimodal: chroma grids separate color-only duplicates; gray stays neutral") {
@@ -2144,10 +2157,10 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     // JPEG: same luminance, different planted color cast — luma grid
     // must agree, chroma grids must differ, for both subsampling modes
     for (sub <- Seq(false, true)) {
-      val neutral = Multimodal.decodeJpeg(
-        Fixtures.jpegBytes(32, 32, 5, subsample = sub)).get._3
-      val cast = Multimodal.decodeJpeg(
-        Fixtures.jpegBytes(32, 32, 5, subsample = sub, cbOff = 40, crOff = -30)).get._3
+      val neutral = Multimodal.decodeImage(
+        Fixtures.jpegBytes(32, 32, 5, subsample = sub)).get._4
+      val cast = Multimodal.decodeImage(
+        Fixtures.jpegBytes(32, 32, 5, subsample = sub, cbOff = 40, crOff = -30)).get._4
       for (c <- 0 until 16)
         assert(math.abs(neutral(c) - cast(c)) <= 1.0 / 255.0,
           s"sub=$sub luma cell $c moved: ${neutral(c)} vs ${cast(c)}")
@@ -2160,7 +2173,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
         assert(math.abs(neutral(c) - 128 / 255.0) <= 2.5 / 255.0, s"neutral cell $c")
     }
     // grayscale JPEG: chroma grids sit at neutral gray exactly
-    val gray = Multimodal.decodeJpeg(Fixtures.jpegBytes(32, 32, 5, gray = true)).get._3
+    val gray = Multimodal.decodeImage(Fixtures.jpegBytes(32, 32, 5, gray = true)).get._4
     for (c <- 16 until 24) assert(gray(c) == (128.0 / 255.0).toFloat)
     // BMP solids with EQUAL integer luma, different chroma: luma grid
     // identical, near-dup must NOT pair them — while a byte-different
@@ -2206,7 +2219,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     val Some((w, h, total, sampled, feat)) = Multimodal.decodeAvi(avi, maxSample = 1)
     assert((w, h, total, sampled) == (32, 32, 5, 1))
     // the single sampled frame is frame 0 exactly
-    val f0 = Multimodal.decodeJpeg(Fixtures.jpegBytes(32, 32, 400)).get._3
+    val f0 = Multimodal.decodeImage(Fixtures.jpegBytes(32, 32, 400)).get._4
     assert(feat.sameElements(f0))
   }
 
@@ -2219,8 +2232,8 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     assert((w, h, total, sampled) == (32, 32, 5, 5))
     val want = {
       val acc = new Array[Double](24)
-      for (f <- 0 until 5; (v, c) <- Multimodal.decodeJpeg(
-          Fixtures.jpegBytes(32, 32, 400 + f)).get._3.zipWithIndex)
+      for (f <- 0 until 5; (v, c) <- Multimodal.decodeImage(
+          Fixtures.jpegBytes(32, 32, 400 + f)).get._4.zipWithIndex)
         acc(c) += v
       acc.map(a => (a / 5).toFloat)
     }
@@ -2308,10 +2321,10 @@ class TrainingDataOpsSpec extends AnyFunSuite {
       ("noise+gray", (true, false, 0, 0, 0, 1), 33, 47, 23))
     for ((label, (gray, sub, cb, cr, rst, lvl), w, h, seed) <- cases ++ noiseCases) {
       val noisy = label.startsWith("noise")
-      val base = Multimodal.decodeJpegTagged(
+      val base = Multimodal.decodeImage(
         Fixtures.jpegBytes(w, h, seed, gray = gray, subsample = sub,
           cbOff = cb, crOff = cr, noise = noisy))
-      val prog = Multimodal.decodeJpegTagged(
+      val prog = Multimodal.decodeImage(
         Fixtures.jpegProgressiveBytes(w, h, seed, gray = gray,
           subsample = sub, cbOff = cb, crOff = cr, restartEvery = rst,
           acAl = lvl, noise = noisy))
@@ -2343,13 +2356,172 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     // at the SAME dims is ~25.6 MB and decodes. A raw-pixel valve could
     // not tell these apart — the r14 ADVICE fix, pinned.
     val dim = 2052
-    assert(Multimodal.decodeJpeg(
+    assert(Multimodal.decodeImage(
       Fixtures.jpegProgressiveBytes(dim, dim, 3)).isEmpty,
       "4:4:4 progressive over the plane-byte cap must be rejected")
-    val ok = Multimodal.decodeJpeg(
+    val ok = Multimodal.decodeImage(
       Fixtures.jpegProgressiveBytes(dim, dim, 3, subsample = true))
-    assert(ok.exists { case (w, h, _) => w == dim && h == dim },
+    assert(ok.exists { case (_, w, h, _) => w == dim && h == dim },
       "4:2:0 progressive at the same pixel count must decode")
+  }
+
+  /** A minimal PNG: IHDR (`colorType`, `depth`, non-interlaced), an
+    * optional PLTE, and one IDAT deflating `rows(y)` (filter byte 0
+    * prepended) row by row, so a large image never sits in memory. */
+  private def pngOf(w: Int, h: Int, colorType: Int, depth: Int,
+      plte: Array[Byte] = Array.emptyByteArray)(rows: Int => Array[Byte]): Array[Byte] = {
+    def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
+      val t = typ.getBytes("US-ASCII")
+      val crc = new java.util.zip.CRC32()
+      crc.update(t); crc.update(data)
+      java.nio.ByteBuffer.allocate(12 + data.length).putInt(data.length).put(t)
+        .put(data).putInt(crc.getValue.toInt).array()
+    }
+    val z = new java.io.ByteArrayOutputStream()
+    val deflate = new java.util.zip.DeflaterOutputStream(z)
+    for (y <- 0 until h) { deflate.write(0); deflate.write(rows(y)) }
+    deflate.close()
+    val ihdr = java.nio.ByteBuffer.allocate(13).putInt(w).putInt(h)
+      .put(depth.toByte).put(colorType.toByte).put(0.toByte).put(0.toByte)
+      .put(0.toByte).array()
+    Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A) ++
+      chunk("IHDR", ihdr) ++
+      (if (plte.isEmpty) Array.emptyByteArray else chunk("PLTE", plte)) ++
+      chunk("IDAT", z.toByteArray) ++ chunk("IEND", Array.emptyByteArray)
+  }
+
+  test("multimodal: palette and 16-bit PNG are refused, not misread") {
+    // the grid feature reads 8-bit samples of a direct colour model; a
+    // palette image's band holds indices and a 16-bit one wider samples
+    val (w, h) = (24, 20)
+    val palette = pngOf(w, h, 3, 8, Array[Byte](10, 20, 30, 40, 50, 60))(y =>
+      Array.tabulate(w)(x => ((x + y) % 2).toByte))
+    val rgb16 = pngOf(w, h, 2, 16)(y => Array.tabulate(w * 6)(i => (i + y).toByte))
+    val rgb8 = pngOf(w, h, 2, 8)(y => Array.tabulate(w * 3)(i => (i + y).toByte))
+    assert(Multimodal.decodeImage(palette).isEmpty)
+    assert(Multimodal.decodeImage(rgb16).isEmpty)
+    assert(Multimodal.decodeImage(rgb8).map(_._1).contains("png"))
+  }
+
+  /** A 3-component baseline JPEG coded as three one-component scans (so
+    * its first scan has Ns = 1 < Nf = 3), each component carrying the
+    * gray fixture's samples: the gray file's tables and scan data under a
+    * 3-component SOF0, one SOS per component. */
+  private def nonInterleavedJpeg(w: Int, h: Int, seed: Int): Array[Byte] = {
+    val g = Fixtures.jpegBytes(w, h, seed, gray = true)
+    def at(m: Int): Int =
+      (0 until g.length - 1).find(i => (g(i) & 0xFF) == 0xFF && (g(i + 1) & 0xFF) == m).get
+    def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+    val (sof, sos) = (at(0xC0), at(0xDA))
+    val sofEnd = sof + 2 + (((g(sof + 2) & 0xFF) << 8) | (g(sof + 3) & 0xFF))
+    val scan = g.slice(sos + 10, g.length - 2) // after the Ns = 1 SOS, before EOI
+    g.take(sof) ++
+      bytes(0xFF, 0xC0, 0, 17, 8, h >> 8, h, w >> 8, w, 3, 1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0) ++
+      g.slice(sofEnd, sos) ++
+      (1 to 3).flatMap(c => bytes(0xFF, 0xDA, 0, 8, 1, c, 0x00, 0, 63, 0) ++ scan) ++
+      bytes(0xFF, 0xD9)
+  }
+
+  test("multimodal: a non-interleaved sequential JPEG meets the coefficient-plane valve") {
+    // libjpeg buffers a whole frame's coefficients in native memory when
+    // the first scan codes fewer components than the frame, exactly as
+    // for progressive; the walk to the first SOS applies the same valve
+    val gray = Multimodal.decodeImage(Fixtures.jpegBytes(40, 24, 3, gray = true)).get._4
+    val Some((tag, w, h, f)) = Multimodal.decodeImage(nonInterleavedJpeg(40, 24, 3))
+    assert((tag, w, h) == (("jpeg", 40, 24)))
+    for (c <- 0 until 16) assert(math.abs(f(c) - gray(c)) <= 1e-6f, s"luma cell $c")
+    // 2052x2052 at 4:4:4 is ~50.7 MB of planes: refused when non-interleaved,
+    // decoded when interleaved (one scan, no frame buffer)
+    assert(Multimodal.decodeImage(nonInterleavedJpeg(2052, 2052, 3)).isEmpty)
+    assert(Multimodal.decodeImage(Fixtures.jpegBytes(2052, 2052, 3)).exists(_._2 == 2052))
+    // a few-KB file declaring 65500x65500 (libjpeg's largest) is refused
+    // by the walk: its planes would be ~13 GB of native memory
+    val huge = nonInterleavedJpeg(16, 16, 3)
+    val sof = (0 until huge.length - 1).find(i =>
+      (huge(i) & 0xFF) == 0xFF && (huge(i + 1) & 0xFF) == 0xC0).get
+    Seq(0xFF, 0xDC, 0xFF, 0xDC).zipWithIndex.foreach { case (b, i) => huge(sof + 5 + i) = b.toByte }
+    assert(Multimodal.decodeImage(huge).isEmpty)
+  }
+
+  test("multimodal: a truncated JPEG declaring a huge frame stops at the first warning") {
+    // under 1 KB of scan data under a 65500x65500 SOF0: once the data
+    // runs out, libjpeg warns and would decode the rest of the declared
+    // frame from zeros (4.3 G pixels, ~11 s on a 4-core x86 box); the
+    // first warning aborts the read (~0.1 s)
+    val jb = Fixtures.jpegBytes(64, 64, 4)
+    val sof = (0 until jb.length - 1).find(i =>
+      (jb(i) & 0xFF) == 0xFF && (jb(i + 1) & 0xFF) == 0xC0).get
+    val cut = jb.take(jb.length * 3 / 4)
+    Seq(0xFF, 0xDC, 0xFF, 0xDC).zipWithIndex.foreach { case (b, i) => cut(sof + 5 + i) = b.toByte }
+    val t0 = System.nanoTime()
+    assert(Multimodal.decodeImage(cut).isEmpty)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 2.0, f"truncated huge-frame decode took $secs%.1f s")
+  }
+
+  test("multimodal: a raster over the 64 MiB valve decodes through source subsampling") {
+    // a 4800x4800 RGB PNG is a 69 MB raster, over the 64 MiB cap, so it
+    // decodes at subsampling step 2: even source columns only. Even
+    // columns carry a quadrant layout and odd columns are white, so a
+    // full decode would average the white in; the step-2 decode sees
+    // exactly the quadrant colours, each grid cell lying in one quadrant.
+    val (w, h) = (4800, 4800)
+    def rgb(x: Int, y: Int): (Int, Int, Int) =
+      if (x % 2 == 1) (255, 255, 255)
+      else (if (x < w / 2) 200 else 40, if (y < h / 2) 180 else 20, 90)
+    val top = Array.tabulate(w * 3) { i => val (r, g, b) = rgb(i / 3, 0)
+      Seq(r, g, b)(i % 3).toByte }
+    val bottom = Array.tabulate(w * 3) { i => val (r, g, b) = rgb(i / 3, h - 1)
+      Seq(r, g, b)(i % 3).toByte }
+    val png = pngOf(w, h, 2, 8)(y => if (y < h / 2) top else bottom)
+    val Some(("png", dw, dh, feat)) = Multimodal.decodeImage(png)
+    assert((dw, dh) == (w, h))
+    for (cy <- 0 until 4; cx <- 0 until 4) {
+      val (r, g, b) = rgb(cx * w / 4, cy * h / 4)
+      assert(feat(cy * 4 + cx) == ((r * 299 + g * 587 + b * 114) / 1000 / 255.0).toFloat,
+        s"luma cell ($cx,$cy): ${feat(cy * 4 + cx)}")
+    }
+    for (cy <- 0 until 2; cx <- 0 until 2) {
+      val (r, g, b) = rgb(cx * w / 2, cy * h / 2)
+      val cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
+      assert(math.abs(feat(16 + cy * 2 + cx) - cb / 255.0) <= 1e-6, s"cb cell ($cx,$cy)")
+    }
+  }
+
+  test("multimodal: extractFeatures plans print one stable, named partition function") {
+    implicit val s = spark
+    def fns(): Seq[String] = {
+      val qe = Multimodal.extractFeatures(spark.read.parquet(Fixtures.MediaParquet))
+        .queryExecution
+      val names = qe.optimizedPlan.collect {
+        case m: org.apache.spark.sql.catalyst.plans.logical.MapPartitions => m.func.toString
+      }
+      assert(names.forall(qe.toString.contains), qe.toString)
+      names
+    }
+    val (a, b) = (fns(), fns())
+    assert(a == Seq("FeatureExtractor(24,64)"), a)
+    assert(a == b && !(a ++ b).exists(_.contains("$$Lambda")), s"$a vs $b")
+  }
+
+  test("multimodal: the committed media fixture decodes every image, WAV and AVI row") {
+    implicit val s = spark
+    // the parquet the media_* queries read, not a regenerated frame: a
+    // stale commit (JPEGs a conformant decoder refuses) reads as stub
+    val media = spark.read.parquet(Fixtures.MediaParquet)
+    val decoder = Multimodal.extractFeatures(media).collect()
+      .map(f => f.media_id -> f.decoder).toMap
+    def riff(p: Array[Byte], form: String): Boolean = p.length >= 12 &&
+      new String(p, 0, 4, "US-ASCII") == "RIFF" && new String(p, 8, 4, "US-ASCII") == form
+    val rows = media.select("media_id", "kind", "payload").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getAs[Array[Byte]](2)))
+    val images = rows.filter(_._2 == "image").map(r => decoder(r._1))
+    assert(images.length == 22)
+    assert(images.toSet == Set("bmp", "png", "jpeg", "jpeg-progressive"), images.toSeq)
+    val wavs = rows.filter(r => r._2 == "audio" && riff(r._3, "WAVE")).map(r => decoder(r._1))
+    val avis = rows.filter(r => r._2 == "video" && riff(r._3, "AVI ")).map(r => decoder(r._1))
+    assert(wavs.nonEmpty && wavs.forall(_ == "wav"), wavs.toSeq)
+    assert(avis.nonEmpty && avis.forall(_ == "avi-mjpeg"), avis.toSeq)
   }
 
   test("multimodal: MKV without the mandatory TrackNumber is a parse failure") {
@@ -2537,8 +2709,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
       ("mp4", Fixtures.mp4Bytes(64, 48, 6, 3)),
       ("mkv", Fixtures.mkvBytes(64, 48, 5, 2)))
     def runAll(p: Array[Byte]): Unit = {
-      Multimodal.decodeBmp(p); Multimodal.decodePng(p)
-      Multimodal.decodeJpeg(p); Multimodal.decodeWav(p)
+      Multimodal.decodeImage(p); Multimodal.decodeWav(p)
       Multimodal.decodeAvi(p); Multimodal.parseMp3(p)
       Multimodal.parseMp4(p); Multimodal.parseMkv(p)
       ()

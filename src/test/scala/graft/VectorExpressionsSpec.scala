@@ -219,29 +219,15 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("kll SQL registration: sketch -> union -> quantile pipeline answers within rank error") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    import org.apache.spark.sql.catalyst.expressions.Expression
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("kll_sketch_agg"),
-      new ExpressionInfo(classOf[graft.plans.KllSketchAgg].getName, "kll_sketch_agg"),
-      (children: Seq[Expression]) =>
-        graft.plans.KllSketchAgg(children.head, graft.plans.KllExpressions.DefaultK))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("kll_union_agg"),
-      new ExpressionInfo(classOf[graft.plans.KllMergeAgg].getName, "kll_union_agg"),
-      (children: Seq[Expression]) =>
-        graft.plans.KllMergeAgg(children.head, graft.plans.KllExpressions.DefaultK))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("kll_quantile"),
-      new ExpressionInfo(classOf[graft.plans.KllQuantileOf].getName, "kll_quantile"),
-      (children: Seq[Expression]) =>
-        graft.plans.KllQuantileOf(children.head, children(1)))
+    // the SQL names are Spark's own KLL built-ins: sketch, union, then a
+    // quantile read guarded for an empty sketch
     (1 to 1000).map(i => (i % 2, i.toDouble)).toDF("half", "v")
       .createOrReplaceTempView("kll_vals")
     val p50 = spark.sql(
-      """SELECT kll_quantile(kll_union_agg(sk), CAST(0.5 AS DOUBLE)) AS p50
-        |FROM (SELECT kll_sketch_agg(v) AS sk FROM kll_vals GROUP BY half)""".stripMargin)
+      """SELECT CASE WHEN kll_sketch_get_n_double(m) > 0
+        |  THEN kll_sketch_get_quantile_double(m, CAST(0.5 AS DOUBLE)) END AS p50
+        |FROM (SELECT kll_merge_agg_double(sk) AS m
+        |  FROM (SELECT kll_sketch_agg_double(v) AS sk FROM kll_vals GROUP BY half))""".stripMargin)
       .head().getDouble(0)
     // k=200 rank error ~1.65%: the p50 estimate's rank sits within ~±40
     // of 500 over 1..1000 (generous for randomized compaction)
