@@ -34,7 +34,10 @@ import graft.operators.Similarity.{IvfIndex, PqModel}
  * STALENESS: the cache key fingerprints every file under the
  * embeddings parquet (relative path + length + mtime, recursively), so
  * regenerated test data — even a single rewritten part file — can never
- * be served a previous dataset's index.
+ * be served a previous dataset's index; and it fingerprints the engine's
+ * own class files ([[codeFingerprint]]), so an artifact is only ever
+ * served to the code that built it — a changed writer or layout rebuilds
+ * instead of serving an older artifact.
  */
 object AnnIndex {
 
@@ -67,11 +70,43 @@ object AnnIndex {
     sys.env.getOrElse("GRAFT_ANN_CACHE",
       s"${System.getProperty("java.io.tmpdir")}/graft_ann_cache")
 
-  private[graft] def keyOf(sfDir: String, table: String = "embeddings"): String = {
-    // fingerprint = every file under the source table's parquet (Spark
-    // datasets are directories), relative path + length + mtime, sorted —
-    // a regenerated part file, added part, or re-written footer all flip
-    // the key even when the top-level entry looks unchanged
+  /** MD5 over the bytes of every `graft/**/*.class` in the class path
+    * entry this object loaded from — a jar or a classes directory — in
+    * path order, computed once per JVM. Any change to the compiled engine
+    * flips it, so [[keyOf]] keys every artifact by the code that built
+    * it. */
+  private[graft] lazy val codeFingerprint: String = {
+    import scala.jdk.CollectionConverters._
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def add(name: String, bytes: Array[Byte]): Unit = {
+      md.update(name.getBytes("UTF-8")); md.update(bytes)
+    }
+    val src = java.nio.file.Paths.get(
+      getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    if (java.nio.file.Files.isDirectory(src)) {
+      val walk = java.nio.file.Files.walk(src.resolve("graft"))
+      try walk.iterator.asScala.filter(_.toString.endsWith(".class"))
+        .map(p => src.relativize(p).toString).toSeq.sorted
+        .foreach(rel => add(rel, java.nio.file.Files.readAllBytes(src.resolve(rel))))
+      finally walk.close()
+    } else {
+      val jar = new java.util.jar.JarFile(src.toFile)
+      try jar.entries.asScala
+        .filter(e => e.getName.startsWith("graft/") && e.getName.endsWith(".class"))
+        .toSeq.sortBy(_.getName)
+        .foreach(e => add(e.getName, jar.getInputStream(e).readAllBytes()))
+      finally jar.close()
+    }
+    md.digest().take(6).map("%02x".format(_)).mkString
+  }
+
+  private[graft] def keyOf(sfDir: String, table: String = "embeddings",
+      code: String = codeFingerprint): String = {
+    // fingerprint = the engine's code plus every file under the source
+    // table's parquet (Spark datasets are directories), relative path +
+    // length + mtime, sorted — a regenerated part file, added part, or
+    // re-written footer all flip the key even when the top-level entry
+    // looks unchanged
     val root = new java.io.File(s"$sfDir/$table.parquet")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().sortBy(_.getName).toSeq.flatMap(walk)
@@ -81,7 +116,7 @@ object AnnIndex {
     // names across subdirectories (lang=en/part-00000 vs lang=de/part-00000),
     // and a name-keyed multiset cannot see an mtime-preserving content swap
     // between them
-    val fp = s"$sfDir|${files.map(f =>
+    val fp = s"$sfDir|$code|${files.map(f =>
       s"${root.toPath.relativize(f.toPath)}|${f.length()}|${f.lastModified()}").mkString(";")}"
     val md = java.security.MessageDigest.getInstance("MD5")
       .digest(fp.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
@@ -171,7 +206,7 @@ object AnnIndex {
     * per-data-directory artifact family (the trained logreg quality
     * model rides it too — see [[logregModel]]): `build` populates a
     * staging directory, which commits into `path` by atomic rename. */
-  private def ensureDir(path: String)(build: String => Unit): String = synchronized {
+  private[graft] def ensureDir(path: String)(build: String => Unit): String = synchronized {
     val marker = new java.io.File(path, "_GRAFT_READY")
     if (!marker.exists()) {
       val staging = new java.io.File(

@@ -173,10 +173,10 @@ object Corpus {
    *
    * Decontamination differs from dedup in shape: the join is CROSS-dataset
    * and wildly asymmetric — a 100 TB corpus against benchmark suites of
-   * thousands of docs — so the eval shingle set is BROADCAST
-   * (`broadcastEval`, on by default) and the corpus side streams MAP-ONLY
-   * through the hash join: corpus shingles are deliberately NOT
-   * pre-distinct'd (that would shuffle the whole corpus before the join);
+   * thousands of docs — so the eval shingle set is BROADCAST and the
+   * corpus side streams MAP-ONLY through the hash join: corpus shingles
+   * are deliberately NOT pre-distinct'd (that would shuffle the whole
+   * corpus before the join);
    * instead the post-join aggregate counts DISTINCT shared shingles, so
    * within-doc repetition dedups in the only shuffle of the plan — the
    * (doc, eval, shingle) triples, bounded by matches, not corpus size.
@@ -186,8 +186,8 @@ object Corpus {
    * (minOverlap is the precision knob).
    */
   def contaminationPairs(docs: DataFrame, evalDocs: DataFrame, n: Int = 3,
-      minOverlap: Long = 5, textCol: String = "text", idCol: String = "doc_id",
-      broadcastEval: Boolean = true): DataFrame = {
+      minOverlap: Long = 5, textCol: String = "text",
+      idCol: String = "doc_id"): DataFrame = {
     // Both sides shingle through the native expression with IN-ROW set
     // dedup (row-local work — still zero corpus-side shuffle, and the
     // probe stream shrinks to distinct (doc, shingle) pairs). With both
@@ -197,7 +197,7 @@ object Corpus {
       explode(TextExpressions.shingleHashes(col(textCol), n)).as("shingle"))
     val ev = hashedShingles(evalDocs).withColumnRenamed(idCol, "eval_id")
     hashedShingles(docs)
-      .join(if (broadcastEval) broadcast(ev) else ev, "shingle")
+      .join(broadcast(ev), "shingle")
       .groupBy(col(idCol), col("eval_id"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minOverlap)
@@ -206,10 +206,10 @@ object Corpus {
   /** The corpus with every contaminated doc removed — one anti-join on the
     * distinct flagged ids (tiny vs corpus; AQE broadcasts it). */
   def decontaminate(docs: DataFrame, evalDocs: DataFrame, n: Int = 3,
-      minOverlap: Long = 5, textCol: String = "text", idCol: String = "doc_id",
-      broadcastEval: Boolean = true): DataFrame =
+      minOverlap: Long = 5, textCol: String = "text",
+      idCol: String = "doc_id"): DataFrame =
     docs.join(
-      contaminationPairs(docs, evalDocs, n, minOverlap, textCol, idCol, broadcastEval)
+      contaminationPairs(docs, evalDocs, n, minOverlap, textCol, idCol)
         .select(col(idCol)).distinct(),
       Seq(idCol), "left_anti")
 

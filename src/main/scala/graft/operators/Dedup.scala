@@ -41,7 +41,7 @@ object Dedup {
   }
 
   /** Deterministic odd multiplier / addend per seed (splitmix-style). */
-  private def mixConsts(j: Int): (Long, Long) = {
+  private[operators] def mixConsts(j: Int): (Long, Long) = {
     def splitmix(x0: Long): Long = {
       var x = x0 + 0x9E3779B97F4A7C15L
       x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
@@ -55,31 +55,16 @@ object Dedup {
   }
 
   /**
-   * MinHash signature per (doc, seed): the shingle is hashed ONCE
-   * (xxhash64 → low 32 bits), then each seed j remixes arithmetically
-   * (h·a_j + b_j — a universal-hash family), so the per-seed cost is one
-   * multiply-add instead of a string concat + rehash. One aggregation
-   * produces all seeds' minima via map-side combine.
-   */
-  def minhash(sh: DataFrame, numHashes: Int, idCol: String): DataFrame = {
-    val h = xxhash64(col("shingle")).bitwiseAND(lit(0xFFFFFFFFL))
-    val mins: Seq[Column] = (0 until numHashes).map { j =>
-      val (a, b) = mixConsts(j)
-      min(h * lit(a) + lit(b)).as(s"mh_$j")
-    }
-    sh.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
-  }
-
-  /**
-   * Map-only MinHash signatures — the same values as [[minhash]] (exact
-   * per-seed minima, property-asserted equal) computed as a PURE
+   * Map-only MinHash signatures — exact per-seed minima of
+   * `h·a_j + b_j` over each doc's shingle hashes (property-asserted equal
+   * to the explode + aggregate form kept in the specs) computed as a PURE
    * PROJECTION: one [[graft.plans.ShingleHash.minhashFold]] expression carries all
    * `numHashes` running minima over the [[graft.plans.ShingleHash.hashes]]
    * array (bit-identical to `xxhash64(shingle_string)`), so signatures
    * cost zero shuffles, zero row fan-out, and stay inside whole-stage
    * codegen (the earlier `aggregate`/`zip_with` spelling ran its lambdas
    * interpreted — measured as the dominant cost of the signature pass).
-   * Structural value at scale: `minhashBandedTable(mapOnly = true)` plans
+   * Structural value at scale: [[minhashBandedTable]] plans
    * the whole index build as scan → project → write with NO exchange at
    * all (plan-asserted), so a 100 TB build streams straight into the
    * bucketed layout with no shuffle spill/network stage to size or skew.
@@ -87,7 +72,7 @@ object Dedup {
   def minhashSignatures(docs: DataFrame, n: Int = 3, numHashes: Int = 16,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val ab = (0 until numHashes).map(mixConsts)
-    // Null-text parity with [[minhash]]: in the explode path a null text
+    // Null-text parity with the explode path: there a null text
     // becomes the single shingle "" (shingles()' whole-text fallback is
     // `concat_ws` over the null token array, which yields the empty
     // string) — so null docs carry the signature of hash(""). Coalescing
@@ -124,16 +109,13 @@ object Dedup {
    * candidate-generation input of [[minhashLshPairsFromBanded]].
    */
   def minhashBandedTable(docs: DataFrame, n: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      textCol: String = "text", idCol: String = "doc_id",
-      mapOnly: Boolean = true): DataFrame = {
+      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    // mapOnly (the default): identical signatures as one codegen'd pure
-    // projection ([[minhashSignatures]]) — scan → project, no aggregation
-    // exchange, the corpus-scale index-build shape. mapOnly=false keeps
-    // the explode+agg form ([[minhash]]) as the property-spec twin.
-    val sig = if (mapOnly) minhashSignatures(docs, n, numHashes, textCol, idCol)
-      else minhash(shingleTable(docs, n, textCol, idCol, dedup = false), numHashes, idCol)
+    // signatures as one codegen'd pure projection ([[minhashSignatures]])
+    // — scan → project, no aggregation exchange, the corpus-scale
+    // index-build shape
+    val sig = minhashSignatures(docs, n, numHashes, textCol, idCol)
     // band value = xxhash64 of the band's minima (8-byte long), not an md5
     // hex string: the bucket join/shuffle and the persisted table carry
     // longs. Collisions only matter WITHIN a band (the join includes the

@@ -101,17 +101,32 @@ object Similarity {
       kDims: Int = 16, overscan: Int = 4,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     require(kDims > 0 && query.length >= kDims && overscan >= 1)
-    val pre = slice(col(vecCol), 1, kDims)
-    val shortlist = Selection.topKBy(embeddings.select(col(idCol), col(vecCol),
-        cosToQueryGuarded(pre, norm(pre), query.take(kDims)).as("__pc")),
-      "__pc", idCol, k.toLong * overscan)
-    // same zero-norm guard as the prefix leg: a zero-norm vector can
-    // reach the shortlist (tiny corpus, or the *_full bridge where the
-    // shortlist is everything)
-    Selection.topKBy(shortlist.select(col(idCol),
-        cosToQueryGuarded(col(vecCol), norm(col(vecCol)), query).as("cos")),
-      "cos", idCol, k)
+    mrlServe(embeddings.select(col(idCol), col(vecCol)), norm(col(vecCol)),
+      query, k, kDims, overscan, vecCol, idCol)
   }
+
+  /** The scalar MRL route + rerank over `cands` (idCol, vecCol, and any
+    * column `n` reads): the guarded prefix cosine elects the k·overscan
+    * shortlist, which reranks full-dim with norm `n` — evaluated on
+    * shortlist rows only. The rerank keeps the prefix leg's zero-norm
+    * guard: a zero-norm vector can reach the shortlist (tiny corpus, or
+    * the *_full bridge where the shortlist is everything). */
+  private def mrlServe(cands: DataFrame, n: Column, query: Seq[Float], k: Int,
+      kDims: Int, overscan: Int, vecCol: String, idCol: String): DataFrame = {
+    val pre = slice(col(vecCol), 1, kDims)
+    val shortlist = Selection.topKBy(cands.withColumn("__pc",
+        cosToQueryGuarded(pre, norm(pre), query.take(kDims))),
+      "__pc", idCol, k.toLong * overscan)
+    rerankOne(shortlist, n, query, k, vecCol, idCol)
+  }
+
+  /** The scalar MRL serves' exact rerank of `cands`: guarded full-dim
+    * cosine with norm `n`, top k. */
+  private def rerankOne(cands: DataFrame, n: Column, query: Seq[Float], k: Int,
+      vecCol: String, idCol: String): DataFrame =
+    Selection.topKBy(cands.select(col(idCol),
+        cosToQueryGuarded(col(vecCol), n, query).as("cos")),
+      "cos", idCol, k)
 
   /**
    * Deterministic pseudo-random hyperplane component for (table, bit, dim):
@@ -145,21 +160,12 @@ object Similarity {
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     // MAP-ONLY: all tables' buckets come from one
     // [[graft.plans.VectorKernels.lshBuckets]] kernel call per vector (the
-    // tables·bits·dim weight table rides the plan as a literal —
-    // kilobytes; the LSH "model" is pure code), posexplode fans out the
-    // `tables` index replicas. Bit-identical to the previous posexplode →
-    // broadcast-weight join → two-aggregation shape (which kept the
-    // multiply codegen'd at the cost of a dim·tables·bits row fan-out
-    // plus two exchanges): that path also accumulated each (vec, table,
-    // bit) projection in d order inside the scan task. An inline Column
-    // expression tree was ~20× slower still — giant exprs defeat codegen;
-    // the kernel replaces all of it with one tight loop.
-    // The norm rides along as an index column: computed ONCE per vector,
-    // persisted with the index, and reused by every candidate
-    // verification — the index carries `tables` replicas of each vector,
-    // so recomputing at probe time would pay the 64-op dot per replica.
-    // `size > 0` keeps the join path's drop of empty vectors (posexplode
-    // of an empty projection emitted no rows for them).
+    // tables·bits·dim weight table rides the plan as a literal — the LSH
+    // "model" is pure code), posexplode fans out the `tables` replicas:
+    // bit-identical to the former weight-join + two-aggregation shape,
+    // with no exchange. The norm is computed ONCE per vector and persisted,
+    // so verification never pays the 64-op dot per replica. `size > 0`
+    // drops empty vectors.
     val wts: Seq[Double] = for {
       t <- 0 until tables; b <- 0 until bits; d <- 0 until dim
     } yield planeComponent(t, b, d)
@@ -185,29 +191,19 @@ object Similarity {
    * bucket pruning do the same job with a fixed file count.
    */
   def writeLshIndex(index: DataFrame, path: String): Unit =
-    // the helper hash-repartitions on the partition columns: otherwise
-    // every write task opens a file in every (table, bucket) directory it
-    // sees — tasks × dirs file commits (measured as the dominant
-    // index-build cost, not compute). Keyed this way each directory is
-    // written by exactly one task: dirs-many files total, and the commit
-    // protocol scales with the layout, not the task grid. Same trade at
-    // 100 TB, where a 10k-task scan writing 2^bits·tables dirs would
-    // otherwise commit millions of small files.
+    // hash-repartitioned on the partition columns, so each directory is
+    // written by exactly one task: dirs-many files, not tasks × dirs
+    // commits (measured as the dominant index-build cost)
     writePartitionedParallel(index, Seq("table", "bucket"), path)
 
-  /** Partitioned layout write that keeps its shuffle at full width: a
-    * small index's post-repartition shuffle is a few MB, so AQE would
-    * fold it to ONE task that then creates every partition directory's
-    * file serially — parquet open/close latency × dirs (measured 2.3 s
-    * for a 2400-row index). Repartitioning with an EXPLICIT partition
-    * count makes the exchange `REPARTITION_BY_NUM`, which AQE's
-    * partition coalescing never touches (user-specified counts are
-    * preserved), so the write keeps `spark.sql.shuffle.partitions`
-    * concurrent tasks — hashed on the layout columns so each directory
-    * is still written by exactly one task. No session conf is read or
-    * mutated: buildAll runs these writers concurrently, and a
-    * save/set/restore of a session-global flag raced (one writer could
-    * capture a sibling's temporary value and leak it to the session). */
+  /** Partitioned layout write that keeps its shuffle at full width: AQE
+    * would fold a small index's few-MB shuffle into ONE task creating
+    * every directory's file serially (2.3 s for a 2400-row index). An
+    * EXPLICIT partition count makes the exchange `REPARTITION_BY_NUM`,
+    * which AQE never coalesces, so the write keeps
+    * `spark.sql.shuffle.partitions` concurrent tasks, each directory still
+    * written by one task. No session conf is mutated: buildAll runs these
+    * writers concurrently, and a save/set/restore of a session flag raced. */
   private def writePartitionedParallel(df: DataFrame, parts: Seq[String],
       path: String): Unit = {
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
@@ -219,7 +215,17 @@ object Similarity {
     * (table, bucket) come back as partition columns, so probe predicates
     * prune at planning time. */
   def readLshIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    requireNrm(spark.read.parquet(path), path)
+
+  /** Every serve verifies candidates with the index's persisted `nrm`
+    * column; an index written before norms were persisted has none and
+    * must be rebuilt, not served. */
+  private def requireNrm(index: DataFrame, path: String): DataFrame = {
+    require(index.schema.fieldNames.contains("nrm"),
+      s"index at $path has no persisted nrm column (written before norms " +
+        "were persisted) — rebuild it with the current writer")
+    index
+  }
 
   /** ANN top-k through the index: probe the query's bucket in every table,
     * union candidates (distinct ids), exact-rescore only those.
@@ -238,11 +244,7 @@ object Similarity {
         else base +: (0 until bits).map(b => base ^ (1L << b))
       col("table") === tt && col("bucket").isin(buckets.map(_.asInstanceOf[Any]): _*)
     }.reduce(_ || _)
-    val n = if (index.columns.contains("nrm")) col("nrm") else norm(col(vecCol))
-    Selection.topKBy(index.filter(pred)
-      .select(col(idCol), col(vecCol), n.as("__n")).dropDuplicates(idCol)
-      .select(col(idCol), cosToQuery(col(vecCol), col("__n"), query).as("cos")),
-      "cos", idCol, k)
+    lshRescore(index.filter(pred), query, k, vecCol, idCol)
   }
 
   /** Probe-ALL top-k through an LSH index: dedup ids across table replicas,
@@ -250,13 +252,17 @@ object Similarity {
     * index holds every vector), so the DuckDB brute-force SQL oracles the
     * whole index round-trip — build, norm column, dedup, rescore. */
   def topKLshAll(index: DataFrame, query: Seq[Float], k: Int,
-      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val n = if (index.columns.contains("nrm")) col("nrm") else norm(col(vecCol))
-    Selection.topKBy(index
-      .select(col(idCol), col(vecCol), n.as("__n")).dropDuplicates(idCol)
+      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
+    lshRescore(index, query, k, vecCol, idCol)
+
+  /** [[topKLsh]]'s verification over `candidates` (index rows): dedup
+    * ids across table replicas, exact-rescore with the persisted `nrm`. */
+  private def lshRescore(candidates: DataFrame, query: Seq[Float], k: Int,
+      vecCol: String, idCol: String): DataFrame =
+    Selection.topKBy(candidates
+      .select(col(idCol), col(vecCol), col("nrm").as("__n")).dropDuplicates(idCol)
       .select(col(idCol), cosToQuery(col(vecCol), col("__n"), query).as("cos")),
       "cos", idCol, k)
-  }
 
   /**
    * Embedding near-duplicate pairs via the index: candidates = pairs
@@ -271,9 +277,8 @@ object Similarity {
 
   /** `nearDupPairs` against an already-built (typically persisted) index —
     * the corpus-scale path: build + `writeLshIndex` once, re-verify pairs
-    * many times without re-hashing the corpus. Uses the index's persisted
-    * `nrm` column when present (indexes written before norms existed fall
-    * back to one recompute per replica row). `maxBucket` (default off) is
+    * many times without re-hashing the corpus. Verifies with the index's
+    * persisted `nrm` column. `maxBucket` (default off) is
     * the hot-bucket occupancy valve — a mass of zero/constant embeddings
     * lands in one (table, bucket) and would otherwise emit O(N²) candidate
     * rows (see [[Dedup.capBuckets]]).
@@ -281,16 +286,14 @@ object Similarity {
   def nearDupPairsFromIndex(index: DataFrame, minCosine: Double,
       vecCol: String = "embedding", idCol: String = "vec_id",
       maxBucket: Option[Long] = None): DataFrame = {
-    val withN = if (index.columns.contains("nrm")) index.withColumn("__n", col("nrm"))
-      else index.withColumn("__n", norm(col(vecCol)))
-    val idx = Dedup.capBuckets(withN, Seq("table", "bucket"), maxBucket)
+    val idx = Dedup.capBuckets(index, Seq("table", "bucket"), maxBucket)
     val a = idx.as("a")
     val b = idx.as("b")
     a.join(b, col("a.table") === col("b.table") && col("a.bucket") === col("b.bucket") &&
         col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
         col(s"a.$vecCol").as("__va"), col(s"b.$vecCol").as("__vb"),
-        col("a.__n").as("__na"), col("b.__n").as("__nb"))
+        col("a.nrm").as("__na"), col("b.nrm").as("__nb"))
       .dropDuplicates("id_a", "id_b")
       .select(col("id_a"), col("id_b"),
         Quantize.quantize(dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")), 6).as("cos"))
@@ -361,7 +364,7 @@ object Similarity {
   def readIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
     val centroids = spark.read.parquet(s"$path/centroids")
       .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
-    IvfIndex(spark.read.parquet(s"$path/assignments"), centroids)
+    IvfIndex(requireNrm(spark.read.parquet(s"$path/assignments"), path), centroids)
   }
 
   /** One model the shared Lloyd loop ([[trainLloyd]]) trains: `m`
@@ -509,12 +512,20 @@ object Similarity {
   def topKIvf(index: IvfIndex, query: Seq[Float], k: Int, nProbe: Int = 4,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     val probed = probeCells(index, query, nProbe)
-    val n = if (index.assignments.columns.contains("nrm")) col("nrm")
-      else norm(col(vecCol)) // pre-norm-column assignments tables
     Selection.topKBy(index.assignments
       .filter(col("cell").isin(probed.map(_.asInstanceOf[Any]): _*))
-      .select(col(idCol), cosToQuery(col(vecCol), n, query).as("cos")),
+      .select(col(idCol), cosToQuery(col(vecCol), col("nrm"), query).as("cos")),
       "cos", idCol, k)
+  }
+
+  /** The one prefix projection both writers share — a schema change
+    * edited here cannot desynchronize write vs grow (the append==rebuild
+    * spec pins that). */
+  private def mrlProjection(df: DataFrame, kDims: Int, vecCol: String,
+      idCol: String): DataFrame = {
+    require(kDims > 0)
+    val pre = slice(col(vecCol), 1, kDims)
+    df.select(col(idCol), pre.as("prefix"), norm(pre).as("pnrm"))
   }
 
   /**
@@ -528,27 +539,12 @@ object Similarity {
    * join ladder (SCALING.md round 15). One map-only pass, write once,
    * grow by appending the same projection of an increment.
    *
-   * Honest bound on the byte win (measured COLD, r16): the on-disk cut
-   * is real (1.07 GB → 0.32 GB at 64→16 dims on incompressible
-   * vectors) and it is a BYTES-TOUCHED lever — what an IO-billed object
-   * store or a disk-bound cluster prices. It is NOT a local wall-clock
-   * lever: with the page cache dropped before every run, cold ≈ warm on
-   * fast local storage (parallel refill outpaces the scan's compute)
-   * and the pre route's extra pass costs about what its byte cut saves
-   * (exact 1.04 s vs mrlpre 1.37 s cold at the 2048× rung — SCALING.md
-   * round 16). The measured LOCAL win of this relation stays vs the
-   * column form (2.8 s → 1.4 s cold), which re-reads full-width rows.
+   * The byte win (1.07 GB → 0.32 GB at 64→16 dims) is a BYTES-TOUCHED
+   * lever — what an IO-billed store prices — not a local wall-clock one:
+   * cold ≈ warm on fast local storage, and the pre route's extra pass
+   * costs about what its byte cut saves (SCALING.md round 16). Its local
+   * win is vs the column form (2.8 s → 1.4 s cold).
    */
-  /** The one prefix projection both writers share — a schema change
-    * edited here cannot desynchronize write vs grow (the append==rebuild
-    * spec pins that). */
-  private def mrlProjection(df: DataFrame, kDims: Int, vecCol: String,
-      idCol: String): DataFrame = {
-    require(kDims > 0)
-    val pre = slice(col(vecCol), 1, kDims)
-    df.select(col(idCol), pre.as("prefix"), norm(pre).as("pnrm"))
-  }
-
   def writeMrlPrefixes(embeddings: DataFrame, kDims: Int, path: String,
       vecCol: String = "embedding", idCol: String = "vec_id"): Unit =
     Writes(mrlProjection(embeddings, kDims, vecCol, idCol))
@@ -601,12 +597,6 @@ object Similarity {
       .mode("append").parquet(path)
   }
 
-  /** Guard against a width drift between the persisted prefix relation
-    * and the caller's `kDims`: a mismatch would not error — the dot
-    * kernel nulls on length mismatch, silently degrading the shortlist
-    * (scalar) or emptying the output (join). One `take(1)` row read per
-    * call; an empty relation passes (it can only produce empty output
-    * anyway). */
   /** The batch mirror of the scalar forms' `query.length >= kDims`
     * require: a query vector narrower than `kDims` slices short, the
     * dot kernel nulls on the length mismatch, and the per-query heap
@@ -621,6 +611,12 @@ object Similarity {
           "route slices the first kDims dims; pass kDims <= query width")
     }
 
+  /** Guard against a width drift between the persisted prefix relation
+    * and the caller's `kDims`: a mismatch would not error — the dot
+    * kernel nulls on length mismatch, silently degrading the shortlist
+    * (scalar) or emptying the output (join). One `take(1)` row read per
+    * call; an empty relation passes (it can only produce empty output
+    * anyway). */
   private def requirePrefixWidth(prefixes: DataFrame, kDims: Int): Unit =
     prefixes.select(size(col("prefix"))).take(1).headOption.foreach { r =>
       require(r.getInt(0) == kDims,
@@ -630,7 +626,7 @@ object Similarity {
 
   /** Above this many shortlist rows the rerank legs stop collecting to
     * the driver: the route result stays in executor blocks
-    * (localCheckpoint) and only the broadcast hint prunes the rerank.
+    * (localCheckpoint) and feeds a shuffle-hash rerank join.
     * |Q|·k·overscan grows with the query batch, so without the valve a
     * production dedup batch (1M queries, k=10, overscan=4) would pull
     * 40M (qId, id) rows through the driver just to broadcast them back
@@ -666,39 +662,25 @@ object Similarity {
     * branch.
     *
     * The returned frame carries its JOIN STRATEGY: below the cap the
-    * local relation comes back wrapped in `broadcast(...)` (|rows| ≤
-    * the cap by construction — the hash relation costs exactly the
-    * collect already paid, and the corpus side stays shuffle-free);
-    * above the cap it comes back with a SHUFFLE_HASH hint instead, so
-    * the rerank join shuffles both sides on `idCol` and the shortlist
-    * genuinely never transits the driver — a broadcast hint here would
-    * be a trap, because `BroadcastExchangeExec` COLLECTS the broadcast
-    * side's rows on the driver before re-broadcasting (the 1M-query ×
-    * k·overscan batch would pull its 40M-row shortlist through driver
-    * memory inside the exchange and die on Spark's 8 GB broadcast
-    * ceiling). The hint also keeps the big corpus side from falling
-    * back to a sort-merge join that SORTS the whole relation by id —
-    * the build side is the (smaller) shortlist either way. Callers must
-    * therefore NOT re-wrap the result in `broadcast(...)`; they join it
-    * as returned (lint-pinned: no BroadcastExchange may feed the rerank
-    * above the cap, PlanLintSpec).
+    * local relation comes back wrapped in `broadcast(...)` (the hash
+    * relation costs exactly the collect already paid; the corpus side
+    * stays shuffle-free); above it, a SHUFFLE_HASH hint, so the rerank
+    * shuffles both sides on `idCol` and the shortlist never transits the
+    * driver — `BroadcastExchangeExec` COLLECTS its side on the driver, so
+    * a 1M-query × k·overscan shortlist would die on Spark's 8 GB
+    * broadcast ceiling; the hint also keeps the corpus side off a
+    * sort-merge join that sorts it by id. Callers join the result as
+    * returned, never re-wrapped in `broadcast(...)` (PlanLintSpec pins
+    * no BroadcastExchange above the cap).
     *
-    * `checkpointDir` (threaded from every rerank leg, the
-    * semanticDedupIncrement convention): a localCheckpoint's blocks DIE
-    * with their executor and the truncated lineage cannot recompute
-    * them — fine single-JVM, a late-job killer on long cluster runs.
-    * Passing a dir switches the pin to a RELIABLE checkpoint (see
-    * [[Materialize]]); only the above-cap branch keeps the pin alive
-    * long enough to care.
+    * `checkpointDir` switches the pin to a RELIABLE checkpoint
+    * ([[Materialize]]): a localCheckpoint's blocks die with their
+    * executor, a late-job killer on long cluster runs above the cap.
     *
-    * Layout caveat (measured, SCALING.md r16): the In filter prunes row
-    * groups only when the corpus layout CLUSTERS ids (sorted / range-
-    * partitioned / bucketed writes — which production writers control);
-    * on a hash-scattered layout every row group's (min,max) id stats
-    * span the whole domain, nothing prunes, and the rerank re-reads the
-    * full corpus (+1 s at the 1 GB rung). The join stays correct either
-    * way — pruning is a layout-conditional optimization, not a
-    * correctness term. */
+    * Layout caveat (SCALING.md r16): the In filter prunes row groups only
+    * when the corpus layout CLUSTERS ids (sorted / range-partitioned /
+    * bucketed writes); on a hash-scattered layout nothing prunes and the
+    * rerank re-reads the full corpus — still correct, only slower. */
   private[graft] def materializeShortlist(shortlist: DataFrame,
       idCol: String, collectCap: Int = ShortlistCollectCap,
       checkpointDir: Option[String] = None)
@@ -745,11 +727,8 @@ object Similarity {
     val (localSl, idFilter) = materializeShortlist(shortlist, idCol,
       checkpointDir = checkpointDir)
     val base = corpus.select(col(idCol), col(vecCol))
-    Selection.topKBy(localSl
-      .join(idFilter.map(base.filter).getOrElse(base), idCol)
-      .select(col(idCol),
-        cosToQueryGuarded(col(vecCol), norm(col(vecCol)), query).as("cos")),
-      "cos", idCol, k)
+    rerankOne(localSl.join(idFilter.map(base.filter).getOrElse(base), idCol),
+      norm(col(vecCol)), query, k, vecCol, idCol)
   }
 
   /**
@@ -770,29 +749,66 @@ object Similarity {
       checkpointDir: Option[String] = None): DataFrame = {
     require(kDims > 0 && overscan >= 1)
     requirePrefixWidth(prefixes, kDims)
+    mrlJoin(prefixes, corpus, queries, k, kDims, overscan, vecCol, idCol,
+      qIdCol, checkpointDir)
+  }
+
+  /** The MRL batch join over any prefix relation (idCol, prefix, pnrm):
+    * [[topKJoinMrlPre]] over the persisted one, [[topKJoinMrl]] over the
+    * in-plan [[mrlProjection]] of its corpus. The |Q|·|C| prefix route
+    * elects each query's k·overscan shortlist, which reranks full-dim
+    * against `corpus` ([[rerankBatch]]). */
+  private def mrlJoin(prefixes: DataFrame, corpus: DataFrame,
+      queries: DataFrame, k: Int, kDims: Int, overscan: Int, vecCol: String,
+      idCol: String, qIdCol: String, checkpointDir: Option[String]): DataFrame = {
     requireQueryWidth(queries, kDims, vecCol)
-    val q = queries.select(col(qIdCol), col(vecCol).as("__qv"),
-      norm(col(vecCol)).as("__qn"),
-      slice(col(vecCol), 1, kDims).as("__qp"))
-    val qr = q.select(col(qIdCol), col("__qp"), norm(col("__qp")).as("__qpn"))
+    val qr = queries.select(col(qIdCol), slice(col(vecCol), 1, kDims).as("__qp"))
+      .withColumn("__qpn", norm(col("__qp")))
     val routed = prefixes.crossJoin(broadcast(qr))
       .select(col(qIdCol), col(idCol),
-        when(col("pnrm") === 0d || col("__qpn") === 0d,
-          lit(Double.NegativeInfinity))
-          .otherwise(Quantize.quantize(
-            dot(col("prefix"), col("__qp")) / (col("pnrm") * col("__qpn")), 6))
-          .as("cos"))
+        prefixRouteCos(col("prefix"), col("pnrm"), col("__qp"), col("__qpn")).as("cos"))
     val shortlist = topKPerQuery(routed, heapShortlistK(k, overscan), idCol, qIdCol)
       .select(col(qIdCol), col(idCol))
-    // route executes once + rerank scan prunes to the shortlist's row
-    // groups (see materializeShortlist)
+    rerankBatch(shortlist, corpus, norm(col(vecCol)), queries, k, vecCol,
+      idCol, qIdCol, checkpointDir)
+  }
+
+  /** The MRL batch route score: the prefix cosine, with a zero-norm
+    * prefix on either side scoring -Infinity, NOT null. The shortlist
+    * election drops null scores ([[topKPerQuery]]'s contract), which
+    * would make a zero-prefix/nonzero-full vector unreachable even at
+    * corpus-covering overscan — breaking the exact-degradation bridge.
+    * -Inf ranks below every real cosine (routed out at production
+    * overscan, the MRL contract) yet stays eligible when the shortlist
+    * is everything, where the exact rerank restores its true score. */
+  private def prefixRouteCos(cp: Column, cpn: Column, qp: Column,
+      qpn: Column): Column =
+    when(cpn === 0d || qpn === 0d, lit(Double.NegativeInfinity))
+      .otherwise(Quantize.quantize(dot(cp, qp) / (cpn * qpn), 6))
+
+  /**
+   * The batch serves' one verification leg: pin the (qIdCol, idCol)
+   * `shortlist` through the valve ([[materializeShortlist]] — the route
+   * executes once, the join strategy follows the shortlist's size, and
+   * below the In-filter cap the corpus scan prunes to the shortlist's row
+   * groups), rejoin the broadcast queries, score the exact quantized
+   * cosine against `corpus`'s vectors (norm `cn` — computed, or an
+   * index's persisted `nrm`) and keep k per query. A zero norm on either
+   * side scores null, which [[topKPerQuery]] drops: a zero vector has no
+   * measurable similarity and is never a neighbour (the unguarded
+   * division would abort under ANSI).
+   */
+  private def rerankBatch(shortlist: DataFrame, corpus: DataFrame, cn: Column,
+      queries: DataFrame, k: Int, vecCol: String, idCol: String, qIdCol: String,
+      checkpointDir: Option[String]): DataFrame = {
     val (localSl, idFilter) = materializeShortlist(shortlist, idCol,
       checkpointDir = checkpointDir)
-    val base = corpus.select(col(idCol), col(vecCol).as("__cv"),
-      norm(col(vecCol)).as("__cn"))
+    val base = corpus.select(col(idCol), col(vecCol).as("__cv"), cn.as("__cn"))
+    val q = queries.select(col(qIdCol), col(vecCol).as("__qv"),
+      norm(col(vecCol)).as("__qn"))
     val reranked = localSl
       .join(idFilter.map(base.filter).getOrElse(base), idCol)
-      .join(broadcast(q.select(col(qIdCol), col("__qv"), col("__qn"))), qIdCol)
+      .join(broadcast(q), qIdCol)
       .select(col(qIdCol), col(idCol),
         when(col("__cn") === 0d || col("__qn") === 0d,
           lit(null).cast("double"))
@@ -821,37 +837,23 @@ object Similarity {
 
   /**
    * MRL serving THROUGH the persisted IVF index — [[topKMrl]]'s prefix
-   * route composed with [[topKIvf]]'s cell pruning, so the matryoshka
-   * cut serves from the same persisted relation as the rest of the ANN
-   * family: cells rank driver-side full-dim (the model is local —
-   * probing is free), the probed cells' candidates route on the
-   * first-`kDims` prefix cosine (d/kDims× fewer floats in the dot
-   * kernel — flops, not IO; see [[topKMrl]]'s slice caveat), and
-   * the k·overscan shortlist reranks exactly full-dim via the index's
-   * persisted `nrm`. Both shortlist passes are [[Selection.topKBy]] —
-   * never a global sort.
+   * route and rerank ([[mrlServe]], its zero-norm guards included)
+   * composed with [[topKIvf]]'s cell pruning: cells rank driver-side
+   * full-dim (the model is local), the probed cells' candidates route on
+   * the first-`kDims` prefix cosine, and the k·overscan shortlist
+   * reranks exactly full-dim via the index's persisted `nrm`.
    * `nProbe = nCells` AND overscan covering the corpus degrade EXACTLY
    * to brute force — the hash-verified `sim_topk_mrl_ivf_full` bridge.
-   * Zero-norm prefixes route to an explicit null (sorting last under
-   * the descending route order); zero-norm full vectors rerank to null —
-   * the guards shared with [[topKMrl]].
    */
   def topKMrlIvf(index: IvfIndex, query: Seq[Float], k: Int,
       kDims: Int = 16, overscan: Int = 4, nProbe: Int = 4,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     require(kDims > 0 && query.length >= kDims && overscan >= 1)
     val probed = probeCells(index, query, nProbe)
-    val pre = slice(col(vecCol), 1, kDims)
-    val n = if (index.assignments.columns.contains("nrm")) col("nrm")
-      else norm(col(vecCol))
-    val shortlist = Selection.topKBy(index.assignments
-      .filter(col("cell").isin(probed.map(_.asInstanceOf[Any]): _*))
-      .select(col(idCol), col(vecCol), n.as("__n"),
-        cosToQueryGuarded(pre, norm(pre), query.take(kDims)).as("__pc")),
-      "__pc", idCol, k.toLong * overscan)
-    Selection.topKBy(shortlist.select(col(idCol),
-        cosToQueryGuarded(col(vecCol), col("__n"), query).as("cos")),
-      "cos", idCol, k)
+    mrlServe(index.assignments
+        .filter(col("cell").isin(probed.map(_.asInstanceOf[Any]): _*))
+        .select(col(idCol), col(vecCol), col("nrm")),
+      col("nrm"), query, k, kDims, overscan, vecCol, idCol)
   }
 
   /**
@@ -894,15 +896,13 @@ object Similarity {
       bits: Int = 4, tables: Int = 8, vecCol: String = "embedding",
       idCol: String = "vec_id", qIdCol: String = "q_id"): DataFrame = {
     // norms precomputed ONCE per side before the bucket join — a hot bucket
-    // of b members would otherwise pay 2 extra dot products per candidate.
-    // Both sides ride the index's `nrm` column when it exists (every index
-    // built since norms were persisted); older indexes recompute once here.
+    // of b members would otherwise pay 2 extra dot products per candidate:
+    // both sides ride the index's persisted `nrm` column
     val qb = buildLshIndex(queries, dim, bits, tables, vecCol, qIdCol)
       .select(col(qIdCol), col(vecCol).as("__qv"), col("nrm").as("__qn"),
         col("table"), col("bucket"))
-    val cn = if (corpusIndex.columns.contains("nrm")) col("nrm") else norm(col(vecCol))
     val cb = corpusIndex
-      .select(col(idCol), col(vecCol).as("__cv"), cn.as("__cn"),
+      .select(col(idCol), col(vecCol).as("__cv"), col("nrm").as("__cn"),
         col("table"), col("bucket"))
     // query side broadcast explicitly (|Q|·tables rows): its stats hide
     // behind the explode lineage, and on a big corpus index the planner
@@ -933,57 +933,47 @@ object Similarity {
   def topKJoinIvf(index: IvfIndex, queries: DataFrame, k: Int, nProbe: Int = 4,
       vecCol: String = "embedding", idCol: String = "vec_id",
       qIdCol: String = "q_id"): DataFrame = {
-    val probes = probeCellsJoin(index, queries, nProbe, vecCol, qIdCol)
-    val cn = if (index.assignments.columns.contains("nrm")) col("nrm")
-      else norm(col(vecCol))
-    // BROADCAST the probe relation explicitly: it is |Q|·nProbe rows (the
-    // family's queries ≪ corpus regime, bound documented on
-    // probeCellsJoin), but its stats are hidden behind the heap
-    // aggregation lineage, and on a big corpus the planner falls back to
-    // a sort-merge join that SORTS the whole assignments relation by a
-    // 16-value key — measured 3.5× the whole-query cost at the 16×
-    // ladder rung before the hint (SCALING.md round 15)
+    val probes = probeCellsJoin(index,
+      withUnit(queries.select(col(qIdCol), col(vecCol)), vecCol)
+        .select(col(qIdCol), col(vecCol).as("__qv"), col("nrm").as("__qn"), col("__unit")),
+      nProbe, qIdCol)
+    // BROADCAST the |Q|·nProbe probe relation explicitly: its stats hide
+    // behind the heap lineage, and the planner's fallback sort-merge join
+    // SORTS the whole assignments relation by a 16-value key (3.5× the
+    // whole query at the 16× rung, SCALING.md round 15)
     val scored = broadcast(probes).join(
         index.assignments.select(col(idCol), col(vecCol).as("__corp"),
-          cn.as("__cn"), col("cell")), "cell")
+          col("nrm").as("__cn"), col("cell")), "cell")
       .select(col(qIdCol), col(idCol),
         Quantize.quantize(dot(col("__qv"), col("__corp")) / (col("__qn") * col("__cn")), 6).as("cos"))
     topKPerQuery(scored, k, idCol, qIdCol)
   }
 
-  /** Per-query probe relation (qId, __qv, __qn, cell): nProbe nearest
-    * cells per query row, elected by the struct_topk heap on (__d, cell)
-    * — the same ascending tiebreak the topKIvf probe uses. The broadcast
-    * crossJoin generates all nCells candidates for a query INSIDE one
-    * task, so partial aggregation collapses them map-side: the exchange
-    * carries |Q|·nProbe skinny (qId, cell) rows instead of the window
-    * form's |Q|·nCells rows each dragging the full query vector through
-    * the shuffle + per-partition sort. The query payload (__qv, __qn)
-    * rejoins on qId afterwards — q is the (small) query side, so this
-    * plans as a broadcast join.
+  /** Per-query probe relation (qId, cell, payload…): the nProbe nearest
+    * cells per row of `q` — qIdCol, the unit query `__unit` (a
+    * [[withUnit]] column), and the payload the caller's candidate join
+    * needs (a vector and norm, or [[topKJoinIvfPq]]'s ADC table) —
+    * elected by the struct_topk heap on (distance, cell), the ascending
+    * tiebreak of the topKIvf probe. The broadcast crossJoin keeps a
+    * query's nCells candidates in one task, so partial aggregation
+    * collapses them map-side: only |Q|·nProbe skinny (qId, cell) rows
+    * reach the exchange, and the payload rejoins on qId as a broadcast.
     *
-    * Batch-size bound: the rejoin broadcasts the FULL query payload
-    * (|Q| vectors + norms) to every executor — fine for the k-NN-join
-    * regime this family serves (query batches ≪ corpus; an increment,
-    * a probe set), but a "query" side approaching corpus scale would
-    * hit the broadcast memory ceiling. At that scale the right tool is
-    * the all-pairs machinery (nearDupPairs / semanticDedup), not a k-NN
-    * join; callers who insist can pre-chunk the batch — each chunk
-    * rebroadcasts only its own slice. NOTE the explicit broadcast hints
-    * make the out-of-regime failure mode EXPLICIT (a broadcast size
-    * error) rather than the silent pre-r15 fallback: an SMJ that sorts
-    * the whole index relation by a low-cardinality key — measured 3.5×
-    * the whole-query cost at the 16× ladder rung. Fail-fast-with-a-
-    * named-bound is this engine's contract; pre-chunking is the escape. */
-  private def probeCellsJoin(index: IvfIndex, queries: DataFrame,
-      nProbe: Int, vecCol: String, qIdCol: String): DataFrame = {
-    val spark = queries.sparkSession
+    * Batch-size bound: that rejoin broadcasts the FULL query payload —
+    * fine for the k-NN-join regime (query batches ≪ corpus), but a query
+    * side near corpus scale hits the broadcast ceiling; there the tool is
+    * the all-pairs machinery (nearDupPairs / semanticDedup), or pre-chunk
+    * the batch. The explicit hints make that failure a named broadcast
+    * size error rather than the silent fallback: a sort-merge join that
+    * sorts the whole index by a low-cardinality key (3.5× the whole
+    * query at the 16× rung). */
+  private def probeCellsJoin(index: IvfIndex, q: DataFrame, nProbe: Int,
+      qIdCol: String): DataFrame = {
+    val spark = q.sparkSession
     import spark.implicits._
     val cents = index.centroids.map { case (c, v) =>
       (c, v, v.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble))
     }.toSeq.toDF("cell", "__cv", "__cn2")
-    val q = withUnit(queries.select(col(qIdCol), col(vecCol)), vecCol)
-      .select(col(qIdCol), col(vecCol).as("__qv"), col("nrm").as("__qn"), col("__unit"))
     val elected = q.crossJoin(broadcast(cents))
       .select(col(qIdCol),
         struct((col("__cn2") - lit(2.0) * dot(col("__unit"), col("__cv"))).as("d"),
@@ -992,7 +982,6 @@ object Similarity {
       .agg(graft.plans.TopKExpressions.topKStructs(col("__dc"), nProbe).as("__tk"))
       .select(col(qIdCol), explode(col("__tk.c")).as("cell"))
     elected.join(broadcast(q.drop("__unit")), qIdCol)
-      .select(col(qIdCol), col("__qv"), col("__qn"), col("cell"))
   }
 
   /**
@@ -1002,16 +991,11 @@ object Similarity {
    * [[topKJoinIvf]] (broadcast centroids + heap), the pruned candidates
    * score on the first-`kDims` PREFIX only (a flops cut — see
    * [[topKMrl]]'s slice caveat; the byte cut is [[topKJoinMrlPre]]'s
-   * persisted prefix relation), each query's k·overscan shortlist
-   * elects via the
-   * shared heap, and only the shortlist is reranked exactly full-dim
-   * from the index's persisted vectors and `nrm`. `nProbe = nCells` AND
-   * corpus-covering overscan degrade EXACTLY to the brute-force batch
-   * join — the hash-verified `sim_topk_join_mrl_ivf_full` bridge.
-   * Zero-norm prefixes route to -Infinity (routed out at production
-   * overscan — the MRL contract — but bridge-eligible at full
-   * overscan, see [[topKJoinMrl]]); zero-norm full vectors rerank to
-   * null and drop, as [[topKJoin]] scoring does.
+   * persisted prefix relation), and each query's k·overscan shortlist
+   * reranks exactly full-dim from the index's vectors and `nrm`.
+   * `nProbe = nCells` AND corpus-covering overscan degrade EXACTLY to the
+   * brute-force batch join — the hash-verified `sim_topk_join_mrl_ivf_full`
+   * bridge. Zero-norm handling is [[topKJoinMrl]]'s.
    */
   def topKJoinMrlIvf(index: IvfIndex, queries: DataFrame, k: Int,
       kDims: Int = 16, overscan: Int = 4, nProbe: Int = 4,
@@ -1020,47 +1004,28 @@ object Similarity {
       checkpointDir: Option[String] = None): DataFrame = {
     require(kDims > 0 && overscan >= 1)
     requireQueryWidth(queries, kDims, vecCol)
-    val probes = probeCellsJoin(index, queries, nProbe, vecCol, qIdCol)
-      .withColumn("__qp", slice(col("__qv"), 1, kDims))
-      .withColumn("__qpn", norm(col("__qp")))
+    val probes = probeCellsJoin(index,
+      withUnit(queries.select(col(qIdCol), col(vecCol)), vecCol)
+        .select(col(qIdCol), slice(col(vecCol), 1, kDims).as("__qp"), col("__unit"))
+        .withColumn("__qpn", norm(col("__qp"))),
+      nProbe, qIdCol)
     // prefix + its norm computed in a projection BELOW the join — once
     // per CORPUS row in the scan stage, not once per joined pair: a
     // post-join slice/norm re-evaluates per output row (up to nProbe·|Q|
     // per corpus row), allocating a fresh 16-float array each time —
     // the dominant cost of the first ladder cut (SCALING.md round 15)
     val cPre = slice(col(vecCol), 1, kDims)
-    // -Inf (not null) for zero-norm prefixes — same bridge-exactness
-    // reasoning as [[topKJoinMrl]]'s route leg. Probe side broadcast
-    // explicitly — same hidden-stats SMJ hazard as [[topKJoinIvf]]
+    // Probe side broadcast explicitly — same hidden-stats SMJ hazard as
+    // [[topKJoinIvf]]
     val routed = broadcast(probes).join(
         index.assignments.select(col(idCol), cPre.as("__cp"),
           norm(cPre).as("__cpn"), col("cell")), "cell")
       .select(col(qIdCol), col(idCol),
-        when(col("__cpn") === 0d || col("__qpn") === 0d,
-          lit(Double.NegativeInfinity))
-          .otherwise(Quantize.quantize(
-            dot(col("__cp"), col("__qp")) / (col("__cpn") * col("__qpn")), 6))
-          .as("cos"))
+        prefixRouteCos(col("__cp"), col("__cpn"), col("__qp"), col("__qpn")).as("cos"))
     val shortlist = topKPerQuery(routed, heapShortlistK(k, overscan), idCol, qIdCol)
       .select(col(qIdCol), col(idCol))
-    val cn = if (index.assignments.columns.contains("nrm")) col("nrm")
-      else norm(col(vecCol))
-    val q = withUnit(queries.select(col(qIdCol), col(vecCol)), vecCol)
-      .select(col(qIdCol), col(vecCol).as("__qv"), col("nrm").as("__qn"))
-    val (localSl, idFilter) = materializeShortlist(shortlist, idCol,
-      checkpointDir = checkpointDir)
-    val base = index.assignments.select(col(idCol),
-      col(vecCol).as("__cv"), cn.as("__cn"))
-    val reranked = localSl
-      .join(idFilter.map(base.filter).getOrElse(base), idCol)
-      .join(broadcast(q), qIdCol)
-      .select(col(qIdCol), col(idCol),
-        when(col("__cn") === 0d || col("__qn") === 0d,
-          lit(null).cast("double"))
-          .otherwise(Quantize.quantize(
-            dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")), 6))
-          .as("cos"))
-    topKPerQuery(reranked, k, idCol, qIdCol)
+    rerankBatch(shortlist, index.assignments, col("nrm"), queries, k, vecCol,
+      idCol, qIdCol, checkpointDir)
   }
 
   /**
@@ -1071,18 +1036,15 @@ object Similarity {
    * less dot-product work and a heap keyed on skinny
    * (qId, id, prefix-cos) rows), each query's k·overscan shortlist is
    * elected by the same struct_topk heap as every other join form, and
-   * only |Q|·k·overscan full vectors are touched for the exact rerank
-   * (shortlist joins via the valve's hint; queries rejoin broadcast — the family's
-   * batch-size bound, see [[topKJoinIvf]]'s note). Overscan covering
-   * the corpus makes the shortlist everything and the rerank IS
-   * [[topKJoin]] — the hash-verified `sim_topk_join_mrl_full` bridge.
-   * Zero-norm PREFIXES route to -Infinity — below every real cosine,
-   * so a vector invisible at kDims dims is routed out at production
-   * overscan (the MRL contract) yet STAYS ELIGIBLE at corpus-covering
-   * overscan, where the exact rerank restores its true score (null
-   * would be dropped by the election and break the bridge); zero-norm
-   * full vectors rerank to null and drop, exactly as [[topKJoin]]'s
-   * scoring does.
+   * only |Q|·k·overscan full vectors are touched for the exact rerank.
+   * It is [[topKJoinMrlPre]] over the in-plan prefix projection of
+   * `corpus`. Overscan covering the corpus makes the shortlist everything
+   * and the rerank IS [[topKJoin]] — the hash-verified
+   * `sim_topk_join_mrl_full` bridge. Zero-norm PREFIXES route to
+   * -Infinity ([[prefixRouteCos]]: routed out at production overscan,
+   * eligible at corpus-covering overscan); zero-norm full vectors rerank
+   * to null and drop ([[rerankBatch]]) — where [[topKJoin]]'s unguarded
+   * division aborts under the default ANSI session.
    */
   def topKJoinMrl(corpus: DataFrame, queries: DataFrame, k: Int,
       kDims: Int = 16, overscan: Int = 4,
@@ -1090,43 +1052,8 @@ object Similarity {
       qIdCol: String = "q_id",
       checkpointDir: Option[String] = None): DataFrame = {
     require(kDims > 0 && overscan >= 1)
-    requireQueryWidth(queries, kDims, vecCol)
-    val q = queries.select(col(qIdCol), col(vecCol).as("__qv"),
-      norm(col(vecCol)).as("__qn"),
-      slice(col(vecCol), 1, kDims).as("__qp"))
-    val qr = q.select(col(qIdCol), col("__qp"), norm(col("__qp")).as("__qpn"))
-    val cp = corpus.select(col(idCol), slice(col(vecCol), 1, kDims).as("__cp"))
-      .withColumn("__cpn", norm(col("__cp")))
-    // zero-norm prefixes route to -Infinity, NOT null: the shortlist
-    // election drops null scores (topKPerQuery's contract), which would
-    // make a zero-prefix/nonzero-full vector unreachable even at
-    // corpus-covering overscan — breaking the exact-degradation bridge.
-    // -Inf ranks below every real cosine (routed out at production
-    // overscan, the MRL contract) yet stays eligible when the shortlist
-    // is everything, where the exact rerank restores its true score.
-    val routed = cp.crossJoin(broadcast(qr))
-      .select(col(qIdCol), col(idCol),
-        when(col("__cpn") === 0d || col("__qpn") === 0d,
-          lit(Double.NegativeInfinity))
-          .otherwise(Quantize.quantize(
-            dot(col("__cp"), col("__qp")) / (col("__cpn") * col("__qpn")), 6))
-          .as("cos"))
-    val shortlist = topKPerQuery(routed, heapShortlistK(k, overscan), idCol, qIdCol)
-      .select(col(qIdCol), col(idCol))
-    val (localSl, idFilter) = materializeShortlist(shortlist, idCol,
-      checkpointDir = checkpointDir)
-    val base = corpus.select(col(idCol), col(vecCol).as("__cv"),
-      norm(col(vecCol)).as("__cn"))
-    val reranked = localSl
-      .join(idFilter.map(base.filter).getOrElse(base), idCol)
-      .join(broadcast(q.select(col(qIdCol), col("__qv"), col("__qn"))), qIdCol)
-      .select(col(qIdCol), col(idCol),
-        when(col("__cn") === 0d || col("__qn") === 0d,
-          lit(null).cast("double"))
-          .otherwise(Quantize.quantize(
-            dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")), 6))
-          .as("cos"))
-    topKPerQuery(reranked, k, idCol, qIdCol)
+    mrlJoin(mrlProjection(corpus, kDims, vecCol, idCol), corpus, queries, k,
+      kDims, overscan, vecCol, idCol, qIdCol, checkpointDir)
   }
 
   /** A batch join's per-query shortlist size `k · overscan`, which the
@@ -1142,13 +1069,10 @@ object Similarity {
     * on the query id — k smallest `(-cos, id)` pairs, i.e. the same
     * `(cos DESC, id ASC)` election the SQL rank-window oracle spells.
     *
-    * Replaces the former `row_number().over(partitionBy(qId))` idiom:
-    * the window plan pays a FULL per-partition sort of the scored
-    * relation just to feed WindowGroupLimit, while the heap aggregate is
-    * O(n log k) with map-side combine and ships ≤ k rows per query per
-    * input partition into the exchange — the same shuffle bound with the
-    * dominant local sort removed (the r12 `top_parts_heap` A/B: 0.66 s vs
-    * 1.05 s on the identical statement). The negated score orders the
+    * Unlike a `row_number().over(partitionBy(qId))` window, which pays a
+    * FULL per-partition sort to feed WindowGroupLimit, the heap is
+    * O(n log k) with map-side combine, shipping ≤ k rows per query per
+    * input partition into the exchange. The negated score orders the
     * heap; the ORIGINAL cos rides as a payload field and is emitted
     * as-is — re-negating the stored key would turn a 0.0 score into
     * -0.0 after UnsafeWriter's -0.0→0.0 normalization (SPARK-26021), a
@@ -1417,16 +1341,6 @@ object Similarity {
   def readCellCodes(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = spark.read.parquet(path)
 
-  /**
-   * Batch ADC k-NN join — the PQ member of the join family
-   * ([[topKJoin]]/[[topKJoinLsh]]/[[topKJoinIvf]]): each QUERY row first
-   * computes its own (subspace, code) distance table in ONE projection
-   * from the literal codebooks (`k·dim` work per query — the classic ADC
-   * precompute, amortized over the whole corpus), then the broadcast
-   * query×table side joins the encoded corpus and each pair costs `m`
-   * array lookups instead of `dim` multiply-adds — and the corpus side
-   * reads m-int codes, not 4d-byte vectors.
-   */
   /** Per-query ADC table over the `__unit` column:
     * `table[m][c] = ‖c‖² − 2·q̂_m·c + ‖q̂_m‖²` — the per-(query, subspace)
     * norm is constant (irrelevant to ranking) but kept so approx_cos is
@@ -1444,6 +1358,16 @@ object Similarity {
     }: _*)
   }
 
+  /**
+   * Batch ADC k-NN join — the PQ member of the join family
+   * ([[topKJoin]]/[[topKJoinLsh]]/[[topKJoinIvf]]): each QUERY row first
+   * computes its own (subspace, code) distance table in ONE projection
+   * from the literal codebooks (`k·dim` work per query — the classic ADC
+   * precompute, amortized over the whole corpus), then the broadcast
+   * query×table side joins the encoded corpus and each pair costs `m`
+   * array lookups instead of `dim` multiply-adds — and the corpus side
+   * reads m-int codes, not 4d-byte vectors.
+   */
   def topKJoinPq(encoded: DataFrame, queries: DataFrame, model: PqModel,
       k: Int, vecCol: String = "embedding", idCol: String = "vec_id",
       qIdCol: String = "q_id"): DataFrame = {
@@ -1460,24 +1384,20 @@ object Similarity {
   }
 
   /** Production batch shape: ADC shortlist per query, exact rerank of the
-    * `k · overscan` sliver against full vectors — [[topKPqRescored]] for
-    * many queries at once. A corpus-spanning overscan provably degrades
-    * to [[topKJoin]] (the hash-verified `sim_topk_join_pq_full` bridge). */
+    * `k · overscan` sliver against full vectors ([[rerankBatch]] — the
+    * shortlist goes through the valve, and a zero-norm vector scores null
+    * and drops) — [[topKPqRescored]] for many queries at once. A
+    * corpus-spanning overscan provably degrades to [[topKJoin]] on a
+    * corpus without zero vectors (the hash-verified
+    * `sim_topk_join_pq_full` bridge). */
   def topKJoinPqRescored(encoded: DataFrame, embeddings: DataFrame,
       queries: DataFrame, model: PqModel, k: Int, overscan: Int = 10,
       vecCol: String = "embedding", idCol: String = "vec_id",
       qIdCol: String = "q_id"): DataFrame = {
     val shortlist = topKJoinPq(encoded, queries, model, heapShortlistK(k, overscan),
       idCol = idCol, qIdCol = qIdCol).select(col(qIdCol), col(idCol))
-    // exact rescoring of exactly the shortlisted (query, candidate) pairs
-    val c = embeddings.select(col(idCol), col(vecCol).as("__cv"),
-      norm(col(vecCol)).as("__cn"))
-    val q = queries.select(col(qIdCol), col(vecCol).as("__qv"),
-      norm(col(vecCol)).as("__qn"))
-    val scored = shortlist.join(c, idCol).join(broadcast(q), qIdCol)
-      .select(col(qIdCol), col(idCol),
-        Quantize.quantize(dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")), 6).as("cos"))
-    topKPerQuery(scored, k, idCol, qIdCol)
+    rerankBatch(shortlist, embeddings, norm(col(vecCol)), queries, k, vecCol,
+      idCol, qIdCol, None)
   }
 
   /**
@@ -1493,8 +1413,10 @@ object Similarity {
    * each look costs, the exact rerank fixes the final ranking.
    *
    * `nProbe = nCells` + a corpus-spanning `overscan` probes every cell
-   * and reranks every candidate exactly — provably [[topKJoin]], the
-   * hash-verified `sim_topk_join_ivfpq_full` bridge.
+   * and reranks every candidate exactly — provably [[topKJoin]] on a
+   * corpus without zero vectors, the hash-verified
+   * `sim_topk_join_ivfpq_full` bridge. The rerank is [[rerankBatch]]: a
+   * zero-norm vector scores null and drops.
    */
   def topKJoinIvfPq(cellCodes: DataFrame, embeddings: DataFrame,
       ivf: IvfIndex, pq: PqModel, queries: DataFrame, k: Int,
@@ -1503,35 +1425,15 @@ object Similarity {
       vecCol: String = "embedding",
       idCol: String = "vec_id", qIdCol: String = "q_id",
       checkpointDir: Option[String] = None): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val cents = ivf.centroids.map { case (c, v) =>
-      (c, v, v.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble))
-    }.toSeq.toDF("cell", "__cv", "__cn2")
     // one pass per query row computes BOTH the ADC table and the unit
-    // vector the cell ranking needs — same (distance, cell) tiebreak as
-    // topKJoinIvf/topKIvf
-    val q = withUnit(queries.select(col(qIdCol), col(vecCol)), vecCol)
-      .select(col(qIdCol), adcTableFor(pq).as("__tbl"), col("__unit"))
-    // struct_topk probe election, same shape as topKJoinIvf: the heap
-    // collapses each query's nCells candidates map-side (the broadcast
-    // crossJoin keeps them in one task) and only (qId, cell) pairs reach
-    // the exchange; the per-query ADC table — the FAT payload, m·2^b
-    // doubles — rejoins once per elected probe instead of riding every
-    // candidate row through a window sort.
-    val elected = q.crossJoin(broadcast(cents))
-      .select(col(qIdCol),
-        struct((col("__cn2") - lit(2.0) * dot(col("__unit"), col("__cv"))).as("d"),
-          col("cell").as("c")).as("__dc"))
-      .groupBy(col(qIdCol))
-      .agg(graft.plans.TopKExpressions.topKStructs(col("__dc"), nProbe).as("__tk"))
-      .select(col(qIdCol), explode(col("__tk.c")).as("cell"))
-    // Same batch-size bound as topKJoinIvf's rejoin, amplified: the
-    // payload here is the per-query ADC table (m·2^b doubles) — kilobytes
-    // per query, so |Q| must stay in the query-batch regime (≪ corpus);
+    // vector the cell election ranks in. The per-query ADC table is the
+    // FAT payload (m·2^b doubles — kilobytes per query), so |Q| must stay
+    // in the query-batch regime (≪ corpus, [[probeCellsJoin]]'s bound);
     // corpus-scale "query" sides belong to the all-pairs machinery.
-    val probes = elected.join(broadcast(q.drop("__unit")), qIdCol)
-      .select(col(qIdCol), col("__tbl"), col("cell"))
+    val probes = probeCellsJoin(ivf,
+      withUnit(queries.select(col(qIdCol), col(vecCol)), vecCol)
+        .select(col(qIdCol), adcTableFor(pq).as("__tbl"), col("__unit")),
+      nProbe, qIdCol)
     // probes = |Q|·nProbe rows of kilobyte tables — broadcast, so the
     // (cell-partitioned) code relation streams map-only through the join
     val d2 = graft.plans.VectorExpressions.pqAdc(col("codes"), col("__tbl"))
@@ -1539,23 +1441,8 @@ object Similarity {
       .select(col(qIdCol), col(idCol), Quantize.quantize(lit(1) - d2 / 2, 6).as("cos"))
     val shortlist = topKPerQuery(scored, heapShortlistK(k, overscan), idCol, qIdCol)
       .select(col(qIdCol), col(idCol))
-    // exact rescoring of exactly the shortlisted (query, candidate) pairs
-    // — the valve hints the shortlist side explicitly (|Q|·k·overscan
-    // skinny rows whose stats hide behind the heap lineage; without a
-    // hint a big corpus side falls back to a sort-merge join that sorts
-    // the whole embeddings relation by id, the topKJoinIvf ladder lesson)
-    val c = embeddings.select(col(idCol), col(vecCol).as("__cv"),
-      norm(col(vecCol)).as("__cn"))
-    val qv = queries.select(col(qIdCol), col(vecCol).as("__qv"),
-      norm(col(vecCol)).as("__qn"))
-    val (localSl, idFilter) = materializeShortlist(shortlist, idCol,
-      checkpointDir = checkpointDir)
-    val rescored = localSl
-      .join(idFilter.map(c.filter).getOrElse(c), idCol)
-      .join(broadcast(qv), qIdCol)
-      .select(col(qIdCol), col(idCol),
-        Quantize.quantize(dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")), 6).as("cos"))
-    topKPerQuery(rescored, k, idCol, qIdCol)
+    rerankBatch(shortlist, embeddings, norm(col(vecCol)), queries, k, vecCol,
+      idCol, qIdCol, checkpointDir)
   }
 
   // ---- k-means building blocks (oracle-verifiable) -----------------------
@@ -1699,9 +1586,7 @@ object Similarity {
    * row-local kernel ([[graft.plans.VectorKernels.semDedupSurvivors]]) computes with an
    * O(k²/2) early-exit scan, then explode. One shuffle total, no
    * self-join, no broadcast of a corpus-sized side, no distinct, no
-   * anti-join. (The first formulation was the cell-keyed pair self-join +
-   * distinct + anti-join: same result, FOUR exchanges — measured ~1.5 s
-   * vs ~0.6 s at sf0.1 for identical output.) Per-row memory is one
+   * anti-join (a pair self-join took FOUR exchanges). Per-row memory is one
    * cluster's members (k·dim floats): bounded because k grows with N so
    * expected occupancy stays constant — the paper's own premise — and
    * `maxCell` is the valve for when it doesn't: a degenerate embedding
@@ -1723,67 +1608,95 @@ object Similarity {
   def semanticDedupClustered(embeddings: DataFrame, centroids: Array[Array[Float]],
       minCosine: Double, maxCell: Option[Long] = None,
       vecCol: String = "embedding", idCol: String = "vec_id",
-      prunedAssign: Option[(Int, Int)] = None,
       checkpointDir: Option[String] = None): DataFrame = {
     require(centroids.nonEmpty, "semanticDedupClustered: no centroids")
-    // capped: pin the assignment — four consumers otherwise re-execute
-    // the corpus×k assignment as lineage (see the KeepVec form's note).
-    // maxCell is specifically a corpus-scale valve, so on a long cluster
-    // run the pin must survive executor loss: thread checkpointDir
-    // (reliable checkpoint) exactly like TrainingSetJob's stage pins —
-    // a localCheckpoint's blocks die with their executor.
-    val asg0 = assignWithNorm(embeddings, centroids, vecCol, idCol, prunedAssign)
-    val asg = if (maxCell.isDefined) Materialize(asg0, checkpointDir) else asg0
-    val thr = thrOf(minCosine)
-    val fromPairing = Dedup.capBuckets(asg, Seq("cell"), maxCell)
+    val asg = fusedAssignment(embeddings, centroids, maxCell, vecCol, idCol,
+      checkpointDir)
+    val fromPairing = cellMembers(asg, maxCell, vecCol, idCol)
+      .select(explode(survivorIds(minCosine)).as(idCol), col("cell"))
+      .select(col(idCol), col("cell"))
+    withOverCap(fromPairing, maxCell, asg, asg, Seq(idCol, "cell"))
+  }
+
+  /** The fused forms' [[assignWithNorm]], pinned when the `maxCell` cap
+    * is engaged: it then feeds FOUR consumers (occupancy count +
+    * anti-join probe on the pairing side, occupancy count + semi-join
+    * probe on the pass-through side), and left as lineage the full
+    * corpus×k assignment re-executes per consumer (measured 12.4 s vs
+    * 6.8 s uncapped at 16×/k=128 before pinning). Uncapped stays pure
+    * lineage: the flagship's one-scan plan lint depends on it. maxCell is
+    * a corpus-scale valve, so `checkpointDir` upgrades the pin to a
+    * reliable checkpoint for long cluster runs (executor loss destroys
+    * localCheckpoint blocks). */
+  private def fusedAssignment(embeddings: DataFrame,
+      centroids: Array[Array[Float]], maxCell: Option[Long], vecCol: String,
+      idCol: String, checkpointDir: Option[String]): DataFrame = {
+    val asg = assignWithNorm(embeddings, centroids, vecCol, idCol)
+    if (maxCell.isDefined) Materialize(asg, checkpointDir) else asg
+  }
+
+  /** The SemDeDup cell pairing of every form: cells over the `maxCell`
+    * occupancy cap skip it ([[Dedup.capBuckets]]); each other cell's
+    * members (idCol, vecCol, __n) collect into one row `__m` for
+    * [[survivorIds]]. */
+  private def cellMembers(asg: DataFrame, maxCell: Option[Long],
+      vecCol: String, idCol: String): DataFrame =
+    Dedup.capBuckets(asg, Seq("cell"), maxCell)
       .groupBy(col("cell"))
       .agg(collect_list(struct(col(idCol), col(vecCol), col("__n"))).as("__m"))
-      .select(explode(graft.plans.VectorExpressions.semDedupSurvivors(
-        col("__m"), thr.toDouble)).as(idCol), col("cell"))
-      .select(col(idCol), col("cell"))
+
+  /** The survivor ids of a [[cellMembers]] row at quantized cosine
+    * `minCosine` ([[thrOf]]). */
+  private def survivorIds(minCosine: Double): Column =
+    graft.plans.VectorExpressions.semDedupSurvivors(col("__m"),
+      thrOf(minCosine).toDouble)
+
+  /** `fromPairing` plus the members of the cells [[cellMembers]] skipped:
+    * a cell whose `occupants` exceed `maxCell` keeps every row of
+    * `members` in it (the [[Dedup.capBuckets]] disposition), as `cols`. */
+  private def withOverCap(fromPairing: DataFrame, maxCell: Option[Long],
+      occupants: DataFrame, members: DataFrame, cols: Seq[String]): DataFrame =
     maxCell match {
       case None => fromPairing
       case Some(c) =>
-        // over-cap cells: every member survives (pairing skipped)
-        val overCap = asg.groupBy(col("cell")).agg(count(lit(1)).as("__occ"))
+        val overCap = occupants.groupBy(col("cell")).agg(count(lit(1)).as("__occ"))
           .filter(col("__occ") > c).select(col("cell"))
         fromPairing.unionByName(
-          asg.join(broadcast(overCap), Seq("cell"), "left_semi")
-            .select(col(idCol), col("cell")))
+          members.join(broadcast(overCap), Seq("cell"), "left_semi")
+            .select(cols.map(col): _*))
     }
-  }
 
-  /** Map-only centroid assignment retaining the vector and its norm —
-    * the SHARED projection of the SemDeDup family (fused operator,
-    * registry writer, increment probe): (idCol as long, vecCol, cell as
-    * int, __n). One implementation so the argmax tie-break
-    * (array_position returns the FIRST maximum) and the norm algebra —
-    * the oracle-equivalence contract all three hash-verified paths rely
-    * on — cannot silently diverge. Norms precompute per member so the
-    * survivor kernel pays one dot per pair. */
-  private def assignWithNorm(df: DataFrame, centroids: Array[Array[Float]],
-      vecCol: String, idCol: String,
-      pruned: Option[(Int, Int)] = None): DataFrame =
+  /** Map-only centroid assignment retaining the vector: (idCol as long,
+    * vecCol, cell as int, `extra` — a column over the kernel's `__nc`
+    * struct or the row). The one projection of the SemDeDup family and
+    * the curation flagship's stage 1, so the argmax tie-break (FIRST
+    * maximum) and the id cast — the oracle-equivalence contract every
+    * hash-verified path relies on — cannot silently diverge. */
+  private def assignKeeping(df: DataFrame, centroids: Array[Array[Float]],
+      vecCol: String, idCol: String, extra: Column): DataFrame =
     df.select(col(idCol), col(vecCol),
-        assignStruct(centroids, vecCol, pruned).as("__nc"))
+        assignStruct(centroids, vecCol, None).as("__nc"))
       .select(col(idCol).cast("long").as(idCol), col(vecCol),
-        col("__nc.cell").as("cell"),
-        norm(col(vecCol)).as("__n"))
+        col("__nc.cell").as("cell"), extra)
+
+  /** [[assignKeeping]] with the norm `__n` — the SemDeDup family's
+    * projection (fused operator, registry writer, increment probe). Norms
+    * precompute per member so the survivor kernel pays one dot per pair. */
+  private def assignWithNorm(df: DataFrame, centroids: Array[Array[Float]],
+      vecCol: String, idCol: String): DataFrame =
+    assignKeeping(df, centroids, vecCol, idCol, norm(col(vecCol)).as("__n"))
 
   /** [[kmeansAssign]]'s projection KEEPING the vector — the curation
     * flagship's stage-1 shape ([[graft.operators.Selection.curateSemantic]]):
     * the coherence floor filters on the quantized score while the vector
     * rides through to the dedup/decontamination stages on the same
     * map-only pass, instead of a survivors-ids semi-join back to the
-    * corpus (which would re-scan it). Same kernel, same 6dp quantize,
-    * same id-cast as [[assignWithNorm]] — one assignment semantics. */
+    * corpus (which would re-scan it). Same 6dp quantize as
+    * [[kmeansAssign]]. */
   private[graft] def assignKeepVec(df: DataFrame, centroids: Array[Array[Float]],
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
-    df.select(col(idCol), col(vecCol),
-        assignStruct(centroids, vecCol, None).as("__nc"))
-      .select(col(idCol).cast("long").as(idCol), col(vecCol),
-        col("__nc.cell").as("cell"),
-        Quantize.quantize(col("__nc.cos"), 6).as("cos"))
+    assignKeeping(df, centroids, vecCol, idCol,
+      Quantize.quantize(col("__nc.cos"), 6).as("cos"))
 
   /** [[semanticDedupClustered]] with the VECTORS riding through: same
     * assignment, same survivors kernel, but each cell's members filter
@@ -1801,41 +1714,19 @@ object Similarity {
       maxCell: Option[Long] = None,
       checkpointDir: Option[String] = None): DataFrame = {
     require(centroids.nonEmpty, "semanticDedupClusteredKeepVec: no centroids")
-    val thr = thrOf(minCosine)
-    // with the cap engaged the assignment feeds FOUR consumers (occupancy
-    // count + anti-join probe on the pairing side, occupancy count +
-    // semi-join probe on the pass-through side) — left as lineage, the
-    // full corpus×k assignment re-executes per consumer (measured 12.4 s
-    // vs 6.8 s uncapped at 16×/k=128 before pinning). Uncapped stays pure
-    // lineage: the flagship's one-scan plan lint depends on it.
-    // checkpointDir upgrades the pin to a reliable checkpoint for long
-    // cluster runs (executor loss destroys localCheckpoint blocks).
-    val asg0 = assignWithNorm(embeddings, centroids, vecCol, idCol)
-    val asg = if (maxCell.isDefined) Materialize(asg0, checkpointDir) else asg0
-    val fromPairing = Dedup.capBuckets(asg, Seq("cell"), maxCell)
-      .groupBy(col("cell"))
-      .agg(collect_list(struct(col(idCol), col(vecCol), col("__n"))).as("__m"))
+    val asg = fusedAssignment(embeddings, centroids, maxCell, vecCol, idCol,
+      checkpointDir)
+    val fromPairing = cellMembers(asg, maxCell, vecCol, idCol)
       // the survivors array MUST be hoisted out of the filter lambda:
       // referenced inside it, the O(k²) kernel re-runs per MEMBER (O(k³)
       // per cell — measured 4.5 s vs 0.4 s on the flagship at sf0.1;
       // subexpression elimination does not reach into lambda bodies)
-      .withColumn("__s", graft.plans.VectorExpressions.semDedupSurvivors(
-        col("__m"), thr.toDouble))
+      .withColumn("__s", survivorIds(minCosine))
       .select(col("cell"), explode(filter(col("__m"),
         m => array_contains(col("__s"), m(idCol)))).as("__e"))
       .select(col(s"__e.$idCol").as(idCol), col(s"__e.$vecCol").as(vecCol),
         col("cell"))
-    maxCell match {
-      case None => fromPairing
-      case Some(c) =>
-        // over-cap cells: every member survives (pairing skipped) —
-        // the capBuckets disposition, with the vector riding through
-        val overCap = asg.groupBy(col("cell")).agg(count(lit(1)).as("__occ"))
-          .filter(col("__occ") > c).select(col("cell"))
-        fromPairing.unionByName(
-          asg.join(broadcast(overCap), Seq("cell"), "left_semi")
-            .select(col(idCol), col(vecCol), col("cell")))
-    }
+    withOverCap(fromPairing, maxCell, asg, asg, Seq(idCol, vecCol, "cell"))
   }
 
   /** The least integer whose 10⁻⁶ quotient reaches τ — the quantized
@@ -1856,13 +1747,12 @@ object Similarity {
     * verdicts (a dropped near-dup can be the only ≥τ witness). */
   def writeSemanticRegistry(embeddings: DataFrame, centroids: Array[Array[Float]],
       path: String, vecCol: String = "embedding", idCol: String = "vec_id",
-      append: Boolean = false,
-      prunedAssign: Option[(Int, Int)] = None): Unit = {
+      append: Boolean = false): Unit = {
     require(centroids.nonEmpty, "writeSemanticRegistry: no centroids")
     // append = the production micro-batch loop: after probing, a batch's
     // members (ALL of them — see the every-member contract above) join
     // the registry so later batches dedup against them too
-    Writes(assignWithNorm(embeddings, centroids, vecCol, idCol, prunedAssign)
+    Writes(assignWithNorm(embeddings, centroids, vecCol, idCol)
       .withColumnRenamed("__n", "nrm")
       .repartition(col("cell")))
       .mode(if (append) "append" else "overwrite")
@@ -1883,13 +1773,10 @@ object Similarity {
    * the batch — materialized, so the cell prune below and the main
    * aggregation read the SAME snapshot and scoring runs once even for a
    * non-deterministic batch source — and collects its DISTINCT cells
-   * (≤ #centroids rows — the
-   * centroid array already lives on the driver, so this is
-   * broadcast-small by construction), the registry read is then
-   * cell-partition-PRUNED to exactly those cells (untouched cells can
-   * contribute no batch survivor — registry-only rows are filtered out
-   * anyway), and the union groups on cell once with the row-local kernel
-   * doing the pairing. Rank is encoded in the kernel's order key:
+   * (≤ #centroids rows); the registry read is then cell-partition-PRUNED
+   * to exactly those cells (untouched cells can contribute no batch
+   * survivor), and the union groups on cell once with the row-local
+   * kernel doing the pairing. Rank is encoded in the kernel's order key:
    * registry members carry `id − 2⁶²` (strictly below any batch id,
    * preserving their relative order), so the one kernel serves both
    * forms; negative survivor keys (registry members, never droppable)
@@ -1903,8 +1790,7 @@ object Similarity {
   def semanticDedupIncrement(batch: DataFrame, centroids: Array[Array[Float]],
       registryPath: String, minCosine: Double, maxCell: Option[Long] = None,
       vecCol: String = "embedding", idCol: String = "vec_id",
-      checkpointDir: Option[String] = None,
-      prunedAssign: Option[(Int, Int)] = None): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = {
     require(centroids.nonEmpty, "semanticDedupIncrement: no centroids")
     val spark = batch.sparkSession
     // Materialize the scored batch BEFORE collecting its touched cells:
@@ -1913,7 +1799,7 @@ object Similarity {
     // recomputed differently would silently drop a registry witness), and
     // the centroid scoring pass should run once, not twice. A micro-batch
     // increment is small by construction, so the checkpoint is cheap.
-    val asg = Materialize(assignWithNorm(batch, centroids, vecCol, idCol, prunedAssign)
+    val asg = Materialize(assignWithNorm(batch, centroids, vecCol, idCol)
       .withColumn(idCol, when(col(idCol) < 0L, raise_error(concat(
           lit("semanticDedupIncrement: batch ids must be >= 0, got "), col(idCol))))
         .otherwise(col(idCol))), checkpointDir)
@@ -1928,25 +1814,35 @@ object Similarity {
         .otherwise(col(idCol)))
       .select((col(idCol) - lit(1L << 62)).as(idCol), col(vecCol),
         col("cell").cast("int").as("cell"), col("nrm").as("__n"))
-    val thr = thrOf(minCosine)
     val all = reg.unionByName(asg)
-    val fromPairing = Dedup.capBuckets(all, Seq("cell"), maxCell)
-      .groupBy(col("cell"))
-      .agg(collect_list(struct(col(idCol), col(vecCol), col("__n"))).as("__m"))
-      .select(explode(graft.plans.VectorExpressions.semDedupSurvivors(
-        col("__m"), thr.toDouble)).as(idCol), col("cell"))
+    val fromPairing = cellMembers(all, maxCell, vecCol, idCol)
+      .select(explode(survivorIds(minCosine)).as(idCol), col("cell"))
       .filter(col(idCol) >= 0L)
       .select(col(idCol), col("cell"))
-    maxCell match {
-      case None => fromPairing
-      case Some(c) =>
-        val overCap = all.groupBy(col("cell")).agg(count(lit(1)).as("__occ"))
-          .filter(col("__occ") > c).select(col("cell"))
-        fromPairing.unionByName(
-          asg.join(broadcast(overCap), Seq("cell"), "left_semi")
-            .select(col(idCol), col("cell")))
-    }
+    // a cell is over the cap by its registry ∪ batch occupancy; only the
+    // batch's members pass through
+    withOverCap(fromPairing, maxCell, all, asg, Seq(idCol, "cell"))
   }
+
+  /**
+   * Top-k served from the INT8-DEQUANTIZED vectors — the proof that
+   * [[quantizeInt8]]'s rung is servable, and the accuracy meter for it
+   * (compare against `sim_topk`'s full-precision list): scores are
+   * cosine(dequant(v), q) with the exact same scale/round/clamp algebra
+   * as the quantizer, computed ROW-LOCALLY with deterministic sequential
+   * fold order, so the oracle's `list_dot_product` reproduces every
+   * double bit-for-bit (an exploded sum would be partition-order-
+   * dependent and hash-unstable). Map-only + TakeOrdered, same plan
+   * shape as brute-force `topK`. Scoring is the native
+   * [[graft.plans.VectorKernels.int8DequantCos]] kernel (one codegen'd
+   * pass, ~11× the interpreted HOF form at the 128× sweep); the specs keep
+   * the HOF formulation as the oracle pinning the kernel bit-identical.
+   */
+  def topKInt8(embeddings: DataFrame, query: Seq[Float], k: Int,
+      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
+    Selection.topKBy(embeddings
+      .select(col(idCol), Quantize.q6(graft.plans.VectorExpressions.int8DequantCos(
+        col(vecCol), query.map(_.toDouble))).as("cos")), "cos", idCol, k)
 
   /**
    * Symmetric int8 scalar quantization of an embedding column — the
@@ -1966,27 +1862,6 @@ object Similarity {
    * set — no engine-varying half-even), and an all-zero vector (scale 0)
    * emits code 0 explicitly rather than NaN-casting.
    */
-  /**
-   * Top-k served from the INT8-DEQUANTIZED vectors — the proof that
-   * [[quantizeInt8]]'s rung is servable, and the accuracy meter for it
-   * (compare against `sim_topk`'s full-precision list): scores are
-   * cosine(dequant(v), q) with the exact same scale/round/clamp algebra
-   * as the quantizer, computed ROW-LOCALLY with deterministic sequential
-   * fold order, so the oracle's `list_dot_product` reproduces every
-   * double bit-for-bit (an exploded sum would be partition-order-
-   * dependent and hash-unstable). Map-only + TakeOrdered, same plan
-   * shape as brute-force `topK`. Scoring is the native
-   * [[graft.plans.VectorKernels.int8DequantCos]] kernel (the serving lift the r11
-   * version promised — one codegen'd pass, ~11× the interpreted HOF
-   * form's throughput at the 128× sweep); the specs keep the HOF
-   * formulation as the oracle pinning the kernel bit-identical.
-   */
-  def topKInt8(embeddings: DataFrame, query: Seq[Float], k: Int,
-      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
-    Selection.topKBy(embeddings
-      .select(col(idCol), Quantize.q6(graft.plans.VectorExpressions.int8DequantCos(
-        col(vecCol), query.map(_.toDouble))).as("cos")), "cos", idCol, k)
-
   def quantizeInt8(embeddings: DataFrame,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     val amax = greatest(array_max(col(vecCol)).cast("double"),

@@ -8,7 +8,9 @@ package graft.tools
   *
   * With no query list, dumps every `SparkEntry.queries` entry. Build
   * steps are excluded: their bodies execute eagerly (write + read-back),
-  * so they have no single statement plan to print.
+  * so they have no single statement plan to print. Exchange ids are
+  * renumbered per file ([[stablePlanIds]]), so two runs of one commit
+  * write identical files.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -30,8 +32,8 @@ object PlanDump {
     for (name <- names) {
       try {
         val df = graft.SparkEntry.queries(name)(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val txt = stablePlanIds(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
           txt.getBytes("UTF-8"))
@@ -42,5 +44,15 @@ object PlanDump {
     println(s"PLANDUMP wrote ${names.size - failed.size}/${names.size} to $outDir")
     failed.foreach(f => println(s"PLANDUMP FAILED $f"))
     spark.stop()
+  }
+
+  /** `txt` with every `[plan_id=N]` renumbered 0, 1, … in order of first
+    * appearance. Spark draws these ids from a JVM-global counter, so the
+    * raw numbers depend on what planned before; the renumbered text keeps
+    * which node each reference points to. */
+  private[graft] def stablePlanIds(txt: String): String = {
+    val ids = scala.collection.mutable.HashMap.empty[String, Int]
+    "\\[plan_id=(\\d+)\\]".r.replaceAllIn(txt, m =>
+      s"[plan_id=${ids.getOrElseUpdate(m.group(1), ids.size)}]")
   }
 }

@@ -44,4 +44,33 @@ class AnnIndexSpec extends AnyFunSuite {
       rm(tmp)
     }
   }
+
+  test("key folds in the code fingerprint: a changed one rebuilds, an equal one hits") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_annkey_code").toFile
+    try {
+      val sf = new java.io.File(tmp, "sf"); sf.mkdirs()
+      mkSf(sf, Seq("part-00000.parquet" -> 100))
+      var builds = 0
+      def serve(code: String): String =
+        AnnIndex.ensureDir(s"$tmp/cache/${AnnIndex.keyOf(sf.getPath, code = code)}") { st =>
+          new java.io.File(st).mkdirs(); builds += 1
+        }
+      val a = serve("code-a")
+      assert(builds == 1)
+      assert(serve("code-a") == a && builds == 1, "an equal fingerprint must hit")
+      val b = serve("code-b")
+      assert(b != a && builds == 2, "a changed fingerprint must miss and rebuild")
+      // the default is this JVM's compiled engine: stable, and part of the key
+      assert(AnnIndex.codeFingerprint.matches("[0-9a-f]{12}"))
+      assert(AnnIndex.keyOf(sf.getPath) == AnnIndex.keyOf(sf.getPath,
+        code = AnnIndex.codeFingerprint))
+      assert(AnnIndex.keyOf(sf.getPath) != AnnIndex.keyOf(sf.getPath, code = "code-a"))
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rm)
+        f.delete()
+      }
+      rm(tmp)
+    }
+  }
 }

@@ -131,13 +131,4 @@ class CentroidAssignSpec extends AnyFunSuite {
     val (cSmall, mSmall) = Similarity.coarseOverCentroids(seeds.take(2), 8)
     assert(mSmall.flatten.sorted.toSeq == Seq(0, 1) && cSmall.length == 2)
   }
-
-  test("semanticDedupClustered with full-probe prunedAssign equals the default path") {
-    val base = Similarity.semanticDedupClustered(emb, seeds, minCosine = 0.45)
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val viaPruned = Similarity.semanticDedupClustered(emb, seeds, minCosine = 0.45,
-        prunedAssign = Some((4, 4)))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(viaPruned == base && base.nonEmpty)
-  }
 }

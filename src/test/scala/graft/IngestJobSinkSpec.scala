@@ -55,7 +55,10 @@ class IngestJobSinkSpec extends AnyFunSuite {
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("RecordKeyException")), e)
     assert(state.listFiles.isEmpty && !IngestJob.allComplete(spark, root))
-    // both merges were joined before the failure surfaced
+    // both merges were joined before the failure surfaced; the tracker
+    // hears of a cancelled job's end through the asynchronous listener
+    // bus, so drain it before reading
+    org.apache.spark.TestBus.drain(spark.sparkContext)
     assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
   }
 

@@ -6,7 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Selection.topKBy`, so no hand-written `orderBy(key.desc, …).limit(k)`
   * can plan TakeOrdered above the merge cap. `SparkEntry.scala` is
   * skipped: its fixed-k statements mirror their oracle SQL. Comments are
-  * ignored. */
+  * ignored. In `Similarity`, the per-query heap and the shortlist valve
+  * each keep one caller set, so a serve cannot grow its own election or
+  * verification leg again. */
 class TopKLintSpec extends AnyFunSuite {
 
   private def sources =
@@ -44,6 +46,37 @@ class TopKLintSpec extends AnyFunSuite {
       "def topKBy(df: DataFrame) = df.orderBy(col(k).desc, col(i)).limit(n)").isEmpty)
     assert(topKSites("def g = df.orderBy(col(\"id\")).limit(k)").isEmpty)
     assert(topKSites("def h = Window.orderBy(col(\"s\").desc, col(\"id\"))").isEmpty)
+  }
+
+  /** The enclosing `def` of each call `name(` in `src` (definitions of
+    * `name` itself excluded), in source order. */
+  private def callers(src: String, name: String): Seq[String] =
+    s"\\b$name\\s*\\(".r.findAllMatchIn(src)
+      .filterNot(m => src.substring(0, m.start).matches("(?s).*\\bdef\\s+$"))
+      .map(m => "\\bdef\\s+(\\w+)".r.findAllMatchIn(src.substring(0, m.start))
+        .map(_.group(1)).toSeq.lastOption.getOrElse(""))
+      .toSeq
+
+  private lazy val similarity = sources.collectFirst {
+    case (p, src) if p.getFileName.toString == "Similarity.scala" => src
+  }.get
+
+  test("positive control: the caller scan names each call's enclosing def") {
+    val src = "def a = x.topKStructs(c, 1)\n  private def topKStructs(c: Int) = 1\n" +
+      "def b = {\n  val y = topKStructs (c, 2)\n}"
+    assert(callers(src, "topKStructs") == Seq("a", "b"))
+  }
+
+  test("Similarity: one per-query heap and one cell election elect with topKStructs") {
+    val sites = callers(similarity, "topKStructs").toSet
+    assert(sites == Set("topKPerQuery", "probeCellsJoin"),
+      s"topKStructs called outside topKPerQuery/probeCellsJoin: $sites")
+  }
+
+  test("Similarity: the shortlist valve is pinned only by the rerank legs") {
+    val sites = callers(similarity, "materializeShortlist").toSet
+    assert(sites == Set("rerankBatch", "topKMrlPre", "topKPqRescored"),
+      s"materializeShortlist called outside the shared rerank legs: $sites")
   }
 
   test("every single-relation top-k goes through Selection.topKBy") {

@@ -76,22 +76,16 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     def sigs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (0 until 16).map(j => r.getAs[Long](s"mh_$j"))).toMap
-    val viaAgg = sigs(Dedup.minhash(
+    val viaAgg = sigs(graft.operators.DedupOracles.minhash(
       Dedup.shingleTable(mixed, 3, "text", "doc_id", dedup = false), 16, "doc_id"))
     val viaMap = sigs(Dedup.minhashSignatures(mixed))
     assert(viaMap == viaAgg)
     // the whole banded build plans with no exchange before the write
-    val banded = Dedup.minhashBandedTable(mixed, mapOnly = true)
+    val banded = Dedup.minhashBandedTable(mixed)
     banded.collect()
     val nodes = SparkTestBase.planNodeNames(banded)
     assert(!nodes.exists(_.contains("Exchange")),
       s"map-only banded build shuffled: $nodes")
-    // and band values agree with the default path
-    val dflt = Dedup.minhashBandedTable(mixed).collect()
-      .map(r => (r.getLong(0), r.getAs[Int]("band"), r.getAs[Long]("bucket"))).toSet
-    val mo = banded.collect()
-      .map(r => (r.getLong(0), r.getAs[Int]("band"), r.getAs[Long]("bucket"))).toSet
-    assert(mo == dflt)
   }
 
   test("PQ on-codebook: zero quantization error makes ADC top-k equal brute force") {
@@ -717,6 +711,55 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     byQ.foreach { case (q, rs) =>
       assert(rs.exists(_.getAs[Long]("vec_id") == q),
         s"query $q's own vector missing from its IVF-PQ top-5") }
+  }
+
+  test("IVF-PQ and rescored PQ batch joins drop a zero-norm corpus row, not abort") {
+    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val clean = e.filter(col("vec_id") < 300).select("vec_id", "embedding")
+    val corpus = clean.unionByName(
+      Seq((9999L, Seq.fill(64)(0f))).toDF("vec_id", "embedding"))
+    val queries = e.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("q_id"), col("embedding"))
+    val ivf = SimilarityOracles.buildIvfIndex(corpus, nCells = 8, iters = 1)
+    val pq = SimilarityOracles.trainPq(e, m = 8, k = 16, iters = 1)
+    val encoded = Similarity.pqEncode(corpus, pq)
+    val cellCodes = Similarity.buildCellCodes(ivf, encoded)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"),
+        r.getAs[Double]("cos"))).toSet
+    // corpus-covering overscan: the zero row reaches every shortlist, its
+    // null rerank score drops it, and the rest is the exact join over the
+    // corpus without it
+    val exact = rows(Similarity.topKJoin(clean, queries, k = 5))
+    val ivfPq = rows(Similarity.topKJoinIvfPq(cellCodes, corpus, ivf, pq,
+      queries, k = 5, nProbe = 8, overscan = 61))
+    val pqRescored = rows(Similarity.topKJoinPqRescored(encoded, corpus,
+      queries, pq, k = 5, overscan = 61))
+    assert(ivfPq == exact)
+    assert(pqRescored == exact)
+    // the unguarded exact join still aborts on it under ANSI
+    intercept[Exception](Similarity.topKJoin(corpus, queries, k = 5).collect())
+  }
+
+  test("a pre-nrm LSH or IVF index fails to read with the named error") {
+    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .filter(col("vec_id") < 50)
+    val lshDir = java.nio.file.Files.createTempDirectory("lsh_nonrm").toString
+    Similarity.buildLshIndex(e, dim = 64).drop("nrm")
+      .write.mode("overwrite").partitionBy("table", "bucket").parquet(lshDir)
+    val lshErr = intercept[IllegalArgumentException](
+      Similarity.readLshIndex(spark, lshDir))
+    assert(lshErr.getMessage.contains("no persisted nrm column"), lshErr.getMessage)
+    val ivf = SimilarityOracles.buildIvfIndex(e, nCells = 4, iters = 1)
+    val ivfDir = java.nio.file.Files.createTempDirectory("ivf_nonrm").toString
+    Similarity.writeIvfIndex(
+      Similarity.IvfIndex(ivf.assignments.drop("nrm"), ivf.centroids), ivfDir)
+    val ivfErr = intercept[IllegalArgumentException](
+      Similarity.readIvfIndex(spark, ivfDir))
+    assert(ivfErr.getMessage.contains("no persisted nrm column"), ivfErr.getMessage)
+    // a current index reads back
+    Similarity.writeIvfIndex(ivf, ivfDir)
+    assert(Similarity.readIvfIndex(spark, ivfDir).assignments.columns.contains("nrm"))
   }
 
   test("incremental paragraph dedup equals full-corpus dedup restricted to the increment") {
@@ -1720,6 +1763,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     val hot = (0 until 50).map(i => (i.toLong, Seq(1.0f, 0.0f), 0, 0L))
     val ok = Seq((100L, Seq(0.0f, 1.0f), 1, 5L), (101L, Seq(0.0f, 0.5f), 1, 5L))
     val idx = (hot ++ ok).toDF("vec_id", "embedding", "table", "bucket")
+      .withColumn("nrm", Similarity.norm(col("embedding"))) // as buildLshIndex persists it
     assert(Similarity.nearDupPairsFromIndex(idx, minCosine = 0.9).count() == 50L * 49 / 2 + 1)
     val capped = Similarity
       .nearDupPairsFromIndex(idx, minCosine = 0.9, maxBucket = Some(10L)).collect()
