@@ -8,8 +8,8 @@ import graft.operators.Similarity.{IvfIndex, PqModel}
 
 /**
  * Prebuilt, persisted serving artifacts per data directory — the
- * production split the declared `sim_*` queries (ANN indexes) and
- * `quality_logreg_inc` (trained quality model) serve from.
+ * production split the declared `sim_*`, registry and model queries
+ * serve from.
  *
  * WHY: an ANN deployment trains its models and lays out its index ONCE
  * (then grows it incrementally — [[growServingLayout]]); queries only
@@ -18,12 +18,14 @@ import graft.operators.Similarity.{IvfIndex, PqModel}
  * serving — and the triad of
  * ivfpq queries would train the same models three times over. This
  * object is the Fixtures-style bridge: the first query against a data
- * directory builds every artifact through the library's own persist
- * writers ([[Similarity.writeLshIndex]], [[Similarity.writeIvfIndex]],
- * [[Similarity.writePqIndex]], [[Similarity.writeCellCodes]] — the
- * partition-pruned layouts SCALING.md documents), and every later
- * query reads the persisted relations. Training cost stays visible as
- * its own declared build step (`sim_index_build` in SparkEntry.builds runs unconditionally).
+ * directory builds the artifact family it reads through the library's
+ * own persist writers ([[Similarity.writeLshIndex]],
+ * [[Similarity.writeIvfIndex]], [[Similarity.writePqIndex]],
+ * [[Similarity.writeCellCodes]] — the partition-pruned layouts
+ * SCALING.md documents), and every later query reads the persisted
+ * relations. Training cost stays visible as its own declared build step:
+ * each [[Family]] names one, and `SparkEntry.builds` runs it
+ * unconditionally.
  *
  * DETERMINISM: every build step (hash-ordered k-means seeding, Lloyd
  * rounds over exact means, parquet float round-trips) is deterministic
@@ -31,13 +33,14 @@ import graft.operators.Similarity.{IvfIndex, PqModel}
  * bit-identical to one that trained inline — the `*_full` bridge
  * oracles hash-verify exactly that equality end to end.
  *
- * STALENESS: the cache key fingerprints every file under the
- * embeddings parquet (relative path + length + mtime, recursively), so
- * regenerated test data — even a single rewritten part file — can never
- * be served a previous dataset's index; and it fingerprints the engine's
- * own class files ([[codeFingerprint]]), so an artifact is only ever
- * served to the code that built it — a changed writer or layout rebuilds
- * instead of serving an older artifact.
+ * STALENESS: an entry's [[Key]] fingerprints every file under the
+ * family's source table (relative path + length + mtime, recursively),
+ * so regenerated test data — even a single rewritten part file — can
+ * never be served a previous dataset's artifact; and it fingerprints the
+ * engine's own class files ([[codeFingerprint]]), so an artifact is only
+ * ever served to the code that built it. A commit prunes the entries
+ * other code left over the same data, all but the most recently served
+ * one ([[prune]]).
  */
 object AnnIndex {
 
@@ -65,6 +68,42 @@ object AnnIndex {
     * so structured corpora buy their speed back immediately. */
   val ServeNProbe = 12
   val ServeOverscan = 50
+
+  /** Matryoshka serving cut width shared by every declared MRL query. */
+  val MrlDims = 16
+
+  // ------------------------------------------------- the artifact cache
+
+  /** One cached artifact family, declared once: the build step that
+    * times its build (`SparkEntry.builds`), the source table its data key
+    * fingerprints, the suffix that names its cache entries, and the build
+    * that lays it out under a directory, returning a one-row-per-artifact
+    * summary. */
+  private[graft] final case class Family(step: String, table: String,
+      suffix: String, build: (SparkSession, String, String) => DataFrame)
+
+  private val Ann = Family("sim_index_build", "embeddings", "", buildAll)
+  private val Mrl = Family("mrl_index_build", "embeddings", "_mrl", buildMrlPrefixes)
+  private val SemReg = Family("sem_registry_build", "embeddings", "_semreg", buildSemRegistry)
+  private val SubstrReg =
+    Family("substr_registry_build", "documents", "_substrreg", buildSubstrRegistry)
+  private val Logreg = Family("logreg_model_build", "documents", "_logreg", buildLogregModel)
+  private val LmRef = Family("lm_ref_model_build", "documents", "_lmref", buildLmRefModel)
+  private val Dsir = Family("dsir_model_build", "documents", "_dsir", buildDsirModel)
+  private val Nb = Family("nb_model_build", "documents", "_nb", buildNbModel)
+
+  private[graft] val families: Seq[Family] =
+    Seq(Ann, Mrl, SemReg, SubstrReg, Logreg, LmRef, Dsir, Nb)
+
+  /** `fam`'s build step: the full training and layout cost as its own
+    * ledger number, run unconditionally into a throwaway directory that
+    * is deleted before returning (Bench invokes builds repeatedly). */
+  private[graft] def buildFresh(spark: SparkSession, sfDir: String,
+      fam: Family): DataFrame = {
+    val tmp = java.nio.file.Files.createTempDirectory(s"graft_${fam.step}").toFile
+    try fam.build(spark, sfDir, tmp.getPath)
+    finally deleteRecursively(tmp)
+  }
 
   private def cacheRoot: String =
     sys.env.getOrElse("GRAFT_ANN_CACHE",
@@ -100,41 +139,194 @@ object AnnIndex {
     md.digest().take(6).map("%02x".format(_)).mkString
   }
 
+  /** A cache entry's key, in two parts: `data` fingerprints the source
+    * table (behind the data directory's name, so a listing reads), `code`
+    * the engine that builds ([[codeFingerprint]]). An entry lives at
+    * `<root>/<data>_<code><suffix>`; keeping the parts apart lets a
+    * commit find the entries other code built over the same data. */
+  private[graft] final case class Key(data: String, code: String)
+
   private[graft] def keyOf(sfDir: String, table: String = "embeddings",
-      code: String = codeFingerprint): String = {
-    // fingerprint = the engine's code plus every file under the source
-    // table's parquet (Spark datasets are directories), relative path +
-    // length + mtime, sorted — a regenerated part file, added part, or
-    // re-written footer all flip the key even when the top-level entry
-    // looks unchanged
+      code: String = codeFingerprint): Key = {
+    // every file under the source table's parquet (Spark datasets are
+    // directories), relative path + length + mtime, sorted — a
+    // regenerated part file, added part, or re-written footer all flip
+    // the key even when the top-level entry looks unchanged
     val root = new java.io.File(s"$sfDir/$table.parquet")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().sortBy(_.getName).toSeq.flatMap(walk)
       else Seq(f)
-    val files = walk(root)
     // RELATIVE path, not bare name: partitioned layouts repeat part-file
     // names across subdirectories (lang=en/part-00000 vs lang=de/part-00000),
     // and a name-keyed multiset cannot see an mtime-preserving content swap
     // between them
-    val fp = s"$sfDir|$code|${files.map(f =>
+    val fp = s"$sfDir|${walk(root).map(f =>
       s"${root.toPath.relativize(f.toPath)}|${f.length()}|${f.lastModified()}").mkString(";")}"
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(fp.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + md
+    Key(new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9._-]", "_") +
+      "_" + Keys.md5Hex12(fp), code)
   }
 
-  private def dirFor(sfDir: String): String = s"$cacheRoot/${keyOf(sfDir)}"
+  private val Ready = "_GRAFT_READY"
+
+  /** Entries this JVM has served (each touched once, see [[ensureDir]]). */
+  private val served = scala.collection.mutable.Set.empty[String]
+
+  /**
+   * The one commit path for `key`'s entry of the family named by
+   * `suffix` under `root`, cross-PROCESS safe: an absent entry is built
+   * into a process-unique staging directory, marked `_GRAFT_READY`, and
+   * atomically renamed into place, so a concurrent JVM (bench and verify
+   * sharing the default cache) sees the complete entry or none of it —
+   * never a half-written index. The rename loser deletes its staging copy
+   * and serves the winner's (identical — builds are deterministic, see
+   * the class doc). `synchronized` serializes threads within this JVM so
+   * one session builds once, not once per query. A commit [[prune]]s
+   * what other code left over the same data; each JVM's first serve of an
+   * entry touches its marker, the "most recently served" clock prune
+   * reads.
+   */
+  private[graft] def ensureDir(root: String, key: Key, suffix: String)(
+      build: String => Unit): String = synchronized {
+    val path = s"$root/${key.data}_${key.code}$suffix"
+    val marker = new java.io.File(path, Ready)
+    if (!marker.exists()) {
+      val staging = new java.io.File(
+        s"$path.staging_${ProcessHandle.current().pid()}")
+      deleteRecursively(staging)
+      build(staging.getPath)
+      java.nio.file.Files.createFile(new java.io.File(staging, Ready).toPath)
+      try {
+        java.nio.file.Files.move(staging.toPath, new java.io.File(path).toPath,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        prune(root, key, suffix)
+      } catch {
+        case _: java.nio.file.FileSystemException =>
+          // another process committed first; its entry is byte-equivalent
+          // — serve theirs if it is complete
+          deleteRecursively(staging)
+          if (!marker.exists()) throw new IllegalStateException(
+            s"artifact cache entry $path exists without its $Ready marker " +
+              "(partial build from a crashed or pre-atomic writer) — " +
+              "delete it and retry")
+      }
+    }
+    if (served.add(path)) marker.setLastModified(System.currentTimeMillis())
+    path
+  }
+
+  /** After `key`'s entry commits: of the complete entries that OTHER code
+    * built for the same family and data key, keep the most recently
+    * served one — a parent/change A/B pair shares the default root — and
+    * delete the rest. A directory without its marker is never touched
+    * ([[ensureDir]] fails loudly on it instead). */
+  private def prune(root: String, key: Key, suffix: String): Unit = {
+    import java.util.regex.Pattern.quote
+    val sibling = (quote(s"${key.data}_") + "([0-9a-f]{12})" + quote(suffix)).r
+    Option(new java.io.File(root).listFiles()).toSeq.flatten
+      .filter(d => d.getName match {
+        case sibling(code) => code != key.code
+        case _ => false
+      })
+      .map(d => d -> new java.io.File(d, Ready))
+      .filter(_._2.exists())
+      .sortBy(-_._2.lastModified())
+      .drop(1)
+      .foreach(e => deleteRecursively(e._1))
+  }
+
+  private def deleteRecursively(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
+    if (f.exists()) f.delete()
+  }
+
+  /** The one serve path: `fam`'s entry for `sfDir` is keyed, built and
+    * committed if absent ([[ensureDir]]), and `rel` under it is loaded by
+    * `read` once per session ([[SessionMemo]]). The readers pay
+    * driver-side work per call — `readIvfIndex` collects centroids (a
+    * Spark job), `readPqIndex` a collect, and every reader re-lists
+    * parquet footers — for artifacts that are IMMUTABLE by construction:
+    * the entry path embeds both key parts, so changed data or code
+    * resolves to a different path and is never served a stale model. */
+  private def serve[T <: AnyRef](spark: SparkSession, sfDir: String,
+      fam: Family, rel: String)(read: String => T): T = {
+    val dir = ensureDir(cacheRoot, keyOf(sfDir, fam.table), fam.suffix)(
+      fam.build(spark, sfDir, _).collect())
+    SessionMemo(spark, s"$dir/$rel")(read(s"$dir/$rel"))
+  }
+
+  def lshFull(spark: SparkSession, sfDir: String): DataFrame =
+    serve(spark, sfDir, Ann, "lsh_full")(Similarity.readLshIndex(spark, _))
+  def lsh300(spark: SparkSession, sfDir: String): DataFrame =
+    serve(spark, sfDir, Ann, "lsh_300")(Similarity.readLshIndex(spark, _))
+  def ivfFull(spark: SparkSession, sfDir: String): IvfIndex =
+    serve(spark, sfDir, Ann, "ivf_full")(Similarity.readIvfIndex(spark, _))
+  def ivf300(spark: SparkSession, sfDir: String): IvfIndex =
+    serve(spark, sfDir, Ann, "ivf_300")(Similarity.readIvfIndex(spark, _))
+  /** (full-corpus codes, model). */
+  def pqFull(spark: SparkSession, sfDir: String): (DataFrame, PqModel) =
+    serve(spark, sfDir, Ann, "pq_full")(Similarity.readPqIndex(spark, _))
+  def codes300(spark: SparkSession, sfDir: String): DataFrame =
+    serve(spark, sfDir, Ann, "codes_300")(spark.read.parquet(_))
+  def cellCodes300(spark: SparkSession, sfDir: String): DataFrame =
+    serve(spark, sfDir, Ann, "cellcodes_300")(Similarity.readCellCodes(spark, _))
+  def mrlFull(spark: SparkSession, sfDir: String): DataFrame =
+    serve(spark, sfDir, Mrl, "mrl_full")(Similarity.readMrlPrefixes(spark, _))
+  def mrl300(spark: SparkSession, sfDir: String): DataFrame =
+    serve(spark, sfDir, Mrl, "mrl_300")(Similarity.readMrlPrefixes(spark, _))
+
+  /** Path of the persisted semantic-dedup registry for `sfDir`, assigned
+    * under [[kmeansSeeds]] — the centroids its probe must pass. Served,
+    * not rebuilt per probe, so `dedup_semantic_inc` measures the
+    * increment PROBE only — the production serve split: a live pipeline
+    * writes its registry once and appends after each probed batch. */
+  def semRegistryPath(spark: SparkSession, sfDir: String): String =
+    serve(spark, sfDir, SemReg, "registry")(identity)
+  /** Path of the persisted substring-dedup registry for `sfDir`:
+    * `dedup_substr_inc` serves the increment probe only. */
+  def substrRegistryPath(spark: SparkSession, sfDir: String): String =
+    serve(spark, sfDir, SubstrReg, "registry")(identity)
+  /** The persisted (bucket, w) logreg model `quality_logreg_inc` scores
+    * from map-only. */
+  def logregModel(spark: SparkSession, sfDir: String): DataFrame =
+    serve(spark, sfDir, Logreg, "model")(spark.read.parquet(_))
+  /** The persisted reference-LM model (cbg, uni): serving folds the
+    * left-context totals from cbg itself since the r21 window fold, so
+    * the persisted `cw` relation (still written — one model serves every
+    * reader, including external ones) is not loaded here. */
+  def lmRefModel(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
+    (serve(spark, sfDir, LmRef, "cbg")(spark.read.parquet(_)),
+      serve(spark, sfDir, LmRef, "uni")(spark.read.parquet(_)))
+  /** The persisted DSIR (bucket, log_ratio) model `dsir_weights_inc`
+    * scores from. */
+  def dsirModel(spark: SparkSession, sfDir: String): DataFrame =
+    serve(spark, sfDir, Dsir, "model")(spark.read.parquet(_))
+  /** Path of the persisted NB router model (path-based: the serve,
+    * `nbClassifyFromModel`, reads two relations). */
+  def nbModelPath(spark: SparkSession, sfDir: String): String =
+    serve(spark, sfDir, Nb, "model")(identity)
+
+  /** The k-means seed model of `sfDir`'s embeddings (its 8 lowest-id
+    * vectors): the centroids the semantic registry is assigned under and
+    * every declared k-means query starts from. A constant of a data
+    * directory, fetched once per JVM — Bench and Verify are fresh JVMs
+    * per run, so regenerated test data is never served a stale model. */
+  private val seedMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]()
+  def kmeansSeeds(spark: SparkSession, sfDir: String): Array[Array[Float]] =
+    seedMemo.computeIfAbsent(sfDir, _ =>
+      Similarity.kmeansSeeds(embeddingsOf(spark, sfDir), 8))
+
+  // ---------------------------------------------------- family builds
 
   private def embeddingsOf(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/embeddings.parquet")
 
-  /**
-   * Train + lay out every serving artifact for `sfDir`'s embeddings —
-   * the build the cache amortizes, also runnable unconditionally (the
-   * `sim_index_build` build step) so training cost stays a measured number.
-   * Returns a one-row-per-artifact summary.
-   */
-  def buildAll(spark: SparkSession, sfDir: String, path: String): DataFrame = {
+  private def documentsOf(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(s"$sfDir/documents.parquet")
+
+  /** Train + lay out every ANN serving artifact for `sfDir`'s embeddings
+    * (the `sim_index_build` family). */
+  private def buildAll(spark: SparkSession, sfDir: String, path: String): DataFrame = {
     import spark.implicits._
     val e = embeddingsOf(spark, sfDir)
     val corpus300 = e.filter(col("vec_id") < 300)
@@ -188,129 +380,11 @@ object AnnIndex {
       .toDF("artifact", "n")
   }
 
-  /**
-   * Build-once guard, cross-PROCESS safe: artifacts are built into a
-   * process-unique staging directory and atomically renamed into place,
-   * so a concurrent JVM (bench and verify sharing the default cache)
-   * either sees the complete committed artifact set or none of it —
-   * never a half-written index. The rename loser deletes its staging
-   * copy and serves the winner's (identical — builds are deterministic,
-   * see the class doc). `synchronized` still serializes threads within
-   * this JVM so one session builds once, not once per query.
-   */
-  private def ensure(spark: SparkSession, sfDir: String): String =
-    ensureDir(dirFor(sfDir))(staging =>
-      buildAll(spark, sfDir, staging).collect())
-
-  /** The atomic-commit guard behind [[ensure]], reusable for any
-    * per-data-directory artifact family (the trained logreg quality
-    * model rides it too — see [[logregModel]]): `build` populates a
-    * staging directory, which commits into `path` by atomic rename. */
-  private[graft] def ensureDir(path: String)(build: String => Unit): String = synchronized {
-    val marker = new java.io.File(path, "_GRAFT_READY")
-    if (!marker.exists()) {
-      val staging = new java.io.File(
-        s"$path.staging_${ProcessHandle.current().pid()}")
-      deleteRecursively(staging)
-      build(staging.getPath)
-      java.nio.file.Files.createFile(
-        new java.io.File(staging, "_GRAFT_READY").toPath)
-      try {
-        java.nio.file.Files.move(staging.toPath, new java.io.File(path).toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException |
-            _: java.nio.file.AccessDeniedException |
-            _: java.nio.file.FileSystemException =>
-          // another process committed first; its artifact set is
-          // byte-equivalent — drop ours if theirs is complete
-          if (marker.exists()) deleteRecursively(staging)
-          else throw new IllegalStateException(
-            s"ANN cache at $path exists without its _GRAFT_READY marker " +
-              "(partial build from a crashed or pre-atomic writer) — " +
-              "delete it and retry")
-      }
-    }
-    path
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    if (f.exists()) f.delete()
-  }
-
-  /** Loaded-artifact memo. The model readers pay driver-side work per
-    * call — `readIvfIndex` collects centroids (a Spark job), `readPqIndex`
-    * runs a head + a collect, and every reader re-lists/re-reads parquet
-    * footers — for artifacts that are IMMUTABLE by construction: the memo
-    * key is the resolved cache path, which embeds the data fingerprint
-    * (`keyOf`), so regenerated test data resolves to a different path and
-    * can never be served a stale model. Weak session keys, like
-    * SparkEntry's table memo: stopped test sessions must not pin plans. */
-  private val loadMemo =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, AnyRef]]()
-  private def memo[T <: AnyRef](spark: SparkSession, key: String)(load: => T): T = {
-    val per = loadMemo.synchronized {
-      var m = loadMemo.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-        loadMemo.put(spark, m)
-      }
-      m
-    }
-    per.computeIfAbsent(key, _ => load).asInstanceOf[T]
-  }
-
-  def lshFull(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = s"${ensure(spark, sfDir)}/lsh_full"
-    memo(spark, p)(Similarity.readLshIndex(spark, p))
-  }
-
-  def lsh300(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = s"${ensure(spark, sfDir)}/lsh_300"
-    memo(spark, p)(Similarity.readLshIndex(spark, p))
-  }
-
-  def ivfFull(spark: SparkSession, sfDir: String): IvfIndex = {
-    val p = s"${ensure(spark, sfDir)}/ivf_full"
-    memo(spark, p)(Similarity.readIvfIndex(spark, p))
-  }
-
-  def ivf300(spark: SparkSession, sfDir: String): IvfIndex = {
-    val p = s"${ensure(spark, sfDir)}/ivf_300"
-    memo(spark, p)(Similarity.readIvfIndex(spark, p))
-  }
-
-  /** (full-corpus codes, model). */
-  def pqFull(spark: SparkSession, sfDir: String): (DataFrame, PqModel) = {
-    val p = s"${ensure(spark, sfDir)}/pq_full"
-    memo(spark, p)(Similarity.readPqIndex(spark, p))
-  }
-
-  def codes300(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = s"${ensure(spark, sfDir)}/codes_300"
-    memo(spark, p)(spark.read.parquet(p))
-  }
-
-  def cellCodes300(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = s"${ensure(spark, sfDir)}/cellcodes_300"
-    memo(spark, p)(Similarity.readCellCodes(spark, p))
-  }
-
-  // --------------------------------------------- MRL prefix relations
-
-  /** Matryoshka serving cut width shared by every declared MRL query. */
-  val MrlDims = 16
-
   /** Lay out the persisted MRL prefix relations (full corpus + the <300
-    * batch-join corpus) — the `mrl_index_build` build step body: one
-    * map-only projection pass each ([[Similarity.writeMrlPrefixes]]),
-    * kDims/Dim of the corpus bytes on disk. Kept OUTSIDE [[buildAll]]
-    * so existing committed ANN cache directories (keyed on the data
-    * fingerprint, not the artifact set) stay valid; the prefixes live
-    * under their own `_mrl` fingerprint directory, the
-    * [[logregModel]] precedent. */
-  def buildMrlPrefixes(spark: SparkSession, sfDir: String, path: String): DataFrame = {
+    * batch-join corpus) — the `mrl_index_build` family: one map-only
+    * projection pass each ([[Similarity.writeMrlPrefixes]]), kDims/Dim of
+    * the corpus bytes on disk. */
+  private def buildMrlPrefixes(spark: SparkSession, sfDir: String, path: String): DataFrame = {
     import spark.implicits._
     val e = embeddingsOf(spark, sfDir)
     // the two prefix relations are independent map-only writes — submit
@@ -324,72 +398,26 @@ object AnnIndex {
       .toDF("artifact", "n")
   }
 
-  private def ensureMrl(spark: SparkSession, sfDir: String): String = {
-    val p = s"$cacheRoot/${keyOf(sfDir)}_mrl"
-    ensureDir(p)(staging => buildMrlPrefixes(spark, sfDir, staging).collect())
-    p
-  }
-
-  def mrlFull(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = s"${ensureMrl(spark, sfDir)}/mrl_full"
-    memo(spark, p)(Similarity.readMrlPrefixes(spark, p))
-  }
-
-  // ------------------------------------------- semantic-dedup registry
-
   /** Lay out the persisted semantic-dedup registry (vec_id < 300 assigned
-    * under `centroids`, cell-partitioned) — the `sem_registry_build` build
-    * step body. The cache key is (embeddings fingerprint, centroid
-    * fingerprint) — see [[semRegistryPath]]. */
-  def buildSemRegistry(spark: SparkSession, sfDir: String, path: String,
-      centroids: Array[Array[Float]]): DataFrame = {
+    * under [[kmeansSeeds]], cell-partitioned) — the `sem_registry_build`
+    * family. The centroids are a function of the data, so the data key
+    * covers them. */
+  private def buildSemRegistry(spark: SparkSession, sfDir: String,
+      path: String): DataFrame = {
     import spark.implicits._
     Similarity.writeSemanticRegistry(
-      embeddingsOf(spark, sfDir).filter(col("vec_id") < 300), centroids,
-      s"$path/registry")
+      embeddingsOf(spark, sfDir).filter(col("vec_id") < 300),
+      kmeansSeeds(spark, sfDir), s"$path/registry")
     Seq(("sem_registry", spark.read.parquet(s"$path/registry").count()))
       .toDF("artifact", "n")
   }
 
-  /** Path of the persisted semantic-dedup registry for `sfDir` (built
-    * once per data directory under the shared fingerprint cache), so
-    * `dedup_semantic_inc` measures the increment PROBE only — the
-    * production serve split: a live pipeline writes its registry once and
-    * appends after each probed batch, it does not rebuild per probe.
-    * The cache key folds in a CENTROID fingerprint (r16 ADVICE): the
-    * registry's cells are a function of (data, centroids), and keying on
-    * the data alone would silently serve a registry built under OTHER
-    * centroids to a caller passing different ones — the "centroids must
-    * be deterministic from the data" contract, now enforced by the key
-    * instead of merely documented. */
-  def semRegistryPath(spark: SparkSession, sfDir: String,
-      centroids: Array[Array[Float]]): String = {
-    val p = s"$cacheRoot/${keyOf(sfDir)}_semreg_${centroidKey(centroids)}"
-    ensureDir(p)(staging =>
-      buildSemRegistry(spark, sfDir, staging, centroids).collect())
-    s"$p/registry"
-  }
-
-  /** Content fingerprint of a centroid model — MD5 over the exact float
-    * bits plus row lengths, truncated to 64 bits for a path-friendly
-    * key. Any reordered, resized or perturbed centroid flips it. */
-  private def centroidKey(centroids: Array[Array[Float]]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val bb = java.nio.ByteBuffer.allocate(
-      4 * (centroids.iterator.map(_.length).sum + centroids.length))
-    centroids.foreach { c => bb.putInt(c.length); c.foreach(bb.putFloat) }
-    md.update(bb.array(), 0, bb.position())
-    md.digest().take(8).map("%02x".format(_)).mkString
-  }
-
   /** Lay out the persisted substring-dedup registry (original windows of
-    * docs < 250, md5-bridge keyed) — the `substr_registry_build` build
-    * step body. */
-  def buildSubstrRegistry(spark: SparkSession, sfDir: String,
+    * docs < 250, md5-bridge keyed) — the `substr_registry_build` family. */
+  private def buildSubstrRegistry(spark: SparkSession, sfDir: String,
       path: String): DataFrame = {
     import spark.implicits._
-    val d = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
+    val d = documentsOf(spark, sfDir).select(col("doc_id"), col("text"))
     Writes(graft.operators.Dedup.substrRegistry(d.filter(col("doc_id") < 250),
         n = 20, md5Bridge = true))
       .mode("overwrite").parquet(s"$path/registry")
@@ -397,13 +425,84 @@ object AnnIndex {
       .toDF("artifact", "n")
   }
 
-  /** Path of the persisted substring-dedup registry for `sfDir`
-    * ([[semRegistryPath]]'s contract, keyed on documents.parquet):
-    * `dedup_substr_inc` serves the increment probe only. */
-  def substrRegistryPath(spark: SparkSession, sfDir: String): String = {
-    val p = s"$cacheRoot/${keyOf(sfDir, "documents")}_substrreg"
-    ensureDir(p)(staging => buildSubstrRegistry(spark, sfDir, staging).collect())
-    s"$p/registry"
+  /** Train + persist the logistic-regression quality model for `sfDir`'s
+    * documents — the `logreg_model_build` family (deterministic: the
+    * 9dp-quantized GD loop, so serving from the cache is bit-identical to
+    * training inline). The summary's n is the persisted relation's row
+    * count, read BACK from parquet so the build verifiably round-trips. */
+  private def buildLogregModel(spark: SparkSession, sfDir: String, path: String): DataFrame = {
+    import spark.implicits._
+    Writes(graft.operators.Selection.logregModel(
+        documentsOf(spark, sfDir), col("lang") === "en"))
+      .mode("overwrite").parquet(s"$path/model")
+    Seq(("logreg_model", spark.read.parquet(s"$path/model").count()))
+      .toDF("artifact", "n")
+  }
+
+  /** Train + persist the reference-LM model (bigram counts, left-context
+    * totals, unigram counts — `Corpus.lmRefModelRelations` over the
+    * declared 20% hash-sample reference) — the `lm_ref_model_build`
+    * family; counts are exact longs, so serving from the parquet round
+    * trip is bit-identical to folding inline. Persisted UNPRUNED: count
+    * pruning is a serve-time floor, so one model serves every
+    * `min_bigram_count`. */
+  private def buildLmRefModel(spark: SparkSession, sfDir: String, path: String): DataFrame = {
+    import spark.implicits._
+    // pin the reference sample: cbg and uni are independent folds over
+    // the same tokenization, and cw derives from the WRITTEN cbg — left
+    // as lineage, the three writes would re-execute the reference scan
+    // and the pairs aggregation ~3× (r19 review finding)
+    val ref = graft.operators.Materialize(
+      documentsOf(spark, sfDir)
+        .filter(graft.operators.Corpus.hashBucket(col("doc_id")) < 20)
+        .select(col("doc_id"), col("text")), None)
+    val (cbg, _, uni) = graft.operators.Corpus.lmRefModelRelations(ref)
+    // Two independent job chains over the pinned reference — {cbg write →
+    // cw fold+write} and {uni write} — submitted concurrently ([[Overlap]],
+    // the buildAll posture): the scheduler back-fills each chain's
+    // single-task tail stages with the other's work, and the read-back
+    // counts overlap the same way. Determinism is untouched — each
+    // artifact's bytes depend only on its own deterministic lineage.
+    try {
+      Overlap.all(spark)(Seq(
+        () => {
+          Writes(cbg).mode("overwrite").parquet(s"$path/cbg")
+          Writes(spark.read.parquet(s"$path/cbg").groupBy(col("w1"))
+            .agg(org.apache.spark.sql.functions.sum(col("c2")).as("c1")))
+            .mode("overwrite").parquet(s"$path/cw")
+        },
+        () => Writes(uni).mode("overwrite").parquet(s"$path/uni")))
+      Overlap.all(spark)(Seq("cbg", "cw", "uni").map(a =>
+        () => a -> spark.read.parquet(s"$path/$a").count()))
+        .toDF("artifact", "n")
+    } finally {
+      // Overlap returns or throws only once every body has finished, so
+      // no job still reads the pinned blocks
+      graft.operators.Materialize.release(ref)
+    }
+  }
+
+  /** Train + persist the DSIR (bucket, log_ratio) importance model — the
+    * `dsir_model_build` family. */
+  private def buildDsirModel(spark: SparkSession, sfDir: String, path: String): DataFrame = {
+    import spark.implicits._
+    Writes(graft.operators.Selection.dsirModel(
+        documentsOf(spark, sfDir), col("lang") === "en"))
+      .mode("overwrite").parquet(s"$path/model")
+    Seq(("dsir_model", spark.read.parquet(s"$path/model").count()))
+      .toDF("artifact", "n")
+  }
+
+  /** Train + persist the NB domain-router model on the declared train
+    * split (hash buckets < 80) — the `nb_model_build` family. */
+  private def buildNbModel(spark: SparkSession, sfDir: String, path: String): DataFrame = {
+    import spark.implicits._
+    graft.operators.Selection.writeNbModel(
+      documentsOf(spark, sfDir)
+        .filter(graft.operators.Corpus.hashBucket(col("doc_id")) < 80),
+      s"$path/model")
+    Seq(("nb_model", spark.read.parquet(s"$path/model/terms").count()))
+      .toDF("artifact", "n")
   }
 
   // --------------------------------------- user-owned serving layouts
@@ -577,145 +676,5 @@ object AnnIndex {
     val incId = incrementKey(increment, idCol, vecCol)
     for (rel <- Seq("ivf/assignments", "pq/codes", "cellcodes", "prefixes"))
       IncProtocol.appendOnce(spark, s"$path/$rel", incId)(_ => ())
-  }
-
-  def mrl300(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = s"${ensureMrl(spark, sfDir)}/mrl_300"
-    memo(spark, p)(Similarity.readMrlPrefixes(spark, p))
-  }
-
-  // --------------------------------------------- trained quality filter
-
-  /** Train + persist the logistic-regression quality model for `sfDir`'s
-    * documents — the build the logreg cache amortizes, also runnable
-    * unconditionally (the `logreg_model_build` build step) so training +
-    * persist cost stays a measured ledger number. Returns a one-row
-    * summary (artifact, n) with n = the persisted relation's row count,
-    * read BACK from parquet so the build verifiably round-trips. */
-  def buildLogregModel(spark: SparkSession, sfDir: String, path: String): DataFrame = {
-    import spark.implicits._
-    Writes(graft.operators.Selection.logregModel(
-        spark.read.parquet(s"$sfDir/documents.parquet"), col("lang") === "en"))
-      .mode("overwrite").parquet(s"$path/model")
-    Seq(("logreg_model", spark.read.parquet(s"$path/model").count()))
-      .toDF("artifact", "n")
-  }
-
-  /** The persisted (bucket, w) logreg model for `sfDir` — the production
-    * serving artifact `quality_logreg_inc` scores from map-only. Same
-    * contract as the ANN artifacts: first call per data directory trains
-    * through [[buildLogregModel]] (deterministic — the 9dp-quantized GD
-    * loop — so serving from the cache is bit-identical to training
-    * inline, which the shared fused oracle hash-verifies end to end);
-    * the fingerprint keys on documents.parquet, so regenerated test data
-    * can never be served a stale model. */
-  def logregModel(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = s"$cacheRoot/${keyOf(sfDir, "documents")}_logreg"
-    ensureDir(p)(staging => buildLogregModel(spark, sfDir, staging).collect())
-    memo(spark, s"$p/model")(spark.read.parquet(s"$p/model"))
-  }
-
-  /** Train + persist the reference-LM model (bigram counts, left-context
-    * totals, unigram counts — `Corpus.lmRefModelRelations` over the
-    * declared 20% hash-sample reference) — the `lm_ref_model_build`
-    * build step; `quality_lm_ref_inc` serves from it. Persisted
-    * UNPRUNED: count pruning is a serve-time floor, so one model serves
-    * every `min_bigram_count`. */
-  def buildLmRefModel(spark: SparkSession, sfDir: String, path: String): DataFrame = {
-    import spark.implicits._
-    // pin the reference sample: cbg and uni are independent folds over
-    // the same tokenization, and cw derives from the WRITTEN cbg — left
-    // as lineage, the three writes would re-execute the reference scan
-    // and the pairs aggregation ~3× (r19 review finding)
-    val ref = graft.operators.Materialize(
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(graft.operators.Corpus.hashBucket(col("doc_id")) < 20)
-        .select(col("doc_id"), col("text")), None)
-    val (cbg, _, uni) = graft.operators.Corpus.lmRefModelRelations(ref)
-    // Two independent job chains over the pinned reference — {cbg write →
-    // cw fold+write} and {uni write} — submitted concurrently ([[Overlap]],
-    // the buildAll posture): the scheduler back-fills each chain's
-    // single-task tail stages with the other's work, and the read-back
-    // counts overlap the same way. Determinism is untouched — each
-    // artifact's bytes depend only on its own deterministic lineage.
-    try {
-      Overlap.all(spark)(Seq(
-        () => {
-          Writes(cbg).mode("overwrite").parquet(s"$path/cbg")
-          Writes(spark.read.parquet(s"$path/cbg").groupBy(col("w1"))
-            .agg(org.apache.spark.sql.functions.sum(col("c2")).as("c1")))
-            .mode("overwrite").parquet(s"$path/cw")
-        },
-        () => Writes(uni).mode("overwrite").parquet(s"$path/uni")))
-      Overlap.all(spark)(Seq("cbg", "cw", "uni").map(a =>
-        () => a -> spark.read.parquet(s"$path/$a").count()))
-        .toDF("artifact", "n")
-    } finally {
-      // Overlap returns or throws only once every body has finished, so
-      // no job still reads the pinned blocks
-      graft.operators.Materialize.release(ref)
-    }
-  }
-
-  /** The persisted reference-LM model for `sfDir`, trained once per data
-    * directory ([[logregModel]]'s contract): counts are exact longs, so
-    * serving from the parquet round trip is bit-identical to folding
-    * inline — which `quality_lm_ref_inc`'s shared fused oracle
-    * hash-verifies end to end. Returns (cbg, uni): serving folds the
-    * left-context totals from cbg itself since the r21 window fold, so
-    * the persisted `cw` relation (still written — one model serves every
-    * reader, including external ones) is no longer loaded here. */
-  def lmRefModel(spark: SparkSession, sfDir: String)
-      : (DataFrame, DataFrame) = {
-    val p = s"$cacheRoot/${keyOf(sfDir, "documents")}_lmref"
-    ensureDir(p)(staging => buildLmRefModel(spark, sfDir, staging).collect())
-    memo(spark, s"$p/model")((spark.read.parquet(s"$p/cbg"),
-      spark.read.parquet(s"$p/uni")))
-  }
-
-  /** Train + persist the DSIR (bucket, log_ratio) importance model —
-    * the `dsir_model_build` declared build step (the logreg precedent:
-    * training cost is its own ledger number, serving measures scoring
-    * only). */
-  def buildDsirModel(spark: SparkSession, sfDir: String, path: String): DataFrame = {
-    import spark.implicits._
-    Writes(graft.operators.Selection.dsirModel(
-        spark.read.parquet(s"$sfDir/documents.parquet"), col("lang") === "en"))
-      .mode("overwrite").parquet(s"$path/model")
-    Seq(("dsir_model", spark.read.parquet(s"$path/model").count()))
-      .toDF("artifact", "n")
-  }
-
-  /** The persisted DSIR model for `sfDir`, trained once per data
-    * directory under the shared fingerprint cache ([[logregModel]]'s
-    * contract): deterministic estimation, so serving from the cache is
-    * bit-identical to training inline — which `dsir_weights_inc`'s
-    * shared fused oracle hash-verifies end to end. */
-  def dsirModel(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = s"$cacheRoot/${keyOf(sfDir, "documents")}_dsir"
-    ensureDir(p)(staging => buildDsirModel(spark, sfDir, staging).collect())
-    memo(spark, s"$p/model")(spark.read.parquet(s"$p/model"))
-  }
-
-  /** Train + persist the NB domain-router model on the declared train
-    * split (hash buckets < 80) — the `nb_model_build` declared build
-    * step. */
-  def buildNbModel(spark: SparkSession, sfDir: String, path: String): DataFrame = {
-    import spark.implicits._
-    graft.operators.Selection.writeNbModel(
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(graft.operators.Corpus.hashBucket(col("doc_id")) < 80),
-      s"$path/model")
-    Seq(("nb_model", spark.read.parquet(s"$path/model/terms").count()))
-      .toDF("artifact", "n")
-  }
-
-  /** Path of the persisted NB router model for `sfDir` (trained once per
-    * data directory; [[logregModel]]'s cache contract — the serve API is
-    * path-based because `nbClassifyFromModel` reads two relations). */
-  def nbModelPath(spark: SparkSession, sfDir: String): String = {
-    val p = s"$cacheRoot/${keyOf(sfDir, "documents")}_nb"
-    ensureDir(p)(staging => buildNbModel(spark, sfDir, staging).collect())
-    s"$p/model"
   }
 }

@@ -36,7 +36,7 @@ import graft.operators.{Corpus, Materialize, Selection, Similarity}
  *   5. split            — [[Corpus.splitExpr]] over the cell (cluster-
  *      disjoint, [[Selection.splitByCluster]]'s contract)
  *
- * plus, with `grow_layout`, the ANN serving layout over the CURATED
+ * plus, with `growLayout`, the ANN serving layout over the CURATED
  * corpus: built on the first increment's survivors
  * ([[AnnIndex.buildServingLayout]]), grown retrain-free afterwards
  * ([[AnnIndex.growServingLayout]] — idempotent per increment content).
@@ -130,7 +130,7 @@ object EmbeddingCurationJob {
     * rows runs one [[runIncrement]], whose content-keyed write-ahead
     * protocol makes the curation EFFECT of at-least-once delivery
     * exactly-once (spec: the stream loop equals the sequential batch loop;
-    * the retry spec pins redelivery == never-crashed). `compact_every`
+    * the retry spec pins redelivery == never-crashed). `compactEvery`
     * compacts the append-grown relations every N applied increments.
     * The FIRST delivered batch trains the job's pinned centroid model
     * ([[ensureCentroids]]) and must carry ≥ nCells vectors.

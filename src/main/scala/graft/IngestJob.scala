@@ -122,7 +122,11 @@ object IngestJob {
       s""""replaced":${r.replaced},"unchanged":${r.unchanged},""" +
       s""""metadata_rows":${r.metadataRows}}"""
 
-  private def jsonEscape(s: String): String =
+  /** JSON string-body escape: quote, backslash, and every control
+    * character (< 0x20) as a six-character unicode escape — the one
+    * escaper of the engine's hand-rendered JSON (these lines, the state
+    * files, Verify's oracle_sql.json). */
+  private[graft] def jsonEscape(s: String): String =
     s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

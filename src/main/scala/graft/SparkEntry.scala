@@ -19,34 +19,11 @@ import graft.sources.WideMatrix
  */
 object SparkEntry {
 
-  /** Table reads memoized per (session, path): `spark.read.parquet` pays
-    * a driver-side file listing + footer schema read on EVERY call — pure
-    * floor when 126 queries × 2 bench runs re-open the same handful of
-    * tables. The memo reuses the analyzed scan relation (a DataFrame is
-    * an immutable plan; execution still runs in full each time, so no
-    * result caching sneaks into measurements). Weak session keys: test
-    * suites stop/recreate sessions, and a stopped session's plans must
-    * not pin memory or leak across sessions. */
-  private val tableMemo =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val per = tableMemo.synchronized {
-      // weak keys alone can't collect an entry here: the cached DataFrames
-      // VALUE-reference their session, keeping the key strongly reachable
-      // (the documented WeakHashMap caveat) — so purge stopped sessions
-      // explicitly on access; the weak key then only covers sessions
-      // dropped without stop()
-      tableMemo.keySet.removeIf(k => k.sparkContext.isStopped)
-      var m = tableMemo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        tableMemo.put(s, m)
-      }
-      m
-    }
-    per.computeIfAbsent(s"$dir/$name",
-      _ => s.read.parquet(s"$dir/$name.parquet"))
-  }
+  /** Table reads memoized per session ([[SessionMemo]]): 126 queries ×
+    * 2 bench runs re-open the same handful of tables, and each
+    * `spark.read.parquet` pays a driver-side listing + footer read. */
+  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+    SessionMemo(s, s"$dir/$name.parquet")(s.read.parquet(s"$dir/$name.parquet"))
 
   /** Driver-side parameter memos. The sim_* probes parameterize on the
     * query vector (`vec_id = 0`) and the corpus size — constants of a
@@ -63,12 +40,6 @@ object SparkEntry {
   private val embCountMemo = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def embCount(s: SparkSession, dir: String): Long =
     embCountMemo.computeIfAbsent(dir, _ => t(s, dir, "embeddings").count())
-  /** k-means seed set (8 lowest-id vectors) — a constant of a data
-    * directory, same memo contract as [[queryVec]]. */
-  private val kmSeedsMemo = new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]()
-  private def kmeansSeedsOf(s: SparkSession, dir: String): Array[Array[Float]] =
-    kmSeedsMemo.computeIfAbsent(dir, _ =>
-      Similarity.kmeansSeeds(t(s, dir, "embeddings"), 8))
 
   /** The events table has shipped with two timestamp layouts: TIMESTAMP(NANOS)
     * (which Spark only reads as long via `spark.sql.legacy.parquet.nanosAsLong
@@ -1425,9 +1396,9 @@ object SparkEntry {
         AnnIndex.nbModelPath(s, dir))),
     // --- oracled k-means building blocks (cluster-then-prune substrate) ---
     "embed_kmeans_assign" -> ((s, dir) =>
-      Similarity.kmeansAssign(t(s, dir, "embeddings"), kmeansSeedsOf(s, dir))),
+      Similarity.kmeansAssign(t(s, dir, "embeddings"), AnnIndex.kmeansSeeds(s, dir))),
     "embed_kmeans_step" -> ((s, dir) =>
-      Similarity.kmeansStep(t(s, dir, "embeddings"), kmeansSeedsOf(s, dir))),
+      Similarity.kmeansStep(t(s, dir, "embeddings"), AnnIndex.kmeansSeeds(s, dir))),
     "select_diverse" -> ((s, dir) =>
       // cluster-balanced diversity selection: ≤12 members per k-means
       // cell, elected by the salted id-hash rank — flattens embedding-
@@ -1435,14 +1406,14 @@ object SparkEntry {
       // budget as sparse ones), the SemDeDup-era cluster-balanced
       // sampling step; heap election, no rank window
       Selection.selectDiverse(t(s, dir, "embeddings"),
-        kmeansSeedsOf(s, dir), perCell = 12)),
+        AnnIndex.kmeansSeeds(s, dir), perCell = 12)),
     "select_prototypical" -> ((s, dir) =>
       // the coherence FLOOR paired with select_diverse's density CAP:
       // keep vectors whose nearest-centroid cosine reaches 0.12 (≈ the
       // 25th percentile on this data) — embedding-space noise that
       // density-based dedup never touches drops; map-only
       Selection.selectPrototypical(t(s, dir, "embeddings"),
-        kmeansSeedsOf(s, dir), minCos = 0.12)),
+        AnnIndex.kmeansSeeds(s, dir), minCos = 0.12)),
     "select_diverse_inc" -> ((s, dir) => {
       // ship-once increment: registry = the fused selection over
       // vec_id < 60 (scarce, so cells keep open slots); the batch
@@ -1451,9 +1422,9 @@ object SparkEntry {
       // registry, the dedup_paragraphs_inc pattern
       val e = t(s, dir, "embeddings")
       Selection.selectDiverseInc(
-        e.filter(col("vec_id") >= 60), kmeansSeedsOf(s, dir),
+        e.filter(col("vec_id") >= 60), AnnIndex.kmeansSeeds(s, dir),
         Selection.selectDiverse(e.filter(col("vec_id") < 60),
-          kmeansSeedsOf(s, dir), perCell = 12),
+          AnnIndex.kmeansSeeds(s, dir), perCell = 12),
         perCell = 12)
     }),
     "split_by_cluster" -> ((s, dir) =>
@@ -1462,13 +1433,13 @@ object SparkEntry {
       // boundary — the leak split_leakage MEASURES, prevented at
       // assignment time; map-only against the broadcast centroids
       Selection.splitByCluster(t(s, dir, "embeddings"),
-        kmeansSeedsOf(s, dir))),
+        AnnIndex.kmeansSeeds(s, dir))),
     "split_by_cluster_meter" -> ((s, dir) =>
       // the realized-fraction meter behind split_by_cluster's
       // granularity caveat: splits quantize to cluster mass, so this
       // turns "nCells must be ≫ 1/min(pct)" into a checkable number —
       // one ≤3-row aggregation + a broadcast 1-row total
-      Selection.splitMeter(t(s, dir, "embeddings"), kmeansSeedsOf(s, dir))),
+      Selection.splitMeter(t(s, dir, "embeddings"), AnnIndex.kmeansSeeds(s, dir))),
     "decontaminate_semantic" -> ((s, dir) => {
       // embedding-side eval decontamination: drop corpus vectors within
       // cosine 0.45 of ANY eval vector (vec_id < 25 stands in for the
@@ -1492,7 +1463,7 @@ object SparkEntry {
       val e = t(s, dir, "embeddings")
       Selection.curateSemantic(
         e.filter(col("vec_id") >= 25).select(col("vec_id"), col("embedding")),
-        kmeansSeedsOf(s, dir), e.filter(col("vec_id") < 25),
+        AnnIndex.kmeansSeeds(s, dir), e.filter(col("vec_id") < 25),
         minCos = 0.12, dedupCos = 0.45, decontCos = 0.45, perCell = 12)
     }),
     "embed_kmeans_assign_pruned_full" -> ((s, dir) =>
@@ -1501,13 +1472,13 @@ object SparkEntry {
       // convention): every coarse cell is probed, the member lists
       // partition the centroid ids, and the kernel's min-index tiebreak
       // makes the fold order-independent
-      Similarity.kmeansAssign(t(s, dir, "embeddings"), kmeansSeedsOf(s, dir),
+      Similarity.kmeansAssign(t(s, dir, "embeddings"), AnnIndex.kmeansSeeds(s, dir),
         pruned = Some((4, 4)))),
     "embed_kmeans_assign_pruned" -> ((s, dir) =>
       // the production pruned point (nProbe = 2 of 4 coarse cells —
       // scans ~half the centroid table per row): rows-only by declared
       // design, recall pinned by EmbeddingsSpec against the exact scan
-      Similarity.kmeansAssign(t(s, dir, "embeddings"), kmeansSeedsOf(s, dir),
+      Similarity.kmeansAssign(t(s, dir, "embeddings"), AnnIndex.kmeansSeeds(s, dir),
         pruned = Some((4, 2)))),
     // --- md5 oracle bridges for the signature kernels ---
     "dedup_minhash_bridge" -> ((s, dir) =>
@@ -1527,7 +1498,7 @@ object SparkEntry {
     "dedup_semantic" -> ((s, dir) =>
       // SemDeDup: kmeans-cluster-scoped cosine dedup — near-duplicate
       // MEANING (paraphrases), cell-keyed self-join, never all-pairs
-      Similarity.semanticDedupClustered(t(s, dir, "embeddings"), kmeansSeedsOf(s, dir),
+      Similarity.semanticDedupClustered(t(s, dir, "embeddings"), AnnIndex.kmeansSeeds(s, dir),
         minCosine = 0.45)),
     "dedup_semantic_inc" -> ((s, dir) => {
       // persisted-registry increment ≡ fused dedup over the union
@@ -1541,8 +1512,8 @@ object SparkEntry {
       // serve measurement.
       val e = t(s, dir, "embeddings")
       Similarity.semanticDedupIncrement(
-        e.filter(col("vec_id") >= 300), kmeansSeedsOf(s, dir),
-        AnnIndex.semRegistryPath(s, dir, kmeansSeedsOf(s, dir)),
+        e.filter(col("vec_id") >= 300), AnnIndex.kmeansSeeds(s, dir),
+        AnnIndex.semRegistryPath(s, dir),
         minCosine = 0.45)
     }),
     "mix_temperature" -> ((s, dir) =>
@@ -1640,62 +1611,15 @@ object SparkEntry {
       // prep with shared context across boundaries — map-only
       Corpus.chunkDocsOverlap(t(s, dir, "documents"), budget = 64, stride = 32)))
 
-  /** Build steps — artifact constructions, NOT queries. Bench times them
-    * alongside `queries` (training cost stays on the ledger) but Verify
-    * excludes them from the correctness dump: an artifact summary has no
-    * SQL twin, and its former place in the query inventory read as a
-    * failing `no_oracle` row every round. */
-  /** Every declared build runs UNCONDITIONALLY into a throwaway dir —
-    * the full training/layout cost as its own ledger number — and the
-    * throwaway artifacts delete before returning (bench invokes builds
-    * repeatedly; leaving them would grow tmp without bound). */
-  private def buildToTmp(prefix: String)(
-      build: String => DataFrame): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory(prefix)
-    try build(tmp.toString)
-    finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(tmp.toFile)
-    }
-  }
-
-  def builds: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // full ANN training cost (LSH/IVF/PQ/cell-codes family)
-    "sim_index_build" -> ((s, dir) =>
-      buildToTmp("graft_ann_build")(AnnIndex.buildAll(s, dir, _))),
-    // the persisted MRL prefix relations: the (cheap, map-only)
-    // projection cost, so the sim_*_mrl_pre queries measure routing only
-    "mrl_index_build" -> ((s, dir) =>
-      buildToTmp("graft_mrl_build")(AnnIndex.buildMrlPrefixes(s, dir, _))),
-    // logreg quality model: GD loop + parquet write + read-back count,
-    // so `quality_logreg_inc` measures scoring only
-    "logreg_model_build" -> ((s, dir) =>
-      buildToTmp("graft_logreg_build")(AnnIndex.buildLogregModel(s, dir, _))),
-    // reference-LM model: three count relations + writes + read-back,
-    // so `quality_lm_ref_inc` measures the scoring joins only
-    "lm_ref_model_build" -> ((s, dir) =>
-      buildToTmp("graft_lmref_build")(AnnIndex.buildLmRefModel(s, dir, _))),
-    // DSIR importance model: histogram estimation + write + read-back,
-    // so `dsir_weights_inc` measures map-only scoring
-    "dsir_model_build" -> ((s, dir) =>
-      buildToTmp("graft_dsir_build")(AnnIndex.buildDsirModel(s, dir, _))),
-    // NB router model: term-count aggregation + two writes + read-back,
-    // so `nb_classify_inc` measures routing only
-    "nb_model_build" -> ((s, dir) =>
-      buildToTmp("graft_nb_build")(AnnIndex.buildNbModel(s, dir, _))),
-    // semantic-dedup registry: assignment + cell-partitioned parquet
-    // write + read-back, so `dedup_semantic_inc` measures the probe only
-    "sem_registry_build" -> ((s, dir) =>
-      buildToTmp("graft_semreg_build")(
-        AnnIndex.buildSemRegistry(s, dir, _, kmeansSeedsOf(s, dir)))),
-    // substring-dedup registry: window extraction + parquet write +
-    // read-back, so `dedup_substr_inc` measures the probe only
-    "substr_registry_build" -> ((s, dir) =>
-      buildToTmp("graft_substrreg_build")(
-        AnnIndex.buildSubstrRegistry(s, dir, _))))
+  /** Build steps — artifact constructions, NOT queries: one per
+    * [[AnnIndex.Family]], each run unconditionally into a throwaway
+    * directory ([[AnnIndex.buildFresh]]) so the training/layout cost
+    * stays its own ledger number while the serve queries measure serving.
+    * Bench times them alongside `queries`; Verify excludes them from the
+    * correctness dump (an artifact summary has no SQL twin). */
+  def builds: Map[String, (SparkSession, String) => DataFrame] =
+    AnnIndex.families.map(f =>
+      f.step -> ((s: SparkSession, dir: String) => AnnIndex.buildFresh(s, dir, f))).toMap
 
   // ------------------------------------------------------------- oracle SQL
 

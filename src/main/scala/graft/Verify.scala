@@ -28,18 +28,9 @@ object Verify {
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[verify] prepareOracles failed: ${e.getMessage}")
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every SQL text escaped ([[IngestJob.jsonEscape]]): a raw tab or CR
+    // in an oracle's SQL would make every JSON reader of the file fail
+    def q(s: String): String = "\"" + IngestJob.jsonEscape(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

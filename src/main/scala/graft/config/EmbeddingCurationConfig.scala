@@ -1,32 +1,29 @@
 package graft.config
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-
 /**
  * Config for [[graft.EmbeddingCurationJob]] — the embedding-side
- * micro-batch curation pipeline ([[graft.IngestJob]] /
- * [[graft.TrainingSetJob]]'s convention: one JSON object, every stage a
- * switch, each switch mapping 1:1 to an individually-oracled operator).
+ * micro-batch curation pipeline: every stage a field, each field mapping
+ * 1:1 to an individually-oracled operator.
  *
  * Stages in declared order (each optional; `corpus_curate_semantic`'s
  * order, with the incremental forms substituted where a registry
  * exists):
- *  - `min_cos` — prototypical coherence floor
+ *  - `minCos` — prototypical coherence floor
  *    ([[graft.operators.Selection.selectPrototypical]]'s cut)
- *  - `dedup_cos` — SemDeDup vs the job's persisted registry
+ *  - `dedupCos` — SemDeDup vs the job's persisted registry
  *    ([[graft.operators.Similarity.semanticDedupIncrement]]; the
  *    registry grows with every FLOOR-surviving member after each probe —
  *    the every-member contract)
- *  - `eval_dir` (+ `decont_cos`) — embedding-side eval decontamination
+ *  - `evalDir` (+ `decontCos`) — embedding-side eval decontamination
  *    ([[graft.operators.Similarity.decontaminateSemantic]])
- *  - `per_cell` — ship-once diversity cap vs the job's selection
+ *  - `perCell` — ship-once diversity cap vs the job's selection
  *    registry ([[graft.operators.Selection.selectDiverseInc]])
  *  - split — always on; [[graft.operators.Selection.splitByCluster]]'s
- *    cell-hash bucket (`train_pct`/`val_pct`)
- *  - `grow_layout` — maintain the ANN serving layout over the CURATED
+ *    cell-hash bucket (`trainPct`/`valPct`)
+ *  - `growLayout` — maintain the ANN serving layout over the CURATED
  *    corpus per increment ([[graft.AnnIndex.buildServingLayout]] /
  *    [[graft.AnnIndex.growServingLayout]])
- *  - `compact_every` — run [[graft.EmbeddingCurationJob.compact]]
+ *  - `compactEvery` — run [[graft.EmbeddingCurationJob.compact]]
  *    automatically every N applied increments inside the micro-batch
  *    loop (file-count maintenance + completed-increment state GC);
  *    absent = manual maintenance windows only
@@ -44,44 +41,18 @@ final case class EmbeddingCurationConfig(
     layoutCells: Int = 16,
     checkpointDir: Option[String] = None,
     compactEvery: Option[Int] = None) {
-  require(nCells > 0, s"n_cells must be positive: $nCells")
-  require(perCell.forall(_ > 0), s"per_cell must be positive: $perCell")
+  require(nCells > 0, s"nCells must be positive: $nCells")
+  require(perCell.forall(_ > 0), s"perCell must be positive: $perCell")
   require(compactEvery.forall(_ > 0),
-    s"compact_every must be positive: $compactEvery")
+    s"compactEvery must be positive: $compactEvery")
   require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100,
     s"train/val percentages out of range: $trainPct/$valPct")
-  require(layoutCells > 0, s"layout_cells must be positive: $layoutCells")
+  require(layoutCells > 0, s"layoutCells must be positive: $layoutCells")
   require(minCos.forall(c => c >= -1 && c <= 1),
-    s"min_cos must be a cosine: $minCos")
+    s"minCos must be a cosine: $minCos")
   require(dedupCos.forall(c => c >= -1 && c <= 1),
-    s"dedup_cos must be a cosine: $dedupCos")
+    s"dedupCos must be a cosine: $dedupCos")
   require(decontCos >= -1 && decontCos <= 1,
-    s"decont_cos must be a cosine: $decontCos")
+    s"decontCos must be a cosine: $decontCos")
 }
 
-object EmbeddingCurationConfig {
-  private val mapper = new ObjectMapper()
-
-  /** Parse the job's JSON shape; absent fields keep operator defaults. */
-  def parse(json: String): EmbeddingCurationConfig = {
-    val n = mapper.readTree(json)
-    def optNode(f: String): Option[JsonNode] =
-      Option(n.get(f)).filterNot(_.isNull)
-    def int(f: String, d: Int) = optNode(f).map(_.asInt).getOrElse(d)
-    def dbl(f: String, d: Double) = optNode(f).map(_.asDouble).getOrElse(d)
-    def bool(f: String, d: Boolean) = optNode(f).map(_.asBoolean).getOrElse(d)
-    EmbeddingCurationConfig(
-      nCells = int("n_cells", 8),
-      minCos = optNode("min_cos").map(_.asDouble),
-      dedupCos = optNode("dedup_cos").map(_.asDouble),
-      evalDir = optNode("eval_dir").map(_.asText),
-      decontCos = dbl("decont_cos", 0.45),
-      perCell = optNode("per_cell").map(_.asInt),
-      trainPct = int("train_pct", 80),
-      valPct = int("val_pct", 10),
-      growLayout = bool("grow_layout", d = false),
-      layoutCells = int("layout_cells", 16),
-      checkpointDir = optNode("checkpoint_dir").map(_.asText),
-      compactEvery = optNode("compact_every").map(_.asInt))
-  }
-}

@@ -49,21 +49,21 @@ object Similarity {
   private[operators] def normOf(query: Seq[Float]): Double =
     math.sqrt(query.foldLeft(0.0)((acc, v) => acc + v.toDouble * v.toDouble))
 
-  /** Exact cosine of `vec` (whose norm is `nrm` — computed, or a
-    * persisted index column) to a literal query vector, rounded to 6dp so
-    * cross-engine float summation agrees: the single-query serves' one
-    * score. */
-  private def cosToQuery(vec: Column, nrm: Column, query: Seq[Float]): Column =
-    Quantize.quantize(
-      dot(vec, array(query.map(v => lit(v)): _*)) / (nrm * lit(normOf(query))), 6)
+  /** The one exact cosine score of vectors `a` and `b` (norms `an`, `bn`
+    * — computed, or an index's persisted `nrm`), rounded to 6dp so
+    * cross-engine float summation agrees. A zero norm on either side
+    * scores null: a zero vector has no measurable similarity and is
+    * never a neighbour — it sorts last in a single-query top-k and drops
+    * from a batch join's [[topKPerQuery]] (the unguarded division would
+    * abort under ANSI). Every serve's verification scores through it. */
+  private def cosScore(a: Column, an: Column, b: Column, bn: Column): Column =
+    when(an === 0d || bn === 0d, lit(null).cast("double"))
+      .otherwise(Quantize.quantize(dot(a, b) / (an * bn), 6))
 
-  /** [[cosToQuery]] with a zero-norm vector scoring an EXPLICIT null
-    * (the unguarded division would yield null silently or abort under
-    * ANSI) — the MRL serves' route and rerank legs. */
-  private def cosToQueryGuarded(vec: Column, nrm: Column,
-      query: Seq[Float]): Column =
-    when(nrm === 0d, lit(null).cast("double"))
-      .otherwise(cosToQuery(vec, nrm, query))
+  /** [[cosScore]] of `vec` (norm `nrm`) against a literal query vector:
+    * the single-query serves' one score. */
+  private def cosToQuery(vec: Column, nrm: Column, query: Seq[Float]): Column =
+    cosScore(vec, nrm, array(query.map(v => lit(v)): _*), lit(normOf(query)))
 
   /**
    * Brute-force cosine top-k against one query vector (as a literal array —
@@ -93,8 +93,8 @@ object Similarity {
    * covering the corpus makes the shortlist everything, so the rerank
    * IS [[topK]] — the hash-verified `sim_topk_mrl_full` bridge (oracle
    * substrate, not a scale point, like every other *_full). Zero-norm
-   * prefixes score an EXPLICIT null (guarded — ANSI division would
-   * abort) and sort last under the descending route order — a vector
+   * prefixes score an EXPLICIT null ([[cosScore]]) and sort last under
+   * the descending route order — a vector
    * invisible at kDims dims is routed out, the MRL contract.
    */
   def topKMrl(embeddings: DataFrame, query: Seq[Float], k: Int,
@@ -115,7 +115,7 @@ object Similarity {
       kDims: Int, overscan: Int, vecCol: String, idCol: String): DataFrame = {
     val pre = slice(col(vecCol), 1, kDims)
     val shortlist = Selection.topKBy(cands.withColumn("__pc",
-        cosToQueryGuarded(pre, norm(pre), query.take(kDims))),
+        cosToQuery(pre, norm(pre), query.take(kDims))),
       "__pc", idCol, k.toLong * overscan)
     rerankOne(shortlist, n, query, k, vecCol, idCol)
   }
@@ -125,7 +125,7 @@ object Similarity {
   private def rerankOne(cands: DataFrame, n: Column, query: Seq[Float], k: Int,
       vecCol: String, idCol: String): DataFrame =
     Selection.topKBy(cands.select(col(idCol),
-        cosToQueryGuarded(col(vecCol), n, query).as("cos")),
+        cosToQuery(col(vecCol), n, query).as("cos")),
       "cos", idCol, k)
 
   /**
@@ -296,7 +296,7 @@ object Similarity {
         col("a.nrm").as("__na"), col("b.nrm").as("__nb"))
       .dropDuplicates("id_a", "id_b")
       .select(col("id_a"), col("id_b"),
-        Quantize.quantize(dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")), 6).as("cos"))
+        cosScore(col("__va"), col("__na"), col("__vb"), col("__nb")).as("cos"))
       .filter(col("cos") >= minCosine)
   }
 
@@ -719,7 +719,7 @@ object Similarity {
     require(kDims > 0 && query.length >= kDims && overscan >= 1)
     requirePrefixWidth(prefixes, kDims)
     val shortlist = Selection.topKBy(prefixes.select(col(idCol),
-        cosToQueryGuarded(col("prefix"), col("pnrm"), query.take(kDims)).as("__pc")),
+        cosToQuery(col("prefix"), col("pnrm"), query.take(kDims)).as("__pc")),
       "__pc", idCol, k.toLong * overscan)
       .select(col(idCol))
     // rerank reads ONLY the shortlist's row groups, and the route
@@ -793,10 +793,8 @@ object Similarity {
    * below the In-filter cap the corpus scan prunes to the shortlist's row
    * groups), rejoin the broadcast queries, score the exact quantized
    * cosine against `corpus`'s vectors (norm `cn` — computed, or an
-   * index's persisted `nrm`) and keep k per query. A zero norm on either
-   * side scores null, which [[topKPerQuery]] drops: a zero vector has no
-   * measurable similarity and is never a neighbour (the unguarded
-   * division would abort under ANSI).
+   * index's persisted `nrm`, through [[cosScore]], whose null for a zero
+   * norm [[topKPerQuery]] drops) and keep k per query.
    */
   private def rerankBatch(shortlist: DataFrame, corpus: DataFrame, cn: Column,
       queries: DataFrame, k: Int, vecCol: String, idCol: String, qIdCol: String,
@@ -810,11 +808,7 @@ object Similarity {
       .join(idFilter.map(base.filter).getOrElse(base), idCol)
       .join(broadcast(q), qIdCol)
       .select(col(qIdCol), col(idCol),
-        when(col("__cn") === 0d || col("__qn") === 0d,
-          lit(null).cast("double"))
-          .otherwise(Quantize.quantize(
-            dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")), 6))
-          .as("cos"))
+        cosScore(col("__qv"), col("__qn"), col("__cv"), col("__cn")).as("cos"))
     topKPerQuery(reranked, k, idCol, qIdCol)
   }
 
@@ -872,7 +866,7 @@ object Similarity {
     val q = queries.select(col(qIdCol), col(vecCol).as("__qv"), norm(col(vecCol)).as("__qn"))
     val scored = q.crossJoin(c)
       .select(col(qIdCol), col(idCol),
-        Quantize.quantize(dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")), 6).as("cos"))
+        cosScore(col("__qv"), col("__qn"), col("__cv"), col("__cn")).as("cos"))
     topKPerQuery(scored, k, idCol, qIdCol)
   }
 
@@ -887,10 +881,10 @@ object Similarity {
    * Degenerate queries (null or empty `vecCol`): bucketing requires a
    * vector, so such query rows produce NO output rows — an explicit,
    * documented drop (`buildLshIndex`'s `size > 0` filter). The exact
-   * sibling [[topKJoin]] cannot score them either (a zero-norm cosine
-   * divides by zero, which aborts under ANSI); callers batch-joining a
-   * frame that may contain degenerate queries should filter or repair
-   * them first if they need one output group per input row.
+   * sibling [[topKJoin]] drops them too (a zero-norm cosine scores null,
+   * [[cosScore]]); callers batch-joining a frame that may contain
+   * degenerate queries should filter or repair them first if they need
+   * one output group per input row.
    */
   def topKJoinLsh(corpusIndex: DataFrame, queries: DataFrame, dim: Int, k: Int,
       bits: Int = 4, tables: Int = 8, vecCol: String = "embedding",
@@ -911,7 +905,7 @@ object Similarity {
     val scored = broadcast(qb).join(cb, Seq("table", "bucket"))
       .dropDuplicates(qIdCol, idCol)
       .select(col(qIdCol), col(idCol),
-        Quantize.quantize(dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")), 6).as("cos"))
+        cosScore(col("__qv"), col("__qn"), col("__cv"), col("__cn")).as("cos"))
     topKPerQuery(scored, k, idCol, qIdCol)
   }
 
@@ -945,7 +939,7 @@ object Similarity {
         index.assignments.select(col(idCol), col(vecCol).as("__corp"),
           col("nrm").as("__cn"), col("cell")), "cell")
       .select(col(qIdCol), col(idCol),
-        Quantize.quantize(dot(col("__qv"), col("__corp")) / (col("__qn") * col("__cn")), 6).as("cos"))
+        cosScore(col("__qv"), col("__qn"), col("__corp"), col("__cn")).as("cos"))
     topKPerQuery(scored, k, idCol, qIdCol)
   }
 
@@ -1043,8 +1037,7 @@ object Similarity {
    * `sim_topk_join_mrl_full` bridge. Zero-norm PREFIXES route to
    * -Infinity ([[prefixRouteCos]]: routed out at production overscan,
    * eligible at corpus-covering overscan); zero-norm full vectors rerank
-   * to null and drop ([[rerankBatch]]) — where [[topKJoin]]'s unguarded
-   * division aborts under the default ANSI session.
+   * to null and drop ([[rerankBatch]]), as in [[topKJoin]].
    */
   def topKJoinMrl(corpus: DataFrame, queries: DataFrame, k: Int,
       kDims: Int = 16, overscan: Int = 4,
@@ -1118,8 +1111,8 @@ object Similarity {
     val b = withNorm.as("b")
     a.join(b, col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        Quantize.quantize(dot(col(s"a.$vecCol"), col(s"b.$vecCol")) /
-          (col("a.__n") * col("b.__n")), 6).as("cos"))
+        cosScore(col(s"a.$vecCol"), col("a.__n"), col(s"b.$vecCol"), col("b.__n"))
+          .as("cos"))
       .filter(col("cos") >= minCosine)
   }
 

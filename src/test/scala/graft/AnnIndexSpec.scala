@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Cache-key fingerprint contract (no Spark needed — pure file walk). */
+/** Artifact-cache contract: key fingerprint, commit, prune and the
+  * declared build steps (no Spark needed — pure file walks). */
 class AnnIndexSpec extends AnyFunSuite {
 
   private def mkSf(root: java.io.File, layout: Seq[(String, Int)]): Unit = {
@@ -31,8 +32,8 @@ class AnnIndexSpec extends AnyFunSuite {
       mkSf(b, Seq("lang=en/part-00000.parquet" -> 200, "lang=de/part-00000.parquet" -> 100))
       val ka = AnnIndex.keyOf(a.getPath)
       val kb = AnnIndex.keyOf(b.getPath)
-      // strip the dir-name prefix: only the md5 fingerprint suffix matters
-      assert(ka.split("_").last != kb.split("_").last,
+      // the data part differs (its dir-name prefix is equal by construction)
+      assert(ka.data.split("_").last != kb.data.split("_").last,
         s"swapped-partition layouts fingerprinted identically: $ka vs $kb")
       // and the key is stable for an unchanged layout
       assert(AnnIndex.keyOf(a.getPath) == ka)
@@ -52,7 +53,7 @@ class AnnIndexSpec extends AnyFunSuite {
       mkSf(sf, Seq("part-00000.parquet" -> 100))
       var builds = 0
       def serve(code: String): String =
-        AnnIndex.ensureDir(s"$tmp/cache/${AnnIndex.keyOf(sf.getPath, code = code)}") { st =>
+        AnnIndex.ensureDir(s"$tmp/cache", AnnIndex.keyOf(sf.getPath, code = code), "") { st =>
           new java.io.File(st).mkdirs(); builds += 1
         }
       val a = serve("code-a")
@@ -72,5 +73,71 @@ class AnnIndexSpec extends AnyFunSuite {
       }
       rm(tmp)
     }
+  }
+
+  test("a commit prunes other code's entries to the most recently served; an unmarked entry fails loudly") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_annkey_prune").toFile
+    try {
+      val sf = new java.io.File(tmp, "sf"); sf.mkdirs()
+      mkSf(sf, Seq("part-00000.parquet" -> 100))
+      val root = s"$tmp/cache"
+      def serve(code: String, suffix: String = "_fam"): String =
+        AnnIndex.ensureDir(root, AnnIndex.keyOf(sf.getPath, code = code), suffix)(
+          st => new java.io.File(st).mkdirs())
+      def marker(entry: String) = new java.io.File(entry, "_GRAFT_READY")
+      def gen(i: Int) = f"c0de0000000$i%d"
+      val e1 = serve(gen(1))
+      val e2 = serve(gen(2))
+      // another family over the same data is a different entry set
+      val other = serve(gen(1), "_other")
+      // the serve clock: generation 2 was served after generation 1
+      marker(e1).setLastModified(1700000000000L)
+      marker(e2).setLastModified(1700000001000L)
+      val e3 = serve(gen(3))
+      assert(!new java.io.File(e1).exists(),
+        "the least recently served other-code entry must be pruned")
+      assert(new java.io.File(e2).isDirectory && new java.io.File(e3).isDirectory,
+        "three code generations must leave two")
+      assert(new java.io.File(other).isDirectory, "prune crossed families")
+      // a directory without its marker fails loudly and is never pruned
+      val k4 = AnnIndex.keyOf(sf.getPath, code = gen(4))
+      val bare = new java.io.File(s"$root/${k4.data}_${k4.code}_fam")
+      new java.io.File(bare, "part-00000").mkdirs()
+      val err = intercept[IllegalStateException](serve(gen(4)))
+      assert(err.getMessage.contains("_GRAFT_READY"), err.getMessage)
+      // an entry an earlier JVM committed: this JVM's first serve touches
+      // its marker, and the commit of generation 6 then keeps it
+      val k5 = AnnIndex.keyOf(sf.getPath, code = gen(5))
+      val e5 = s"$root/${k5.data}_${k5.code}_fam"
+      new java.io.File(e5).mkdirs(); marker(e5).createNewFile()
+      marker(e5).setLastModified(1600000000000L)
+      assert(serve(gen(5)) == e5 && marker(e5).lastModified() > 1700000001000L)
+      marker(e3).setLastModified(1700000002000L)
+      val e6 = serve(gen(6))
+      assert(Seq(e5, e6).forall(new java.io.File(_).isDirectory))
+      assert(Seq(e2, e3).forall(e => !new java.io.File(e).exists()))
+      assert(bare.isDirectory)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rm)
+        f.delete()
+      }
+      rm(tmp)
+    }
+  }
+
+  test("build steps: SparkEntry.builds is the eight families, each under its pinned cache suffix") {
+    val pinned = Map(
+      "sim_index_build" -> ("embeddings", ""),
+      "mrl_index_build" -> ("embeddings", "_mrl"),
+      "sem_registry_build" -> ("embeddings", "_semreg"),
+      "substr_registry_build" -> ("documents", "_substrreg"),
+      "logreg_model_build" -> ("documents", "_logreg"),
+      "lm_ref_model_build" -> ("documents", "_lmref"),
+      "dsir_model_build" -> ("documents", "_dsir"),
+      "nb_model_build" -> ("documents", "_nb"))
+    assert(SparkEntry.builds.keySet == pinned.keySet)
+    assert(AnnIndex.families.size == pinned.size, "a step is declared twice")
+    assert(AnnIndex.families.map(f => f.step -> ((f.table, f.suffix))).toMap == pinned)
   }
 }

@@ -737,8 +737,29 @@ class TrainingDataOpsSpec extends AnyFunSuite {
       queries, pq, k = 5, overscan = 61))
     assert(ivfPq == exact)
     assert(pqRescored == exact)
-    // the unguarded exact join still aborts on it under ANSI
-    intercept[Exception](Similarity.topKJoin(corpus, queries, k = 5).collect())
+    // every other exact-verified serve scores it through the same guarded
+    // cosine: the batch joins drop it (probe-all IVF is the exact join)...
+    assert(rows(Similarity.topKJoin(corpus, queries, k = 5)) == exact)
+    assert(rows(Similarity.topKJoinIvf(ivf, queries, k = 5, nProbe = 8)) == exact)
+    val lsh = Similarity.buildLshIndex(corpus, dim = 64)
+    assert(rows(Similarity.topKJoinLsh(lsh, queries, dim = 64, k = 5))
+      .forall(_._2 != 9999L))
+    // ...the pair verifiers never pair it...
+    def noZero(pairs: org.apache.spark.sql.DataFrame) = pairs.collect()
+      .forall(r => r.getAs[Long]("id_a") != 9999L && r.getAs[Long]("id_b") != 9999L)
+    assert(noZero(Similarity.nearDupPairsFromIndex(lsh, minCosine = 0.3)))
+    assert(noZero(Similarity.nearDupPairsExact(corpus, minCosine = 0.3)))
+    // ...and the single-query serves rank its null below every real score
+    val q = e.filter(col("vec_id") === 0).select("embedding").head.getSeq[Float](0)
+    def top(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))).toSeq
+    val exactTop = top(Similarity.topK(clean, q, k = 10))
+    assert(top(Similarity.topK(corpus, q, k = 10)) == exactTop)
+    assert(top(Similarity.topKIvf(ivf, q, k = 10, nProbe = 8)) == exactTop)
+    assert(top(Similarity.topKLshAll(lsh, q, k = 10)) == exactTop)
+    assert(top(Similarity.topKLsh(lsh, q, k = 10)).forall(_._1 != 9999L))
+    assert(top(Similarity.topKPqRescored(encoded, corpus, pq, q, k = 10,
+      overscan = 31)) == exactTop)
   }
 
   test("a pre-nrm LSH or IVF index fails to read with the named error") {
